@@ -14,17 +14,21 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-MARKET, DOCS, TABLES = 1, 2, 3  # independent random streams per workload
+MARKET, DOCS = 1, 2  # independent random streams per workload
 
 VOCAB = ("join hash row batch scan column customer filter small slow merge "
          "order vector line table data agg value key stream window a spark "
          "part group big sort query fast the").split()
-LANGS = np.array(["en", "zh", "es", "de", "fr"])
-LANG_P = [0.40, 0.15, 0.15, 0.15, 0.15]
 
 SESSION_OPEN_MIN = 9 * 60 + 15   # 09:15, the reference's default session
 WINDOWS_PER_DAY = 75             # 09:15-15:30 in 5-minute windows
 WINDOW_US = 300 * 1_000_000
+TICKS_PER_SYMBOL = 100           # mean ticks per active symbol and window
+SILENT_SHARE = 0.10              # symbols with no tick in a window (gap-fill)
+BOUNDARY_SHARE = 0.01            # ticks stamped exactly on the window start
+SHUFFLE_SHARE = 0.005            # ticks arriving after later-stamped ones
+LATE_TAIL_US = 4_000_000         # ticks this close to the window end ...
+LATE_P = 0.12                    # ... move to the next file with this probability
 
 
 def write(table, path):
@@ -50,15 +54,14 @@ def trading_days(first, n, holidays):
     return days
 
 
-def market(seed, root, n_windows, ticks_per_symbol=100, silent_share=0.10,
-           late_share=0.003, shuffle_share=0.005):
+def market(seed, root, n_windows):
     """Stage one tick file per 5-minute window under ``root/stage``.
 
-    Ticks are skewed across symbols (lognormal activity), about
-    ``silent_share`` of the universe is silent in each window (gap-fill), a
-    few ticks arrive out of timestamp order inside their file, and a few of
-    each window's last ticks arrive in the NEXT window's file (late, but
-    within the watermark delay). ``meta.json`` lists the symbols, the first
+    Ticks are skewed across symbols (lognormal activity), SILENT_SHARE of
+    the universe is silent in each window (gap-fill), SHUFFLE_SHARE of the
+    ticks arrive out of timestamp order inside their file, and a share
+    LATE_P of each window's last LATE_TAIL_US of ticks arrive in the NEXT
+    window's file (late, but within the watermark delay). ``meta.json`` lists the symbols, the first
     session date and each file's window start. Returns the staged file paths
     in feed order.
     """
@@ -81,7 +84,7 @@ def market(seed, root, n_windows, ticks_per_symbol=100, silent_share=0.10,
                                          "open": "18:15", "close": "19:45"}]}, f)
 
     activity = rng.lognormal(0.0, 0.8, n_sym)
-    activity *= ticks_per_symbol / activity.mean()
+    activity *= TICKS_PER_SYMBOL / activity.mean()
     price = np.round(rng.uniform(50, 5000, n_sym), 2)
     epoch = dt.datetime(1970, 1, 1)
     seq = 0
@@ -93,26 +96,26 @@ def market(seed, root, n_windows, ticks_per_symbol=100, silent_share=0.10,
             minutes=SESSION_OPEN_MIN + 5 * (w % WINDOWS_PER_DAY))
         start_us = (start - epoch) // dt.timedelta(microseconds=1)
         starts.append(start.isoformat())
-        active = rng.random(n_sym) >= silent_share
+        active = rng.random(n_sym) >= SILENT_SHARE
         counts = np.where(active, np.maximum(1, rng.poisson(activity)), 0)
         sym = np.repeat(np.arange(n_sym), counts)
         n = len(sym)
         offs = rng.integers(0, WINDOW_US, n)
-        offs[rng.random(n) < 0.01] = 0  # boundary ticks at exactly HH:MM:00
+        offs[rng.random(n) < BOUNDARY_SHARE] = 0  # boundary ticks at exactly HH:MM:00
         ltp = np.round(price[sym] * np.exp(rng.normal(0.0, 0.002, n)), 2)
         ts = start_us + offs
         arrival = np.argsort(ts, kind="stable")
         # a few ticks arrive after later-stamped ticks of the same file
         pos = np.arange(n, dtype=np.float64)
-        pos[rng.random(n) < shuffle_share] += 3.5
+        pos[rng.random(n) < SHUFFLE_SHARE] += 3.5
         arrival = arrival[np.argsort(pos, kind="stable")]
         sym, ts, ltp = sym[arrival], ts[arrival], ltp[arrival]
         by_sym = np.lexsort((ts, sym))
         last = np.r_[sym[by_sym][1:] != sym[by_sym][:-1], True]
         price[sym[by_sym][last]] = ltp[by_sym][last]
-        # late arrivals: some ticks from the last 4 s move to the next file,
-        # well inside the streaming query's 10 s watermark delay
-        late = (ts >= start_us + WINDOW_US - 4_000_000) & (rng.random(n) < late_share * 40)
+        # late arrivals move to the next file, well inside the streaming
+        # query's 10 s watermark delay
+        late = (ts >= start_us + WINDOW_US - LATE_TAIL_US) & (rng.random(n) < LATE_P)
         if w == n_windows - 1:
             late[:] = False
         keep = ~late
@@ -140,7 +143,7 @@ def market(seed, root, n_windows, ticks_per_symbol=100, silent_share=0.10,
     return paths
 
 
-# ── documents (query_mix table, doc_ingest corpus) ─────────────────────────
+# ── doc_ingest ─────────────────────────────────────────────────────────────
 
 def corpus_texts(rng, n, dup_share=0.05):
     """Random-vocabulary documents of 10-99 words; ``dup_share`` of them
@@ -156,34 +159,27 @@ def corpus_texts(rng, n, dup_share=0.05):
     return texts
 
 
-def documents_table(rng, n):
-    texts = corpus_texts(rng, n)
-    ids = np.arange(n, dtype=np.int64)
-    return pa.table({
-        "doc_id": pa.array(ids, pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array(LANGS[rng.choice(len(LANGS), n, p=LANG_P)]),
-        "source": pa.array([f"src{i % 20}" for i in ids]),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
+def doc_batches(seed, root, history_batches, n_batches, batch_docs, planted_per_batch,
+                corpus_docs=5000):
+    """Write ``history_batches`` batches of already-indexed documents to
+    ``root/history.parquet`` and stage ``n_batches`` more under
+    ``root/stage``; returns the staged paths.
 
-
-def doc_batches(seed, root, n_batches, batch_docs, planted_per_batch, corpus_docs=5000):
-    """Stage ``n_batches`` document files under ``root/stage``.
-
-    Each batch samples the seeded corpus and interleaves its own batch
+    Every batch samples the seeded corpus and interleaves its own batch
     token after every second word (batches are mutually dissimilar, as in
-    DedupScaleCheck). From the second batch on, each also carries
-    ``planted_per_batch`` near-copies of earlier batches' documents: the
+    DedupScaleCheck); batch b holds doc ids b * 1,000,000 + i, history
+    batches first. Each staged batch also carries ``planted_per_batch``
+    near-copies of earlier batches' documents, history included: the
     earlier text plus one word, so their word 5-gram Jaccard is >= 0.9.
     Writes ``planted.json`` ([[original, copy], ...]) and ``counts.json``
-    (documents per batch) and returns the paths.
+    (documents per staged batch).
     """
     rng = np.random.default_rng([seed, DOCS])
     corpus = corpus_texts(rng, corpus_docs)
     os.makedirs(f"{root}/stage", exist_ok=True)
     seen_ids, seen_texts, planted, paths, counts = [], [], [], [], []
-    for b in range(n_batches):
+    history = {"doc_id": [], "text": []}
+    for b in range(history_batches + n_batches):
         pick = rng.choice(corpus_docs, batch_docs, replace=False)
         ids = [b * 1_000_000 + i for i in range(batch_docs)]
         texts = []
@@ -195,124 +191,28 @@ def doc_batches(seed, root, n_batches, batch_docs, planted_per_batch, corpus_doc
                 if k % 2 == 1:
                     out.append(f"batch{b}")
             texts.append(" ".join(out))
-        if b > 0 and planted_per_batch:
+        if b >= history_batches and seen_ids and planted_per_batch:
             src = rng.choice(len(seen_ids), planted_per_batch, replace=False)
             for k, s in enumerate(src):
                 cid = b * 1_000_000 + batch_docs + k
                 ids.append(cid)
                 texts.append(seen_texts[s] + " dup")
                 planted.append([seen_ids[s], cid])
-        path = f"{root}/stage/b{b:04d}.parquet"
-        write(pa.table({"doc_id": pa.array(ids, pa.int64()),
-                        "text": pa.array(texts, pa.string())}), path)
-        paths.append(path)
-        counts.append(len(ids))
+        if b < history_batches:
+            history["doc_id"] += ids
+            history["text"] += texts
+        else:
+            path = f"{root}/stage/b{b:04d}.parquet"
+            write(pa.table({"doc_id": pa.array(ids, pa.int64()),
+                            "text": pa.array(texts, pa.string())}), path)
+            paths.append(path)
+            counts.append(len(ids))
         seen_ids += ids
         seen_texts += texts
+    write(pa.table({"doc_id": pa.array(history["doc_id"], pa.int64()),
+                    "text": pa.array(history["text"], pa.string())}), f"{root}/history.parquet")
     with open(f"{root}/planted.json", "w") as f:
         json.dump(planted, f)
     with open(f"{root}/counts.json", "w") as f:
         json.dump(counts, f)
     return paths
-
-
-# ── query_mix tables (TPC-H-ish star schema + events/documents/embeddings) ──
-
-def tables(seed, root, sf):
-    """All ten tables the query registry reads, at ``sf`` (0.01 gives
-    60,000 lineitem rows), in the layout of the repository's test data."""
-    rng = np.random.default_rng([seed, TABLES])
-    os.makedirs(root, exist_ok=True)
-    k = sf / 0.01
-    n_cust, n_supp, n_part = int(1500 * k), max(10, int(100 * k)), int(2000 * k)
-    n_ord, n_line, n_ev, n_doc, n_emb = (int(15000 * k), int(60000 * k), int(10000 * k),
-                                         int(500 * k), int(500 * k))
-    r2 = lambda x: np.round(x, 2)
-
-    def ts_us(lo, hi, n, day=False):
-        lo_us = int((lo - dt.datetime(1970, 1, 1)).total_seconds() * 1e6)
-        hi_us = int((hi - dt.datetime(1970, 1, 1)).total_seconds() * 1e6)
-        v = rng.integers(lo_us, hi_us, n)
-        if day:
-            v -= v % 86_400_000_000
-        return pa.array(v, pa.timestamp("us"))
-
-    write(pa.table({"r_regionkey": pa.array(np.arange(5), pa.int32()),
-                    "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]}),
-          f"{root}/region.parquet")
-    write(pa.table({"n_nationkey": pa.array(np.arange(25), pa.int32()),
-                    "n_name": [f"NATION_{i}" for i in range(25)],
-                    "n_regionkey": pa.array(np.arange(25) % 5, pa.int32())}),
-          f"{root}/nation.parquet")
-    write(pa.table({
-        "c_custkey": pa.array(np.arange(n_cust), pa.int64()),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": pa.array(rng.integers(0, 25, n_cust), pa.int32()),
-        "c_acctbal": pa.array(r2(rng.uniform(-999.99, 9999.99, n_cust))),
-        "c_mktsegment": pa.array(np.array(["AUTOMOBILE", "BUILDING", "FURNITURE",
-                                           "HOUSEHOLD", "MACHINERY"])[rng.integers(0, 5, n_cust)]),
-    }), f"{root}/customer.parquet")
-    write(pa.table({
-        "s_suppkey": pa.array(np.arange(n_supp), pa.int64()),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
-        "s_acctbal": pa.array(r2(rng.uniform(-999.99, 9999.99, n_supp))),
-    }), f"{root}/supplier.parquet")
-    colors = np.array(["red", "blue", "green", "black", "white", "small", "large", "shiny"])
-    nouns = np.array(["widget", "bolt", "ring", "plate", "gear", "nut", "pipe", "valve"])
-    pk = np.arange(n_part)
-    write(pa.table({
-        "p_partkey": pa.array(pk, pa.int64()),
-        "p_name": pa.array(np.char.add(np.char.add(colors[rng.integers(0, 8, n_part)], " "),
-                                       nouns[rng.integers(0, 8, n_part)])),
-        "p_brand": pa.array([f"Brand#{b}" for b in rng.integers(1, 26, n_part)]),
-        "p_type": pa.array(np.array(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
-                                     "STANDARD"])[rng.integers(0, 6, n_part)]),
-        "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-        "p_retailprice": pa.array(np.round(900.0 + (pk % 1000) * 0.1, 1)),
-    }), f"{root}/part.parquet")
-    write(pa.table({
-        "o_orderkey": pa.array(np.arange(n_ord), pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), pa.int64()),
-        "o_orderstatus": pa.array(np.array(["F", "O", "P"])[rng.integers(0, 3, n_ord)]),
-        "o_totalprice": pa.array(r2(rng.uniform(1000, 500000, n_ord))),
-        "o_orderdate": ts_us(dt.datetime(1995, 1, 1), dt.datetime(2001, 8, 2), n_ord, day=True),
-        "o_orderpriority": pa.array(np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
-                                              "5-LOW"])[rng.integers(0, 5, n_ord)]),
-    }), f"{root}/orders.parquet")
-    write(pa.table({
-        "l_orderkey": pa.array(rng.integers(0, n_ord, n_line), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, n_part, n_line), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, n_supp, n_line), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, n_line), pa.int32()),
-        "l_quantity": pa.array(rng.integers(1, 51, n_line).astype(np.float64)),
-        "l_extendedprice": pa.array(r2(rng.uniform(900, 105000, n_line))),
-        "l_discount": pa.array(rng.integers(0, 11, n_line) / 100.0),
-        "l_tax": pa.array(rng.integers(0, 9, n_line) / 100.0),
-        "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n_line)]),
-        "l_linestatus": pa.array(np.array(["O", "F"])[rng.integers(0, 2, n_line)]),
-        "l_shipdate": ts_us(dt.datetime(1995, 1, 2), dt.datetime(2001, 11, 5), n_line, day=True),
-    }), f"{root}/lineitem.parquet")
-    ev_ts = np.sort(rng.integers(
-        int(dt.datetime(2024, 1, 1).replace(tzinfo=dt.timezone.utc).timestamp() * 1e6),
-        int(dt.datetime(2024, 1, 31).replace(tzinfo=dt.timezone.utc).timestamp() * 1e6), n_ev))
-    write(pa.table({
-        "event_id": pa.array(np.arange(n_ev), pa.int64()),
-        "ts": pa.array(ev_ts, pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, max(2, n_ev // 67), n_ev), pa.int64()),
-        "event_type": pa.array(np.array(["view", "click", "purchase", "signup",
-                                         "error"])[rng.integers(0, 5, n_ev)]),
-        "value": pa.array(r2(rng.lognormal(np.log(34.6), 0.85, n_ev))),
-        "props": pa.array([f'{{"k": {v}}}' for v in rng.integers(0, 100, n_ev)]),
-    }), f"{root}/events.parquet")
-    write(documents_table(rng, n_doc), f"{root}/documents.parquet")
-    vec = rng.normal(0, 1, (n_emb, 64))
-    near = np.flatnonzero(rng.random(n_emb) < 0.05)
-    for i in near[near > 0]:
-        vec[i] = vec[int(rng.integers(0, i))] + rng.normal(0, 0.02, 64)
-    vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype(np.float32)
-    write(pa.table({
-        "vec_id": pa.array(np.arange(n_emb), pa.int64()),
-        "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, n_emb), pa.int32()),
-    }), f"{root}/embeddings.parquet")

@@ -18,9 +18,9 @@ final case class Ctx(
 
 /** What a workload reports back.
   *
-  * @param opsMs latency of every timed operation (window, query, batch)
+  * @param opsMs latency of every timed operation (window, batch)
   * @param items units of work the timed operations completed (rows
-  *   committed, queries, documents indexed)
+  *   committed, documents indexed)
   * @param warmEndMs wall clock (epoch ms) when warm-up ended, i.e. just
   *   before the first timed operation
   * @param incorrect timed operations a correctness gate found wrong
@@ -37,7 +37,7 @@ final case class Outcome(
 
 /** Benchmark JVM entry point, launched by `run.py` (never by hand):
   *
-  *   --workload market_live|query_mix|doc_ingest --seed N --seconds S
+  *   --workload market_live|doc_ingest --seed N --seconds S
   *   --trace 0|1 --data DIR --work DIR --out FILE [--trace-out FILE]
   *
   * Runs one workload on `local[cpus]` and writes one JSON result file.
@@ -66,7 +66,6 @@ object Main {
       opt("data"), work, cpus, tracer)
     val out = workload match {
       case "market_live" => MarketLive.run(ctx)
-      case "query_mix" => QueryMix.run(ctx)
       case "doc_ingest" => DocIngest.run(ctx)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }

@@ -14,7 +14,9 @@ import scala.jdk.CollectionConverters._
   * [[QueryExecutionListener]] records each executed plan's Catalyst phase
   * times. A job's tag is the job-local property [[SparkTrace.TagKey]] at
   * submission (threads a query starts inherit it); untagged jobs are
-  * counted only in `started`/`ended`.
+  * counted only in `started`/`ended`. Tagged jobs whose description marks
+  * them as an `EpochKeyedStore` background fold are also kept in [[folds]]
+  * with their start and end.
   */
 final class SparkTrace private (spark: SparkSession)
     extends SparkListener with QueryExecutionListener {
@@ -26,16 +28,26 @@ final class SparkTrace private (spark: SparkSession)
   /** One row per executed plan: start (epoch ms), Catalyst phase times,
     * output rows of the plan's top operator. */
   val plans = new ConcurrentLinkedQueue[Plan]()
+  /** Finished background-fold jobs: (tag, start, end), epoch ms. */
+  val folds = new ConcurrentLinkedQueue[(String, Long, Long)]()
+  private val foldStart = new ConcurrentHashMap[Int, (String, Long)]()
   private def of(tag: String) = totals.computeIfAbsent(tag, _ => new Totals)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     started.incrementAndGet()
-    Option(e.properties).flatMap(p => Option(p.getProperty(TagKey))).foreach { tag =>
+    val props = Option(e.properties)
+    props.flatMap(p => Option(p.getProperty(TagKey))).foreach { tag =>
       of(tag).jobs.incrementAndGet()
       e.stageIds.foreach(stageTag.put(_, tag))
+      if (props.flatMap(p => Option(p.getProperty(JobDescriptionKey))).exists(_.startsWith(FoldJobPrefix)))
+        foldStart.put(e.jobId, (tag, e.time))
     }
   }
-  override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.incrementAndGet(); () }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+    Option(foldStart.remove(e.jobId)).foreach { case (tag, t0) => folds.add((tag, t0, e.time)) }
+    ended.incrementAndGet()
+    ()
+  }
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
     Option(stageTag.get(e.stageInfo.stageId)).foreach(of(_).stages.incrementAndGet())
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -72,7 +84,7 @@ final class SparkTrace private (spark: SparkSession)
   }
 
   /** Forget everything recorded so far (after warm-up). */
-  def reset(): Unit = { quiesce(); totals.clear(); plans.clear() }
+  def reset(): Unit = { quiesce(); totals.clear(); plans.clear(); folds.clear() }
 
   /** Plans that started inside one of the given wall windows (epoch ms). */
   def plansWithin(windows: Seq[(Long, Long)]): Seq[Plan] =
@@ -90,6 +102,9 @@ final class SparkTrace private (spark: SparkSession)
 
 object SparkTrace {
   val TagKey = "perfbench.tag"
+  /** The job description `EpochKeyedStore.maintain` gives a fold's jobs. */
+  val FoldJobPrefix = "epoch store background"
+  private val JobDescriptionKey = "spark.job.description"
 
   /** Task-side totals of one tag. */
   final class Totals {

@@ -58,8 +58,6 @@ object Stats {
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
   def mean(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else xs.sum / xs.size
-  def geomean(xs: Seq[Double]): Double =
-    if (xs.isEmpty) Double.NaN else math.exp(xs.map(x => math.log(math.max(x, 1e-9))).sum / xs.size)
 }
 
 /** Span and counter recorder for the traced run.

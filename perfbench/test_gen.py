@@ -54,10 +54,7 @@ class GeneratorTest(unittest.TestCase):
         self.assert_seeded(lambda s, r: gen.market(s, r, 3))
 
     def test_doc_batches(self):
-        self.assert_seeded(lambda s, r: gen.doc_batches(s, r, 3, 50, 5, corpus_docs=300))
-
-    def test_tables(self):
-        self.assert_seeded(lambda s, r: gen.tables(s, r, 0.001))
+        self.assert_seeded(lambda s, r: gen.doc_batches(s, r, 2, 3, 50, 5, corpus_docs=300))
 
     def test_planted_copies_are_near_duplicates(self):
         """Each planted copy is its original plus one word: with n-word
@@ -65,14 +62,15 @@ class GeneratorTest(unittest.TestCase):
         import json
         import pyarrow.parquet as pq
         root = os.path.join(self.dir, "d")
-        paths = gen.doc_batches(3, root, 4, 60, 6, corpus_docs=300)
+        paths = gen.doc_batches(3, root, 2, 4, 60, 6, corpus_docs=300)
         text = {}
-        for p in paths:
+        for p in paths + [os.path.join(root, "history.parquet")]:
             t = pq.read_table(p).to_pydict()
             text.update(zip(t["doc_id"], t["text"]))
         with open(os.path.join(root, "planted.json")) as f:
             planted = json.load(f)
-        self.assertEqual(len(planted), 3 * 6)
+        self.assertEqual(len(planted), 4 * 6)
+        self.assertTrue(any(a < 2_000_000 for a, _ in planted), "no copy of a history document")
 
         def shingles(s):
             w = s.split()
