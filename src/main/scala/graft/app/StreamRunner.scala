@@ -29,9 +29,7 @@ import scala.util.control.NonFatal
   *     [[RetryPolicy]]'s backoff ladder; the checkpoint resumes offsets
   *     and state, the sink's id anti-join absorbs any replay.
   *
-  * The batch analog of this file is [[SessionRunner]] + [[BatchReplay]];
-  * [[graft.streaming.FullPipeline]] stays the documented foreachBatch
-  * fallback for deployments without RocksDB.
+  * The batch analog of this file is [[SessionRunner]] + [[BatchReplay]].
   */
 object StreamRunner {
 
@@ -85,17 +83,15 @@ object StreamRunner {
     else if (current != RocksProvider)
       throw new IllegalStateException(
         s"$key=$current, but the chained pipeline needs $RocksProvider " +
-          "(transformWithState requirement) — unset the custom provider or use " +
-          "FullPipeline, the HDFS-state fallback path")
+          s"(transformWithState requirement) — unset $key or set it to that provider")
   }
 
   /** Chained-path startup reconcile: enrichment state lives only in the
     * streaming checkpoint, so the reference's 4-case matrix collapses to
     * checkpoint presence vs the sink's high-watermark. `FromSink` here
     * means "sink history absorbs re-emitted windows while ATR restarts
-    * cold" — the sheet-recovery case; there is no snapshot to seed from
-    * (that is [[graft.streaming.FullPipeline]]'s shape, audited by
-    * [[Reconcile.decide]] proper).
+    * cold" — the sheet-recovery case; there is no snapshot to seed from,
+    * so [[Reconcile.decide]]'s snapshot-vs-sheet matrix does not apply.
     */
   private[graft] def startupAudit(spark: SparkSession, cfg: Config): Reconcile.Decision = {
     val offsets = new org.apache.hadoop.fs.Path(cfg.checkpointDir, "offsets")

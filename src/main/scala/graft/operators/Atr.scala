@@ -17,15 +17,16 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first design: the recursion is the one computation in the reference
   * that no built-in window function expresses (it is order-dependent *and*
-  * self-referential, SURVEY.md §2.10). We run it as a typed
-  * `groupByKey(symbol).flatMapGroups` pass over candles sorted by window —
-  * one shuffle on the symbol key, then a pure sequential fold per symbol.
-  * Per-key memory is bounded by windows-per-session (75/day in the
-  * reference), so the sort-in-memory is safe at any symbol cardinality; at
-  * 100 TB the parallelism axis is the number of symbols, which is exactly how
-  * the reference's own per-ticker state dict scales. The streaming variant
-  * ([[graft.streaming.StreamingAtr]]) reuses [[step]] inside
-  * `flatMapGroupsWithState`.
+  * self-referential, SURVEY.md §2.10). [[enrich]] runs it as one shuffle on
+  * the symbol key (`repartition`), a `sortWithinPartitions` on (symbol,
+  * window), and a `mapPartitions` pass that folds each partition in order,
+  * resetting state at symbol boundaries — the shuffle's sort does the
+  * ordering, so no symbol's candles are buffered in memory. At 100 TB the
+  * parallelism axis is the number of symbols, which is exactly how the
+  * reference's own per-ticker state dict scales. The streaming path
+  * ([[graft.streaming.ChainedPipeline]]) calls the same [[step]] from its
+  * `transformWithState` processor, carrying [[AtrState]] across
+  * micro-batches.
   */
 object Atr {
   val Period = 14
@@ -55,7 +56,8 @@ object Atr {
 
   /** One ATR state transition (atr_engine.py:134-192). Returns the updated
     * state and the (tr, atr) pair for this candle. Pure — shared by the batch
-    * flatMapGroups pass and the streaming mapGroupsWithState operator.
+    * fold ([[enrich]]), the `wilder_atr` aggregate and the streaming
+    * `ChainedPipeline.ChainedProcessor`.
     *
     * The Wilder recursion runs in exact integer "ticks" of 1e-4: since TR and
     * ATR are 4-dp quantities, `(prev·13 + tr)/14` lands exactly on a .00005
@@ -112,17 +114,16 @@ object Atr {
       .select(col("symbol"), col("window_start"), col("prev_atr"), col("atr"))
   }
 
-  /** Batch enrichment over a candle DataFrame with columns
-    * (window_start: timestamp, symbol, open, high, low, close, tick_count
-    * [, gap_filled]).
+  /** Candle frame (window_start timestamp, symbol, open..close, tick_count
+    * [, gap_filled]) → typed Dataset[Candle], the input of both ATR folds:
+    * batch [[enrich]] and the streaming `ChainedPipeline.enrich`.
     */
-  def enrich(candles: DataFrame): Dataset[EnrichedCandle] = {
-    val spark = candles.sparkSession
-    import spark.implicits._
+  def toCandleDS(candles: DataFrame): Dataset[Candle] = {
+    import candles.sparkSession.implicits._
     val withGap =
       if (candles.columns.contains("gap_filled")) candles
       else candles.withColumn("gap_filled", lit(false))
-    val ds = withGap.select(
+    withGap.select(
       col("symbol"),
       unix_micros(col("window_start").cast("timestamp")).as("wkey"),
       date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
@@ -130,12 +131,13 @@ object Atr {
       col("low").cast("double"), col("close").cast("double"),
       col("tick_count").cast("long"), col("gap_filled")
     ).as[Candle]
-    // hash-partition by symbol, sort (symbol, wkey) inside each partition,
-    // then stream one sequential fold per partition resetting state at
-    // symbol boundaries: same semantics as groupByKey+flatMapGroups but
-    // without buffering/sorting each group in memory — the shuffle's sort
-    // machinery does the ordering, and the fold is a pure iterator pass
-    ds.repartition(col("symbol"))
+  }
+
+  /** Batch enrichment over a candle DataFrame (see [[toCandleDS]]); the
+    * partition-sorted fold described in the object scaladoc. */
+  def enrich(candles: DataFrame): Dataset[EnrichedCandle] = {
+    import candles.sparkSession.implicits._
+    toCandleDS(candles).repartition(col("symbol"))
       .sortWithinPartitions(col("symbol"), col("wkey"))
       .mapPartitions { it =>
         var state = AtrState.empty

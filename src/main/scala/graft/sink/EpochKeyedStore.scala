@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * — the Delta/Iceberg-shaped backend the [[KeyedStore]] contract was
   * written for, built from plain parquet + the create-file `_COMMIT`
   * publication pattern (no table-format jars needed; same machinery as
-  * [[graft.streaming.FullPipeline]]'s state epochs and
   * [[graft.operators.Similarity]]'s versioned ANN index).
   *
   * Layout (LSM shape):

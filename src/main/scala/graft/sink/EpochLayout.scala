@@ -5,10 +5,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The create-file `_COMMIT` epoch-publication pattern, factored into one
   * implementation: list epoch directories with their commit status, publish
   * atomically, allocate the next epoch, sweep superseded ones. Consumers —
-  * [[EpochKeyedStore]]'s base/delta tiers (`epoch=<n>`) and
-  * [[graft.streaming.FullPipeline]]'s state snapshots (`e<n>`) — keep their
-  * own layouts and retention policies but share the crash-safety plumbing,
-  * so the two implementations cannot drift.
+  * [[EpochKeyedStore]]'s base/merge/delta tiers and
+  * [[graft.operators.Similarity]]'s versioned ANN index (both `epoch=<n>`)
+  * — keep their own retention policies but share the crash-safety
+  * plumbing, so the implementations cannot drift.
   *
   * Publication is ONE file create — never a directory rename, so the
   * pattern works on object stores where rename is a copy. The create is

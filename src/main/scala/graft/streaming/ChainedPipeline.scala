@@ -8,17 +8,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** Streaming-NATIVE chained enrich: candle finalize → gap-fill → Wilder ATR
-  * runs entirely inside the state store via Spark 4's `transformWithState`,
-  * with zero per-batch driver round-trips — the streaming-first alternative
-  * to [[FullPipeline]]'s run-a-batch-job-per-micro-batch design (which
-  * stays maintained as the documented fallback for the default HDFS state
-  * store; this path requires RocksDB).
+/** The streaming engine: candle finalize → gap-fill → Wilder ATR → sink,
+  * the reference's per-window cycle (main.py:275-328, SURVEY.md §3.2).
+  * Enrichment runs inside the state store via Spark 4's `transformWithState`
+  * (RocksDB provider), with no per-batch driver round-trips; the sink is a
+  * stateless idempotent append per micro-batch.
   *
-  * The structural problem ([[FullPipeline]] scaladoc): gap-fill needs
-  * per-window completeness across the WHOLE symbol universe — a silent
-  * symbol contributes no input row, and a globally-silent window appears in
-  * no micro-batch at all. Solved here with two standard streaming tools:
+  * Gap-fill needs per-window completeness across the WHOLE symbol universe:
+  * a silent symbol contributes no input row, and a globally-silent window
+  * appears in no micro-batch at all, so a per-symbol stateful operator
+  * cannot see what is missing. Solved here with two standard streaming
+  * tools:
   *
   *   - '''universe sharding''': the processor keys by `hash(symbol) %
   *     numShards`, and each shard owns the slice of the expected-symbol
@@ -44,18 +44,18 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   * expired timers within a batch, so the data path always folds before the
   * sweep path synthesizes.
   *
-  * Semantics vs [[FullPipeline]], verified byte-identical on the fixture
-  * day by ChainedPipelineSpec: the one deliberate difference is the sweep
-  * bound — this path synthesizes through the WATERMARK (the reference's
-  * clock semantics: every elapsed window gets a row), where foreachBatch
-  * densifies only to the batch's max observed window. On cold start both
-  * paths drop unseeded symbols (gap_fill.py:70-75), so the first swept
-  * window per shard is its first observed candle window.
+  * On the fixture day the output is byte-identical to the batch replay
+  * ([[graft.app.BatchReplay]]) of the same ticks, pinned by
+  * ChainedPipelineSpec. The one difference in general is the sweep bound:
+  * this path synthesizes through the WATERMARK (the reference's clock
+  * semantics: every elapsed window gets a row), where the batch replay
+  * densifies only its observed window range. On cold start unseeded
+  * symbols are dropped (gap_fill.py:70-75), so the first swept window per
+  * shard is its first observed candle window.
   *
   * Restart story: the whole chain (offsets, window-agg state, per-shard
-  * ATR/seed state, timers) lives in the streaming checkpoint — the
-  * external snapshot dirs and epoch-commit machinery FullPipeline needs
-  * are simply absent; the sink's id anti-join absorbs replayed batches.
+  * ATR/seed state, timers) lives in the streaming checkpoint, so no state
+  * is kept outside it; the sink's id anti-join absorbs replayed batches.
   */
 object ChainedPipeline {
 
@@ -203,7 +203,7 @@ object ChainedPipeline {
     val spark = candles.sparkSession
     import spark.implicits._
     val zone = spark.conf.get("spark.sql.session.timeZone")
-    StreamingPipeline.toCandleDS(candles)
+    Atr.toCandleDS(candles)
       .groupByKey(c => shardOf(c.symbol, numShards))
       .transformWithState(
         new ChainedProcessor(expectedSymbols, numShards, zone, intervalMinutes,
@@ -293,8 +293,8 @@ object ChainedPipeline {
 
   /** Full assembly: enrich chain in the state store, then a STATELESS
     * idempotent sink per micro-batch (edge format → declared-schema gate →
-    * dt-partitioned dedup append) — no snapshot reads, no driver `head()`s,
-    * no state commit: the contrast to [[FullPipeline.start]]'s batch body.
+    * dt-partitioned dedup append). Enrichment state lives only in the
+    * checkpoint, so the sink reads no snapshot and commits no state.
     */
   def start(candles: DataFrame, expectedSymbols: Seq[String], sinkDir: String,
             deadLetterDir: String, checkpointDir: String,

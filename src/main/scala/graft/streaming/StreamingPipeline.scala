@@ -1,15 +1,11 @@
 package graft.streaming
 
-import graft.model.{AtrState, Candle, EnrichedCandle}
-import graft.operators.{Atr, Ohlc}
-import graft.sink.IdempotentSink
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.operators.Ohlc
+import org.apache.spark.sql.DataFrame
 
-/** Structured Streaming assembly of the reference pipeline
-  * (SURVEY.md §3.2): ticks → watermarked OHLC window agg → stateful ATR →
-  * idempotent foreachBatch sink.
+/** The streaming candle stage of the reference pipeline (SURVEY.md §3.2):
+  * ticks → watermarked OHLC window aggregate. Gap-fill, ATR and the sink
+  * run downstream in [[ChainedPipeline]].
   *
   * The reference's freeze/snapshot lifecycle (candle_aggregator.py:30-177,
   * 500 ms grace) maps to watermark semantics: a window is emitted (append
@@ -29,67 +25,4 @@ object StreamingPipeline {
                   watermarkDelay: String = "10 seconds"): DataFrame =
     Ohlc.candles(ticks.withWatermark(tsCol, watermarkDelay),
       tsCol, symCol, priceCol, seqCol, windowDuration)
-
-  /** Candle frame (window_start timestamp, symbol, open..close, tick_count
-    * [, gap_filled]) → typed Dataset[Candle] for the stateful ATR stage.
-    */
-  def toCandleDS(candles: DataFrame): Dataset[Candle] = {
-    import candles.sparkSession.implicits._
-    val withGap =
-      if (candles.columns.contains("gap_filled")) candles
-      else candles.withColumn("gap_filled", lit(false))
-    withGap.select(
-      col("symbol"),
-      unix_micros(col("window_start").cast("timestamp")).as("wkey"),
-      date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-      col("open").cast("double"), col("high").cast("double"),
-      col("low").cast("double"), col("close").cast("double"),
-      col("tick_count").cast("long"), col("gap_filled")
-    ).as[Candle]
-  }
-
-  /** Stateful per-symbol ATR over the finalized-candle stream: state is the
-    * reference's ATRState (atr_engine.py:20-26) carried in Spark's state
-    * store (checkpointed + recoverable, replacing checkpoint_manager.py).
-    * Candles inside a micro-batch are sorted by window before folding.
-    */
-  def atrEnrich(candles: Dataset[Candle]): Dataset[EnrichedCandle] = {
-    import candles.sparkSession.implicits._
-    candles.groupByKey(_.symbol)
-      .flatMapGroupsWithState[AtrState, EnrichedCandle](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (symbol: String, it: Iterator[Candle], state: GroupState[AtrState]) =>
-          var st = state.getOption.getOrElse(AtrState.empty)
-          val out = it.toIndexedSeq.sortBy(_.wkey).map { c =>
-            val (next, tr, atr) = Atr.step(st, c.high, c.low, c.close)
-            st = next
-            EnrichedCandle(c.symbol, c.wkey, c.window_start, c.open, c.high,
-              c.low, c.close, c.tick_count, c.gap_filled, Some(tr), atr)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Idempotent streaming sink: per micro-batch, drain dead letters, stamp
-    * deterministic ids, and append with anti-join dedup — exactly-once on
-    * top of at-least-once micro-batch delivery (write_pipeline.py 🔒3/🔒6).
-    */
-  def startIdempotentSink(enriched: DataFrame, sinkDir: String,
-                          deadLetterDir: String, checkpointDir: String,
-                          idCols: (String, String) = ("symbol", "window_start")): StreamingQuery =
-    enriched.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        IdempotentSink.drainDeadLetters(spark, deadLetterDir, sinkDir)
-        val withId = batch.withColumn("id",
-          concat_ws("_", col(idCols._1),
-            date_format(to_timestamp(col(idCols._2)), "yyyyMMdd_HHmm")))
-        IdempotentSink.appendWithRetry(withId, sinkDir, deadLetterDir,
-          maxRetries = 3, baseDelayMs = 100L)
-        ()
-      }
-      .start()
 }

@@ -1,19 +1,17 @@
 package graft
 
-import graft.model.Instrument
-import graft.streaming.{ChainedPipeline, FullPipeline, StreamingPipeline}
+import graft.streaming.{ChainedPipeline, StreamingPipeline}
 import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.Random
 
-/** The streaming-native chained enrich (transformWithState) against the
-  * same fixture day PipelineEndToEndSpec pins for the foreachBatch path:
-  * byte-identical output, and checkpoint-only restart continuity (no
-  * external state snapshots). Needs the RocksDB state store, hence its own
-  * session (transformWithState requirement).
+/** The streaming engine (transformWithState) replaying the [[FixtureDay]]
+  * that PipelineEndToEndSpec pins for the batch replay: byte-identical
+  * output, and checkpoint-only restart continuity (no external state
+  * snapshots). Needs the RocksDB state store, hence its own session
+  * (transformWithState requirement).
   */
 class ChainedPipelineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -27,47 +25,16 @@ class ChainedPipelineSpec extends AnyFunSuite {
     .getOrCreate()
   import spark.implicits._
 
-  private val instruments = Seq(
-    Instrument("RELIANCE", "2885", "nse_cm"),
-    Instrument("TCS", "11536", "nse_cm"),
-    Instrument("NIFTY", "26000", "nse_cm"))
-
-  /** The PipelineEndToEndSpec fixture day: 17 windows from 09:15, RELIANCE
-    * every window, TCS silent in w2-w3, w5 globally silent, NIFTY never
-    * ticks, one unknown token + one null price.
-    */
-  private def syntheticDay(date: String = "2026-02-02"): Seq[(String, Option[Double], Timestamp, Long)] = {
-    val rnd = new Random(7)
-    val base = Timestamp.valueOf(s"$date 09:15:00").getTime
-    var seq = 0L
-    val rows = scala.collection.mutable.Buffer[(String, Option[Double], Timestamp, Long)]()
-    for (w <- 0 until 17 if w != 5) {
-      val wstart = base + w * 300000L
-      seq += 1; rows += (("2885", Some(2000.0 + rnd.nextInt(100)), new Timestamp(wstart), seq))
-      for (_ <- 0 until 3) {
-        seq += 1
-        rows += (("2885", Some(2000.0 + rnd.nextInt(100)),
-          new Timestamp(wstart + 1000 + rnd.nextInt(290000)), seq))
-      }
-      if (w < 2 || w > 3) {
-        seq += 1
-        rows += (("11536", Some(3300.0 + rnd.nextInt(50)),
-          new Timestamp(wstart + rnd.nextInt(299000)), seq))
-      }
-    }
-    seq += 1; rows += (("424242", Some(1.0), new Timestamp(base + 1000), seq))
-    seq += 1; rows += (("2885", None, new Timestamp(base + 2000), seq))
-    rows.toSeq
-  }
+  private val instruments = FixtureDay.instruments
 
   private def rawDf(date: String = "2026-02-02") =
-    syntheticDay(date).toDF("tk", "ltp", "exchange_timestamp", "seq")
+    FixtureDay.withNoise(date).toDF("tk", "ltp", "exchange_timestamp", "seq")
 
   /** Sentinel just past the last real window's end: watermark lands at
-    * 10:40:00, closing window 16 (10:35) exactly — BOTH streaming paths
-    * finalize precisely the fixture's windows, nothing trailing, so the
-    * watermark-bounded chained sweep and the batch-max-bounded foreachBatch
-    * densify the same range and the outputs can be compared byte-for-byte.
+    * 10:40:00, closing window 16 (10:35) exactly — the sweep finalizes
+    * precisely the fixture's windows, nothing trailing, so the
+    * watermark-bounded sweep densifies the same range as the batch replay
+    * and the outputs can be compared byte-for-byte.
     */
   private val sentinel = Seq(("2885", Some(2000.0),
     Timestamp.valueOf("2026-02-02 10:40:01"), 99999L))
@@ -75,7 +42,7 @@ class ChainedPipelineSpec extends AnyFunSuite {
   private def sinkRows(dir: String): Set[Seq[Any]] =
     spark.read.parquet(dir).drop("created_at", "dt").collect().map(_.toSeq).toSet
 
-  test("chained transformWithState pipeline is byte-identical to foreachBatch and batch truth") {
+  test("chained transformWithState pipeline is byte-identical to batch truth") {
     implicit val sqlCtx = spark.sqlContext
     val root = Files.createTempDirectory("graft-chained").toString
     val dim = instruments.toDS()
@@ -85,45 +52,37 @@ class ChainedPipelineSpec extends AnyFunSuite {
     graft.app.BatchReplay.run(rawDf(), dim, batchSink, "2026-02-02T16:00:00")
     val want = sinkRows(batchSink)
 
-    def candleStream(stream: MemoryStream[(String, Option[Double], Timestamp, Long)]) = {
-      val ticks = graft.ingest.TickIngest.ingest(
-        stream.toDF().toDF("tk", "ltp", "exchange_timestamp", "seq"), dim)
-      StreamingPipeline.ohlcCandles(ticks, tsCol = "event_ts",
-        symCol = "symbol", priceCol = "ltp", seqCol = "seq", watermarkDelay = "1 seconds")
-    }
-    def feed(stream: MemoryStream[(String, Option[Double], Timestamp, Long)],
-             q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val day = syntheticDay()
-      val (first, second) = day.splitAt(day.length / 2)
-      stream.addData(first); q.processAllAvailable()
-      stream.addData(second); q.processAllAvailable()
-      stream.addData(sentinel); q.processAllAvailable()
-    }
+    val day = FixtureDay.withNoise()
+    val (first, second) = day.splitAt(day.length / 2)
+    // RELIANCE's 14th candle (10:20, the w5 gap counted) is its first ATR;
+    // it lands in the second micro-batch, so the warm-up completes from the
+    // state carried across batches
+    assert(first.forall(_._3.before(Timestamp.valueOf("2026-02-02 10:20:00"))))
 
-    // foreachBatch reference path
-    val s1 = MemoryStream[(String, Option[Double], Timestamp, Long)]
-    val q1 = FullPipeline.start(candleStream(s1), instruments.map(_.symbol),
-      s"$root/full_sink", s"$root/full_dead", s"$root/full_ckpt", s"$root/full_state")
-    try feed(s1, q1) finally q1.stop()
+    val s = MemoryStream[FixtureDay.Tick]
+    val ticks = graft.ingest.TickIngest.ingest(
+      s.toDF().toDF("tk", "ltp", "exchange_timestamp", "seq"), dim)
+    val candles = StreamingPipeline.ohlcCandles(ticks, tsCol = "event_ts",
+      symCol = "symbol", priceCol = "ltp", seqCol = "seq", watermarkDelay = "1 seconds")
+    val q = ChainedPipeline.start(candles, instruments.map(_.symbol),
+      s"$root/sink", s"$root/dead", s"$root/ckpt")
+    try {
+      s.addData(first); q.processAllAvailable()
+      s.addData(second); q.processAllAvailable()
+      s.addData(sentinel); q.processAllAvailable()
+    } finally q.stop()
 
-    // chained transformWithState path
-    val s2 = MemoryStream[(String, Option[Double], Timestamp, Long)]
-    val q2 = ChainedPipeline.start(candleStream(s2), instruments.map(_.symbol),
-      s"$root/ch_sink", s"$root/ch_dead", s"$root/ch_ckpt")
-    try feed(s2, q2) finally q2.stop()
-
-    val full = sinkRows(s"$root/full_sink")
-    val chained = sinkRows(s"$root/ch_sink")
+    val chained = sinkRows(s"$root/sink")
     // the chained path reproduces batch truth exactly — 34 rows: 17×2 with
-    // TCS gaps at w2/w3/w5 and RELIANCE gap at w5 — and matches foreachBatch
+    // TCS gaps at w2/w3/w5 and RELIANCE gap at w5
     assert(chained === want,
       s"chained != batch: missing ${(want -- chained).take(2)}, extra ${(chained -- want).take(2)}")
-    assert(chained === full)
     // the globally-silent window was synthesized for both active symbols
-    assert(spark.read.parquet(s"$root/ch_sink")
+    // even though it appeared in no micro-batch — clock-tick semantics
+    assert(spark.read.parquet(s"$root/sink")
       .where($"timestamp" === "2026-02-02T09:40:00" && $"gap_filled" === "TRUE")
       .count() === 2)
-    val ids = spark.read.parquet(s"$root/ch_sink").select("id").as[String].collect()
+    val ids = spark.read.parquet(s"$root/sink").select("id").as[String].collect()
     assert(ids.length === ids.distinct.length)
   }
 
@@ -142,7 +101,7 @@ class ChainedPipelineSpec extends AnyFunSuite {
     // both days trade 09:15-10:40 (17 windows), nothing in between
     val sched = graft.time.SessionSchedule("UTC", 555, 930, Set.empty,
       Map("2026-02-02" -> ((555, 640)), "2026-02-03" -> ((555, 640))))
-    val s = MemoryStream[(String, Option[Double], Timestamp, Long)]
+    val s = MemoryStream[FixtureDay.Tick]
     val ticks = graft.ingest.TickIngest.ingest(
       s.toDF().toDF("tk", "ltp", "exchange_timestamp", "seq"), dim)
     val candles = StreamingPipeline.ohlcCandles(ticks, tsCol = "event_ts",
@@ -150,11 +109,11 @@ class ChainedPipelineSpec extends AnyFunSuite {
     val q = ChainedPipeline.start(candles, instruments.map(_.symbol),
       s"$root/sink", s"$root/dead", s"$root/ckpt", schedule = Some(sched))
     try {
-      s.addData(syntheticDay("2026-02-02")); q.processAllAvailable()
+      s.addData(FixtureDay.withNoise("2026-02-02")); q.processAllAvailable()
       // Tuesday's first ticks advance the watermark across the overnight
       // gap — without the schedule the sweep would synthesize ~274 flat
       // candles per seeded symbol here and the batch compare would fail
-      s.addData(syntheticDay("2026-02-03")); q.processAllAvailable()
+      s.addData(FixtureDay.withNoise("2026-02-03")); q.processAllAvailable()
       s.addData(Seq(("2885", Some(2000.0),
         Timestamp.valueOf("2026-02-03 10:40:01"), 999999L)))
       q.processAllAvailable()
@@ -207,7 +166,7 @@ class ChainedPipelineSpec extends AnyFunSuite {
     graft.app.BatchReplay.run(rawDf(), dim, batchSink, "x")
     val want = sinkRows(batchSink)
 
-    val day = syntheticDay()
+    val day = FixtureDay.withNoise()
     val (first, second) = day.splitAt(day.length / 2)
     first.toDF("tk", "ltp", "exchange_timestamp", "seq")
       .coalesce(1).write.mode("append").parquet(srcDir)

@@ -1,62 +1,23 @@
 package graft
 
 import graft.app.BatchReplay
-import graft.model.Instrument
-import graft.streaming.{FullPipeline, StreamingPipeline}
 import java.nio.file.Files
-import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.Random
 
-/** End-to-end replay of a synthetic trading slice (FIXTURES.md §1 surface):
+/** End-to-end batch replay of a synthetic trading slice ([[FixtureDay]]):
   * boundary ticks, silent windows (gap-fill), unknown tokens, invalid rows,
   * a symbol with ≥15 windows (full ATR warmup + Wilder steps) — asserting
-  * completeness, zero duplicates across replays, and batch/streaming parity.
+  * completeness and zero duplicates across replays. The streaming path
+  * replays the same day in ChainedPipelineSpec and StreamRunnerSpec.
   */
 class PipelineEndToEndSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val instruments = Seq(
-    Instrument("RELIANCE", "2885", "nse_cm"),
-    Instrument("TCS", "11536", "nse_cm"),
-    Instrument("NIFTY", "26000", "nse_cm"))
-
-  /** 17 windows from 09:15; RELIANCE ticks every window except w5 (warmup +
-    * Wilder steps), TCS silent in windows 2-3 (per-symbol gap-fill), window
-    * 5 is GLOBALLY silent (no symbol ticks — the clock-tick case), NIFTY
-    * never ticks (unfillable); plus one unknown-token and one null-price
-    * tick.
-    */
-  private def syntheticDay(date: String = "2026-02-02"): Seq[(String, Option[Double], Timestamp, Long)] = {
-    val rnd = new Random(7)
-    val base = Timestamp.valueOf(s"$date 09:15:00").getTime
-    var seq = 0L
-    val rows = scala.collection.mutable.Buffer[(String, Option[Double], Timestamp, Long)]()
-    for (w <- 0 until 17 if w != 5) {
-      val wstart = base + w * 300000L
-      // boundary tick at exactly the window start
-      seq += 1; rows += (("2885", Some(2000.0 + rnd.nextInt(100)), new Timestamp(wstart), seq))
-      for (_ <- 0 until 3) {
-        seq += 1
-        rows += (("2885", Some(2000.0 + rnd.nextInt(100)),
-          new Timestamp(wstart + 1000 + rnd.nextInt(290000)), seq))
-      }
-      if (w < 2 || w > 3) { // TCS silent in windows 2-3
-        seq += 1
-        rows += (("11536", Some(3300.0 + rnd.nextInt(50)),
-          new Timestamp(wstart + rnd.nextInt(299000)), seq))
-      }
-    }
-    seq += 1; rows += (("424242", Some(1.0), new Timestamp(base + 1000), seq)) // unknown token
-    seq += 1; rows += (("2885", None, new Timestamp(base + 2000), seq))        // null price
-    rows.toSeq
-  }
+  private val instruments = FixtureDay.instruments
 
   private def rawDf(date: String = "2026-02-02") =
-    syntheticDay(date).toDF("tk", "ltp", "exchange_timestamp", "seq")
-      .withColumn("exchange_timestamp", $"exchange_timestamp") // already timestamp
+    FixtureDay.withNoise(date).toDF("tk", "ltp", "exchange_timestamp", "seq")
 
   test("batch replay: completeness, gap-fill, ATR warmup, idempotent re-run") {
     val sink = Files.createTempDirectory("graft-e2e").toString + "/market_data"
@@ -108,139 +69,5 @@ class PipelineEndToEndSpec extends AnyFunSuite {
     assert(replay.ran === Seq("2026-02-02", "2026-02-03"))
     assert(spark.read.parquet(sink).count() === 68L)
     assert(spark.read.parquet(sink).select("id").distinct().count() === 68L)
-  }
-
-  test("full streaming pipeline (gap-fill + ATR + edge sink) matches batch replay") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-full").toString
-    val dim = instruments.toDS()
-
-    // batch truth: full BatchReplay into its own sink
-    val batchSink = s"$root/batch_sink"
-    graft.app.BatchReplay.run(rawDf(), dim, batchSink, "2026-02-02T16:00:00")
-    val want = spark.read.parquet(batchSink)
-      .drop("created_at", "dt").collect().map(_.toSeq).toSet
-
-    val stream = MemoryStream[(String, Option[Double], Timestamp, Long)]
-    val ticks = graft.ingest.TickIngest.ingest(
-      stream.toDF().toDF("tk", "ltp", "exchange_timestamp", "seq"), dim)
-    val candles = StreamingPipeline.ohlcCandles(ticks, tsCol = "event_ts",
-      symCol = "symbol", priceCol = "ltp", seqCol = "seq", watermarkDelay = "1 seconds")
-    val q = FullPipeline.start(candles, instruments.map(_.symbol),
-      s"$root/sink", s"$root/dead", s"$root/ckpt", s"$root/state")
-    try {
-      val day = syntheticDay()
-      val (first, second) = day.splitAt(day.length / 2)
-      stream.addData(first); q.processAllAvailable()
-      stream.addData(second); q.processAllAvailable()
-      // sentinel far past the last window so everything finalizes
-      stream.addData(Seq(("2885", Some(2000.0),
-        Timestamp.valueOf("2026-02-02 12:00:10"), 99999L)))
-      q.processAllAvailable()
-      val got = spark.read.parquet(s"$root/sink").drop("created_at", "dt")
-        .collect().map(_.toSeq).toSet
-      // everything batch produced for the synthetic day must be present,
-      // except rows the sentinel itself created (RELIANCE @ 12:00 window)
-      val missing = want -- got
-      assert(missing.isEmpty, s"missing ${missing.size} rows: ${missing.take(3)}")
-      // the globally-silent window (09:40) was synthesized for BOTH symbols
-      // even though it appeared in no micro-batch — clock-tick semantics
-      assert(spark.read.parquet(s"$root/sink")
-        .where($"timestamp" === "2026-02-02T09:40:00" && $"gap_filled" === "TRUE")
-        .count() === 2)
-      val ids = spark.read.parquet(s"$root/sink").select("id").as[String].collect()
-      assert(ids.length === ids.distinct.length)
-    } finally q.stop()
-  }
-
-  test("restart from checkpoint: file source, kill mid-day, no dupes, state continuity") {
-    import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft-restart").toString
-    val dim = instruments.toDS()
-    val srcDir = s"$root/src"
-
-    // batch truth over the full day
-    val batchSink = s"$root/batch_sink"
-    graft.app.BatchReplay.run(rawDf(), dim, batchSink, "x")
-    val want = spark.read.parquet(batchSink).drop("created_at", "dt")
-      .collect().map(_.toSeq).toSet
-
-    val day = syntheticDay()
-    val (first, second) = day.splitAt(day.length / 2)
-    val sentinel = Seq(("2885", Some(2000.0), Timestamp.valueOf("2026-02-02 12:00:10"), 99999L))
-    first.toDF("tk", "ltp", "exchange_timestamp", "seq")
-      .coalesce(1).write.mode("append").parquet(srcDir)
-
-    val schema = StructType(Seq(
-      StructField("tk", StringType), StructField("ltp", DoubleType),
-      StructField("exchange_timestamp", TimestampType), StructField("seq", LongType)))
-    def startQuery() = {
-      val ticks = graft.ingest.TickIngest.ingest(
-        spark.readStream.schema(schema).parquet(srcDir), dim)
-      val candles = StreamingPipeline.ohlcCandles(ticks, tsCol = "event_ts",
-        symCol = "symbol", priceCol = "ltp", seqCol = "seq", watermarkDelay = "1 seconds")
-      FullPipeline.start(candles, instruments.map(_.symbol),
-        s"$root/sink", s"$root/dead", s"$root/ckpt", s"$root/state")
-    }
-
-    val q1 = startQuery()
-    q1.processAllAvailable()
-    q1.stop() // "crash" mid-day
-
-    (second ++ sentinel).toDF("tk", "ltp", "exchange_timestamp", "seq")
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    val q2 = startQuery() // same checkpoint → resumes offsets, watermark, state
-    try {
-      q2.processAllAvailable()
-      val got = spark.read.parquet(s"$root/sink").drop("created_at", "dt")
-        .collect().map(_.toSeq).toSet
-      assert((want -- got).isEmpty, s"missing ${(want -- got).size} rows after restart")
-      val ids = spark.read.parquet(s"$root/sink").select("id").as[String].collect()
-      assert(ids.length === ids.distinct.length)
-    } finally q2.stop()
-  }
-
-  test("streaming pipeline matches batch enrichment and sinks idempotently") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-stream").toString
-    val dim = instruments.toDS()
-
-    // batch truth on the same ticks (no gap-fill in the streaming variant,
-    // so compare against candles → ATR only)
-    val ticks = graft.ingest.TickIngest.ingest(rawDf(), dim)
-    val batchCandles = graft.operators.Ohlc.candles(
-      ticks, tsCol = "event_ts", symCol = "symbol", priceCol = "ltp", seqCol = "seq")
-    val want = graft.operators.Atr.enrich(batchCandles).collect()
-      .map(e => (e.symbol, e.window_start, e.tr, e.atr)).toSet
-
-    case class Raw(tk: String, ltp: Option[Double], exchange_timestamp: Timestamp, seq: Long)
-    val stream = MemoryStream[(String, Option[Double], Timestamp, Long)]
-    val streamTicks = graft.ingest.TickIngest.ingest(
-      stream.toDF().toDF("tk", "ltp", "exchange_timestamp", "seq"), dim)
-    val candles = StreamingPipeline.ohlcCandles(streamTicks, tsCol = "event_ts",
-      symCol = "symbol", priceCol = "ltp", seqCol = "seq", watermarkDelay = "1 seconds")
-    val enriched = StreamingPipeline.atrEnrich(StreamingPipeline.toCandleDS(candles))
-    val q = StreamingPipeline.startIdempotentSink(enriched.toDF(),
-      s"$root/sink", s"$root/dead", s"$root/ckpt")
-    try {
-      val day = syntheticDay()
-      val (first, second) = day.splitAt(day.length / 2)
-      stream.addData(first); q.processAllAvailable()
-      stream.addData(second); q.processAllAvailable()
-      // close every open window well past the watermark
-      stream.addData(Seq(("2885", Some(2000.0),
-        Timestamp.valueOf("2026-02-02 11:00:10"), 99999L)))
-      q.processAllAvailable()
-      val got = spark.read.parquet(s"$root/sink")
-        .select("symbol", "window_start", "tr", "atr")
-        .as[(String, String, Option[Double], Option[Double])].collect()
-        .map(t => (t._1, t._2, t._3, t._4)).toSet
-      // every batch row except the sentinel's own window must be in the sink
-      val wantCovered = want.filter(_._2 < "2026-02-02 11:00:00")
-      assert(wantCovered.subsetOf(got))
-      // no duplicate ids despite at-least-once micro-batches
-      val ids = spark.read.parquet(s"$root/sink").select("id").as[String].collect()
-      assert(ids.length === ids.distinct.length)
-    } finally q.stop()
   }
 }

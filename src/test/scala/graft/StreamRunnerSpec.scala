@@ -1,7 +1,6 @@
 package graft
 
 import graft.app.StreamRunner
-import graft.model.Instrument
 import graft.recover.{Reconcile, RetryPolicy}
 import graft.streaming.StreamingPipeline
 import graft.time.TradingCalendar
@@ -10,7 +9,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.Random
 
 /** The live runner end-to-end: calendar-gated sessions through
   * ChainedPipeline with a mid-day restart, the startup reconcile audit in
@@ -35,33 +33,7 @@ class StreamRunnerSpec extends AnyFunSuite {
     .getOrCreate()
   import spark.implicits._
 
-  private val instruments = Seq(
-    Instrument("RELIANCE", "2885", "nse_cm"),
-    Instrument("TCS", "11536", "nse_cm"),
-    Instrument("NIFTY", "26000", "nse_cm"))
-
-  /** The PipelineEndToEndSpec fixture day (see ChainedPipelineSpec). */
-  private def syntheticDay(date: String): Seq[(String, Option[Double], Timestamp, Long)] = {
-    val rnd = new Random(7)
-    val base = Timestamp.valueOf(s"$date 09:15:00").getTime
-    var seq = 0L
-    val rows = scala.collection.mutable.Buffer[(String, Option[Double], Timestamp, Long)]()
-    for (w <- 0 until 17 if w != 5) {
-      val wstart = base + w * 300000L
-      seq += 1; rows += (("2885", Some(2000.0 + rnd.nextInt(100)), new Timestamp(wstart), seq))
-      for (_ <- 0 until 3) {
-        seq += 1
-        rows += (("2885", Some(2000.0 + rnd.nextInt(100)),
-          new Timestamp(wstart + 1000 + rnd.nextInt(290000)), seq))
-      }
-      if (w < 2 || w > 3) {
-        seq += 1
-        rows += (("11536", Some(3300.0 + rnd.nextInt(50)),
-          new Timestamp(wstart + rnd.nextInt(299000)), seq))
-      }
-    }
-    rows.toSeq
-  }
+  private val instruments = FixtureDay.instruments
 
   /** Both fixture days trade special 09:15-10:40 sessions; 02-04 is a
     * holiday; weekends default-closed.
@@ -89,8 +61,8 @@ class StreamRunnerSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-runner").toString
     val dim = instruments.toDS()
     val cal = TradingCalendar.load(spark, writeCalendar(root))
-    val day1 = syntheticDay("2026-02-02")
-    val day2 = syntheticDay("2026-02-03")
+    val day1 = FixtureDay.clean("2026-02-02")
+    val day2 = FixtureDay.clean("2026-02-03")
 
     val batchSink = s"$root/batch_sink"
     graft.app.BatchReplay.run(
@@ -180,7 +152,9 @@ class StreamRunnerSpec extends AnyFunSuite {
       assert(spark.conf.get(key).endsWith("RocksDBStateStoreProvider"))
       StreamRunner.configureStateStore(spark) // idempotent
       spark.conf.set(key, "com.example.CustomProvider")
-      intercept[IllegalStateException] { StreamRunner.configureStateStore(spark) }
+      val e = intercept[IllegalStateException] { StreamRunner.configureStateStore(spark) }
+      assert(e.getMessage.contains(
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     } finally spark.conf.set(key, prev)
   }
 
@@ -188,7 +162,7 @@ class StreamRunnerSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-runner-crash").toString
     val dim = instruments.toDS()
     val cal = TradingCalendar.load(spark, writeCalendar(root))
-    val day1 = syntheticDay("2026-02-02")
+    val day1 = FixtureDay.clean("2026-02-02")
     // sentinel past the close flushes the last in-session windows; its own
     // window never finalizes (append mode), so it adds no sink row
     val sentinel = Seq(("2885", Some(2000.0),
@@ -274,7 +248,7 @@ class StreamRunnerSpec extends AnyFunSuite {
     val dim = instruments.toDS()
     val cal = TradingCalendar.load(spark, writeCalendar(root))
     val srcDir = s"$root/src"
-    syntheticDay("2026-02-02").take(8)
+    FixtureDay.clean("2026-02-02").take(8)
       .toDF("tk", "ltp", "exchange_timestamp", "seq")
       .coalesce(1).write.mode("append").parquet(srcDir)
     val cfg = StreamRunner.Config(s"$root/sink", s"$root/dead", s"$root/ckpt",

@@ -1,7 +1,5 @@
 package graft
 
-import graft.model.Candle
-import graft.operators.Atr
 import graft.streaming.StreamingPipeline
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -95,26 +93,5 @@ class StreamingSpec extends AnyFunSuite {
       assert(hb.latestBatchId >= 0)
       assert(!hb.isStalled)
     } finally { q.stop(); spark.streams.removeListener(listener) }
-  }
-
-  test("stateful streaming ATR matches the batch recursion across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val candles = (1 to 16).map(i =>
-      Candle("X", i.toLong, f"w$i%03d", 15.0, 20.0, 10.0, 15.0, 1L, gap_filled = false))
-    val stream = MemoryStream[Candle]
-    val q = StreamingPipeline.atrEnrich(stream.toDS())
-      .writeStream.outputMode("append").format("memory").queryName("atr_out").start()
-    try {
-      stream.addData(candles.take(10)) // first micro-batch
-      q.processAllAvailable()
-      stream.addData(candles.drop(10)) // state carries across batches
-      q.processAllAvailable()
-      val got = spark.table("atr_out").as[graft.model.EnrichedCandle]
-        .collect().sortBy(_.wkey)
-      val want = Atr.enrichSeries(candles)
-      assert(got.map(e => (e.wkey, e.tr, e.atr)).toSeq === want.map(e => (e.wkey, e.tr, e.atr)))
-      assert(got(13).atr.contains(10.0))
-    } finally q.stop()
   }
 }
