@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Dev tool: incremental-dedup scale probe — drives [[DedupStream]]'s
   * batch body over a growing persisted index and reports per-batch wall
-  * time for BOTH KeyedStore backends, making the epoch store's O(batch)
-  * write claim measurable: the parquet-append emulation re-scans the
-  * store's existing keys on every upsert (per-batch cost grows with the
-  * corpus), the epoch store writes one delta per table per batch
-  * (per-batch cost stays flat; reads pay a bounded merge window instead).
+  * time with inline and with deferred compaction, making the epoch
+  * store's O(batch) write claim measurable: it writes one delta per table
+  * per batch with no existing-keys scan, so per-batch cost stays flat
+  * while reads pay a merge window that each fold bounds.
   *
   * Batches are the sf documents table with a batch token interleaved
   * after every second word, so every 5-gram shingle carries the token:
@@ -19,12 +18,12 @@ import org.apache.spark.sql.functions._
   * measures the index machinery, not a growing true-pair flood) while
   * each batch keeps the base corpus's natural within-batch dup structure.
   *
-  * Shuffle parallelism is deliberately small: the bands store partitions
-  * by (band, kb) and every delta epoch writes up to
+  * Shuffle parallelism is deliberately small: the bands store's folds
+  * partition by (band, kb) and every fold epoch writes up to
   * shufflePartitions × activePartitions part files — at probe scale the
   * local-FS small-file overhead would otherwise drown the trend being
   * measured. (At production scale the same product is the object-count
-  * knob: bound it with coalesceTo or fewer key buckets.)
+  * knob: bound it with fewer key buckets.)
   *
   * Usage: runMain graft.DedupScaleCheck [sfDir] [batches] [docFactor] [backendSubstr]
   * (backendSubstr filters the backend list by label substring — e.g.
@@ -57,8 +56,7 @@ object DedupScaleCheck {
 
     Seq(
       "epoch" -> ((d: String) => DedupStream.epochStores(d)),
-      "epoch-deferred" -> ((d: String) => DedupStream.epochStores(d, deferCompaction = true)),
-      "parquet-emulation" -> ((d: String) => DedupStream.parquetStores(d))
+      "epoch-deferred" -> ((d: String) => DedupStream.epochStores(d, deferCompaction = true))
     ).filter { case (label, _) => backendFilter.forall(label.contains) }
       .foreach { case (label, mk) =>
       val root = java.nio.file.Files.createTempDirectory(s"graft-dscale-$label").toString

@@ -26,12 +26,11 @@ import org.apache.spark.sql.functions._
   * O(corpus), and the O(corpus) base fold runs every k-th fold instead of
   * every fold.
   *
-  * The contract costs, versus [[ParquetKeyedStore]]'s append emulation:
+  * The contract costs:
   *   - `upsert` is WRITE-ONLY — one delta per batch, O(batch) work, no
-  *     existing-keys scan of the store at all (the emulation's O(store)
-  *     anti-join per batch is gone). Key collisions resolve at READ time:
-  *     for each merge-key tuple the row from the newest epoch wins —
-  *     exactly the MERGE shape [[InMemoryKeyedStore]] spec-pins.
+  *     existing-keys scan of the store at all. Key collisions resolve at
+  *     READ time: for each merge-key tuple the row from the newest epoch
+  *     wins — exactly the MERGE shape [[InMemoryKeyedStore]] spec-pins.
   *   - `read` unions the newest committed base, the newest committed L1
   *     merge above it (tiered mode), and the committed deltas above both,
   *     resolving newest-wins with one window over `mergeKeys`;
@@ -45,11 +44,10 @@ import org.apache.spark.sql.functions._
   * band store's key bucket) push below the window to the scan, so
   * partition-pruned probes keep pruning.
   *
-  * A directory previously written by [[ParquetKeyedStore]] (flat or
-  * hive-partitioned, no epoch tiers) reads as an implicit epoch-0 base, so
-  * swapping backends on an existing store is a binding change, not a
-  * migration; the first compaction folds the legacy files into a real base
-  * and sweeps them.
+  * The store root holds the three tiers and nothing else: data files or
+  * hive directories beside them (say, a plain parquet table written to
+  * `dir`) make every read and fold raise instead of reading a populated
+  * directory as an empty index.
   *
   * Single-writer, like the reference's sheet protocol, and ENFORCED: a
   * delta write claims its epoch directory with an exclusive `_STAGE`
@@ -64,21 +62,20 @@ import org.apache.spark.sql.functions._
   *   arrives with a different extension value, the read-side merge resolves
   *   on the WIDER tuple and both rows survive where the other backends
   *   would replace.
-  * @param partitionCols hive layout beneath each epoch (e.g. the band
-  *   store's (band, kb)) — the probe side's pruning granularity
-  * @param partitionDeltas apply `partitionCols` to DELTA writes too
-  *   (default). Directory pruning pays off on the O(corpus) base/merge
-  *   tiers; a delta is O(batch), and row-group filtering over a handful
-  *   of plain files reads it just as well — while a partitioned delta
-  *   write fans one batch into |live partition values| tiny files whose
+  * @param partitionCols hive layout beneath each FOLD epoch (base and
+  *   merge; e.g. the band store's (band, kb)) — the probe side's pruning
+  *   granularity. Deltas are always flat: directory pruning pays off on
+  *   the O(corpus) fold tiers, a delta is O(batch) and row-group
+  *   filtering reads it just as well, while a partitioned delta write
+  *   fans one batch into |live partition values| tiny files whose
   *   driver-side commit dominates the batch (measured on the dedup-stream
-  *   band store: ~600 files, ~16 s of a 26 s batch at probe scale). Set
-  *   false for high-frequency upsert streams; folds keep the hive layout
-  *   either way, so steady-state reads still prune
+  *   band store: ~600 files, ~16 s of a 26 s batch at probe scale). The
+  *   partitioning also fixes the file count: an unpartitioned store
+  *   writes every epoch as ONE file (the narrow id ledger would otherwise
+  *   add a handful of tiny files per batch), a partitioned one keeps the
+  *   plan's natural parallelism
   * @param compactAfterDeltas committed deltas above the base tolerated
   *   before a write auto-compacts
-  * @param coalesceTo small-file control applied to delta AND base writes;
-  *   None keeps the plan's natural parallelism (big partitioned stores)
   * @param verifyMergeDependency debug mode: every upsert re-checks that
   *   the post-merge view holds exactly one row per CALLER key tuple —
   *   catches a violated functional-dependency precondition (same caller
@@ -99,16 +96,14 @@ import org.apache.spark.sql.functions._
   *   1 (default) = every fold is a FULL base fold (O(corpus)); k > 1 =
   *   folds 1..k−1 are PARTIAL — old merge + pending deltas fold into a
   *   new L1 merge epoch, O(accumulated-since-base) — and every k-th fold
-  *   (or any fold with a legacy layout present) goes to base. Caps the
-  *   read-side member count at merge+pending instead of all pending,
-  *   and divides base-fold frequency by k. [[compact]] is always full
+  *   goes to base. Caps the read-side member count at merge+pending
+  *   instead of all pending, and divides base-fold frequency by k.
+  *   [[compact]] is always full
   */
 final class EpochKeyedStore(dir: String,
                             mergeKeys: Seq[String],
                             partitionCols: Seq[String] = Nil,
-                            partitionDeltas: Boolean = true,
                             compactAfterDeltas: Int = 16,
-                            coalesceTo: Option[Int] = Some(1),
                             verifyMergeDependency: Boolean = false,
                             deferCompaction: Boolean = false,
                             fullCompactEvery: Int = 1) extends KeyedStore {
@@ -119,6 +114,11 @@ final class EpochKeyedStore(dir: String,
 
   private val layout = new EpochLayout("epoch=")
 
+  /** One file per epoch for an unpartitioned store; a partitioned store
+    * keeps the plan's natural parallelism. */
+  private def shaped(rows: DataFrame): DataFrame =
+    if (partitionCols.isEmpty) rows.coalesce(1) else rows
+
   private def fs(spark: SparkSession): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -126,14 +126,14 @@ final class EpochKeyedStore(dir: String,
   private def listEpochs(fs: FileSystem, tier: String): Seq[(Long, Path, Boolean)] =
     layout.list(fs, new Path(s"$dir/$tier"))
 
-  /** Pre-epoch [[ParquetKeyedStore]] content directly under `dir`: data
-    * files / hive dirs that are not the base/delta tiers. Read as an
-    * implicit epoch-0 base until a compaction folds and sweeps it.
+  /** Raise on data files or hive directories directly under `dir` that
+    * are not the base/merge/delta tiers. The store never reads them, so
+    * skipping them would read a populated directory as an empty index and
+    * hand a dedup stream a licence to re-admit its whole history.
     */
-  private def legacyPaths(fs: FileSystem): Seq[Path] = {
+  private def requireOnlyTiers(fs: FileSystem): Unit = {
     val root = new Path(dir)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
+    val stray = if (!fs.exists(root)) Nil else fs.listStatus(root).toSeq
       .filter { s =>
         val n = s.getPath.getName
         n != "base" && n != "merge" && n != "delta" &&
@@ -141,6 +141,11 @@ final class EpochKeyedStore(dir: String,
           (s.isDirectory || n.endsWith(".parquet"))
       }
       .map(_.getPath)
+    if (stray.nonEmpty)
+      throw new IllegalStateException(
+        s"epoch store $dir: ${stray.size} entries outside the base/, merge/ and delta/ " +
+          s"tiers, first ${stray.head} — refusing to read a store root holding data " +
+          "outside its epoch layout (move it out, or load it through upsert)")
   }
 
   /** A committed epoch participates in the read only if it actually holds
@@ -166,20 +171,18 @@ final class EpochKeyedStore(dir: String,
   }
 
   /** The committed members visible at one listing instant: the newest
-    * committed base, the committed deltas above it, the legacy tier.
-    * [[foldOnce]] folds exactly one snapshot, so deltas committed WHILE a
-    * background fold runs are simply not in it — they carry higher epoch
-    * numbers, stay above the published base, and keep winning the merge.
+    * committed base, the newest committed merge above it, and the
+    * committed deltas above both. [[foldOnce]] folds exactly one snapshot,
+    * so deltas committed WHILE a background fold runs are simply not in it
+    * — they carry higher epoch numbers, stay above the published base, and
+    * keep winning the merge.
     */
   private final case class Snapshot(base: Option[(Long, Path)],
                                     merge: Option[(Long, Path)],
-                                    deltas: Seq[(Long, Path)],
-                                    legacy: Seq[Path]) {
-    def isEmpty: Boolean =
-      base.isEmpty && merge.isEmpty && deltas.isEmpty && legacy.isEmpty
-  }
+                                    deltas: Seq[(Long, Path)])
 
   private def snapshot(f: FileSystem): Snapshot = {
+    requireOnlyTiers(f)
     val bases = listEpochs(f, "base").filter(_._3)
     val baseOpt = bases.lastOption.filter(b => validMember(f, b._2)).map(b => (b._1, b._2))
     val floor = bases.lastOption.map(_._1).getOrElse(-1L)
@@ -192,34 +195,19 @@ final class EpochKeyedStore(dir: String,
     val deltas = listEpochs(f, "delta")
       .filter(d => d._3 && d._1 > mfloor && validMember(f, d._2))
       .map(d => (d._1, d._2))
-    Snapshot(baseOpt, mergeOpt, deltas,
-      legacyPaths(f).filter(p => layout.dataFileCount(f, p) > 0))
+    Snapshot(baseOpt, mergeOpt, deltas)
   }
 
   /** Newest-wins merge over one snapshot's members. */
   private def mergedFrom(spark: SparkSession, snap: Snapshot): Option[DataFrame] = {
-    val members = Seq.newBuilder[DataFrame]
-    // legacy tier = epoch 0; a committed base always supersedes it per key
-    // (the base folded it in), so including both is crash-safe, never wrong
-    if (snap.legacy.nonEmpty)
-      members += spark.read.option("basePath", dir)
-        .parquet(snap.legacy.map(_.toString): _*)
-        .withColumn("__epoch", lit(0L))
-    snap.base.foreach { case (n, p) =>
-      members += spark.read.parquet(p.toString).withColumn("__epoch", lit(n))
+    // one read per epoch directory, so each member's rows carry its epoch
+    // for the newest-wins window; fold epochs are hive-partitioned and
+    // deltas flat, and a per-dir read infers each layout on its own (the
+    // delta count is bounded by compactAfterDeltas, so this stays a
+    // handful of scans)
+    val parts = (snap.base.toSeq ++ snap.merge ++ snap.deltas).map { case (n, p) =>
+      spark.read.parquet(p.toString).withColumn("__epoch", lit(n))
     }
-    snap.merge.foreach { case (n, p) =>
-      members += spark.read.parquet(p.toString).withColumn("__epoch", lit(n))
-    }
-    // deltas read per-directory: a store that switched `partitionDeltas`
-    // mid-life holds hive-partitioned AND flat delta epochs side by side,
-    // and one multi-path read cannot infer both layouts — per-dir reads
-    // auto-detect each epoch's own layout (the delta count is bounded by
-    // compactAfterDeltas, so this stays a handful of scans)
-    snap.deltas.foreach { case (n, p) =>
-      members += spark.read.parquet(p.toString).withColumn("__epoch", lit(n))
-    }
-    val parts = members.result()
     if (parts.isEmpty) None
     else {
       val all = parts.reduce(_ unionByName _)
@@ -276,27 +264,24 @@ final class EpochKeyedStore(dir: String,
     val f = fs(spark)
     val target = new Path(s"$dir/delta/${layout.dirName(nextEpoch(f))}")
     claimEpoch(f, target)
-    val shaped = coalesceTo.fold(rows)(rows.coalesce)
     // Append, not Overwrite: the claimed dir already exists (holding the
-    // `_STAGE` marker), and an Overwrite would delete the claim mid-write
-    val w = shaped.write.mode(SaveMode.Append)
-    if (partitionCols.nonEmpty && partitionDeltas)
-      w.partitionBy(partitionCols: _*).parquet(target.toString)
-    else w.parquet(target.toString)
+    // `_STAGE` marker), and an Overwrite would delete the claim mid-write.
+    // Deltas are flat whatever `partitionCols` says
+    shaped(rows).write.mode(SaveMode.Append).parquet(target.toString)
     layout.commit(f, target, recordFileCount = true)
     if (!deferCompaction && foldDue(f)) compact(spark)
     target
   }
 
-  /** Delta tier over threshold, or a legacy layout awaiting its fold-in.
-    * Pending counts above the newest committed base OR merge — deltas a
-    * partial fold already absorbed are not pending. */
+  /** Delta tier over threshold. Pending counts above the newest committed
+    * base OR merge — deltas a partial fold already absorbed are not
+    * pending. */
   private def foldDue(f: FileSystem): Boolean = {
     val floor = listEpochs(f, "base").filter(_._3).lastOption.map(_._1).getOrElse(-1L)
     val mfloor = math.max(floor,
       listEpochs(f, "merge").filter(_._3).lastOption.map(_._1).getOrElse(-1L))
     val pending = listEpochs(f, "delta").count(d => d._3 && d._1 > mfloor)
-    pending > compactAfterDeltas || (legacyPaths(f).nonEmpty && pending > 0)
+    pending > compactAfterDeltas
   }
 
   /** MERGE write: one delta, deduped within the batch on the caller's key
@@ -344,35 +329,25 @@ final class EpochKeyedStore(dir: String,
     val committed = (listEpochs(f, "base") ++ listEpochs(f, "merge") ++
       listEpochs(f, "delta")).filter(_._3).map(_._1)
     val snap = snapshot(f)
-    if (committed.isEmpty && snap.legacy.isEmpty) return -1L
-    val n = if (committed.isEmpty) 1L else committed.max
+    if (committed.isEmpty) return -1L
+    val n = committed.max
     val current = listEpochs(f, "base").filter(_._3).lastOption
     if (current.exists(_._1 == n)) {
       // base n is already published — a previous compact crashed after
-      // its _COMMIT but before the sweep. Everything ≤ n (and the legacy
-      // tier, which that base folded in) is superseded: only the sweep
-      // remains; never rewrite the directory readers are on.
+      // its _COMMIT but before the sweep. Everything ≤ n is superseded:
+      // only the sweep remains; never rewrite the directory readers are on.
       return n
     }
     mergedFrom(spark, snap) match {
       case None => -1L
       case Some(merged) =>
-        val target = new Path(s"$dir/base/${layout.dirName(n)}")
-        val shaped = coalesceTo.fold(merged)(merged.coalesce)
-        // Overwrite is safe here: compaction is the single writer's own
-        // maintenance step, and a crashed previous attempt at this epoch
-        // (uncommitted partial dir) should be replaced, not collided with
-        val w = shaped.write.mode(SaveMode.Overwrite)
-        if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*).parquet(target.toString)
-        else w.parquet(target.toString)
-        layout.commit(f, target, recordFileCount = true)
+        writeFold(f, merged, new Path(s"$dir/base/${layout.dirName(n)}"))
         n
     }
   }
 
   /** Fold the current merged view into a new base epoch and sweep what it
-    * supersedes: older bases, folded deltas, legacy flat files, and
-    * crashed (uncommitted) stage dirs below the new epoch. Publication is
+    * supersedes: older bases, merges and folded deltas, and crashed (uncommitted) stage dirs below the new epoch. Publication is
     * the `_COMMIT` create, so readers switch atomically and a crash mid-
     * sweep only leaves already-superseded directories for the next call to
     * finish sweeping. Synchronous; drains any background fold first.
@@ -444,9 +419,8 @@ final class EpochKeyedStore(dir: String,
       // then a full base fold. Full also when no base exists yet — with
       // nothing below it a partial would rewrite the whole index for the
       // same cost WITHOUT establishing the base that makes later partials
-      // cheap — and when a legacy layout awaits its fold-in
-      val goFull = fullCompactEvery <= 1 || legacyPaths(f).nonEmpty ||
-        listEpochs(f, "base").forall(!_._3) ||
+      // cheap
+      val goFull = fullCompactEvery <= 1 || listEpochs(f, "base").forall(!_._3) ||
         partialsSinceFull >= fullCompactEvery - 1
       val fold = new Fold(goFull)
       fold.thread = new Thread(() => {
@@ -467,11 +441,10 @@ final class EpochKeyedStore(dir: String,
     layout.sweep(f, new Path(s"$dir/base")) { case (e, _) => e < n }
     layout.sweep(f, new Path(s"$dir/merge")) { case (e, _) => e <= n }
     layout.sweep(f, new Path(s"$dir/delta")) { case (e, _) => e <= n }
-    legacyPaths(f).foreach(p => f.delete(p, true))
   }
 
   /** Delete everything the committed L1 merge at epoch `n` supersedes:
-    * older merges and the deltas it folded. Base/legacy are untouched. */
+    * older merges and the deltas it folded. The base is untouched. */
   private def sweepBelowMerge(f: FileSystem, n: Long): Unit = {
     layout.sweep(f, new Path(s"$dir/merge")) { case (e, _) => e < n }
     layout.sweep(f, new Path(s"$dir/delta")) { case (e, _) => e <= n }
@@ -479,7 +452,7 @@ final class EpochKeyedStore(dir: String,
 
   /** Fold the old L1 merge (if any) + the pending deltas into a NEW merge
     * epoch at the highest pending delta epoch — O(accumulated-since-base)
-    * work that never reads the base or legacy tiers. Same crash contract
+    * work that never reads the base tier. Same crash contract
     * as [[foldOnce]]: publication is the single `_COMMIT` create, the
     * caller owns the sweep ([[sweepBelowMerge]]), and a kill mid-fold
     * leaves an unmarked dir readers ignore. All members come from ONE
@@ -493,18 +466,23 @@ final class EpochKeyedStore(dir: String,
     val snap = snapshot(f)
     if (snap.deltas.isEmpty) return snap.merge.map(_._1).getOrElse(-1L)
     val n = snap.deltas.map(_._1).max
-    mergedFrom(spark, snap.copy(base = None, legacy = Nil)) match {
+    mergedFrom(spark, snap.copy(base = None)) match {
       case None => -1L
       case Some(merged) =>
-        val target = new Path(s"$dir/merge/${layout.dirName(n)}")
-        val shaped = coalesceTo.fold(merged)(merged.coalesce)
-        // Overwrite: a crashed previous partial attempt at this epoch is
-        // replaced, same as the base fold
-        val w = shaped.write.mode(SaveMode.Overwrite)
-        if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*).parquet(target.toString)
-        else w.parquet(target.toString)
-        layout.commit(f, target, recordFileCount = true)
+        writeFold(f, merged, new Path(s"$dir/merge/${layout.dirName(n)}"))
         n
     }
+  }
+
+  /** Write and publish one fold epoch (base or merge) in the
+    * `partitionCols` hive layout. Overwrite is safe here: compaction is the
+    * single writer's own maintenance step, and a crashed previous attempt
+    * at this epoch (uncommitted partial dir) should be replaced, not
+    * collided with. */
+  private def writeFold(f: FileSystem, merged: DataFrame, target: Path): Unit = {
+    val w = shaped(merged).write.mode(SaveMode.Overwrite)
+    if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*).parquet(target.toString)
+    else w.parquet(target.toString)
+    layout.commit(f, target, recordFileCount = true)
   }
 }

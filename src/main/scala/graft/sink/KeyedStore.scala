@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Key-addressable store abstraction for incrementally-maintained state
@@ -9,15 +9,12 @@ import org.apache.spark.sql.functions.col
   * contract the reference's read-modify-write sheet protocol provides
   * (write_pipeline.py:151-183) and a Delta/Iceberg MERGE provides natively.
   *
-  * Three shipped implementations:
-  *   - [[EpochKeyedStore]] (the durable DEFAULT): true-upsert MERGE store
+  * Two shipped implementations:
+  *   - [[EpochKeyedStore]] (the durable store): true-upsert MERGE store
   *     over epoch-versioned base+delta parquet — O(batch) writes with no
   *     existing-keys scan, newest-epoch-wins reads, auto-compaction;
-  *   - [[ParquetKeyedStore]]: plain parquet-append emulation — an anti-join
-  *     against the existing keys before every append (the ledger dance;
-  *     works on any filesystem, O(store) key scan per upsert);
-  *   - [[InMemoryKeyedStore]]: true upsert semantics in memory — used by
-  *     specs to prove the dataflow is backend-agnostic, and the template
+  *   - [[InMemoryKeyedStore]]: true upsert semantics in memory — the MERGE
+  *     model the specs compare the durable store against, and the template
   *     for a Delta/Iceberg binding.
   *
   * Swapping backends must not touch the dataflow: [[graft.streaming.DedupStream]]
@@ -27,8 +24,8 @@ trait KeyedStore {
   /** Full store contents, or None when the store is empty/nonexistent. */
   def read(spark: SparkSession): Option[DataFrame]
 
-  /** Idempotent keyed append: rows whose key tuple is already present are
-    * skipped (append emulation) or replaced (true upsert); either way a
+  /** Idempotent keyed append: a row whose key tuple is already present
+    * replaces the stored row (the MERGE shape: the new row wins), so a
     * replay is a no-op. `keys` must be row-granular for the table — one
     * stored row per key tuple — or a crash mid-append could leave a key
     * partially written yet judged complete on replay.
@@ -49,35 +46,6 @@ trait KeyedStore {
     * the default is a no-op so dataflows can call it unconditionally.
     */
   def maintain(spark: SparkSession): Unit = ()
-}
-
-/** Parquet-append emulation of a keyed store.
-  * @param partitionCols hive partition layout for the append (e.g. the band
-  *   store's (band, kb) — the probe side's pruning granularity)
-  * @param coalesceTo small-file control for narrow high-frequency stores
-  *   (the id ledger appends one tiny file per batch)
-  */
-final class ParquetKeyedStore(dir: String,
-                              partitionCols: Seq[String] = Nil,
-                              coalesceTo: Option[Int] = None) extends KeyedStore {
-  override def read(spark: SparkSession): Option[DataFrame] =
-    try Some(spark.read.parquet(dir)) catch { case _: AnalysisException => None }
-
-  override def upsert(rows: DataFrame, keys: Seq[String]): Unit = {
-    val fresh = read(rows.sparkSession) match {
-      case Some(existing) =>
-        rows.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      case None => rows
-    }
-    append(fresh)
-  }
-
-  override def append(rows: DataFrame): Unit = {
-    val shaped = coalesceTo.fold(rows)(rows.coalesce)
-    val w = shaped.write.mode(SaveMode.Append)
-    if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*).parquet(dir)
-    else w.parquet(dir)
-  }
 }
 
 /** True-upsert in-memory store — the Delta/Iceberg MERGE shape: on key

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Dedup, TextAnalysis}
-import graft.sink.{EpochKeyedStore, IdempotentSink, KeyedStore, ParquetKeyedStore}
+import graft.sink.{EpochKeyedStore, IdempotentSink, KeyedStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -12,9 +12,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * checked against everything seen so far, without recomputing the
   * historical corpus's signatures.
   *
-  * State layout under `indexDir` — three [[KeyedStore]] tables, by default
-  * the durable true-upsert [[EpochKeyedStore]] (base + delta parquet
-  * epochs, `_COMMIT`-published, auto-compacting — [[epochStores]]):
+  * State layout under `indexDir` — three [[KeyedStore]] tables, in
+  * production the durable true-upsert [[EpochKeyedStore]] (base + delta
+  * parquet epochs, `_COMMIT`-published, auto-compacting — [[epochStores]]):
   *   - `ids/`   — compact ledger of indexed doc_ids, written LAST per batch;
   *                the replay check reads this narrow table, not the wide
   *                signature store;
@@ -39,8 +39,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   *
   * Scale posture, stated precisely: index WRITES are O(batch) — one delta
   * epoch per store per batch, no existing-keys scan (the epoch store
-  * resolves key collisions at read; the old parquet-append emulation's
-  * O(store) anti-join per upsert is gone). The band PROBE prunes to the
+  * resolves key collisions at read). The band PROBE prunes to the
   * partitions the new keys hash into; the replay check reads the id
   * ledger (narrow, but still O(corpus) ids); the estimate fetch scans the
   * signature store once per batch and shuffles only candidate partners.
@@ -54,8 +53,8 @@ object DedupStream {
   val KeyBuckets = 64
 
   /** The three index state tables behind [[KeyedStore]]: swapping the
-    * backend (parquet emulation ↔ a Delta/Iceberg-shaped upsert table)
-    * does not touch the dataflow in [[processBatch]].
+    * backend (the epoch store ↔ the in-memory MERGE model, or a
+    * Delta/Iceberg binding) does not touch the dataflow in [[processBatch]].
     */
   final case class IndexStores(ids: KeyedStore, bands: KeyedStore, sigs: KeyedStore) {
     /** Between-batches maintenance pass over all three stores (no-op for
@@ -65,13 +64,16 @@ object DedupStream {
     }
   }
 
-  /** DEFAULT stores under `indexDir`: the durable true-upsert
-    * [[EpochKeyedStore]] per table. The bands store's merge key extends
-    * the logical (doc_id, band) key with the functionally-dependent kb
-    * bucket so the probe's (band, kb) pruning predicate pushes through
-    * the merge window to the partitioned scan. A directory previously
-    * written by [[parquetStores]] reads as the epoch-0 legacy tier and is
-    * folded in by the first compaction.
+  /** Production stores under `indexDir`: one [[EpochKeyedStore]] per
+    * table. The bands store's merge key extends the logical (doc_id, band)
+    * key with the functionally-dependent kb bucket so the probe's
+    * (band, kb) pruning predicate pushes through the merge window to the
+    * fold tiers, which are hive-partitioned by (band, kb). Like every
+    * epoch-store delta, a bands delta is flat: a batch touches up to
+    * bands × KeyBuckets partition values, and a partitioned delta write
+    * fanned each batch into hundreds of tiny files whose driver-side
+    * commit dominated the whole batch (measured: ~6 s write + ~10 s
+    * commit of a 26 s gated batch at probe scale).
     *
     * `compactAfterDeltas` defaults LOWER than the store's own default
     * (6 vs 16): this dataflow reads all three stores every batch, and the
@@ -79,8 +81,7 @@ object DedupStream {
     * delta count ([[graft.DedupScaleCheck]] — ~30 s at 1 delta to ~150 s
     * at 16 at probe scale, resetting after each fold), so a read-heavy
     * access pattern wants frequent small folds. Writes stay O(batch)
-    * either way; the fold itself amortizes to O(corpus / k) per batch —
-    * versus the parquet emulation's O(corpus) anti-join on EVERY batch.
+    * either way; the fold itself amortizes to O(corpus / k) per batch.
     *
     * `deferCompaction` moves those folds OFF the write path entirely: the
     * fold runs on a background thread between batches while reads serve
@@ -89,40 +90,29 @@ object DedupStream {
     * scale). Requires long-lived stores and a caller that invokes
     * [[IndexStores.maintain]] after each batch — [[start]] does both.
     */
-  /** `fullCompactEvery = 4` makes deferred maintenance TIERED: three
-    * partial folds (old L1 merge + pending deltas, O(index-since-base))
-    * for every O(corpus) base fold — base folds run 4× less often and
-    * the read-side member count stays capped at merge + pending. Inline
-    * mode ignores the knob (writeDelta's auto-compact is always full).
-    */
   def epochStores(indexDir: String, compactAfterDeltas: Int = 6,
-                  deferCompaction: Boolean = false): IndexStores = IndexStores(
-    ids = new EpochKeyedStore(s"$indexDir/ids", mergeKeys = Seq("doc_id"),
-      compactAfterDeltas = compactAfterDeltas, deferCompaction = deferCompaction,
-      fullCompactEvery = 4),
-    // partitionDeltas=false: a batch touches up to bands × KeyBuckets
-    // partition values, so a partitioned DELTA write fans each batch into
-    // hundreds of tiny files whose driver-side commit dominated the whole
-    // batch (measured: ~6 s write + ~10 s commit of a 26 s gated batch at
-    // probe scale). Deltas are O(batch) — the probe row-filters them just
-    // as well — and folds keep the (band, kb) hive layout, so the
-    // O(corpus) base still directory-prunes
-    bands = new EpochKeyedStore(s"$indexDir/bands",
-      mergeKeys = Seq("doc_id", "band", "kb"), partitionCols = Seq("band", "kb"),
-      partitionDeltas = false,
-      coalesceTo = None, compactAfterDeltas = compactAfterDeltas,
-      deferCompaction = deferCompaction, fullCompactEvery = 4),
-    sigs = new EpochKeyedStore(s"$indexDir/sigs", mergeKeys = Seq("doc_id"),
-      compactAfterDeltas = compactAfterDeltas, deferCompaction = deferCompaction,
-      fullCompactEvery = 4))
+                  deferCompaction: Boolean = false): IndexStores = {
+    val store = indexStore(indexDir, compactAfterDeltas, deferCompaction) _
+    IndexStores(
+      ids = store("ids", Seq("doc_id"), Nil),
+      bands = store("bands", Seq("doc_id", "band", "kb"), Seq("band", "kb")),
+      sigs = store("sigs", Seq("doc_id"), Nil))
+  }
 
-  /** Plain parquet-append emulation stores — the pre-epoch layout; kept
-    * for existing state roots and as the [[KeyedStore]] contract's
-    * simplest durable backend. */
-  def parquetStores(indexDir: String): IndexStores = IndexStores(
-    ids = new ParquetKeyedStore(s"$indexDir/ids", coalesceTo = Some(1)),
-    bands = new ParquetKeyedStore(s"$indexDir/bands", partitionCols = Seq("band", "kb")),
-    sigs = new ParquetKeyedStore(s"$indexDir/sigs"))
+  /** One ingest index table `indexDir/table`, configured the same way for
+    * both ingest streams. `fullCompactEvery = 4` makes deferred
+    * maintenance TIERED: three partial folds (old L1 merge + pending
+    * deltas, O(index-since-base)) for every O(corpus) base fold — base
+    * folds run 4× less often and the read-side member count stays capped
+    * at merge + pending. Inline mode ignores the knob (writeDelta's
+    * auto-compact is always full).
+    */
+  private[streaming] def indexStore(indexDir: String, compactAfterDeltas: Int,
+                                    deferCompaction: Boolean)(
+      table: String, mergeKeys: Seq[String], partitionCols: Seq[String]): EpochKeyedStore =
+    new EpochKeyedStore(s"$indexDir/$table", mergeKeys, partitionCols,
+      compactAfterDeltas = compactAfterDeltas, deferCompaction = deferCompaction,
+      fullCompactEvery = 4)
 
   /** Optional ingest-time decontamination gate: a document sharing any
     * word `n`-gram with the benchmark/eval set is quarantined BEFORE its
@@ -226,8 +216,8 @@ object DedupStream {
       .drop("reject_reason", "n_shared")
   }
 
-  private def antiJoin(rows: DataFrame, existing: Option[DataFrame],
-                       keys: Seq[String]): DataFrame =
+  private[streaming] def antiJoin(rows: DataFrame, existing: Option[DataFrame],
+                                  keys: Seq[String]): DataFrame =
     existing match {
       case Some(ex) =>
         rows.join(ex.select(keys.map(col): _*).distinct(), keys, "left_anti")
@@ -250,35 +240,17 @@ object DedupStream {
     else idx.where(combo(col("band"), col("kb")).isin(combos: _*))
   }
 
-  /** Process one batch against the default epoch-store index under `indexDir`. */
-  private[graft] def processBatch(batch: DataFrame, indexDir: String, pairsDir: String,
-                                  n: Int, numPerms: Int, bands: Int,
-                                  threshold: Double): Long =
-    processBatch(batch, epochStores(indexDir), pairsDir, n, numPerms, bands, threshold)
-
-  private[graft] def processBatch(batch: DataFrame, stores: IndexStores, pairsDir: String,
-                                  n: Int, numPerms: Int, bands: Int,
-                                  threshold: Double): Long =
-    processBatch(batch, stores, pairsDir, n, numPerms, bands, threshold, gate = None)
-
-  private[graft] def processBatch(batch: DataFrame, stores: IndexStores, pairsDir: String,
-                                  n: Int, numPerms: Int, bands: Int,
-                                  threshold: Double,
-                                  gate: Option[ContaminationGate]): Long =
-    processBatch(batch, stores, pairsDir, n, numPerms, bands, threshold, gate,
-      docGate = None)
-
   /** Process one batch of new documents against the persisted index.
     * Returns the number of new near-dup pairs written. Package-visible so
     * the spec can drive it without a streaming harness — and backend-
-    * parameterized so the spec proves the dataflow against both the
-    * parquet emulation and a true-upsert store.
+    * parameterized so the spec proves the dataflow against both the epoch
+    * store and the in-memory MERGE model.
     */
   private[graft] def processBatch(batch: DataFrame, stores: IndexStores, pairsDir: String,
                                   n: Int, numPerms: Int, bands: Int,
                                   threshold: Double,
-                                  gate: Option[ContaminationGate],
-                                  docGate: Option[DocGate]): Long = {
+                                  gate: Option[ContaminationGate] = None,
+                                  docGate: Option[DocGate] = None): Long = {
     require(numPerms % bands == 0, "bands must divide numPerms")
     val spark = batch.sparkSession
     // replay fast-path: docs in the id ledger are fully indexed — skip them
@@ -366,10 +338,9 @@ object DedupStream {
     *
     * Index compaction is DEFERRED here: the stores are built once (long-
     * lived, holding the in-flight fold handle) and `maintain` runs after
-    * every batch — including empty ones, which are perfect quiescent
-    * points to publish a finished fold's sweep. The write path never
-    * folds, so batch latency stays O(batch) even while an O(corpus/k)
-    * fold is running alongside.
+    * every batch (see [[startIndexed]]). The write path never folds, so
+    * batch latency stays O(batch) even while an O(corpus/k) fold is
+    * running alongside.
     */
   def start(docs: DataFrame, indexDir: String, pairsDir: String, checkpointDir: String,
             n: Int = 5, numPerms: Int = 64, bands: Int = 16,
@@ -377,22 +348,30 @@ object DedupStream {
             gate: Option[ContaminationGate] = None,
             docGate: Option[DocGate] = None): StreamingQuery = {
     val stores = epochStores(indexDir, deferCompaction = true)
-    docs.writeStream
+    startIndexed(docs, checkpointDir, stores.maintain) { batch =>
+      processBatch(batch, stores, pairsDir, n, numPerms, bands, threshold, gate, docGate)
+      ()
+    }
+  }
+
+  /** The ingest streams' micro-batch loop: persist each batch once (the
+    * empty check, the ledger anti-join and the batch body would otherwise
+    * each re-execute the micro-batch plan), run `body` on a non-empty
+    * batch, then `maintain` the index — after EVERY batch, including
+    * empty ones, which are quiescent points to publish a finished
+    * background fold's sweep.
+    */
+  private[streaming] def startIndexed(input: DataFrame, checkpointDir: String,
+                                      maintain: SparkSession => Unit)(
+      body: DataFrame => Unit): StreamingQuery =
+    input.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (b: DataFrame, _: Long) =>
-        // persist once: the empty gate and the ledger anti-join would
-        // otherwise each re-execute the micro-batch plan
         val batch = b.persist()
-        try {
-          if (!batch.isEmpty) {
-            processBatch(batch, stores, pairsDir, n, numPerms, bands, threshold,
-              gate, docGate)
-            ()
-          }
-        } finally { batch.unpersist(); () }
-        stores.maintain(batch.sparkSession)
+        try { if (!batch.isEmpty) body(batch) }
+        finally { batch.unpersist(); () }
+        maintain(batch.sparkSession)
       }
       .start()
-  }
 }

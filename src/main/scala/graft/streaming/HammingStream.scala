@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import graft.sink.{EpochKeyedStore, IdempotentSink, KeyedStore}
+import graft.sink.{IdempotentSink, KeyedStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental banded-Hamming near-duplicate detection over a STREAM of
   * 64-bit sketches — the continuously-running form of
@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * (write_pipeline.py:151-183), applied to sketch near-dup instead of
   * exact row ids.
   *
-  * State under `indexDir` — two [[EpochKeyedStore]] tables:
+  * State under `indexDir` — two [[graft.sink.EpochKeyedStore]] tables:
   *   - `ids/`   — ledger of indexed ids, written LAST per batch (same
   *                replay contract as [[DedupStream]]: a doc reaches the
   *                ledger only if the whole batch landed before it);
@@ -55,29 +55,26 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   */
 object HammingStream {
 
-  /** Key-hash fan-out of the band store — the probe's pruning granularity
-    * (shared shape with [[DedupStream.KeyBuckets]]). */
-  val KeyBuckets = 64
-
   final case class HammingStores(ids: KeyedStore, bands: KeyedStore) {
     def maintain(spark: SparkSession): Unit = {
       ids.maintain(spark); bands.maintain(spark)
     }
   }
 
+  /** Production stores under `indexDir`, laid out like
+    * [[DedupStream.epochStores]]'s ledger and band tables. */
   def epochStores(indexDir: String, compactAfterDeltas: Int = 6,
-                  deferCompaction: Boolean = false): HammingStores = HammingStores(
-    ids = new EpochKeyedStore(s"$indexDir/ids", mergeKeys = Seq("id"),
-      compactAfterDeltas = compactAfterDeltas, deferCompaction = deferCompaction,
-      fullCompactEvery = 4),
-    bands = new EpochKeyedStore(s"$indexDir/bands",
-      mergeKeys = Seq("id", "band", "kb"), partitionCols = Seq("band", "kb"),
-      partitionDeltas = false,
-      coalesceTo = None, compactAfterDeltas = compactAfterDeltas,
-      deferCompaction = deferCompaction, fullCompactEvery = 4))
+                  deferCompaction: Boolean = false): HammingStores = {
+    val store = DedupStream.indexStore(indexDir, compactAfterDeltas, deferCompaction) _
+    HammingStores(
+      ids = store("ids", Seq("id"), Nil),
+      bands = store("bands", Seq("id", "band", "kb"), Seq("band", "kb")))
+  }
 
   /** The four 16-bit band keys of a (id, lo, hi) sketch relation, plus
-    * the kb pruning bucket, sketch denormalized onto every row.
+    * the kb pruning bucket ([[DedupStream.KeyBuckets]], the bucket count
+    * [[DedupStream.pruneToBatchCombos]] encodes combos with), sketch
+    * denormalized onto every row.
     * Package-visible so the DedupScaleCheck hot-history gate can build
     * the probe input the way the batch body does. */
   private[graft] def bandPostings(sketches: DataFrame): DataFrame =
@@ -92,7 +89,7 @@ object HammingStream {
       )).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"),
         col("lo"), col("hi"))
-      .withColumn("kb", pmod(xxhash64(col("key")), lit(KeyBuckets)))
+      .withColumn("kb", pmod(xxhash64(col("key")), lit(DedupStream.KeyBuckets)))
 
   /** New×history candidate probe, BEFORE the pair dedup — one row per
     * (pair, agreeing band meeting). `newBands`/`idx` are band-posting
@@ -152,11 +149,7 @@ object HammingStream {
     require(maxHamming >= 0 && maxHamming <= 3,
       "4×16-bit banding is complete only up to Hamming 3")
     val spark = sketches.sparkSession
-    val fresh0 = stores.ids.read(spark) match {
-      case Some(ex) => sketches.join(ex.select("id").distinct(), Seq("id"), "left_anti")
-      case None => sketches
-    }
-    val fresh = fresh0.cache()
+    val fresh = DedupStream.antiJoin(sketches, stores.ids.read(spark), Seq("id")).cache()
     try {
       if (fresh.isEmpty) return 0L
       val newBands = bandPostings(fresh)
@@ -194,29 +187,16 @@ object HammingStream {
 
   /** Wire the incremental sketch near-dup onto a STREAM of (id, lo, hi)
     * sketches — [[DedupStream.start]]'s shape for the sketch modalities:
-    * long-lived deferred-compaction stores (the write path never folds;
-    * `maintain` after every batch — including empty ones — harvests and
-    * publishes background folds at quiescent points), one persisted
-    * micro-batch frame so the ledger anti-join and the band derivations
-    * read one materialization.
+    * long-lived deferred-compaction stores (the write path never folds)
+    * driven by [[DedupStream.startIndexed]]'s micro-batch loop.
     */
   def start(sketches: DataFrame, indexDir: String, pairsDir: String,
             checkpointDir: String, maxHamming: Int = 3): StreamingQuery = {
     val stores = epochStores(indexDir, deferCompaction = true)
-    sketches.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.persist()
-        try {
-          if (!batch.isEmpty) {
-            processBatch(batch, stores, pairsDir, maxHamming)
-            ()
-          }
-        } finally { batch.unpersist(); () }
-        stores.maintain(batch.sparkSession)
-      }
-      .start()
+    DedupStream.startIndexed(sketches, checkpointDir, stores.maintain) { batch =>
+      processBatch(batch, stores, pairsDir, maxHamming)
+      ()
+    }
   }
 
   /** TEXT front door: gate → sketch → index → pairs over a document
@@ -230,30 +210,18 @@ object HammingStream {
                 checkpointDir: String, maxHamming: Int = 3,
                 docGate: Option[DedupStream.DocGate] = None): StreamingQuery = {
     val stores = epochStores(indexDir, deferCompaction = true)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.persist()
-        try {
-          if (!batch.isEmpty) {
-            // one cached triage pass, DedupStream's gate discipline:
-            // rejects land id-deduped with reasons, admitted docs sketch
-            val triage = docGate.map(g =>
-              DedupStream.triageBatch(batch, Some(g), None))
-            try {
-              val admitted = triage.fold(batch)(
-                DedupStream.writeTriage(_, docGate, None))
-              val sk = graft.operators.Dedup.simhash64Portable(admitted)
-                .select(col("doc_id").as("id"), col("simhash_lo").as("lo"),
-                  col("simhash_hi").as("hi"))
-              processBatch(sk, stores, pairsDir, maxHamming)
-              ()
-            } finally { triage.foreach(_.unpersist()); () }
-          }
-        } finally { batch.unpersist(); () }
-        stores.maintain(batch.sparkSession)
-      }
-      .start()
+    DedupStream.startIndexed(docs, checkpointDir, stores.maintain) { batch =>
+      // one cached triage pass, DedupStream's gate discipline: rejects
+      // land id-deduped with reasons, admitted docs sketch
+      val triage = docGate.map(g => DedupStream.triageBatch(batch, Some(g), None))
+      try {
+        val admitted = triage.fold(batch)(DedupStream.writeTriage(_, docGate, None))
+        val sk = Dedup.simhash64Portable(admitted)
+          .select(col("doc_id").as("id"), col("simhash_lo").as("lo"),
+            col("simhash_hi").as("hi"))
+        processBatch(sk, stores, pairsDir, maxHamming)
+        ()
+      } finally { triage.foreach(_.unpersist()); () }
+    }
   }
 }

@@ -56,8 +56,8 @@ class DedupStreamSpec extends AnyFunSuite {
     assert(deltas.nonEmpty && deltas.forall(_.startsWith("epoch=")))
     assert(deltas.forall(d =>
       new java.io.File(s"$indexDir/sigs/delta/$d/_COMMIT").exists()))
-    // band DELTAS are flat (partitionDeltas=false): a partitioned delta
-    // write fans one batch into |bands × kb| tiny files whose commit
+    // band DELTAS are flat (every epoch-store delta is): a partitioned
+    // delta write fans one batch into |bands × kb| tiny files whose commit
     // dominated the batch; the hive layout belongs to the fold tiers
     val bandDelta = new java.io.File(s"$indexDir/bands/delta").listFiles()
       .filter(_.isDirectory).head
@@ -70,16 +70,6 @@ class DedupStreamSpec extends AnyFunSuite {
       .filter(_.isDirectory).head
     assert(base.listFiles().exists(f =>
       f.isDirectory && f.getName.startsWith("band=")))
-  }
-
-  test("incremental dedup dataflow: parquet-append emulation backend") {
-    val root = Files.createTempDirectory("graft-dstream-p").toString
-    val indexDir = s"$root/index"
-    runScenario(DedupStream.parquetStores(indexDir), s"$root/pairs")
-    // flat layout: band index partitioned for pruned probes
-    val bandDirs = new java.io.File(s"$indexDir/bands").listFiles()
-      .filter(_.isDirectory).map(_.getName)
-    assert(bandDirs.nonEmpty && bandDirs.forall(_.startsWith("band=")))
   }
 
   test("incremental dedup dataflow: in-memory true-upsert backend") {
@@ -127,26 +117,6 @@ class DedupStreamSpec extends AnyFunSuite {
       assert(scanned > 0 && scanned < totalFiles,
         s"scanned $scanned of $totalFiles files — partition pruning did not engage")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
-  test("the epoch backend reads a legacy parquet-emulation index in place") {
-    val root = Files.createTempDirectory("graft-dlegacy").toString
-    val (indexDir, pairsDir) = (s"$root/index", s"$root/pairs")
-    // batch 1 written by the OLD backend (pre-epoch flat layout)
-    DedupStream.processBatch(batch(1L -> base, 3L -> other),
-      DedupStream.parquetStores(indexDir), pairsDir,
-      n = 5, numPerms = 64, bands = 16, threshold = 0.3)
-    // batch 2 through the epoch default: history still probes, pair found
-    val w2 = DedupStream.processBatch(batch(2L -> nearDup),
-      DedupStream.epochStores(indexDir), pairsDir,
-      n = 5, numPerms = 64, bands = 16, threshold = 0.3)
-    assert(w2 === 1L)
-    assert(spark.read.parquet(pairsDir)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet === Set((1L, 2L)))
-    // and the replay stays a no-op across the backend swap
-    assert(DedupStream.processBatch(batch(2L -> nearDup),
-      DedupStream.epochStores(indexDir), pairsDir,
-      n = 5, numPerms = 64, bands = 16, threshold = 0.3) === 0L)
   }
 
   test("decontamination gate: hits are quarantined, never indexed, and the replay is a no-op") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sink.{EpochKeyedStore, ParquetKeyedStore}
+import graft.sink.EpochKeyedStore
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +31,8 @@ class EpochStoreSpec extends AnyFunSuite {
     val f = new java.io.File(s"$dir/merge")
     if (!f.exists()) Array.empty[String] else f.listFiles().filter(_.isDirectory).map(_.getName)
   }
+  private def parquetFiles(dir: String): Long =
+    Files.walk(java.nio.file.Paths.get(dir)).filter(_.toString.endsWith(".parquet")).count()
 
   test("MERGE semantics: the NEW row wins a key collision, appends accumulate") {
     val dir = tmp()
@@ -39,11 +41,14 @@ class EpochStoreSpec extends AnyFunSuite {
     s.upsert(Seq((1L, "v2"), (2L, "w")).toDF("k", "v"), Seq("k"))
     val got = s.read(spark).get.as[(Long, String)].collect().toMap
     assert(got === Map(1L -> "v2", 2L -> "w")) // same contract InMemoryKeyedStore pins
-    s.append(Seq((3L, "x")).toDF("k", "v"))
-    assert(s.read(spark).get.count() === 3L)
+    s.append(Seq((3L, "x"), (4L, "y")).toDF("k", "v").repartition(2))
+    assert(s.read(spark).get.count() === 4L)
     // each write is one committed delta epoch; no base until compaction
     assert(deltaDirs(dir).sorted === Array("epoch=1", "epoch=2", "epoch=3"))
     assert(baseDirs(dir).isEmpty)
+    // an unpartitioned store writes each delta as ONE file, whatever the
+    // batch's partitioning (the append arrives in two partitions)
+    assert(deltaDirs(dir).forall(d => parquetFiles(s"$dir/delta/$d") == 1L))
   }
 
   test("uncommitted epochs are invisible: a crashed write never surfaces") {
@@ -83,36 +88,46 @@ class EpochStoreSpec extends AnyFunSuite {
     assert(s.read(spark).get.as[(Long, String)].collect().toMap.apply(1L) === "v1b")
   }
 
-  test("a ParquetKeyedStore layout reads as the legacy tier and compaction folds it") {
+  test("a store root holding non-tier parquet refuses to read or compact") {
     val dir = tmp()
-    val old = new ParquetKeyedStore(dir, coalesceTo = Some(1))
-    old.upsert(Seq((1L, "v1"), (2L, "w")).toDF("k", "v"), Seq("k"))
-    // rebind the same directory to the epoch store: content visible as-is
+    // a plain parquet table at the root, beside (not inside) the tiers: the
+    // store never reads it, so treating the root as empty would hand a
+    // dedup stream an empty index and re-admit its whole history
+    Seq((1L, "v1"), (2L, "w")).toDF("k", "v").write.parquet(dir)
+    val stray = new java.io.File(dir).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName)
+    assert(stray.nonEmpty)
     val s = new EpochKeyedStore(dir, mergeKeys = Seq("k"))
-    assert(s.read(spark).get.as[(Long, String)].collect().toMap ===
-      Map(1L -> "v1", 2L -> "w"))
-    // first write folds the legacy files into a real base and sweeps them
-    s.upsert(Seq((1L, "v2")).toDF("k", "v"), Seq("k"))
-    assert(baseDirs(dir).nonEmpty)
-    assert(!new java.io.File(dir).listFiles().exists(f =>
-      f.isFile && f.getName.endsWith(".parquet"))) // legacy files swept
-    assert(s.read(spark).get.as[(Long, String)].collect().toMap ===
-      Map(1L -> "v2", 2L -> "w"))
+    val onRead = intercept[IllegalStateException] { s.read(spark) }
+    val onCompact = intercept[IllegalStateException] { s.compact(spark) }
+    Seq(onRead, onCompact).foreach { e =>
+      assert(stray.exists(e.getMessage.contains), e.getMessage)
+    }
   }
 
   test("partitioned epoch store: pruning predicates push through the merge window") {
     import org.apache.spark.sql.functions._
     val dir = tmp()
     val s = new EpochKeyedStore(dir, mergeKeys = Seq("id", "band", "kb"),
-      partitionCols = Seq("band", "kb"), coalesceTo = None)
+      partitionCols = Seq("band", "kb"))
     val rows = (0 until 64).map(i => (i.toLong, i % 4, i % 8, s"payload$i"))
     s.upsert(rows.toDF("id", "band", "kb", "payload"), Seq("id", "band"))
-    val totalFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => p.toString.endsWith(".parquet")).count()
+    // the fold writes the hive-partitioned base; the next delta is flat,
+    // so the merge window holds both tiers
+    s.compact(spark)
+    s.upsert(Seq((9L, 1, 1, "updated"), (100L, 2, 2, "added"))
+      .toDF("id", "band", "kb", "payload"), Seq("id", "band"))
+    assert(deltaDirs(dir).length === 1)
+    assert(!new java.io.File(s"$dir/delta/${deltaDirs(dir).head}").listFiles()
+      .exists(f => f.isDirectory && f.getName.startsWith("band=")))
+    val totalFiles = parquetFiles(dir)
     withoutAqe {
       val probe = s.read(spark).get.where(col("band") === 1 && col("kb") === 1)
+      // collect() on `probe` itself, so the metrics below come from THIS plan
       val hits = probe.collect()
-      assert(hits.length === 8 && hits.forall(_.getAs[Int]("band") === 1))
+        .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
+      assert(hits === (1L until 64L by 8).map(i => i -> s"payload$i").toMap
+        .updated(9L, "updated"))
       val scans = probe.queryExecution.executedPlan.collectWithSubqueries {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
@@ -121,38 +136,6 @@ class EpochStoreSpec extends AnyFunSuite {
       assert(scanned > 0 && scanned < totalFiles,
         s"scanned $scanned of $totalFiles — (band, kb) pruning did not push through the merge")
     }
-  }
-
-  test("mixed delta layouts: partitioned and flat epochs read side by side") {
-    import org.apache.spark.sql.functions._
-    val dir = tmp()
-    // a store that switched partitionDeltas mid-life: epoch 1 partitioned,
-    // epoch 2 flat — per-dir delta reads must auto-detect each layout and
-    // the merge must still resolve newest-wins across them
-    val partitioned = new EpochKeyedStore(dir, mergeKeys = Seq("id", "band", "kb"),
-      partitionCols = Seq("band", "kb"), coalesceTo = None)
-    partitioned.upsert(Seq((1L, 0, 0, "old"), (2L, 1, 1, "keep"))
-      .toDF("id", "band", "kb", "payload"), Seq("id", "band"))
-    val flat = new EpochKeyedStore(dir, mergeKeys = Seq("id", "band", "kb"),
-      partitionCols = Seq("band", "kb"), partitionDeltas = false, coalesceTo = None)
-    flat.upsert(Seq((1L, 0, 0, "new"), (3L, 2, 2, "added"))
-      .toDF("id", "band", "kb", "payload"), Seq("id", "band"))
-    // layout on disk matches each epoch's own setting
-    assert(new java.io.File(s"$dir/delta/epoch=1").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("band=")))
-    assert(!new java.io.File(s"$dir/delta/epoch=2").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("band=")))
-    val got = flat.read(spark).get.select("id", "payload")
-      .as[(Long, String)].collect().toMap
-    assert(got === Map(1L -> "new", 2L -> "keep", 3L -> "added"))
-    // pruning predicate still selects correctly across both layouts
-    assert(flat.read(spark).get.where(col("band") === 1 && col("kb") === 1)
-      .select("payload").as[String].collect().toSeq === Seq("keep"))
-    // and the fold writes one hive-partitioned base over the mix
-    flat.compact(spark)
-    assert(new java.io.File(s"$dir/base").listFiles().filter(_.isDirectory)
-      .head.listFiles().exists(f => f.isDirectory && f.getName.startsWith("band=")))
-    assert(flat.read(spark).get.count() === 3L)
   }
 
   test("a data file missing under a committed marker raises instead of reading empty") {
