@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Durable TRUE-UPSERT keyed store: an epoch-versioned parquet MERGE table
   * — the Delta/Iceberg-shaped backend the [[KeyedStore]] contract was
@@ -31,12 +32,15 @@ import org.apache.spark.sql.functions._
   *     existing-keys scan of the store at all. Key collisions resolve at
   *     READ time: for each merge-key tuple the row from the newest epoch
   *     wins — exactly the MERGE shape [[InMemoryKeyedStore]] spec-pins.
-  *   - `read` unions the newest committed base, the newest committed L1
-  *     merge above it (tiered mode), and the committed deltas above both,
-  *     resolving newest-wins with one window over `mergeKeys`;
-  *     [[compact]] (auto-triggered once the delta tier exceeds
-  *     `compactAfterDeltas`) folds everything into a new base so the file
-  *     count — and the merge window's duplicate work — stays bounded.
+  *   - `read` unions at most three parquet relations — the newest
+  *     committed base, the newest committed L1 merge above it (tiered
+  *     mode), and ONE relation over all committed deltas above both —
+  *     resolving newest-wins with one window over `mergeKeys`. Each
+  *     relation reads under the schema its `_COMMIT` marker recorded, so
+  *     building a read starts no Spark job; [[compact]] (auto-triggered
+  *     once the delta tier exceeds `compactAfterDeltas`) folds everything
+  *     into a new base so the file count — and the merge window's
+  *     duplicate work — stays bounded.
   *
   * Filter pushdown survives the merge: predicates over `mergeKeys` columns
   * (and hence over `partitionCols`, which must be covered by `mergeKeys` —
@@ -148,25 +152,30 @@ final class EpochKeyedStore(dir: String,
           "outside its epoch layout (move it out, or load it through upsert)")
   }
 
+  /** One committed epoch of a read, with the schema its marker recorded
+    * (None for a marker written before schemas were recorded). */
+  private final case class Member(epoch: Long, path: Path, recorded: Option[StructType])
+
   /** A committed epoch participates in the read only if it actually holds
     * data files. The recorded `files=` count (written at commit) makes the
-    * empty case checkable: zero files against a recorded zero (or a legacy
+    * empty case checkable: zero files against a recorded zero (or an older
     * markless count) is a legitimately-empty epoch and is skipped; any
     * OTHER mismatch is a data file missing under a committed marker —
     * corruption — and raises instead of reading a populated store as empty
     * (which would hand a dedup stream an empty index and silently re-admit
-    * its whole history). Schema drift across epochs likewise propagates
-    * from the strict unionByName instead of being swallowed.
+    * its whole history). Schema drift across epochs likewise raises, in
+    * [[requireOneSchema]]. Opens the marker once.
     */
-  private def validMember(f: FileSystem, p: Path): Boolean = {
+  private def validMember(f: FileSystem, epoch: Long, p: Path): Option[Member] = {
     val actual = layout.dataFileCount(f, p)
-    layout.committedCount(f, p) match {
+    val marker = layout.marker(f, p)
+    marker.files match {
       case Some(expected) if expected != actual =>
         throw new IllegalStateException(
           s"epoch store $dir: $p committed with files=$expected but $actual data " +
             "files found — refusing to read a corrupt epoch (restore the files or " +
             "delete the epoch dir to drop its batch)")
-      case _ => actual > 0
+      case _ => Option.when(actual > 0)(Member(epoch, p, marker.schema))
     }
   }
 
@@ -177,45 +186,89 @@ final class EpochKeyedStore(dir: String,
     * — they carry higher epoch numbers, stay above the published base, and
     * keep winning the merge.
     */
-  private final case class Snapshot(base: Option[(Long, Path)],
-                                    merge: Option[(Long, Path)],
-                                    deltas: Seq[(Long, Path)])
+  private final case class Snapshot(base: Option[Member],
+                                    merge: Option[Member],
+                                    deltas: Seq[Member])
 
   private def snapshot(f: FileSystem): Snapshot = {
     requireOnlyTiers(f)
     val bases = listEpochs(f, "base").filter(_._3)
-    val baseOpt = bases.lastOption.filter(b => validMember(f, b._2)).map(b => (b._1, b._2))
+    val baseOpt = bases.lastOption.flatMap(b => validMember(f, b._1, b._2))
     val floor = bases.lastOption.map(_._1).getOrElse(-1L)
     // newest committed L1 merge above the base; merges the base folded in
     // are superseded (swept lazily)
     val mergeOpt = listEpochs(f, "merge")
       .filter(m => m._3 && m._1 > floor).lastOption
-      .filter(m => validMember(f, m._2)).map(m => (m._1, m._2))
-    val mfloor = math.max(floor, mergeOpt.map(_._1).getOrElse(-1L))
+      .flatMap(m => validMember(f, m._1, m._2))
+    val mfloor = math.max(floor, mergeOpt.map(_.epoch).getOrElse(-1L))
     val deltas = listEpochs(f, "delta")
-      .filter(d => d._3 && d._1 > mfloor && validMember(f, d._2))
-      .map(d => (d._1, d._2))
+      .filter(d => d._3 && d._1 > mfloor)
+      .flatMap(d => validMember(f, d._1, d._2))
     Snapshot(baseOpt, mergeOpt, deltas)
   }
 
-  /** Newest-wins merge over one snapshot's members. */
+  /** Newest-wins merge over one snapshot's members, as at most three
+    * parquet relations: the base and the merge (each one epoch,
+    * hive-partitioned by `partitionCols`) and one relation over every
+    * pending delta (flat), whose rows take their epoch from their file's
+    * path. Each reads under its members' recorded schema, so no
+    * schema-inference job runs; a member whose marker predates recorded
+    * schemas has its schema inferred instead, on the same read path.
+    */
   private def mergedFrom(spark: SparkSession, snap: Snapshot): Option[DataFrame] = {
-    // one read per epoch directory, so each member's rows carry its epoch
-    // for the newest-wins window; fold epochs are hive-partitioned and
-    // deltas flat, and a per-dir read infers each layout on its own (the
-    // delta count is bounded by compactAfterDeltas, so this stays a
-    // handful of scans)
-    val parts = (snap.base.toSeq ++ snap.merge ++ snap.deltas).map { case (n, p) =>
-      spark.read.parquet(p.toString).withColumn("__epoch", lit(n))
+    val folds = snap.base.toSeq ++ snap.merge
+    val members = folds ++ snap.deltas
+    if (members.isEmpty) return None
+    val schemas = members.map(m =>
+      m -> m.recorded.getOrElse(spark.read.parquet(m.path.toString).schema)).toMap
+    requireOneSchema(members.map(m => (m, schemas(m),
+      if (m.recorded.isEmpty && folds.contains(m)) partitionCols.toSet else Set.empty[String])))
+    val foldParts = folds.map(m =>
+      spark.read.schema(schemas(m)).parquet(m.path.toString).withColumn("__epoch", lit(m.epoch)))
+    val deltaPart = snap.deltas.headOption.map(d =>
+      spark.read.schema(schemas(d)).parquet(snap.deltas.map(_.path.toString): _*)
+        .withColumn("__epoch", layout.epochOfFile("delta")))
+    val all = (foldParts ++ deltaPart).reduce(_ unionByName _)
+    val w = Window.partitionBy(mergeKeys.map(col): _*).orderBy(col("__epoch").desc)
+    Some(all
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1)
+      .drop("__rn", "__epoch"))
+  }
+
+  /** Raise unless every member of a read holds the same columns with the
+    * same types — nullability (at any nesting level) and column order
+    * aside. The delta tier is ONE relation under one member's schema, so
+    * this check is what stops a drifted epoch from being read under
+    * another's types. `untyped` columns are checked for presence only: a
+    * fold whose marker predates recorded schemas got its `partitionCols`
+    * types from partition inference, which reads a directory name like
+    * `kb=5` as int whatever type the rows were written with (the union
+    * widens them, as before). The reference is a fully-typed member when
+    * one exists.
+    */
+  private def requireOneSchema(members: Seq[(Member, StructType, Set[String])]): Unit = {
+    def loose(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f => StructField(f.name, loose(f.dataType))))
+      case a: ArrayType => ArrayType(loose(a.elementType))
+      case m: MapType => MapType(loose(m.keyType), loose(m.valueType))
+      case other => other
     }
-    if (parts.isEmpty) None
-    else {
-      val all = parts.reduce(_ unionByName _)
-      val w = Window.partitionBy(mergeKeys.map(col): _*).orderBy(col("__epoch").desc)
-      Some(all
-        .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1)
-        .drop("__rn", "__epoch"))
+    val typed = members.map { case (m, s, untyped) =>
+      (m, s, s.fields.map(f =>
+        f.name -> Option.when(!untyped(f.name))(loose(f.dataType))).toMap)
+    }
+    val (refM, refS, ref) = typed.find(_._3.values.forall(_.isDefined)).getOrElse(typed.head)
+    typed.foreach { case (m, s, cols) =>
+      val agree = cols.keySet == ref.keySet && cols.forall { case (n, t) =>
+        t.isEmpty || ref(n).isEmpty || t == ref(n)
+      }
+      if (!agree)
+        throw new IllegalStateException(
+          s"epoch store $dir: schema drift between epochs — ${refM.path} holds " +
+            s"${refS.simpleString} but ${m.path} holds ${s.simpleString}; every epoch " +
+            "of a read must hold the same columns and types (fold or drop the " +
+            "drifted epoch, or write the new shape to a new store)")
     }
   }
 
@@ -268,7 +321,7 @@ final class EpochKeyedStore(dir: String,
     // `_STAGE` marker), and an Overwrite would delete the claim mid-write.
     // Deltas are flat whatever `partitionCols` says
     shaped(rows).write.mode(SaveMode.Append).parquet(target.toString)
-    layout.commit(f, target, recordFileCount = true)
+    layout.commit(f, target, Some(rows.schema))
     if (!deferCompaction && foldDue(f)) compact(spark)
     target
   }
@@ -464,8 +517,8 @@ final class EpochKeyedStore(dir: String,
   private def partialFoldOnce(spark: SparkSession): Long = {
     val f = fs(spark)
     val snap = snapshot(f)
-    if (snap.deltas.isEmpty) return snap.merge.map(_._1).getOrElse(-1L)
-    val n = snap.deltas.map(_._1).max
+    if (snap.deltas.isEmpty) return snap.merge.map(_.epoch).getOrElse(-1L)
+    val n = snap.deltas.map(_.epoch).max
     mergedFrom(spark, snap.copy(base = None)) match {
       case None => -1L
       case Some(merged) =>
@@ -478,11 +531,12 @@ final class EpochKeyedStore(dir: String,
     * `partitionCols` hive layout. Overwrite is safe here: compaction is the
     * single writer's own maintenance step, and a crashed previous attempt
     * at this epoch (uncommitted partial dir) should be replaced, not
-    * collided with. */
+    * collided with. The marker records the merged view's schema, partition
+    * columns included. */
   private def writeFold(f: FileSystem, merged: DataFrame, target: Path): Unit = {
     val w = shaped(merged).write.mode(SaveMode.Overwrite)
     if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*).parquet(target.toString)
     else w.parquet(target.toString)
-    layout.commit(f, target, recordFileCount = true)
+    layout.commit(f, target, Some(merged.schema))
   }
 }

@@ -1,6 +1,10 @@
 package graft.sink
 
+import java.util.regex.Pattern
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, regexp_extract}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The create-file `_COMMIT` epoch-publication pattern, factored into one
   * implementation: list epoch directories with their commit status, publish
@@ -20,11 +24,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * readers ignore and a later sweep deletes.
   *
   * The marker optionally records the epoch's data-file count
-  * (`files=<n>`), turning "committed but no data files" from an ambiguous
-  * state into a checkable one: a zero-row epoch legitimately commits with
+  * (`files=<n>`) and the schema of its rows (`schema=<StructType json>`).
+  * The count turns "committed but no data files" from an ambiguous state
+  * into a checkable one: a zero-row epoch legitimately commits with
   * `files=0`, while a data file missing UNDER a committed marker is
-  * detectable corruption. Markers written before this existed are empty —
-  * [[committedCount]] returns None for them and readers stay lenient.
+  * detectable corruption. The schema lets a reader build the epoch's
+  * relation without a schema-inference job. Markers written before either
+  * existed are empty or carry only `files=` — [[marker]] returns None for
+  * what is missing and readers fall back (lenient count, inferred schema).
   */
 final class EpochLayout(prefix: String) {
 
@@ -60,29 +67,43 @@ final class EpochLayout(prefix: String) {
     n
   }
 
-  /** Publish `dir`: one atomic `_COMMIT` create. With `recordFileCount`,
-    * the marker body records the data-file count present at commit time.
+  /** Publish `dir`: one atomic `_COMMIT` create. With a `schema`, the
+    * marker body records it and the data-file count present at commit time.
     */
-  def commit(fs: FileSystem, dir: Path, recordFileCount: Boolean = false): Unit = {
+  def commit(fs: FileSystem, dir: Path, schema: Option[StructType] = None): Unit = {
     val out = fs.create(new Path(dir, "_COMMIT"), false)
-    try if (recordFileCount) out.write(s"files=${dataFileCount(fs, dir)}\n".getBytes("UTF-8"))
-    finally out.close()
+    try schema.foreach { s =>
+      out.write(s"files=${dataFileCount(fs, dir)}\nschema=${s.json}\n".getBytes("UTF-8"))
+    } finally out.close()
   }
 
-  /** The data-file count recorded at commit time, if the marker has one
-    * (legacy empty markers → None).
+  /** What `dir`'s `_COMMIT` marker records, read with one open; both
+    * fields are None for an absent or empty marker.
     */
-  def committedCount(fs: FileSystem, dir: Path): Option[Long] = {
-    val marker = new Path(dir, "_COMMIT")
-    if (!fs.exists(marker)) None
+  def marker(fs: FileSystem, dir: Path): EpochLayout.Marker = {
+    val path = new Path(dir, "_COMMIT")
+    if (!fs.exists(path)) EpochLayout.Marker(None, None)
     else {
-      val in = fs.open(marker)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      body.linesIterator.collectFirst {
-        case l if l.startsWith("files=") => l.drop(6).trim
-      }.flatMap(_.toLongOption)
+      val in = fs.open(path)
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      def field(key: String) = lines.collectFirst { case l if l.startsWith(key) => l.drop(key.length) }
+      EpochLayout.Marker(
+        field("files=").flatMap(_.trim.toLongOption),
+        field("schema=").map(j => DataType.fromJson(j).asInstanceOf[StructType]))
     }
   }
+
+  /** The epoch of each row of a relation over flat `<tier>/<prefix><n>/`
+    * directories, parsed from its file's path (`_metadata.file_path`):
+    * one relation can then span many epochs without hive partition
+    * discovery, which a data column named like the prefix would collide
+    * with. Anchored to the LAST `/<tier>/<prefix><n>/` segment directly
+    * above the file.
+    */
+  def epochOfFile(tier: String): Column =
+    regexp_extract(col("_metadata.file_path"),
+      s".*/${Pattern.quote(tier)}/${Pattern.quote(prefix)}(\\d+)/[^/]+$$", 1).cast("long")
 
   /** Delete every epoch dir under `root` that `doomed(epoch, committed)`
     * selects.
@@ -91,4 +112,11 @@ final class EpochLayout(prefix: String) {
     list(fs, root).foreach { case (n, p, committed) =>
       if (doomed(n, committed)) { fs.delete(p, true); () }
     }
+}
+
+object EpochLayout {
+
+  /** A `_COMMIT` marker's body: the data-file count and row schema
+    * recorded at commit, each None when the marker predates it. */
+  final case class Marker(files: Option[Long], schema: Option[StructType])
 }

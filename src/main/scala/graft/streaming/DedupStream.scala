@@ -77,11 +77,16 @@ object DedupStream {
     *
     * `compactAfterDeltas` defaults LOWER than the store's own default
     * (6 vs 16): this dataflow reads all three stores every batch, and the
-    * measured per-batch cost climbs roughly linearly with the pending
-    * delta count ([[graft.DedupScaleCheck]] — ~30 s at 1 delta to ~150 s
-    * at 16 at probe scale, resetting after each fold), so a read-heavy
-    * access pattern wants frequent small folds. Writes stay O(batch)
-    * either way; the fold itself amortizes to O(corpus / k) per batch.
+    * merge window's duplicate work grows with the rows pending above the
+    * newest fold, so a read-heavy access pattern wants frequent small
+    * folds. [[graft.DedupScaleCheck]] measured the per-batch cost climbing
+    * roughly linearly with the pending delta count (~30 s at 1 delta to
+    * ~150 s at 16 at probe scale, resetting after each fold) when every
+    * delta was its own parquet relation with its own schema-inference job;
+    * the deltas now read as ONE relation under their recorded schema, so
+    * that slope includes a per-delta overhead the read no longer pays and
+    * has not been re-measured. Writes stay O(batch) either way; the fold
+    * itself amortizes to O(corpus / k) per batch.
     *
     * `deferCompaction` moves those folds OFF the write path entirely: the
     * fold runs on a background thread between batches while reads serve

@@ -34,6 +34,47 @@ class EpochStoreSpec extends AnyFunSuite {
   private def parquetFiles(dir: String): Long =
     Files.walk(java.nio.file.Paths.get(dir)).filter(_.toString.endsWith(".parquet")).count()
 
+  /** `body`'s result and the Spark jobs it started on this thread. Jobs are
+    * told apart by job group; a marker job run afterwards flushes the
+    * asynchronous listener bus, which delivers events in order. */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"epoch-store-read-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == s"$group-flush") flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "listener bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Rewrite `marker`'s body through the Hadoop FS (keeps its checksum file
+    * consistent). */
+  private def rewriteMarker(marker: java.nio.file.Path, body: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(marker.toUri)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def markers(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString == "_COMMIT").toSeq.sortBy(_.toString)
+  }
+
   test("MERGE semantics: the NEW row wins a key collision, appends accumulate") {
     val dir = tmp()
     val s = new EpochKeyedStore(dir, mergeKeys = Seq("k"))
@@ -86,6 +127,90 @@ class EpochStoreSpec extends AnyFunSuite {
     // update an already-compacted key: the delta must beat the base
     s.upsert(Seq((1L, "v1b")).toDF("k", "v"), Seq("k"))
     assert(s.read(spark).get.as[(Long, String)].collect().toMap.apply(1L) === "v1b")
+  }
+
+  test("a base and five deltas read as at most three relations, one over all deltas, with no job to build") {
+    val dir = tmp()
+    val s = new EpochKeyedStore(dir, mergeKeys = Seq("k"), compactAfterDeltas = 99)
+    s.upsert(Seq((1L, "b1"), (2L, "b2")).toDF("k", "v"), Seq("k"))
+    s.compact(spark)
+    // the same key in three successive deltas, then two more keys
+    (1 to 3).foreach(i => s.upsert(Seq((1L, s"d$i")).toDF("k", "v"), Seq("k")))
+    s.upsert(Seq((3L, "x")).toDF("k", "v"), Seq("k"))
+    s.upsert(Seq((4L, "y")).toDF("k", "v"), Seq("k"))
+    assert(baseDirs(dir).length === 1 && deltaDirs(dir).length === 5)
+    // every member's marker records its schema, so no inference job runs
+    val (merged, jobs) = jobsStartedBy(s.read(spark).get)
+    assert(jobs === 0, s"building the read started $jobs Spark jobs")
+    withoutAqe {
+      val rows = merged.as[(Long, String)].collect().toMap
+      assert(rows === Map(1L -> "d3", 2L -> "b2", 3L -> "x", 4L -> "y"))
+      val scans = merged.queryExecution.executedPlan.collectWithSubqueries {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      assert(scans.size <= 3, s"${scans.size} scans")
+      val deltaScans = scans.filter(_.relation.location.rootPaths.exists(_.toString.contains("/delta/")))
+      assert(deltaScans.size === 1, s"${deltaScans.size} delta-tier scans")
+      assert(deltaScans.head.relation.location.rootPaths.size === 5)
+    }
+  }
+
+  test("schema drift across epochs raises on read and compact, naming both epochs") {
+    def drifted(first: org.apache.spark.sql.DataFrame, second: org.apache.spark.sql.DataFrame): Unit = {
+      val dir = tmp()
+      val s = new EpochKeyedStore(dir, mergeKeys = Seq("k"))
+      s.upsert(first, Seq("k"))
+      s.upsert(second, Seq("k"))
+      Seq(intercept[IllegalStateException](s.read(spark)),
+        intercept[IllegalStateException](s.compact(spark))).foreach { e =>
+        assert(e.getMessage.contains("delta/epoch=1") && e.getMessage.contains("delta/epoch=2"),
+          e.getMessage)
+      }
+    }
+    // an added column
+    drifted(Seq((1L, "v")).toDF("k", "v"), Seq((2L, "w", 7)).toDF("k", "v", "extra"))
+    // a changed type: int → long (a union would have widened it)
+    drifted(Seq((1L, 1)).toDF("k", "n"), Seq((2L, 2L)).toDF("k", "n"))
+    // column order and nullability are not drift
+    val dir = tmp()
+    val s = new EpochKeyedStore(dir, mergeKeys = Seq("k"))
+    s.upsert(Seq((1L, 1)).toDF("k", "n"), Seq("k"))
+    s.upsert(Seq((Option(2), 2L)).toDF("n", "k"), Seq("k"))
+    assert(s.read(spark).get.as[(Long, Int)].collect().toMap === Map(1L -> 1, 2L -> 2))
+  }
+
+  test("markers written before schemas were recorded still read; the next fold records one") {
+    val dir = tmp()
+    // partitioned, with a long partition column: an older base marker's
+    // schema is inferred, and partition inference reads kb=<n> as int
+    val s = new EpochKeyedStore(dir, mergeKeys = Seq("id", "band", "kb"),
+      partitionCols = Seq("band", "kb"), compactAfterDeltas = 99)
+    val rows = (0 until 16).map(i => (i.toLong, i % 2, (i % 4).toLong, s"p$i"))
+    s.upsert(rows.toDF("id", "band", "kb", "payload"), Seq("id", "band"))
+    s.compact(spark)
+    s.upsert(Seq((1L, 1, 1L, "u1")).toDF("id", "band", "kb", "payload"), Seq("id", "band"))
+    s.upsert(Seq((1L, 1, 1L, "u2"), (99L, 0, 3L, "n")).toDF("id", "band", "kb", "payload"),
+      Seq("id", "band"))
+    def snapshotRows() = s.read(spark).get.select("id", "band", "kb", "payload")
+      .as[(Long, Int, Long, String)].collect().toSet
+    val before = snapshotRows()
+    assert(before.size === 17 && before.contains((1L, 1, 1L, "u2")))
+    val ms = markers(dir)
+    assert(ms.size === 3 && ms.forall(m => new String(Files.readAllBytes(m), "UTF-8")
+      .linesIterator.exists(_.startsWith("schema="))))
+    // rewrite every marker the older way: files=<n> only, the base's empty
+    ms.foreach { m =>
+      val body = new String(Files.readAllBytes(m), "UTF-8")
+      rewriteMarker(m, if (m.toString.contains("/base/")) ""
+        else body.linesIterator.filter(_.startsWith("files=")).map(_ + "\n").mkString)
+    }
+    assert(snapshotRows() === before)
+    s.compact(spark)
+    val base = markers(dir)
+    assert(base.size === 1 && base.head.toString.contains("/base/"))
+    assert(new String(Files.readAllBytes(base.head), "UTF-8").linesIterator
+      .exists(_.startsWith("schema=")))
+    assert(snapshotRows() === before)
   }
 
   test("a store root holding non-tier parquet refuses to read or compact") {
