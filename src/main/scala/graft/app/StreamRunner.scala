@@ -1,6 +1,6 @@
 package graft.app
 
-import graft.recover.{Reconcile, RetryPolicy}
+import graft.recover.RetryPolicy
 import graft.streaming.{Alerts, ChainedPipeline, Monitors}
 import graft.time.SessionSchedule
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
@@ -57,7 +57,7 @@ object StreamRunner {
       alerts: Alerts.AlertManager,
       listener: StreamingQueryListener,
       schedule: SessionSchedule,
-      decision: Reconcile.Decision) extends Supervised {
+      decision: Decision) extends Supervised {
 
     /** Detach the listener (after the query has already terminated). */
     def detach(): Unit =
@@ -86,14 +86,23 @@ object StreamRunner {
           s"(transformWithState requirement) — unset $key or set it to that provider")
   }
 
-  /** Chained-path startup reconcile: enrichment state lives only in the
-    * streaming checkpoint, so the reference's 4-case matrix collapses to
-    * checkpoint presence vs the sink's high-watermark. `FromSink` here
-    * means "sink history absorbs re-emitted windows while ATR restarts
-    * cold" — the sheet-recovery case; there is no snapshot to seed from,
-    * so [[Reconcile.decide]]'s snapshot-vs-sheet matrix does not apply.
+  /** Where the startup audit found the run's state: nothing anywhere, the
+    * streaming checkpoint, or only the sink's history. */
+  sealed trait Source
+  case object Fresh extends Source
+  case object FromLocal extends Source
+  case object FromSink extends Source
+
+  final case class Decision(source: Source, reason: String)
+
+  /** Startup reconcile (checkpoint_manager.py:184-260's 4-case matrix,
+    * reduced to what the chained path keeps): enrichment state lives only
+    * in the streaming checkpoint, so the matrix is checkpoint presence vs
+    * the sink's high-watermark. `FromSink` here means "sink history
+    * absorbs re-emitted windows while ATR restarts cold" — the
+    * sheet-recovery case; there is no state snapshot to seed from.
     */
-  private[graft] def startupAudit(spark: SparkSession, cfg: Config): Reconcile.Decision = {
+  private[graft] def startupAudit(spark: SparkSession, cfg: Config): Decision = {
     val offsets = new org.apache.hadoop.fs.Path(cfg.checkpointDir, "offsets")
     val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasCkpt = fs.exists(offsets) && fs.listStatus(offsets).nonEmpty
@@ -102,15 +111,14 @@ object StreamRunner {
         .agg(max(col("timestamp")).cast("string")).head().getString(0))
       catch { case _: AnalysisException => None }
     (hasCkpt, sinkMax) match {
-      case (false, None) => Reconcile.Decision(Reconcile.Fresh,
-        "no checkpoint, empty sink: cold start", 0L)
-      case (false, Some(w)) => Reconcile.Decision(Reconcile.FromSink,
+      case (false, None) => Decision(Fresh, "no checkpoint, empty sink: cold start")
+      case (false, Some(w)) => Decision(FromSink,
         s"no checkpoint but sink holds rows through $w: ATR/seed state restarts " +
-          "cold; the id anti-join absorbs re-emitted windows", 0L)
-      case (true, None) => Reconcile.Decision(Reconcile.FromLocal,
-        "checkpoint present, sink empty: offsets and state resume locally", 0L)
-      case (true, Some(w)) => Reconcile.Decision(Reconcile.FromLocal,
-        s"checkpoint present, sink through $w: offsets/state resume from checkpoint", 0L)
+          "cold; the id anti-join absorbs re-emitted windows")
+      case (true, None) => Decision(FromLocal,
+        "checkpoint present, sink empty: offsets and state resume locally")
+      case (true, Some(w)) => Decision(FromLocal,
+        s"checkpoint present, sink through $w: offsets/state resume from checkpoint")
     }
   }
 
@@ -135,7 +143,7 @@ object StreamRunner {
     val alerts = Alerts.buffered(spark, cfg.systemLogDir, cfg.compactLogAfterFiles)
     val decision = startupAudit(spark, cfg)
     alerts.dispatch(
-      if (decision.source == Reconcile.FromSink) "WARNING" else "INFO",
+      if (decision.source == FromSink) "WARNING" else "INFO",
       "startup_reconcile", "-", decision.reason)
     alerts.flush() // land the audit row before the first micro-batch
     val hb = new Monitors.HeartbeatMonitor(cfg.heartbeatTimeoutMs)

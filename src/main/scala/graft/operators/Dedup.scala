@@ -197,6 +197,12 @@ object Dedup {
     * and pinned by MinhashSigSpec against the exploded reference on both
     * bases; a caller-supplied custom base still routes through the
     * exploded pipeline (the expression bakes the hash in).
+    *
+    * Precondition: `toks` holds ONE row per `doc_id`. The native path
+    * emits one signature per input row, while the exploded path's
+    * groupBy merges a doc's rows into one — on duplicate doc ids the two
+    * disagree, so callers pass a per-doc relation ([[tokenized]] of a
+    * one-row-per-doc table is one).
     */
   def minhashSignaturesFromTokens(toks: DataFrame, n: Int = 5, numPerms: Int = 64,
                                   baseHash: Column => Column = xxhashBase): DataFrame = {

@@ -37,7 +37,7 @@ object EdgeFormat {
     val seg = if (enriched.columns.contains("segment")) col("segment") else lit("nse_cm")
     val ts = to_timestamp(col("window_start"))
     enriched.select(
-      concat_ws("_", col("symbol"), date_format(ts, "yyyyMMdd_HHmm")).as("id"),
+      IdempotentSink.rowId(col("symbol"), ts).as("id"),
       date_format(ts, "yyyy-MM-dd'T'HH:mm:ss").as("timestamp"),
       col("symbol").as("ticker"),
       s(seg).as("segment"),

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Idempotent append sink with deterministic row IDs, anti-join dedup,
@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object IdempotentSink {
 
-  /** Deterministic row id `{symbol}_{yyyyMMdd_HHmm}` (id_generator.py:15-30). */
-  def rowId(symbolCol: String = "symbol", windowCol: String = "window_start") =
-    concat_ws("_", col(symbolCol), date_format(col(windowCol), "yyyyMMdd_HHmm"))
+  /** Deterministic row id `{symbol}_{yyyyMMdd_HHmm}` (id_generator.py:15-30):
+    * the exactly-once key every sink row carries ([[EdgeFormat.sheetRows]]). */
+  def rowId(symbol: Column, window: Column): Column =
+    concat_ws("_", symbol, date_format(window, "yyyyMMdd_HHmm"))
 
   /** Append only rows whose id is not already present in the sink.
     * Returns the number of rows actually written.
@@ -62,28 +63,14 @@ object IdempotentSink {
     * directory: Spark cannot read a dir holding both loose parquet files
     * and `col=value/` subdirs, so an append that would create the mix
     * breaks every LATER read-back (and hence every later append's dedup
-    * scan) — fail the write now with the migration path spelled out,
-    * instead of poisoning the sink. One driver-side listStatus; no data
-    * is read.
+    * scan) — fail the write now instead of poisoning the sink. One
+    * driver-side listStatus; no data is read.
     */
   private[graft] def assertLayout(spark: SparkSession, sinkDir: String,
                                   partitionCol: Option[String]): Unit = {
     val path = new org.apache.hadoop.fs.Path(sinkDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) {
-      // a missing sink whose migration stage/backup sibling exists is a
-      // TORN migration, not a fresh sink: appending now would create a
-      // new history that the resumed migration's sweep would then treat
-      // as the migrated sink — refuse until the migration is resumed
-      val stageOk = fs.exists(new org.apache.hadoop.fs.Path(sinkDir + ".stage", "_SUCCESS"))
-      val backup = fs.exists(new org.apache.hadoop.fs.Path(sinkDir + ".premigration"))
-      if (stageOk || backup)
-        throw new IllegalStateException(
-          s"sink $sinkDir is missing but a migration stage/backup sibling exists — " +
-            "run IdempotentSink.migrateToPartitioned to resume the migration before appending " +
-            "(a fresh append here would fork the dedup history)")
-      return
-    }
+    if (!fs.exists(path)) return
     val entries = fs.listStatus(path)
     val flat = entries.exists(s =>
       s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -94,7 +81,7 @@ object IdempotentSink {
       case Some(pc) =>
         if (flat) throw new IllegalStateException(
           s"sink $sinkDir holds flat parquet files but this append is partitioned by $pc; " +
-            s"run IdempotentSink.migrateToPartitioned first (a mixed layout is unreadable)")
+            "a mixed layout is unreadable")
         onDiskCols.find(_ != pc).foreach(other =>
           throw new IllegalStateException(
             s"sink $sinkDir is partitioned by $other but this append partitions by $pc"))
@@ -104,65 +91,6 @@ object IdempotentSink {
             s"sink $sinkDir is partitioned by $pc but this append is unpartitioned; " +
               s"pass partitionCol=Some(\"$pc\") (a mixed layout is unreadable)"))
     }
-  }
-
-  /** One-time sink migration flat → `partitionBy(partitionCol)`: rewrite
-    * into a staging dir, then swap (old dir is renamed aside, not deleted,
-    * so a crash mid-swap never destroys the only copy). Re-running after a
-    * crash RESUMES the swap instead of silently returning: a missing sink
-    * with a completed stage finishes the rename; a missing sink with only
-    * the renamed-aside original restores it and migrates again. Without
-    * that, the next append would recreate an empty sink, anti-join against
-    * nothing, and fork the dedup history. `derive` supplies the partition
-    * column when the flat rows lack it (e.g. market_data v1 → v2:
-    * dt = substring(timestamp, 1, 10)).
-    */
-  def migrateToPartitioned(spark: SparkSession, sinkDir: String, partitionCol: String,
-                           derive: DataFrame => DataFrame = identity): Unit = {
-    val path = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(sinkDir + ".stage")
-    val old = new org.apache.hadoop.fs.Path(sinkDir + ".premigration")
-    // Hadoop rename reports failure by RETURNING false — every swap step
-    // must be checked or a failed rename would be followed by cleanup
-    // deletes (destroying the only copy) or a silent no-op "success"
-    def renameOrThrow(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new IllegalStateException(s"migration rename $src -> $dst failed; " +
-          "sink left as-is — resolve the filesystem state and re-run")
-    if (!fs.exists(path)) {
-      // torn previous migration: the stage (if complete, i.e. _SUCCESS'd)
-      // IS the migrated sink — finish the swap; else restore the original
-      // and fall through to a clean re-migration
-      if (fs.exists(stage) &&
-        fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS"))) {
-        renameOrThrow(stage, path)
-        fs.delete(old, true)
-        return
-      } else if (fs.exists(old)) {
-        fs.delete(stage, true)
-        renameOrThrow(old, path)
-      } else return // nothing to migrate
-    }
-    // already migrated (e.g. re-run after a crash between the final rename
-    // and the cleanup): just sweep the strays
-    if (fs.listStatus(path).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))) {
-      fs.delete(old, true)
-      fs.delete(stage, true)
-      return
-    }
-    val df = derive(
-      try spark.read.parquet(sinkDir)
-      catch { case _: AnalysisException => return })
-    require(df.columns.contains(partitionCol),
-      s"derive must produce the $partitionCol column for the migration")
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(sinkDir + ".stage")
-    if (fs.exists(old)) fs.delete(old, true)
-    renameOrThrow(path, old)
-    renameOrThrow(stage, path)
-    fs.delete(old, true)
-    ()
   }
 
   /** The pruned existing-ids scan used by [[appendDedup]] — package-visible
@@ -189,20 +117,26 @@ object IdempotentSink {
     }
   }
 
+  /** The sink's ids plus whichever of `extraCols` it holds. Only a missing
+    * or never-written sink reads as empty: a sink whose rows lack `idCol`
+    * fails the projection loudly, since an empty id set there would
+    * re-append every row and break exactly-once.
+    */
   private def readIdsWith(spark: SparkSession, dir: String, idCol: String,
-                          extraCols: Seq[String]): DataFrame =
-    try {
-      val df = spark.read.parquet(dir)
-      val present = extraCols.filter(df.columns.contains)
-      df.select((idCol +: present).map(col): _*)
-    } catch {
-      case _: AnalysisException =>
-        import org.apache.spark.sql.types._
-        val fields = StructField(idCol, StringType) ::
-          extraCols.map(StructField(_, StringType)).toList
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(fields))
-    }
+                          extraCols: Seq[String]): DataFrame = {
+    val df =
+      try spark.read.parquet(dir)
+      catch {
+        case _: AnalysisException =>
+          import org.apache.spark.sql.types._
+          val fields = StructField(idCol, StringType) ::
+            extraCols.map(StructField(_, StringType)).toList
+          return spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
+      }
+    val present = extraCols.filter(df.columns.contains)
+    df.select((idCol +: present).map(col): _*)
+  }
 
   /** appendDedup with retry/backoff and dead-letter fallback
     * (write_pipeline.py:199-285). Backoff base is in millis so tests run
@@ -260,12 +194,6 @@ object IdempotentSink {
     fs.delete(path, true)
     n
   }
-
-  /** Full-overwrite state snapshot sink (`atr_state`, write_pipeline.py:328-362):
-    * latest state per key, sorted, replaced wholesale each cycle.
-    */
-  def overwriteState(state: DataFrame, dir: String, orderCol: String = "symbol"): Unit =
-    state.orderBy(col(orderCol)).write.mode(SaveMode.Overwrite).parquet(dir)
 
   /** Append-only event log (`system_log`, schema_manager.py:137-164);
     * failures are swallowed — logging must never take down the pipeline.

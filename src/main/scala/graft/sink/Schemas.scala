@@ -47,8 +47,7 @@ object Schemas {
     * `dt` is declared DATE: the writers supply it as a yyyy-MM-dd string,
     * but `partitionBy` stores it only in directory names, and Spark's
     * partition-column type inference reads those back as DateType — the
-    * declared READ-BACK schema must match what a real sink yields, or
-    * [[readEvolved]] would reject every sink this engine itself wrote.
+    * declared schema records what a real sink reads back as.
     */
   val Versions: Map[String, Seq[(Int, StructType)]] = Map(
     "market_data" -> Seq(1 -> MarketData, 2 -> MarketData.add(StructField("dt", DateType))),
@@ -70,13 +69,11 @@ object Schemas {
 
   /** The reference's 4 metadata rows (schema_manager.py:34-43), with
     * tickers_count parameterized by the actual universe instead of the
-    * hard-coded 178, and schema_version reporting the [[Versions]] ledger.
-    * @param legacySchemaVersion report the reference's literal "1.0"
-    *   instead — only for byte-compatibility with consumers that pin it
+    * hard-coded 178, and schema_version reporting the [[Versions]] ledger
+    * instead of the reference's literal "1.0".
     */
-  def metadataRows(tickersCount: Int,
-                   legacySchemaVersion: Boolean = false): Seq[(String, String)] = Seq(
-    "schema_version" -> (if (legacySchemaVersion) "1.0" else ledgerVersion),
+  def metadataRows(tickersCount: Int): Seq[(String, String)] = Seq(
+    "schema_version" -> ledgerVersion,
     "atr_period" -> graft.operators.Atr.Period.toString,
     "timezone" -> "IST",
     "tickers_count" -> tickersCount.toString)
@@ -116,64 +113,21 @@ object Schemas {
       s"schema mismatch for $table: ${diffs.mkString("; ")}")
   }
 
-  /** Type-level drift only: columns present in both schemas whose types
-    * differ. Additive columns (either direction) are NOT drift — they are
-    * the supported evolution path.
-    */
-  def typeDrift(onDisk: StructType, declared: StructType): Seq[String] =
-    declared.fields.flatMap { ef =>
-      onDisk.fields.find(_.name == ef.name).collect {
-        case af if af.dataType != ef.dataType =>
-          s"column ${ef.name}: on-disk ${af.dataType.simpleString} != declared ${ef.dataType.simpleString}"
-      }
-    }.toSeq
-
-  /** Schema-evolution read of a sink written across engine versions
-    * (schema_manager.py:104-135's startup header validation, extended with
-    * an evolution policy instead of a pure fail-fast):
-    *
-    *   - ADDITIVE columns evolve automatically, both directions: files
-    *     written before a column was declared read as typed nulls, and
-    *     on-disk columns a newer engine added are dropped to the declared
-    *     projection — read-back always yields exactly the declared shape.
-    *   - TYPE changes fail fast with every drifted column listed; silent
-    *     casts would corrupt the sink contract, so they require an explicit
-    *     migration.
-    *
-    * The drift check merges footers across files (`mergeSchema`) so a
-    * drifted file anywhere in the read set is caught, not just the first
-    * file's schema. At large sink sizes callers should point this at a
-    * partition-pruned subdirectory scope, not the whole history.
-    */
-  def readEvolved(spark: SparkSession, dir: String, table: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val declared = current(table)._2
-    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
-    val drift = typeDrift(merged.schema, declared)
-    require(drift.isEmpty,
-      s"incompatible schema drift reading $table at $dir: ${drift.mkString("; ")} " +
-        "— additive columns evolve automatically; type changes need an explicit migration")
-    val aligned = declared.fields.toSeq.map { f =>
-      if (merged.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
-    merged.select(aligned: _*)
-  }
-
   /** Write the metadata table once (initialize_if_empty semantics): a
-    * no-op when the directory already exists.
-    * @param legacySchemaVersion report the reference's literal "1.0"
-    *   instead of the [[Versions]] ledger (see [[metadataRows]]) — the
-    *   opt-in for consumers byte-pinned to the reference value
+    * no-op when the directory already holds a parquet data file. One
+    * listing decides it — [[graft.streaming.ChainedPipeline]] calls this on
+    * every non-empty micro-batch, so no read job may run here. A directory
+    * holding only a torn write's `_temporary` is not written yet.
     */
-  def initMetadata(spark: SparkSession, dir: String, tickersCount: Int,
-                   legacySchemaVersion: Boolean = false): Unit = {
+  def initMetadata(spark: SparkSession, dir: String, tickersCount: Int): Unit = {
     import spark.implicits._
-    val exists =
-      try { spark.read.parquet(dir).head(1); true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (!exists) {
-      val df = metadataRows(tickersCount, legacySchemaVersion).toDF("key", "value")
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val written =
+      try fs.listStatus(path).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!written) {
+      val df = metadataRows(tickersCount).toDF("key", "value")
       validate(df, Metadata, "metadata")
       df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
     }

@@ -32,7 +32,9 @@ import org.apache.spark.sql.types._
   * Java `%` equals Spark's `%` here). Pinned by MinhashSigSpec against
   * the explode/groupBy formulation on randomized corpora, both bases.
   * Returns null when the array holds fewer than `n` tokens — callers
-  * filter `size(w) >= n` first, exactly as the exploded path did.
+  * filter `size(w) >= n` first, exactly as the exploded path did. Null
+  * tokens count toward that size and are skipped inside a shingle, as
+  * `array_join` skips them.
   */
 object MinhashUtil {
 
@@ -65,17 +67,27 @@ object MinhashUtil {
     java.util.Arrays.fill(mins, Long.MaxValue)
     val toks = new Array[String](len)
     var i = 0
-    while (i < len) { toks(i) = w.getUTF8String(i).toString; i += 1 }
+    while (i < len) {
+      if (!w.isNullAt(i)) toks(i) = w.getUTF8String(i).toString
+      i += 1
+    }
     val seen = new java.util.HashSet[String]()
     val sb = new java.lang.StringBuilder()
     val md = if (xx) null else digest.get()
     i = 0
     while (i + n <= len) {
+      // array_join semantics: null tokens are skipped, and the delimiter
+      // goes only between the non-null ones
       sb.setLength(0)
+      var first = true
       var j = 0
       while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
+        val t = toks(i + j)
+        if (t != null) {
+          if (!first) sb.append(' ')
+          sb.append(t)
+          first = false
+        }
         j += 1
       }
       val g = sb.toString

@@ -13,7 +13,7 @@ class IdempotentSinkSpec extends AnyFunSuite {
   test("row id is deterministic and parseable") {
     val df = Seq(("RELIANCE", java.sql.Timestamp.valueOf("2026-02-02 09:15:00")))
       .toDF("symbol", "window_start")
-      .withColumn("id", IdempotentSink.rowId())
+      .withColumn("id", IdempotentSink.rowId($"symbol", $"window_start"))
     assert(df.select("id").as[String].head() === "RELIANCE_20260202_0915")
   }
 
@@ -112,68 +112,32 @@ class IdempotentSinkSpec extends AnyFunSuite {
   }
 
   test("mixed flat/partitioned layouts are rejected before they poison the sink") {
-    val sink = tmp() + "/sink"
-    IdempotentSink.appendDedup(
-      Seq(("a_1", "2026-02-02", 1.0)).toDF("id", "dt", "v"), sink)
-    // flat sink + partitioned append → loud failure naming the migration
+    def row(id: String, dt: String) = Seq((id, dt, 1.0)).toDF("id", "dt", "v")
+    // flat sink + partitioned append
+    val flat = tmp() + "/sink"
+    IdempotentSink.appendDedup(row("a_1", "2026-02-02"), flat)
     val e1 = intercept[IllegalStateException](IdempotentSink.appendDedup(
-      Seq(("b_1", "2026-02-03", 2.0)).toDF("id", "dt", "v"), sink,
-      partitionCol = Some("dt")))
-    assert(e1.getMessage.contains("migrateToPartitioned"))
-    // after the one-time migration the partitioned append works and dedups
-    IdempotentSink.migrateToPartitioned(spark, sink, "dt")
-    assert(IdempotentSink.appendDedup(
-      Seq(("a_1", "2026-02-02", 1.0), ("b_1", "2026-02-03", 2.0)).toDF("id", "dt", "v"),
-      sink, partitionCol = Some("dt")) === 1L)
-    assert(spark.read.parquet(sink).count() === 2L)
-    // and the reverse mix (unpartitioned append into a partitioned sink)
-    // is rejected too
+      row("b_1", "2026-02-03"), flat, partitionCol = Some("dt")))
+    assert(e1.getMessage.contains("holds flat parquet files"))
+    // partitioned sink + unpartitioned append
+    val parted = tmp() + "/sink"
+    IdempotentSink.appendDedup(row("a_1", "2026-02-02"), parted, partitionCol = Some("dt"))
     val e2 = intercept[IllegalStateException](IdempotentSink.appendDedup(
-      Seq(("c_1", "2026-02-04", 3.0)).toDF("id", "dt", "v"), sink))
+      row("c_1", "2026-02-04"), parted))
     assert(e2.getMessage.contains("partitioned by dt"))
+    // neither refused append touched either sink
+    assert(spark.read.parquet(flat).count() === 1L)
+    assert(spark.read.parquet(parted).count() === 1L)
   }
 
-  test("a torn migration resumes instead of forking the dedup history") {
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    def path(s: String) = new org.apache.hadoop.fs.Path(s)
-    // case 1: crash AFTER the original was renamed aside, BEFORE the stage
-    // swap — sink missing, premigration holds the only copy → restore + migrate
-    val s1 = tmp() + "/sink"
-    IdempotentSink.appendDedup(Seq(("a_1", "2026-02-02", 1.0)).toDF("id", "dt", "v"), s1)
-    fs.rename(path(s1), path(s1 + ".premigration"))
-    IdempotentSink.migrateToPartitioned(spark, s1, "dt")
-    assert(spark.read.parquet(s1).count() === 1L)
-    assert(new java.io.File(s1).listFiles().exists(_.getName == "dt=2026-02-02"))
-    // and the dedup history survived: the same row is still a dup
-    assert(IdempotentSink.appendDedup(
-      Seq(("a_1", "2026-02-02", 1.0)).toDF("id", "dt", "v"), s1,
-      partitionCol = Some("dt")) === 0L)
-    // case 2: crash BETWEEN the two renames — sink missing, stage complete
-    // → re-run finishes the swap
-    val s2 = tmp() + "/sink"
-    IdempotentSink.appendDedup(Seq(("b_1", "2026-02-03", 2.0)).toDF("id", "dt", "v"), s2)
-    IdempotentSink.migrateToPartitioned(spark, s2, "dt")
-    fs.rename(path(s2), path(s2 + ".stage"))         // stage complete (has _SUCCESS)
-    IdempotentSink.migrateToPartitioned(spark, s2, "dt")
-    assert(spark.read.parquet(s2).count() === 1L)
-    assert(IdempotentSink.appendDedup(
-      Seq(("b_1", "2026-02-03", 2.0)).toDF("id", "dt", "v"), s2,
-      partitionCol = Some("dt")) === 0L)
-    // case 3: re-running on an already-partitioned sink is a cheap no-op
-    IdempotentSink.migrateToPartitioned(spark, s2, "dt")
-    assert(spark.read.parquet(s2).count() === 1L)
-    // case 4: while the sink is torn (missing, backup exists), appends are
-    // REFUSED — a fresh append here would fork the dedup history and the
-    // later resume would sweep the only full copy
-    val s3 = tmp() + "/sink"
-    IdempotentSink.appendDedup(Seq(("c_1", "2026-02-04", 3.0)).toDF("id", "dt", "v"), s3)
-    fs.rename(path(s3), path(s3 + ".premigration"))
-    val e = intercept[IllegalStateException](IdempotentSink.appendDedup(
-      Seq(("d_1", "2026-02-05", 4.0)).toDF("id", "dt", "v"), s3))
-    assert(e.getMessage.contains("resume the migration"))
-    IdempotentSink.migrateToPartitioned(spark, s3, "dt")
-    assert(spark.read.parquet(s3).count() === 1L) // history intact
+  test("a sink without the id column fails the dedup instead of re-appending") {
+    // an empty id set here would let every row through again: only a
+    // missing sink may read as empty
+    val sink = tmp() + "/sink"
+    Seq("a_1").toDF("key").write.parquet(sink)
+    intercept[org.apache.spark.sql.AnalysisException](IdempotentSink.appendDedup(
+      Seq(("a_1", 1.0)).toDF("id", "v"), sink, idCol = "id"))
+    assert(spark.read.parquet(sink).count() === 1L)
   }
 
   test("dead letters drain idempotently into the sink") {
@@ -184,12 +148,5 @@ class IdempotentSinkSpec extends AnyFunSuite {
     assert(IdempotentSink.drainDeadLetters(spark, dead, sink) === 1L) // only y_1 is new
     assert(spark.read.parquet(sink).count() === 2)
     assert(IdempotentSink.drainDeadLetters(spark, dead, sink) === 0L) // dir cleared
-  }
-
-  test("overwriteState replaces the snapshot wholesale") {
-    val dir = tmp() + "/state"
-    IdempotentSink.overwriteState(Seq(("B", 1.0), ("A", 2.0)).toDF("symbol", "atr"), dir)
-    IdempotentSink.overwriteState(Seq(("A", 9.0)).toDF("symbol", "atr"), dir)
-    assert(spark.read.parquet(dir).as[(String, Double)].collect() === Array(("A", 9.0)))
   }
 }

@@ -43,7 +43,8 @@ class MinhashSigSpec extends AnyFunSuite {
     (1 to docs).map { id =>
       val len = rnd.nextInt(30) // includes docs shorter than any n
       (id.toLong, Seq.fill(len)(s"t${rnd.nextInt(12)}")) // heavy dup shingles
-    }
+    } :+ // null tokens, incl. a run longer than any n: array_join skips them
+      ((docs + 1).toLong, Seq("t1", null, "t2", "t3", null, null, null, null, null, "t4", "t1", null))
   }
 
   test("native MinHash signature == exploded reference, md5 base") {

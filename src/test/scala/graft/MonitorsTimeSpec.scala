@@ -101,17 +101,4 @@ class MonitorsTimeSpec extends AnyFunSuite {
     assert(r.getString(0) === "2026-02-02T09:15:00")
     assert(r.getInt(1) === 555) // 9*60+15 — session open boundary
   }
-
-  test("sink snapshot read-back feeds reconciliation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    Seq(("A", 10.0, 1.5)).toDF("symbol", "last_close", "last_atr")
-      .write.parquet(s"$dir/state")
-    Seq(("A_20260202_0915", "2026-02-02T09:15:00"))
-      .toDF("id", "timestamp").write.parquet(s"$dir/fact")
-    val snap = graft.recover.Reconcile.sinkSnapshot(spark, s"$dir/fact", s"$dir/state")
-    assert(snap.nonEmpty)
-    assert(snap.get.lastWindow.contains("2026-02-02T09:15:00"))
-    assert(snap.get.state.count() === 1)
-    assert(graft.recover.Reconcile.sinkSnapshot(spark, s"$dir/nope", s"$dir/state").isEmpty)
-  }
 }

@@ -1,48 +1,12 @@
 package graft
 
-import graft.recover.{Reconcile, RetryPolicy}
+import graft.recover.RetryPolicy
 import graft.sink.EdgeFormat
 import org.scalatest.funsuite.AnyFunSuite
 
 class RecoverSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def state(rows: (String, Double, Double)*) =
-    rows.toSeq.toDF("symbol", "last_close", "last_atr")
-
-  test("reconcile 4-case matrix") {
-    val local = Reconcile.Snapshot(Some("2026-02-02T09:30:00"), state(("A", 10.0, 1.0)))
-    val sinkBehind = Reconcile.Snapshot(Some("2026-02-02T09:25:00"), state(("A", 9.0, 1.0)))
-    val sinkAhead = Reconcile.Snapshot(Some("2026-02-02T09:35:00"), state(("A", 11.0, 1.0)))
-
-    assert(Reconcile.decide(None, None).source === Reconcile.Fresh)
-    assert(Reconcile.decide(None, Some(sinkAhead)).source === Reconcile.FromSink)
-    assert(Reconcile.decide(Some(local), None).source === Reconcile.FromLocal)
-    assert(Reconcile.decide(Some(local), Some(sinkBehind)).source === Reconcile.FromLocal)
-    assert(Reconcile.decide(Some(local), Some(sinkAhead)).source === Reconcile.FromSink)
-    assert(Reconcile.decide(Some(local), Some(local)).source === Reconcile.FromLocal) // consistent
-    // one-sided window knowledge: the side with evidence wins
-    val noWindowLocal = Reconcile.Snapshot(None, state(("A", 1.0, 1.0)))
-    assert(Reconcile.decide(Some(noWindowLocal), Some(sinkAhead)).source === Reconcile.FromSink)
-    val noWindowSink = Reconcile.Snapshot(None, state(("A", 2.0, 2.0)))
-    assert(Reconcile.decide(Some(local), Some(noWindowSink)).source === Reconcile.FromLocal)
-  }
-
-  test("divergence audit counts |Δatr| > 1e-4 only") {
-    val l = state(("A", 1.0, 1.0000), ("B", 1.0, 2.0), ("C", 1.0, 3.0))
-    val s = state(("A", 9.9, 1.00005), ("B", 9.9, 2.5), ("D", 9.9, 4.0))
-    assert(Reconcile.divergences(l, s) === 1L) // only B; A within tol, C/D unmatched
-  }
-
-  test("resolve merges winner-first with full-outer coverage") {
-    val local = Reconcile.Snapshot(Some("w2"), state(("A", 10.0, 1.0), ("B", 20.0, 2.0)))
-    val sink = Reconcile.Snapshot(Some("w1"), state(("B", 99.0, 9.0), ("C", 30.0, 3.0)))
-    val d = Reconcile.decide(Some(local), Some(sink))
-    val merged = Reconcile.resolve(d, Some(local), Some(sink)).get
-      .as[(String, Double, Double)].collect().sortBy(_._1)
-    assert(merged.toSeq === Seq(("A", 10.0, 1.0), ("B", 20.0, 2.0), ("C", 30.0, 3.0)))
-  }
 
   test("retry policy: exponential growth, cap, jitter bounds, alert ladder") {
     val cfg = RetryPolicy.Config()
@@ -57,49 +21,6 @@ class RecoverSpec extends AnyFunSuite {
     assert(RetryPolicy.alertFor(cfg, 3) === RetryPolicy.Critical)
     assert(RetryPolicy.alertFor(cfg, 10) === RetryPolicy.Exhausted)
     assert(!RetryPolicy.canRetry(cfg, 10))
-  }
-
-  test("checkpoint store: round-trip, rotation keep-3, corrupt-primary fallback") {
-    import graft.model.AtrState
-    import graft.recover.CheckpointStore
-    import graft.recover.CheckpointStore.Checkpoint
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    def cp(w: String) = Checkpoint(Some(w),
-      Map("RELIANCE" -> AtrState(Some(2050.25), Some(13.4567), List(1.5, 2.0), 20),
-          "TCS" -> AtrState(Some(3311.0), None, List(0.5), 3)),
-      savedAt = s"$w+z", sheetsWriteConfirmed = true)
-    CheckpointStore.save(dir, cp("2026-02-02T09:15:00"))
-    CheckpointStore.save(dir, cp("2026-02-02T09:20:00"))
-    CheckpointStore.save(dir, cp("2026-02-02T09:25:00"))
-    CheckpointStore.save(dir, cp("2026-02-02T09:30:00"))
-    // keep=3 counts BACKUPS (reference MAX_BACKUPS): primary + 3 on disk,
-    // named checkpoint.json / checkpoint_1..3.json like the reference layout
-    assert(CheckpointStore.generations(dir).size === 4)
-    assert(CheckpointStore.generations(dir).map(_.getFileName.toString) ===
-      Seq("checkpoint.json", "checkpoint_1.json", "checkpoint_2.json", "checkpoint_3.json"))
-    // legacy checkpoint.<n>.json backups from the pre-rename layout still
-    // load as fallback generations and migrate on the next save
-    val legacyDir = java.nio.file.Files.createTempDirectory("graft-ckpt-legacy").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(legacyDir, "checkpoint.1.json"),
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, "checkpoint_1.json")))
-    assert(CheckpointStore.load(legacyDir).isDefined)
-    CheckpointStore.save(legacyDir, cp("2026-02-02T09:35:00"))
-    val names = new java.io.File(legacyDir).listFiles().map(_.getName).sorted
-    assert(!names.contains("checkpoint.1.json"))
-    assert(names.contains("checkpoint_2.json")) // migrated legacy rotated to gen 2
-    val loaded = CheckpointStore.load(dir).get
-    assert(loaded.lastWindow.contains("2026-02-02T09:30:00"))
-    assert(loaded.atrState("RELIANCE") ===
-      AtrState(Some(2050.25), Some(13.4567), List(1.5, 2.0), 20))
-    assert(loaded.atrState("TCS").prevAtr.isEmpty)
-    assert(loaded.sheetsWriteConfirmed)
-    // corrupt the primary → loader falls back to the previous generation
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "checkpoint.json"), "{not json")
-    val fallback = CheckpointStore.load(dir).get
-    assert(fallback.lastWindow.contains("2026-02-02T09:25:00"))
   }
 
   test("edge format: 13 string columns, null→empty, bool→TRUE/FALSE") {

@@ -40,34 +40,6 @@ class SchemasSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("column order"))
   }
 
-  test("schema evolution: additive columns read both directions, type drift rejects") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evo").toString + "/atr_state"
-    // a v0 engine wrote the table before `updated_at` existed
-    val v0 = Seq(("T", 1.0, 0.5, "2026-02-02T09:15:00"))
-      .toDF("ticker", "last_close", "last_atr", "last_timestamp")
-    v0.write.parquet(dir)
-    // a newer engine appended files carrying an extra on-disk column too
-    val v9 = Seq(("U", 2.0, 0.6, "2026-02-02T09:20:00", "2026-02-02T16:00:00", "rogue"))
-      .toDF("ticker", "last_close", "last_atr", "last_timestamp", "updated_at", "extra")
-    v9.write.mode("append").parquet(dir)
-    val back = Schemas.readEvolved(spark, dir, "atr_state")
-    // read-back is exactly the declared shape: missing column as nulls,
-    // undeclared extras dropped
-    assert(back.columns.toSeq === Schemas.AtrState.fieldNames.toSeq)
-    val rows = back.orderBy("ticker")
-      .select("ticker", "updated_at").as[(String, Option[String])].collect()
-    assert(rows === Array(("T", None), ("U", Some("2026-02-02T16:00:00"))))
-
-    // type drift fails fast with the column named
-    val driftDir = java.nio.file.Files.createTempDirectory("graft-evo").toString + "/atr_state"
-    v0.withColumn("last_close", col("last_close").cast("string")).write.parquet(driftDir)
-    val e = intercept[IllegalArgumentException](
-      Schemas.readEvolved(spark, driftDir, "atr_state"))
-    assert(e.getMessage.contains("last_close"))
-    assert(e.getMessage.contains("explicit migration"))
-  }
-
   test("schema versions: current market_data declaration is the dt-partitioned v2") {
     val (v, schema) = Schemas.current("market_data")
     assert(v === 2)
@@ -75,21 +47,6 @@ class SchemasSpec extends AnyFunSuite {
     // dt is declared DATE — partition-dir values read back type-inferred
     assert(schema("dt").dataType === org.apache.spark.sql.types.DateType)
     assert(Schemas.Versions("market_data").head._2 === Schemas.MarketData)
-  }
-
-  test("readEvolved accepts the engine's own dt-partitioned market_data sink") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evo2").toString + "/market_data"
-    val edge = Seq(Tuple1(0)).toDF("z").select(
-      EdgeFormat.Header.map(n => lit("x").as(n)): _*)
-      .withColumn("id", lit("SYM_20260202_0915"))
-      .withColumn("dt", lit("2026-02-02"))
-    graft.sink.IdempotentSink.appendDedup(edge, dir, partitionCol = Some("dt"))
-    val back = Schemas.readEvolved(spark, dir, "market_data")
-    assert(back.columns.toSeq === Schemas.current("market_data")._2.fieldNames.toSeq)
-    assert(back.schema("dt").dataType === org.apache.spark.sql.types.DateType)
-    assert(back.count() === 1L)
-    assert(back.select("dt").head().getDate(0).toString === "2026-02-02")
   }
 
   test("metadata table writes once with the reference's 4 rows") {
@@ -101,12 +58,15 @@ class SchemasSpec extends AnyFunSuite {
     // the ledger value tracks Versions — market_data is at v2 (dt column)
     assert(Schemas.ledgerVersion ===
       "atr_state=1,market_data=2,metadata=1,system_log=1")
-    // the reference's literal stays available behind the compat flag
-    assert(Schemas.metadataRows(2, legacySchemaVersion = true).toMap
-      .apply("schema_version") === "1.0")
     // second init is a no-op, not an overwrite
     Schemas.initMetadata(spark, dir, tickersCount = 99)
     assert(spark.read.parquet(dir).as[(String, String)].collect().toMap
       .apply("tickers_count") === "2")
+    // a directory holding only a torn write's _temporary is not written yet
+    val torn = java.nio.file.Files.createTempDirectory("graft-meta").toString + "/metadata"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(torn, "_temporary", "0"))
+    Schemas.initMetadata(spark, torn, tickersCount = 3)
+    assert(spark.read.parquet(torn).as[(String, String)].collect().toMap
+      .apply("tickers_count") === "3")
   }
 }

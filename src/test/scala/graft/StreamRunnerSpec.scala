@@ -1,7 +1,7 @@
 package graft
 
 import graft.app.StreamRunner
-import graft.recover.{Reconcile, RetryPolicy}
+import graft.recover.RetryPolicy
 import graft.streaming.StreamingPipeline
 import graft.time.TradingCalendar
 import java.nio.file.{Files, Paths}
@@ -57,6 +57,27 @@ class StreamRunnerSpec extends AnyFunSuite {
   private def sinkRows(dir: String): Set[Seq[Any]] =
     spark.read.parquet(dir).drop("created_at", "dt").collect().map(_.toSeq).toSet
 
+  test("startup audit: checkpoint x sink matrix, no stream started") {
+    val root = Files.createTempDirectory("graft-audit").toString
+    def cell(ckpt: Boolean, sink: Boolean): StreamRunner.Source = {
+      val dir = Files.createTempDirectory(Paths.get(root), "cell").toString
+      // an empty offsets/ dir is no checkpoint: only a written offset counts
+      val offsets = Files.createDirectories(Paths.get(dir, "ckpt", "offsets"))
+      if (ckpt) Files.write(offsets.resolve("0"), "v1".getBytes("UTF-8"))
+      if (sink) Seq(("A_20260202_0915", "2026-02-02T09:15:00"))
+        .toDF("id", "timestamp").write.parquet(s"$dir/sink")
+      val cfg = StreamRunner.Config(s"$dir/sink", s"$dir/dead", s"$dir/ckpt", s"$dir/log")
+      val d = StreamRunner.startupAudit(spark, cfg)
+      if (sink) assert(d.reason.contains("2026-02-02T09:15:00"), d.reason)
+      d.source
+    }
+    assert(cell(ckpt = false, sink = false) === StreamRunner.Fresh)
+    assert(cell(ckpt = false, sink = true) === StreamRunner.FromSink)
+    assert(cell(ckpt = true, sink = false) === StreamRunner.FromLocal)
+    assert(cell(ckpt = true, sink = true) === StreamRunner.FromLocal)
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("runner e2e: two gated sessions, mid-day restart — no dupes, census-complete, audited") {
     val root = Files.createTempDirectory("graft-runner").toString
     val dim = instruments.toDS()
@@ -84,7 +105,7 @@ class StreamRunnerSpec extends AnyFunSuite {
     first.toDF("tk", "ltp", "exchange_timestamp", "seq")
       .coalesce(1).write.mode("append").parquet(srcDir)
     val r1 = startRunner("2026-02-02")
-    assert(r1.decision.source === Reconcile.Fresh)
+    assert(r1.decision.source === StreamRunner.Fresh)
     r1.query.processAllAvailable()
     r1.stop() // crash mid-day-1: all enrich state lives in the checkpoint
 
@@ -93,7 +114,7 @@ class StreamRunnerSpec extends AnyFunSuite {
     (rest ++ day2 ++ sentinel).toDF("tk", "ltp", "exchange_timestamp", "seq")
       .coalesce(1).write.mode("append").parquet(srcDir)
     val r2 = startRunner("2026-02-03")
-    assert(r2.decision.source === Reconcile.FromLocal)
+    assert(r2.decision.source === StreamRunner.FromLocal)
     try {
       r2.query.processAllAvailable()
       val got = sinkRows(s"$root/sink")

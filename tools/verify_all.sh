@@ -6,10 +6,13 @@
 #
 # Runs, exiting non-zero on the FIRST failure:
 #   1. sbt compile + full test suite
-#   2. graft.Verify + ORDERED oracle_check on sf0.001, sf0.01, and the
+#   2. the benchmark program (perfbench/) compiled against the engine, so a
+#      deleted or renamed engine signature it uses fails here, before any
+#      bench run (SPARK_HOME defaults to /opt/spark)
+#   3. graft.Verify + ORDERED oracle_check on sf0.001, sf0.01, and the
 #      adversarial layout fixture (generated if absent)
-#   3. type_audit.py on sf0.01 (zero flags required)
-#   4. test_type_gate.py (pins the HUGEINT red-pre/green-post class)
+#   4. type_audit.py on sf0.01 (zero flags required)
+#   5. test_type_gate.py (pins the HUGEINT red-pre/green-post class)
 #
 # Not included (run separately, they take ~10 min each): the sf0.1 bench
 # (graft.Bench) and the x50 scale probes (graft.ScaleCheck).
@@ -21,10 +24,13 @@ WORK="${1:-/tmp/verify_all}"
 TESTDATA="${TESTDATA_DIR:-/root/testdata}"
 mkdir -p "$WORK"
 
-echo "== 1/4 sbt compile + test =="
+echo "== 1/5 sbt compile + test =="
 sbt -batch compile test
 
-echo "== 2/4 oracle sweeps (ordered) =="
+echo "== 2/5 perfbench compiles against the engine =="
+(cd perfbench && SPARK_HOME="${SPARK_HOME:-/opt/spark}" sbt -batch -Dsbt.offline=true compile)
+
+echo "== 3/5 oracle sweeps (ordered) =="
 if [ ! -d testdata-adv ]; then
   python3 tools/make_adversarial.py
 fi
@@ -45,10 +51,10 @@ if [ "${VERIFY_SF01:-1}" = "1" ]; then
   python3 tools/oracle_check.py "$TESTDATA/sf0.1" "$WORK/sf0.1" --ordered
 fi
 
-echo "== 3/4 type audit (sf0.01) =="
+echo "== 4/5 type audit (sf0.01) =="
 python3 tools/type_audit.py "$TESTDATA/sf0.01" "$WORK/sf0.01"
 
-echo "== 4/4 type-gate regression pin =="
+echo "== 5/5 type-gate regression pin =="
 python3 tools/test_type_gate.py
 
 echo "== verify_all: ALL GREEN =="
