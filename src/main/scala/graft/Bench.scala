@@ -1,8 +1,9 @@
 package graft
 
+import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark main: runs every SparkEntry query on
+/** Per-round benchmark main: runs every registry entry on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
   * Each query is forced with a `noop`-format write, not `count()`: count
@@ -30,14 +31,16 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // oracle queries plus the bench-only production-hash twins (x*): the
-    // md5-vs-xxhash64 gap is measured every round, not asserted
-    val benchQueries = SparkEntry.queries ++ SparkEntry.prodVariants
+    // the cores this JVM may use and the parallelism Spark ran with,
+    // recorded beside the numbers: a SPARK_GRAFT_CPUS above the box's
+    // cores shows as parallelism > cpus, and medians from differently
+    // sized runs are not comparable
+    val runShape = s""""cpus":${Runtime.getRuntime.availableProcessors},""" +
+      s""""parallelism":${spark.sparkContext.defaultParallelism}"""
 
     def force(name: String): Double = {
       val t0 = System.nanoTime()
-      try benchQueries(name)(spark, sfDir)
+      try Registry.all(name).build(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); return -1.0 }
       (System.nanoTime() - t0) / 1e9
@@ -74,10 +77,12 @@ object Bench {
     // iteration only; the driver never sets it
     val only: Option[Seq[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
-    val names = benchQueries.keys.toSeq.sorted
+    // oracle queries plus the bench-only production-hash twins (x*): the
+    // md5-vs-xxhash64 gap is measured every round, not asserted
+    val names = Registry.all.entries.map(_.name).sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
     names.foreach { n =>
-      try benchQueries(n)(spark, warmDir)
+      try Registry.all(n).build(spark, warmDir)
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
@@ -175,13 +180,13 @@ object Bench {
               .config("spark.ui.enabled", "false")
               .getOrCreate()
             s2.sparkContext.setLogLevel("WARN")
-            try benchQueries(n)(s2, warmDir)
+            try Registry.all(n).build(s2, warmDir)
               .write.format("noop").mode("overwrite").save()
             catch { case _: Throwable => () }
             val ts = (1 to 2).map { _ =>
               val t0 = System.nanoTime()
               try {
-                benchQueries(n)(s2, sfDir).write.format("noop").mode("overwrite").save()
+                Registry.all(n).build(s2, sfDir).write.format("noop").mode("overwrite").save()
                 (System.nanoTime() - t0) / 1e9
               } catch { case _: Throwable => -1.0 }
             }.toVector
@@ -212,13 +217,13 @@ object Bench {
         "\"" + n + "\":[" + ts.map(f3).mkString(",") + "]"
       }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
-        s"""{"sf":"$sfDir","iters":$iters,"box_start":{$boxStart},"box_end":{${boxState()}},""" +
+        s"""{"sf":"$sfDir","iters":$iters,$runShape,"box_start":{$boxStart},"box_end":{${boxState()}},""" +
           s""""pass_totals":$passTotals,"per_pass":$perQuery,""" +
           s""""per_pass_pinned_mb":$pins,"per_pass_load":$loads,"fresh_session":$fresh}""" + "\n")
     } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
     val (qj, omitted) = qsParts()
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qj,""" +
-      s""""omitted_fastest":$omitted,"sf":"$sfDir","iters":$iters,"pass_totals":$passTotals}"""
+      s""""omitted_fastest":$omitted,"sf":"$sfDir","iters":$iters,$runShape,"pass_totals":$passTotals}"""
     // the ONE parseable stdout line, printed as the very LAST thing the
     // process writes to stdout, AFTER spark.stop() (so no Spark shutdown
     // output can trail it) — build.sbt's StdoutOutput + showSuccess=false
@@ -229,7 +234,7 @@ object Bench {
     val out =
       if (line.length <= 1900) line
       else s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":{},""" +
-        s""""omitted_fastest":${names.length},"sf":"$sfDir","iters":$iters,"pass_totals":$passTotals}"""
+        s""""omitted_fastest":${names.length},"sf":"$sfDir","iters":$iters,$runShape,"pass_totals":$passTotals}"""
     spark.stop()
     println(out)
     System.out.flush()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `explain("formatted")` for the named queries (or all) —
@@ -9,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val names = if (args.length > 1) args.drop(1).toSeq else Registry.all.queries.map(_.name).sorted
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -25,7 +26,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      Registry.all(n).build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

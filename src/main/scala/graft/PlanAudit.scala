@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: physical scan census over every registered query — the
@@ -38,10 +39,10 @@ object PlanAudit {
 
     val tableRe = "([a-z_]+)\\.parquet".r
     var flagged = 0
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = Registry.all.queries.map(_.name).sorted
     names.foreach { n =>
       try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val df = Registry.all(n).build(spark, sfDir)
         val plan = df.queryExecution.executedPlan.toString
         val scanLines = plan.linesIterator
           .filter(l => l.contains("Scan parquet") || l.contains("FileScan parquet"))

@@ -1,9014 +1,23 @@
 package graft
 
 import graft.operators._
-import graft.sources.Multimodal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.queries.MarketQueries
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every operator from SURVEY.md §2 (and the training-data-pipeline
-  * extensions) is exposed as a named query over the driver tables, paired
-  * with equivalent DuckDB SQL in [[oracleSql]]. Numeric outputs are either
-  * exact (counts, min/max, decimal-summed-then-double) or rounded at a grid
-  * far above both engines' float noise, so hashes match bit-for-bit.
-  * Timestamps are always emitted as formatted strings — parquet µs vs ns
-  * physical types can never skew the compare.
+  * extensions) is exposed as a named query over the driver tables, each
+  * paired with equivalent DuckDB SQL in one [[graft.queries.Query]] value;
+  * [[graft.queries.Registry.all]] holds them, one file per operator family.
   */
 object SparkEntry {
-
-  private val WFmt = "yyyy-MM-dd HH:mm:ss"
-  private def wstr(c: Column): Column = date_format(c, WFmt)
-  private def dec(name: String): Column = col(name).cast("decimal(18,2)")
-
-  /** events as the tick stream: symbol=event_type, price=value, seq=event_id.
-    *
-    * Malformed ticks — null symbol, null ts, null or NaN price — are dropped
-    * at ingest on BOTH engine and oracle sides, the reference's
-    * null/invalid-field-drop contract (TickIngest.parse): a tick without a
-    * symbol cannot belong to a candle, a null symbol would otherwise spawn
-    * a phantom census symbol, and a NaN price poisons every aggregate.
-    */
-  private def ticks(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir).where(
-      col("event_type").isNotNull && col("ts").isNotNull &&
-        col("value").isNotNull && !isnan(col("value")))
-  private def candles(s: SparkSession, dir: String): DataFrame =
-    Ohlc.candles(ticks(s, dir))
-
-  /** The same malformed-tick drop for the oracle side. */
-  private val TickWhere =
-    "event_type IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)"
-
-  /** Shared DuckDB CTE chain producing the same candle set. */
-  private val CandleCte =
-    s"""ev AS (
-      |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type AS symbol, value FROM events
-      |  WHERE $TickWhere
-      |), ranked AS (
-      |  SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS window_start, symbol, value,
-      |         row_number() OVER (PARTITION BY symbol, time_bucket(INTERVAL 5 MINUTE, ts) ORDER BY ts, event_id) AS rn_a,
-      |         row_number() OVER (PARTITION BY symbol, time_bucket(INTERVAL 5 MINUTE, ts) ORDER BY ts DESC, event_id DESC) AS rn_d
-      |  FROM ev
-      |), candles AS (
-      |  SELECT window_start, symbol,
-      |         max(CASE WHEN rn_a = 1 THEN value END) AS open,
-      |         max(value) AS high,
-      |         min(value) AS low,
-      |         max(CASE WHEN rn_d = 1 THEN value END) AS close,
-      |         count(*) AS tick_count
-      |  FROM ranked GROUP BY window_start, symbol
-      |)""".stripMargin
-
-  /** Decimal-exact revenue term shared by the relational queries. */
-  private def revenueSum: Column =
-    sum(dec("l_extendedprice") * (lit(1) - dec("l_discount"))).cast("double")
-  private val RevenueSumSql =
-    "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)"
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Full reference pipeline: ticks → OHLC candles → gap-fill → Wilder ATR.
     */
   def entry(spark: SparkSession): DataFrame = {
-    val c = candles(spark, "/root/testdata/sf0.001")
+    val c = MarketQueries.candles(spark, "/root/testdata/sf0.001")
     Atr.enrich(GapFill.fillSessions(c)).toDF()
   }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ── relational core (scan/filter/agg/join/sort/limit, SURVEY §2.1-2.5/2.9) ──
-    "q01_pricing_summary" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .where(col("l_shipdate") <= lit("1999-09-01"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(dec("l_quantity")).cast("double").as("sum_qty"),
-          sum(dec("l_extendedprice")).cast("double").as("sum_base_price"),
-          revenueSum.as("sum_disc_price"),
-          (sum(dec("l_quantity")).cast("double") / count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-    "q02_filter_pushdown" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .where(col("l_shipdate") >= lit("1997-01-01") &&
-          col("l_shipdate") < lit("1998-01-01") &&
-          col("l_quantity") < 25 &&
-          col("l_discount").between(0.02, 0.06))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_extendedprice"), date_format(col("l_shipdate"), "yyyy-MM-dd").as("shipdate"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "q03_top_revenue_orders" -> ((s, dir) => {
-      Tables.customer(s, dir).where(col("c_mktsegment") === "BUILDING")
-        .join(Tables.orders(s, dir), col("c_custkey") === col("o_custkey"))
-        .where(col("o_orderdate") < lit("1998-01-01"))
-        .join(Tables.lineitem(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .where(col("l_shipdate") > lit("1997-01-01"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(revenueSum.as("revenue"))
-        .select(col("l_orderkey"), col("revenue"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"), col("o_orderpriority"))
-        .orderBy(col("revenue").desc, col("l_orderkey")).limit(10)
-    }),
-    "q04_broadcast_dim_join" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_type"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(dec("l_extendedprice")).cast("double").as("sum_price"),
-          max(col("l_quantity")).as("max_qty"))
-        .orderBy("p_brand", "p_type")
-    }),
-    "q05_region_volume" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.supplier(s, dir)),
-          col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(revenueSum.as("revenue"), count(lit(1)).as("n_lineitems"))
-        .orderBy("r_name", "n_name")
-    }),
-    "q06_first_match_dedup" -> ((s, dir) => {
-      val w = Window.partitionBy(col("p_brand")).orderBy(col("p_partkey"))
-      Tables.part(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("p_brand"), col("p_partkey"), col("p_name"))
-        .orderBy("p_brand")
-    }),
-    "q07_percentiles" -> ((s, dir) => {
-      Tables.customer(s, dir)
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          round(expr("percentile(c_acctbal, 0.5)"), 4).as("p50"),
-          round(expr("percentile(c_acctbal, 0.95)"), 4).as("p95"),
-          round(expr("percentile(c_acctbal, 0.99)"), 4).as("p99"),
-          max(col("c_acctbal")).as("max_bal"),
-          count(lit(1)).as("n"))
-        .orderBy("c_mktsegment")
-    }),
-    "q08_no_order_customers" -> ((s, dir) => {
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy("c_custkey")
-    }),
-
-    "q28_count_distinct" -> ((s, dir) => {
-      ticks(s, dir)
-        .groupBy(col("event_type").as("symbol"))
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n_events"))
-        .orderBy("symbol")
-    }),
-    "q29_pivot" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        // fill ONLY the pivot counts: a bare na.fill(0) would also rewrite
-        // a NULL user_id to 0, colliding with the genuine user 0
-        .na.fill(0L, Seq("click", "error", "purchase", "signup", "view"))
-        .select(col("user_id"), col("click").as("n_click"), col("error").as("n_error"),
-          col("purchase").as("n_purchase"), col("signup").as("n_signup"),
-          col("view").as("n_view"))
-        .orderBy(col("user_id").asc_nulls_last)
-    }),
-    "q25_set_ops" -> ((s, dir) => {
-      // EXCEPT/INTERSECT surface: customers with orders vs customers with
-      // high-value orders
-      val withOrders = Tables.orders(s, dir).select(col("o_custkey").as("c_custkey")).distinct()
-      val highValue = Tables.orders(s, dir).where(col("o_totalprice") > 200000.0)
-        .select(col("o_custkey").as("c_custkey")).distinct()
-      withOrders.except(highValue)
-        .join(Tables.customer(s, dir), "c_custkey")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy("c_custkey")
-    }),
-    "q26_ranking" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority")).orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(s, dir)
-        .withColumn("rnk", rank().over(w).cast("long"))
-        .withColumn("drnk", dense_rank().over(w).cast("long"))
-        .where(col("rnk") <= 5)
-        .select(col("o_orderpriority"), col("rnk"), col("drnk"),
-          col("o_orderkey"), col("o_totalprice"))
-        .orderBy("o_orderpriority", "rnk", "o_orderkey")
-    }),
-    "q27_rollup" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(dec("l_quantity")).cast("double").as("sum_qty"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-
-    // ── reference pipeline on the events stream (SURVEY §2.4-2.8) ──
-    "q10_ohlc_candles" -> ((s, dir) => {
-      candles(s, dir)
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"),
-          col("open"), col("high"), col("low"), col("close"), col("tick_count"))
-        .orderBy("window_start", "symbol")
-    }),
-    "q11_gap_fill" -> ((s, dir) => {
-      GapFill.fill(candles(s, dir))
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"),
-          col("open"), col("high"), col("low"), col("close"), col("tick_count"),
-          col("gap_filled"))
-        .orderBy("symbol", "window_start")
-    }),
-    "q12_true_range" -> ((s, dir) => {
-      val w = Window.partitionBy(col("symbol")).orderBy(col("window_start"))
-      candles(s, dir)
-        .withColumn("prev_close", lag(col("close"), 1).over(w))
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"),
-          round(when(col("prev_close").isNull, col("high") - col("low"))
-            .otherwise(greatest(col("high") - col("low"),
-              abs(col("high") - col("prev_close")),
-              abs(col("low") - col("prev_close")))), 4).as("tr"))
-        .orderBy("symbol", "window_start")
-    }),
-    "q13_atr_wilder" -> ((s, dir) => {
-      Atr.enrich(candles(s, dir)).toDF()
-        .select(col("window_start"), col("symbol"), col("tr"), col("atr"))
-        .orderBy("symbol", "window_start")
-    }),
-    "q14_row_ids" -> ((s, dir) => {
-      candles(s, dir)
-        .select(concat_ws("_", col("symbol"),
-          date_format(col("window_start"), "yyyyMMdd_HHmm")).as("id"),
-          col("symbol"), wstr(col("window_start")).as("window_start"))
-        .withColumn("parsed_symbol", regexp_extract(col("id"), "^(.*)_(\\d{8}_\\d{4})$", 1))
-        .withColumn("parsed_window", regexp_extract(col("id"), "^(.*)_(\\d{8}_\\d{4})$", 2))
-        .orderBy("id")
-    }),
-    "q15_dedup_antijoin" -> ((s, dir) => {
-      val ids = candles(s, dir).select(
-        concat_ws("_", col("symbol"),
-          date_format(col("window_start"), "yyyyMMdd_HHmm")).as("id"),
-        col("symbol"), col("window_start"), col("close"))
-      val sink = ids.where(dayofmonth(col("window_start")) <= 15).select("id")
-      ids.join(sink, Seq("id"), "left_anti")
-        .select(col("id"), col("symbol"), wstr(col("window_start")).as("window_start"), col("close"))
-        .orderBy("id")
-    }),
-    "q51_gap_fill_sessions" -> ((s, dir) =>
-      GapFill.fillSessions(candles(s, dir))
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"),
-          col("open"), col("high"), col("low"), col("close"), col("tick_count"),
-          col("gap_filled"))
-        .orderBy("symbol", "window_start")),
-    "q16_missing_census" -> ((s, dir) => {
-      GapFill.missingCensus(candles(s, dir))
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"))
-        .orderBy("symbol", "window_start")
-    }),
-    "q54_missing_census_sessions" -> ((s, dir) => {
-      GapFill.missingCensusSessions(candles(s, dir))
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"))
-        .orderBy("symbol", "window_start")
-    }),
-    "q17_sink_readback_max" -> ((s, dir) => {
-      ticks(s, dir)
-        .groupBy(col("event_type").as("symbol"))
-        .agg(wstr(max(col("ts"))).as("max_ts"), count(lit(1)).as("n"))
-        .orderBy("symbol")
-    }),
-    "q18_state_reconcile" -> ((s, dir) => {
-      val ev = ticks(s, dir)
-      def lastClose(df: DataFrame, name: String): DataFrame = {
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-        df.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-          .select(col("event_type").as("symbol"), col("value").as(name))
-      }
-      val a = lastClose(ev.where(col("ts") < lit("2024-01-16")), "close_a")
-      val b = lastClose(ev, "close_b")
-      a.join(b, Seq("symbol"), "full_outer")
-        .select(col("symbol"), col("close_a"), col("close_b"),
-          coalesce(col("close_b"), col("close_a")).as("resolved"),
-          (col("close_a").isNotNull && col("close_b").isNotNull &&
-            abs(col("close_a") - col("close_b")) > 0.0001).as("diverged"))
-        .orderBy("symbol")
-    }),
-    "q19_session_filter" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .where((hour(col("ts")) * 60 + minute(col("ts"))).between(555, 929) &&
-          dayofweek(col("ts")).between(2, 6))
-        .select(col("event_id"), col("event_type"), col("value"), wstr(col("ts")).as("ts_s"))
-        .orderBy("event_id")
-    }),
-    "q20_sessionize" -> ((s, dir) => {
-      val wo = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir)
-        // an event with no timestamp cannot be ordered into a session —
-        // and engines disagree on where NULL sorts (Spark first, DuckDB
-        // last), so the contract drops it on both sides
-        .where(col("ts").isNotNull)
-        .withColumn("prev_us", lag(unix_micros(col("ts").cast("timestamp")), 1).over(wo))
-        .withColumn("is_new",
-          when(col("prev_us").isNull ||
-            unix_micros(col("ts").cast("timestamp")) - col("prev_us") > 1800000000L, 1L)
-            .otherwise(0L))
-        .withColumn("session_id",
-          sum(col("is_new")).over(wo.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(wstr(min(col("ts"))).as("session_start"), wstr(max(col("ts"))).as("session_end"),
-          count(lit(1)).as("n_events"),
-          // NaN is junk, not revenue: summed as NULL on both sides (a NaN
-          // would also fail DuckDB's decimal cast outright)
-          sum(when(!isnan(col("value")), dec("value"))).cast("double")
-            .as("total_value"))
-        // null user_id is a real session key; pin its sort to DuckDB's
-        // NULLS LAST (Spark ascending default is NULLS FIRST)
-        .orderBy(col("user_id").asc_nulls_last, col("session_id"))
-    }),
-    "q24_session_window" -> ((s, dir) => {
-      // Spark's NATIVE session-window operator (vs q20's manual lag-based
-      // construction — the oracle mirrors its merge semantics: a gap of
-      // exactly 30 min starts a new session)
-      Tables.events(s, dir)
-        .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(!isnan(col("value")), dec("value"))).cast("double")
-            .as("total_value"))
-        .select(col("user_id"), wstr(col("sw.start")).as("session_start"),
-          wstr(col("sw.end")).as("session_end"), col("n_events"), col("total_value"))
-        .orderBy(col("user_id").asc_nulls_last, col("session_start"))
-    }),
-    "q21_moving_avg" -> ((s, dir) => {
-      val w = Window.partitionBy(col("symbol")).orderBy(col("window_start"))
-        .rowsBetween(-3, 0)
-      candles(s, dir)
-        .select(col("symbol"), wstr(col("window_start")).as("window_start"), col("close"),
-          round(avg(col("close")).over(w), 4).as("ma4"))
-        .orderBy("symbol", "window_start")
-    }),
-
-    "q09_buffer_stats" -> ((s, dir) => {
-      candles(s, dir)
-        .groupBy(col("symbol"))
-        .agg(count(lit(1)).as("n_windows"),
-          sum(col("tick_count")).as("total_ticks"),
-          max(col("tick_count")).as("max_ticks"))
-        .orderBy("symbol")
-    }),
-    "q22_atr_jumps" -> ((s, dir) => {
-      Atr.jumpWarnings(Atr.enrich(candles(s, dir)).toDF(), factor = 1.2)
-        .orderBy("symbol", "window_start")
-    }),
-    "q23_ohlc_violations" -> ((s, dir) => {
-      Ohlc.invariantViolations(candles(s, dir))
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"),
-          col("open"), col("high"), col("low"), col("close"))
-        .orderBy("symbol", "window_start")
-    }),
-    // oracle instantiation: md5-portable base at 16×8 so DuckDB can replay
-    // the MinHash arithmetic; production default is the xxhash base (spec-
-    // covered to keep the same survivor set on the fixture corpus)
-    "q52_corpus_prep" -> ((s, dir) =>
-      CorpusPrep.prepare(Tables.documents(s, dir), numPerms = 16, bands = 8,
-        baseHash = Dedup.md5Base).orderBy("doc_id")),
-    "q49_salted_agg" -> ((s, dir) => {
-      // two-phase salted aggregation on a 5-key (inherently hot-keyed)
-      // groupBy: same answer as the plain aggregate, but every hot key is
-      // spread over 32 sub-partitions in the first shuffle (Skew.scala)
-      Skew.saltedAgg(
-        ticks(s, dir).select(col("event_type").as("symbol"), col("value")),
-        Seq("symbol"), salts = 32)(Seq(
-        ("n_events", count(lit(1)), c => sum(col(c))),
-        ("total_value", sum(dec("value")), c => sum(col(c)))))
-        .select(col("symbol"), col("n_events"),
-          col("total_value").cast("double").as("total_value"))
-        .orderBy("symbol")
-    }),
-    "q50_full_pipeline" -> ((s, dir) => {
-      // one trading day, like the reference's per-session operation — also
-      // bounds the oracle's ATR recursion depth to windows-per-day
-      val day = ticks(s, dir)
-        .where(col("ts") >= lit("2024-01-05") && col("ts") < lit("2024-01-06"))
-      graft.sink.EdgeFormat.sheetRows(
-        Atr.enrich(GapFill.fillSessions(Ohlc.candles(day))).toDF(),
-        createdAt = "2026-01-01T00:00:00")
-        .orderBy("id")
-    }),
-
-    // ── text analysis / dedup / similarity (training-data extensions) ──
-    "q30_token_stats" -> ((s, dir) =>
-      TextAnalysis.tokenStats(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q31_quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q32_lang_id" -> ((s, dir) =>
-      TextAnalysis.languageId(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q33_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprint(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q34_dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(Tables.documents(s, dir))
-        .orderBy(col("fingerprint").asc_nulls_last)), // null text -> null fp
-    "q35_jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardPairs(Tables.documents(s, dir)).orderBy("doc_a", "doc_b")),
-    "q38_minhash_portable" -> ((s, dir) =>
-      Dedup.minhashPortable(Tables.documents(s, dir)).orderBy("doc_id", "perm")),
-    "q39_simhash_portable" -> ((s, dir) =>
-      Dedup.simhashPortable(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q46_minhash_lsh_pairs" -> ((s, dir) =>
-      Dedup.minhashLshPairsPortable(Tables.documents(s, dir)).orderBy("doc_a", "doc_b")),
-    "q36_knn_cosine" -> ((s, dir) =>
-      Similarity.knnCosineBrute(Tables.embeddings(s, dir), pmod(col("vec_id"), lit(100)) === 0)
-        .orderBy("query_id", "rnk")),
-    "q37_embedding_dups" -> ((s, dir) =>
-      Similarity.cosineDupPairsBlocked(Tables.embeddings(s, dir), threshold = 0.3)
-        .orderBy("vec_a", "vec_b")),
-    "q47_embedding_dups_lsh" -> ((s, dir) =>
-      Similarity.cosineDupPairsLsh(Tables.embeddings(s, dir), threshold = 0.3)
-        .orderBy("vec_a", "vec_b")),
-
-    // the production LSH code path (linear-permutation signatures +
-    // banding/candidate-join/estimation) at production parameters (64 perms
-    // × 16 bands), instantiated with the md5-portable base hash so the
-    // whole path is oracle-checked; the xxhash64 instantiation of the SAME
-    // code is spec-covered
-    "q40_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLshPairs(Tables.documents(s, dir), numPerms = 64, bands = 16,
-        threshold = 0.2, baseHash = Dedup.md5Base)
-        .orderBy("doc_a", "doc_b")),
-    "q41_simhash" -> ((s, dir) =>
-      Dedup.simhash64Portable(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q48_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairsPortable(Tables.documents(s, dir)).orderBy("doc_a", "doc_b")),
-    "q53_dup_clusters" -> ((s, dir) =>
-      Dedup.dupClusters(
-        Dedup.minhashLshPairs(Tables.documents(s, dir), numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
-        .orderBy("doc_id")),
-
-    // ── ANN operators: Spark-native plans whose oracles replay the same
-    // plan-time literal hyperplanes/centroids in SQL — fully hash-checked
-    // (green in CORRECTNESS_r02), not rows-only ──
-    "q42_ann_lsh" -> ((s, dir) =>
-      Similarity.annLshTopK(Tables.embeddings(s, dir), pmod(col("vec_id"), lit(100)) === 0)
-        .orderBy("query_id", "rnk")),
-    "q44_ann_ivf" -> ((s, dir) =>
-      Similarity.annIvfTopK(Tables.embeddings(s, dir), pmod(col("vec_id"), lit(100)) === 0)
-        .orderBy("query_id", "rnk")),
-    // real ImageIO pixel decode of fixture PNGs; the oracle recomputes
-    // width/height/brightness from the same md5-derived pixel bytes, so a
-    // faithful PNG round-trip is what hash-matching proves (n_bytes and
-    // checksum are encoder-dependent → left out of the oracle projection)
-    "q43_media_features" -> ((s, dir) =>
-      Multimodal.extractFeatures(Multimodal.fromDocuments(Tables.documents(s, dir)))
-        .toDF()
-        .select(col("media_id"), col("format"), col("width"), col("height"), col("brightness"))
-        .orderBy("media_id")),
-    "q45_winnowing" -> ((s, dir) =>
-      // exploded to scalar (doc_id, fingerprint) rows so the driver's
-      // column-sorting compare can hash them (arrays are unhashable there)
-      TextAnalysis.winnowingFingerprints(Tables.documents(s, dir))
-        .select(col("doc_id"), explode(col("fingerprints")).as("fingerprint"))
-        .orderBy("doc_id", "fingerprint")),
-    "q55_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionStats(Tables.documents(s, dir)).orderBy("doc_id")),
-    // pseudo-benchmark split: docs with doc_id % 7 == 0 play the eval set
-    "q56_decontamination" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.contamination(
-        docs.where(pmod(col("doc_id"), lit(7)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(7)) === 0))
-        .orderBy("doc_id")
-    }),
-    "q57_quantize_int8" -> ((s, dir) =>
-      Similarity.quantizeInt8(Tables.embeddings(s, dir)).orderBy("vec_id", "i")),
-    "q58_vocab_topk" -> ((s, dir) =>
-      TextAnalysis.vocab(Tables.documents(s, dir)).orderBy(desc("n"), col("token"))),
-    // real javax.sound.sampled WAV round-trip; the oracle recomputes the
-    // header fields from the id-derived shape and the PCM stats from the
-    // same md5-derived sample bytes (the q43 pattern, second modality;
-    // n_bytes is container-dependent → left out of the oracle projection)
-    "q59_audio_features" -> ((s, dir) =>
-      Multimodal.extractAudioFeatures(Multimodal.audioFromDocuments(Tables.documents(s, dir)))
-        .toDF()
-        .select(col("media_id"), col("format"), col("sample_rate"), col("channels"),
-          col("frames"), col("duration_sec"), col("mean_abs"), col("peak_abs"))
-        .orderBy("media_id")),
-    // the synthetic corpus carries no natural PII, so the fixture plants
-    // deterministic id-derived PII spans in-plan (the q43/q59 pattern) and
-    // the oracle plants the same spans in SQL — the scan/redaction regexes
-    // themselves are then genuinely cross-checked against DuckDB's RE2
-    "q60_pii_scan" -> ((s, dir) =>
-      TextAnalysis.piiScan(piiDecorated(Tables.documents(s, dir))).orderBy("doc_id")),
-    "q61_chunking" -> ((s, dir) =>
-      TextAnalysis.chunkDocs(Tables.documents(s, dir)).orderBy("doc_id", "chunk_id")),
-    "q62_hash_split" -> ((s, dir) =>
-      TextAnalysis.hashSplit(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q63_pii_redact" -> ((s, dir) =>
-      TextAnalysis.redactPii(piiDecorated(Tables.documents(s, dir))).orderBy("doc_id")),
-    // the memorization-window audit: 13-token spans in ≥2 distinct docs
-    "q64_repeated_ngrams" -> ((s, dir) =>
-      TextAnalysis.repeatedNgrams(Tables.documents(s, dir)).orderBy("shingle")),
-    // vocabSize 16 < the corpus's 31 distinct tokens, so real OOV mass
-    // exists and the boundary tie-break is genuinely exercised
-    "q65_oov_rate" -> ((s, dir) =>
-      TextAnalysis.oovRate(Tables.documents(s, dir), vocabSize = 16).orderBy("doc_id")),
-    // the synthetic corpus has no newlines, so the fixture derives 8-token
-    // lines in-plan (the q43/q59/q60 pattern) — the corpus's real repeated
-    // token spans then surface as genuine boilerplate lines (df >= 2)
-    "q66_line_dedup" -> ((s, dir) =>
-      TextAnalysis.dedupLines(lineified(Tables.documents(s, dir))).orderBy("doc_id")),
-    "q67_quality_classifier" -> ((s, dir) =>
-      TextAnalysis.hashedClassifierScore(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q68_mixture_sample" -> ((s, dir) =>
-      TextAnalysis.mixtureSample(Tables.documents(s, dir), MixtureRates, defaultRate = 0.1)
-        .orderBy("doc_id")),
-    // threshold 0.3 sits at the corpus's within-cluster p99 cosine, so the
-    // keep verdict splits genuinely (≈1/3 of vectors marked dups at sf0.001)
-    "q69_semantic_dedup" -> ((s, dir) =>
-      Similarity.semanticDedup(Tables.embeddings(s, dir), k = 8, threshold = 0.3)
-        .orderBy("vec_id")),
-    // cross-split leakage: the corpus's repeated 13-token spans genuinely
-    // straddle the 90/10 hash split (4 contaminated train docs at sf0.001)
-    "q70_split_contamination" -> ((s, dir) =>
-      TextAnalysis.splitContamination(Tables.documents(s, dir)).orderBy("doc_id")),
-    // the full fused gate stack over the PII-decorated corpus (so the PII
-    // gate is genuinely active: ~54% of docs carry a planted span); the
-    // classifier cut sits under the corpus's score median and the mixture
-    // rates are high, so every gate drops some docs but none annihilates
-    "q71_corpus_prep_full" -> ((s, dir) =>
-      CorpusPrep.prepareFull(piiDecorated(Tables.documents(s, dir)),
-        numPerms = 16, bands = 8, baseHash = Dedup.md5Base,
-        classifierThreshold = -0.2,
-        rates = MixtureRates, defaultRate = 0.75).orderBy("doc_id")),
-    // contextLen 512 ~ corpus mean doc ≈ 120 tokens, so packs hold several
-    // docs and boundary straddles genuinely occur; bucketSize 64 forces the
-    // two-phase prefix sum through MANY buckets (the scale path), not one
-    "q72_pack_plan" -> ((s, dir) =>
-      TextAnalysis.packDocs(Tables.documents(s, dir), contextLen = 512,
-        bucketSize = 64).orderBy("doc_id")),
-    "q73_composition_report" -> ((s, dir) =>
-      TextAnalysis.compositionReport(piiDecorated(Tables.documents(s, dir)))
-        .orderBy(col("source").asc_nulls_last, col("split").asc_nulls_last)),
-    // 12k of the corpus's 27,939 tokens: the budget genuinely cuts ~57%
-    // of docs and the straddling doc is exercised
-    "q74_token_budget" -> ((s, dir) =>
-      TextAnalysis.tokenBudgetSample(Tables.documents(s, dir),
-        budgetTokens = 12000L).orderBy("doc_id")),
-    // o_totalprice profiled as DECIMAL(12,2): double min/max rendered as
-    // strings would hang on shortest-round-trip formatting agreement
-    // between engines; decimals render identically by construction
-    "q75_profile" -> ((s, dir) =>
-      Profile.profile(
-        Tables.orders(s, dir)
-          .withColumn("o_totalprice", col("o_totalprice").cast("decimal(12,2)")),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority")).orderBy("col_name")),
-    // every tick joined to its prevailing candle (the window it falls in
-    // or the latest before it) — oracle is DuckDB's NATIVE ASOF JOIN, a
-    // genuinely independent implementation of the semantics
-    "q76_asof_join" -> ((s, dir) => {
-      // the probe side is the TICK stream: a null-ts event has no "as
-      // of" instant, and a null-symbol / null-or-NaN-price event is not
-      // a tick (the ingest drop contract) — filtered on BOTH sides
-      val probes = ticks(s, dir)
-        .select(col("event_id"), col("ts"),
-          col("event_type").as("symbol"), col("value"))
-      AsOf.asofJoin(probes, candles(s, dir), key = "symbol",
-        leftTs = "ts", rightTs = "window_start",
-        valueCols = Seq("window_start", "close"))
-        .select(col("event_id"), col("symbol"),
-          unix_micros(col("ts")).as("ts_us"), col("value").as("price"),
-          wstr(col("window_start")).as("window_start"), col("close"))
-        .orderBy("event_id")
-    }),
-    // exact decile calibration of the quality score: 4dp rounding bounds
-    // the value cardinality, so order statistics reduce to counting
-    "q77_quality_deciles" -> ((s, dir) =>
-      Stats.quantileBuckets(
-        Tables.documents(s, dir).select(col("doc_id"),
-          TextAnalysis.qualityExpr(col("text")).as("quality")),
-        valueCol = "quality", k = 10, bucketCol = "decile",
-        pinInput = true) // quality tokenizes every doc — score once, not twice
-        .orderBy("doc_id")),
-    // q70 detects split leakage; this PREVENTS it — same LSH clusters as
-    // q53, split drawn from the cluster canonical so members never straddle
-    "q78_cluster_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.clusterAwareSplit(docs,
-        Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
-        .orderBy("doc_id")
-    }),
-    // q72's plan materialized: docs split exactly at pack boundaries,
-    // every pack but the last holds precisely 512 tokens
-    "q79_pack_sequences" -> ((s, dir) =>
-      TextAnalysis.packSequences(Tables.documents(s, dir), contextLen = 512,
-        bucketSize = 64).orderBy("pack_id")),
-    // third modality: metadata-driven frame sampling (700ms interval so
-    // frame numbers exercise the integer div; durations both under and
-    // over the 8-frame cap exist in the fixture)
-    "q80_frame_sample_plan" -> ((s, dir) =>
-      Multimodal.frameSamplePlan(
-        Multimodal.videoFromDocuments(Tables.documents(s, dir)))
-        .orderBy("media_id", "sample_idx")),
-    // per-doc novelty: the corpus's repeated spans (q64) turned into the
-    // curation signal — what fraction of each doc is new sequence
-    "q81_ngram_novelty" -> ((s, dir) =>
-      TextAnalysis.ngramNovelty(Tables.documents(s, dir)).orderBy("doc_id")),
-    // length octaves via integer bit-length, not float log2 (whose
-    // power-of-two boundaries round differently across libm builds)
-    "q82_length_histogram" -> ((s, dir) =>
-      TextAnalysis.lengthHistogram(Tables.documents(s, dir)).orderBy("bin")),
-    // corpus-relative TF-IDF top-5 per doc: the one transcendental (ln)
-    // rounded ONCE to integer micro-nats, every sum/product after it integer
-    "q83_tfidf_topk" -> ((s, dir) =>
-      TextAnalysis.tfidfTopK(Tables.documents(s, dir), k = 5)
-        .orderBy("doc_id", "rank")),
-    // unigram-LM surprisal = the perplexity-proxy quality filter (CCNet
-    // recipe): integer micro-nat sums, HALF_UP mean — order-free hashes
-    "q84_lm_score" -> ((s, dir) =>
-      TextAnalysis.lmScore(Tables.documents(s, dir)).orderBy("doc_id")),
-    // point-in-validity join: each purchase finds its containing signup
-    // session [ts, ts+4h) — asof reduction, NOT a range join; gaps yield
-    // NULL payloads (left semantics), overlap resolves latest-start-wins
-    "q85_interval_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val sessions = ev.where(col("event_type") === "signup")
-        .select(col("user_id").as("s_user"), col("ts").as("start_ts"),
-          (col("ts") + expr("INTERVAL 4 HOURS")).as("end_ts"),
-          col("event_id").as("session_id"), col("value").as("session_value"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      AsOf.intervalJoin(purchases,
-        sessions.withColumnRenamed("s_user", "user_id"),
-        key = "user_id", leftTs = "ts", start = "start_ts", end = "end_ts",
-        valueCols = Seq("session_id", "session_value"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value").as("amount"),
-          col("session_id"), col("session_value"))
-        .orderBy("event_id")
-    }),
-    // trailing-7-day distinct active users per day — two hash aggs via a
-    // bounded x7 map-side expansion; no range join, no collect_set window
-    "q86_rolling_active" -> ((s, dir) =>
-      Stats.rollingDistinctCount(Tables.events(s, dir),
-        tsCol = "ts", idCol = "user_id", windowDays = 7,
-        outCol = "active_users").orderBy("day")),
-    // ordered view->click->purchase funnel: per-step hash agg + user-key
-    // join fold, no per-user history ever materialized
-    "q87_funnel" -> ((s, dir) =>
-      Engagement.funnel(Tables.events(s, dir), userCol = "user_id",
-        tsCol = "ts", typeCol = "event_type",
-        steps = Seq("view", "click", "purchase")).orderBy("step_idx")),
-    // weekly cohort retention: (first-activity cohort x week offset)
-    // distinct users — two exchanges end-to-end, integral-div offsets
-    "q88_retention" -> ((s, dir) =>
-      Engagement.retention(Tables.events(s, dir), userCol = "user_id",
-        tsCol = "ts", periodDays = 7)
-        .orderBy("cohort_day", "period_offset")),
-    // contrastive hard negatives: top-k in the [0.05, 0.6) cosine band —
-    // informative-but-not-duplicate, banded on the 6dp-rounded cosine
-    "q89_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(Tables.embeddings(s, dir),
-        pmod(col("vec_id"), lit(50)) === 0, k = 10, lo = 0.05, hi = 0.6)
-        .orderBy("query_id", "rnk")),
-    // view->purchase conversion lag in hour buckets: integer micros div,
-    // exact bin edges; bucket dim bounded by the time span
-    "q90_conversion_lag" -> ((s, dir) =>
-      Engagement.conversionLag(Tables.events(s, dir), userCol = "user_id",
-        tsCol = "ts", typeCol = "event_type",
-        fromStep = "view", toStep = "purchase").orderBy("lag_bucket")),
-    // per-user activity deciles: quantileBuckets composed onto the event
-    // domain — integer event counts are a bounded measure by construction
-    "q91_activity_deciles" -> ((s, dir) =>
-      Stats.quantileBuckets(
-        Tables.events(s, dir).groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_events")),
-        valueCol = "n_events", k = 10, bucketCol = "decile",
-        pinInput = true) // per-user agg shuffles the event table — once, not twice
-        .orderBy(col("user_id").asc_nulls_last)),
-    // quality-aware canonicalization: dedup keeps each cluster's BEST
-    // member (max quality, min id on ties), not an arbitrary one;
-    // singletons are their own winners so keep is a full corpus verdict
-    "q92_best_of_cluster" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.bestOfCluster(
-        docs.select(col("doc_id"),
-          TextAnalysis.qualityExpr(col("text")).as("quality")),
-        Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)),
-        scoreCol = "quality").orderBy("doc_id")
-    }),
-    // curriculum phases: LM surprisal (q84) bucketed by exact counting
-    // quartiles (q77's machinery) — phase 1 = easiest, 4 = hardest
-    "q93_curriculum" -> ((s, dir) =>
-      Stats.quantileBuckets(
-        TextAnalysis.lmScore(Tables.documents(s, dir))
-          .select(col("doc_id"), col("avg_nll")),
-        valueCol = "avg_nll", k = 4, bucketCol = "phase",
-        pinInput = true) // lmScore tokenizes + joins the model — once, not twice
-        .orderBy("doc_id")),
-    // per-source quality cap (domain balancing): top-20 docs per source
-    // by quality — window per source, no global sort
-    "q94_source_cap" -> ((s, dir) =>
-      TextAnalysis.perSourceCap(Tables.documents(s, dir), n = 20)
-        .orderBy(col("source").asc_nulls_last, col("src_rank").asc_nulls_last)),
-    // event-flow transition matrix (Sankey/Markov input): per-user lead
-    // window + one pair agg; conditional probability in integer HALF_UP bp
-    "q95_transitions" -> ((s, dir) =>
-      Engagement.transitions(Tables.events(s, dir), userCol = "user_id",
-        tsCol = "ts", typeCol = "event_type", tieCol = "event_id")
-        .orderBy("from_type", "to_type")),
-    // publication manifest: per (split, source) counts + order-free
-    // content checksum — the integrity handshake a shipped dataset carries
-    "q96_manifest" -> ((s, dir) =>
-      TextAnalysis.datasetManifest(Tables.documents(s, dir))
-        .orderBy(col("split").asc_nulls_last, col("source").asc_nulls_last)),
-    // the third modality DECODED for real: genuine YUV4MPEG2 containers
-    // (uncompressed 4:2:0), header + sampled-frame luma stats all parsed
-    // from bytes — the oracle recomputes every luma byte from the same
-    // md5 stream (the q43/q59 recipe; stride 2 samples frames 0,2,4)
-    "q97_video_features" -> ((s, dir) =>
-      Multimodal.extractVideoFrameFeatures(
-        Multimodal.videoY4mFromDocuments(Tables.documents(s, dir)))
-        .toDF()
-        .orderBy("media_id", "frame_index")),
-    // dataset-version diff: v1 = the mixture-kept subset (src0 kept
-    // whole, src1 dropped whole, the rest half), v2 = the full corpus —
-    // so all four statuses are live: src0 cells unchanged (checksum
-    // equality, not just counts), src1 added, the rest changed
-    "q98_manifest_diff" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val kept = TextAnalysis.mixtureSample(docs, DiffRates, defaultRate = 0.5)
-        .where(col("kept")).select("doc_id")
-      TextAnalysis.datasetManifestDiff(
-        TextAnalysis.datasetManifest(docs.join(kept, Seq("doc_id"))),
-        TextAnalysis.datasetManifest(docs))
-        .orderBy(col("split").asc_nulls_last, col("source").asc_nulls_last)
-    }),
-    // held-out unigram surprisal: model trained on the train split,
-    // scored on val with add-one OOV smoothing — the generalization
-    // signal q84's in-corpus score cannot give
-    "q116_heldout_surprisal" -> ((s, dir) =>
-      TextAnalysis.heldOutSurprisal(Tables.documents(s, dir)).orderBy("doc_id")),
-    // label-centroid cosine matrix: the class-separability card;
-    // micro-tick-exact centroid sums, q36's 6dp cosine convention
-    "q117_label_centroids" -> ((s, dir) =>
-      Similarity.labelCentroidMatrix(Tables.embeddings(s, dir))
-        .orderBy("label_a", "label_b")),
-    // doc-level epoch diff: v1 = corpus minus id%7 docs, id%5 texts
-    // mutated, plus retired id%11 copies — all four statuses live
-    "q118_epoch_diff" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val v1 = docs.where(pmod(col("doc_id"), lit(7)) =!= 0)
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(5)) === 0,
-            concat(col("text"), lit(" [v1]"))).otherwise(col("text")).as("text"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(11)) === 0)
-          .select((col("doc_id") + 1000000000L).as("doc_id"), col("text")))
-      TextAnalysis.corpusEpochDiff(v1, docs).orderBy("status")
-    }),
-    // stratified eval draw: 5 per (source, predicted-lang) cell by a
-    // salted reproducible hash — per-cell rank pushed map-side
-    "q119_stratified_eval" -> ((s, dir) =>
-      TextAnalysis.stratifiedEvalDraw(Tables.documents(s, dir))
-        .orderBy(col("source").asc_nulls_last, col("predicted_lang"),
-          col("rk"))),
-    // exact cross-source duplicate matrix over a planted mirror/recrawl
-    // fixture (the synthetic corpus has no natural exact dups) —
-    // combination arithmetic, no pair materialization
-    "q120_exact_overlap" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select("doc_id", "text", "source")
-      val mirrored = docs.where(pmod(col("doc_id"), lit(9)) === 0)
-        .select((col("doc_id") + 2000000000L).as("doc_id"), col("text"),
-          lit("mirror").as("source"))
-      val recrawled = docs.where(pmod(col("doc_id"), lit(15)) === 0)
-        .select((col("doc_id") + 3000000000L).as("doc_id"), col("text"),
-          col("source"))
-      Dedup.exactOverlapMatrix(docs.unionByName(mirrored).unionByName(recrawled))
-        .orderBy(col("source_a").asc_nulls_last, col("source_b").asc_nulls_last)
-    }),
-    // ANN recall calibration: exact brute top-k ground truth vs the IVF
-    // probe on the same query sample — the (nLists, nProbe) tuning loop
-    "q121_ann_recall" -> ((s, dir) =>
-      Similarity.annRecallReport(Tables.embeddings(s, dir),
-        pmod(col("vec_id"), lit(100)) === 0).orderBy("query_id")),
-    // one full-corpus Lloyd refinement pass over the deterministic seed
-    // codebook — micro-tick member means, exact in any fold order
-    "q122_kmeans_refine" -> ((s, dir) =>
-      Similarity.kmeansRefineStep(Tables.embeddings(s, dir), k = 8)
-        .orderBy("cluster", "i")),
-    // Efraimidis-Spirakis weighted draw, derandomized: n docs with
-    // inclusion probability ∝ n_chars, citable and engine-replayable
-    "q123_weighted_sample" -> ((s, dir) =>
-      TextAnalysis.weightedSample(Tables.documents(s, dir), n = 40)
-        .orderBy("key_micro", "doc_id")),
-    // quantile length buckets → per-bucket padded-batch waste in
-    // HALF_UP bp — the bucketing trade curve for batch scheduling
-    "q141_padding_efficiency" -> ((s, dir) =>
-      TextAnalysis.paddingEfficiency(Tables.documents(s, dir), k = 4)
-        .orderBy("bucket")),
-    // the "convert within 1 day" funnel: same fold as q87 with an
-    // integer-micros window gate on each step advance
-    "q142_windowed_funnel" -> ((s, dir) =>
-      Engagement.funnel(Tables.events(s, dir), "user_id", "ts", "event_type",
-        Seq("view", "click", "purchase"), maxLagSeconds = Some(86400L))
-        .orderBy("step_idx")),
-    // per-source doc-id continuity: ids absent from the source's own
-    // [min, max] span — the dropped-batch ingest audit
-    "q143_id_continuity" -> ((s, dir) =>
-      TextAnalysis.idContinuity(Tables.documents(s, dir)).orderBy(col("source").asc_nulls_last)),
-    // top-10% user share of each type's volume — grid cumsums, exact
-    // integer split at the threshold count, HALF_UP bp
-    "q139_concentration" -> ((s, dir) =>
-      Engagement.topDecileConcentration(Tables.events(s, dir), "user_id",
-        "event_type").orderBy("event_type")),
-    // per-type cadence percentiles: same-user consecutive-event gaps
-    // in 1-second ticks through the counting-grid quantiles
-    "q140_gap_quantiles" -> ((s, dir) =>
-      Engagement.interEventGapQuantiles(Tables.events(s, dir), "user_id",
-        "ts", "event_type", "event_id").orderBy(col("event_type").asc_nulls_last)),
-    // per-doc character Shannon entropy in exact micro-nat terms —
-    // the gibberish/encoding detector orthogonal to word gates
-    "q136_char_entropy" -> ((s, dir) =>
-      TextAnalysis.charEntropy(Tables.documents(s, dir)).orderBy("doc_id")),
-    // exact-substring corpus grep: match count via length arithmetic,
-    // 1-based first offset; rows only for hits
-    "q137_corpus_grep" -> ((s, dir) =>
-      TextAnalysis.corpusGrep(Tables.documents(s, dir), needle = "spark")
-        .orderBy("doc_id")),
-    // integer water-filling of a 26k-token budget across sources:
-    // below-water sources take everything, the rest split the
-    // remainder evenly (deterministic integer remainder placement)
-    "q138_budget_allocation" -> ((s, dir) =>
-      TextAnalysis.budgetAllocation(Tables.documents(s, dir), budget = 26000L)
-        .orderBy(col("source").asc_nulls_last)),
-    // KL(source || corpus) over the corpus top-100 vocab: bounded
-    // (sources × k) grid, add-one smoothing, micro-nat term ticks
-    "q133_source_divergence" -> ((s, dir) =>
-      TextAnalysis.sourceTokenDivergence(Tables.documents(s, dir))
-        .orderBy("source")),
-    // near-dup graph degree histogram over the q40/q53 pair relation;
-    // degree-0 rows from the corpus left-join (sum = |corpus|)
-    "q134_dup_degree" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.dupDegreeHistogram(docs,
-        Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8, threshold = 0.2,
-          baseHash = Dedup.md5Base)).orderBy("degree")
-    }),
-    // Pearson r between length and quality per source — the "is the
-    // gate a length proxy?" audit; exact integer sums, 4dp
-    "q135_length_quality_corr" -> ((s, dir) =>
-      TextAnalysis.lengthQualityCorrelation(Tables.documents(s, dir))
-        .orderBy(col("source").asc_nulls_last)),
-    // top session-opening paths: 30-min gap sessions, first-3-type
-    // pivot (no per-session collect), TakeOrdered top-k
-    "q129_session_paths" -> ((s, dir) =>
-      Engagement.sessionPaths(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id").orderBy("rank")),
-    // per-type value percentiles on the 0.01 counting grid — type-1
-    // cuts, integer comparisons, no per-type sort
-    "q130_value_quantiles" -> ((s, dir) =>
-      Stats.tickQuantiles(Tables.events(s, dir), keyCol = "event_type",
-        valueCol = "value").orderBy(col("event_type").asc_nulls_last)),
-    // distinct-user lift per event-type pair — co-adoption vs
-    // independence in HALF_UP bp
-    "q131_event_affinity" -> ((s, dir) =>
-      Engagement.eventAffinity(Tables.events(s, dir), "user_id", "event_type")
-        .orderBy("type_a", "type_b")),
-    // daily-volume 3-sigma anomaly flags; the fixture's uniform volume
-    // never trips 3σ, so a duplicate-ingestion burst is planted on one
-    // (type, day) cell — the flag genuinely splits (q120's convention)
-    "q132_daily_anomalies" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_type"), col("ts"))
-      val burst = ev.where(col("event_type") === "click" &&
-          to_date(col("ts").cast("timestamp")) === lit("2024-01-01").cast("date"))
-        .withColumn("__r", explode(sequence(lit(1), lit(5)))).drop("__r")
-      Stats.dailyAnomalies(ev.unionByName(burst), keyCol = "event_type",
-        tsCol = "ts").orderBy("event_type", "day")
-    }),
-    // per-dimension mean/variance in exact integer ticks (decimal(38,0)
-    // square sums) — the pre-whitening audit
-    "q127_embedding_moments" -> ((s, dir) =>
-      Similarity.embeddingMoments(Tables.embeddings(s, dir)).orderBy("i")),
-    // two power-iteration rounds toward the top principal direction —
-    // each round one scan + a dims-row aggregate, norms from exact
-    // integer square-sums
-    "q128_power_iteration" -> ((s, dir) =>
-      Similarity.powerIterationTop(Tables.embeddings(s, dir), iters = 2)
-        .orderBy("i")),
-    // percentile ensemble of heuristic quality × inverted LM surprisal
-    // on bounded tick grids — one blended bp rank per token-bearing doc
-    "q125_quality_blend" -> ((s, dir) =>
-      TextAnalysis.qualityBlend(Tables.documents(s, dir)).orderBy("doc_id")),
-    // copied-span pairs: ≥ minShared shared winnowing fingerprints,
-    // df-capped inverted index — the local-duplication axis whole-doc
-    // sketches dilute away
-    "q126_winnow_overlap" -> ((s, dir) =>
-      TextAnalysis.winnowOverlapPairs(Tables.documents(s, dir),
-        minShared = 5, maxDf = 5).orderBy("doc_a", "doc_b")),
-    // removal-reason breakdown across the dedup stages (exact beats
-    // near-dup beats kept) — rides the q92 cluster + quality chain
-    "q124_removal_reasons" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.removalReasonReport(docs,
-        Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
-        .orderBy("source", "reason")
-    }),
-    // gate-funnel report: first-failing-gate counts over the decorated
-    // corpus with every gate live (classifier cut 0.0, q68's mixture)
-    "q111_gate_funnel" -> ((s, dir) =>
-      TextAnalysis.gateFunnel(piiDecorated(Tables.documents(s, dir)),
-        classifierThreshold = 0.0, rates = MixtureRates, defaultRate = 0.1)
-        .orderBy("stage")),
-    // char-class composition per source: the encoding/markup health
-    // card — disjoint classes, HALF_UP bp shares, one scan
-    "q112_charclass" -> ((s, dir) =>
-      TextAnalysis.charClassProfile(Tables.documents(s, dir)).orderBy(col("source").asc_nulls_last)),
-    // top boilerplate lines by document frequency over the lineified
-    // corpus — the pre-commit audit for q66's minDf choice
-    "q113_boilerplate_topk" -> ((s, dir) =>
-      TextAnalysis.topBoilerplateLines(lineified(Tables.documents(s, dir)))
-        .orderBy("rank")),
-    // zipf slope over the top-100 vocab: integer micro-nat least squares
-    "q114_zipf_slope" -> ((s, dir) =>
-      TextAnalysis.zipfSlope(Tables.documents(s, dir))),
-    // per-source quality quantiles: type-1 cuts on the 4dp counting grid
-    "q115_source_quality" -> ((s, dir) =>
-      TextAnalysis.sourceQualityQuantiles(Tables.documents(s, dir))
-        .orderBy(col("source").asc_nulls_last)),
-    // one-sided shingle containment: the sub-document duplication axis
-    // symmetric jaccard misses (quotes/embeds) — q35's inverted-index
-    // chain + df cap, scored per side, kept when either side clears 0.6
-    "q106_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(Tables.documents(s, dir)).orderBy("doc_a", "doc_b")),
-    // vocabulary coverage curve: cumulative token-occurrence share of
-    // the top-100 vocab, integer HALF_UP basis points; top-k is a
-    // TakeOrdered heap, the running sum windows over exactly k rows
-    "q107_vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(Tables.documents(s, dir)).orderBy("rank")),
-    // cross-source near-dup overlap matrix over the q46 LSH pair chain:
-    // syndication shows as off-diagonal mass, re-crawls as diagonal
-    "q108_source_overlap" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.sourceOverlapMatrix(docs, Dedup.minhashLshPairsPortable(docs))
-        .orderBy("source_a", "source_b")
-    }),
-    // embedding-table health audit: per (dim, 0.25-norm-bucket) counts,
-    // zero-norm degenerates, micro-tick-exact norm extrema
-    "q109_embedding_audit" -> ((s, dir) =>
-      Similarity.embeddingAudit(Tables.embeddings(s, dir))
-        .orderBy("dim", "norm_bucket")),
-    // tokenizer-fertility report: chars-per-token (HALF_UP basis
-    // points) per q32-predicted language — one scan + 5-row aggregate
-    "q110_fertility" -> ((s, dir) =>
-      TextAnalysis.tokenizerFertility(Tables.documents(s, dir))
-        .orderBy("predicted_lang")),
-    // PMI collocations: top-20 adjacent pairs, min count 5 — ranking
-    // integer-exact in micro-nats, deterministic (pmi, prev, cur) order
-    "q105_collocations" -> ((s, dir) =>
-      TextAnalysis.collocations(Tables.documents(s, dir))),
-    // sketch calibration: est vs EXACT jaccard on the LSH's own
-    // candidates (16 perms x 8 bands, md5 base — the q46 chain)
-    "q103_lsh_calibration" -> ((s, dir) =>
-      Dedup.lshCalibration(Tables.documents(s, dir)).orderBy("doc_a", "doc_b")),
-    // dataset-card language table: per (source, predicted language)
-    // doc counts + per-source share in integer HALF_UP basis points
-    "q104_lang_composition" -> ((s, dir) =>
-      TextAnalysis.langComposition(Tables.documents(s, dir))
-        .orderBy("source", "predicted_lang")),
-    // bigram-LM surprisal: conditional NLL under the corpus's own
-    // add-one-smoothed bigram model — the n-gram step past q84's
-    // unigram; integer micro-nats end to end
-    "q101_bigram_lm" -> ((s, dir) =>
-      TextAnalysis.bigramLmScore(Tables.documents(s, dir)).orderBy("doc_id")),
-    // IVF cell-quality report over q69's deterministic cells: member
-    // counts + integer-micro inertia (mean/max cosine distance)
-    "q102_ivf_cells" -> ((s, dir) =>
-      Similarity.ivfCellReport(Tables.embeddings(s, dir), k = 8)
-        .orderBy("cluster")),
-    // filtered vector search (pre-filter semantics): every query's k
-    // best matches FROM the odd-label candidate set — queries are drawn
-    // unfiltered, so the predicate genuinely reshapes each result list
-    "q100_knn_filtered" -> ((s, dir) =>
-      Similarity.knnCosineFiltered(Tables.embeddings(s, dir),
-        queryPred = pmod(col("vec_id"), lit(100)) === 0,
-        candidatePred = pmod(col("label"), lit(2)) === 1)
-        .orderBy("query_id", "rnk")),
-    // dedup audit report: cluster-size histogram over the same LSH
-    // clusters as q53/q78/q92, singletons included — the shipped
-    // "dedup rate" summary next to a corpus version
-    "q99_cluster_sizes" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.clusterSizeReport(docs,
-        Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
-        .orderBy("size")
-    }),
-    // ROLLUP over (source, lang) — the dataset-card composition table at
-    // every aggregation level in ONE pass (partial aggs expand the
-    // grouping sets map-side; no re-scan per level); grouping_id
-    // disambiguates rolled-up NULLs from data NULLs
-    "q144_rollup_composition" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .rollup(col("source"), col("lang"))
-        .agg(grouping_id().as("lvl"), count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"))
-        .select(coalesce(col("source"), lit("<all>")).as("source"),
-          coalesce(col("lang"), lit("<all>")).as("lang"),
-          col("lvl").cast("long").as("lvl"), col("n_docs"), col("sum_chars"))
-        .orderBy("lvl", "source", "lang")),
-    // normalized exact dedup over a planted reformatting fixture (the
-    // corpus has no natural case/punctuation recrawls): every doc_id%7
-    // doc gets an uppercased, punctuation-noised twin the normalizer
-    // must re-collide
-    "q145_normalized_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val variants = docs.where(pmod(col("doc_id"), lit(7)) === 0)
-        .select((col("doc_id") + 4000000000L).as("doc_id"),
-          concat(lit("  "), upper(col("text")), lit("!!")).as("text"))
-      TextAnalysis.normalizedDedupGroups(docs.unionByName(variants))
-        .orderBy("norm_key")
-    }),
-    // per-source winsorized length means at global p05/p95 counting
-    // cuts — the robust-mean audit; TakeOrdered cut extraction, one
-    // clamp+agg pass
-    "q146_winsorized_means" -> ((s, dir) =>
-      Stats.winsorizedMeans(Tables.documents(s, dir), keyCol = "source",
-        valueCol = "n_chars").orderBy(col("source").asc_nulls_last)),
-    // semi-structured props: JSON field extraction (codegen'd path
-    // expression, null on missing/malformed) + per-type stats in one
-    // hash agg
-    "q147_json_props" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), count(col("k")).as("n_k"),
-          sum(col("k")).as("sum_k"), countDistinct(col("k")).as("distinct_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("event_type").asc_nulls_last)),
-    // last-touch attribution: purchases credited to the most recent
-    // prior non-purchase touch within 1 day — one keyed window pass,
-    // "<none>" stays in the share denominator
-    "q148_last_touch" -> ((s, dir) =>
-      Engagement.lastTouchAttribution(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id", target = "purchase",
-        maxLagSeconds = 86400L).orderBy("attr_type")),
-    // truncation families over planted 2/3-cut twins (doc_id%8): shared
-    // 120-char normalized prefix, distinct full hash — the
-    // recrawl-cut-off shape exact dedup misses
-    "q149_prefix_dup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.where(pmod(col("doc_id"), lit(8)) === 0)
-        .select((col("doc_id") + 5000000000L).as("doc_id"),
-          expr("substring(text, 1, CAST(length(text) * 2 DIV 3 AS INT))").as("text"))
-      TextAnalysis.prefixDupGroups(docs.unionByName(twins))
-        .orderBy("prefix_key")
-    }),
-    // deterministic epoch-shuffle manifest: global 1-based rank in the
-    // salted-md5 total order — 256 prefix buckets make the sort
-    // distributed; ranks are a dense permutation of 1..n
-    "q150_order_manifest" -> ((s, dir) =>
-      TextAnalysis.orderManifest(Tables.documents(s, dir)).orderBy("doc_id")),
-    // double-fire audit over planted +500ms client-retry twins
-    // (event_id%13): same-user same-type gaps ≤ 1s flag as duplicates
-    "q151_double_fire" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select("event_id", "ts", "user_id", "event_type")
-      val retries = ev.where(pmod(col("event_id"), lit(13)) === 0)
-        .select((col("event_id") + 1000000000L).as("event_id"),
-          expr("ts + INTERVAL 500 MILLISECOND").as("ts"),
-          col("user_id"), col("event_type"))
-      Engagement.doubleFire(ev.unionByName(retries), "user_id", "ts",
-        "event_type", "event_id", withinSeconds = 1L).orderBy(col("event_type").asc_nulls_last)
-    }),
-    // per-source robust outliers: type-1 median + MAD on counting
-    // grids, flag beyond 3·MAD — the rule σ-inflation can't hide from
-    "q152_mad_outliers" -> ((s, dir) =>
-      Stats.madOutliers(Tables.documents(s, dir), keyCol = "source",
-        valueCol = "n_chars").orderBy("source")),
-    // Morton layout audit on the (length, token) bucket grid: each
-    // 16-key z-range must cover a small rectangle — the min/max extents
-    // ARE the file-skipping zones a z-sorted layout buys
-    "q153_zorder_layout" -> ((s, dir) =>
-      Layout.zOrderLayoutReport(Tables.documents(s, dir)).orderBy("z_range")),
-    // per-type arrival-lateness percentiles under a deterministic
-    // 48-bit md5 arrival shuffle (natural event_id order is time-sorted
-    // — lateness would be degenerate); two-phase prefix max, grid
-    // quantiles
-    "q154_watermark_lateness" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .where(col("event_id").isNotNull)
-        .withColumn("arrival",
-          graft.functions.md5_prefix_long(col("event_id").cast("string"), 12))
-      Engagement.watermarkLateness(ev, "ts", "arrival", "event_type",
-        tieCol = Some("event_id")).orderBy(col("event_type").asc_nulls_last)
-    }),
-    // relational pivot with an explicit value list (deterministic
-    // schema): the (source × lang) doc-count matrix as wide columns,
-    // empty cells coalesced to 0
-    "q155_pivot_langs" -> ((s, dir) => {
-      val langs = Seq("de", "en", "es", "fr", "zh")
-      Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .pivot("lang", langs)
-        .agg(count(lit(1)))
-        .select(col("source") +:
-          langs.map(l => coalesce(col(l), lit(0L)).as(l)): _*)
-        .orderBy(col("source").asc_nulls_last)
-    }),
-    // 2-round integer-tick PageRank on the q53 LSH pair graph — rank
-    // the duplicate-family nuclei, bit-replayable floor arithmetic
-    "q156_pagerank" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.pageRank(docs,
-        Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8, threshold = 0.2,
-          baseHash = Dedup.md5Base), iters = 2).orderBy("doc_id")
-    }),
-    // first BPE merge iteration: vocabulary-collapsed adjacent char-pair
-    // counts, top-20 merge candidates
-    "q157_bpe_pairs" -> ((s, dir) =>
-      TextAnalysis.bpePairCounts(Tables.documents(s, dir)).orderBy("rank")),
-    // domain-fair percentile: every doc's strictly-below length share
-    // WITHIN its source (floor bp) — one counting grid joined back on
-    // the composite key
-    "q158_relative_rank" -> ((s, dir) =>
-      Stats.relativeRank(Tables.documents(s, dir)
-          .select("doc_id", "source", "n_chars"), "source", "n_chars")
-        .orderBy("doc_id")),
-    // per-type daily-count OLS slope over the type's own day index —
-    // integer-exact sums, 4dp, the growth/decay monitor
-    "q159_volume_trend" -> ((s, dir) =>
-      Stats.dailyTrend(Tables.events(s, dir), keyCol = "event_type",
-        tsCol = "ts").orderBy("event_type")),
-    // dup-cluster review manifest on the q53 labels: size + first-10
-    // member CSV, ranked BEFORE collecting (bounded per-cluster rows)
-    "q161_cluster_manifest" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.clusterManifest(
-        Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
-        .orderBy("cluster_id")
-    }),
-    // acquisition mix: each user's (ts, id)-earliest event type —
-    // purchase-first users are the broken-attribution signal
-    "q162_first_touch" -> ((s, dir) =>
-      Engagement.firstTouchCensus(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id").orderBy(col("event_type").asc_nulls_last)),
-    // 30-min gap sessions → duration/depth grid percentiles — the
-    // session-timeout sizing table
-    "q163_session_stats" -> ((s, dir) =>
-      Engagement.sessionStats(Tables.events(s, dir), "user_id", "ts",
-        "event_id").orderBy("metric")),
-    // do the two sketches see the same duplication? MinHash-LSH vs
-    // banded SimHash pair-set agreement in floor bp
-    "q164_dedup_agreement" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // both sketch families derive from ONE tokenized relation
-      val toks = Dedup.tokenized(docs)
-      Dedup.pairAgreement(
-        Dedup.minhashLshPairsFromTokens(toks, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base),
-        Dedup.simhashPairsPortableFromTokens(toks))
-    }),
-    // language-ID eval: declared lang vs marker-argmax prediction, with
-    // per-declared-row recall share (the diagonal IS the recall column)
-    "q165_lang_confusion" -> ((s, dir) =>
-      TextAnalysis.langConfusion(Tables.documents(s, dir))
-        .orderBy(col("lang").asc_nulls_last, col("predicted_lang"))),
-    // weekly growth ledger: new / retained / resurrected / churned per
-    // observed week — distinct (user, week) first, user-keyed joins only
-    "q166_growth_accounting" -> ((s, dir) =>
-      Engagement.growthAccounting(Tables.events(s, dir), "user_id", "ts")
-        .orderBy("week")),
-    // the dedup PRECISION stage: Levenshtein over 500-char prefixes of
-    // the q53 LSH candidates — per-pair cost bounded by construction
-    "q167_edit_verify" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.editDistanceVerify(docs,
-        Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
-        .orderBy("doc_a", "doc_b")
-    }),
-    // per-source shape moments: skewness + excess kurtosis from exact
-    // integer power sums — the tail-drift monitor
-    "q168_higher_moments" -> ((s, dir) =>
-      Stats.higherMoments(Tables.documents(s, dir), keyCol = "source",
-        valueCol = "n_chars").orderBy(col("source").asc_nulls_last)),
-    // trailing 7-day mean of daily volumes per type — RANGE window over
-    // the (type × day-index) grid, calendar-width denominator
-    "q169_rolling_mean" -> ((s, dir) =>
-      Stats.rollingDailyMean(Tables.events(s, dir), keyCol = "event_type",
-        tsCol = "ts").orderBy("event_type", "day")),
-    // per-group top-k: the 3 best docs per source by quality —
-    // WindowGroupLimit pushes the rank heap map-side
-    "q170_top_per_source" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source"))
-        .orderBy(col("quality").desc, col("doc_id").asc)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.qualityExpr(col("text")).as("quality"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .where(col("rk") <= 3)
-        .orderBy(col("source").asc_nulls_last, col("rk").asc_nulls_last)
-    }),
-    // unpivot (stack) melts the q155 wide matrix back to long — the
-    // oracle is the round-trip identity: pivot ∘ unpivot = groupBy
-    "q171_unpivot" -> ((s, dir) => {
-      val langs = Seq("de", "en", "es", "fr", "zh")
-      Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .pivot("lang", langs)
-        .agg(count(lit(1)))
-        .select(col("source") +:
-          langs.map(l => coalesce(col(l), lit(0L)).as(l)): _*)
-        .select(col("source"), expr(
-          "stack(5, 'de', de, 'en', en, 'es', es, 'fr', fr, 'zh', zh) AS (lang, n_docs)"))
-        .where(col("n_docs") > 0)
-        .orderBy(col("source").asc_nulls_last, col("lang"))
-    }),
-    // BM25 top-20 for a literal 3-term query — micro-tick term scores,
-    // exact any-fold-order totals, (score desc, doc_id) rank
-    "q201_bm25" -> ((s, dir) =>
-      TextAnalysis.bm25TopK(Tables.documents(s, dir),
-        query = Seq("join", "filter", "merge")).orderBy("rank")),
-    // weekly cohort retention triangle — (first-active week × week
-    // offset) distinct-user counts + floor-bp share of the cohort
-    "q202_cohort_triangle" -> ((s, dir) =>
-      Engagement.cohortTriangle(Tables.events(s, dir), "user_id", "ts")
-        .orderBy("cohort_week", "week_offset")),
-    // deterministic bloom pre-filter audited against the exact
-    // semi-join: keep/false-positive rates for the (m, k) design point
-    "q203_bloom_prefilter" -> ((s, dir) =>
-      Bloom.prefilterAudit(
-        Tables.orders(s, dir).where(col("o_orderstatus") === "F" &&
-          col("o_totalprice") > 200000),
-        "o_orderkey", Tables.lineitem(s, dir), "l_orderkey")),
-    // reciprocal-rank fusion of the BM25 list with the quality prior —
-    // integer 10^9 DIV (60 + rank) terms, k-bounded after the scans
-    "q204_rrf_fusion" -> ((s, dir) =>
-      TextAnalysis.rrfRetrieval(Tables.documents(s, dir),
-        query = Seq("join", "filter", "merge")).orderBy("rank")),
-    // int8 quantization acceptance gate: per-vector |x − q·scale| error
-    // stats in exact micro-ticks
-    "q205_int8_recon_error" -> ((s, dir) =>
-      Similarity.reconstructionError(Tables.embeddings(s, dir))
-        .orderBy("vec_id")),
-    // matryoshka audit: recall@10 of first-8-dims cosine search vs the
-    // full-dimension ground truth, floor-bp per query
-    "q206_dim_slice_recall" -> ((s, dir) =>
-      Similarity.dimSliceRecall(Tables.embeddings(s, dir),
-        pmod(col("vec_id"), lit(100)) === 0).orderBy("query_id")),
-    // per-source readability: words/sentence + alpha-chars/word bp and
-    // the clamped Flesch milli-mean
-    "q207_readability" -> ((s, dir) =>
-      TextAnalysis.readabilityProfile(Tables.documents(s, dir))
-        .orderBy(col("source").asc_nulls_last)),
-    // per-type Gini of events-per-user — exact rank-weighted sums on the
-    // (type × activity-count) grid, decimal(38,0) final quotient
-    "q208_activity_gini" -> ((s, dir) =>
-      Stats.giniByKey(Tables.events(s, dir), "event_type", "user_id")
-        .orderBy("event_type")),
-    // session entry/exit census + diagonal bounce rates over the q20
-    // sessionize convention
-    "q209_entry_exit" -> ((s, dir) =>
-      Engagement.sessionEntryExit(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id").orderBy(col("entry_type").asc_nulls_last, col("exit_type").asc_nulls_last)),
-    // incremental ingest gate: new-epoch docs (doc_id%10 ≥ 8) already
-    // present in the old epoch by normalized-prefix fingerprint
-    "q210_epoch_ingest_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.crossEpochPrefixDedup(
-        docs.where(pmod(col("doc_id"), lit(10)) < 8),
-        docs.where(pmod(col("doc_id"), lit(10)) >= 8))
-        .orderBy("source")
-    }),
-    // RFM cube: rank-based quartiles on the stacked (metric × value)
-    // grid, monetary in exact cents then whole units
-    "q211_rfm_segments" -> ((s, dir) =>
-      Engagement.rfmSegments(Tables.events(s, dir), "user_id", "ts", "value")
-        .orderBy("r_seg", "f_seg", "m_seg")),
-    // count-min sketch design audit: exact top-20 tokens vs their d×w
-    // sketch estimates, over-estimate in floor-bp
-    "q212_cms_audit" -> ((s, dir) =>
-      Sketch.cmsHeavyHitterAudit(Tables.documents(s, dir)).orderBy("rank")),
-    // embedding anisotropy: (v, v+250) pair cosines bucketed by
-    // floor(cos·10), share of pairs per bucket
-    "q213_cosine_histogram" -> ((s, dir) =>
-      Similarity.cosinePairHistogram(Tables.embeddings(s, dir))
-        .orderBy("bucket")),
-    // full CUBE over (priority × status) with grouping_id parity —
-    // completes the rollup (q144) grouping-set family
-    "q214_cube_orders" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .cube(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(grouping_id().as("lvl"), count(lit(1)).as("n_orders"),
-          sum(dec("o_totalprice")).cast("double").as("sum_price"))
-        .select(coalesce(col("o_orderpriority"), lit("<all>")).as("priority"),
-          coalesce(col("o_orderstatus"), lit("<all>")).as("status"),
-          col("lvl").cast("long").as("lvl"), col("n_orders"), col("sum_price"))
-        .orderBy("lvl", "priority", "status")),
-    // percent_rank / cume_dist / ntile parity under a pinned total
-    // order (acctbal, custkey) — ntile is order-dependent, so the tie
-    // break is part of the contract
-    "q215_rank_distributions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(col("c_acctbal"), col("c_custkey"))
-      Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-        .withColumn("pr", round(percent_rank().over(w), 6))
-        .withColumn("cd", round(cume_dist().over(w), 6))
-        .withColumn("tile", ntile(4).over(w).cast("long"))
-        .orderBy("c_mktsegment", "c_acctbal", "c_custkey")
-    }),
-    // market-basket: top-20 co-occurring brand pairs per order — the
-    // pair join keys on the BASKET, so a ubiquitous brand never squares
-    "q216_basket_pairs" -> ((s, dir) =>
-      Basket.frequentPairs(
-        Tables.lineitem(s, dir)
-          .join(broadcast(Tables.part(s, dir)),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("p_brand")),
-        "l_orderkey", "p_brand").orderBy("rank")),
-    // Pareto frontier over (quality ↑, n_tokens ↓): dominance reduced to
-    // a running min over the bounded 4dp quality grid, never an O(n²)
-    // dominance join
-    "q217_pareto_frontier" -> ((s, dir) =>
-      Stats.paretoFrontier(
-        TextAnalysis.qualityScore(Tables.documents(s, dir)),
-        "quality", "n_tokens", "n_docs")
-        .orderBy(col("quality").desc)),
-    // HLL distinct-users audit per event_type: exact integer harmonic
-    // denominator (Σ 2^(cap−rank)), α·m²/Z as one integer DIV
-    "q218_hll_audit" -> ((s, dir) =>
-      Sketch.hllDistinctAudit(Tables.events(s, dir), "event_type", "user_id")
-        .orderBy("key")),
-    // degree-oriented triangle counting on the brand co-occurrence graph
-    // (edges ≥ 230bp of baskets) — one wedge per triangle by construction
-    "q219_triangles" -> ((s, dir) =>
-      Basket.triangles(
-        Tables.lineitem(s, dir)
-          .join(broadcast(Tables.part(s, dir)),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("p_brand")),
-        "l_orderkey", "p_brand")),
-    // EXACT token-Jaccard join, complete recall — exact-set collapse +
-    // pigeonhole bucket-agreement candidates at this threshold's tiny
-    // set-difference budget (|AΔB| ≤ (sa+sb)/39), exact array verify
-    "q220_prefix_filter_join" -> ((s, dir) =>
-      Dedup.exactJaccardPairs(Tables.documents(s, dir), 19, 20)
-        .orderBy("doc_a", "doc_b")),
-    // classifier reliability diagram: score centibins vs quality-gate
-    // pass rate, exact offset-tick means
-    "q221_calibration" -> ((s, dir) =>
-      TextAnalysis.scoreCalibration(Tables.documents(s, dir))
-        .orderBy("bin")),
-    // discrete survival/hazard with right-censoring on the (span,
-    // window) grid — integer estimator, no Kaplan-Meier float chain
-    "q222_survival" -> ((s, dir) =>
-      Engagement.survivalCurve(Tables.events(s, dir))),
-    // interval-weighted mean price: lead-window durations, decimal(38,0)
-    // tick·µs products, last sample censored (zero weight)
-    "q223_twap" -> ((s, dir) =>
-      Ohlc.twap(Tables.events(s, dir))),
-    // join cardinality estimator audit: top-8 heavy keys exact + System-R
-    // uniform tail vs ground truth Σ c1·c2 — never a physical join
-    "q224_join_card" -> ((s, dir) =>
-      Sketch.joinCardinalityAudit(Seq(
-        ("events_self_user", Tables.events(s, dir), "user_id",
-          Tables.events(s, dir), "user_id"),
-        ("lineitem_part", Tables.lineitem(s, dir), "l_partkey",
-          Tables.part(s, dir), "p_partkey"),
-        ("orders_customer", Tables.orders(s, dir), "o_custkey",
-          Tables.customer(s, dir), "c_custkey")))),
-    // self-calibrated exact-phrase search: top corpus trigram, per-doc
-    // occurrence counts — transform-based adjacency, no position joins
-    "q225_phrase_match" -> ((s, dir) =>
-      TextAnalysis.phraseMatchTopTrigram(Tables.documents(s, dir))),
-    // SCD2 dimension build: run-length collapse of the value band per
-    // user, versions chained by lead — the producer side of q76/q85
-    "q226_scd2_build" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .where(col("value").isNotNull && !isnan(col("value")))
-        .withColumn("band", floor(col("value") / 100).cast("long"))
-      AsOf.scd2FromChangeLog(ev, "user_id", "ts", "event_id", "band")
-        .select(col("user_id"), col("version"),
-          wstr(col("valid_from")).as("valid_from"),
-          coalesce(wstr(col("valid_to")), lit("<current>")).as("valid_to"),
-          col("band"))
-        .orderBy("user_id", "version")
-    }),
-    // daily trending props.k values: top-8 per day vs yesterday's FULL
-    // ranking, absent → rank 0 sentinel
-    "q227_trending" -> ((s, dir) =>
-      Stats.trendingDaily(
-        Tables.events(s, dir).select(col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item")),
-        "ts", "item")),
-    // sweep-line peak concurrent sessions per day, midnight-clipped
-    // segments, +1-before-−1 boundary order
-    "q228_peak_concurrency" -> ((s, dir) =>
-      Engagement.peakConcurrency(Tables.events(s, dir))),
-    // realized variance per (symbol, day): HALF_UP bp returns on the
-    // pinned order, Σr² in decimal(38,0) — no ln() anywhere
-    "q229_realized_vol" -> ((s, dir) =>
-      Returns.realizedVolDaily(Tables.events(s, dir))),
-    // historical rank of the latest price: struct-extreme last sample,
-    // comparison on the (symbol × tick) counting grid
-    "q230_last_value_rank" -> ((s, dir) =>
-      Returns.lastValueRank(Tables.events(s, dir))),
-    // max peak-to-trough drawdown: one cumulative-max window, dd in bp
-    // of the peak (non-negative DIV), (dd, peak) struct-extreme report
-    "q231_max_drawdown" -> ((s, dir) =>
-      Returns.maxDrawdown(Tables.events(s, dir))),
-    // Bollinger bands: rolling mean ± 2σ in ticks, exact integer
-    // variance numerator, complete 8-candle windows only
-    "q232_bollinger" -> ((s, dir) =>
-      Returns.bollinger(candles(s, dir), nWin = 8, kBand = 2)
-        .withColumn("window_start", wstr(col("window_start")))),
-    // Cutler RSI: SMA gains/losses over 14 candle deltas, integer bp
-    "q233_rsi" -> ((s, dir) =>
-      Returns.rsiCutler(candles(s, dir), nWin = 14)
-        .withColumn("window_start", wstr(col("window_start")))),
-    // cross-symbol return correlation: candle-grid-aligned bp returns,
-    // exact integer Pearson sums, one final guarded quotient
-    "q234_return_corr" -> ((s, dir) =>
-      Returns.returnCorrelationMatrix(candles(s, dir))),
-    // candlestick pattern census: pure integer-tick predicates
-    // (cross-multiplied ratios), one lag + one scan over candles
-    "q235_candle_patterns" -> ((s, dir) =>
-      Ohlc.candlePatterns(candles(s, dir))),
-    // day-of-week seasonality: coverage-normalized index over the
-    // ≤ 7-row dow grid per type, Monday=0 pinned on both engines
-    "q236_dow_seasonality" -> ((s, dir) =>
-      Stats.dowSeasonality(Tables.events(s, dir))),
-    // CUSUM changepoint: integer ×n_days-scaled deviation cumsum over
-    // the bounded day series, earliest-day tiebreak
-    "q237_cusum" -> ((s, dir) =>
-      Stats.cusumChangepoint(Tables.events(s, dir))),
-    // semantic decontamination: best benchmark cosine per corpus
-    // vector, broadcast bench side, struct-extreme argmax
-    "q238_semantic_decontam" -> ((s, dir) =>
-      Similarity.semanticDecontamination(Tables.embeddings(s, dir),
-        pmod(col("vec_id"), lit(50)) === 0, threshold = 0.2)),
-    // mutual-kNN graph: reciprocal exact top-5 pairs within the sample
-    "q239_mutual_knn" -> ((s, dir) =>
-      Similarity.mutualKnnPairs(Tables.embeddings(s, dir),
-        pmod(col("vec_id"), lit(10)) === 0, k = 5)),
-    // dedup threshold tuning: pairs + docs touched per exact-Jaccard θ
-    // over the verified LSH candidate set
-    "q240_threshold_sweep" -> ((s, dir) =>
-      Dedup.thresholdSweep(Tables.documents(s, dir))),
-    // even-split multi-touch credit in integer micro-units; one keyed
-    // window + hash aggs, <none> bucket for bare conversions
-    "q241_linear_attribution" -> ((s, dir) =>
-      Engagement.linearAttribution(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id", target = "purchase")),
-    // DAU/MAU per month from the distinct (day, user) presence grid
-    "q242_stickiness" -> ((s, dir) =>
-      Engagement.stickiness(Tables.events(s, dir))),
-    // bucketing-DDL advisor: hottest-bucket share per candidate shuffle
-    // key over 64 portable md5 hash buckets
-    "q243_partition_skew" -> ((s, dir) =>
-      Layout.partitionSkew(Tables.events(s, dir), Seq(
-        "event_id" -> Seq("event_id"),
-        "event_type" -> Seq("event_type"),
-        "user_id" -> Seq("user_id"),
-        "user_type" -> Seq("user_id", "event_type")))),
-    // candle-grid rollup 5-min → 30-min: min_by/max_by open/close on
-    // unique window_start, integer-µs bucket arithmetic
-    "q245_ohlc_resample" -> ((s, dir) =>
-      Ohlc.resample(candles(s, dir), minutes = 30)
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"),
-          col("open"), col("high"), col("low"), col("close"),
-          col("tick_count"))
-        .orderBy("window_start", "symbol")),
-    // Mann–Whitney rank-sum AUC over the bounded milli-bin score grid,
-    // midrank ties in integer halves, decimal(38,0) products
-    "q246_classifier_auc" -> ((s, dir) =>
-      TextAnalysis.classifierAuc(Tables.documents(s, dir))),
-    // per-source → global quantile calibration map on the bounded
-    // (source × 4dp-quality) counting grids
-    "q247_quantile_norm" -> ((s, dir) =>
-      TextAnalysis.quantileNormTable(Tables.documents(s, dir))),
-    // burstiness: daily-volume Fano factor per type over each type's
-    // own span (silent days are zeros via the span identity)
-    "q248_fano_factor" -> ((s, dir) =>
-      Stats.fanoDaily(Tables.events(s, dir))),
-    // schema-inference primitive: which part columns determine which —
-    // TPC-H's brand→mfgr holds, the others violate
-    "q251_fd_audit" -> ((s, dir) =>
-      Stats.fdAudit(Tables.part(s, dir), Seq(
-        ("partkey_brand", "p_partkey", "p_brand"),
-        ("brand_type", "p_brand", "p_type"),
-        ("size_type", "p_size", "p_type")))),
-    // train/serve-skew check: even vs odd half-centroid cosine per
-    // label via scale-invariant integer sum vectors
-    "q252_embedding_drift" -> ((s, dir) =>
-      Similarity.embeddingDrift(Tables.embeddings(s, dir),
-        pmod(col("vec_id"), lit(2)) === 0)),
-    // argmax primitive: modal hour-of-day per event type, ties to the
-    // smallest hour, struct extreme — no window
-    "q253_modal_hour" -> ((s, dir) =>
-      Stats.modalByKey(
-        Tables.events(s, dir)
-          .select(col("event_type"), hour(col("ts")).as("hr")),
-        "event_type", "hr")),
-    // Wald–Wolfowitz runs on daily volume direction: trending vs
-    // oscillating per type, exact integer E[R]
-    "q254_runs_test" -> ((s, dir) =>
-      Stats.runsTestDaily(Tables.events(s, dir))),
-    // the churn-model feature-store row: one hash agg per user
-    "q284_user_features" -> ((s, dir) =>
-      Engagement.userFeatures(Tables.events(s, dir))),
-    // code-switching detector: second-best marker score within 4/5 of
-    // the best; exact integer comparisons
-    "q285_mixed_lang" -> ((s, dir) =>
-      TextAnalysis.mixedLanguageCensus(Tables.documents(s, dir))),
-    // unit economics: weekly ARPU/ARPPU in exact floor cents
-    "q286_weekly_arpu" -> ((s, dir) =>
-      Engagement.weeklyArpu(Tables.events(s, dir))),
-    // Herfindahl concentration of user activity per type — Σ share² as
-    // one exact decimal ratio
-    "q283_hhi" -> ((s, dir) =>
-      Stats.hhiByKey(Tables.events(s, dir), "event_type", "user_id")),
-    // concentration curve points on the (count × multiplicity) grid —
-    // the table behind the q208 gini number
-    "q280_lorenz_points" -> ((s, dir) =>
-      Stats.lorenzPoints(
-        Tables.events(s, dir).where(col("user_id").isNotNull), "user_id")),
-    // audience planning: distinct-user Jaccard per type pair, keyed on
-    // the user so nothing squares
-    "q281_audience_overlap" -> ((s, dir) =>
-      Engagement.audienceOverlap(Tables.events(s, dir))),
-    // binge-vs-alternate shape: consecutive same-type run lengths on
-    // the pinned (µs, id) order
-    "q282_run_lengths" -> ((s, dir) =>
-      Engagement.runLengthCensus(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id")),
-    // friends-of-friends: 1-hop and ≤2-hop distinct reach over the
-    // blocked entity-pair graph (edge set bounded by q261's caps)
-    "q277_two_hop_reach" -> ((s, dir) => {
-      val edges = Dedup.blockedEntityPairs(
-        Tables.events(s, dir).where(col("ts").isNotNull &&
-          col("value").isNotNull && !isnan(col("value")) && col("event_type").isNotNull),
-        "user_id",
-        Seq(to_date(col("ts")), col("event_type"),
-          floor(col("value") / 100).cast("long")),
-        minShared = 2, maxBlockSize = 50)
-        .select(col("entity_a").as("a"), col("entity_b").as("b"))
-      val und = edges.unionByName(
-          edges.select(col("b").as("a"), col("a").as("b"))).distinct()
-      val twoHop = und.as("x").join(und.as("y"), col("x.b") === col("y.a"))
-        .select(col("x.a").as("a"), col("y.b").as("b"))
-        .where(col("a") =!= col("b"))
-      val reach = und.unionByName(twoHop).distinct()
-      und.groupBy(col("a").as("entity")).agg(count(lit(1)).as("n_1hop"))
-        .join(reach.groupBy(col("a").as("entity"))
-          .agg(count(lit(1)).as("n_2hop")), Seq("entity"))
-        .orderBy("entity")
-    }),
-    // forecast baselines: lag-7 vs lag-1 MAE per type on the calendar
-    // day grid — "seasonal or momentum"
-    "q278_seasonal_backtest" -> ((s, dir) =>
-      Stats.seasonalNaiveBacktest(Tables.events(s, dir))),
-    // exact cross-multiplied KS distance between corpus halves'
-    // 4dp-quality distributions
-    "q279_ks_test" -> ((s, dir) => {
-      val scored = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.qualityExpr(col("text")).as("q"))
-      Stats.ksTest(scored, "q", pmod(col("doc_id"), lit(2)) === 0)
-    }),
-    // revenue cohorts: purchase cents per (cohort week, week offset) +
-    // net revenue retention vs the cohort's own first week
-    "q274_revenue_cohorts" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("value").isNotNull && !isnan(col("value")) && col("event_type") === "purchase")
-        .select(col("user_id"),
-          to_date(date_trunc("week", col("ts"))).as("w"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      val cohort = ev.groupBy(col("user_id")).agg(min(col("w")).as("cohort"))
-      val rev = ev.join(cohort, Seq("user_id"))
-        .groupBy(col("cohort"),
-          expr("CAST(datediff(w, cohort) DIV 7 AS BIGINT)").as("week_offset"))
-        .agg(sum(col("cents")).as("rev_cents"))
-      val base = rev.where(col("week_offset") === 0)
-        .select(col("cohort"), col("rev_cents").as("__base"))
-      rev.join(base, Seq("cohort"))
-        .select(col("cohort"), col("week_offset"), col("rev_cents"),
-          expr("(rev_cents * 10000) DIV __base").as("ndr_bp"))
-        .orderBy("cohort", "week_offset")
-    }),
-    // Horvitz–Thompson estimate audit: scale the q68 sample back up by
-    // exact tick-rational inverse rates, err vs truth in HALF_UP bp
-    "q275_ht_estimate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val ticks = when(col("source") === "src0", 10000L)
-        .when(col("source") === "src1", 7500L)
-        .when(col("source") === "src2", 5000L)
-        .when(col("source") === "src3", 2500L).otherwise(1000L)
-      val kept = TextAnalysis
-        .mixtureSample(docs, MixtureRates, defaultRate = 0.1)
-        .where(col("kept"))
-        .groupBy(col("source")).agg(count(lit(1)).as("__k"))
-      docs.groupBy(col("source")).agg(count(lit(1)).as("n_actual"))
-        .join(kept, Seq("source"), "left")
-        .select(col("source"), col("n_actual"),
-          coalesce(col("__k"), lit(0L)).as("n_kept"),
-          expr("CAST(coalesce(__k, 0) * 10000 AS BIGINT)").as("__scaled"),
-          ticks.as("__t"))
-        .select(col("source"), col("n_actual"), col("n_kept"),
-          expr("__scaled DIV __t").as("n_est"))
-        .withColumn("err_bp",
-          floor(abs(col("n_est") - col("n_actual")) * 10000.0 /
-            col("n_actual") + 0.5).cast("long"))
-        .orderBy(col("source").asc_nulls_last)
-    }),
-    // release-diff trending tokens: both halves' top-200 vocab ranks
-    // joined, top movers by |Δrank|
-    "q276_trending_tokens" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      def ranked(pred: Column): DataFrame = {
-        val w = Window.orderBy(col("n").desc, col("token"))
-        docs.where(pred)
-          .select(explode(TextAnalysis.tokens(TextAnalysis.asciiLower(col("text")))).as("token"))
-          .groupBy(col("token")).agg(count(lit(1)).as("n"))
-          .orderBy(col("n").desc, col("token")).limit(200)
-          .withColumn("rnk", row_number().over(w).cast("long"))
-      }
-      val a = ranked(pmod(col("doc_id"), lit(2)) === 0)
-        .select(col("token"), col("rnk").as("rank_a"))
-      val b = ranked(pmod(col("doc_id"), lit(2)) === 1)
-        .select(col("token"), col("rnk").as("rank_b"))
-      a.join(b, Seq("token"))
-        .withColumn("abs_delta", abs(col("rank_a") - col("rank_b")))
-        .orderBy(col("abs_delta").desc, col("token"))
-        .limit(20)
-    }),
-    // generic data-quality profiler: per-column null rates, one scan
-    "q271_null_profile" -> ((s, dir) =>
-      Stats.nullProfile(Tables.events(s, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value", "props"))),
-    // natural-key duplicate audit: full-row dups ignoring the surrogate
-    // id — the ingestion double-write check at row granularity. The
-    // corpus has no natural full-row dups, so every event_id%37==0 row
-    // is re-ingested under a shifted id (the q145/q151 planted-twin
-    // convention) and the audit must recover exactly those
-    "q272_duplicate_rows" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val doubled = ev.unionByName(
-        ev.where(pmod(col("event_id"), lit(37)) === 0)
-          .withColumn("event_id", col("event_id") + 7000000000L))
-      doubled
-        .groupBy(col("user_id"), col("ts"), col("event_type"),
-          round(col("value"), 4).as("value"))
-        .agg(count(lit(1)).as("n_copies"),
-          min(col("event_id")).as("first_id"))
-        .where(col("n_copies") > 1)
-        .orderBy(col("user_id").asc_nulls_last, col("ts").asc_nulls_last, col("event_type").asc_nulls_last)
-    }),
-    // next-event predictability: transition entropy per type in
-    // floored micro-nats over the (from, to) grid
-    "q273_transition_entropy" -> ((s, dir) =>
-      Engagement.transitionEntropy(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id")),
-    // serving-side bigram suggest table: top-3 continuations per
-    // eligible prefix, lexicographic ties
-    "q268_autocomplete" -> ((s, dir) =>
-      TextAnalysis.bigramAutocomplete(Tables.documents(s, dir))),
-    // dashboard WoW: weekly counts, lag over the (key × week) grid,
-    // HALF_UP bp of the previous week
-    "q269_wow_change" -> ((s, dir) =>
-      Stats.weekOverWeek(Tables.events(s, dir))),
-    // running supply: per-brand daily shipped quantity cumsum over the
-    // bounded (brand × shipdate) grid; part side broadcasts
-    "q270_cumulative_shipments" -> ((s, dir) => {
-      val w = Window.partitionBy(col("p_brand")).orderBy(col("d"))
-      Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("l_shipdate").as("d"))
-        .agg(sum(col("l_quantity").cast("long")).as("qty"))
-        .withColumn("cum_qty", sum(col("qty")).over(w))
-        .orderBy("p_brand", "d")
-    }),
-    // inequality join made equi: purchases × clicks same user within
-    // |Δvalue| ≤ 5, eps-bucket ±1 replication, exact residual
-    "q265_band_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("value").isNotNull && !isnan(col("value")))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("value").as("pv"))
-      val c = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("value").as("cv"),
-          col("event_id").as("click_id"))
-      AsOf.bandJoin(p, c, "user_id", "pv", "cv", eps = 5.0,
-          Seq("click_id"))
-        .select("purchase_id", "click_id", "val_diff_micro")
-        .orderBy("purchase_id", "click_id")
-    }),
-    // freshness-weighted volume: exact power-of-2 half-life decay via
-    // bit shift — no float exp on the decision path
-    "q266_time_decay" -> ((s, dir) =>
-      Stats.timeDecayedVolume(Tables.events(s, dir))),
-    // vocabulary overlap coefficient per source pair on the
-    // (source × distinct token) relation
-    "q267_vocab_overlap" -> ((s, dir) =>
-      TextAnalysis.vocabOverlapMatrix(Tables.documents(s, dir))),
-    // multiset INTERSECT ALL / EXCEPT ALL semantics pinned: min(ma,mb)
-    // and max(0, ma−mb) multiplicities between two quantity bags
-    "q263_bag_setops" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val a = li.where(pmod(col("l_suppkey"), lit(2)) === 0)
-        .select(col("l_quantity").cast("long").as("qty"))
-      val b = li.where(pmod(col("l_suppkey"), lit(2)) === 1)
-        .select(col("l_quantity").cast("long").as("qty"))
-      val inter = a.intersectAll(b).groupBy(col("qty"))
-        .agg(count(lit(1)).as("n")).withColumn("op", lit("intersect_all"))
-      val exc = a.exceptAll(b).groupBy(col("qty"))
-        .agg(count(lit(1)).as("n")).withColumn("op", lit("except_all"))
-      inter.unionByName(exc).select("op", "qty", "n").orderBy("op", "qty")
-    }),
-    // Wilson lower bound per type for P(value > 100) — the
-    // small-sample-honest rate ranking; identical double formula both
-    // engines (z² spelled 1.96*1.96 so both compute the same IEEE value)
-    "q264_wilson_bounds" -> ((s, dir) =>
-      Stats.wilsonLowerBound(
-        Tables.events(s, dir).where(col("value").isNotNull && !isnan(col("value"))),
-        col("value") > 100)),
-    // ML-ops drift gate: PSI between corpus halves per source over the
-    // fixed 11-bin quality grid, add-one smoothed, micro-nat logs
-    "q259_psi_drift" -> ((s, dir) =>
-      TextAnalysis.psiDrift(Tables.documents(s, dir),
-        pmod(col("doc_id"), lit(2)) === 0)),
-    // MERGE semantics: signup snapshot + purchase upserts + error
-    // deletes, latest change per key on the pinned (ts, id) order
-    "q260_cdc_apply" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("ts").isNotNull)
-      val base = ev.where(col("event_type") === "signup")
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("ts"), col("event_id"),
-          round(col("value"), 4).as("v"))).as("__m"))
-        .select(col("user_id"), col("__m.v").as("value"))
-      val changes = ev.where(col("event_type").isin("purchase", "error"))
-        .select(col("user_id"), col("ts"), col("event_id"),
-          when(col("event_type") === "error", "delete").otherwise("upsert")
-            .as("op"),
-          round(col("value"), 4).as("value"))
-      AsOf.cdcApply(base, changes, "user_id", "ts", "event_id", "op",
-        "value").orderBy("user_id")
-    }),
-    // record-linkage candidates: users sharing ≥2 (day, type, value-band)
-    // blocks; hot blocks (>50 users) dropped — the df-cap discipline
-    "q261_entity_blocks" -> ((s, dir) =>
-      Dedup.blockedEntityPairs(
-        Tables.events(s, dir).where(col("ts").isNotNull &&
-          col("value").isNotNull && !isnan(col("value")) && col("event_type").isNotNull),
-        "user_id",
-        Seq(to_date(col("ts")), col("event_type"),
-          floor(col("value") / 100).cast("long")),
-        minShared = 2, maxBlockSize = 50)),
-    // merge_asof tolerance: the q76 chain with a 120 s staleness gate —
-    // stale carries null out row-locally, same single shuffle
-    "q262_asof_tolerance" -> ((s, dir) => {
-      val probes = ticks(s, dir) // malformed ticks dropped on both sides
-        .select(col("event_id"), col("ts"),
-          col("event_type").as("symbol"), col("value"))
-      AsOf.asofJoinTolerance(probes, candles(s, dir), key = "symbol",
-        leftTs = "ts", rightTs = "window_start",
-        valueCols = Seq("window_start", "close"), toleranceSeconds = 120L)
-        .select(col("event_id"), col("symbol"),
-          unix_micros(col("ts")).as("ts_us"),
-          wstr(col("window_start")).as("window_start"), col("close"))
-        .orderBy("event_id")
-    }),
-    // dataset-card signature terms: per-source top-3 lift over the
-    // global token share, exact integer micro lifts
-    "q255_signature_terms" -> ((s, dir) =>
-      TextAnalysis.sourceSignatureTerms(Tables.documents(s, dir))),
-    // pre-join salt sizing: heavy keys (share > 1/32) + exact ceil
-    // salt factor; event_type is the deliberately skewed probe
-    "q256_salt_advisor" -> ((s, dir) =>
-      Skew.saltAdvisor(Tables.events(s, dir), "event_type", parts = 32)),
-    // weekly-seasonality strength: dow-means R² in bp from per-group
-    // floored micro sums of squares
-    "q257_dow_r2" -> ((s, dir) =>
-      Stats.dowVarianceExplained(Tables.events(s, dir))),
-    // release-review k-anonymity over the (type, dow, hour) quasi-id
-    // grid: cells and rows below each k
-    "q258_k_anonymity" -> ((s, dir) =>
-      Stats.kAnonymity(
-        Tables.events(s, dir)
-          .where(col("ts").isNotNull)
-          .select(col("event_type"), dayofweek(col("ts")).as("dow"),
-            hour(col("ts")).as("hr")),
-        Seq("event_type", "dow", "hr"))),
-    // bit-replayable integer-tick EMA recursion (first-value seed),
-    // the Atr fold shape: one symbol shuffle + in-partition stream
-    "q250_macd" -> ((s, dir) =>
-      Returns.macd(candles(s, dir))
-        .select(wstr(col("window_start")).as("window_start"), col("symbol"),
-          col("close_ticks"), col("ema_fast_ticks"), col("ema_slow_ticks"),
-          col("macd_ticks"))
-        .orderBy("symbol", "window_start")),
-    // explicit GROUPING SETS ((status), (priority)) — the two
-    // one-dimension marginals in one pass, grouping_id parity
-    "q249_grouping_sets" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(grouping_id().cast("long").as("lvl"),
-          count(lit(1)).as("n_orders"),
-          sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("revenue_cents"))
-        .select(coalesce(col("o_orderstatus"), lit("<all>")).as("status"),
-          coalesce(col("o_orderpriority"), lit("<all>")).as("priority"),
-          col("lvl"), col("n_orders"), col("revenue_cents"))
-        .orderBy("lvl", "status", "priority")),
-    // bidirectional as-of: each purchase aligned to its |Δt|-nearest
-    // click in the same user stream, ties backward
-    "q244_nearest_event" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("ts").isNotNull)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("cts"))
-      AsOf.nearestJoin(purchases, clicks, "user_id", "ts", "cts",
-          Seq("click_id"))
-        .select("purchase_id", "click_id", "nearest_gap_us")
-        .orderBy("purchase_id")
-    }),
-    // source concentration: sources ranked by token mass, cumulative
-    // share — "how few sources carry 90% of the corpus"
-    "q198_source_concentration" -> ((s, dir) => {
-      val bySrc = Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .agg(sum(TextAnalysis.nTokensExpr(col("text"))).as("n_tokens"))
-      val ord = Seq(col("n_tokens").desc, col("source").asc)
-      val w = org.apache.spark.sql.expressions.Window.orderBy(ord: _*)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      bySrc
-        .withColumn("rank", row_number()
-          .over(org.apache.spark.sql.expressions.Window.orderBy(ord: _*))
-          .cast("long"))
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-        .withColumn("cum_share_bp",
-          expr("(cum_tokens * 10000) DIV sum(n_tokens) OVER ()"))
-        .select("rank", "source", "n_tokens", "cum_tokens", "cum_share_bp")
-        .orderBy("rank")
-    }),
-    // nearest-centroid classifier accuracy per label — the
-    // label-separability eval over exact micro-tick centroids
-    "q199_centroid_accuracy" -> ((s, dir) =>
-      Similarity.nearestCentroidAccuracy(Tables.embeddings(s, dir))
-        // null label is a real group; pin to DuckDB's NULLS LAST
-        .orderBy(col("label").asc_nulls_last)),
-    // the corpus one-pager: six families' headline numbers as one
-    // (metric, value) table — every term reuses an already-gated
-    // expression
-    "q200_corpus_health" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val base = docs.agg(
-        count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.nTokensExpr(col("text"))).as("n_tokens"),
-        sum((TextAnalysis.splitExpr() === "train").cast("long"))
-          .as("train_docs"))
-      val vocab = docs
-        .select(explode(TextAnalysis.tokens(TextAnalysis.asciiLower(col("text")))).as("t"))
-        .agg(countDistinct(col("t")).as("vocab_size"))
-      val dups = docs
-        .select(md5(trim(regexp_replace(TextAnalysis.asciiLower(col("text")), "\\s+", " ")))
-          .as("f"))
-        .groupBy(col("f")).agg(count(lit(1)).as("n"))
-        .where(col("n") > 1)
-        .agg(count(lit(1)).as("exact_dup_groups"))
-      val quality = docs
-        .select(floor(TextAnalysis.qualityExpr(col("text")) * 10000 + 0.5)
-          .cast("long").as("q_ticks"))
-        .agg(expr("(2 * sum(q_ticks) + count(1)) DIV (2 * count(1))")
-          .as("mean_quality_ticks"))
-      base.crossJoin(vocab).crossJoin(dups).crossJoin(quality)
-        .select(expr(
-          "stack(6, 'n_docs', n_docs, 'n_tokens', n_tokens, " +
-            "'train_docs', train_docs, 'vocab_size', vocab_size, " +
-            "'exact_dup_groups', coalesce(exact_dup_groups, 0), " +
-            "'mean_quality_ticks', mean_quality_ticks) AS (metric, value)"))
-        .orderBy("metric")
-    }),
-    // corpus unigram entropy in exact micro-nat terms (the charEntropy
-    // discipline at vocab level) + effective vocabulary exp(H) — the
-    // one-number diversity complement to the zipf slope
-    "q195_vocab_entropy" -> ((s, dir) => {
-      val counts = Tables.documents(s, dir)
-        .select(explode(TextAnalysis.tokens(TextAnalysis.asciiLower(col("text")))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      val n = org.apache.spark.sql.expressions.Window.partitionBy()
-      counts
-        .withColumn("__n", sum(col("c")).over(n))
-        .select(col("c"), col("__n"),
-          floor((col("c") / col("__n").cast("double")) *
-            log(col("__n").cast("double") / col("c")) * 1000000 + 0.5)
-            .cast("long").as("__t"))
-        .agg(max(col("__n")).as("n_tokens"), count(lit(1)).as("vocab_size"),
-          sum(col("__t")).as("__s"))
-        .select(col("n_tokens"), col("vocab_size"),
-          (col("__s") / 1000000.0).as("entropy"),
-          round(exp(col("__s") / 1000000.0), 4).as("eff_vocab"))
-    }),
-    // referential-integrity census over the relational core: per FK,
-    // row count + anti-join orphan count
-    "q196_fk_integrity" -> ((s, dir) => {
-      def fk(name: String, child: DataFrame, ck: String, parent: DataFrame,
-             pk: String) = {
-        val n = child.count()
-        val orphans = child.select(col(ck))
-          .join(parent.select(col(pk).as(ck)), Seq(ck), "left_anti").count()
-        Seq((name, n, orphans))
-      }
-      val rows =
-        fk("orders.custkey", Tables.orders(s, dir), "o_custkey",
-          Tables.customer(s, dir), "c_custkey") ++
-        fk("lineitem.orderkey", Tables.lineitem(s, dir), "l_orderkey",
-          Tables.orders(s, dir), "o_orderkey") ++
-        fk("customer.nationkey", Tables.customer(s, dir), "c_nationkey",
-          Tables.nation(s, dir), "n_nationkey") ++
-        fk("supplier.nationkey", Tables.supplier(s, dir), "s_nationkey",
-          Tables.nation(s, dir), "n_nationkey") ++
-        fk("nation.regionkey", Tables.nation(s, dir), "n_regionkey",
-          Tables.region(s, dir), "r_regionkey")
-      import s.implicits._
-      rows.toDF("fk", "n_rows", "n_orphans").orderBy("fk")
-    }),
-    // longest consecutive-day streak per user via gaps-and-islands
-    // (day − row_number anchors), then the streak-length histogram
-    "q197_streaks" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("u")).orderBy(col("d"))
-      Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id").as("u"), to_date(col("ts")).as("d"))
-        .distinct()
-        .withColumn("__rn", row_number().over(w))
-        .withColumn("__anchor", expr("date_sub(d, __rn)"))
-        .groupBy(col("u"), col("__anchor")).agg(count(lit(1)).as("__len"))
-        .groupBy(col("u")).agg(max(col("__len")).as("streak_len"))
-        .groupBy(col("streak_len")).agg(count(lit(1)).as("n_users"))
-        .orderBy("streak_len")
-    }),
-    // measured "ORDER BY which column" layout advice: per candidate
-    // key, the mean normalized probe-span of its 16 counting zones —
-    // the share of files a range predicate would FAIL to skip
-    "q193_sortkey_advisor" -> ((s, dir) =>
-      Layout.sortKeyAdvisor(Tables.documents(s, dir),
-        candidates = Seq("n_chars" -> "n_chars", "doc_id" -> "doc_id"),
-        probeCol = "n_chars").orderBy("sort_key")),
-    // are dup families templates (intra-source) or mirrors (cross-
-    // source)? (size × n_sources) histogram over the q53 clusters
-    "q194_cluster_source_mix" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
-        .join(docs.select("doc_id", "source"), Seq("doc_id"))
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("size"),
-          countDistinct(col("source")).as("n_sources"))
-        .where(col("size") > 1)
-        .groupBy(col("size"), col("n_sources"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .orderBy("size", "n_sources")
-    }),
-    // the gating trade curve: keep the top-k quality deciles → what
-    // share of docs and TOKENS survives; counting buckets + a 10-row
-    // descending cumsum dim
-    "q191_selection_curve" -> ((s, dir) => {
-      val scored = Tables.documents(s, dir).select(col("doc_id"),
-        floor(TextAnalysis.qualityExpr(col("text")) * 10000 + 0.5).cast("long")
-          .as("q_ticks"),
-        TextAnalysis.nTokensExpr(col("text")).as("n_tokens"))
-      // quality + token-count projection is the expensive pass of this
-      // entry — pin it so the counting grid and the bucket assignment
-      // both read the materialized rows instead of re-tokenizing
-      val byB = Stats.quantileBuckets(scored, "q_ticks", k = 10,
-          pinInput = true)
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-      val wDesc = org.apache.spark.sql.expressions.Window
-        .orderBy(col("bucket").desc)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      byB
-        .withColumn("cum_docs", sum(col("n_docs")).over(wDesc))
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(wDesc))
-        .withColumn("docs_share_bp",
-          expr("(cum_docs * 10000) DIV sum(n_docs) OVER ()"))
-        .withColumn("tokens_share_bp",
-          expr("(cum_tokens * 10000) DIV sum(n_tokens) OVER ()"))
-        .select("bucket", "n_docs", "n_tokens", "cum_docs", "cum_tokens",
-          "docs_share_bp", "tokens_share_bp")
-        .orderBy(col("bucket").desc)
-    }),
-    // the LSH tuning number: what share of candidates survives the
-    // edit-distance precision stage at sim ≥ 0.8
-    "q192_lsh_precision" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.editDistanceVerify(docs,
-        Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
-        .agg(count(lit(1)).as("n_candidates"),
-          sum((col("sim_bp") >= 8000L).cast("long")).as("n_verified"))
-        .select(col("n_candidates"),
-          coalesce(col("n_verified"), lit(0L)).as("n_verified"),
-          when(col("n_candidates") === 0, lit(0L))
-            .otherwise(expr("(coalesce(n_verified, 0) * 10000) DIV n_candidates"))
-            .as("precision_bp"))
-    }),
-    // declarative data-quality expectations: one scan, one conditional
-    // sum per rule + a uniqueness check — the dbt-test/GE audit
-    "q188_expectations" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val agg = d.agg(
-        sum((col("n_chars") <= 0).cast("long")).as("v_nonpositive_len"),
-        sum((!col("lang").isin("de", "en", "es", "fr", "zh")).cast("long"))
-          .as("v_lang_domain"),
-        sum((length(col("text")) =!= col("n_chars")).cast("long"))
-          .as("v_len_consistency"),
-        sum(col("doc_id").isNull.cast("long")).as("v_null_id"),
-        (count(lit(1)) - countDistinct(col("doc_id"))).as("v_dup_id"))
-      agg.select(expr(
-        "stack(5, 'nonpositive_len', v_nonpositive_len, " +
-          "'lang_domain', v_lang_domain, " +
-          "'len_consistency', v_len_consistency, " +
-          "'null_id', v_null_id, 'dup_id', v_dup_id) AS (rule, n_violations)"))
-        .orderBy("rule")
-    }),
-    // chi-square independence of (source, lang) — full expected grid
-    // from broadcast marginals, zero cells included
-    "q189_chi_square" -> ((s, dir) =>
-      Stats.chiSquare(Tables.documents(s, dir), "source", "lang")),
-    // lag-1 autocorrelation of daily volumes per type — the
-    // seasonality/momentum audit next to the trend slope
-    "q190_autocorr" -> ((s, dir) =>
-      Stats.dailyAutocorr(Tables.events(s, dir), keyCol = "event_type",
-        tsCol = "ts").orderBy(col("event_type").asc_nulls_last)),
-    // exclusion funnel: first-view → first-purchase conversions split
-    // by whether a click fell INSIDE the interval — pattern negation
-    // via one interval join + distinct, never a per-user history array
-    "q185_exclusion_funnel" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id").as("u"), unix_micros(col("ts")).as("us"),
-          col("event_type").as("t"))
-      val tv = ev.where(col("t") === "view").groupBy(col("u"))
-        .agg(min(col("us")).as("tv"))
-      val tp = ev.where(col("t") === "purchase").join(tv, Seq("u"))
-        .where(col("us") >= col("tv"))
-        .groupBy(col("u"), col("tv")).agg(min(col("us")).as("tp"))
-      val via = tp.join(ev.where(col("t") === "click")
-          .select(col("u"), col("us").as("tc")), Seq("u"))
-        .where(col("tc") >= col("tv") && col("tc") <= col("tp"))
-        .select(col("u")).distinct()
-      val nConv = tp.agg(count(lit(1)).as("n_converted"))
-      val nVia = via.agg(count(lit(1)).as("n_via_click"))
-      nConv.crossJoin(nVia)
-        .select(col("n_converted"),
-          (col("n_converted") - col("n_via_click")).as("n_direct"),
-          col("n_via_click"),
-          when(col("n_converted") === 0, lit(0L))
-            .otherwise(expr("((n_converted - n_via_click) * 10000) DIV n_converted"))
-            .as("direct_bp"))
-    }),
-    // ORDER BY ... LIMIT/OFFSET pagination on a total order — page 3 of
-    // the longest-docs listing
-    "q186_pagination" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select("doc_id", "source", "n_chars")
-        .orderBy(col("n_chars").desc, col("doc_id").asc)
-        .offset(20).limit(10)),
-    // null-safe equality (<=> / IS NOT DISTINCT FROM): planted null keys
-    // must join to the null dim row, not vanish
-    "q187_null_safe_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"),
-          when(pmod(col("event_id"), lit(7)) === 0, lit(null))
-            .otherwise(col("event_type")).as("k"))
-      val dim = ev.groupBy(col("k")).agg(count(lit(1)).as("n_k"))
-        .select(col("k").as("k2"), col("n_k"))
-      ev.join(dim, col("k") <=> col("k2"))
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n_rows"), max(col("n_k")).as("n_k"))
-        .orderBy(col("k").asc_nulls_last)
-    }),
-    // scene-cut detection on ALL decoded frames (stride 1): 6dp luma
-    // micro-ticks, |Δ| ≥ 0.04 flags a cut; per-video cut census
-    "q182_scene_cuts" -> ((s, dir) => {
-      val frames = Multimodal.extractVideoFrameFeatures(
-        Multimodal.videoY4mFromDocuments(Tables.documents(s, dir)), stride = 1)
-        .toDF()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("media_id")).orderBy(col("frame_index"))
-      frames
-        .withColumn("__lm", floor(col("luma_mean") * 1000000 + 0.5).cast("long"))
-        .withColumn("__prev", lag(col("__lm"), 1).over(w))
-        .where(col("__prev").isNotNull)
-        .select(col("media_id"), col("frame_index"),
-          (abs(col("__lm") - col("__prev")) >= 40000L).cast("long").as("__cut"))
-        .groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_gaps"), sum(col("__cut")).as("n_cuts"),
-          min(when(col("__cut") === 1, col("frame_index"))).as("first_cut_idx"))
-        .orderBy("media_id")
-    }),
-    // per-source template extraction: LCP(group) = LCP(min, max) — two
-    // string aggregates + one bounded per-GROUP prefix scan; banner
-    // decoration plants real templates on two sources
-    "q183_source_template" -> ((s, dir) => {
-      val decorated = Tables.documents(s, dir)
-        .select(col("source"),
-          when(col("source").isin("src0", "src1"),
-            concat(lit("<<"), col("source"), lit(" banner>> "), col("text")))
-            .otherwise(col("text")).as("text"))
-      decorated
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), min(col("text")).as("__a"),
-          max(col("text")).as("__b"))
-        .withColumn("__n", least(length(col("__a")), length(col("__b"))))
-        .withColumn("lcp_len",
-          when(col("__n") > 0,
-            size(filter(sequence(lit(1), col("__n")),
-              i => col("__a").substr(lit(1), i) === col("__b").substr(lit(1), i)))
-              .cast("long"))
-            .otherwise(lit(0L)))
-        .select(col("source"), col("n_docs"), col("lcp_len"),
-          col("__a").substr(lit(1), least(col("lcp_len"), lit(40L)).cast("int"))
-            .as("lcp_prefix"))
-        .orderBy(col("source").asc_nulls_last)
-    }),
-    // the q87 fold per user-parity segment — funnels are composable
-    // over any partition of the user space
-    "q184_funnel_by_segment" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      def seg(p: Int) =
-        Engagement.funnel(ev.where(pmod(col("user_id"), lit(2)) === p),
-          "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-          .withColumn("segment", lit(s"u$p"))
-      seg(0).unionByName(seg(1))
-        .select("segment", "step_idx", "step_name", "users")
-        .orderBy("segment", "step_idx")
-    }),
-    // audio loudness-shape fingerprint through the REAL WAV parse:
-    // 16-block integer energies, 15 louder-than-previous bits
-    "q180_audio_contour" -> ((s, dir) =>
-      Multimodal.audioContours(
-        Multimodal.audioFromDocuments(Tables.documents(s, dir)))
-        .toDF().orderBy("media_id")),
-    // 3-step flow mining: two leads on the transitions exchange,
-    // top-20 with total tie order
-    "q181_flow_trigrams" -> ((s, dir) =>
-      Engagement.flowTrigrams(Tables.events(s, dir), "user_id", "ts",
-        "event_type", "event_id").orderBy("rank")),
-    // image dHash through the REAL PNG decode: 9x8 nearest-neighbor
-    // sample, horizontal-difference bits, simhash-style lo/hi split
-    "q178_image_phash" -> ((s, dir) =>
-      Multimodal.perceptualHashes(
-        Multimodal.fromDocuments(Tables.documents(s, dir)))
-        .toDF().orderBy("media_id")),
-    // pHash exact-dup groups over planted byte-identical twins — twin
-    // ids shift by a multiple of 35 = lcm(5, 7), so the id-derived
-    // dimensions (and hence the PNG payload) are preserved exactly
-    "q179_phash_groups" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val twins = docs.where(pmod(col("doc_id"), lit(6)) === 0)
-        .select((col("doc_id") + 3500000000L).as("doc_id"), col("text"))
-      Multimodal.perceptualHashes(
-        Multimodal.fromDocuments(docs.unionByName(twins)))
-        .toDF()
-        .groupBy(col("phash_lo"), col("phash_hi"))
-        .agg(count(lit(1)).as("n"), min(col("media_id")).as("min_id"),
-          max(col("media_id")).as("max_id"))
-        .where(col("n") > 1)
-        .orderBy("phash_lo", "phash_hi")
-    }),
-    // token-mass-weighted length percentiles per source: "p50 of the
-    // TOKENS sits in a doc of length X" — the truncation-policy metric
-    "q176_weighted_length" -> ((s, dir) =>
-      Stats.weightedQuantiles(
-        Tables.documents(s, dir).select(col("source"),
-          col("n_chars"), TextAnalysis.nTokensExpr(col("text")).as("n_tokens")),
-        keyCol = "source", valueCol = "n_chars", weightCol = "n_tokens")
-        .orderBy(col("source").asc_nulls_last)),
-    // skew-safe salted join (hot keys: 5 types across the corpus) — the
-    // salt must not change the RESULT, so the oracle is the plain join
-    "q177_salted_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("event_id", "event_type")
-      val dim = ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("type_total"))
-      Skew.saltedJoin(ev, dim, key = "event_type", salts = 8)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_joined"), max(col("type_total")).as("type_total"))
-        .orderBy("event_type")
-    }),
-    // correlated EXISTS, Spark-first: a left-semi join (the planner's
-    // own rewrite of EXISTS) — suppliers with a returned lineitem
-    "q173_exists_semijoin" -> ((s, dir) => {
-      val late = Tables.lineitem(s, dir)
-        .where(col("l_returnflag") === "R").select(col("l_suppkey"))
-      Tables.supplier(s, dir)
-        .join(late, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select("s_suppkey", "s_name").orderBy("s_suppkey")
-    }),
-    // correlated scalar subquery (above-nation-average balance) with an
-    // EXACT integer cross-multiply predicate — no double-fold averages
-    "q174_scalar_subquery" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-        .withColumn("__cents",
-          floor(col("c_acctbal") * 100 + 0.5).cast("long"))
-      val nAvg = c.groupBy(col("c_nationkey"))
-        .agg(sum(col("__cents")).as("__s"), count(lit(1)).as("__cnt"))
-      c.join(broadcast(nAvg), Seq("c_nationkey"))
-        .where(col("__cents") * col("__cnt") > col("__s"))
-        .select("c_custkey", "c_name", "c_acctbal").orderBy("c_custkey")
-    }),
-    // latest-record-per-entity: each customer's most recent order via
-    // one window rank (WindowGroupLimit) — the SCD-current lookup
-    "q175_latest_order" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-      Tables.orders(s, dir)
-        .withColumn("__rk", row_number().over(w))
-        .where(col("__rk") === 1)
-        .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .orderBy("o_custkey")
-    }),
-    // Benford first-digit audit on integer value ticks — expected
-    // shares enter as plan-time literal bp on BOTH engines (no runtime
-    // float), deviation in abs bp
-    "q172_benford" -> ((s, dir) => {
-      val ticks = floor(col("value") * 100).cast("long")
-      // element_at keeps the literal array's LONG type; elt would
-      // string-coerce its varargs and leak a VARCHAR exp_bp column
-      val exp = expr("element_at(array(3010L, 1761L, 1249L, 969L, 792L, 669L, 580L, 512L, 458L), cast(digit AS INT))")
-      Tables.events(s, dir)
-        .where(col("value").isNotNull && !isnan(col("value")) && ticks >= 1)
-        .select(substring(ticks.cast("string"), 1, 1).cast("long").as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-        .withColumn("obs_bp", expr("(n * 10000) DIV sum(n) OVER ()"))
-        .withColumn("exp_bp", exp)
-        .select(col("digit"), col("n"), col("obs_bp"), col("exp_bp"),
-          abs(col("obs_bp") - col("exp_bp")).as("dev_bp"))
-        .orderBy("digit")
-    }),
-    // hour-of-day × type activity heatmap with per-type share bp — the
-    // 24-cell grid window is bounded by construction
-    "q160_hourly_heatmap" -> ((s, dir) => {
-      val wT = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"))
-      Tables.events(s, dir).where(col("ts").isNotNull)
-        .groupBy(col("event_type"), hour(col("ts")).cast("long").as("hour"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("share_bp",
-          expr("(n * 10000) DIV sum(n) OVER (PARTITION BY event_type)"))
-        .select("event_type", "hour", "n", "share_bp")
-        .orderBy(col("event_type").asc_nulls_last, col("hour").asc_nulls_last)
-    }),
-    // vocabulary health: hapax share per source on corpus-global
-    // occurrence counts — Zipf-healthy text runs ~40-60%, templated
-    // text collapses, OCR junk explodes
-    "q287_hapax_census" -> ((s, dir) =>
-      TextAnalysis.hapaxCensus(Tables.documents(s, dir))),
-    // raw docs over distinct normalized fingerprints per source, the
-    // "how much of this source is re-posts" pre-dedup review number
-    "q288_dup_inflation" -> ((s, dir) =>
-      Dedup.dupInflation(Tables.documents(s, dir))),
-    // corpus-head burstiness: of each top-20 token's occurrences, the
-    // distinct-doc share in floor bp (10000 = function word, low =
-    // templated/bursty)
-    "q289_token_dispersion" -> ((s, dir) =>
-      TextAnalysis.tokenDispersion(Tables.documents(s, dir)).orderBy("rank")),
-    // label-noise candidates: worst-20 own-centroid-minus-best-rival
-    // cosine margins (negative = another class explains the vector
-    // better than its own label)
-    "q290_label_margin" -> ((s, dir) =>
-      Similarity.labelMarginWorst(Tables.embeddings(s, dir)).orderBy("rank")),
-    // Neyman-optimal annotation-budget split across sources: exact
-    // integer spread weights (sqrt of N·Σt²−(Σt)² over quality ticks),
-    // largest-remainder rounding sums to exactly the budget
-    "q291_neyman_allocation" -> ((s, dir) =>
-      Stats.neymanAllocation(
-        Tables.documents(s, dir).select(
-          coalesce(col("source").cast("string"), lit("<none>")).as("src"),
-          floor(TextAnalysis.qualityExpr(col("text")) * 10000 + 0.5)
-            .cast("long").as("qt")),
-        keyCol = "src", tickCol = "qt", budget = 10000L)),
-    // reciprocal best-Jaccard partners across the doc-parity split —
-    // the cross-snapshot alignment primitive over verified LSH pairs
-    "q292_mutual_best" -> ((s, dir) =>
-      Dedup.mutualBestMatch(Tables.documents(s, dir)).orderBy("doc_even")),
-    // Heaps-law vocab-growth checkpoints + log-log OLS slope: tokens
-    // are new at their MIN doc rank, so no running distinct anywhere
-    "q293_heaps_law" -> ((s, dir) =>
-      TextAnalysis.heapsLawCurve(Tables.documents(s, dir))),
-    // unsupervised-vs-labels agreement: majority-label share per
-    // deterministic Voronoi cell (zero-norm and unlabeled excluded)
-    "q294_cluster_purity" -> ((s, dir) =>
-      Similarity.clusterLabelPurity(Tables.embeddings(s, dir))),
-    // banding design table from ONE signature set: exact candidate-pair
-    // volume from bucket sizes (zero pair materialization) + exact
-    // rational expected recall at θ=1/2
-    "q295_lsh_design" -> ((s, dir) =>
-      Dedup.lshDesignTable(Tables.documents(s, dir))),
-    // per-source log-normal length fit: integer log-tick moments, μ as
-    // one floor DIV, σ from the exact variance numerator
-    "q296_lognormal_fit" -> ((s, dir) =>
-      Stats.lognormalFit(
-        Tables.documents(s, dir).select(
-          coalesce(col("source").cast("string"), lit("<none>")).as("src"),
-          col("n_chars")),
-        keyCol = "src", valueCol = "n_chars")),
-    // recall@10 vs probes bought: micro-averaged IVF recall per nProbe
-    // against the shared exact brute top-k
-    "q297_ivf_probe_curve" -> ((s, dir) =>
-      Similarity.ivfProbeCurve(Tables.embeddings(s, dir),
-        pmod(col("vec_id"), lit(100)) === 0)),
-    // similarity-band census over the exact 19/20 pair graph — integer
-    // percent bands, complete recall inherited from exactJaccardPairs
-    "q298_jaccard_bands" -> ((s, dir) =>
-      Dedup.jaccardBandCensus(Tables.documents(s, dir), 19, 20)),
-    // duplicate-degree histogram: mega-family vs long-tail diagnostic
-    "q299_dup_degree" -> ((s, dir) =>
-      Dedup.dupDegreeCensus(Tables.documents(s, dir), 19, 20)),
-    // shingle novelty by ingest epoch: the diminishing-returns curve
-    "q300_novelty_decay" -> ((s, dir) =>
-      TextAnalysis.arrivalNoveltyDecay(Tables.documents(s, dir))),
-    // sketch-error-by-band card over q103's verified candidate pairs
-    "q301_minhash_error" -> ((s, dir) =>
-      Dedup.minhashErrorCensus(Tables.documents(s, dir))),
-    // Hamming spectrum of the simhash candidate pairs (radius tuning)
-    "q302_simhash_census" -> ((s, dir) =>
-      Dedup.simhashHammingCensus(Tables.documents(s, dir))),
-    // shingle df mass in power-of-two bands (the maxDf knob card)
-    "q303_df_spectrum" -> ((s, dir) =>
-      Dedup.shingleDfSpectrum(Tables.documents(s, dir))),
-    // image near-dedup: dHash pairs within Hamming 3 via the shared
-    // 4x16 banded pigeonhole join; oracle is brute all-pairs
-    "q304_phash_pairs" -> ((s, dir) =>
-      Multimodal.phashNearDupPairs(
-        Multimodal.fromDocuments(Tables.documents(s, dir)))
-        .orderBy("media_a", "media_b")),
-    // span-level exact-substring REMOVAL (the q64 detection's action):
-    // repeated 13-gram spans cut from every doc but the first container
-    "q305_span_dedup" -> ((s, dir) =>
-      TextAnalysis.dedupSpans(Tables.documents(s, dir)).orderBy("doc_id")),
-    // SimHash pairs past the 4-band completeness radius: multi-probe
-    // (one-bit flips per band) reaches Hamming 6; oracle is brute
-    // all-pairs over the same portable sketches, so the driver compare
-    // proves probe completeness the way q304's does for banding
-    "q306_multiprobe_simhash" -> ((s, dir) =>
-      Dedup.simhashPairsMultiProbe(Tables.documents(s, dir), maxHamming = 6)
-        .orderBy("doc_a", "doc_b")),
-  )
-
-  /** q98's mixture config: one source kept whole, one dropped whole,
-    * the long tail half-sampled — chosen so the manifest diff exercises
-    * unchanged, added, AND changed cells. */
-  private val DiffRates: Map[String, Double] =
-    Map("src0" -> 1.0, "src1" -> 0.0)
-
-  /** Production-hash twins of the md5-salted operators — BENCH-ONLY
-    * surface, not part of [[queries]]: xxhash64 is not recomputable in
-    * an md5-only oracle engine, so these have no DuckDB entries; the
-    * swap's correctness is spec-pinned instead (same survivor shape /
-    * independent recompute in DedupSimilaritySpec). Bench runs them
-    * alongside the oracle queries so the md5-vs-production cost gap is
-    * a measured number per round, not a claim — md5-per-token/k-gram is
-    * the dominant CPU cost of q45/q67/q71-class queries.
-    */
-  def prodVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x45_winnowing_prod" -> ((s, dir) =>
-      TextAnalysis.winnowingFingerprints(Tables.documents(s, dir), prodHash = true)
-        .select(col("doc_id"), explode(col("fingerprints")).as("fingerprint"))
-        .orderBy("doc_id", "fingerprint")),
-    "x67_quality_classifier_prod" -> ((s, dir) =>
-      TextAnalysis.hashedClassifierScore(Tables.documents(s, dir),
-        hash32 = TextAnalysis.xxHash32)),
-    "x71_corpus_prep_full_prod" -> ((s, dir) =>
-      CorpusPrep.prepareFull(piiDecorated(Tables.documents(s, dir)),
-        numPerms = 16, bands = 8, // default xxhashBase sketch + xx salts
-        classifierThreshold = -0.2,
-        rates = MixtureRates, defaultRate = 0.75,
-        hash32 = TextAnalysis.xxHash32).orderBy("doc_id")),
-    "x74_token_budget_prod" -> ((s, dir) =>
-      TextAnalysis.tokenBudgetSample(Tables.documents(s, dir),
-        budgetTokens = 12000L, prodHash = true).orderBy("doc_id")),
-    "x96_manifest_prod" -> ((s, dir) =>
-      TextAnalysis.datasetManifest(Tables.documents(s, dir),
-        hash32 = TextAnalysis.xxHash32)
-        .orderBy("split", "source")),
-  )
-
-  /** q68's mixture config: named-source rates over the corpus's src0..19
-    * with a default for the long tail — integer cuts land on exact
-    * hundredths so the oracle replays them as literals. */
-  private val MixtureRates: Map[String, Double] =
-    Map("src0" -> 1.0, "src1" -> 0.75, "src2" -> 0.5, "src3" -> 0.25)
-
-  /** q66's fixture: rebuild each document as newline-delimited 8-token
-    * lines (the corpus carries no natural newlines). The SQL twin is
-    * [[LineifySql]]. */
-  private def lineified(docs: DataFrame): DataFrame = {
-    val w = TextAnalysis.tokens(TextAnalysis.asciiLower(col("text")))
-    docs.where(size(w) > 0)
-      .select(col("doc_id"),
-        array_join(
-          transform(sequence(lit(0), floor((size(w) - 1).cast("double") / 8).cast("int")),
-            i => array_join(slice(w, i * 8 + 1, lit(8)), " ")),
-          "\n").as("text"))
-  }
-
-  /** Deterministic PII decoration for q60/q63: id-selected docs gain an
-    * email / phone / IP span derived from the id, so expected counts and
-    * redactions are recomputable in any engine without real PII data. */
-  private def piiDecorated(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      concat(col("text"),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit(" contact user"), col("doc_id").cast("string"), lit("@example.com")))
-          .otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(5)) === 0, lit(" call 555-867-5309"))
-          .otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          concat(lit(" host 10.0."), pmod(col("doc_id"), lit(250)).cast("string"), lit(".25")))
-          .otherwise(lit(""))).as("text"))
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         |  $RevenueSumSql AS sum_disc_price,
-         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-         |  count(*) AS count_order
-         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1999-09-01'
-         |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_pushdown" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-        |  strftime(l_shipdate, '%Y-%m-%d') AS shipdate
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_quantity < 25 AND l_discount BETWEEN 0.02 AND 0.06
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q03_top_revenue_orders" ->
-      s"""SELECT l_orderkey, $RevenueSumSql AS revenue,
-         |  strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority
-         |FROM customer
-         |JOIN orders ON c_custkey = o_custkey
-         |JOIN lineitem ON l_orderkey = o_orderkey
-         |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-01-01'
-         |  AND l_shipdate > TIMESTAMP '1997-01-01'
-         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q04_broadcast_dim_join" ->
-      """SELECT p_brand, p_type, count(*) AS n_items,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  max(l_quantity) AS max_qty
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand, p_type ORDER BY p_brand, p_type""".stripMargin,
-    "q05_region_volume" ->
-      s"""SELECT r_name, n_name, $RevenueSumSql AS revenue, count(*) AS n_lineitems
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         |JOIN nation ON s_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q06_first_match_dedup" ->
-      """SELECT p_brand, p_partkey, p_name FROM (
-        |  SELECT p_brand, p_partkey, p_name,
-        |         row_number() OVER (PARTITION BY p_brand ORDER BY p_partkey) AS rn
-        |  FROM part) t
-        |WHERE rn = 1 ORDER BY p_brand""".stripMargin,
-    "q07_percentiles" ->
-      """SELECT c_mktsegment,
-        |  round(quantile_cont(c_acctbal, 0.5), 4) AS p50,
-        |  round(quantile_cont(c_acctbal, 0.95), 4) AS p95,
-        |  round(quantile_cont(c_acctbal, 0.99), 4) AS p99,
-        |  max(c_acctbal) AS max_bal, count(*) AS n
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q08_no_order_customers" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q28_count_distinct" ->
-      s"""SELECT event_type AS symbol, count(DISTINCT user_id) AS n_users, count(*) AS n_events
-        |FROM events WHERE $TickWhere
-        |GROUP BY event_type ORDER BY symbol""".stripMargin,
-    "q29_pivot" ->
-      """SELECT user_id,
-        |  count(*) FILTER (event_type = 'click') AS n_click,
-        |  count(*) FILTER (event_type = 'error') AS n_error,
-        |  count(*) FILTER (event_type = 'purchase') AS n_purchase,
-        |  count(*) FILTER (event_type = 'signup') AS n_signup,
-        |  count(*) FILTER (event_type = 'view') AS n_view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q25_set_ops" ->
-      """SELECT c.c_custkey, c.c_name
-        |FROM ((SELECT DISTINCT o_custkey AS c_custkey FROM orders)
-        |      EXCEPT
-        |      (SELECT DISTINCT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 200000.0)) t
-        |JOIN customer c USING (c_custkey)
-        |ORDER BY c.c_custkey""".stripMargin,
-    "q26_ranking" ->
-      """SELECT o_orderpriority, rnk, drnk, o_orderkey, o_totalprice FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |         CAST(rank() OVER (PARTITION BY o_orderpriority
-        |           ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rnk,
-        |         CAST(dense_rank() OVER (PARTITION BY o_orderpriority
-        |           ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS drnk
-        |  FROM orders) t
-        |WHERE rnk <= 5 ORDER BY o_orderpriority, rnk, o_orderkey""".stripMargin,
-    "q27_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q10_ohlc_candles" ->
-      s"""WITH $CandleCte
-         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start, symbol,
-         |       open, high, low, close, tick_count
-         |FROM candles ORDER BY 1, symbol""".stripMargin,
-    "q11_gap_fill" ->
-      s"""WITH $CandleCte,
-         |bounds AS (SELECT min(window_start) AS wmin, max(window_start) AS wmax FROM candles),
-         |wins AS (SELECT unnest(generate_series(wmin, wmax, INTERVAL 5 MINUTE)) AS window_start FROM bounds),
-         |grid AS (SELECT w.window_start, s.symbol
-         |         FROM wins w CROSS JOIN (SELECT DISTINCT symbol FROM candles) s),
-         |filled AS (
-         |  SELECT g.window_start, g.symbol, c.open, c.high, c.low, c.close, c.tick_count,
-         |         last_value(c.close IGNORE NULLS) OVER (PARTITION BY g.symbol ORDER BY g.window_start
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_close
-         |  FROM grid g LEFT JOIN candles c ON g.window_start = c.window_start AND g.symbol = c.symbol)
-         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start, symbol,
-         |       coalesce(open, prev_close) AS open, coalesce(high, prev_close) AS high,
-         |       coalesce(low, prev_close) AS low, coalesce(close, prev_close) AS close,
-         |       coalesce(tick_count, 0) AS tick_count,
-         |       (tick_count IS NULL AND prev_close IS NOT NULL) AS gap_filled
-         |FROM filled
-         |WHERE tick_count IS NOT NULL OR prev_close IS NOT NULL
-         |ORDER BY symbol, window_start""".stripMargin,
-    "q12_true_range" ->
-      s"""WITH $CandleCte,
-         |tr AS (
-         |  SELECT symbol, window_start, high, low, close,
-         |         lag(close) OVER (PARTITION BY symbol ORDER BY window_start) AS prev_close
-         |  FROM candles)
-         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start, symbol,
-         |  round(CASE WHEN prev_close IS NULL THEN high - low
-         |        ELSE greatest(high - low, abs(high - prev_close), abs(low - prev_close)) END, 4) AS tr
-         |FROM tr ORDER BY symbol, window_start""".stripMargin,
-    "q13_atr_wilder" ->
-      s"""WITH RECURSIVE $CandleCte,
-         |seq_c AS (
-         |  SELECT symbol, window_start, high, low, close,
-         |         row_number() OVER (PARTITION BY symbol ORDER BY window_start) AS rn,
-         |         lag(close) OVER (PARTITION BY symbol ORDER BY window_start) AS prev_close
-         |  FROM candles),
-         |tr AS (
-         |  SELECT symbol, window_start, rn,
-         |         round(CASE WHEN prev_close IS NULL THEN high - low
-         |               ELSE greatest(high - low, abs(high - prev_close), abs(low - prev_close)) END, 4) AS tr
-         |  FROM seq_c),
-         |tri AS (
-         |  SELECT symbol, window_start, rn, tr, CAST(round(tr * 10000) AS BIGINT) AS tr_i FROM tr),
-         |warm AS (
-         |  SELECT symbol, rn, window_start, tr, tr_i,
-         |         CAST(sum(tr_i) OVER (PARTITION BY symbol ORDER BY rn
-         |           ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS BIGINT) AS sum14
-         |  FROM tri),
-         |atr AS (
-         |  SELECT symbol, rn, window_start, tr, tr_i,
-         |         greatest(CAST((sum14 + 7) // 14 AS BIGINT), 0) AS atr_i
-         |  FROM warm WHERE rn = 14
-         |  UNION ALL
-         |  SELECT t.symbol, t.rn, t.window_start, t.tr, t.tr_i,
-         |         greatest(CAST((a.atr_i * 13 + t.tr_i + 7) // 14 AS BIGINT), 0) AS atr_i
-         |  FROM atr a JOIN tri t ON t.symbol = a.symbol AND t.rn = a.rn + 1)
-         |SELECT strftime(w.window_start, '%Y-%m-%d %H:%M:%S') AS window_start, w.symbol, w.tr,
-         |       a.atr_i / 10000.0 AS atr
-         |FROM warm w LEFT JOIN atr a ON a.symbol = w.symbol AND a.rn = w.rn
-         |ORDER BY w.symbol, w.window_start""".stripMargin,
-    "q14_row_ids" ->
-      s"""WITH $CandleCte,
-         |ids AS (
-         |  SELECT symbol || '_' || strftime(window_start, '%Y%m%d_%H%M') AS id, symbol,
-         |         strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start
-         |  FROM candles)
-         |SELECT id, symbol, window_start,
-         |       regexp_extract(id, '^(.*)_(\\d{8}_\\d{4})$$', 1) AS parsed_symbol,
-         |       regexp_extract(id, '^(.*)_(\\d{8}_\\d{4})$$', 2) AS parsed_window
-         |FROM ids ORDER BY id""".stripMargin,
-    "q15_dedup_antijoin" ->
-      s"""WITH $CandleCte,
-         |ids AS (
-         |  SELECT symbol || '_' || strftime(window_start, '%Y%m%d_%H%M') AS id,
-         |         symbol, window_start, close
-         |  FROM candles),
-         |sink AS (SELECT id FROM ids WHERE CAST(strftime(window_start, '%d') AS INT) <= 15)
-         |SELECT i.id, i.symbol, strftime(i.window_start, '%Y-%m-%d %H:%M:%S') AS window_start, i.close
-         |FROM ids i WHERE NOT EXISTS (SELECT 1 FROM sink s WHERE s.id = i.id)
-         |ORDER BY i.id""".stripMargin,
-    "q51_gap_fill_sessions" ->
-      s"""WITH $CandleCte,
-         |cd AS (SELECT *, CAST(window_start AS DATE) AS d FROM candles),
-         |db AS (SELECT d, min(window_start) AS wmin, max(window_start) AS wmax FROM cd GROUP BY d),
-         |wins AS (SELECT d, unnest(generate_series(wmin, wmax, INTERVAL 5 MINUTE)) AS window_start FROM db),
-         |syms AS (SELECT DISTINCT symbol FROM candles),
-         |grid AS (SELECT w.d, w.window_start, s.symbol FROM wins w CROSS JOIN syms s),
-         |j AS (SELECT g.d, g.window_start, g.symbol, c.open, c.high, c.low, c.close, c.tick_count
-         |      FROM grid g LEFT JOIN cd c ON c.window_start = g.window_start AND c.symbol = g.symbol),
-         |dl AS (SELECT symbol, d, arg_max(close, window_start) AS day_close
-         |       FROM cd GROUP BY symbol, d),
-         |seeds AS (
-         |  SELECT sg.symbol, sg.d,
-         |         last_value(dl.day_close IGNORE NULLS) OVER (PARTITION BY sg.symbol ORDER BY sg.d
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS seed
-         |  FROM (SELECT db.d, s.symbol FROM db CROSS JOIN syms s) sg
-         |  LEFT JOIN dl ON dl.symbol = sg.symbol AND dl.d = sg.d),
-         |intr AS (
-         |  SELECT j.*, coalesce(
-         |      last_value(j.close IGNORE NULLS) OVER (PARTITION BY j.symbol, j.d ORDER BY j.window_start
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |      se.seed) AS prev_close
-         |  FROM j JOIN seeds se ON se.symbol = j.symbol AND se.d = j.d)
-         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start, symbol,
-         |       coalesce(open, prev_close) AS open, coalesce(high, prev_close) AS high,
-         |       coalesce(low, prev_close) AS low, coalesce(close, prev_close) AS close,
-         |       coalesce(tick_count, 0) AS tick_count,
-         |       (tick_count IS NULL AND prev_close IS NOT NULL) AS gap_filled
-         |FROM intr
-         |WHERE tick_count IS NOT NULL OR prev_close IS NOT NULL
-         |ORDER BY symbol, window_start""".stripMargin,
-    "q16_missing_census" ->
-      s"""WITH $CandleCte,
-         |bounds AS (SELECT min(window_start) AS wmin, max(window_start) AS wmax FROM candles),
-         |wins AS (SELECT unnest(generate_series(wmin, wmax, INTERVAL 5 MINUTE)) AS window_start FROM bounds),
-         |grid AS (SELECT w.window_start, s.symbol
-         |         FROM wins w CROSS JOIN (SELECT DISTINCT symbol FROM candles) s)
-         |SELECT strftime(g.window_start, '%Y-%m-%d %H:%M:%S') AS window_start, g.symbol
-         |FROM grid g
-         |WHERE NOT EXISTS (SELECT 1 FROM candles c
-         |                  WHERE c.window_start = g.window_start AND c.symbol = g.symbol)
-         |ORDER BY g.symbol, g.window_start""".stripMargin,
-    "q54_missing_census_sessions" ->
-      s"""WITH $CandleCte,
-         |cd AS (SELECT *, CAST(window_start AS DATE) AS d FROM candles),
-         |db AS (SELECT d, min(window_start) AS wmin, max(window_start) AS wmax FROM cd GROUP BY d),
-         |wins AS (SELECT unnest(generate_series(wmin, wmax, INTERVAL 5 MINUTE)) AS window_start FROM db),
-         |grid AS (SELECT w.window_start, s.symbol
-         |         FROM wins w CROSS JOIN (SELECT DISTINCT symbol FROM candles) s)
-         |SELECT strftime(g.window_start, '%Y-%m-%d %H:%M:%S') AS window_start, g.symbol
-         |FROM grid g
-         |WHERE NOT EXISTS (SELECT 1 FROM candles c
-         |                  WHERE c.window_start = g.window_start AND c.symbol = g.symbol)
-         |ORDER BY g.symbol, g.window_start""".stripMargin,
-    "q17_sink_readback_max" ->
-      s"""SELECT event_type AS symbol,
-        |       strftime(max(CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') AS max_ts,
-        |       count(*) AS n
-        |FROM events WHERE $TickWhere
-        |GROUP BY event_type ORDER BY symbol""".stripMargin,
-    "q18_state_reconcile" ->
-      s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events
-        |            WHERE $TickWhere),
-        |a AS (SELECT event_type AS symbol, value AS close_a FROM (
-        |        SELECT event_type, value,
-        |               row_number() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC) AS rn
-        |        FROM ev WHERE ts < TIMESTAMP '2024-01-16') t WHERE rn = 1),
-        |b AS (SELECT event_type AS symbol, value AS close_b FROM (
-        |        SELECT event_type, value,
-        |               row_number() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC) AS rn
-        |        FROM ev) t WHERE rn = 1)
-        |SELECT coalesce(a.symbol, b.symbol) AS symbol, a.close_a, b.close_b,
-        |       coalesce(b.close_b, a.close_a) AS resolved,
-        |       (a.close_a IS NOT NULL AND b.close_b IS NOT NULL
-        |        AND abs(a.close_a - b.close_b) > 0.0001) AS diverged
-        |FROM a FULL OUTER JOIN b ON a.symbol = b.symbol ORDER BY symbol""".stripMargin,
-    "q19_session_filter" ->
-      """SELECT event_id, event_type, value,
-        |       strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS ts_s
-        |FROM events
-        |WHERE (CAST(strftime(CAST(ts AS TIMESTAMP), '%H') AS INT) * 60
-        |       + CAST(strftime(CAST(ts AS TIMESTAMP), '%M') AS INT)) BETWEEN 555 AND 929
-        |  AND isodow(CAST(ts AS TIMESTAMP)) BETWEEN 1 AND 5
-        |ORDER BY event_id""".stripMargin,
-    "q20_sessionize" ->
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events
-        |            WHERE ts IS NOT NULL),
-        |l AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev),
-        |m AS (SELECT *, CASE WHEN prev_ts IS NULL
-        |                     OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |      FROM l),
-        |s AS (SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM m)
-        |SELECT user_id, session_id,
-        |       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |       strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(CASE WHEN isnan(value) THEN NULL ELSE value END
-        |                AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    // WHERE ts IS NOT NULL mirrors Spark's session_window, whose
-    // event-time rewrite silently filters null timestamps
-    "q24_session_window" ->
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events
-        |            WHERE ts IS NOT NULL),
-        |l AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev),
-        |m AS (SELECT *, CASE WHEN prev_ts IS NULL
-        |                     OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000 THEN 1 ELSE 0 END AS is_new
-        |      FROM l),
-        |s AS (SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid FROM m)
-        |SELECT user_id,
-        |       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |       strftime(max(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS session_end,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(CASE WHEN isnan(value) THEN NULL ELSE value END
-        |                AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-    "q21_moving_avg" ->
-      s"""WITH $CandleCte
-         |SELECT symbol, strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start, close,
-         |       round(avg(close) OVER (PARTITION BY symbol ORDER BY window_start
-         |         ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS ma4
-         |FROM candles ORDER BY symbol, window_start""".stripMargin,
-    "q09_buffer_stats" ->
-      s"""WITH $CandleCte
-         |SELECT symbol, count(*) AS n_windows,
-         |       CAST(sum(tick_count) AS BIGINT) AS total_ticks,
-         |       max(tick_count) AS max_ticks
-         |FROM candles GROUP BY symbol ORDER BY symbol""".stripMargin,
-    "q22_atr_jumps" ->
-      s"""WITH RECURSIVE $CandleCte,
-         |seq_c AS (
-         |  SELECT symbol, window_start, high, low, close,
-         |         row_number() OVER (PARTITION BY symbol ORDER BY window_start) AS rn,
-         |         lag(close) OVER (PARTITION BY symbol ORDER BY window_start) AS prev_close
-         |  FROM candles),
-         |tr AS (
-         |  SELECT symbol, window_start, rn,
-         |         round(CASE WHEN prev_close IS NULL THEN high - low
-         |               ELSE greatest(high - low, abs(high - prev_close), abs(low - prev_close)) END, 4) AS tr
-         |  FROM seq_c),
-         |tri AS (
-         |  SELECT symbol, window_start, rn, tr, CAST(round(tr * 10000) AS BIGINT) AS tr_i FROM tr),
-         |warm AS (
-         |  SELECT symbol, rn, window_start, tr, tr_i,
-         |         CAST(sum(tr_i) OVER (PARTITION BY symbol ORDER BY rn
-         |           ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS BIGINT) AS sum14
-         |  FROM tri),
-         |atr AS (
-         |  SELECT symbol, rn, window_start, greatest(CAST((sum14 + 7) // 14 AS BIGINT), 0) AS atr_i
-         |  FROM warm WHERE rn = 14
-         |  UNION ALL
-         |  SELECT t.symbol, t.rn, t.window_start,
-         |         greatest(CAST((a.atr_i * 13 + t.tr_i + 7) // 14 AS BIGINT), 0) AS atr_i
-         |  FROM atr a JOIN tri t ON t.symbol = a.symbol AND t.rn = a.rn + 1)
-         |SELECT a.symbol, strftime(a.window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-         |       p.atr_i / 10000.0 AS prev_atr, a.atr_i / 10000.0 AS atr
-         |FROM atr a JOIN atr p ON p.symbol = a.symbol AND p.rn = a.rn - 1
-         |WHERE p.atr_i > 0 AND a.atr_i / 10000.0 > (p.atr_i / 10000.0) * 1.2
-         |ORDER BY a.symbol, a.window_start""".stripMargin,
-    "q23_ohlc_violations" ->
-      s"""WITH $CandleCte
-         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start, symbol,
-         |       open, high, low, close
-         |FROM candles
-         |WHERE high < greatest(open, close) OR low > least(open, close)
-         |ORDER BY symbol, window_start""".stripMargin,
-    "q52_corpus_prep" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_toks,
-        |    CAST(len(regexp_extract_all(text, '[\.,;:!\?]')) AS BIGINT) AS n_punct,
-        |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'on', 'for', 'with'))) AS BIGINT) AS n_stop
-        |  FROM documents),
-        |qual AS (
-        |  SELECT doc_id, CAST(n_toks AS BIGINT) AS n_tokens,
-        |    CAST(CAST(CASE
-        |      WHEN n_chars = 0 THEN 2000 + 25 * least(n_toks, 200)
-        |      WHEN n_toks = 0 THEN
-        |        (4000 * (n_chars - least(4 * (n_punct + n_digit), n_chars)) + n_chars)
-        |          // (2 * n_chars)
-        |      ELSE 25 * least(n_toks, 200)
-        |        + (2 * (3000 * least(5 * n_stop, n_toks) * n_chars
-        |                - 2000 * least(4 * (n_punct + n_digit), n_chars) * n_toks
-        |                + 2000 * n_toks * n_chars)
-        |           + n_toks * n_chars)
-        |          // (2 * n_toks * n_chars)
-        |    END AS BIGINT) AS DOUBLE) / 10000.0 AS quality
-        |  FROM t),
-        |ls AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-        |  FROM documents),
-        |lang AS (
-        |  SELECT doc_id, CASE
-        |    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |    WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |    WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |    WHEN s_fr >= s_zh THEN 'fr'
-        |    ELSE 'zh' END AS predicted_lang
-        |  FROM ls),
-        |fp AS (SELECT doc_id, md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g'))) AS fingerprint
-        |       FROM documents),
-        |canon AS (SELECT fingerprint, min(doc_id) AS keep_id FROM fp GROUP BY fingerprint),
-        |w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-        |perms AS (
-        |  SELECT perm,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-        |  FROM (SELECT unnest(range(0, 16)) AS perm) t),
-        |sig AS (
-        |  SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-        |  FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-        |banded AS (
-        |  SELECT doc_id, perm // 2 AS band,
-        |         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY perm) AS key
-        |  FROM sig GROUP BY doc_id, perm // 2),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        |                              AND a.doc_id < b.doc_id),
-        |est AS (
-        |  SELECT c.doc_a, c.doc_b,
-        |         CAST((2 * sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) * 10000 + 16) // 32 AS DOUBLE) / 10000.0 AS est_jaccard
-        |  FROM cand c
-        |  JOIN sig sa ON sa.doc_id = c.doc_a
-        |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.perm = sa.perm
-        |  GROUP BY c.doc_a, c.doc_b),
-        |pr AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= 0.5),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-        |          UNION SELECT doc_b, doc_a FROM pr),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |dropped AS (
-        |  SELECT src AS doc_id FROM reach GROUP BY src
-        |  HAVING least(src, min(dst)) < src)
-        |SELECT q.doc_id, q.n_tokens, q.quality
-        |FROM qual q
-        |JOIN lang l ON l.doc_id = q.doc_id AND l.predicted_lang = 'en'
-        |JOIN fp ON fp.doc_id = q.doc_id
-        |JOIN canon c ON c.fingerprint = fp.fingerprint AND c.keep_id = q.doc_id
-        |WHERE q.quality >= 0.4
-        |  AND NOT EXISTS (SELECT 1 FROM dropped d WHERE d.doc_id = q.doc_id)
-        |ORDER BY q.doc_id""".stripMargin,
-    "q49_salted_agg" ->
-      s"""SELECT event_type AS symbol, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events WHERE $TickWhere
-        |GROUP BY event_type ORDER BY symbol""".stripMargin,
-    "q50_full_pipeline" ->
-      s"""WITH RECURSIVE ev AS (
-         |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type AS symbol, value FROM events
-         |  WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-05'
-         |    AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-06'
-         |    AND $TickWhere
-         |), ranked AS (
-         |  SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS window_start, symbol, value,
-         |         row_number() OVER (PARTITION BY symbol, time_bucket(INTERVAL 5 MINUTE, ts) ORDER BY ts, event_id) AS rn_a,
-         |         row_number() OVER (PARTITION BY symbol, time_bucket(INTERVAL 5 MINUTE, ts) ORDER BY ts DESC, event_id DESC) AS rn_d
-         |  FROM ev
-         |), candles AS (
-         |  SELECT window_start, symbol,
-         |         max(CASE WHEN rn_a = 1 THEN value END) AS open,
-         |         max(value) AS high,
-         |         min(value) AS low,
-         |         max(CASE WHEN rn_d = 1 THEN value END) AS close,
-         |         count(*) AS tick_count
-         |  FROM ranked GROUP BY window_start, symbol
-         |),
-         |bounds AS (SELECT min(window_start) AS wmin, max(window_start) AS wmax FROM candles),
-         |wins AS (SELECT unnest(generate_series(wmin, wmax, INTERVAL 5 MINUTE)) AS window_start FROM bounds),
-         |grid AS (SELECT w.window_start, s.symbol
-         |         FROM wins w CROSS JOIN (SELECT DISTINCT symbol FROM candles) s),
-         |filled0 AS (
-         |  SELECT g.window_start, g.symbol, c.open, c.high, c.low, c.close, c.tick_count,
-         |         last_value(c.close IGNORE NULLS) OVER (PARTITION BY g.symbol ORDER BY g.window_start
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pc
-         |  FROM grid g LEFT JOIN candles c ON g.window_start = c.window_start AND g.symbol = c.symbol),
-         |fc AS (
-         |  SELECT window_start, symbol,
-         |         coalesce(open, pc) AS open, coalesce(high, pc) AS high,
-         |         coalesce(low, pc) AS low, coalesce(close, pc) AS close,
-         |         coalesce(tick_count, 0) AS tick_count,
-         |         (tick_count IS NULL AND pc IS NOT NULL) AS gap_filled
-         |  FROM filled0 WHERE tick_count IS NOT NULL OR pc IS NOT NULL),
-         |seq_c AS (
-         |  SELECT *, row_number() OVER (PARTITION BY symbol ORDER BY window_start) AS rn,
-         |         lag(close) OVER (PARTITION BY symbol ORDER BY window_start) AS prev_close
-         |  FROM fc),
-         |tr AS (
-         |  SELECT window_start, symbol, open, high, low, close, tick_count, gap_filled, rn,
-         |         round(CASE WHEN prev_close IS NULL THEN high - low
-         |               ELSE greatest(high - low, abs(high - prev_close), abs(low - prev_close)) END, 4) AS tr
-         |  FROM seq_c),
-         |tri AS (SELECT *, CAST(round(tr * 10000) AS BIGINT) AS tr_i FROM tr),
-         |warm AS (
-         |  SELECT *, CAST(sum(tr_i) OVER (PARTITION BY symbol ORDER BY rn
-         |           ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS BIGINT) AS sum14
-         |  FROM tri),
-         |atr AS (
-         |  SELECT symbol, rn, greatest(CAST((sum14 + 7) // 14 AS BIGINT), 0) AS atr_i
-         |  FROM warm WHERE rn = 14
-         |  UNION ALL
-         |  SELECT t.symbol, t.rn, greatest(CAST((a.atr_i * 13 + t.tr_i + 7) // 14 AS BIGINT), 0) AS atr_i
-         |  FROM atr a JOIN tri t ON t.symbol = a.symbol AND t.rn = a.rn + 1)
-         |SELECT w.symbol || '_' || strftime(w.window_start, '%Y%m%d_%H%M') AS id,
-         |       strftime(w.window_start, '%Y-%m-%dT%H:%M:%S') AS timestamp,
-         |       w.symbol AS ticker, 'nse_cm' AS segment,
-         |       CAST(CAST(w.open AS DECIMAL(28,4)) AS VARCHAR) AS open,
-         |       CAST(CAST(w.high AS DECIMAL(28,4)) AS VARCHAR) AS high,
-         |       CAST(CAST(w.low AS DECIMAL(28,4)) AS VARCHAR) AS low,
-         |       CAST(CAST(w.close AS DECIMAL(28,4)) AS VARCHAR) AS close,
-         |       coalesce(CAST(CAST(w.tr AS DECIMAL(28,4)) AS VARCHAR), '') AS tr,
-         |       coalesce(CAST(CAST(a.atr_i / 10000.0 AS DECIMAL(28,4)) AS VARCHAR), '') AS atr,
-         |       '' AS volume,
-         |       CASE WHEN w.gap_filled THEN 'TRUE' ELSE 'FALSE' END AS gap_filled,
-         |       '2026-01-01T00:00:00' AS created_at
-         |FROM warm w LEFT JOIN atr a ON a.symbol = w.symbol AND a.rn = w.rn
-         |ORDER BY id""".stripMargin,
-    "q30_token_stats" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-        |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_pieces,
-        |  round(CASE WHEN len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) > 0
-        |    THEN list_sum(list_transform(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''),
-        |           x -> CAST(length(x) AS DOUBLE)))
-        |         / CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS DOUBLE)
-        |    ELSE 0.0 END, 4) AS avg_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q31_quality_score" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_toks,
-        |    CAST(len(regexp_extract_all(text, '[\.,;:!\?]')) AS BIGINT) AS n_punct,
-        |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'on', 'for', 'with'))) AS BIGINT) AS n_stop
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN n_chars > 0
-        |    THEN (2 * n_punct * 10000 + n_chars) // (2 * n_chars) ELSE 0 END
-        |    AS DOUBLE) / 10000.0 AS punct_ratio,
-        |  CAST(CASE WHEN n_chars > 0
-        |    THEN (2 * n_digit * 10000 + n_chars) // (2 * n_chars) ELSE 0 END
-        |    AS DOUBLE) / 10000.0 AS digit_ratio,
-        |  CAST(CASE WHEN n_toks > 0
-        |    THEN (2 * n_stop * 10000 + n_toks) // (2 * n_toks) ELSE 0 END
-        |    AS DOUBLE) / 10000.0 AS stopword_ratio,
-        |  CAST(n_toks AS BIGINT) AS n_tokens,
-        |  CAST(CAST(CASE
-        |      WHEN n_chars = 0 THEN 2000 + 25 * least(n_toks, 200)
-        |      WHEN n_toks = 0 THEN
-        |        (4000 * (n_chars - least(4 * (n_punct + n_digit), n_chars)) + n_chars)
-        |          // (2 * n_chars)
-        |      ELSE 25 * least(n_toks, 200)
-        |        + (2 * (3000 * least(5 * n_stop, n_toks) * n_chars
-        |                - 2000 * least(4 * (n_punct + n_digit), n_chars) * n_toks
-        |                + 2000 * n_toks * n_chars)
-        |           + n_toks * n_chars)
-        |          // (2 * n_toks * n_chars)
-        |    END AS BIGINT) AS DOUBLE) / 10000.0 AS quality
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q32_lang_id" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-        |  FROM documents)
-        |SELECT doc_id, s_de, s_en, s_es, s_fr, s_zh,
-        |  CASE
-        |    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |    WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |    WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |    WHEN s_fr >= s_zh THEN 'fr'
-        |    ELSE 'zh' END AS predicted_lang
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q33_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g'))) AS fingerprint,
-        |  CAST(length(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g'))) AS BIGINT) AS norm_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q34_dedup_exact" ->
-      """SELECT md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g'))) AS fingerprint,
-        |       count(*) AS n_docs, min(doc_id) AS canonical_doc_id
-        |FROM documents GROUP BY 1 ORDER BY fingerprint""".stripMargin,
-    "q35_jaccard_pairs" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 100),
-        |capped AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        |  FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id)
-        |SELECT p.doc_a, p.doc_b, sa.n_sh AS n_a, sb.n_sh AS n_b, p.n_common,
-        |       CAST((2 * p.n_common * 10000 + (sa.n_sh + sb.n_sh - p.n_common))
-        |            // (2 * (sa.n_sh + sb.n_sh - p.n_common)) AS DOUBLE)
-        |         / 10000.0 AS jaccard
-        |FROM pairs p
-        |JOIN sizes sa ON sa.doc_id = p.doc_a
-        |JOIN sizes sb ON sb.doc_id = p.doc_b
-        |WHERE CAST((2 * p.n_common * 10000 + (sa.n_sh + sb.n_sh - p.n_common))
-        |           // (2 * (sa.n_sh + sb.n_sh - p.n_common)) AS DOUBLE)
-        |        / 10000.0 >= 0.4
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q38_minhash_portable" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-        |perms AS (
-        |  SELECT perm,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-        |  FROM (SELECT unnest(range(0, 16)) AS perm) t)
-        |SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-        |FROM bh CROSS JOIN perms
-        |GROUP BY doc_id, perm ORDER BY doc_id, perm""".stripMargin,
-    "q39_simhash_portable" ->
-      """WITH tf AS (
-        |  SELECT doc_id, tok, count(*) AS cnt,
-        |         ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h
-        |  FROM (SELECT doc_id,
-        |               unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS tok
-        |        FROM documents) t
-        |  GROUP BY doc_id, tok),
-        |bits AS (SELECT unnest(range(0, 32)) AS b),
-        |votes AS (
-        |  SELECT doc_id, b,
-        |         sum(CASE WHEN (h >> CAST(b AS INT)) & 1 = 1 THEN cnt ELSE -cnt END) AS v
-        |  FROM tf CROSS JOIN bits GROUP BY doc_id, b)
-        |SELECT doc_id,
-        |       CAST(sum(CASE WHEN v > 0 THEN CAST(pow(2, b) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash32
-        |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q46_minhash_lsh_pairs" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-        |perms AS (
-        |  SELECT perm,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-        |  FROM (SELECT unnest(range(0, 16)) AS perm) t),
-        |sig AS (
-        |  SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-        |  FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-        |banded AS (
-        |  SELECT doc_id, perm // 2 AS band,
-        |         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY perm) AS key
-        |  FROM sig GROUP BY doc_id, perm // 2),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        |                              AND a.doc_id < b.doc_id),
-        |est AS (
-        |  SELECT c.doc_a, c.doc_b,
-        |         CAST((2 * sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) * 10000 + 16) // 32 AS DOUBLE) / 10000.0 AS est_jaccard
-        |  FROM cand c
-        |  JOIN sig sa ON sa.doc_id = c.doc_a
-        |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.perm = sa.perm
-        |  GROUP BY c.doc_a, c.doc_b)
-        |SELECT doc_a, doc_b, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.2 ORDER BY doc_a, doc_b""".stripMargin,
-    "q42_ann_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |dims AS (SELECT CAST(max(len(embedding)) AS BIGINT) AS d FROM e),
-        |idx AS (SELECT unnest(range(0, (SELECT d FROM dims))) AS j),
-        |comp AS (SELECT vec_id, j, CAST(embedding[CAST(j + 1 AS INT)] AS DOUBLE) AS x
-        |         FROM e CROSS JOIN idx),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |tp AS (SELECT t, p FROM (SELECT unnest(range(0, 4)) AS t) a
-        |       CROSS JOIN (SELECT unnest(range(0, 12)) AS p) b),
-        |planes AS (
-        |  SELECT t, p, j,
-        |         CASE WHEN ('0x' || substr(md5('plane#' || CAST(p + t * 12 AS VARCHAR)
-        |                       || '#' || CAST(j AS VARCHAR)), 1, 8))::BIGINT % 2 = 1
-        |              THEN 1.0 ELSE -1.0 END AS c
-        |  FROM tp CROSS JOIN idx),
-        |proj AS (
-        |  SELECT comp.vec_id, planes.t, planes.p, sum(comp.x * planes.c) AS s
-        |  FROM comp JOIN planes ON planes.j = comp.j
-        |  GROUP BY comp.vec_id, planes.t, planes.p),
-        |buckets AS (
-        |  SELECT vec_id, t,
-        |         CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY vec_id, t),
-        |qb AS (SELECT vec_id AS query_id, t, bucket FROM buckets WHERE vec_id % 100 = 0),
-        |cand AS (
-        |  SELECT DISTINCT qb.query_id, b.vec_id AS neighbor_id
-        |  FROM buckets b JOIN qb ON b.t = qb.t AND b.bucket = qb.bucket
-        |                         AND b.vec_id <> qb.query_id),
-        |dots AS (
-        |  SELECT c.query_id, c.neighbor_id, sum(ca.x * cb.x) AS dp
-        |  FROM cand c
-        |  JOIN comp ca ON ca.vec_id = c.neighbor_id
-        |  JOIN comp cb ON cb.vec_id = c.query_id AND cb.j = ca.j
-        |  GROUP BY c.query_id, c.neighbor_id),
-        |scored AS (
-        |  SELECT d.query_id, d.neighbor_id, round(d.dp / (nn.nrm * nq.nrm), 6) AS cosine
-        |  FROM dots d
-        |  JOIN norms nn ON nn.vec_id = d.neighbor_id
-        |  JOIN norms nq ON nq.vec_id = d.query_id)
-        |SELECT query_id, neighbor_id, cosine, rnk FROM (
-        |  SELECT query_id, neighbor_id, cosine,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |           ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        |  FROM scored) t
-        |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
-    "q44_ann_ivf" ->
-      s"""WITH $VecBaseSql,
-         |$IvfKnnSql
-         |SELECT query_id, neighbor_id, cosine, rnk FROM ivf
-         |ORDER BY query_id, rnk""".stripMargin,
-    "q36_knn_cosine" ->
-      s"""WITH $VecBaseSql,
-         |$BruteKnnSql
-         |SELECT query_id, neighbor_id, cosine, rnk FROM brute
-         |ORDER BY query_id, rnk""".stripMargin,
-    // brute ground truth LEFT JOIN the IVF retrieved set: recall@k per
-    // query in HALF_UP integer basis points — single source of truth
-    // with q36/q44 via the shared CTE constants
-    "q121_ann_recall" ->
-      s"""WITH $VecBaseSql,
-         |$BruteKnnSql,
-         |$IvfKnnSql,
-         |j AS (
-         |  SELECT b.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-         |         CAST(coalesce(sum(CASE WHEN v.neighbor_id IS NOT NULL
-         |                                THEN 1 END), 0) AS BIGINT) AS n_hit
-         |  FROM brute b LEFT JOIN ivf v ON v.query_id = b.query_id
-         |                              AND v.neighbor_id = b.neighbor_id
-         |  GROUP BY b.query_id)
-         |SELECT query_id, n_exact, n_hit,
-         |       (n_hit * 20000 + n_exact) // (2 * n_exact) AS recall_bp
-         |FROM j ORDER BY query_id""".stripMargin,
-    // nearest-centroid assignment (rounded argmax, ties to lowest cell)
-    // + per-dimension micro-tick means of unit-normalized members — one
-    // full Lloyd refinement pass over the 8-seed codebook
-    "q122_kmeans_refine" ->
-      s"""WITH $VecBaseSql,
-         |cent AS (SELECT vec_id AS cvid, row_number() OVER (ORDER BY vec_id) - 1 AS j
-         |         FROM (SELECT vec_id FROM nz ORDER BY vec_id LIMIT 8) t),
-         |ccomp AS (SELECT cent.j, comp.i, comp.x
-         |          FROM comp JOIN cent ON cent.cvid = comp.vec_id),
-         |cnorm AS (SELECT j, sqrt(sum(x * x)) AS nrm FROM ccomp GROUP BY j),
-         |cos AS (
-         |  SELECT comp.vec_id, cc.j,
-         |         round(sum(comp.x * cc.x) / (n1.nrm * n2.nrm), 6) AS c
-         |  FROM comp JOIN ccomp cc ON cc.i = comp.i
-         |  JOIN nz n1 ON n1.vec_id = comp.vec_id
-         |  JOIN cnorm n2 ON n2.j = cc.j
-         |  GROUP BY comp.vec_id, cc.j, n1.nrm, n2.nrm),
-         |asg AS (SELECT vec_id, j AS cluster FROM (
-         |          SELECT vec_id, j, c,
-         |                 row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, j) AS rn
-         |          FROM cos) t WHERE rn = 1),
-         |u AS (
-         |  SELECT a.cluster, comp.i,
-         |         CASE WHEN n.nrm > 0
-         |              THEN CAST(floor(round(comp.x / n.nrm, 6) * 1000000 + 0.5) AS BIGINT)
-         |              ELSE 0 END AS t
-         |  FROM asg a JOIN comp ON comp.vec_id = a.vec_id
-         |  JOIN nz n ON n.vec_id = a.vec_id),
-         |agg AS (SELECT cluster, CAST(i AS BIGINT) AS i,
-         |               CAST(count(*) AS BIGINT) AS n_members,
-         |               CAST(sum(t) AS BIGINT) AS s
-         |        FROM u GROUP BY 1, 2)
-         |SELECT cluster, i, n_members,
-         |       (CAST(s AS DOUBLE) / n_members) / 1000000.0 AS c_new
-         |FROM agg ORDER BY cluster, i""".stripMargin,
-    // A-ES priority keys: u from the salted md5 prefix, -ln(u) in
-    // integer micro-nats, key = lnMicro/weight HALF_UP-ticked; the n
-    // smallest keys are the sample
-    "q123_weighted_sample" ->
-      """WITH w AS (
-        |  SELECT doc_id, source, CAST(n_chars AS BIGINT) AS weight,
-        |         ('0x' || substr(md5('ws:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS h
-        |  FROM documents WHERE n_chars > 0),
-        |k AS (
-        |  SELECT doc_id, source, weight,
-        |         CAST(floor(-ln((h + 1) / 4294967296.0) * 1000000 + 0.5) AS BIGINT) AS lm
-        |  FROM w)
-        |SELECT doc_id, source, weight,
-        |       CAST(floor(CAST(lm AS DOUBLE) / weight + 0.5) AS BIGINT) AS key_micro
-        |FROM k ORDER BY key_micro, doc_id LIMIT 40""".stripMargin,
-    // one verdict per doc under exact > near_dup > kept precedence;
-    // shares are within-source HALF_UP basis points
-    "q124_removal_reasons" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-         |$QualitySql,
-         |fp AS (SELECT doc_id, source,
-         |              md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+', ' ', 'g'))) AS f
-         |       FROM documents),
-         |canon AS (SELECT f, min(doc_id) AS canon FROM fp GROUP BY 1),
-         |j AS (SELECT fp.doc_id, fp.source, c.canon, q.quality, lab.cluster_id
-         |      FROM fp JOIN canon c ON c.f = fp.f
-         |      JOIN q ON q.doc_id = fp.doc_id
-         |      JOIN lab ON lab.doc_id = fp.doc_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY cluster_id
-         |                ORDER BY quality DESC, doc_id) AS rn FROM j),
-         |v AS (SELECT source,
-         |             CASE WHEN doc_id <> canon THEN 'exact_dup'
-         |                  WHEN rn <> 1 THEN 'near_dup'
-         |                  ELSE 'kept' END AS reason
-         |      FROM r),
-         |cnt AS (SELECT source, reason, CAST(count(*) AS BIGINT) AS n_docs
-         |        FROM v GROUP BY 1, 2),
-         |tot AS (SELECT source, CAST(count(*) AS BIGINT) AS t FROM v GROUP BY 1)
-         |SELECT c.source, c.reason, c.n_docs,
-         |       (c.n_docs * 20000 + t.t) // (2 * t.t) AS share_bp
-         |FROM cnt c JOIN tot t ON t.source = c.source
-         |ORDER BY c.source, c.reason""".stripMargin,
-    // q91's counting-cuts chain on token counts, then per-bucket
-    // padded-waste arithmetic (pure integers, HALF_UP bp)
-    "q141_padding_efficiency" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                              x -> x <> '')) AS BIGINT) AS v
-        |  FROM documents),
-        |d AS (SELECT v, count(*) AS c FROM w WHERE v IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM d),
-        |n AS (SELECT count(*) AS n FROM w WHERE v IS NOT NULL),
-        |js AS (SELECT unnest(range(1, 4)) AS j),
-        |cuts AS (SELECT j, min(v) AS cut FROM cum, n, js
-        |         WHERE cum >= (j * n.n + 3) // 4 GROUP BY j),
-        |b AS (SELECT doc_id, v,
-        |             CAST(1 + (SELECT count(*) FROM cuts WHERE cut < w.v) AS INT) AS bucket
-        |      FROM w),
-        |agg AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(max(v) AS BIGINT) AS max_len,
-        |               CAST(sum(v) AS BIGINT) AS sum_tokens
-        |        FROM b GROUP BY 1)
-        |SELECT bucket, n_docs, max_len, sum_tokens,
-        |       CASE WHEN max_len > 0
-        |            THEN ((n_docs * max_len - sum_tokens) * 20000 + n_docs * max_len)
-        |                 // (2 * n_docs * max_len)
-        |            ELSE 0 END AS waste_bp
-        |FROM agg ORDER BY bucket""".stripMargin,
-    // q87's fold with the 1-day window gate on each advance
-    "q142_windowed_funnel" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |s1 AS (SELECT user_id, min(ts) AS t FROM e WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'click' AND e.ts >= s1.t
-        |         AND epoch_us(e.ts) - epoch_us(s1.t) <= 86400000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts >= s2.t
-        |         AND epoch_us(e.ts) - epoch_us(s2.t) <= 86400000000 GROUP BY 1)
-        |SELECT CAST(1 AS INT) AS step_idx, 'view' AS step_name,
-        |       CAST((SELECT count(*) FROM s1) AS BIGINT) AS users
-        |UNION ALL
-        |SELECT CAST(2 AS INT), 'click', CAST((SELECT count(*) FROM s2) AS BIGINT)
-        |UNION ALL
-        |SELECT CAST(3 AS INT), 'purchase', CAST((SELECT count(*) FROM s3) AS BIGINT)
-        |ORDER BY step_idx""".stripMargin,
-    "q143_id_continuity" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       min(doc_id) AS min_id, max(doc_id) AS max_id,
-        |       max(doc_id) - min(doc_id) + 1 - count(*) AS n_missing
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    // per-user counts → (type × count) grid → descending cumsums; the
-    // threshold row splits integer-exactly among tied users
-    "q139_concentration" ->
-      """WITH uc AS (SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS c
-        |            FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2),
-        |cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS users,
-        |                 CAST(c * count(*) AS BIGINT) AS events
-        |          FROM uc GROUP BY 1, 2),
-        |g AS (SELECT event_type, c, users, events,
-        |             CAST(sum(users) OVER (PARTITION BY event_type ORDER BY c DESC
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumu,
-        |             CAST(sum(events) OVER (PARTITION BY event_type ORDER BY c DESC
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cume,
-        |             CAST(sum(users) OVER (PARTITION BY event_type) AS BIGINT) AS nu,
-        |             CAST(sum(events) OVER (PARTITION BY event_type) AS BIGINT) AS ne
-        |      FROM cells),
-        |g2 AS (SELECT *, (nu + 9) // 10 AS k FROM g),
-        |thr AS (SELECT event_type, max(c) AS v FROM g2 WHERE cumu >= k GROUP BY 1)
-        |SELECT g2.event_type, nu AS n_users, ne AS n_events, k AS top_users,
-        |       ((cume - (cumu - k) * v) * 20000 + ne) // (2 * ne) AS top_share_bp
-        |FROM g2 JOIN thr ON thr.event_type = g2.event_type AND g2.c = thr.v
-        |ORDER BY g2.event_type""".stripMargin,
-    // (user, type)-keyed lag gaps in seconds → q130's counting-grid
-    // type-1 percentiles
-    "q140_gap_quantiles" ->
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
-        |            FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |l AS (SELECT event_type,
-        |             lag(ts) OVER (PARTITION BY user_id, event_type
-        |                           ORDER BY ts, event_id) AS prev_ts, ts
-        |      FROM ev),
-        |gp AS (SELECT event_type,
-        |              (epoch_us(ts) - epoch_us(prev_ts)) / 1000000.0 AS gap_s
-        |       FROM l WHERE prev_ts IS NOT NULL),
-        |c AS (SELECT event_type, CAST(floor(gap_s / 1.0) AS BIGINT) AS v,
-        |             CAST(count(*) AS BIGINT) AS c
-        |      FROM gp GROUP BY 1, 2),
-        |w AS (SELECT event_type, v, c,
-        |             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY v
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |      FROM c)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 50 THEN v END) AS DOUBLE) * 1.0 AS p50,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 90 THEN v END) AS DOUBLE) * 1.0 AS p90,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 99 THEN v END) AS DOUBLE) * 1.0 AS p99
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // exploded (doc, char) counts → per-doc micro-nat entropy terms
-    // summed exactly; empty docs coalesce to (0, 0.0)
-    "q136_char_entropy" ->
-      """WITH ch AS (SELECT doc_id, unnest(regexp_split_to_array(text, '')) AS ch
-        |            FROM documents),
-        |cc AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) AS c FROM ch
-        |       WHERE ch <> '' GROUP BY 1, 2),
-        |cn AS (SELECT doc_id, ch, c,
-        |              CAST(sum(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n FROM cc),
-        |tm AS (SELECT doc_id, n,
-        |              CAST(floor((c / CAST(n AS DOUBLE)) * ln(CAST(n AS DOUBLE) / c)
-        |                * 1000000 + 0.5) AS BIGINT) AS t
-        |       FROM cn),
-        |e AS (SELECT doc_id, CAST(max(n) AS BIGINT) AS n_chars,
-        |             CAST(sum(t) AS BIGINT) AS s FROM tm GROUP BY 1)
-        |SELECT d.doc_id, coalesce(e.n_chars, 0) AS n_chars,
-        |       coalesce(e.s / 1000000.0, 0.0) AS entropy
-        |FROM documents d LEFT JOIN e ON e.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // literal-substring count by length difference + strpos; hits only
-    "q137_corpus_grep" ->
-      """SELECT doc_id,
-        |       (length(text) - length(replace(text, 'spark', ''))) // 5 AS n_matches,
-        |       CAST(strpos(text, 'spark') AS BIGINT) AS first_pos
-        |FROM documents
-        |WHERE (length(text) - length(replace(text, 'spark', ''))) // 5 > 0
-        |ORDER BY doc_id""".stripMargin,
-    // closed-form water level over sources sorted by availability:
-    // j = first rank the remaining budget no longer floods; the
-    // remainder r = B - pa_j splits over m = n - j + 1 sources with
-    // the integer remainder placed on the first ranks
-    "q138_budget_allocation" ->
-      """WITH w AS (
-        |  SELECT source,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |av AS (SELECT source, CAST(sum(len(words)) AS BIGINT) AS a FROM w GROUP BY 1),
-        |o AS (SELECT source, a,
-        |             CAST(row_number() OVER (ORDER BY a, source) AS BIGINT) AS rn,
-        |             CAST(count(*) OVER () AS BIGINT) AS n,
-        |             CAST(coalesce(sum(a) OVER (ORDER BY a, source
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pa
-        |      FROM av),
-        |tot AS (SELECT CAST(sum(a) AS BIGINT) AS t FROM av),
-        |j AS (SELECT min(rn) AS j FROM o WHERE pa + (n - rn + 1) * a >= 26000),
-        |par AS (SELECT pa AS paj FROM o, j WHERE o.rn = j.j)
-        |SELECT source, a AS available,
-        |       CAST(CASE WHEN (SELECT t FROM tot) <= 26000 THEN a
-        |                 WHEN rn < (SELECT j FROM j) THEN a
-        |                 ELSE (26000 - (SELECT paj FROM par)) // (n - (SELECT j FROM j) + 1)
-        |                      + CASE WHEN rn - (SELECT j FROM j) <
-        |                               (26000 - (SELECT paj FROM par)) % (n - (SELECT j FROM j) + 1)
-        |                             THEN 1 ELSE 0 END
-        |            END AS BIGINT) AS allocated
-        |FROM o ORDER BY source""".stripMargin,
-    // corpus top-100 vocab → (source × token) grid with add-one
-    // smoothing → micro-nat KL terms summed exactly
-    "q133_source_divergence" ->
-      """WITH w AS (
-        |  SELECT source,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |t1 AS (SELECT source, unnest(words) AS token FROM w),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM t1 GROUP BY 1),
-        |top AS (SELECT token, n AS cq FROM c ORDER BY n DESC, token LIMIT 100),
-        |nq AS (SELECT CAST(sum(cq) AS BIGINT) AS nq FROM top),
-        |cs AS (SELECT t1.source, t1.token, CAST(count(*) AS BIGINT) AS cs
-        |       FROM t1 JOIN top ON top.token = t1.token GROUP BY 1, 2),
-        |grid AS (SELECT s.source, top.token, top.cq, coalesce(cs.cs, 0) AS cs
-        |         FROM (SELECT DISTINCT source FROM documents) s
-        |         CROSS JOIN top
-        |         LEFT JOIN cs ON cs.source = s.source AND cs.token = top.token),
-        |ns AS (SELECT source, CAST(sum(cs) AS BIGINT) AS ns FROM grid GROUP BY 1),
-        |terms AS (
-        |  SELECT g.source,
-        |         CAST(floor(
-        |           ((g.cs + 1) / CAST(ns.ns + 100 AS DOUBLE))
-        |           * ln(((g.cs + 1) / CAST(ns.ns + 100 AS DOUBLE))
-        |               / (CAST(g.cq AS DOUBLE) / (SELECT nq FROM nq)))
-        |           * 1000000 + 0.5) AS BIGINT) AS t
-        |  FROM grid g JOIN ns ON ns.source = g.source)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_tokens_topk,
-        |       CAST(sum(t) AS BIGINT) / 1000000.0 AS kl_nats
-        |FROM terms GROUP BY 1 ORDER BY source""".stripMargin,
-    // the q53 pair CTE (pr) → per-doc degree → histogram; degree-0
-    // rows from the corpus left join
-    "q134_dup_degree" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-         |deg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS degree FROM (
-         |          SELECT doc_a AS doc_id FROM pr
-         |          UNION ALL SELECT doc_b AS doc_id FROM pr) t
-         |        GROUP BY 1),
-         |alldeg AS (SELECT d.doc_id, coalesce(deg.degree, 0) AS degree
-         |           FROM documents d LEFT JOIN deg ON deg.doc_id = d.doc_id)
-         |SELECT degree, CAST(count(*) AS BIGINT) AS n_docs
-         |FROM alldeg GROUP BY 1 ORDER BY degree""".stripMargin,
-    // Pearson r from exact integer sums (HUGEINT cross/square sums),
-    // one fixed expression shape, 4dp
-    "q135_length_quality_corr" ->
-      s"""WITH $QualitySql,
-         |b AS (SELECT d.source, CAST(length(d.text) AS BIGINT) AS x,
-         |             CAST(floor(q.quality * 10000 + 0.5) AS BIGINT) AS y
-         |      FROM documents d JOIN q ON q.doc_id = d.doc_id),
-         |s AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-         |             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |             sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-         |      FROM b GROUP BY 1)
-         |SELECT source, n AS n_docs,
-         |       round((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-         |         / sqrt(greatest(0.000000000001,
-         |             (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-         |             * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))),
-         |         4) AS corr
-         |FROM s ORDER BY source""".stripMargin,
-    // q20's sessionize chain + first-3 pivot + top-k; null users/ts
-    // dropped on both sides (the q95 parity lesson)
-    "q129_session_paths" ->
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
-        |            FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |l AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev),
-        |m AS (SELECT *, CASE WHEN prev_ts IS NULL
-        |                     OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |      FROM l),
-        |s AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id, sid ORDER BY ts, event_id) AS rk FROM s),
-        |f AS (SELECT user_id, sid,
-        |             max(CASE WHEN rk = 1 THEN event_type END) AS s1,
-        |             max(CASE WHEN rk = 2 THEN event_type END) AS s2,
-        |             max(CASE WHEN rk = 3 THEN event_type END) AS s3
-        |      FROM r WHERE rk <= 3 GROUP BY 1, 2),
-        |p AS (SELECT concat_ws('>', s1, s2, s3) AS path, CAST(count(*) AS BIGINT) AS n_sessions
-        |      FROM f GROUP BY 1),
-        |t AS (SELECT path, n_sessions FROM p ORDER BY n_sessions DESC, path LIMIT 20)
-        |SELECT CAST(row_number() OVER (ORDER BY n_sessions DESC, path) AS BIGINT) AS rank,
-        |       path, n_sessions
-        |FROM t ORDER BY rank""".stripMargin,
-    // (event_type × 0.01-tick) counting grid; exact type-1 quantile
-    // picks as integer comparisons over per-type cumulative counts
-    "q130_value_quantiles" ->
-      """WITH c AS (SELECT event_type, CAST(floor(value / 0.01) AS BIGINT) AS v,
-        |                  CAST(count(*) AS BIGINT) AS c
-        |           FROM events WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1, 2),
-        |w AS (SELECT event_type, v, c,
-        |             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY v
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |      FROM c)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 50 THEN v END) AS DOUBLE) * 0.01 AS p50,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 90 THEN v END) AS DOUBLE) * 0.01 AS p90,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 99 THEN v END) AS DOUBLE) * 0.01 AS p99
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // distinct (user, type) adoptions -> pair overlap via user-key
-    // self-join; lift against independence in HALF_UP bp
-    "q131_event_affinity" ->
-      """WITH ut AS (SELECT DISTINCT user_id AS u, event_type AS t FROM events
-        |            WHERE user_id IS NOT NULL),
-        |tot AS (SELECT t, CAST(count(*) AS BIGINT) AS n FROM ut GROUP BY 1),
-        |nu AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS nu FROM ut),
-        |p AS (SELECT a.t AS type_a, b.t AS type_b, CAST(count(*) AS BIGINT) AS n_both
-        |      FROM ut a JOIN ut b ON a.u = b.u AND a.t < b.t GROUP BY 1, 2)
-        |SELECT p.type_a, p.type_b, p.n_both, ta.n AS n_a, tb.n AS n_b,
-        |       CAST(floor(CAST(p.n_both AS DOUBLE) * (SELECT nu FROM nu)
-        |              / ta.n / tb.n * 10000 + 0.5) AS BIGINT) AS lift_bp
-        |FROM p JOIN tot ta ON ta.t = p.type_a JOIN tot tb ON tb.t = p.type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-    // (type × day) count grid; mean/σ from exact integer sums (HUGEINT
-    // squares), one fixed expression shape for the 3σ flag
-    "q132_daily_anomalies" ->
-      """WITH ev AS (
-        |  SELECT event_type, ts FROM events
-        |  UNION ALL
-        |  SELECT event_type, ts
-        |  FROM events CROSS JOIN (SELECT unnest(range(1, 6)) AS r) reps
-        |  WHERE event_type = 'click'
-        |    AND CAST(CAST(ts AS TIMESTAMP) AS DATE) = DATE '2024-01-01'),
-        |daily AS (SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |                      CAST(count(*) AS BIGINT) AS n_events
-        |               FROM ev WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS d,
-        |              CAST(sum(n_events) AS BIGINT) AS s,
-        |              sum(n_events * n_events) AS q
-        |       FROM daily GROUP BY 1),
-        |sd AS (SELECT event_type, s, d, CAST(s AS DOUBLE) / d AS mean,
-        |              sqrt(greatest(0.0, CAST(q AS DOUBLE) / d
-        |                - (CAST(s AS DOUBLE) / d) * (CAST(s AS DOUBLE) / d))) AS sd
-        |       FROM st)
-        |SELECT daily.event_type, daily.day, daily.n_events,
-        |       CAST((2 * sd.s * 10000 + sd.d) // (2 * sd.d) AS DOUBLE)
-        |         / 10000.0 AS mean_daily,
-        |       CAST(daily.n_events AS DOUBLE) > sd.mean + 3.0 * sd.sd AS anomaly
-        |FROM daily JOIN sd ON sd.event_type = daily.event_type
-        |ORDER BY daily.event_type, day""".stripMargin,
-    // micro-tick component sums (s) and HUGEINT square sums (q) per dim;
-    // mean and population variance fall out as exact-integer ratios
-    "q127_embedding_moments" ->
-      s"""WITH $VecBaseSql,
-         |tk AS (SELECT vec_id, i, CAST(floor(x * 1000000 + 0.5) AS BIGINT) AS t FROM comp),
-         |agg AS (SELECT CAST(i AS BIGINT) AS i, CAST(count(*) AS BIGINT) AS n_vecs,
-         |               CAST(sum(t) AS BIGINT) AS s, sum(t * t) AS q
-         |        FROM tk GROUP BY 1)
-         |SELECT i, n_vecs,
-         |       (CAST(s AS DOUBLE) / n_vecs) / 1000000.0 AS mean,
-         |       (CAST(q AS DOUBLE) / n_vecs -
-         |        (CAST(s AS DOUBLE) / n_vecs) * (CAST(s AS DOUBLE) / n_vecs))
-         |         / 1000000000000.0 AS variance
-         |FROM agg ORDER BY i""".stripMargin,
-    // round 1: scores against the uniform 1/sqrt(d) start, per-dim tick
-    // sums s1, norm from the exact integer square-sum; round 2 repeats
-    // against the normalized round-1 direction
-    "q128_power_iteration" ->
-      s"""WITH $VecBaseSql,
-         |u0 AS (SELECT 1.0 / sqrt(CAST(d AS DOUBLE)) AS u FROM dims),
-         |p1 AS (SELECT vec_id, round(sum(x * (SELECT u FROM u0)), 6) AS p
-         |       FROM comp GROUP BY vec_id),
-         |s1 AS (SELECT c.i, CAST(sum(CAST(floor(c.x * p1.p * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS s
-         |       FROM comp c JOIN p1 ON p1.vec_id = c.vec_id GROUP BY c.i),
-         |n1 AS (SELECT sqrt(CAST(sum(s * s) AS DOUBLE) / 1000000000000.0) AS n FROM s1),
-         |d1 AS (SELECT i, (CAST(s AS DOUBLE) / 1000000.0) / (SELECT n FROM n1) AS dir FROM s1),
-         |p2 AS (SELECT c.vec_id, round(sum(c.x * d1.dir), 6) AS p
-         |       FROM comp c JOIN d1 ON d1.i = c.i GROUP BY c.vec_id),
-         |s2 AS (SELECT c.i, CAST(sum(CAST(floor(c.x * p2.p * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS s
-         |       FROM comp c JOIN p2 ON p2.vec_id = c.vec_id GROUP BY c.i),
-         |n2 AS (SELECT sqrt(CAST(sum(s * s) AS DOUBLE) / 1000000000000.0) AS n FROM s2)
-         |SELECT CAST(i AS BIGINT) AS i,
-         |       floor(((CAST(s AS DOUBLE) / 1000000.0) / (SELECT n FROM n2)) * 1000000 + 0.5)
-         |         / 1000000.0 AS component,
-         |       floor((SELECT n FROM n2) * 1000000 + 0.5) / 1000000.0 AS growth
-         |FROM s2 ORDER BY i""".stripMargin,
-    // per-signal tick grids (quality 1e-4, surprisal 1e-3 nats) →
-    // cumulative-count percentiles in HALF_UP bp → blended rank with
-    // the surprisal axis inverted (low surprisal = better)
-    "q125_quality_blend" ->
-      s"""WITH $QualitySql,
-         |w AS (
-         |  SELECT doc_id,
-         |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), x -> x <> '') AS words
-         |  FROM documents),
-         |tok AS (SELECT doc_id, unnest(words) AS token FROM w),
-         |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM c),
-         |m AS (SELECT token, CAST(round(ln(CAST(t.t AS DOUBLE) / n) * 1000000) AS BIGINT) AS nll
-         |      FROM c CROSS JOIN t),
-         |d AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |             CAST(sum(m.nll) AS BIGINT) AS nll_micro
-         |      FROM tok JOIN m USING (token) GROUP BY 1),
-         |s AS (SELECT doc_id,
-         |             ((2 * nll_micro + n_tokens) // (2 * n_tokens)) / 1000000.0 AS avg_nll
-         |      FROM d),
-         |qt2 AS (SELECT doc_id, CAST(floor(quality * 10000 + 0.5) AS BIGINT) AS v FROM q
-         |        WHERE quality IS NOT NULL),
-         |st2 AS (SELECT doc_id, CAST(floor(avg_nll * 1000 + 0.5) AS BIGINT) AS v FROM s),
-         |qg AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM qt2 GROUP BY 1),
-         |qc AS (SELECT v, CAST(sum(c) OVER (ORDER BY v) AS BIGINT) AS cum,
-         |              (SELECT CAST(count(*) AS BIGINT) FROM qt2) AS n FROM qg),
-         |qp AS (SELECT v, (cum * 20000 + n) // (2 * n) AS p FROM qc),
-         |sg AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM st2 GROUP BY 1),
-         |sc AS (SELECT v, CAST(sum(c) OVER (ORDER BY v) AS BIGINT) AS cum,
-         |              (SELECT CAST(count(*) AS BIGINT) FROM st2) AS n FROM sg),
-         |sp AS (SELECT v, (cum * 20000 + n) // (2 * n) AS p FROM sc),
-         |j AS (SELECT qt2.doc_id, qp.p AS q_bp, sp.p AS nll_bp
-         |      FROM qt2 JOIN qp ON qp.v = qt2.v
-         |      JOIN st2 ON st2.doc_id = qt2.doc_id
-         |      JOIN sp ON sp.v = st2.v)
-         |SELECT doc_id, q_bp, nll_bp,
-         |       (q_bp + (10000 - nll_bp) + 1) // 2 AS blend_bp
-         |FROM j ORDER BY doc_id""".stripMargin,
-    // q45's winnowing chain + df-capped inverted-index pairing: pairs
-    // sharing >= 5 fingerprints after dropping fingerprints in > 5 docs
-    // (this corpus's 30-word vocab makes 8-char grams promiscuous; the
-    // tight cap is what keeps the pair set meaning "copied span")
-    "q126_winnow_overlap" ->
-      """WITH n AS (
-        |  SELECT doc_id, trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, length(norm) - 6),
-        |           i -> ('0x' || substr(md5(substr(norm, CAST(i AS INT), 8)), 1, 8))::BIGINT) AS hs
-        |  FROM n WHERE length(norm) >= 11),
-        |wins AS (
-        |  SELECT doc_id,
-        |         list_sort(list_distinct(list_transform(range(0, len(hs) - 3),
-        |           j -> least(hs[CAST(j + 1 AS INT)], hs[CAST(j + 2 AS INT)],
-        |                      hs[CAST(j + 3 AS INT)], hs[CAST(j + 4 AS INT)])))) AS fps
-        |  FROM h),
-        |fp AS (SELECT doc_id, unnest(fps) AS f FROM wins),
-        |rare AS (SELECT f FROM fp GROUP BY f HAVING count(*) <= 5),
-        |i AS (SELECT fp.doc_id, fp.f FROM fp JOIN rare ON rare.f = fp.f),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |             CAST(count(*) AS BIGINT) AS n_shared
-        |      FROM i a JOIN i b ON a.f = b.f AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_shared FROM p
-        |WHERE n_shared >= 5 ORDER BY doc_a, doc_b""".stripMargin,
-    "q43_media_features" ->
-      """WITH idx AS (SELECT unnest(range(0, 192)) AS i),
-        |m AS (SELECT doc_id AS media_id, text,
-        |             CAST(4 + (doc_id % 5) * 2 AS INT) AS w,
-        |             CAST(4 + (doc_id % 7) * 2 AS INT) AS h
-        |      FROM documents),
-        |px AS (
-        |  SELECT media_id, w, h,
-        |         coalesce(('0x' || substr(md5(text || '#' || CAST(i // 16 AS VARCHAR)),
-        |                         CAST((i % 16) * 2 + 1 AS INT), 2))::BIGINT, 0) AS v
-        |  FROM m JOIN idx ON idx.i < m.w * m.h),
-        |s AS (SELECT media_id, w, h, sum(v) AS sv, count(*) AS n
-        |      FROM px GROUP BY media_id, w, h)
-        |SELECT media_id, 'png' AS format, w AS width, h AS height,
-        |       CAST((2 * sv * 1000000 + n * 255) // (2 * n * 255) AS DOUBLE)
-        |         / 1000000.0 AS brightness
-        |FROM s ORDER BY media_id""".stripMargin,
-    "q40_minhash_lsh" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-        |perms AS (
-        |  SELECT perm,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-        |  FROM (SELECT unnest(range(0, 64)) AS perm) t),
-        |sig AS (
-        |  SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-        |  FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-        |banded AS (
-        |  SELECT doc_id, perm // 4 AS band,
-        |         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY perm) AS key
-        |  FROM sig GROUP BY doc_id, perm // 4),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        |                              AND a.doc_id < b.doc_id),
-        |est AS (
-        |  SELECT c.doc_a, c.doc_b,
-        |         CAST((2 * sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) * 10000 + 64) // 128 AS DOUBLE) / 10000.0 AS est_jaccard
-        |  FROM cand c
-        |  JOIN sig sa ON sa.doc_id = c.doc_a
-        |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.perm = sa.perm
-        |  GROUP BY c.doc_a, c.doc_b)
-        |SELECT doc_a, doc_b, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.2 ORDER BY doc_a, doc_b""".stripMargin,
-    "q41_simhash" ->
-      """WITH tf AS (
-        |  SELECT doc_id, tok, count(*) AS cnt,
-        |         ('0x' || substr(md5(tok || '#lo'), 1, 8))::BIGINT AS hlo,
-        |         ('0x' || substr(md5(tok || '#hi'), 1, 8))::BIGINT AS hhi
-        |  FROM (SELECT doc_id,
-        |               unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS tok
-        |        FROM documents) t
-        |  GROUP BY doc_id, tok),
-        |bits AS (SELECT unnest(range(0, 64)) AS b),
-        |votes AS (
-        |  SELECT doc_id, b,
-        |         sum(CASE WHEN ((CASE WHEN b < 32 THEN hlo >> CAST(b AS INT)
-        |                              ELSE hhi >> CAST(b - 32 AS INT) END) & 1) = 1
-        |             THEN cnt ELSE -cnt END) AS v
-        |  FROM tf CROSS JOIN bits GROUP BY doc_id, b)
-        |SELECT doc_id,
-        |       CAST(sum(CASE WHEN v > 0 AND b < 32 THEN CAST(pow(2, b) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash_lo,
-        |       CAST(sum(CASE WHEN v > 0 AND b >= 32 THEN CAST(pow(2, b - 32) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash_hi
-        |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q48_simhash_pairs" ->
-      s"""WITH $SimhashPairsSql
-        |SELECT doc_a, doc_b, CAST(hamming AS BIGINT) AS hamming
-        |FROM sp ORDER BY doc_a, doc_b""".stripMargin,
-    "q53_dup_clusters" ->
-      """WITH RECURSIVE w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-        |perms AS (
-        |  SELECT perm,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-        |  FROM (SELECT unnest(range(0, 16)) AS perm) t),
-        |sig AS (
-        |  SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-        |  FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-        |banded AS (
-        |  SELECT doc_id, perm // 2 AS band,
-        |         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY perm) AS key
-        |  FROM sig GROUP BY doc_id, perm // 2),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        |                              AND a.doc_id < b.doc_id),
-        |est AS (
-        |  SELECT c.doc_a, c.doc_b,
-        |         CAST((2 * sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) * 10000 + 16) // 32 AS DOUBLE) / 10000.0 AS est_jaccard
-        |  FROM cand c
-        |  JOIN sig sa ON sa.doc_id = c.doc_a
-        |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.perm = sa.perm
-        |  GROUP BY c.doc_a, c.doc_b),
-        |pr AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= 0.2),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-        |          UNION SELECT doc_b, doc_a FROM pr),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst)
-        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
-    "q47_embedding_dups_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |dims AS (SELECT CAST(max(len(embedding)) AS BIGINT) AS d FROM e),
-        |idx AS (SELECT unnest(range(0, (SELECT d FROM dims))) AS j),
-        |comp AS (SELECT vec_id, j, CAST(embedding[CAST(j + 1 AS INT)] AS DOUBLE) AS x
-        |         FROM e CROSS JOIN idx),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |tp AS (SELECT t, p FROM (SELECT unnest(range(0, 4)) AS t) a
-        |       CROSS JOIN (SELECT unnest(range(0, 8)) AS p) b),
-        |planes AS (
-        |  SELECT t, p, j,
-        |         CASE WHEN ('0x' || substr(md5('plane#' || CAST(p + t * 8 AS VARCHAR)
-        |                       || '#' || CAST(j AS VARCHAR)), 1, 8))::BIGINT % 2 = 1
-        |              THEN 1.0 ELSE -1.0 END AS c
-        |  FROM tp CROSS JOIN idx),
-        |proj AS (
-        |  SELECT comp.vec_id, planes.t, planes.p, sum(comp.x * planes.c) AS s
-        |  FROM comp JOIN planes ON planes.j = comp.j
-        |  GROUP BY comp.vec_id, planes.t, planes.p),
-        |buckets AS (
-        |  SELECT vec_id, t,
-        |         CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY vec_id, t),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket
-        |                              AND a.vec_id < b.vec_id),
-        |dots AS (
-        |  SELECT c.vec_a, c.vec_b, sum(ca.x * cb.x) AS dp
-        |  FROM cand c
-        |  JOIN comp ca ON ca.vec_id = c.vec_a
-        |  JOIN comp cb ON cb.vec_id = c.vec_b AND cb.j = ca.j
-        |  GROUP BY c.vec_a, c.vec_b),
-        |scored AS (
-        |  SELECT d.vec_a, d.vec_b, round(d.dp / (na.nrm * nb.nrm), 6) AS cosine
-        |  FROM dots d
-        |  JOIN norms na ON na.vec_id = d.vec_a
-        |  JOIN norms nb ON nb.vec_id = d.vec_b)
-        |SELECT vec_a, vec_b, cosine FROM scored
-        |WHERE cosine >= 0.3 ORDER BY vec_a, vec_b""".stripMargin,
-    "q45_winnowing" ->
-      """WITH n AS (
-        |  SELECT doc_id, trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, length(norm) - 6),
-        |           i -> ('0x' || substr(md5(substr(norm, CAST(i AS INT), 8)), 1, 8))::BIGINT) AS hs
-        |  FROM n WHERE length(norm) >= 11),
-        |wins AS (
-        |  SELECT doc_id,
-        |         list_sort(list_distinct(list_transform(range(0, len(hs) - 3),
-        |           j -> least(hs[CAST(j + 1 AS INT)], hs[CAST(j + 2 AS INT)],
-        |                      hs[CAST(j + 3 AS INT)], hs[CAST(j + 4 AS INT)])))) AS fps
-        |  FROM h)
-        |SELECT doc_id, unnest(fps) AS fingerprint FROM wins ORDER BY doc_id, fingerprint""".stripMargin,
-    "q37_embedding_dups" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |dims AS (SELECT CAST(max(len(embedding)) AS BIGINT) AS d FROM e),
-        |idx AS (SELECT unnest(range(1, (SELECT d FROM dims) + 1)) AS i),
-        |comp AS (SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        |         FROM e CROSS JOIN idx),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |dots AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, sum(a.x * b.x) AS dp
-        |  FROM comp a JOIN comp b ON a.i = b.i AND a.vec_id < b.vec_id
-        |  GROUP BY a.vec_id, b.vec_id),
-        |scored AS (
-        |  SELECT d.vec_a, d.vec_b, round(d.dp / (na.nrm * nb.nrm), 6) AS cosine
-        |  FROM dots d
-        |  JOIN norms na ON na.vec_id = d.vec_a
-        |  JOIN norms nb ON nb.vec_id = d.vec_b)
-        |SELECT vec_a, vec_b, cosine FROM scored
-        |WHERE cosine >= 0.3 ORDER BY vec_a, vec_b""".stripMargin,
-    "q55_repetition" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, words,
-        |         CASE WHEN len(words) >= 3
-        |              THEN list_transform(range(1, len(words) - 1),
-        |                                  i -> array_to_string(words[i:i+2], ' '))
-        |              ELSE CAST([] AS VARCHAR[]) END AS ng
-        |  FROM w),
-        |tops AS (
-        |  SELECT doc_id, max(cnt) AS top_cnt FROM (
-        |    SELECT doc_id, ngram, count(*) AS cnt
-        |    FROM (SELECT doc_id, unnest(ng) AS ngram FROM g) u
-        |    GROUP BY doc_id, ngram) c
-        |  GROUP BY doc_id)
-        |SELECT g.doc_id,
-        |  CASE WHEN len(words) > 0
-        |       THEN CAST((2 * (len(words) - len(list_distinct(words))) * 10000
-        |                  + len(words)) // (2 * len(words)) AS DOUBLE) / 10000.0
-        |       ELSE 0.0 END AS dup_word_frac,
-        |  CASE WHEN len(ng) > 0
-        |       THEN CAST((2 * (len(ng) - len(list_distinct(ng))) * 10000
-        |                  + len(ng)) // (2 * len(ng)) AS DOUBLE) / 10000.0
-        |       ELSE 0.0 END AS dup_ngram_frac,
-        |  CASE WHEN len(ng) > 0
-        |       THEN CAST((2 * coalesce(t.top_cnt, 0) * 10000
-        |                  + len(ng)) // (2 * len(ng)) AS DOUBLE) / 10000.0
-        |       ELSE 0.0 END AS top_ngram_frac,
-        |  (CASE WHEN len(ng) > 0
-        |        THEN CAST((2 * (len(ng) - len(list_distinct(ng))) * 10000
-        |                   + len(ng)) // (2 * len(ng)) AS DOUBLE) / 10000.0
-        |        ELSE 0.0 END) > 0.2 AS repetitive
-        |FROM g LEFT JOIN tops t ON t.doc_id = g.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-    "q56_decontamination" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 6),
-        |                                 i -> array_to_string(words[i:i+7], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 8) t)
-        |SELECT a.doc_id, count(*) AS n_shared
-        |FROM (SELECT doc_id, shingle FROM sh WHERE doc_id % 7 <> 0) a
-        |JOIN (SELECT DISTINCT shingle FROM sh WHERE doc_id % 7 = 0) b USING (shingle)
-        |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin,
-    "q58_vocab_topk" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                            x -> x <> '')) AS token
-        |  FROM documents),
-        |c AS (SELECT token, count(*) AS n FROM tok GROUP BY token),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c)
-        |SELECT c.token, c.n,
-        |  CAST((2 * c.n * 1000000 + t.total) // (2 * t.total) AS DOUBLE)
-        |    / 1000000.0 AS freq
-        |FROM c CROSS JOIN t
-        |ORDER BY c.n DESC, c.token LIMIT 100""".stripMargin,
-    "q57_quantize_int8" ->
-      """WITH s AS (SELECT vec_id, embedding,
-        |             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-        |      FROM embeddings),
-        |x AS (SELECT vec_id, embedding, scale,
-        |             unnest(range(1, len(embedding) + 1)) AS i
-        |      FROM s)
-        |SELECT vec_id, round(scale, 6) AS scale, CAST(i AS BIGINT) AS i,
-        |       CASE WHEN scale > 0
-        |            THEN CAST(floor(CAST(embedding[CAST(i AS INT)] AS DOUBLE) / scale + 0.5) AS BIGINT)
-        |            ELSE CAST(0 AS BIGINT) END AS q
-        |FROM x
-        |ORDER BY vec_id, i""".stripMargin,
-    "q59_audio_features" ->
-      """WITH m AS (SELECT doc_id AS media_id, text,
-        |                  CAST(8000 + (doc_id % 4) * 4000 AS INT) AS rate,
-        |                  CAST(1 + (doc_id % 2) AS INT) AS ch,
-        |                  CAST(50 + (doc_id % 10) * 10 AS BIGINT) AS frames
-        |           FROM documents),
-        |idx AS (SELECT unnest(range(0, 280)) AS i),
-        |smp AS (
-        |  SELECT media_id, rate, ch, frames,
-        |         coalesce(('0x' || substr(md5(text || '#' || CAST((i*2) // 16 AS VARCHAR)),
-        |                         CAST(((i*2) % 16) * 2 + 1 AS INT), 2))::BIGINT
-        |         + 256 * ('0x' || substr(md5(text || '#' || CAST((i*2+1) // 16 AS VARCHAR)),
-        |                                 CAST(((i*2+1) % 16) * 2 + 1 AS INT), 2))::BIGINT, 0) AS u
-        |  FROM m JOIN idx ON idx.i < m.frames * m.ch),
-        |sv AS (SELECT media_id, rate, ch, frames,
-        |              abs(CASE WHEN u >= 32768 THEN u - 65536 ELSE u END) AS a
-        |       FROM smp),
-        |agg AS (SELECT media_id, rate, ch, frames, sum(a) AS sa, max(a) AS pk, count(*) AS n
-        |        FROM sv GROUP BY media_id, rate, ch, frames)
-        |SELECT media_id, 'wav' AS format, rate AS sample_rate, ch AS channels, frames,
-        |       CAST((2 * frames * 1000000 + rate) // (2 * rate) AS DOUBLE)
-        |         / 1000000.0 AS duration_sec,
-        |       CAST((2 * sa * 1000000 + n * 32768) // (2 * n * 32768) AS DOUBLE)
-        |         / 1000000.0 AS mean_abs,
-        |       CAST((2 * pk * 1000000 + 32768) // 65536 AS DOUBLE)
-        |         / 1000000.0 AS peak_abs
-        |FROM agg ORDER BY media_id""".stripMargin,
-    "q60_pii_scan" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, $PiiDecorateSql AS text FROM documents),
-         |c AS (
-         |  SELECT doc_id,
-         |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) AS BIGINT) AS n_emails,
-         |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}')) AS BIGINT) AS n_phones,
-         |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) AS BIGINT) AS n_ips
-         |  FROM d)
-         |SELECT doc_id, n_emails, n_phones, n_ips,
-         |       (n_emails > 0 OR n_phones > 0 OR n_ips > 0) AS has_pii
-         |FROM c ORDER BY doc_id""".stripMargin,
-    "q61_chunking" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, words, unnest(range(0, (len(words) - 1) // 48 + 1)) AS chunk_id
-        |  FROM w WHERE len(words) > 0),
-        |c AS (
-        |  SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |         words[chunk_id * 48 + 1 : chunk_id * 48 + 64] AS c
-        |  FROM k)
-        |SELECT doc_id, chunk_id, CAST(len(c) AS BIGINT) AS n_tokens,
-        |       array_to_string(c, ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-    "q62_hash_split" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket
-        |  FROM documents)
-        |SELECT doc_id, bucket,
-        |       CASE WHEN bucket < 90 THEN 'train'
-        |            WHEN bucket < 95 THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "q64_repeated_ngrams" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 11),
-        |                                 i -> array_to_string(words[i:i+12], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 13) t)
-        |SELECT shingle, CAST(count(*) AS BIGINT) AS n_docs
-        |FROM sh GROUP BY shingle HAVING count(*) >= 2
-        |ORDER BY shingle""".stripMargin,
-    "q65_oov_rate" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                            x -> x <> '')) AS token
-        |  FROM documents),
-        |v AS (SELECT token FROM (
-        |  SELECT token, count(*) AS n FROM tok GROUP BY token
-        |  ORDER BY n DESC, token LIMIT 16) t),
-        |a AS (
-        |  SELECT tok.doc_id, count(*) AS n_tokens,
-        |         sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS n_oov
-        |  FROM tok LEFT JOIN v ON v.token = tok.token
-        |  GROUP BY tok.doc_id)
-        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |       CAST(n_oov AS BIGINT) AS n_oov,
-        |       CAST((2 * n_oov * 1000000 + n_tokens) // (2 * n_tokens)
-        |            AS DOUBLE) / 1000000.0 AS oov_rate
-        |FROM a ORDER BY doc_id""".stripMargin,
-    "q63_pii_redact" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, $PiiDecorateSql AS text FROM documents)
-         |SELECT doc_id,
-         |  regexp_replace(
-         |    regexp_replace(
-         |      regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
-         |        '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+', '<EMAIL>', 'g'),
-         |      '[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}', '<PHONE>', 'g'),
-         |    '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}', '<IP>', 'g') AS redacted
-         |FROM d ORDER BY doc_id""".stripMargin,
-    "q66_line_dedup" ->
-      s"""WITH $LineifySql,
-         |l AS (
-         |  SELECT doc_id,
-         |         unnest(range(1, len(string_split(text, chr(10))) + 1)) AS pos,
-         |         unnest(string_split(text, chr(10))) AS line
-         |  FROM d),
-         |b AS (SELECT line FROM l GROUP BY line HAVING count(DISTINCT doc_id) >= 2),
-         |f AS (SELECT l.doc_id, l.pos, l.line, (b.line IS NOT NULL) AS boiler
-         |      FROM l LEFT JOIN b ON b.line = l.line)
-         |SELECT doc_id,
-         |       CAST(count(*) AS BIGINT) AS n_lines,
-         |       CAST(sum(CASE WHEN NOT boiler THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |       coalesce(array_to_string(list(line ORDER BY pos) FILTER (WHERE NOT boiler),
-         |                                chr(10)), '') AS cleaned
-         |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q67_quality_classifier" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                            x -> x <> '')) AS token
-        |  FROM documents),
-        |wts AS (
-        |  SELECT doc_id,
-        |    (('0x' || substr(md5('w:' ||
-        |        CAST((('0x' || substr(md5(token), 1, 8))::BIGINT % 1024) AS VARCHAR)),
-        |      1, 8))::BIGINT / 2147483648.0) - 1.0 AS w
-        |  FROM tok),
-        |s AS (SELECT doc_id, count(*) AS n_tokens, sum(w) AS raw FROM wts GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |       coalesce(round(raw / n_tokens, 6), 0.0) AS score,
-        |       coalesce(round(raw / n_tokens, 6), 0.0) > 0.0 AS keep
-        |FROM documents d LEFT JOIN s ON s.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "q68_mixture_sample" ->
-      """SELECT doc_id, source,
-        |       ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |         % 10000 AS u,
-        |       (('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |         % 10000) <
-        |       (CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 7500
-        |                    WHEN 'src2' THEN 5000 WHEN 'src3' THEN 2500
-        |                    ELSE 1000 END) AS kept
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q69_semantic_dedup" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |comp AS (
-        |  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-        |         unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS x
-        |  FROM e),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |cent AS (SELECT vec_id AS cvid, row_number() OVER (ORDER BY vec_id) - 1 AS j
-        |         FROM (SELECT vec_id FROM norms ORDER BY vec_id LIMIT 8) t),
-        |ccomp AS (SELECT cent.j, comp.i, comp.x
-        |          FROM comp JOIN cent ON cent.cvid = comp.vec_id),
-        |cnorm AS (SELECT j, sqrt(sum(x * x)) AS nrm FROM ccomp GROUP BY j),
-        |cos AS (
-        |  SELECT comp.vec_id, cc.j,
-        |         round(sum(comp.x * cc.x) / (n1.nrm * n2.nrm), 6) AS c
-        |  FROM comp JOIN ccomp cc ON cc.i = comp.i
-        |  JOIN norms n1 ON n1.vec_id = comp.vec_id
-        |  JOIN cnorm n2 ON n2.j = cc.j
-        |  GROUP BY comp.vec_id, cc.j, n1.nrm, n2.nrm),
-        |asg AS (SELECT vec_id, j AS cluster FROM (
-        |          SELECT vec_id, j,
-        |                 row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, j) AS rn
-        |          FROM cos) t
-        |        WHERE rn = 1),
-        |p AS (SELECT a.vec_id AS va, b.vec_id AS vb
-        |      FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
-        |pd AS (
-        |  SELECT p.va, p.vb,
-        |         round(sum(ca.x * cb.x) / (na.nrm * nb.nrm), 6) AS c
-        |  FROM p JOIN comp ca ON ca.vec_id = p.va
-        |         JOIN comp cb ON cb.vec_id = p.vb AND cb.i = ca.i
-        |         JOIN norms na ON na.vec_id = p.va
-        |         JOIN norms nb ON nb.vec_id = p.vb
-        |  GROUP BY p.va, p.vb, na.nrm, nb.nrm),
-        |dups AS (SELECT DISTINCT vb FROM pd WHERE c >= 0.3)
-        |SELECT asg.vec_id, asg.cluster, (dups.vb IS NULL) AS keep
-        |FROM asg LEFT JOIN dups ON dups.vb = asg.vec_id
-        |ORDER BY asg.vec_id""".stripMargin,
-    "q70_split_contamination" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sp AS (
-        |  SELECT doc_id,
-        |         CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |                     % 100) < 90
-        |              THEN 'train' ELSE 'holdout' END AS split
-        |  FROM w),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 11),
-        |                                 i -> array_to_string(words[i:i+12], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 13) t),
-        |tr AS (SELECT sh.doc_id, sh.shingle
-        |       FROM sh JOIN sp USING (doc_id) WHERE sp.split = 'train'),
-        |h AS (SELECT DISTINCT shingle
-        |      FROM sh JOIN sp USING (doc_id) WHERE sp.split <> 'train')
-        |SELECT tr.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM tr JOIN h ON h.shingle = tr.shingle
-        |GROUP BY tr.doc_id ORDER BY tr.doc_id""".stripMargin,
-    "q71_corpus_prep_full" ->
-      s"""WITH RECURSIVE dd AS (
-         |  SELECT doc_id, source, $PiiDecorateSql AS text FROM documents),
-         |t AS (
-         |  SELECT doc_id,
-         |    CAST(length(text) AS BIGINT) AS n_chars,
-         |    CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_toks,
-         |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS BIGINT) AS n_punct,
-         |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'on', 'for', 'with'))) AS BIGINT) AS n_stop
-         |  FROM dd),
-         |qual AS (
-         |  SELECT doc_id, CAST(n_toks AS BIGINT) AS n_tokens,
-         |    CAST(CAST(CASE
-         |      WHEN n_chars = 0 THEN 2000 + 25 * least(n_toks, 200)
-         |      WHEN n_toks = 0 THEN
-         |        (4000 * (n_chars - least(4 * (n_punct + n_digit), n_chars)) + n_chars)
-         |          // (2 * n_chars)
-         |      ELSE 25 * least(n_toks, 200)
-         |        + (2 * (3000 * least(5 * n_stop, n_toks) * n_chars
-         |                - 2000 * least(4 * (n_punct + n_digit), n_chars) * n_toks
-         |                + 2000 * n_toks * n_chars)
-         |           + n_toks * n_chars)
-         |          // (2 * n_toks * n_chars)
-         |    END AS BIGINT) AS DOUBLE) / 10000.0 AS quality
-         |  FROM t),
-         |ls AS (
-         |  SELECT doc_id,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-         |  FROM dd),
-         |lang AS (
-         |  SELECT doc_id, CASE
-         |    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |    WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |    WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |    WHEN s_fr >= s_zh THEN 'fr'
-         |    ELSE 'zh' END AS predicted_lang
-         |  FROM ls),
-         |pii AS (
-         |  SELECT doc_id,
-         |    (len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) > 0
-         |     OR len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}')) > 0
-         |     OR len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) > 0) AS has_pii
-         |  FROM dd),
-         |ctok AS (
-         |  SELECT doc_id,
-         |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'),
-         |                            x -> x <> '')) AS token
-         |  FROM dd),
-         |cwts AS (
-         |  SELECT doc_id,
-         |    (('0x' || substr(md5('w:' ||
-         |        CAST((('0x' || substr(md5(token), 1, 8))::BIGINT % 1024) AS VARCHAR)),
-         |      1, 8))::BIGINT / 2147483648.0) - 1.0 AS cw
-         |  FROM ctok),
-         |sc AS (SELECT doc_id, round(sum(cw) / count(*), 6) AS score
-         |       FROM cwts GROUP BY doc_id),
-         |mx AS (
-         |  SELECT doc_id,
-         |    (('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-         |      % 10000) <
-         |    (CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 7500
-         |                 WHEN 'src2' THEN 5000 WHEN 'src3' THEN 2500
-         |                 ELSE 7500 END) AS kept
-         |  FROM dd),
-         |spl AS (
-         |  SELECT doc_id,
-         |    CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 90
-         |         THEN 'train'
-         |         WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 95
-         |         THEN 'val' ELSE 'test' END AS split
-         |  FROM dd),
-         |fp AS (SELECT doc_id, md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+', ' ', 'g'))) AS fingerprint
-         |       FROM dd),
-         |canon AS (SELECT fingerprint, min(doc_id) AS keep_id FROM fp GROUP BY fingerprint),
-         |w AS (
-         |  SELECT doc_id,
-         |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), x -> x <> '') AS words
-         |  FROM dd),
-         |sh AS (
-         |  SELECT DISTINCT doc_id, shingle FROM (
-         |    SELECT doc_id,
-         |           unnest(list_transform(range(1, len(words) - 3),
-         |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-         |    FROM w WHERE len(words) >= 5) t2),
-         |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-         |perms AS (
-         |  SELECT perm,
-         |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-         |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-         |  FROM (SELECT unnest(range(0, 16)) AS perm) t3),
-         |sig AS (
-         |  SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-         |  FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-         |banded AS (
-         |  SELECT doc_id, perm // 2 AS band,
-         |         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY perm) AS key
-         |  FROM sig GROUP BY doc_id, perm // 2),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-         |                              AND a.doc_id < b.doc_id),
-         |est AS (
-         |  SELECT c.doc_a, c.doc_b,
-         |         CAST((2 * sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) * 10000 + 16) // 32 AS DOUBLE) / 10000.0 AS est_jaccard
-         |  FROM cand c
-         |  JOIN sig sa ON sa.doc_id = c.doc_a
-         |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.perm = sa.perm
-         |  GROUP BY c.doc_a, c.doc_b),
-         |pr AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-         |          UNION SELECT doc_b, doc_a FROM pr),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-         |dropped AS (
-         |  SELECT src AS doc_id FROM reach GROUP BY src
-         |  HAVING least(src, min(dst)) < src)
-         |SELECT q.doc_id, q.n_tokens, q.quality, sc.score, spl.split
-         |FROM qual q
-         |JOIN lang l ON l.doc_id = q.doc_id AND l.predicted_lang = 'en'
-         |JOIN pii ON pii.doc_id = q.doc_id AND NOT pii.has_pii
-         |JOIN sc ON sc.doc_id = q.doc_id AND sc.score > -0.2
-         |JOIN mx ON mx.doc_id = q.doc_id AND mx.kept
-         |JOIN spl ON spl.doc_id = q.doc_id
-         |JOIN fp ON fp.doc_id = q.doc_id
-         |JOIN canon c ON c.fingerprint = fp.fingerprint AND c.keep_id = q.doc_id
-         |WHERE q.quality >= 0.4
-         |  AND NOT EXISTS (SELECT 1 FROM dropped d WHERE d.doc_id = q.doc_id)
-         |ORDER BY q.doc_id""".stripMargin,
-    "q72_pack_plan" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, n_tokens,
-        |         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-        |  FROM t WHERE n_tokens > 0)
-        |SELECT doc_id, n_tokens, start_offset,
-        |       start_offset // 512 AS pack_id,
-        |       (start_offset + n_tokens - 1) // 512 AS end_pack_id,
-        |       (start_offset // 512) <> ((start_offset + n_tokens - 1) // 512) AS straddles
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "q73_composition_report" ->
-      s"""WITH dd AS (
-         |  SELECT doc_id, source, $PiiDecorateSql AS text FROM documents),
-         |t AS (
-         |  SELECT doc_id, source,
-         |    CAST(length(text) AS BIGINT) AS n_chars,
-         |    CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_toks,
-         |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS BIGINT) AS n_punct,
-         |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'on', 'for', 'with'))) AS BIGINT) AS n_stop,
-         |    (len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) > 0
-         |     OR len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}')) > 0
-         |     OR len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) > 0) AS has_pii
-         |  FROM dd),
-         |q AS (
-         |  SELECT doc_id, source,
-         |    CAST(n_toks AS BIGINT) AS n_tokens,
-         |    CAST(CASE
-         |      WHEN n_chars = 0 THEN 2000 + 25 * least(n_toks, 200)
-         |      WHEN n_toks = 0 THEN
-         |        (4000 * (n_chars - least(4 * (n_punct + n_digit), n_chars)) + n_chars)
-         |          // (2 * n_chars)
-         |      ELSE 25 * least(n_toks, 200)
-         |        + (2 * (3000 * least(5 * n_stop, n_toks) * n_chars
-         |                - 2000 * least(4 * (n_punct + n_digit), n_chars) * n_toks
-         |                + 2000 * n_toks * n_chars)
-         |           + n_toks * n_chars)
-         |          // (2 * n_toks * n_chars)
-         |    END AS BIGINT) AS q_ticks,
-         |    CASE WHEN has_pii THEN 1 ELSE 0 END AS pii,
-         |    CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 90 THEN 'train'
-         |         WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 95 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM t),
-         |g AS (
-         |  SELECT source, split,
-         |    CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-         |    CAST(sum(q_ticks) AS BIGINT) AS q_ticks,
-         |    CAST(sum(pii) AS BIGINT) AS pii_docs
-         |  FROM q GROUP BY source, split),
-         |tot AS (SELECT source, split, n_docs, n_tokens, q_ticks, pii_docs,
-         |               sum(n_tokens) OVER () AS total_tokens FROM g)
-         |SELECT source, split, n_docs, n_tokens,
-         |  CAST((2 * CAST(n_tokens AS HUGEINT) * 1000000 + total_tokens)
-         |       // (2 * total_tokens) AS BIGINT) / 1000000.0 AS token_share,
-         |  ((2 * q_ticks + n_docs) // (2 * n_docs)) / 10000.0 AS mean_quality,
-         |  pii_docs,
-         |  ((2 * pii_docs * 10000 + n_docs) // (2 * n_docs)) / 10000.0 AS pii_rate
-         |FROM tot ORDER BY source, split""".stripMargin,
-    "q74_token_budget" ->
-      """WITH t AS (
-        |  SELECT doc_id, md5('draw:' || CAST(doc_id AS VARCHAR)) AS h,
-        |         CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, n_tokens,
-        |         CAST(coalesce(sum(n_tokens) OVER (ORDER BY h, doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-        |  FROM t WHERE n_tokens > 0)
-        |SELECT doc_id, n_tokens, start_offset
-        |FROM p WHERE start_offset < 12000 ORDER BY doc_id""".stripMargin,
-    "q75_profile" ->
-      """WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus,
-        |                  CAST(o_totalprice AS DECIMAL(12,2)) AS o_totalprice,
-        |                  o_orderdate, o_orderpriority FROM orders)
-        |SELECT 'o_custkey' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-        |       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_distinct,
-        |       CAST(min(o_custkey) AS VARCHAR) AS min_val,
-        |       CAST(max(o_custkey) AS VARCHAR) AS max_val FROM o
-        |UNION ALL
-        |SELECT 'o_orderdate', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |       CAST(count(DISTINCT o_orderdate) AS BIGINT),
-        |       CAST(min(o_orderdate) AS VARCHAR), CAST(max(o_orderdate) AS VARCHAR) FROM o
-        |UNION ALL
-        |SELECT 'o_orderkey', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |       CAST(count(DISTINCT o_orderkey) AS BIGINT),
-        |       CAST(min(o_orderkey) AS VARCHAR), CAST(max(o_orderkey) AS VARCHAR) FROM o
-        |UNION ALL
-        |SELECT 'o_orderpriority', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |       CAST(count(DISTINCT o_orderpriority) AS BIGINT),
-        |       CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR) FROM o
-        |UNION ALL
-        |SELECT 'o_orderstatus', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |       CAST(count(DISTINCT o_orderstatus) AS BIGINT),
-        |       CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR) FROM o
-        |UNION ALL
-        |SELECT 'o_totalprice', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |       CAST(count(DISTINCT o_totalprice) AS BIGINT),
-        |       CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR) FROM o
-        |ORDER BY col_name""".stripMargin,
-    "q76_asof_join" ->
-      s"""WITH $CandleCte
-         |SELECT ev.event_id, ev.symbol, epoch_us(ev.ts) AS ts_us, ev.value AS price,
-         |       strftime(c.window_start, '%Y-%m-%d %H:%M:%S') AS window_start, c.close
-         |FROM ev ASOF LEFT JOIN candles c
-         |  ON ev.symbol = c.symbol AND ev.ts >= c.window_start
-         |WHERE ev.ts IS NOT NULL
-         |ORDER BY ev.event_id""".stripMargin,
-    // quality chain shared with q92/q93/q94 via QualitySql — one source
-    // of truth; an edit to the formula moves all four oracles together
-    "q77_quality_deciles" ->
-      s"""WITH $QualitySql,
-        |d AS (SELECT quality AS v, count(*) AS c FROM q
-        |      WHERE quality IS NOT NULL GROUP BY v),
-        |cum AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM d),
-        |n AS (SELECT count(*) AS n FROM q WHERE quality IS NOT NULL),
-        |js AS (SELECT unnest(range(1, 10)) AS j),
-        |cuts AS (
-        |  SELECT j, min(v) AS cut
-        |  FROM cum, n, js
-        |  WHERE cum >= (j * n.n + 9) // 10
-        |  GROUP BY j)
-        |SELECT q.doc_id, q.quality,
-        |       CAST(1 + (SELECT count(*) FROM cuts WHERE cut < q.quality) AS INT) AS decile
-        |FROM q ORDER BY doc_id""".stripMargin,
-    // LSH cluster chain shared with q92 via LshClusterSql — one source of
-    // truth; an edit to the chain moves both oracles together
-    "q78_cluster_split" ->
-      s"""WITH RECURSIVE $LshClusterSql
-        |SELECT doc_id, cluster_id,
-        |  CASE WHEN (('0x' || substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 90
-        |       THEN 'train'
-        |       WHEN (('0x' || substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 95
-        |       THEN 'val' ELSE 'test' END AS split
-        |FROM lab ORDER BY doc_id""".stripMargin,
-    "q79_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |c AS (SELECT doc_id, words, CAST(len(words) AS BIGINT) AS n_tokens
-        |      FROM t WHERE len(words) > 0),
-        |p AS (
-        |  SELECT doc_id, words, n_tokens,
-        |         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-        |  FROM c),
-        |x AS (
-        |  SELECT doc_id, words, n_tokens, start_offset,
-        |         unnest(range(start_offset // 512, (start_offset + n_tokens - 1) // 512 + 1)) AS pack_id
-        |  FROM p),
-        |sl AS (
-        |  SELECT pack_id, start_offset,
-        |         greatest(pack_id * 512 - start_offset, 0) AS f,
-        |         least(n_tokens, (pack_id + 1) * 512 - start_offset) AS u,
-        |         words
-        |  FROM x)
-        |SELECT CAST(pack_id AS BIGINT) AS pack_id,
-        |       CAST(sum(u - f) AS BIGINT) AS n_tokens,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       string_agg(array_to_string(words[CAST(f + 1 AS INT):CAST(u AS INT)], ' '),
-        |                  ' ' ORDER BY start_offset) AS text
-        |FROM sl GROUP BY pack_id ORDER BY pack_id""".stripMargin,
-    "q80_frame_sample_plan" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id,
-        |         2000 + (doc_id % 20) * 500 AS duration_ms,
-        |         24 + (doc_id % 3) * 6 AS fps
-        |  FROM documents),
-        |n AS (SELECT media_id, fps,
-        |             least((duration_ms + 699) // 700, 8) AS n_samples FROM m),
-        |s AS (SELECT media_id, fps, unnest(range(0, n_samples)) AS sample_idx
-        |      FROM n WHERE n_samples > 0)
-        |SELECT media_id, CAST(sample_idx AS BIGINT) AS sample_idx,
-        |       CAST(sample_idx * 700 AS BIGINT) AS sample_ts_ms,
-        |       CAST((sample_idx * 700 * fps) // 1000 AS BIGINT) AS frame_number
-        |FROM s ORDER BY media_id, sample_idx""".stripMargin,
-    "q81_ngram_novelty" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 11),
-        |                                 i -> array_to_string(words[i:i+12], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 13) t),
-        |df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
-        |d AS (
-        |  SELECT s.doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_shingles,
-        |         CAST(sum(CASE WHEN df.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
-        |  FROM sh s JOIN df ON df.shingle = s.shingle
-        |  GROUP BY s.doc_id)
-        |SELECT doc_id, n_shingles, n_unique,
-        |       ((2 * n_unique * 10000 + n_shingles) // (2 * n_shingles)) / 10000.0 AS novelty
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "q82_length_histogram" ->
-      """WITH t AS (
-        |  SELECT CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |b AS (SELECT n_tokens, CAST(length(bin(n_tokens)) AS INT) AS bin
-        |      FROM t WHERE n_tokens > 0)
-        |SELECT bin,
-        |       CAST(1 AS BIGINT) << (bin - 1) AS lo,
-        |       (CAST(1 AS BIGINT) << bin) - 1 AS hi,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-        |       CAST(min(n_tokens) AS BIGINT) AS min_tokens,
-        |       CAST(max(n_tokens) AS BIGINT) AS max_tokens
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-    "q83_tfidf_topk" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(words) AS token FROM w),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
-        |df AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |s AS (SELECT tf.doc_id, tf.token, tf.tf, df.df,
-        |             tf.tf * (CAST(round(ln((n.n + 1.0) / (df.df + 1.0)) * 1000000) AS BIGINT)
-        |                      + 1000000) AS score
-        |      FROM tf JOIN df USING (token) CROSS JOIN n),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |                                   ORDER BY score DESC, token) AS rank FROM s)
-        |SELECT doc_id, CAST(rank AS INT) AS rank, token, tf, df,
-        |       score / 1000000.0 AS tfidf
-        |FROM r WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-    "q84_lm_score" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(words) AS token FROM w),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM c),
-        |m AS (SELECT token, CAST(round(ln(CAST(t.t AS DOUBLE) / n) * 1000000) AS BIGINT) AS nll
-        |      FROM c CROSS JOIN t),
-        |d AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |             CAST(sum(m.nll) AS BIGINT) AS nll_micro
-        |      FROM tok JOIN m USING (token) GROUP BY 1)
-        |SELECT doc_id, n_tokens, nll_micro,
-        |       ((2 * nll_micro + n_tokens) // (2 * n_tokens)) / 1000000.0 AS avg_nll
-        |FROM d ORDER BY doc_id""".stripMargin,
-    // replays the documented latest-start-wins-then-containment semantics
-    // (NOT a plain range join, which would multi-match on overlap): pick
-    // the latest start <= ts per purchase, then null out expired payloads
-    "q85_interval_join" ->
-      """WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events),
-        |p AS (SELECT event_id, user_id, ts, value FROM e WHERE event_type = 'purchase'),
-        |s AS (SELECT user_id, ts AS start_ts, ts + INTERVAL 4 HOUR AS end_ts,
-        |             event_id AS session_id, value AS session_value
-        |      FROM e WHERE event_type = 'signup'),
-        |cand AS (
-        |  SELECT p.event_id, p.user_id, p.ts, p.value,
-        |         s.end_ts, s.session_id, s.session_value,
-        |         row_number() OVER (PARTITION BY p.event_id
-        |           ORDER BY s.start_ts DESC, s.end_ts DESC,
-        |                    s.session_id DESC, s.session_value DESC) AS rn
-        |  FROM p LEFT JOIN s ON p.user_id = s.user_id AND s.start_ts <= p.ts)
-        |SELECT event_id, user_id, epoch_us(ts) AS ts_us, value AS amount,
-        |       CASE WHEN end_ts > ts THEN session_id END AS session_id,
-        |       CASE WHEN end_ts > ts THEN session_value END AS session_value
-        |FROM cand WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    "q86_rolling_active" ->
-      """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |a AS (SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM e),
-        |days AS (SELECT DISTINCT d FROM a)
-        |SELECT days.d AS day, CAST(count(DISTINCT a.user_id) AS BIGINT) AS active_users
-        |FROM days JOIN a ON a.d BETWEEN days.d - 6 AND days.d
-        |GROUP BY days.d ORDER BY day""".stripMargin,
-    "q87_funnel" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |s1 AS (SELECT user_id, min(ts) AS t FROM e WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'click' AND e.ts >= s1.t GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts >= s2.t GROUP BY 1)
-        |SELECT CAST(1 AS INT) AS step_idx, 'view' AS step_name,
-        |       CAST((SELECT count(*) FROM s1) AS BIGINT) AS users
-        |UNION ALL
-        |SELECT CAST(2 AS INT), 'click', CAST((SELECT count(*) FROM s2) AS BIGINT)
-        |UNION ALL
-        |SELECT CAST(3 AS INT), 'purchase', CAST((SELECT count(*) FROM s3) AS BIGINT)
-        |ORDER BY step_idx""".stripMargin,
-    "q88_retention" ->
-      """WITH e AS (SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |a AS (SELECT DISTINCT user_id, d FROM e),
-        |c AS (SELECT user_id, min(d) AS cohort FROM a GROUP BY 1)
-        |SELECT c.cohort AS cohort_day,
-        |       CAST((a.d - c.cohort) // 7 AS INT) AS period_offset,
-        |       CAST(count(DISTINCT a.user_id) AS BIGINT) AS users
-        |FROM a JOIN c ON a.user_id = c.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q89_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |dims AS (SELECT CAST(max(len(embedding)) AS BIGINT) AS d FROM e),
-        |idx AS (SELECT unnest(range(1, (SELECT d FROM dims) + 1)) AS i),
-        |comp AS (SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        |         FROM e CROSS JOIN idx),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |qcomp AS (SELECT vec_id AS query_id, i, x FROM comp WHERE vec_id % 50 = 0),
-        |dots AS (
-        |  SELECT q.query_id, c.vec_id AS neighbor_id, sum(c.x * q.x) AS dp
-        |  FROM comp c JOIN qcomp q ON c.i = q.i AND c.vec_id <> q.query_id
-        |  GROUP BY q.query_id, c.vec_id),
-        |scored AS (
-        |  SELECT d.query_id, d.neighbor_id,
-        |         round(d.dp / (nn.nrm * nq.nrm), 6) AS cosine
-        |  FROM dots d
-        |  JOIN norms nn ON nn.vec_id = d.neighbor_id
-        |  JOIN norms nq ON nq.vec_id = d.query_id
-        |  WHERE round(d.dp / (nn.nrm * nq.nrm), 6) >= 0.05
-        |    AND round(d.dp / (nn.nrm * nq.nrm), 6) < 0.6)
-        |SELECT query_id, neighbor_id, cosine, rnk FROM (
-        |  SELECT query_id, neighbor_id, cosine,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |           ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        |  FROM scored) t
-        |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
-    "q90_conversion_lag" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |t0 AS (SELECT user_id, min(ts) AS t FROM e WHERE event_type = 'view' GROUP BY 1),
-        |t1 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN t0 ON e.user_id = t0.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts >= t0.t GROUP BY 1)
-        |SELECT (epoch_us(t1.t) - epoch_us(t0.t)) // 3600000000 AS lag_bucket,
-        |       CAST(count(*) AS BIGINT) AS users
-        |FROM t1 JOIN t0 ON t1.user_id = t0.user_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q91_activity_deciles" ->
-      """WITH a AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events FROM events GROUP BY 1),
-        |d AS (SELECT n_events AS v, count(*) AS c FROM a GROUP BY 1),
-        |cum AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM d),
-        |n AS (SELECT count(*) AS n FROM a),
-        |js AS (SELECT unnest(range(1, 10)) AS j),
-        |cuts AS (SELECT j, min(v) AS cut FROM cum, n, js
-        |         WHERE cum >= (j * n.n + 9) // 10 GROUP BY j)
-        |SELECT a.user_id, a.n_events,
-        |       CAST(1 + (SELECT count(*) FROM cuts WHERE cut < a.n_events) AS INT) AS decile
-        |FROM a ORDER BY user_id""".stripMargin,
-    // replays the LSH clusters (q78's chain), the quality score (q77's),
-    // and the per-cluster argmax with the same (quality DESC, doc_id) tie
-    "q92_best_of_cluster" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-         |$QualitySql,
-         |j AS (SELECT lab.doc_id, q.quality, lab.cluster_id
-         |      FROM lab JOIN q ON q.doc_id = lab.doc_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY cluster_id
-         |                ORDER BY quality DESC, doc_id) AS rn FROM j)
-         |SELECT doc_id, quality, cluster_id, rn = 1 AS keep
-         |FROM r ORDER BY doc_id""".stripMargin,
-    "q93_curriculum" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(words) AS token FROM w),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM c),
-        |m AS (SELECT token, CAST(round(ln(CAST(t.t AS DOUBLE) / n) * 1000000) AS BIGINT) AS nll
-        |      FROM c CROSS JOIN t),
-        |d AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |             CAST(sum(m.nll) AS BIGINT) AS nll_micro
-        |      FROM tok JOIN m USING (token) GROUP BY 1),
-        |s AS (SELECT doc_id,
-        |             ((2 * nll_micro + n_tokens) // (2 * n_tokens)) / 1000000.0 AS avg_nll
-        |      FROM d),
-        |dist AS (SELECT avg_nll AS v, count(*) AS c FROM s GROUP BY 1),
-        |cum AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM dist),
-        |n AS (SELECT count(*) AS n FROM s),
-        |js AS (SELECT unnest(range(1, 4)) AS j),
-        |cuts AS (SELECT j, min(v) AS cut FROM cum, n, js
-        |         WHERE cum >= (j * n.n + 3) // 4 GROUP BY j)
-        |SELECT s.doc_id, s.avg_nll,
-        |       CAST(1 + (SELECT count(*) FROM cuts WHERE cut < s.avg_nll) AS INT) AS phase
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q94_source_cap" ->
-      s"""WITH $QualitySql,
-         |src AS (SELECT d.doc_id, d.source, q.quality
-         |        FROM documents d JOIN q ON q.doc_id = d.doc_id),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source
-         |                ORDER BY quality DESC, doc_id) AS INT) AS src_rank
-         |      FROM src)
-         |SELECT doc_id, source, quality, src_rank
-         |FROM r WHERE src_rank <= 20 ORDER BY source, src_rank""".stripMargin,
-    // null-filter parity with Engagement.transitions (null users/ts are
-    // not a flow); ordering precision is pinned on both sides to micros
-    // (DuckDB CAST(TIMESTAMP_NS -> TIMESTAMP) truncates exactly like the
-    // engine's `ts div 1000` in Tables.events) with event_id tiebreak.
-    // NULL event_type is bucketed as the '<none>' sentinel on BOTH sides:
-    // a null output key would sort NULLS FIRST in Spark / NULLS LAST in
-    // DuckDB — identical multisets, divergent row order, hash mismatch
-    "q95_transitions" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |                  coalesce(event_type, '<none>') AS event_type FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |x AS (SELECT event_type AS f,
-        |             lead(event_type) OVER (PARTITION BY user_id
-        |                                    ORDER BY ts, event_id) AS t
-        |      FROM e),
-        |p AS (SELECT f, t, CAST(count(*) AS BIGINT) AS n
-        |      FROM x WHERE t IS NOT NULL GROUP BY 1, 2)
-        |SELECT f AS from_type, t AS to_type, n,
-        |       CAST((20000 * n + sum(n) OVER (PARTITION BY f))
-        |         // (2 * sum(n) OVER (PARTITION BY f)) AS BIGINT) AS prob_bp
-        |FROM p ORDER BY from_type, to_type""".stripMargin,
-    // the q101 bigram stream aggregated to pair types; PMI rounded once
-    // to micro-nats so the top-k boundary is integer-deterministic
-    // q62's split buckets + q84's micro-nat discipline with add-one
-    // smoothing over the train-only counts; OOV = absent from train
-    "q116_heldout_surprisal" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS token
-        |  FROM documents),
-        |sp AS (
-        |  SELECT doc_id,
-        |         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket
-        |  FROM documents),
-        |tc AS (SELECT token, CAST(count(*) AS BIGINT) AS c
-        |       FROM tok JOIN sp USING (doc_id) WHERE sp.bucket < 90 GROUP BY 1),
-        |tt AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM tc),
-        |vv AS (SELECT CAST(count(DISTINCT token) AS BIGINT) AS v FROM tok),
-        |vals AS (SELECT tok.doc_id, token FROM tok JOIN sp USING (doc_id)
-        |         WHERE sp.bucket >= 90 AND sp.bucket < 95),
-        |sc AS (SELECT doc_id,
-        |         CASE WHEN tc.c IS NULL THEN 1 ELSE 0 END AS oov,
-        |         CAST(round(ln((tt.t + vv.v) * 1.0 / (coalesce(tc.c, 0) + 1)) * 1000000) AS BIGINT) AS nll
-        |       FROM vals LEFT JOIN tc USING (token) CROSS JOIN tt CROSS JOIN vv)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |       CAST(sum(oov) AS BIGINT) AS n_oov,
-        |       CAST(sum(nll) AS BIGINT) AS nll_micro,
-        |       ((2 * sum(nll) + count(*)) // (2 * count(*))) / 1e6 AS avg_nll
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // micro-tick component sums -> exact centroids; pairwise cosine over
-    // the (labels x dims) relation, q36's 6dp rounding
-    "q117_label_centroids" ->
-      """WITH e AS (SELECT CAST(label AS BIGINT) AS label, embedding FROM embeddings),
-        |comp AS (
-        |  SELECT label, unnest(range(1, len(embedding) + 1)) AS i,
-        |         unnest(list_transform(embedding,
-        |           v -> CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5) AS BIGINT))) AS t
-        |  FROM e),
-        |cent AS (SELECT label, i, CAST(sum(t) AS DOUBLE) / count(*) / 1000000.0 AS m
-        |         FROM comp GROUP BY 1, 2),
-        |p AS (SELECT a.label AS label_a, b.label AS label_b,
-        |             sum(a.m * b.m) AS dp, sum(a.m * a.m) AS na2, sum(b.m * b.m) AS nb2
-        |      FROM cent a JOIN cent b ON a.i = b.i AND a.label < b.label
-        |      GROUP BY 1, 2)
-        |SELECT label_a, label_b, round(dp / (sqrt(na2) * sqrt(nb2)), 6) AS cosine
-        |FROM p ORDER BY label_a, label_b""".stripMargin,
-    // full-outer on doc_id, q34's normalized fingerprint as identity
-    "q118_epoch_diff" ->
-      """WITH v1 AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 5 = 0 THEN text || ' [v1]' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000000, text FROM documents WHERE doc_id % 11 = 0),
-        |fo AS (SELECT doc_id, md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g'))) AS f FROM v1),
-        |fn AS (SELECT doc_id, md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g'))) AS f FROM documents),
-        |j AS (SELECT coalesce(fo.doc_id, fn.doc_id) AS doc_id, fo.f AS f_old, fn.f AS f_new
-        |      FROM fo FULL OUTER JOIN fn ON fn.doc_id = fo.doc_id),
-        |s AS (SELECT doc_id, CASE WHEN f_old IS NULL THEN 'added'
-        |                          WHEN f_new IS NULL THEN 'removed'
-        |                          WHEN f_old = f_new THEN 'unchanged'
-        |                          ELSE 'changed' END AS status FROM j)
-        |SELECT status, CAST(count(*) AS BIGINT) AS n_docs,
-        |       min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
-        |FROM s GROUP BY 1 ORDER BY status""".stripMargin,
-    // q32's langid CASE + the salted eval hash; rank within each cell
-    "q119_stratified_eval" ->
-      """WITH s AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, source, CASE
-        |    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |    WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |    WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |    WHEN s_fr >= s_zh THEN 'fr'
-        |    ELSE 'zh' END AS predicted_lang
-        |  FROM s),
-        |u AS (SELECT doc_id, source, predicted_lang,
-        |             ('0x' || substr(md5('eval:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 AS uu
-        |      FROM p),
-        |r AS (SELECT doc_id, source, predicted_lang,
-        |             CAST(row_number() OVER (PARTITION BY source, predicted_lang
-        |                                     ORDER BY uu, doc_id) AS BIGINT) AS rk
-        |      FROM u)
-        |SELECT doc_id, source, predicted_lang, rk FROM r WHERE rk <= 5
-        |ORDER BY source, predicted_lang, rk""".stripMargin,
-    // per-(fingerprint, source) counts -> combination arithmetic; the
-    // planted mirror/recrawl base matches the engine fixture
-    "q120_exact_overlap" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 2000000000, text, 'mirror' FROM documents WHERE doc_id % 9 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 3000000000, text, source FROM documents WHERE doc_id % 15 = 0),
-        |f AS (SELECT md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+', ' ', 'g'))) AS fp, source FROM base),
-        |cells AS (SELECT fp, source, CAST(count(*) AS BIGINT) AS c FROM f GROUP BY 1, 2),
-        |cx AS (SELECT a.source AS source_a, b.source AS source_b,
-        |              CAST(sum(a.c * b.c) AS BIGINT) AS n_pairs
-        |       FROM cells a JOIN cells b ON a.fp = b.fp AND a.source < b.source
-        |       GROUP BY 1, 2),
-        |dg AS (SELECT source AS source_a, source AS source_b,
-        |              CAST(sum(c * (c - 1) // 2) AS BIGINT) AS n_pairs
-        |       FROM cells WHERE c >= 2 GROUP BY 1, 2)
-        |SELECT * FROM cx UNION ALL SELECT * FROM dg
-        |ORDER BY source_a, source_b""".stripMargin,
-    // the full row-local gate chain over the decorated corpus: q60's pii
-    // regexes, QualitySql's formula, q32's langid CASE, q67's classifier,
-    // q68's mixture CASE — first failing gate wins, shares HALF_UP bp
-    "q111_gate_funnel" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, source, $PiiDecorateSql AS text FROM documents),
-         |pii AS (
-         |  SELECT doc_id,
-         |    (len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) > 0
-         |     OR len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}')) > 0
-         |     OR len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) > 0) AS has_pii
-         |  FROM d),
-         |qt AS (
-         |  SELECT doc_id,
-         |    CAST(length(text) AS BIGINT) AS n_chars,
-         |    CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_toks,
-         |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS BIGINT) AS n_punct,
-         |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'on', 'for', 'with'))) AS BIGINT) AS n_stop
-         |  FROM d),
-         |q AS (
-         |  SELECT doc_id,
-         |    CAST(CAST(CASE
-         |      WHEN n_chars = 0 THEN 2000 + 25 * least(n_toks, 200)
-         |      WHEN n_toks = 0 THEN
-         |        (4000 * (n_chars - least(4 * (n_punct + n_digit), n_chars)) + n_chars)
-         |          // (2 * n_chars)
-         |      ELSE 25 * least(n_toks, 200)
-         |        + (2 * (3000 * least(5 * n_stop, n_toks) * n_chars
-         |                - 2000 * least(4 * (n_punct + n_digit), n_chars) * n_toks
-         |                + 2000 * n_toks * n_chars)
-         |           + n_toks * n_chars)
-         |          // (2 * n_toks * n_chars)
-         |    END AS BIGINT) AS DOUBLE) / 10000.0 AS quality
-         |  FROM qt),
-         |ls AS (
-         |  SELECT doc_id,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-         |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-         |  FROM d),
-         |lang AS (
-         |  SELECT doc_id, CASE
-         |    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |    WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |    WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |    WHEN s_fr >= s_zh THEN 'fr'
-         |    ELSE 'zh' END AS predicted_lang
-         |  FROM ls),
-         |tok AS (
-         |  SELECT doc_id,
-         |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'),
-         |                            x -> x <> '')) AS token
-         |  FROM d),
-         |wts AS (
-         |  SELECT doc_id,
-         |    (('0x' || substr(md5('w:' ||
-         |        CAST((('0x' || substr(md5(token), 1, 8))::BIGINT % 1024) AS VARCHAR)),
-         |      1, 8))::BIGINT / 2147483648.0) - 1.0 AS w
-         |  FROM tok),
-         |cs AS (SELECT doc_id, count(*) AS n_tokens, sum(w) AS raw FROM wts GROUP BY doc_id),
-         |cls AS (SELECT d.doc_id, coalesce(round(raw / n_tokens, 6), 0.0) AS score
-         |        FROM d LEFT JOIN cs ON cs.doc_id = d.doc_id),
-         |mix AS (
-         |  SELECT doc_id,
-         |         (('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-         |           % 10000) <
-         |         (CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 7500
-         |                      WHEN 'src2' THEN 5000 WHEN 'src3' THEN 2500
-         |                      ELSE 1000 END) AS kept
-         |  FROM d),
-         |v AS (
-         |  SELECT CASE WHEN pii.has_pii THEN 'pii'
-         |              WHEN q.quality < 0.4 THEN 'quality'
-         |              WHEN lang.predicted_lang <> 'en' THEN 'language'
-         |              WHEN cls.score <= 0.0 THEN 'classifier'
-         |              WHEN NOT mix.kept THEN 'mixture'
-         |              ELSE 'admitted' END AS gate
-         |  FROM d JOIN pii USING (doc_id) JOIN q USING (doc_id)
-         |         JOIN lang USING (doc_id) JOIN cls USING (doc_id)
-         |         JOIN mix USING (doc_id)),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS t FROM v),
-         |g AS (SELECT gate, CAST(count(*) AS BIGINT) AS n_docs FROM v GROUP BY 1)
-         |SELECT CAST(CASE gate WHEN 'pii' THEN 1 WHEN 'quality' THEN 2
-         |            WHEN 'language' THEN 3 WHEN 'classifier' THEN 4
-         |            WHEN 'mixture' THEN 5 ELSE 6 END AS BIGINT) AS stage,
-         |       gate, n_docs, (20000 * n_docs + t) // (2 * t) AS share_bp
-         |FROM g CROSS JOIN tot ORDER BY stage""".stripMargin,
-    "q112_charclass" ->
-      """WITH c AS (
-        |  SELECT source,
-        |    CAST(length(text) AS BIGINT) AS n_ch,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS BIGINT) AS a,
-        |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS dg,
-        |    CAST(len(regexp_extract_all(text, '\s')) AS BIGINT) AS sp,
-        |    CAST(len(regexp_extract_all(text, '[\.,;:!\?]')) AS BIGINT) AS p
-        |  FROM documents),
-        |g AS (SELECT source, CAST(sum(n_ch) AS BIGINT) AS n_chars,
-        |             CAST(sum(a) AS BIGINT) AS a, CAST(sum(dg) AS BIGINT) AS dg,
-        |             CAST(sum(sp) AS BIGINT) AS sp, CAST(sum(p) AS BIGINT) AS p
-        |      FROM c GROUP BY 1)
-        |SELECT source, n_chars,
-        |       (20000 * a + n_chars) // (2 * n_chars) AS alpha_bp,
-        |       (20000 * dg + n_chars) // (2 * n_chars) AS digit_bp,
-        |       (20000 * sp + n_chars) // (2 * n_chars) AS space_bp,
-        |       (20000 * p + n_chars) // (2 * n_chars) AS punct_bp,
-        |       (20000 * (n_chars - a - dg - sp - p) + n_chars) // (2 * n_chars) AS other_bp
-        |FROM g ORDER BY source""".stripMargin,
-    // q66's lineified corpus; df distinct-first, top-20 by (df desc, line)
-    "q113_boilerplate_topk" ->
-      s"""WITH $LineifySql,
-         |lns AS (SELECT DISTINCT doc_id, line FROM (
-         |          SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM d) t),
-         |dfs AS (SELECT line, CAST(count(*) AS BIGINT) AS df FROM lns
-         |        GROUP BY 1 HAVING count(*) >= 2),
-         |top AS (SELECT line, df FROM dfs ORDER BY df DESC, line LIMIT 20)
-         |SELECT CAST(row_number() OVER (ORDER BY df DESC, line) AS BIGINT) AS rank,
-         |       line, df
-         |FROM top ORDER BY rank""".stripMargin,
-    // least squares over integer micro-nat (ln rank, ln count) points;
-    // exact BIGINT sums, one double division rounded 6dp
-    "q114_zipf_slope" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS token
-        |  FROM documents),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-        |top AS (SELECT token, n FROM c ORDER BY n DESC, token LIMIT 100),
-        |r AS (SELECT n, CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank FROM top),
-        |m AS (SELECT CAST(round(ln(rank) * 1000000) AS BIGINT) AS x,
-        |             CAST(round(ln(n) * 1000000) AS BIGINT) AS y FROM r),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS k,
-        |             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |             CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-        |      FROM m)
-        |SELECT k AS n_points,
-        |       round(CAST(k * sxy - sx * sy AS DOUBLE) / CAST(k * sxx - sx * sx AS DOUBLE), 6) AS slope
-        |FROM a""".stripMargin,
-    // q77's quality chain; explicit type-1 quantiles on the counting grid
-    "q115_source_quality" ->
-      s"""WITH $QualitySql,
-         |src AS (SELECT d.source, q.quality FROM documents d JOIN q ON q.doc_id = d.doc_id
-         |        WHERE q.quality IS NOT NULL),
-         |cells AS (SELECT source, quality, CAST(count(*) AS BIGINT) AS cnt
-         |          FROM src GROUP BY 1, 2),
-         |cum AS (SELECT source, quality, cnt,
-         |          CAST(sum(cnt) OVER (PARTITION BY source ORDER BY quality
-         |                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-         |          CAST(sum(cnt) OVER (PARTITION BY source) AS BIGINT) AS n
-         |        FROM cells)
-         |SELECT source, CAST(max(n) AS BIGINT) AS n_docs,
-         |       min(CASE WHEN cum * 100 >= n * 25 THEN quality END) AS p25,
-         |       min(CASE WHEN cum * 100 >= n * 50 THEN quality END) AS p50,
-         |       min(CASE WHEN cum * 100 >= n * 75 THEN quality END) AS p75
-         |FROM cum GROUP BY source ORDER BY source""".stripMargin,
-    // q35's shingle/df-cap chain verbatim, containment scoring per side
-    "q106_containment" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 100),
-        |capped AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        |  FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id)
-        |SELECT p.doc_a, p.doc_b, sa.n_sh AS n_a, sb.n_sh AS n_b, p.n_common,
-        |       CAST((2 * p.n_common * 10000 + sa.n_sh) // (2 * sa.n_sh) AS DOUBLE)
-        |         / 10000.0 AS contain_a,
-        |       CAST((2 * p.n_common * 10000 + sb.n_sh) // (2 * sb.n_sh) AS DOUBLE)
-        |         / 10000.0 AS contain_b
-        |FROM pairs p
-        |JOIN sizes sa ON sa.doc_id = p.doc_a
-        |JOIN sizes sb ON sb.doc_id = p.doc_b
-        |WHERE CAST((2 * p.n_common * 10000 + sa.n_sh) // (2 * sa.n_sh) AS DOUBLE)
-        |        / 10000.0 >= 0.6
-        |   OR CAST((2 * p.n_common * 10000 + sb.n_sh) // (2 * sb.n_sh) AS DOUBLE)
-        |        / 10000.0 >= 0.6
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q107_vocab_coverage" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS token
-        |  FROM documents),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c),
-        |top AS (SELECT token, n FROM c ORDER BY n DESC, token LIMIT 100),
-        |r AS (SELECT token, n,
-        |        CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank,
-        |        CAST(sum(n) OVER (ORDER BY n DESC, token ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        |      FROM top)
-        |SELECT rank, token, n, (20000 * cum + total) // (2 * total) AS cum_share_bp
-        |FROM r CROSS JOIN tot ORDER BY rank""".stripMargin,
-    // the shared LSH chain through `pr`, sources joined on both ends;
-    // cells least/greatest-normalized like the engine
-    "q108_source_overlap" ->
-      s"""WITH RECURSIVE $LshClusterSql
-         |SELECT least(da.source, db.source) AS source_a,
-         |       greatest(da.source, db.source) AS source_b,
-         |       CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM pr
-         |JOIN documents da ON da.doc_id = pr.doc_a
-         |JOIN documents db ON db.doc_id = pr.doc_b
-         |GROUP BY 1, 2
-         |ORDER BY source_a, source_b""".stripMargin,
-    // q36's component/norm CTEs; extrema on micro ticks like the engine
-    "q109_embedding_audit" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |dims AS (SELECT CAST(max(len(embedding)) AS BIGINT) AS d FROM e),
-        |idx AS (SELECT unnest(range(1, (SELECT d FROM dims) + 1)) AS i),
-        |comp AS (SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        |         FROM e CROSS JOIN idx),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp GROUP BY vec_id),
-        |t AS (SELECT CAST(len(e.embedding) AS BIGINT) AS dim,
-        |             CAST(floor(n.nrm * 4) AS BIGINT) AS norm_bucket,
-        |             CAST(floor(n.nrm * 1000000 + 0.5) AS BIGINT) AS nt
-        |      FROM e JOIN norms n ON n.vec_id = e.vec_id)
-        |SELECT dim, norm_bucket, CAST(count(*) AS BIGINT) AS n_vecs,
-        |       CAST(sum(CASE WHEN nt = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-        |       min(nt) / 1e6 AS min_norm, max(nt) / 1e6 AS max_norm
-        |FROM t GROUP BY 1, 2 ORDER BY dim, norm_bucket""".stripMargin,
-    // q32's score CTE + argmax CASE with token/char counters fused in
-    "q110_fertility" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_toks,
-        |    CAST(length(text) AS BIGINT) AS n_ch,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-        |  FROM documents),
-        |p AS (
-        |  SELECT n_toks, n_ch,
-        |    CASE
-        |      WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |      WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |      WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |      WHEN s_fr >= s_zh THEN 'fr'
-        |      ELSE 'zh' END AS predicted_lang
-        |  FROM s),
-        |g AS (SELECT predicted_lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |             CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-        |             CAST(sum(n_ch) AS BIGINT) AS n_chars
-        |      FROM p GROUP BY 1)
-        |SELECT predicted_lang, n_docs, n_tokens, n_chars,
-        |       (20000 * n_chars + n_tokens) // (2 * n_tokens) AS cpt_bp
-        |FROM g ORDER BY predicted_lang""".stripMargin,
-    "q105_collocations" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(words) AS token FROM w),
-        |uni AS (SELECT token, CAST(count(*) AS BIGINT) AS c1 FROM tok GROUP BY 1),
-        |bgi AS (SELECT doc_id, words, unnest(range(1, len(words))) AS i
-        |        FROM w WHERE len(words) >= 2),
-        |bgp AS (SELECT doc_id, words[CAST(i AS INT)] AS prev,
-        |               words[CAST(i + 1 AS INT)] AS cur
-        |        FROM bgi),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM bgp),
-        |c2t AS (SELECT prev, cur, CAST(count(*) AS BIGINT) AS n_pair
-        |        FROM bgp GROUP BY 1, 2 HAVING count(*) >= 5)
-        |SELECT c2t.prev, c2t.cur, c2t.n_pair,
-        |       CAST(round(ln((n.n * n_pair) * 1.0 / (ua.c1 * ub.c1)) * 1000000) AS BIGINT) AS pmi_micro
-        |FROM c2t
-        |JOIN uni ua ON ua.token = c2t.prev
-        |JOIN uni ub ON ub.token = c2t.cur
-        |CROSS JOIN n
-        |ORDER BY pmi_micro DESC, prev, cur LIMIT 20""".stripMargin,
-    // q46's chain through est, then exact jaccard over the candidate
-    // docs' shingle sets via the inverted index; err in 1e-4 ticks
-    "q103_lsh_calibration" ->
-      s"""WITH $LshCalibSql
-        |SELECT doc_a, doc_b, est_jaccard, exact_jaccard,
-        |       CAST(round(est_jaccard * 10000) - round(exact_jaccard * 10000) AS BIGINT) AS err_ticks
-        |FROM j ORDER BY doc_a, doc_b""".stripMargin,
-        // q32's score CTE + argmax CASE, grouped to the (source, lang) dim;
-    // share in the q95 integer-HALF_UP basis-point formula. NULL source
-    // → '<none>' sentinel on BOTH sides (it is the first ORDER BY key;
-    // Spark NULLS FIRST vs DuckDB NULLS LAST would flip the row order)
-    "q104_lang_composition" ->
-      """WITH s AS (
-        |  SELECT doc_id, coalesce(source, '<none>') AS source,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-        |  FROM documents),
-        |p AS (
-        |  SELECT source,
-        |    CASE
-        |      WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |      WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |      WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |      WHEN s_fr >= s_zh THEN 'fr'
-        |      ELSE 'zh' END AS predicted_lang
-        |  FROM s),
-        |g AS (SELECT source, predicted_lang, CAST(count(*) AS BIGINT) AS n_docs
-        |      FROM p GROUP BY 1, 2)
-        |SELECT source, predicted_lang, n_docs,
-        |       CAST((20000 * n_docs + sum(n_docs) OVER (PARTITION BY source))
-        |         // (2 * sum(n_docs) OVER (PARTITION BY source)) AS BIGINT) AS share_bp
-        |FROM g ORDER BY source, predicted_lang""".stripMargin,
-    // add-one-smoothed conditional NLL per bigram TYPE, rounded once to
-    // integer micro-nats; per-doc sums and HALF_UP mean exact after that
-    "q101_bigram_lm" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(words) AS token FROM w),
-        |uni AS (SELECT token, CAST(count(*) AS BIGINT) AS c1 FROM tok GROUP BY 1),
-        |v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
-        |bgi AS (SELECT doc_id, words, unnest(range(1, len(words))) AS i
-        |        FROM w WHERE len(words) >= 2),
-        |bgp AS (SELECT doc_id, words[CAST(i AS INT)] AS prev,
-        |               words[CAST(i + 1 AS INT)] AS cur
-        |        FROM bgi),
-        |c2t AS (SELECT prev, cur, CAST(count(*) AS BIGINT) AS c2
-        |        FROM bgp GROUP BY 1, 2),
-        |m AS (SELECT c2t.prev, c2t.cur,
-        |             CAST(round(ln((c1 + v.v) * 1.0 / (c2 + 1)) * 1000000) AS BIGINT) AS nll
-        |      FROM c2t JOIN uni ON uni.token = c2t.prev CROSS JOIN v),
-        |d AS (SELECT bgp.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |             CAST(sum(m.nll) AS BIGINT) AS nll_micro
-        |      FROM bgp JOIN m ON m.prev = bgp.prev AND m.cur = bgp.cur
-        |      GROUP BY 1)
-        |SELECT doc_id, n_bigrams, nll_micro,
-        |       ((2 * nll_micro + n_bigrams) // (2 * n_bigrams)) / 1000000.0 AS avg_nll2
-        |FROM d ORDER BY doc_id""".stripMargin,
-    // q69's assignment chain, then integer-micro inertia per cell
-    "q102_ivf_cells" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |comp AS (
-        |  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-        |         unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS x
-        |  FROM e),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |cent AS (SELECT vec_id AS cvid, row_number() OVER (ORDER BY vec_id) - 1 AS j
-        |         FROM (SELECT vec_id FROM norms ORDER BY vec_id LIMIT 8) t),
-        |ccomp AS (SELECT cent.j, comp.i, comp.x
-        |          FROM comp JOIN cent ON cent.cvid = comp.vec_id),
-        |cnorm AS (SELECT j, sqrt(sum(x * x)) AS nrm FROM ccomp GROUP BY j),
-        |cos AS (
-        |  SELECT comp.vec_id, cc.j,
-        |         round(sum(comp.x * cc.x) / (n1.nrm * n2.nrm), 6) AS c
-        |  FROM comp JOIN ccomp cc ON cc.i = comp.i
-        |  JOIN norms n1 ON n1.vec_id = comp.vec_id
-        |  JOIN cnorm n2 ON n2.j = cc.j
-        |  GROUP BY comp.vec_id, cc.j, n1.nrm, n2.nrm),
-        |asg AS (SELECT vec_id, j AS cluster, c FROM (
-        |          SELECT vec_id, j, c,
-        |                 row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, j) AS rn
-        |          FROM cos) t
-        |        WHERE rn = 1),
-        |dd AS (SELECT cluster, CAST(floor((1 - c) * 1000000 + 0.5) AS BIGINT) AS d
-        |       FROM asg),
-        |agg AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_vectors,
-        |               CAST(sum(d) AS BIGINT) AS sd, CAST(max(d) AS BIGINT) AS md
-        |        FROM dd GROUP BY 1)
-        |SELECT cluster, n_vectors,
-        |       ((2 * sd + n_vectors) // (2 * n_vectors)) / 1000000.0 AS mean_dist,
-        |       md / 1000000.0 AS max_dist
-        |FROM agg ORDER BY cluster""".stripMargin,
-    // q36's brute-cosine chain with the candidate side label-filtered
-    // (queries drawn unfiltered — pre-filter semantics)
-    "q100_knn_filtered" ->
-      """WITH e AS (SELECT vec_id, embedding, label FROM embeddings),
-        |dims AS (SELECT CAST(max(len(embedding)) AS BIGINT) AS d FROM e),
-        |idx AS (SELECT unnest(range(1, (SELECT d FROM dims) + 1)) AS i),
-        |comp AS (SELECT vec_id, label, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        |         FROM e CROSS JOIN idx),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |qcomp AS (SELECT vec_id AS query_id, i, x FROM comp WHERE vec_id % 100 = 0),
-        |dots AS (
-        |  SELECT q.query_id, c.vec_id AS neighbor_id, sum(c.x * q.x) AS dp
-        |  FROM comp c JOIN qcomp q ON c.i = q.i AND c.vec_id <> q.query_id
-        |  WHERE c.label % 2 = 1
-        |  GROUP BY q.query_id, c.vec_id),
-        |scored AS (
-        |  SELECT d.query_id, d.neighbor_id,
-        |         round(d.dp / (nn.nrm * nq.nrm), 6) AS cosine
-        |  FROM dots d
-        |  JOIN norms nn ON nn.vec_id = d.neighbor_id
-        |  JOIN norms nq ON nq.vec_id = d.query_id)
-        |SELECT query_id, neighbor_id, cosine, rnk FROM (
-        |  SELECT query_id, neighbor_id, cosine,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |           ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        |  FROM scored) t
-        |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
-    // both manifests replayed from one decorated scan: u is the mixture
-    // draw, f the v1 (kept) subset; FULL OUTER on the (split, source)
-    // dim with the same status ladder as the engine
-    "q98_manifest_diff" ->
-      """WITH s AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS BIGINT) AS ntok,
-        |    ('0x' || substr(md5(text), 1, 8))::BIGINT AS h,
-        |    CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 90
-        |         THEN 'train'
-        |         WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 95
-        |         THEN 'val' ELSE 'test' END AS split,
-        |    ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 AS u
-        |  FROM documents),
-        |f AS (SELECT * FROM s
-        |      WHERE u < CASE WHEN source = 'src0' THEN 10000
-        |                     WHEN source = 'src1' THEN 0 ELSE 5000 END),
-        |o AS (SELECT split, source, CAST(count(*) AS BIGINT) AS od,
-        |             CAST(sum(ntok) AS BIGINT) AS ot, CAST(sum(h) AS BIGINT) AS os
-        |      FROM f GROUP BY 1, 2),
-        |n AS (SELECT split, source, CAST(count(*) AS BIGINT) AS nd,
-        |             CAST(sum(ntok) AS BIGINT) AS nt, CAST(sum(h) AS BIGINT) AS ns
-        |      FROM s GROUP BY 1, 2)
-        |SELECT coalesce(o.split, n.split) AS split,
-        |       coalesce(o.source, n.source) AS source,
-        |       coalesce(od, 0) AS old_docs, coalesce(nd, 0) AS new_docs,
-        |       coalesce(nd, 0) - coalesce(od, 0) AS delta_docs,
-        |       coalesce(nt, 0) - coalesce(ot, 0) AS delta_tokens,
-        |       CASE WHEN od IS NULL THEN 'added'
-        |            WHEN nd IS NULL THEN 'removed'
-        |            WHEN od = nd AND ot = nt AND os = ns THEN 'unchanged'
-        |            ELSE 'changed' END AS status
-        |FROM o FULL OUTER JOIN n
-        |  ON o.split = n.split AND o.source IS NOT DISTINCT FROM n.source
-        |ORDER BY split, source""".stripMargin,
-    "q99_cluster_sizes" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-         |cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS size
-         |       FROM lab GROUP BY 1),
-         |hi AS (SELECT size, CAST(count(*) AS BIGINT) AS n_clusters
-         |       FROM cs GROUP BY 1)
-         |SELECT size, n_clusters, size * n_clusters AS n_docs,
-         |       (size - 1) * n_clusters AS n_dups_removed
-         |FROM hi ORDER BY size""".stripMargin,
-    // Y4M frame bytes are pixelBytes(text, n*frameSize) laid out frame
-    // after frame, so luma byte p of frame f is md5-stream byte
-    // f*(w*h*3//2) + p; stride-2 sampling keeps frames 0, 2, 4
-    "q97_video_features" ->
-      """WITH m AS (SELECT doc_id AS media_id, text,
-        |                  CAST(4 + (doc_id % 5) * 2 AS INT) AS w,
-        |                  CAST(4 + (doc_id % 7) * 2 AS INT) AS h,
-        |                  CAST(24 + (doc_id % 3) * 6 AS BIGINT) AS fps,
-        |                  CAST(3 + (doc_id % 4) AS BIGINT) AS nf
-        |           FROM documents),
-        |fidx AS (SELECT unnest(range(0, 6)) AS f),
-        |fr AS (SELECT m.*, fidx.f FROM m
-        |       JOIN fidx ON fidx.f < m.nf AND fidx.f % 2 = 0),
-        |pidx AS (SELECT unnest(range(0, 192)) AS p),
-        |px AS (
-        |  SELECT media_id, w, h, fps, nf, f,
-        |         coalesce(('0x' || substr(md5(text || '#' || CAST((f * (w * h * 3 // 2) + p) // 16 AS VARCHAR)),
-        |                         CAST(((f * (w * h * 3 // 2) + p) % 16) * 2 + 1 AS INT), 2))::BIGINT, 0) AS b
-        |  FROM fr JOIN pidx ON pidx.p < fr.w * fr.h),
-        |agg AS (SELECT media_id, w, h, fps, nf, f,
-        |               sum(b) AS sb, max(b) AS mb, count(*) AS n
-        |        FROM px GROUP BY media_id, w, h, fps, nf, f)
-        |SELECT media_id, w AS width, h AS height, CAST(fps AS DOUBLE) AS fps,
-        |       nf AS n_frames, f AS frame_index,
-        |       CAST((2 * sb * 1000000 + n * 255) // (2 * n * 255) AS DOUBLE)
-        |         / 1000000.0 AS luma_mean,
-        |       CAST((2 * mb * 1000000 + 255) // 510 AS DOUBLE)
-        |         / 1000000.0 AS luma_peak
-        |FROM agg ORDER BY media_id, frame_index""".stripMargin,
-    "q96_manifest" ->
-      """WITH s AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS BIGINT) AS ntok,
-        |    ('0x' || substr(md5(text), 1, 8))::BIGINT AS h,
-        |    CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 90
-        |         THEN 'train'
-        |         WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 95
-        |         THEN 'val' ELSE 'test' END AS split
-        |  FROM documents)
-        |SELECT split, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(ntok) AS BIGINT) AS n_tokens,
-        |       min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id,
-        |       CAST(sum(h) AS BIGINT) AS content_sum
-        |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // ROLLUP at every level in one pass; GROUPING() bitmask = Spark's
-    // grouping_id() for the same column order
-    "q144_rollup_composition" ->
-      """SELECT coalesce(source, '<all>') AS source,
-        |       coalesce(lang, '<all>') AS lang,
-        |       CAST(GROUPING(source, lang) AS BIGINT) AS lvl,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY ROLLUP(source, lang)
-        |ORDER BY 3, 1, 2""".stripMargin,
-    // lower → non-alnum → space → collapse → trim, md5 group; the
-    // planted %7 twins must re-collide with their originals
-    "q145_normalized_dedup" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 4000000000, '  ' || upper(text) || '!!'
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |n AS (SELECT doc_id,
-        |             md5(trim(regexp_replace(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
-        |               '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS norm_key
-        |      FROM all_docs),
-        |g AS (SELECT norm_key, CAST(count(*) AS BIGINT) AS n_docs,
-        |             min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
-        |      FROM n GROUP BY 1)
-        |SELECT * FROM g WHERE n_docs > 1 ORDER BY norm_key""".stripMargin,
-    // global p05/p95 type-1 counting cuts (cum·100 >= n·p ⇔ the
-    // engine's integer-ceil target), clamp, per-source 4dp-tick means
-    "q146_winsorized_means" ->
-      """WITH g AS (SELECT n_chars AS v, CAST(count(*) AS BIGINT) AS c
-        |           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |w AS (SELECT v, c,
-        |             CAST(sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |               PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |             CAST(sum(c) OVER () AS BIGINT) AS n FROM g),
-        |cuts AS (SELECT min(CASE WHEN cum * 100 >= n * 5 THEN v END) AS lo,
-        |                min(CASE WHEN cum * 100 >= n * 95 THEN v END) AS hi
-        |         FROM w)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(cuts.lo AS BIGINT) AS cut_lo, CAST(cuts.hi AS BIGINT) AS cut_hi,
-        |       CAST(floor(sum(n_chars) * 10000.0 / count(*) + 0.5) AS BIGINT)
-        |         / 10000.0 AS mean_raw,
-        |       CAST(floor(sum(greatest(cuts.lo, least(cuts.hi, n_chars)))
-        |         * 10000.0 / count(*) + 0.5) AS BIGINT) / 10000.0 AS mean_winsor
-        |FROM documents, cuts WHERE n_chars IS NOT NULL
-        |GROUP BY source, cuts.lo, cuts.hi
-        |ORDER BY source""".stripMargin,
-    // JSON path extraction with null-on-missing semantics on both
-    // engines (get_json_object ↔ json_extract_string + TRY_CAST)
-    "q147_json_props" ->
-      """WITH e AS (SELECT event_type,
-        |                  TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |           FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(count(k) AS BIGINT) AS n_k,
-        |       CAST(sum(k) AS BIGINT) AS sum_k,
-        |       CAST(count(DISTINCT k) AS BIGINT) AS distinct_k,
-        |       CAST(min(k) AS BIGINT) AS min_k, CAST(max(k) AS BIGINT) AS max_k
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the same strictly-before (ts, event_id) carry: both IGNORE NULLS
-    // window reads land on one touch row; "<none>" keeps the
-    // denominator honest
-    "q148_last_touch" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, event_id
-        |            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |a AS (SELECT event_type,
-        |             last_value(CASE WHEN event_type <> 'purchase'
-        |               THEN event_type END IGNORE NULLS) OVER w AS attr_type,
-        |             last_value(CASE WHEN event_type <> 'purchase'
-        |               THEN epoch_us(ts) END IGNORE NULLS) OVER w AS attr_us,
-        |             epoch_us(ts) AS us
-        |      FROM ev
-        |      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |t AS (SELECT CASE WHEN attr_us IS NOT NULL
-        |                   AND us - attr_us <= 86400000000 THEN attr_type
-        |             ELSE '<none>' END AS attr_type
-        |      FROM a WHERE event_type = 'purchase'),
-        |c AS (SELECT attr_type, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1)
-        |SELECT attr_type, n,
-        |       CAST(floor(n * 10000.0 / (SELECT sum(n) FROM c) + 0.5) AS BIGINT)
-        |         AS share_bp
-        |FROM c ORDER BY attr_type""".stripMargin,
-    // shared 120-char normalized prefix, >1 distinct full hash; the
-    // planted twins are raw-text 2/3 cuts normalized AFTER the cut on
-    // both engines
-    "q149_prefix_dup" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 5000000000,
-        |         substr(text, 1, CAST(length(text) * 2 // 3 AS INT))
-        |  FROM documents WHERE doc_id % 8 = 0),
-        |n AS (SELECT doc_id,
-        |             trim(regexp_replace(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
-        |               '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS norm
-        |      FROM all_docs),
-        |k AS (SELECT doc_id, md5(substr(norm, 1, 120)) AS prefix_key,
-        |             md5(norm) AS full_key FROM n),
-        |g AS (SELECT prefix_key, CAST(count(*) AS BIGINT) AS n_docs,
-        |             CAST(count(DISTINCT full_key) AS BIGINT) AS n_variants,
-        |             min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
-        |      FROM k GROUP BY 1)
-        |SELECT * FROM g WHERE n_docs > 1 AND n_variants > 1
-        |ORDER BY prefix_key""".stripMargin,
-    // one global row_number over the salted-md5 key (the engine's
-    // bucketed two-phase rank must equal the flat total order exactly)
-    "q150_order_manifest" ->
-      """SELECT doc_id,
-        |       md5('epoch0:' || CAST(doc_id AS VARCHAR)) AS sort_key,
-        |       CAST(row_number() OVER (
-        |         ORDER BY md5('epoch0:' || CAST(doc_id AS VARCHAR)), doc_id)
-        |         AS BIGINT) AS global_rank
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // same-user same-type lag gaps; planted +500ms retries must flag,
-    // an event with no predecessor stays out of the denominator
-    "q151_double_fire" ->
-      """WITH base AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
-        |              FROM events),
-        |all_ev AS (SELECT * FROM base
-        |           UNION ALL
-        |           SELECT event_id + 1000000000, ts + INTERVAL 500 MILLISECOND,
-        |                  user_id, event_type
-        |           FROM base WHERE event_id % 13 = 0),
-        |ev AS (SELECT * FROM all_ev
-        |       WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |l AS (SELECT event_type, epoch_us(ts) AS us,
-        |             lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
-        |                                     ORDER BY ts, event_id) AS prev
-        |      FROM ev),
-        |g AS (SELECT event_type,
-        |             CASE WHEN us - prev <= 1000000 THEN 1 ELSE 0 END AS d
-        |      FROM l WHERE prev IS NOT NULL),
-        |c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_gaps,
-        |             CAST(sum(d) AS BIGINT) AS n_dups
-        |      FROM g GROUP BY 1)
-        |SELECT event_type, n_gaps, n_dups,
-        |       CAST(floor(n_dups * 10000.0 / n_gaps + 0.5) AS BIGINT)
-        |         AS dup_rate_bp
-        |FROM c ORDER BY event_type""".stripMargin,
-    // two per-source counting grids (values, then |v − median|), type-1
-    // lower medians, integer 3·MAD comparisons
-    "q152_mad_outliers" ->
-      """WITH v AS (SELECT source AS k, n_chars AS val FROM documents
-        |           WHERE n_chars IS NOT NULL),
-        |c1 AS (SELECT k, val, CAST(count(*) AS BIGINT) AS c FROM v GROUP BY 1, 2),
-        |w1 AS (SELECT k, val, c,
-        |              CAST(sum(c) OVER (PARTITION BY k ORDER BY val ROWS BETWEEN
-        |                UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |              CAST(sum(c) OVER (PARTITION BY k) AS BIGINT) AS n FROM c1),
-        |med AS (SELECT k, CAST(max(n) AS BIGINT) AS n_rows,
-        |               min(CASE WHEN cum * 100 >= n * 50 THEN val END) AS med
-        |        FROM w1 GROUP BY k),
-        |d AS (SELECT v.k, abs(v.val - med.med) AS dev
-        |      FROM v JOIN med ON v.k = med.k),
-        |c2 AS (SELECT k, dev, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1, 2),
-        |w2 AS (SELECT k, dev, c,
-        |              CAST(sum(c) OVER (PARTITION BY k ORDER BY dev ROWS BETWEEN
-        |                UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |              CAST(sum(c) OVER (PARTITION BY k) AS BIGINT) AS n FROM c2),
-        |mad AS (SELECT k, min(CASE WHEN cum * 100 >= n * 50 THEN dev END) AS mad
-        |        FROM w2 GROUP BY k)
-        |SELECT med.k AS source, med.n_rows,
-        |       CAST(med.med AS BIGINT) AS median, CAST(mad.mad AS BIGINT) AS mad,
-        |       CAST(sum(CASE WHEN abs(v.val - med.med) > mad.mad * 3
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM v JOIN med ON v.k = med.k JOIN mad ON v.k = mad.k
-        |GROUP BY 1, 2, 3, 4 ORDER BY source""".stripMargin,
-    // bits=4 Morton interleave as plain integer arithmetic — the
-    // engine's shift/or chain replayed as masked multiplies
-    "q153_zorder_layout" ->
-      """WITH b AS (SELECT least(length(text) // 64, 15) AS a,
-        |                  least(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |                    x -> x <> '')) // 16, 15) AS t
-        |           FROM documents),
-        |z AS (SELECT a AS len_b, t AS tok_b,
-        |             ((a >> 0) & 1) * 1 + ((t >> 0) & 1) * 2 +
-        |             ((a >> 1) & 1) * 4 + ((t >> 1) & 1) * 8 +
-        |             ((a >> 2) & 1) * 16 + ((t >> 2) & 1) * 32 +
-        |             ((a >> 3) & 1) * 64 + ((t >> 3) & 1) * 128 AS zv
-        |      FROM b)
-        |SELECT CAST(zv // 16 AS BIGINT) AS z_range,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(min(len_b) AS BIGINT) AS min_len_b,
-        |       CAST(max(len_b) AS BIGINT) AS max_len_b,
-        |       CAST(min(tok_b) AS BIGINT) AS min_tok_b,
-        |       CAST(max(tok_b) AS BIGINT) AS max_tok_b
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-    // one flat running max over the md5 arrival order (the engine's
-    // bucketed two-phase prefix max must equal it exactly), then the
-    // q140 grid-quantile tail
-    "q154_watermark_lateness" ->
-      """WITH ev AS (SELECT ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 12))::BIGINT
-        |              AS arrival,
-        |            event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type
-        |            FROM events WHERE ts IS NOT NULL AND event_id IS NOT NULL),
-        |r AS (SELECT event_type, us,
-        |             max(us) OVER (ORDER BY arrival, event_id ROWS BETWEEN
-        |               UNBOUNDED PRECEDING AND CURRENT ROW) AS rm
-        |      FROM ev),
-        |c AS (SELECT event_type, CAST((rm - us) // 1000000 AS BIGINT) AS v,
-        |             CAST(count(*) AS BIGINT) AS c
-        |      FROM r GROUP BY 1, 2),
-        |w AS (SELECT event_type, v, c,
-        |             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY v
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |      FROM c)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 50 THEN v END) AS DOUBLE) AS p50,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 95 THEN v END) AS DOUBLE) AS p95,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 99 THEN v END) AS DOUBLE) AS p99
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // the pivot value list is explicit on both engines — CASE sums give
-    // the same 0-filled wide matrix
-    "q155_pivot_langs" ->
-      """SELECT source,
-        |       CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS de,
-        |       CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS en,
-        |       CAST(sum(CASE WHEN lang = 'es' THEN 1 ELSE 0 END) AS BIGINT) AS es,
-        |       CAST(sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS fr,
-        |       CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS zh
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    // the shared LSH pair chain up to `edges`, then two unrolled
-    // integer-tick matvec rounds — floor division at every step
-    "q156_pagerank" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS c FROM edges GROUP BY 1),
-        |r0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS r FROM documents),
-        |c1 AS (SELECT e.dst, CAST(sum(r0.r // deg.c) AS BIGINT) AS m
-        |       FROM edges e JOIN deg ON deg.src = e.src
-        |                    JOIN r0 ON r0.doc_id = e.src
-        |       GROUP BY 1),
-        |r1 AS (SELECT d.doc_id,
-        |              CAST(150000 + (85 * coalesce(c1.m, 0)) // 100 AS BIGINT) AS r
-        |       FROM documents d LEFT JOIN c1 ON c1.dst = d.doc_id),
-        |c2 AS (SELECT e.dst, CAST(sum(r1.r // deg.c) AS BIGINT) AS m
-        |       FROM edges e JOIN deg ON deg.src = e.src
-        |                    JOIN r1 ON r1.doc_id = e.src
-        |       GROUP BY 1),
-        |r2 AS (SELECT d.doc_id,
-        |              CAST(150000 + (85 * coalesce(c2.m, 0)) // 100 AS BIGINT) AS r
-        |       FROM documents d LEFT JOIN c2 ON c2.dst = d.doc_id)
-        |SELECT doc_id, r AS rank_ticks FROM r2 ORDER BY doc_id""".stripMargin,
-    // vocabulary-collapsed adjacent char pairs, (count desc, pair asc)
-    // total tie order
-    "q157_bpe_pairs" ->
-      """WITH wd AS (SELECT unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                   x -> x <> '')) AS word
-        |            FROM documents),
-        |wc AS (SELECT word, CAST(count(*) AS BIGINT) AS wc FROM wd GROUP BY 1),
-        |p AS (SELECT unnest(list_transform(range(1, length(word)),
-        |               i -> word[CAST(i AS INT):CAST(i AS INT)+1])) AS pair, wc
-        |      FROM wc WHERE length(word) >= 2),
-        |g AS (SELECT pair, CAST(sum(wc) AS BIGINT) AS n FROM p GROUP BY 1),
-        |top AS (SELECT pair, n,
-        |               CAST(row_number() OVER (ORDER BY n DESC, pair ASC) AS BIGINT)
-        |                 AS rank
-        |        FROM g)
-        |SELECT rank, pair, n FROM top WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // (source × value) grid, strictly-below cumulative share in floor bp
-    "q158_relative_rank" ->
-      """WITH c AS (SELECT source AS k, n_chars AS v, CAST(count(*) AS BIGINT) AS c
-        |           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-        |w AS (SELECT k, v, c,
-        |             CAST(sum(c) OVER (PARTITION BY k ORDER BY v ROWS BETWEEN
-        |               UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cle,
-        |             CAST(sum(c) OVER (PARTITION BY k) AS BIGINT) AS n FROM c)
-        |SELECT d.doc_id, d.source, d.n_chars,
-        |       CAST(((w.cle - w.c) * 10000) // w.n AS BIGINT) AS pct_bp
-        |FROM documents d JOIN w ON w.k = d.source AND w.v = d.n_chars
-        |ORDER BY d.doc_id""".stripMargin,
-    // per-type (day-index, count) points, integer-exact OLS sums, 4dp
-    // slope, single-day keys guard to 0.0
-    "q159_volume_trend" ->
-      """WITH daily AS (SELECT event_type AS k, CAST(ts AS DATE) AS d,
-        |                      CAST(count(*) AS BIGINT) AS y
-        |               FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |o AS (SELECT k, min(d) AS d0 FROM daily GROUP BY 1),
-        |pts AS (SELECT daily.k, CAST(daily.d - o.d0 AS BIGINT) AS x, y
-        |        FROM daily JOIN o ON o.k = daily.k),
-        |s AS (SELECT k, CAST(count(*) AS BIGINT) AS n_days,
-        |             CAST(sum(y) AS BIGINT) AS n_events,
-        |             CAST(sum(x) AS BIGINT) AS sx,
-        |             CAST(sum(x * y) AS HUGEINT) AS sxy,
-        |             CAST(sum(x * x) AS HUGEINT) AS sxx
-        |      FROM pts GROUP BY 1)
-        |SELECT k AS event_type, n_days, n_events,
-        |       CASE WHEN n_days * CAST(sxx AS DOUBLE)
-        |                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) <= 0 THEN 0.0
-        |            ELSE round((n_days * CAST(sxy AS DOUBLE)
-        |                        - CAST(sx AS DOUBLE) * CAST(n_events AS DOUBLE))
-        |                       / (n_days * CAST(sxx AS DOUBLE)
-        |                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 4)
-        |       END AS slope
-        |FROM s ORDER BY event_type""".stripMargin,
-    // 24-cell per-type hour grid; share in floor bp
-    "q160_hourly_heatmap" ->
-      """WITH h AS (SELECT event_type, CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT)
-        |             AS hour, CAST(count(*) AS BIGINT) AS n
-        |           FROM events WHERE ts IS NOT NULL GROUP BY 1, 2)
-        |SELECT event_type, hour, n,
-        |       CAST((n * 10000) // sum(n) OVER (PARTITION BY event_type)
-        |         AS BIGINT) AS share_bp
-        |FROM h ORDER BY event_type, hour""".stripMargin,
-    // the shared label chain, then size + ordered first-10 CSV per
-    // multi-member cluster
-    "q161_cluster_manifest" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-        |sizes AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_docs
-        |          FROM lab GROUP BY 1),
-        |rk AS (SELECT cluster_id, doc_id,
-        |              row_number() OVER (PARTITION BY cluster_id
-        |                                 ORDER BY doc_id) AS r
-        |       FROM lab),
-        |m AS (SELECT cluster_id,
-        |             string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
-        |               AS members
-        |      FROM rk WHERE r <= 10 GROUP BY 1)
-        |SELECT s.cluster_id, s.n_docs, m.members
-        |FROM sizes s JOIN m ON m.cluster_id = s.cluster_id
-        |WHERE s.n_docs > 1 ORDER BY s.cluster_id""".stripMargin,
-    // earliest (ts, id) event per user via one window rank; floor-bp
-    // share over all users
-    "q162_first_touch" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, event_id
-        |            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |f AS (SELECT event_type,
-        |             row_number() OVER (PARTITION BY user_id
-        |                                ORDER BY ts, event_id) AS rn
-        |      FROM ev),
-        |c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_users
-        |      FROM f WHERE rn = 1 GROUP BY 1)
-        |SELECT event_type, n_users,
-        |       CAST((n_users * 10000) // (SELECT sum(n_users) FROM c) AS BIGINT)
-        |         AS share_bp
-        |FROM c ORDER BY event_type""".stripMargin,
-    // 30-min-gap sessionization (lag + cumulative flags), session aggs,
-    // stacked (metric × value) grid percentiles
-    "q163_session_stats" ->
-      """WITH ev AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
-        |            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |l AS (SELECT user_id, us, event_id,
-        |             lag(us) OVER (PARTITION BY user_id
-        |                           ORDER BY us, event_id) AS prev
-        |      FROM ev),
-        |s AS (SELECT user_id, us,
-        |             sum(CASE WHEN prev IS NULL OR us - prev > 1800000000
-        |                      THEN 1 ELSE 0 END)
-        |               OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |               AS sid
-        |      FROM l),
-        |g AS (SELECT user_id, sid, CAST(count(*) AS BIGINT) AS depth,
-        |             CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS dur_s
-        |      FROM s GROUP BY 1, 2),
-        |u AS (SELECT 'depth' AS metric, depth AS v FROM g
-        |      UNION ALL SELECT 'duration_s', dur_s FROM g),
-        |c AS (SELECT metric, v, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY 1, 2),
-        |w AS (SELECT metric, v, c,
-        |             CAST(sum(c) OVER (PARTITION BY metric ORDER BY v ROWS BETWEEN
-        |               UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |             CAST(sum(c) OVER (PARTITION BY metric) AS BIGINT) AS n
-        |      FROM c)
-        |SELECT metric, CAST(max(n) AS BIGINT) AS n_sessions,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 50 THEN v END) AS DOUBLE) AS p50,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 90 THEN v END) AS DOUBLE) AS p90,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 99 THEN v END) AS DOUBLE) AS p99
-        |FROM w GROUP BY metric ORDER BY metric""".stripMargin,
-    // both shared pair chains in ONE WITH clause (disjoint CTE names),
-    // full-outer on the pair key, floor-bp set agreement
-    "q164_dedup_agreement" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-        |$SimhashPairsSql,
-        |mh AS (SELECT doc_a, doc_b FROM pr),
-        |sh2 AS (SELECT doc_a, doc_b FROM sp),
-        |j AS (SELECT coalesce(mh.doc_a, sh2.doc_a) AS da,
-        |             CASE WHEN mh.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_a,
-        |             CASE WHEN sh2.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_b
-        |      FROM mh FULL OUTER JOIN sh2
-        |        ON mh.doc_a = sh2.doc_a AND mh.doc_b = sh2.doc_b),
-        |c AS (SELECT CAST(sum(CASE WHEN in_a = 1 AND in_b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
-        |             CAST(sum(CASE WHEN in_a = 1 AND in_b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_only_a,
-        |             CAST(sum(CASE WHEN in_a = 0 AND in_b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_only_b
-        |      FROM j)
-        |SELECT n_both, n_only_a, n_only_b,
-        |       CASE WHEN n_both + n_only_a + n_only_b = 0 THEN 0
-        |            ELSE CAST((n_both * 10000) // (n_both + n_only_a + n_only_b)
-        |                      AS BIGINT) END AS agree_bp
-        |FROM c""".stripMargin,
-    // the q104 marker CTE keyed by the DECLARED lang; HALF_UP row share
-    "q165_lang_confusion" ->
-      """WITH s AS (
-        |  SELECT lang,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT) AS s_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT) AS s_zh
-        |  FROM documents),
-        |p AS (
-        |  SELECT lang,
-        |    CASE
-        |      WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |      WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |      WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |      WHEN s_fr >= s_zh THEN 'fr'
-        |      ELSE 'zh' END AS predicted_lang
-        |  FROM s),
-        |g AS (SELECT lang, predicted_lang, CAST(count(*) AS BIGINT) AS n_docs
-        |      FROM p GROUP BY 1, 2)
-        |SELECT lang, predicted_lang, n_docs,
-        |       CAST((20000 * n_docs + sum(n_docs) OVER (PARTITION BY lang))
-        |         // (2 * sum(n_docs) OVER (PARTITION BY lang)) AS BIGINT)
-        |         AS row_share_bp
-        |FROM g ORDER BY lang, predicted_lang""".stripMargin,
-    // distinct (user, week) presence, first-week marks "new", week−7d
-    // presence marks "retained", the anti-join into the current week
-    // marks "churned" (attributed to the week gone missing)
-    "q166_growth_accounting" ->
-      """WITH uw AS (SELECT DISTINCT user_id AS u,
-        |                   CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS w
-        |            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |f AS (SELECT u, min(w) AS w0 FROM uw GROUP BY 1),
-        |prev AS (SELECT u, w + 7 AS wn FROM uw),
-        |st AS (SELECT uw.w,
-        |              CASE WHEN uw.w = f.w0 THEN 1 ELSE 0 END AS is_new,
-        |              CASE WHEN p.u IS NOT NULL THEN 1 ELSE 0 END AS is_ret,
-        |              CASE WHEN uw.w <> f.w0 AND p.u IS NULL THEN 1 ELSE 0 END AS is_res
-        |       FROM uw JOIN f ON f.u = uw.u
-        |       LEFT JOIN (SELECT DISTINCT u, wn FROM prev) p
-        |         ON p.u = uw.u AND p.wn = uw.w),
-        |base AS (SELECT w, CAST(sum(is_new) AS BIGINT) AS n_new,
-        |                CAST(sum(is_ret) AS BIGINT) AS n_retained,
-        |                CAST(sum(is_res) AS BIGINT) AS n_resurrected
-        |         FROM st GROUP BY 1),
-        |ch AS (SELECT prev.wn AS w, CAST(count(*) AS BIGINT) AS n_churned
-        |       FROM prev
-        |       LEFT JOIN uw ON uw.u = prev.u AND uw.w = prev.wn
-        |       WHERE uw.u IS NULL
-        |         AND prev.wn IN (SELECT DISTINCT w FROM uw)
-        |       GROUP BY 1)
-        |SELECT base.w AS week, n_new, n_retained, n_resurrected,
-        |       coalesce(ch.n_churned, 0) AS n_churned
-        |FROM base LEFT JOIN ch ON ch.w = base.w
-        |ORDER BY week""".stripMargin,
-    // Levenshtein over the same 500-char prefixes; floor-bp similarity,
-    // empty-prefix pairs define as identical
-    "q167_edit_verify" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-        |t AS (SELECT doc_id,
-        |             substr(regexp_replace(text, '[^\\x00-\\x7F]', '?', 'g'),
-        |                    1, 500) AS tx
-        |      FROM documents),
-        |p AS (SELECT pr.doc_a, pr.doc_b,
-        |             CAST(levenshtein(a.tx, b.tx) AS BIGINT) AS lev,
-        |             CAST(greatest(length(a.tx), length(b.tx)) AS BIGINT) AS mx
-        |      FROM pr JOIN t a ON a.doc_id = pr.doc_a
-        |              JOIN t b ON b.doc_id = pr.doc_b)
-        |SELECT doc_a, doc_b, lev,
-        |       CASE WHEN mx = 0 THEN 10000
-        |            ELSE 10000 - CAST((lev * 10000) // mx AS BIGINT) END AS sim_bp
-        |FROM p ORDER BY doc_a, doc_b""".stripMargin,
-    // exact integer power sums → one fixed double expression per moment
-    "q168_higher_moments" ->
-      """WITH s AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(n_chars) AS BIGINT) AS s1,
-        |                  CAST(sum(n_chars * n_chars) AS HUGEINT) AS s2,
-        |                  CAST(sum(n_chars * n_chars * n_chars) AS HUGEINT) AS s3,
-        |                  CAST(sum(n_chars * n_chars * n_chars * n_chars) AS HUGEINT) AS s4
-        |           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1)
-        |SELECT source, n AS n_rows,
-        |       round(CAST(s1 AS DOUBLE) / n, 4) AS mean,
-        |       round((CAST(s3 AS DOUBLE) / n
-        |              - 3.0 * (CAST(s1 AS DOUBLE) / n) * (CAST(s2 AS DOUBLE) / n)
-        |              + 2.0 * (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)
-        |                    * (CAST(s1 AS DOUBLE) / n))
-        |             / pow(greatest(1e-12, CAST(s2 AS DOUBLE) / n
-        |                 - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)), 1.5),
-        |             4) AS skewness,
-        |       round((CAST(s4 AS DOUBLE) / n
-        |              - 4.0 * (CAST(s1 AS DOUBLE) / n) * (CAST(s3 AS DOUBLE) / n)
-        |              + 6.0 * (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)
-        |                    * (CAST(s2 AS DOUBLE) / n)
-        |              - 3.0 * (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)
-        |                    * (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))
-        |             / (greatest(1e-12, CAST(s2 AS DOUBLE) / n
-        |                 - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))
-        |                * greatest(1e-12, CAST(s2 AS DOUBLE) / n
-        |                 - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)))
-        |             - 3.0, 4) AS kurtosis
-        |FROM s ORDER BY source""".stripMargin,
-    // RANGE window over the per-type day index; calendar-width
-    // denominator, 4dp HALF_UP ticks
-    "q169_rolling_mean" ->
-      """WITH d AS (SELECT event_type AS k, CAST(ts AS DATE) AS dy,
-        |                  CAST(count(*) AS BIGINT) AS n_events
-        |           FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |o AS (SELECT k, min(dy) AS d0 FROM d GROUP BY 1),
-        |i AS (SELECT d.k, d.dy, d.n_events, CAST(d.dy - o.d0 AS BIGINT) AS idx
-        |      FROM d JOIN o ON o.k = d.k),
-        |w AS (SELECT k, dy, n_events, idx,
-        |             CAST(sum(n_events) OVER (PARTITION BY k ORDER BY idx
-        |               RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT)
-        |               AS trail_sum
-        |      FROM i)
-        |SELECT k AS event_type, dy AS day, n_events, trail_sum,
-        |       CAST(floor(trail_sum * 10000.0 / least(idx + 1, 7) + 0.5) AS BIGINT)
-        |         / 10000.0 AS trail_mean
-        |FROM w ORDER BY event_type, day""".stripMargin,
-    // the shared quality chain ranked per source; (quality desc, doc_id)
-    // total tie order
-    "q170_top_per_source" ->
-      s"""WITH $QualitySql,
-        |r AS (SELECT q.doc_id, d.source, q.quality,
-        |             CAST(row_number() OVER (PARTITION BY d.source
-        |               ORDER BY q.quality DESC, q.doc_id) AS BIGINT) AS rk
-        |      FROM q JOIN documents d ON d.doc_id = q.doc_id)
-        |SELECT doc_id, source, quality, rk FROM r WHERE rk <= 3
-        |ORDER BY source, rk""".stripMargin,
-    // pivot ∘ unpivot must equal the plain long-form group-by
-    // lang IS NOT NULL: the engine pivots over the explicit language
-    // list, so a null lang can never round-trip through pivot∘unpivot
-    "q171_unpivot" ->
-      """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs
-        |FROM documents WHERE lang IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // integer-tick first digit via string head; literal Benford bp
-    "q172_benford" ->
-      """WITH t AS (SELECT CAST(floor(value * 100) AS BIGINT) AS ticks
-        |           FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-        |             AND CAST(floor(value * 100) AS BIGINT) >= 1),
-        |d AS (SELECT CAST(substr(CAST(ticks AS VARCHAR), 1, 1) AS BIGINT) AS digit
-        |      FROM t),
-        |c AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1),
-        |o AS (SELECT digit, n,
-        |             CAST((n * 10000) // sum(n) OVER () AS BIGINT) AS obs_bp,
-        |             CAST(CASE digit WHEN 1 THEN 3010 WHEN 2 THEN 1761
-        |                  WHEN 3 THEN 1249 WHEN 4 THEN 969 WHEN 5 THEN 792
-        |                  WHEN 6 THEN 669 WHEN 7 THEN 580 WHEN 8 THEN 512
-        |                  ELSE 458 END AS BIGINT) AS exp_bp
-        |      FROM c)
-        |SELECT digit, n, obs_bp, exp_bp, abs(obs_bp - exp_bp) AS dev_bp
-        |FROM o ORDER BY digit""".stripMargin,
-    // identical BM25 arithmetic: micro-tick per-term floors, integer
-    // sums, same k1/b literals (shared chain with q204)
-    "q201_bm25" ->
-      s"""WITH $Bm25Sql
-        |SELECT rank, doc_id, s / 1000000.0 AS score
-        |FROM bmtop WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // same dedupe-to-(user, day) + Monday date_trunc + floor-bp share
-    "q202_cohort_triangle" ->
-      """WITH act AS (SELECT DISTINCT user_id AS u,
-        |                    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-        |             FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |coh AS (SELECT u, CAST(date_trunc('week', min(d)) AS DATE) AS cw
-        |        FROM act GROUP BY 1),
-        |tri AS (SELECT cw, CAST(datediff('day', cw, d) // 7 AS INT) AS week_offset,
-        |               CAST(count(DISTINCT a.u) AS BIGINT) AS n_active
-        |        FROM act a JOIN coh c ON c.u = a.u GROUP BY 1, 2),
-        |sz AS (SELECT *, max(CASE WHEN week_offset = 0 THEN n_active END)
-        |                 OVER (PARTITION BY cw) AS cohort_size
-        |       FROM tri)
-        |SELECT strftime(cw, '%Y-%m-%d') AS cohort_week, week_offset, n_active,
-        |       cohort_size,
-        |       CAST((n_active * 10000) // cohort_size AS BIGINT) AS retention_bp
-        |FROM sz ORDER BY cohort_week, week_offset""".stripMargin,
-    // identical salted-md5 slot arithmetic: slot_i = low-32("i:key") % m
-    "q203_bloom_prefilter" ->
-      """WITH bk AS (SELECT DISTINCT o_orderkey AS k FROM orders
-        |            WHERE o_orderstatus = 'F' AND o_totalprice > 200000),
-        |bits AS (SELECT DISTINCT
-        |           ('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 65536 AS slot
-        |         FROM (SELECT k, unnest([0, 1, 2]) AS i FROM bk)),
-        |pk AS (SELECT DISTINCT l_orderkey AS k FROM lineitem
-        |       WHERE l_orderkey IS NOT NULL),
-        |ps AS (SELECT k,
-        |              ('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 65536 AS slot
-        |       FROM (SELECT k, unnest([0, 1, 2]) AS i FROM pk)),
-        |pass AS (SELECT k FROM ps JOIN bits USING (slot)
-        |         GROUP BY k HAVING count(*) = 3),
-        |c AS (SELECT (SELECT count(*) FROM bk) AS n_build_keys,
-        |             (SELECT count(*) FROM bits) AS n_slots_set,
-        |             (SELECT count(*) FROM pk) AS n_probe_keys,
-        |             (SELECT count(*) FROM pass) AS n_pass,
-        |             (SELECT count(*) FROM pk WHERE k IN (SELECT k FROM bk)) AS n_true)
-        |SELECT CAST(n_build_keys AS BIGINT) AS n_build_keys,
-        |       CAST(n_slots_set AS BIGINT) AS n_slots_set,
-        |       CAST(n_probe_keys AS BIGINT) AS n_probe_keys,
-        |       CAST(n_pass AS BIGINT) AS n_pass,
-        |       CAST(n_true AS BIGINT) AS n_true,
-        |       CAST(n_pass - n_true AS BIGINT) AS n_false_pos,
-        |       CAST(((n_pass - n_true) * 10000) // n_probe_keys AS BIGINT) AS fp_bp,
-        |       CAST((n_pass * 10000) // n_probe_keys AS BIGINT) AS pass_bp
-        |FROM c""".stripMargin,
-    // identical IEEE double chain: scale = max|x|/127, q = floor(x/s+0.5),
-    // micro-tick |x − q·s| fixed per dim before the per-vector sums
-    "q205_int8_recon_error" ->
-      """WITH e AS (SELECT vec_id,
-        |                 list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-        |          FROM embeddings),
-        |sc AS (SELECT vec_id, emb,
-        |              list_max(list_transform(emb, v -> abs(v))) / 127.0 AS s
-        |       FROM e),
-        |t AS (SELECT vec_id,
-        |             unnest(list_transform(emb, x ->
-        |               CASE WHEN s > 0
-        |                    THEN CAST(floor(abs(x - floor(x / s + 0.5) * s)
-        |                           * 1000000 + 0.5) AS BIGINT)
-        |                    ELSE 0 END)) AS tick
-        |      FROM sc)
-        |SELECT vec_id, CAST(count(*) AS BIGINT) AS n_dims,
-        |       CAST(max(tick) AS BIGINT) AS max_err_ticks,
-        |       CAST(sum(tick) AS BIGINT) AS sum_err_ticks,
-        |       CAST((2 * sum(tick) + count(*)) // (2 * count(*)) AS BIGINT)
-        |         AS mean_err_ticks
-        |FROM t GROUP BY 1 ORDER BY vec_id""".stripMargin,
-    // full-dim ground truth from the shared brute chain; the sliced side
-    // repeats it over i <= 8; recall joined per (query, neighbor)
-    "q206_dim_slice_recall" ->
-      s"""WITH $VecBaseSql,
-        |$BruteKnnSql,
-        |scomp AS (SELECT vec_id, i, x FROM comp WHERE i <= 8),
-        |snorms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM scomp GROUP BY 1),
-        |sq AS (SELECT vec_id AS query_id, i, x FROM scomp WHERE vec_id % 100 = 0),
-        |sdots AS (SELECT q.query_id, c.vec_id AS neighbor_id, sum(c.x * q.x) AS dp
-        |          FROM scomp c JOIN sq q ON c.i = q.i AND c.vec_id <> q.query_id
-        |          GROUP BY 1, 2),
-        |sscored AS (SELECT d.query_id, d.neighbor_id,
-        |                   round(d.dp / (nn.nrm * nq.nrm), 6) AS cosine
-        |            FROM sdots d
-        |            JOIN snorms nn ON nn.vec_id = d.neighbor_id
-        |            JOIN snorms nq ON nq.vec_id = d.query_id),
-        |slow AS (SELECT query_id, neighbor_id FROM (
-        |           SELECT query_id, neighbor_id,
-        |                  row_number() OVER (PARTITION BY query_id
-        |                    ORDER BY cosine DESC, neighbor_id) AS rnk
-        |           FROM sscored) t WHERE rnk <= 10)
-        |SELECT b.query_id,
-        |       CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_hit,
-        |       CAST((sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        |             * 10000) // count(*) AS BIGINT) AS recall_bp
-        |FROM brute b LEFT JOIN slow s ON s.query_id = b.query_id
-        |                             AND s.neighbor_id = b.neighbor_id
-        |GROUP BY 1 ORDER BY b.query_id""".stripMargin,
-    // same [.!?]+ sentence runs, [aeiouy]+ vowel groups (floored at one
-    // per word), clamped Flesch milli-ticks, HALF_UP integer means
-    "q207_readability" ->
-      """WITH d AS (SELECT source,
-        |                  greatest(CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |                    x -> x <> '')) AS BIGINT), 1) AS w,
-        |                  greatest(CAST(len(regexp_extract_all(text, '[\.!\?]+')) AS BIGINT), 1) AS s,
-        |                  CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS BIGINT) AS a,
-        |                  CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiouy]+')) AS BIGINT) AS syl0
-        |           FROM documents),
-        |f AS (SELECT source, w, s, a,
-        |             greatest(CAST(floor((206.835
-        |               - 1.015 * (CAST(w AS DOUBLE) / CAST(s AS DOUBLE))
-        |               - 84.6 * (CAST(greatest(syl0, w) AS DOUBLE) / CAST(w AS DOUBLE)))
-        |               * 1000 + 0.5) AS BIGINT), 0) AS fm
-        |      FROM d)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST((20000 * sum(w) + sum(s)) // (2 * sum(s)) AS BIGINT) AS wps_bp,
-        |       CAST((20000 * sum(a) + sum(w)) // (2 * sum(w)) AS BIGINT) AS cpw_bp,
-        |       CAST((2 * sum(fm) + count(*)) // (2 * count(*)) AS BIGINT) AS flesch_milli
-        |FROM f GROUP BY 1 ORDER BY source""".stripMargin,
-    // same grid identity: Σ ranks of a cell = m(2·cum0+m+1)/2; HUGEINT
-    // final quotient mirrors the engine's decimal(38,0)
-    "q208_activity_gini" ->
-      """WITH c AS (SELECT event_type AS k, user_id AS u,
-        |                  CAST(count(*) AS BIGINT) AS c
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-        |           GROUP BY 1, 2),
-        |g AS (SELECT k, c, CAST(count(*) AS BIGINT) AS m FROM c GROUP BY 1, 2),
-        |w AS (SELECT k, c, m,
-        |             coalesce(sum(m) OVER (PARTITION BY k ORDER BY c
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |               AS cum0
-        |      FROM g),
-        |a AS (SELECT k, CAST(sum(m) AS BIGINT) AS n_units,
-        |             CAST(sum(c * m) AS BIGINT) AS n_events,
-        |             CAST(sum(c * m * (2 * cum0 + m + 1)) AS BIGINT) AS s2
-        |      FROM w GROUP BY 1)
-        |SELECT k AS event_type, n_units, n_events,
-        |       CAST(((CAST(s2 AS HUGEINT) - CAST(n_units + 1 AS HUGEINT) * n_events)
-        |              * 10000)
-        |            // (CAST(n_units AS HUGEINT) * n_events) AS BIGINT) AS gini_bp
-        |FROM a ORDER BY 1""".stripMargin,
-    // q20 sessionize prologue; entry/exit as rn=1 rows (the CandleCte
-    // conditional-max trick), bounce = depth-1 sessions
-    "q209_entry_exit" ->
-      """WITH ev AS (SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |                   user_id AS u, event_type AS t
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |s AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
-        |                       OR us - lag(us) OVER w > 1800000000
-        |                     THEN 1 ELSE 0 END AS is_new
-        |      FROM ev WINDOW w AS (PARTITION BY u ORDER BY us, event_id)),
-        |sid AS (SELECT *, sum(is_new) OVER (PARTITION BY u ORDER BY us, event_id
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |        FROM s),
-        |r AS (SELECT u, sid, t,
-        |             row_number() OVER (PARTITION BY u, sid
-        |               ORDER BY us, event_id) AS rn_a,
-        |             row_number() OVER (PARTITION BY u, sid
-        |               ORDER BY us DESC, event_id DESC) AS rn_d,
-        |             count(*) OVER (PARTITION BY u, sid) AS depth
-        |      FROM sid),
-        |sess AS (SELECT u, sid,
-        |                max(CASE WHEN rn_a = 1 THEN t END) AS entry_type,
-        |                max(CASE WHEN rn_d = 1 THEN t END) AS exit_type,
-        |                max(depth) AS depth
-        |         FROM r GROUP BY 1, 2)
-        |SELECT entry_type, exit_type, CAST(count(*) AS BIGINT) AS n_sessions,
-        |       CAST(sum(CASE WHEN depth = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_bounce,
-        |       CAST((sum(CASE WHEN depth = 1 THEN 1 ELSE 0 END) * 10000)
-        |            // count(*) AS BIGINT) AS bounce_bp
-        |FROM sess GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q149's normalized-prefix fingerprint; old epoch distinct-first
-    "q210_epoch_ingest_dedup" ->
-      """WITH n AS (SELECT doc_id, source,
-        |                  trim(regexp_replace(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
-        |                    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS norm
-        |           FROM documents),
-        |k AS (SELECT doc_id, source, md5(substr(norm, 1, 120)) AS fp FROM n),
-        |old AS (SELECT DISTINCT fp FROM k WHERE doc_id % 10 < 8),
-        |nw AS (SELECT * FROM k WHERE doc_id % 10 >= 8)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_new,
-        |       CAST(sum(CASE WHEN fp IN (SELECT fp FROM old) THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_dup,
-        |       CAST((sum(CASE WHEN fp IN (SELECT fp FROM old) THEN 1 ELSE 0 END)
-        |             * 10000) // count(*) AS BIGINT) AS dup_bp
-        |FROM nw GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same rank-based cuts: seg = min(q, (q·cum0) DIV n + 1) per metric
-    "q211_rfm_segments" ->
-      """WITH per AS (SELECT user_id AS u, max(CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS last_d,
-        |                    CAST(count(*) AS BIGINT) AS freq,
-        |                    CAST(sum(CAST(floor(coalesce(
-        |                      CASE WHEN isnan(CAST(value AS DOUBLE)) THEN 0.0
-        |                           ELSE CAST(value AS DOUBLE) END, 0.0)
-        |                      * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sc
-        |             FROM events
-        |             WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |             GROUP BY 1),
-        |ref AS (SELECT max(last_d) AS ref_d FROM per),
-        |st AS (SELECT u, m, v FROM (
-        |         SELECT u,
-        |                CAST(datediff('day', last_d, ref_d) AS BIGINT) AS r,
-        |                freq AS f, sc // 100 AS mon
-        |         FROM per CROSS JOIN ref)
-        |       UNPIVOT (v FOR m IN (r, f, mon))),
-        |sm AS (SELECT CASE WHEN m = 'mon' THEN 'm' ELSE m END AS m, u, v FROM st),
-        |grid AS (SELECT m, v, CAST(count(*) AS BIGINT) AS c FROM sm GROUP BY 1, 2),
-        |seg AS (SELECT m, v,
-        |               CAST(least(4, (4 * coalesce(sum(c) OVER (PARTITION BY m ORDER BY v
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))
-        |                 // (sum(c) OVER (PARTITION BY m)) + 1) AS BIGINT) AS sg
-        |        FROM grid),
-        |cube AS (SELECT u,
-        |                max(CASE WHEN sm.m = 'r' THEN sg END) AS r_seg,
-        |                max(CASE WHEN sm.m = 'f' THEN sg END) AS f_seg,
-        |                max(CASE WHEN sm.m = 'm' THEN sg END) AS m_seg
-        |         FROM sm JOIN seg ON seg.m = sm.m AND seg.v = sm.v
-        |         GROUP BY 1),
-        |cc AS (SELECT r_seg, f_seg, m_seg, CAST(count(*) AS BIGINT) AS n_users
-        |       FROM cube GROUP BY 1, 2, 3)
-        |SELECT r_seg, f_seg, m_seg, n_users,
-        |       CAST((n_users * 10000) // (sum(n_users) OVER ()) AS BIGINT)
-        |         AS share_bp
-        |FROM cc ORDER BY 1, 2, 3""".stripMargin,
-    // identical salted-md5 slots; sketch built from the exact vocab agg
-    // (counts are additive), estimate = min over the d probed slots
-    "q212_cms_audit" ->
-      """WITH toks AS (SELECT unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                       x -> x <> '')) AS tok
-        |              FROM documents),
-        |exact AS (SELECT tok, CAST(count(*) AS BIGINT) AS n_exact
-        |          FROM toks GROUP BY 1),
-        |rows_ AS (SELECT tok, n_exact, unnest([0, 1, 2, 3]) AS r FROM exact),
-        |slots AS (SELECT r, ('0x' || substr(md5(CAST(r AS VARCHAR) || ':' || tok), 1, 8))::BIGINT % 1024 AS slot,
-        |                 n_exact
-        |          FROM rows_),
-        |cms AS (SELECT r, slot, CAST(sum(n_exact) AS BIGINT) AS sc
-        |        FROM slots GROUP BY 1, 2),
-        |top AS (SELECT tok, n_exact,
-        |               CAST(row_number() OVER (ORDER BY n_exact DESC, tok ASC)
-        |                 AS BIGINT) AS rank
-        |        FROM exact QUALIFY rank <= 20),
-        |probe AS (SELECT t.rank, t.tok, t.n_exact, rr.r,
-        |                 ('0x' || substr(md5(CAST(rr.r AS VARCHAR) || ':' || t.tok), 1, 8))::BIGINT % 1024 AS slot
-        |          FROM top t CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r) rr)
-        |SELECT p.rank, p.tok, p.n_exact, CAST(min(c.sc) AS BIGINT) AS n_est,
-        |       CAST(((min(c.sc) - p.n_exact) * 10000) // p.n_exact AS BIGINT)
-        |         AS over_bp
-        |FROM probe p JOIN cms c ON c.r = p.r AND c.slot = p.slot
-        |GROUP BY 1, 2, 3 ORDER BY p.rank""".stripMargin,
-    // same (v, v+250) pair rule over the shared component CTEs; cos 6dp
-    // then floor(cos·10) buckets; zero norms → bucket 0
-    "q213_cosine_histogram" ->
-      s"""WITH $VecBaseSql,
-        |pairs AS (SELECT a.vec_id AS ia, b.vec_id AS ib
-        |          FROM e a JOIN e b ON b.vec_id = a.vec_id + 250),
-        |dots AS (SELECT p.ia, p.ib, sum(ca.x * cb.x) AS dp
-        |         FROM pairs p
-        |         JOIN comp ca ON ca.vec_id = p.ia
-        |         JOIN comp cb ON cb.vec_id = p.ib AND cb.i = ca.i
-        |         GROUP BY 1, 2),
-        |coss AS (SELECT CASE WHEN na.nrm * nb.nrm = 0 THEN 0.0
-        |                     ELSE round(d.dp / (na.nrm * nb.nrm), 6) END AS cos
-        |         FROM dots d
-        |         JOIN norms na ON na.vec_id = d.ia
-        |         JOIN norms nb ON nb.vec_id = d.ib),
-        |h AS (SELECT CAST(floor(cos * 10) AS BIGINT) AS bucket,
-        |             CAST(count(*) AS BIGINT) AS n_pairs
-        |      FROM coss GROUP BY 1)
-        |SELECT bucket, n_pairs,
-        |       CAST((n_pairs * 10000) // (sum(n_pairs) OVER ()) AS BIGINT)
-        |         AS share_bp
-        |FROM h ORDER BY bucket""".stripMargin,
-    // GROUP BY CUBE with GROUPING() parity (the q144 convention)
-    "q214_cube_orders" ->
-      """SELECT coalesce(o_orderpriority, '<all>') AS priority,
-        |       coalesce(o_orderstatus, '<all>') AS status,
-        |       CAST(GROUPING(o_orderpriority, o_orderstatus) AS BIGINT) AS lvl,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY CUBE(o_orderpriority, o_orderstatus)
-        |ORDER BY 3, 1, 2""".stripMargin,
-    // identical pinned ordering; 6dp rounding on the rank ratios
-    "q215_rank_distributions" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal,
-        |       round(percent_rank() OVER w, 6) AS pr,
-        |       round(cume_dist() OVER w, 6) AS cd,
-        |       CAST(ntile(4) OVER w AS BIGINT) AS tile
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_mktsegment, c_acctbal, c_custkey""".stripMargin,
-    // distinct (basket, item) first; pairs keyed on the basket
-    "q216_basket_pairs" ->
-      """WITH bi AS (SELECT DISTINCT l_orderkey AS b, p_brand AS i
-        |            FROM lineitem JOIN part ON p_partkey = l_partkey),
-        |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS n FROM bi),
-        |p AS (SELECT x.i AS item_a, y.i AS item_b,
-        |             CAST(count(*) AS BIGINT) AS n_baskets
-        |      FROM bi x JOIN bi y ON y.b = x.b AND x.i < y.i
-        |      GROUP BY 1, 2),
-        |r AS (SELECT item_a, item_b, n_baskets,
-        |             CAST((n_baskets * 10000) // nb.n AS BIGINT) AS support_bp,
-        |             CAST(row_number() OVER (ORDER BY n_baskets DESC,
-        |               item_a ASC, item_b ASC) AS BIGINT) AS rank
-        |      FROM p CROSS JOIN nb)
-        |SELECT rank, item_a, item_b, n_baskets, support_bp
-        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // independent skyline formulation: correlated NOT EXISTS dominance
-    // (the engine's running-min-over-grid must agree with the O(n²) def)
-    "q217_pareto_frontier" ->
-      s"""WITH $QualitySql,
-        |p AS (SELECT q.quality, CAST(qt.n_toks AS BIGINT) AS n_tokens
-        |      FROM q JOIN qt USING (doc_id)
-        |      WHERE q.quality IS NOT NULL AND qt.n_toks IS NOT NULL)
-        |SELECT quality, n_tokens, CAST(count(*) AS BIGINT) AS n_docs
-        |FROM p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM p p2
-        |  WHERE p2.quality >= p.quality AND p2.n_tokens <= p.n_tokens
-        |    AND (p2.quality > p.quality OR p2.n_tokens < p.n_tokens))
-        |GROUP BY 1, 2 ORDER BY quality DESC""".stripMargin,
-    // same md5→(register, lowest-set-bit rank) arithmetic; the harmonic
-    // denominator is an exact integer sum, the estimate one integer DIV
-    "q218_hll_audit" ->
-      s"""WITH base AS (SELECT event_type AS key, CAST(user_id AS VARCHAR) AS id
-        |              FROM events
-        |              WHERE event_type IS NOT NULL AND user_id IS NOT NULL),
-        |h AS (SELECT key, id,
-        |             ('0x' || substr(md5(id), 1, 15))::BIGINT AS hv
-        |      FROM base),
-        |r AS (SELECT key, hv % 64 AS reg,
-        |             ${Sketch.hllRankSql("hv // 64")} AS rnk
-        |      FROM h),
-        |regs AS (SELECT key, reg, max(rnk) AS mr FROM r GROUP BY 1, 2),
-        |sk AS (SELECT key, CAST(count(*) AS BIGINT) AS present,
-        |              sum(1048576 // (CAST(1 AS BIGINT) << mr)) AS zp
-        |       FROM regs GROUP BY 1),
-        |est AS (SELECT key, 64 - present AS v_zero,
-        |               CAST(zp + (64 - present) * 1048576 AS BIGINT) AS z_scaled
-        |        FROM sk),
-        |ex AS (SELECT key, CAST(count(DISTINCT id) AS BIGINT) AS n_exact
-        |       FROM base GROUP BY 1)
-        |SELECT ex.key, ex.n_exact, CAST(v_zero AS BIGINT) AS v_zero, z_scaled,
-        |       CAST(${709L * 64 * 64 * (1L << 20)} // (1000 * z_scaled) AS BIGINT) AS n_est,
-        |       CAST((abs(${709L * 64 * 64 * (1L << 20)} // (1000 * z_scaled) - ex.n_exact) * 10000)
-        |         // ex.n_exact AS BIGINT) AS err_abs_bp
-        |FROM ex JOIN est ON est.key = ex.key ORDER BY ex.key""".stripMargin,
-    // independent triangle formulation: a<b<c three-way edge join (the
-    // engine's degree orientation must reproduce the naive closure)
-    "q219_triangles" ->
-      """WITH bi AS (SELECT DISTINCT l_orderkey AS bk, p_brand AS it
-        |            FROM lineitem JOIN part ON p_partkey = l_partkey),
-        |nb AS (SELECT count(DISTINCT bk) AS n FROM bi),
-        |e AS (SELECT x.it AS ea, y.it AS eb
-        |      FROM bi x JOIN bi y ON y.bk = x.bk AND x.it < y.it
-        |      CROSS JOIN nb
-        |      GROUP BY 1, 2, nb.n
-        |      HAVING (count(*) * 10000) // nb.n >= 230),
-        |t AS (SELECT e1.ea AS a, e1.eb AS b, e2.eb AS c
-        |      FROM e e1 JOIN e e2 ON e2.ea = e1.eb
-        |      JOIN e e3 ON e3.ea = e1.ea AND e3.eb = e2.eb),
-        |nodes AS (SELECT unnest([a, b, c]) AS item FROM t)
-        |SELECT item, CAST(count(*) AS BIGINT) AS n_triangles
-        |FROM nodes GROUP BY 1 ORDER BY 1""".stripMargin,
-    // independent all-pairs formulation: the prefix filter must lose
-    // NOTHING vs brute-force exact token Jaccard at threshold 19/20
-    "q220_prefix_filter_join" ->
-      """WITH tk AS (SELECT DISTINCT doc_id,
-        |              unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                                 x -> x <> '')) AS tok
-        |            FROM documents),
-        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tk GROUP BY 1),
-        |it AS (SELECT a.doc_id AS da, b.doc_id AS db, CAST(count(*) AS BIGINT) AS c
-        |       FROM tk a JOIN tk b ON b.tok = a.tok AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2)
-        |SELECT it.da AS doc_a, it.db AS doc_b, sa.n AS n_a, sb.n AS n_b,
-        |       c AS n_common,
-        |       CAST((2 * c * 10000 + (sa.n + sb.n - c)) // (2 * (sa.n + sb.n - c))
-        |            AS DOUBLE) / 10000.0 AS jaccard
-        |FROM it JOIN sz sa ON sa.doc_id = it.da
-        |        JOIN sz sb ON sb.doc_id = it.db
-        |WHERE c * 20 >= (sa.n + sb.n - c) * 19
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // same md5 classifier + quality formulas; offset-tick integer means
-    "q221_calibration" ->
-      s"""WITH $QualitySql,
-        |$ClassifierScoreSql,
-        |b AS (SELECT CAST(floor(score * 100) AS BIGINT) AS bin,
-        |             CAST(floor(score * 1000000.0 + 0.5) AS BIGINT) AS t,
-        |             CASE WHEN q.quality >= 0.5 THEN 1 ELSE 0 END AS p
-        |      FROM scored JOIN q USING (doc_id))
-        |SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(t + 1000000) // count(*) - 1000000 AS BIGINT) AS mean_uticks,
-        |       CAST((sum(p) * 10000) // count(*) AS BIGINT) AS pass_bp
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same censored estimator over the (span, window) grid
-    "q222_survival" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |u AS (SELECT user_id, min(d) AS f, max(d) AS l FROM ev GROUP BY 1),
-        |oe AS (SELECT max(d) AS obs_end FROM ev),
-        |g AS (SELECT date_diff('day', f, l) AS act,
-        |             date_diff('day', f, obs_end) AS w, count(*) AS m
-        |      FROM u CROSS JOIN oe GROUP BY 1, 2),
-        |ks AS (SELECT unnest(range(0, 15)) AS k),
-        |j AS (SELECT ks.k, g.act, g.m FROM g JOIN ks ON g.w > ks.k),
-        |a AS (SELECT k, sum(CASE WHEN act >= k THEN m ELSE 0 END) AS n_at_risk,
-        |             sum(CASE WHEN act = k THEN m ELSE 0 END) AS n_churned,
-        |             sum(m) AS elig,
-        |             sum(CASE WHEN act > k THEN m ELSE 0 END) AS surv
-        |      FROM j GROUP BY 1)
-        |SELECT CAST(k AS BIGINT) AS day_offset,
-        |       CAST(n_at_risk AS BIGINT) AS n_at_risk,
-        |       CAST(n_churned AS BIGINT) AS n_churned,
-        |       CAST(CASE WHEN n_at_risk = 0 THEN 0
-        |            ELSE (n_churned * 10000) // n_at_risk END AS BIGINT) AS hazard_bp,
-        |       CAST(CASE WHEN elig = 0 THEN 0
-        |            ELSE (surv * 10000) // elig END AS BIGINT) AS survival_bp
-        |FROM a ORDER BY 1""".stripMargin,
-    // same lead-window micros durations; HUGEINT products, one int DIV
-    "q223_twap" ->
-      """WITH ev AS (SELECT event_type AS symbol,
-        |                   epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id AS id,
-        |                   CAST(floor(value * 10000 + 0.5) AS BIGINT) AS ticks
-        |            FROM events
-        |            WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |              AND value IS NOT NULL AND NOT isnan(value)),
-        |d AS (SELECT symbol, ticks,
-        |             lead(us) OVER (PARTITION BY symbol ORDER BY us, id) - us AS dur
-        |      FROM ev)
-        |SELECT symbol, CAST(count(*) AS BIGINT) AS n_samples,
-        |       CAST(sum(dur) AS BIGINT) AS dur_us,
-        |       CAST(sum(CAST(ticks AS HUGEINT) * dur) // sum(dur) AS BIGINT)
-        |         AS twap_ticks
-        |FROM d WHERE dur IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin,
-    // three parametrized blocks of the same estimator, one WITH chain
-    "q224_join_card" -> JoinCardSql,
-    // same trigram stream from 1-based list indexing; top-1 tie order
-    "q225_phrase_match" ->
-      """WITH w AS (SELECT doc_id,
-        |             list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                         x -> x <> '') AS ws
-        |           FROM documents),
-        |tri AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2, ws[i + 2] AS w3
-        |        FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 1)) AS i
-        |              FROM w WHERE len(ws) >= 3)),
-        |top AS (SELECT w1, w2, w3 FROM tri GROUP BY 1, 2, 3
-        |        ORDER BY count(*) DESC, w1, w2, w3 LIMIT 1)
-        |SELECT t.doc_id, t.w1, t.w2, t.w3, CAST(count(*) AS BIGINT) AS n_occ
-        |FROM tri t JOIN top USING (w1, w2, w3)
-        |GROUP BY 1, 2, 3, 4 ORDER BY t.doc_id""".stripMargin,
-    // same change-point collapse + version chaining windows
-    "q226_scd2_build" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |                   CAST(floor(value / 100) AS BIGINT) AS band
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |              AND value IS NOT NULL AND NOT isnan(value)),
-        |l AS (SELECT *, lag(band) OVER (PARTITION BY user_id
-        |                                ORDER BY ts, event_id) AS prev
-        |      FROM ev),
-        |c AS (SELECT user_id, ts, event_id, band FROM l
-        |      WHERE prev IS NULL OR prev <> band),
-        |v AS (SELECT user_id, band, ts,
-        |             CAST(row_number() OVER w AS BIGINT) AS version,
-        |             lead(ts) OVER w AS vt
-        |      FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, version,
-        |       strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-        |       coalesce(strftime(vt, '%Y-%m-%d %H:%M:%S'), '<current>')
-        |         AS valid_to,
-        |       band
-        |FROM v ORDER BY user_id, version""".stripMargin,
-    // yesterday's FULL ranking joined on (item, d−1); 0 sentinel for new
-    "q227_trending" ->
-      """WITH ev AS (SELECT CAST(ts AS DATE) AS d,
-        |                   TRY_CAST(json_extract_string(props, '$.k') AS BIGINT)
-        |                     AS item
-        |            FROM events WHERE ts IS NOT NULL),
-        |f AS (SELECT d, item FROM ev WHERE item IS NOT NULL),
-        |daily AS (SELECT d, item, CAST(count(*) AS BIGINT) AS n
-        |          FROM f GROUP BY 1, 2),
-        |r AS (SELECT d, item, n,
-        |             CAST(row_number() OVER (PARTITION BY d
-        |               ORDER BY n DESC, item ASC) AS BIGINT) AS rank
-        |      FROM daily),
-        |p AS (SELECT d + 1 AS d, item, rank AS prev_rank FROM r)
-        |SELECT r.d, r.item, r.n, r.rank,
-        |       CAST(coalesce(p.prev_rank, 0) AS BIGINT) AS prev_rank,
-        |       CAST(CASE WHEN p.prev_rank IS NULL THEN 0
-        |            ELSE p.prev_rank - r.rank END AS BIGINT) AS delta
-        |FROM r LEFT JOIN p ON p.d = r.d AND p.item = r.item
-        |WHERE r.rank <= 8 ORDER BY r.d, r.rank""".stripMargin,
-    // same q20 gap cut; sweep per day with (µs, +1-first) boundary order
-    "q228_peak_concurrency" ->
-      """WITH ev AS (SELECT user_id, event_id,
-        |                   epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |l AS (SELECT user_id, event_id, us,
-        |             lag(us) OVER (PARTITION BY user_id
-        |                           ORDER BY us, event_id) AS prev
-        |      FROM ev),
-        |m AS (SELECT user_id, event_id, us,
-        |             CASE WHEN prev IS NULL OR us - prev > 1800000000
-        |                  THEN 1 ELSE 0 END AS nw
-        |      FROM l),
-        |sid AS (SELECT user_id, us,
-        |               sum(nw) OVER (PARTITION BY user_id
-        |                             ORDER BY us, event_id) AS sid
-        |        FROM m),
-        |sess AS (SELECT user_id, sid, min(us) AS s0, max(us) AS s1
-        |         FROM sid GROUP BY 1, 2),
-        |seg AS (SELECT CAST(dd AS DATE) AS d,
-        |               greatest(s0, epoch_us(CAST(CAST(dd AS DATE) AS TIMESTAMP)))
-        |                 AS a,
-        |               least(s1, epoch_us(CAST(CAST(dd AS DATE) AS TIMESTAMP))
-        |                         + 86399999999) AS b
-        |        FROM (SELECT s0, s1,
-        |                     unnest(generate_series(CAST(make_timestamp(s0) AS DATE),
-        |                       CAST(make_timestamp(s1) AS DATE),
-        |                       INTERVAL 1 DAY)) AS dd
-        |              FROM sess)),
-        |bounds AS (SELECT d, a AS us, 1 AS delta FROM seg
-        |           UNION ALL SELECT d, b AS us, -1 AS delta FROM seg),
-        |sw AS (SELECT d, sum(delta) OVER (PARTITION BY d
-        |                ORDER BY us ASC, delta DESC
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-        |       FROM bounds)
-        |SELECT d, CAST(count(*) // 2 AS BIGINT) AS n_sessions,
-        |       CAST(max(c) AS BIGINT) AS peak
-        |FROM sw GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same lag pairing; float ratio only inside floor(x + 0.5)
-    "q229_realized_vol" ->
-      """WITH ev AS (SELECT event_type AS symbol,
-        |                   epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id AS id,
-        |                   CAST(ts AS DATE) AS d,
-        |                   CAST(floor(value * 10000 + 0.5) AS BIGINT) AS t
-        |            FROM events
-        |            WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |              AND value IS NOT NULL AND NOT isnan(value)),
-        |l AS (SELECT symbol, d, t,
-        |             lag(t) OVER (PARTITION BY symbol ORDER BY us, id) AS prev
-        |      FROM ev),
-        |r AS (SELECT symbol, d,
-        |             CAST(floor((t - prev) * 10000.0 / prev + 0.5) AS BIGINT) AS r
-        |      FROM l WHERE prev IS NOT NULL AND prev > 0)
-        |SELECT symbol, d, CAST(count(*) AS BIGINT) AS n_returns,
-        |       CAST(sum(r) AS BIGINT) AS drift_bp,
-        |       CAST(sum(CAST(r AS HUGEINT) * r) AS BIGINT) AS rv
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // last sample via descending row_number (the q209 idiom); strict
-    // below-count over the tick grid
-    "q230_last_value_rank" ->
-      """WITH ev AS (SELECT event_type AS symbol,
-        |                   epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id AS id,
-        |                   CAST(floor(value * 10000 + 0.5) AS BIGINT) AS t
-        |            FROM events
-        |            WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |              AND value IS NOT NULL AND NOT isnan(value)),
-        |r AS (SELECT symbol, t,
-        |             row_number() OVER (PARTITION BY symbol
-        |               ORDER BY us DESC, id DESC, t DESC) AS rn
-        |      FROM ev),
-        |last AS (SELECT symbol, CAST(count(*) AS BIGINT) AS n,
-        |                max(CASE WHEN rn = 1 THEN t END) AS last_ticks
-        |         FROM r GROUP BY 1)
-        |SELECT ev.symbol, last.n, last.last_ticks,
-        |       CAST(sum(CASE WHEN ev.t < last.last_ticks THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_below,
-        |       CAST((sum(CASE WHEN ev.t < last.last_ticks THEN 1 ELSE 0 END)
-        |             * 10000) // last.n AS BIGINT) AS rank_bp
-        |FROM ev JOIN last ON last.symbol = ev.symbol
-        |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin,
-    // same cumulative max; (dd desc, peak desc) pick mirrors the
-    // engine's struct extreme
-    "q231_max_drawdown" ->
-      """WITH ev AS (SELECT event_type AS symbol,
-        |                   epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id AS id,
-        |                   CAST(floor(value * 10000 + 0.5) AS BIGINT) AS t
-        |            FROM events
-        |            WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |              AND value IS NOT NULL AND NOT isnan(value)),
-        |p AS (SELECT symbol, t,
-        |             max(t) OVER (PARTITION BY symbol ORDER BY us, id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-        |      FROM ev),
-        |d AS (SELECT symbol, peak,
-        |             CAST(((peak - t) * 10000) // peak AS BIGINT) AS dd
-        |      FROM p),
-        |r AS (SELECT symbol, peak, dd,
-        |             row_number() OVER (PARTITION BY symbol
-        |               ORDER BY dd DESC, peak DESC) AS rn,
-        |             count(*) OVER (PARTITION BY symbol) AS n
-        |      FROM d)
-        |SELECT symbol, CAST(n AS BIGINT) AS n, peak AS peak_ticks,
-        |       dd AS max_dd_bp
-        |FROM r WHERE rn = 1 ORDER BY symbol""".stripMargin,
-    // same rolling integer sums; σ from the exact variance numerator,
-    // sqrt the only float op; complete 8-candle windows only
-    "q232_bollinger" ->
-      s"""WITH $CandleCte,
-         |t AS (SELECT symbol, window_start,
-         |             CAST(floor(close * 10000 + 0.5) AS BIGINT) AS t
-         |      FROM candles),
-         |w AS (SELECT symbol, window_start, t,
-         |             count(*) OVER win AS n,
-         |             sum(t) OVER win AS st,
-         |             sum(CAST(t AS HUGEINT) * t) OVER win AS stt
-         |      FROM t
-         |      WINDOW win AS (PARTITION BY symbol ORDER BY window_start
-         |        ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)),
-         |b AS (SELECT symbol, window_start, t,
-         |             CAST(st // 8 AS BIGINT) AS mid_ticks,
-         |             CAST(floor(sqrt(CAST(8 * stt - CAST(st AS HUGEINT) * st
-         |               AS DOUBLE)) / 8) AS BIGINT) AS sd_ticks
-         |      FROM w WHERE n = 8)
-         |SELECT symbol, strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-         |       t AS close_ticks, mid_ticks, sd_ticks,
-         |       mid_ticks + 2 * sd_ticks AS upper_ticks,
-         |       mid_ticks - 2 * sd_ticks AS lower_ticks,
-         |       (t > mid_ticks + 2 * sd_ticks OR t < mid_ticks - 2 * sd_ticks)
-         |         AS outside
-         |FROM b ORDER BY symbol, window_start""".stripMargin,
-    // SMA relative strength: rolling gain/loss sums over 14 deltas,
-    // non-negative DIV, flat window pinned to 10000
-    "q233_rsi" ->
-      s"""WITH $CandleCte,
-         |t AS (SELECT symbol, window_start,
-         |             CAST(floor(close * 10000 + 0.5) AS BIGINT) AS t
-         |      FROM candles),
-         |d AS (SELECT symbol, window_start, t,
-         |             lag(t) OVER (PARTITION BY symbol ORDER BY window_start) AS prev
-         |      FROM t),
-         |g AS (SELECT symbol, window_start,
-         |             greatest(t - prev, 0) AS gain, greatest(prev - t, 0) AS loss
-         |      FROM d WHERE prev IS NOT NULL),
-         |w AS (SELECT symbol, window_start,
-         |             count(*) OVER win AS n,
-         |             CAST(sum(gain) OVER win AS BIGINT) AS gain_sum,
-         |             CAST(sum(loss) OVER win AS BIGINT) AS loss_sum
-         |      FROM g
-         |      WINDOW win AS (PARTITION BY symbol ORDER BY window_start
-         |        ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-         |SELECT symbol, strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-         |       gain_sum, loss_sum,
-         |       CAST(CASE WHEN gain_sum + loss_sum = 0 THEN 10000
-         |            ELSE (gain_sum * 10000) // (gain_sum + loss_sum) END
-         |         AS BIGINT) AS rsi_bp
-         |FROM w WHERE n = 14 ORDER BY symbol, window_start""".stripMargin,
-    // q229's bp returns on the candle grid, q135's exact-integer
-    // Pearson shape; inner join keeps only shared buckets
-    "q234_return_corr" ->
-      s"""WITH $CandleCte,
-         |t AS (SELECT symbol, window_start,
-         |             CAST(floor(close * 10000 + 0.5) AS BIGINT) AS t
-         |      FROM candles),
-         |d AS (SELECT symbol, window_start, t,
-         |             lag(t) OVER (PARTITION BY symbol ORDER BY window_start) AS prev
-         |      FROM t),
-         |r AS (SELECT symbol, window_start,
-         |             CAST(floor((t - prev) * 10000.0 / prev + 0.5) AS BIGINT) AS r
-         |      FROM d WHERE prev IS NOT NULL AND prev > 0),
-         |s AS (SELECT a.symbol AS sym_a, b.symbol AS sym_b,
-         |             CAST(count(*) AS BIGINT) AS n,
-         |             CAST(sum(a.r) AS BIGINT) AS sx, CAST(sum(b.r) AS BIGINT) AS sy,
-         |             sum(CAST(a.r AS HUGEINT) * b.r) AS sxy,
-         |             sum(CAST(a.r AS HUGEINT) * a.r) AS sxx,
-         |             sum(CAST(b.r AS HUGEINT) * b.r) AS syy
-         |      FROM r a JOIN r b ON a.window_start = b.window_start
-         |        AND a.symbol < b.symbol
-         |      GROUP BY 1, 2)
-         |SELECT sym_a, sym_b, n,
-         |       round((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-         |         / sqrt(greatest(0.000000000001,
-         |             (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-         |             * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))),
-         |         4) AS corr
-         |FROM s ORDER BY sym_a, sym_b""".stripMargin,
-    // NULL lag comparisons fall to the ELSE 0 arm in both engines
-    "q235_candle_patterns" ->
-      s"""WITH $CandleCte,
-         |t AS (SELECT symbol, window_start,
-         |             CAST(floor(open * 10000 + 0.5) AS BIGINT) AS o,
-         |             CAST(floor(high * 10000 + 0.5) AS BIGINT) AS h,
-         |             CAST(floor(low * 10000 + 0.5) AS BIGINT) AS l,
-         |             CAST(floor(close * 10000 + 0.5) AS BIGINT) AS c
-         |      FROM candles),
-         |x AS (SELECT symbol, o, h, l, c,
-         |             lag(o) OVER win AS po, lag(c) OVER win AS pc,
-         |             abs(c - o) AS body, h - l AS rng,
-         |             h - greatest(o, c) AS up, least(o, c) - l AS dn
-         |      FROM t WINDOW win AS (PARTITION BY symbol ORDER BY window_start))
-         |SELECT symbol, CAST(count(*) AS BIGINT) AS n_candles,
-         |       CAST(sum(CASE WHEN rng > 0 AND body * 10 <= rng
-         |         THEN 1 ELSE 0 END) AS BIGINT) AS n_doji,
-         |       CAST(sum(CASE WHEN rng > 0 AND dn >= body * 2 AND up <= body
-         |         THEN 1 ELSE 0 END) AS BIGINT) AS n_hammer,
-         |       CAST(sum(CASE WHEN pc < po AND c > o AND o <= pc AND c >= po
-         |         THEN 1 ELSE 0 END) AS BIGINT) AS n_bull_engulf,
-         |       CAST(sum(CASE WHEN pc > po AND c < o AND o >= pc AND c <= po
-         |         THEN 1 ELSE 0 END) AS BIGINT) AS n_bear_engulf
-         |FROM x GROUP BY 1 ORDER BY 1""".stripMargin,
-    // isodow − 1 ≡ Spark weekday (Monday=0); non-negative DIVs
-    "q236_dow_seasonality" ->
-      """WITH ev AS (SELECT event_type AS key, CAST(ts AS TIMESTAMP) AS ts
-        |            FROM events
-        |            WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-        |g AS (SELECT key, CAST(isodow(CAST(ts AS DATE)) - 1 AS BIGINT) AS dow,
-        |             CAST(count(*) AS BIGINT) AS n,
-        |             CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days
-        |      FROM ev GROUP BY 1, 2),
-        |w AS (SELECT *, sum(n) OVER (PARTITION BY key) AS total,
-        |             sum(n_days) OVER (PARTITION BY key) AS days_total
-        |      FROM g)
-        |SELECT key, dow, n, n_days,
-        |       CAST(CAST(n AS HUGEINT) * 10000 // total AS BIGINT) AS share_bp,
-        |       CAST(CAST(n AS HUGEINT) * days_total * 10000
-        |         // (CAST(total AS HUGEINT) * n_days) AS BIGINT) AS index_bp
-        |FROM w ORDER BY key, dow""".stripMargin,
-    // deviation terms ×n_days stay integer; peak ties → earliest day
-    "q237_cusum" ->
-      """WITH ev AS (SELECT event_type AS key,
-        |                   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-        |            FROM events
-        |            WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-        |daily AS (SELECT key, d, CAST(count(*) AS BIGINT) AS c
-        |          FROM ev GROUP BY 1, 2),
-        |w AS (SELECT key, d, c,
-        |             CAST(count(*) OVER (PARTITION BY key) AS BIGINT) AS n_days,
-        |             CAST(sum(c) OVER (PARTITION BY key) AS BIGINT) AS total
-        |      FROM daily),
-        |cu AS (SELECT key, d, n_days, total,
-        |             CAST(sum(c * n_days - total) OVER (PARTITION BY key
-        |               ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |               AS BIGINT) AS cusum
-        |      FROM w),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY key
-        |        ORDER BY abs(cusum) DESC, d ASC) AS rn FROM cu)
-        |SELECT key, n_days, total, d AS cp_day, cusum AS cp_cusum
-        |FROM r WHERE rn = 1 ORDER BY key""".stripMargin,
-    // zero-norm vectors excluded on both sides; argmax ties → lowest
-    // bench id; flag compares the 6dp-rounded cosine
-    "q238_semantic_decontam" ->
-      s"""WITH $VecBaseSql,
-        |pn AS (SELECT vec_id FROM norms WHERE nrm > 0),
-        |bcomp AS (SELECT c.vec_id, i, x FROM comp c JOIN pn USING (vec_id)
-        |          WHERE c.vec_id % 50 = 0),
-        |ccomp AS (SELECT c.vec_id, i, x FROM comp c JOIN pn USING (vec_id)
-        |          WHERE c.vec_id % 50 <> 0),
-        |dots AS (SELECT c.vec_id, b.vec_id AS bench_id, sum(c.x * b.x) AS dp
-        |         FROM ccomp c JOIN bcomp b ON b.i = c.i GROUP BY 1, 2),
-        |sc AS (SELECT d.vec_id, d.bench_id,
-        |              round(d.dp / (nc.nrm * nb.nrm), 6) AS cosine
-        |       FROM dots d
-        |       JOIN norms nc ON nc.vec_id = d.vec_id
-        |       JOIN norms nb ON nb.vec_id = d.bench_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-        |        ORDER BY cosine DESC, bench_id) AS rn FROM sc)
-        |SELECT vec_id, bench_id AS best_bench_id, cosine,
-        |       cosine >= 0.2 AS contaminated
-        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-    // reciprocal exact top-5 within the sample; pairs emit once with
-    // both directed ranks
-    "q239_mutual_knn" ->
-      s"""WITH $VecBaseSql,
-        |scomp AS (SELECT vec_id, i, x FROM comp WHERE vec_id % 10 = 0),
-        |sdots AS (SELECT b.vec_id AS qa, a.vec_id AS qb, sum(b.x * a.x) AS dp
-        |          FROM scomp b JOIN scomp a ON a.i = b.i
-        |            AND b.vec_id <> a.vec_id
-        |          GROUP BY 1, 2),
-        |ss AS (SELECT qa, qb, round(dp / (na.nrm * nb.nrm), 6) AS cosine
-        |       FROM sdots JOIN norms na ON na.vec_id = qa
-        |                  JOIN norms nb ON nb.vec_id = qb),
-        |rk AS (SELECT qa, qb, cosine,
-        |              CAST(row_number() OVER (PARTITION BY qa
-        |                ORDER BY cosine DESC, qb) AS BIGINT) AS rnk
-        |       FROM ss),
-        |top AS (SELECT * FROM rk WHERE rnk <= 5)
-        |SELECT t1.qa AS vec_a, t1.qb AS vec_b, t1.cosine AS cosine,
-        |       t1.rnk AS rnk_ab, t2.rnk AS rnk_ba
-        |FROM top t1 JOIN top t2 ON t2.qa = t1.qb AND t2.qb = t1.qa
-        |WHERE t1.qa < t1.qb ORDER BY 1, 2""".stripMargin,
-    // θ grid over the shared verified-candidate chain; empty θ rows 0/0
-    "q240_threshold_sweep" ->
-      s"""WITH $LshCalibSql,
-        |grid AS (SELECT CAST(unnest([2000, 4000, 6000, 8000]) AS BIGINT)
-        |           AS theta_bp),
-        |hits AS (SELECT g.theta_bp, j.doc_a, j.doc_b FROM grid g
-        |         JOIN j ON j.exact_jaccard >= g.theta_bp / 10000.0),
-        |pc AS (SELECT theta_bp, CAST(count(*) AS BIGINT) AS n_pairs
-        |       FROM hits GROUP BY 1),
-        |dc AS (SELECT theta_bp, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-        |       FROM (SELECT theta_bp, doc_a AS doc_id FROM hits
-        |             UNION ALL SELECT theta_bp, doc_b FROM hits) t
-        |       GROUP BY 1)
-        |SELECT g.theta_bp, coalesce(pc.n_pairs, 0) AS n_pairs,
-        |       coalesce(dc.n_docs, 0) AS n_docs
-        |FROM grid g LEFT JOIN pc USING (theta_bp) LEFT JOIN dc USING (theta_bp)
-        |ORDER BY g.theta_bp""".stripMargin,
-    // even-split credit: 1e6 // n per touch (floor on non-negatives),
-    // touches attach to the NEXT conversion on the pinned (ts, id) order
-    "q241_linear_attribution" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, event_id
-        |            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |o AS (SELECT user_id, event_type,
-        |             sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |               OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
-        |      FROM ev),
-        |conv AS (SELECT user_id, cb AS cidx FROM o WHERE event_type = 'purchase'),
-        |tch AS (SELECT o.user_id, o.cb + 1 AS cidx, o.event_type
-        |        FROM o JOIN conv ON conv.user_id = o.user_id AND conv.cidx = o.cb + 1
-        |        WHERE o.event_type <> 'purchase'),
-        |n AS (SELECT user_id, cidx, CAST(count(*) AS BIGINT) AS n
-        |      FROM tch GROUP BY 1, 2),
-        |cr AS (SELECT t.event_type, 1000000 // n.n AS credit
-        |       FROM tch t JOIN n ON n.user_id = t.user_id AND n.cidx = t.cidx),
-        |agg AS (SELECT event_type AS attr_type, CAST(count(*) AS BIGINT) AS n_touches,
-        |               CAST(sum(credit) AS BIGINT) AS credit_micro
-        |        FROM cr GROUP BY 1),
-        |bare AS (SELECT '<none>' AS attr_type, CAST(count(*) AS BIGINT) AS n_touches,
-        |                CAST(count(*) * 1000000 AS BIGINT) AS credit_micro
-        |         FROM conv LEFT JOIN n ON n.user_id = conv.user_id
-        |                               AND n.cidx = conv.cidx
-        |         WHERE n.n IS NULL)
-        |SELECT * FROM agg UNION ALL SELECT * FROM bare ORDER BY attr_type""".stripMargin,
-    // distinct (month, day, user) presence grid; stickiness from the
-    // three integer aggregates in one HALF_UP expression
-    "q242_stickiness" ->
-      """WITH e AS (SELECT DISTINCT CAST(date_trunc('month', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS month,
-        |                  date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-        |                  user_id AS u
-        |           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL)
-        |SELECT month, CAST(count(DISTINCT u) AS BIGINT) AS mau,
-        |       CAST(count(*) AS BIGINT) AS sum_dau,
-        |       CAST(count(DISTINCT d) AS BIGINT) AS n_days,
-        |       CAST(floor(count(*) * 10000.0 /
-        |                  (count(DISTINCT d) * count(DISTINCT u)) + 0.5) AS BIGINT)
-        |         AS stickiness_bp
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    // md5-low-32 mod 64 buckets, null sentinel + chr(1) separator match
-    // the engine's concat exactly; skew = max/ideal in HALF_UP bp
-    "q243_partition_skew" ->
-      """WITH kb AS (
-        |  SELECT 'event_id' AS key_name,
-        |         ('0x' || substr(md5(coalesce(CAST(event_id AS VARCHAR), '∅')), 1, 8))::BIGINT % 64 AS bucket
-        |  FROM events
-        |  UNION ALL
-        |  SELECT 'event_type',
-        |         ('0x' || substr(md5(coalesce(event_type, '∅')), 1, 8))::BIGINT % 64
-        |  FROM events
-        |  UNION ALL
-        |  SELECT 'user_id',
-        |         ('0x' || substr(md5(coalesce(CAST(user_id AS VARCHAR), '∅')), 1, 8))::BIGINT % 64
-        |  FROM events
-        |  UNION ALL
-        |  SELECT 'user_type',
-        |         ('0x' || substr(md5(concat_ws(chr(1),
-        |            coalesce(CAST(user_id AS VARCHAR), '∅'),
-        |            coalesce(event_type, '∅'))), 1, 8))::BIGINT % 64
-        |  FROM events),
-        |b AS (SELECT key_name, bucket, CAST(count(*) AS BIGINT) AS n
-        |      FROM kb GROUP BY 1, 2)
-        |SELECT key_name, CAST(sum(n) AS BIGINT) AS n_rows,
-        |       CAST(count(*) AS BIGINT) AS n_buckets_hit,
-        |       CAST(max(n) AS BIGINT) AS max_bucket_rows,
-        |       CAST(floor(max(n) * 64 * 10000.0 / sum(n) + 0.5) AS BIGINT) AS skew_x_bp
-        |FROM b GROUP BY 1 ORDER BY key_name""".stripMargin,
-    // per purchase: min |Δµs| click, ties backward (earlier), then the
-    // engine's duplicate-ts tiebreak (max id backward, min id forward)
-    "q244_nearest_event" ->
-      """WITH ev AS (SELECT event_id, user_id,
-        |                   epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type
-        |            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |p AS (SELECT event_id AS purchase_id, user_id, us FROM ev
-        |      WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id AS click_id, user_id, us AS cus FROM ev
-        |      WHERE event_type = 'click'),
-        |j AS (SELECT p.purchase_id, c.click_id, abs(c.cus - p.us) AS gap,
-        |             row_number() OVER (PARTITION BY p.purchase_id
-        |               ORDER BY abs(c.cus - p.us),
-        |                        CASE WHEN c.cus <= p.us THEN 0 ELSE 1 END,
-        |                        CASE WHEN c.cus <= p.us THEN -c.click_id
-        |                             ELSE c.click_id END) AS rn
-        |      FROM p JOIN c USING (user_id))
-        |SELECT p.purchase_id, j.click_id, j.gap AS nearest_gap_us
-        |FROM p LEFT JOIN j ON j.purchase_id = p.purchase_id AND j.rn = 1
-        |ORDER BY p.purchase_id""".stripMargin,
-    // integer-µs 30-min buckets (// floors non-negative epochs);
-    // arg_min/arg_max pick open/close on the unique fine window_start
-    "q245_ohlc_resample" ->
-      s"""WITH $CandleCte,
-         |r AS (SELECT make_timestamp((epoch_us(window_start) // 1800000000)
-         |               * 1800000000) AS w, symbol,
-         |             arg_min(open, window_start) AS open, max(high) AS high,
-         |             min(low) AS low, arg_max(close, window_start) AS close,
-         |             CAST(sum(tick_count) AS BIGINT) AS tick_count
-         |      FROM candles GROUP BY 1, 2)
-         |SELECT strftime(w, '%Y-%m-%d %H:%M:%S') AS window_start, symbol,
-         |       open, high, low, close, tick_count
-         |FROM r ORDER BY 1, symbol""".stripMargin,
-    // binned Mann–Whitney over milli-bins: num2 = Σ pos·(2·cumneg+neg),
-    // AUC = num2/(2PN) floored to micro; HUGEINT products
-    "q246_classifier_auc" ->
-      s"""WITH $QualitySql,
-        |$ClassifierScoreSql,
-        |b AS (SELECT CAST(floor(score * 1000) AS BIGINT) AS bin,
-        |             CASE WHEN q.quality >= 0.5 THEN 1 ELSE 0 END AS p
-        |      FROM scored JOIN q USING (doc_id)),
-        |g AS (SELECT bin, CAST(sum(p) AS BIGINT) AS pos,
-        |             CAST(count(*) - sum(p) AS BIGINT) AS neg
-        |      FROM b GROUP BY 1),
-        |c AS (SELECT bin, pos, neg,
-        |             coalesce(sum(neg) OVER (ORDER BY bin
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumneg
-        |      FROM g)
-        |SELECT CAST(sum(pos) AS BIGINT) AS n_pos,
-        |       CAST(sum(neg) AS BIGINT) AS n_neg,
-        |       CAST((sum(CAST(pos AS HUGEINT) * (2 * cumneg + neg)) * 1000000)
-        |            // (2 * CAST(sum(pos) AS HUGEINT) * sum(neg)) AS BIGINT)
-        |         AS auc_micro
-        |FROM c""".stripMargin,
-    // span-identity Fano: zeros enter only through n_days; HUGEINT
-    // products, one final floored micro division
-    "q248_fano_factor" ->
-      """WITH d AS (SELECT event_type AS key, CAST(ts AS DATE) AS d2,
-        |                  CAST(count(*) AS BIGINT) AS c
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |           GROUP BY 1, 2)
-        |SELECT key,
-        |       CAST(date_diff('day', min(d2), max(d2)) + 1 AS BIGINT) AS n_days,
-        |       CAST(sum(c) AS BIGINT) AS total,
-        |       CAST(((CAST(date_diff('day', min(d2), max(d2)) + 1 AS HUGEINT)
-        |               * sum(c * c) - CAST(sum(c) AS HUGEINT) * sum(c)) * 1000000)
-        |            // (CAST(date_diff('day', min(d2), max(d2)) + 1 AS HUGEINT)
-        |               * sum(c)) AS BIGINT) AS fano_micro
-        |FROM d GROUP BY key ORDER BY key""".stripMargin,
-    // one agg per user; recency vs the corpus max day; purchase cents
-    "q284_user_features" ->
-      """WITH mx AS (SELECT max(CAST(ts AS DATE)) AS mxd FROM events
-        |            WHERE ts IS NOT NULL),
-        |e AS (SELECT user_id, CAST(ts AS DATE) AS d, event_type, value
-        |      FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL)
-        |SELECT user_id,
-        |       CAST(date_diff('day', max(d), (SELECT mxd FROM mx)) AS BIGINT)
-        |         AS recency_days,
-        |       CAST(count(*) AS BIGINT) AS frequency,
-        |       CAST(sum(CASE WHEN event_type = 'purchase' AND value IS NOT NULL AND NOT isnan(value)
-        |                     THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-        |                     ELSE 0 END) AS BIGINT) AS monetary_cents,
-        |       CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-        |       CAST(count(DISTINCT d) AS BIGINT) AS active_days,
-        |       CAST(date_diff('day', min(d), max(d)) AS BIGINT) AS tenure_days
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // the q104 marker scores, second-best within 4/5 of the best
-    "q285_mixed_lang" ->
-      """WITH s AS (
-        |  SELECT source, list_reverse_sort([
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('der', 'die', 'das', 'und', 'nicht', 'ist', 'ein'))) AS BIGINT),
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'and', 'of', 'is', 'to', 'in', 'that'))) AS BIGINT),
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('el', 'la', 'los', 'las', 'es', 'un', 'una', 'que'))) AS BIGINT),
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('le', 'la', 'les', 'est', 'une', 'des', 'dans'))) AS BIGINT),
-        |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('de', 'shi', 'bu', 'le', 'zai', 'wo', 'you'))) AS BIGINT)]) AS l
-        |  FROM documents),
-        |m AS (SELECT source, l[1] AS b, l[2] AS b2 FROM s)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(CASE WHEN b > 0 AND b2 * 5 >= b * 4 THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_mixed,
-        |       CAST(floor(sum(CASE WHEN b > 0 AND b2 * 5 >= b * 4
-        |                           THEN 1 ELSE 0 END) * 10000.0 / count(*)
-        |                  + 0.5) AS BIGINT) AS mixed_bp
-        |FROM m GROUP BY source ORDER BY source""".stripMargin,
-    // Monday weeks; floor cents-per-user; 0 when no payers
-    "q286_weekly_arpu" ->
-      """WITH w AS (SELECT CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS week,
-        |                  user_id, event_type, value
-        |           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |g AS (SELECT week, CAST(count(DISTINCT user_id) AS BIGINT) AS actives,
-        |             CAST(count(DISTINCT CASE WHEN event_type = 'purchase'
-        |                                      THEN user_id END) AS BIGINT) AS payers,
-        |             CAST(sum(CASE WHEN event_type = 'purchase'
-        |                            AND value IS NOT NULL AND NOT isnan(value)
-        |                           THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-        |                           ELSE 0 END) AS BIGINT) AS revenue_cents
-        |      FROM w GROUP BY 1)
-        |SELECT week, actives, payers, revenue_cents,
-        |       CAST(revenue_cents // actives AS BIGINT) AS arpu_cents,
-        |       CAST(CASE WHEN payers = 0 THEN 0
-        |                 ELSE revenue_cents // payers END AS BIGINT) AS arppu_cents
-        |FROM g ORDER BY week""".stripMargin,
-    // HHI = Σc²·1e6 // S², HUGEINT products
-    "q283_hhi" ->
-      """WITH u AS (SELECT event_type AS key, user_id,
-        |                  CAST(count(*) AS BIGINT) AS c
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-        |           GROUP BY 1, 2)
-        |SELECT key, CAST(count(*) AS BIGINT) AS n_units,
-        |       CAST(sum(c) AS BIGINT) AS total,
-        |       CAST((sum(CAST(c AS HUGEINT) * c) * 1000000)
-        |            // (CAST(sum(c) AS HUGEINT) * sum(c)) AS BIGINT) AS hhi_micro
-        |FROM u GROUP BY key ORDER BY key""".stripMargin,
-    // exact grid Lorenz points; share in floor bp
-    "q280_lorenz_points" ->
-      """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS c
-        |           FROM events WHERE user_id IS NOT NULL GROUP BY 1),
-        |g AS (SELECT c, CAST(count(*) AS BIGINT) AS n_units FROM u GROUP BY 1),
-        |w AS (SELECT c, n_units,
-        |             CAST(sum(n_units) OVER (ORDER BY c) AS BIGINT) AS cum_units,
-        |             sum(c * n_units) OVER (ORDER BY c) AS cum_act,
-        |             sum(c * n_units) OVER () AS tot
-        |      FROM g)
-        |SELECT c, n_units, cum_units,
-        |       CAST((cum_act * 10000) // tot AS BIGINT) AS cum_share_bp
-        |FROM w ORDER BY c""".stripMargin,
-    // distinct (type, user) relation; pair join keyed on the user
-    "q281_audience_overlap" ->
-      """WITH tu AS (SELECT DISTINCT event_type AS t, user_id AS u
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-        |sz AS (SELECT t, CAST(count(*) AS BIGINT) AS n FROM tu GROUP BY 1),
-        |i AS (SELECT a.t AS type_a, b.t AS type_b,
-        |             CAST(count(*) AS BIGINT) AS n_common
-        |      FROM tu a JOIN tu b ON b.u = a.u AND a.t < b.t GROUP BY 1, 2)
-        |SELECT i.type_a, i.type_b, sa.n AS n_a, sb.n AS n_b, i.n_common,
-        |       CAST((i.n_common * 10000) // (sa.n + sb.n - i.n_common)
-        |            AS BIGINT) AS jaccard_bp
-        |FROM i JOIN sz sa ON sa.t = i.type_a JOIN sz sb ON sb.t = i.type_b
-        |ORDER BY i.type_a, i.type_b""".stripMargin,
-    // run starts at type changes on the pinned (ts, id) order
-    "q282_run_lengths" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |                   event_type
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |              AND event_type IS NOT NULL),
-        |s AS (SELECT user_id, ts, event_id, event_type,
-        |             CASE WHEN lag(event_type) OVER w IS NULL
-        |                    OR lag(event_type) OVER w <> event_type
-        |                  THEN 1 ELSE 0 END AS start0
-        |      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |r AS (SELECT user_id, event_type,
-        |             sum(start0) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-        |      FROM s),
-        |l AS (SELECT user_id, run, event_type, CAST(count(*) AS BIGINT) AS len
-        |      FROM r GROUP BY 1, 2, 3)
-        |SELECT event_type, len AS run_len, CAST(count(*) AS BIGINT) AS n_runs
-        |FROM l GROUP BY 1, 2 ORDER BY event_type, run_len""".stripMargin,
-    // same q261 candidate chain, then undirected closure at depth 2;
-    // UNION (distinct) matches the engine's distinct unions
-    "q277_two_hop_reach" ->
-      """WITH eb AS (SELECT DISTINCT user_id AS e,
-        |              concat_ws(chr(1), CAST(CAST(ts AS DATE) AS VARCHAR),
-        |                        event_type,
-        |                        CAST(CAST(floor(value / 100) AS BIGINT) AS VARCHAR))
-        |                AS b
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |              AND value IS NOT NULL AND NOT isnan(value) AND event_type IS NOT NULL),
-        |sz AS (SELECT b FROM eb GROUP BY b
-        |       HAVING count(*) BETWEEN 2 AND 50),
-        |sv AS (SELECT eb.e, eb.b FROM eb JOIN sz USING (b)),
-        |p AS (SELECT x.e AS a, y.e AS b2 FROM sv x
-        |      JOIN sv y ON y.b = x.b AND x.e < y.e
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT a, b2 FROM p UNION SELECT b2, a FROM p),
-        |two AS (SELECT DISTINCT x.a, y.b2 FROM und x
-        |        JOIN und y ON y.a = x.b2 WHERE x.a <> y.b2),
-        |reach AS (SELECT a, b2 FROM und UNION SELECT a, b2 FROM two),
-        |h1 AS (SELECT a AS entity, CAST(count(*) AS BIGINT) AS n_1hop
-        |       FROM und GROUP BY 1),
-        |h2 AS (SELECT a AS entity, CAST(count(*) AS BIGINT) AS n_2hop
-        |       FROM reach GROUP BY 1)
-        |SELECT h1.entity, h1.n_1hop, h2.n_2hop
-        |FROM h1 JOIN h2 USING (entity) ORDER BY entity""".stripMargin,
-    // calendar self-joins (d = p.d + lag); missing days contribute no
-    // pair on either engine
-    "q278_seasonal_backtest" ->
-      """WITH d AS (SELECT event_type AS key, CAST(ts AS DATE) AS d2,
-        |                  CAST(count(*) AS BIGINT) AS c
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |           GROUP BY 1, 2),
-        |m7 AS (SELECT t.key, CAST(count(*) AS BIGINT) AS n7,
-        |              CAST(sum(abs(t.c - p.c)) * 1000000 // count(*) AS BIGINT)
-        |                AS mae7_micro
-        |       FROM d t JOIN d p ON p.key = t.key AND t.d2 = p.d2 + 7
-        |       GROUP BY 1),
-        |m1 AS (SELECT t.key, CAST(count(*) AS BIGINT) AS n1,
-        |              CAST(sum(abs(t.c - p.c)) * 1000000 // count(*) AS BIGINT)
-        |                AS mae1_micro
-        |       FROM d t JOIN d p ON p.key = t.key AND t.d2 = p.d2 + 1
-        |       GROUP BY 1)
-        |SELECT m7.key, m7.n7, m7.mae7_micro, m1.n1, m1.mae1_micro
-        |FROM m7 JOIN m1 ON m1.key = m7.key ORDER BY m7.key""".stripMargin,
-    // exact cross-multiplied CDF distance over the 4dp-quality grid
-    "q279_ks_test" ->
-      s"""WITH $QualitySql,
-        |g AS (SELECT q.quality AS v,
-        |             CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |             CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |      FROM q WHERE q.quality IS NOT NULL GROUP BY 1),
-        |c AS (SELECT v,
-        |             sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |               AND CURRENT ROW) AS cumA,
-        |             sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |               AND CURRENT ROW) AS cumB,
-        |             sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-        |      FROM g)
-        |SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-        |       CAST((max(abs(CAST(cumA AS HUGEINT) * nb
-        |                     - CAST(cumB AS HUGEINT) * na)) * 1000000)
-        |            // (CAST(max(na) AS HUGEINT) * max(nb)) AS BIGINT) AS d_micro
-        |FROM c""".stripMargin,
-    // Monday weeks; offset in whole weeks; NDR vs the cohort's week 0
-    "q274_revenue_cohorts" ->
-      """WITH p AS (SELECT user_id,
-        |                  CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS w,
-        |                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |           FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |             AND value IS NOT NULL AND NOT isnan(value) AND event_type = 'purchase'),
-        |c AS (SELECT user_id, min(w) AS cohort FROM p GROUP BY 1),
-        |r AS (SELECT c.cohort, date_diff('day', c.cohort, p.w) // 7 AS woff,
-        |             CAST(sum(p.cents) AS BIGINT) AS rev_cents
-        |      FROM p JOIN c USING (user_id) GROUP BY 1, 2),
-        |b AS (SELECT cohort, rev_cents AS base FROM r WHERE woff = 0)
-        |SELECT r.cohort, CAST(r.woff AS BIGINT) AS week_offset, r.rev_cents,
-        |       CAST((r.rev_cents * 10000) // b.base AS BIGINT) AS ndr_bp
-        |FROM r JOIN b USING (cohort) ORDER BY r.cohort, r.woff""".stripMargin,
-    // the q68 kept predicate scaled back by exact tick inverse rates
-    "q275_ht_estimate" ->
-      """WITH k AS (SELECT source, CAST(count(*) AS BIGINT) AS n_kept
-        |           FROM documents
-        |           WHERE (('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |                   % 10000) <
-        |                 (CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 7500
-        |                              WHEN 'src2' THEN 5000 WHEN 'src3' THEN 2500
-        |                              ELSE 1000 END)
-        |           GROUP BY 1),
-        |a AS (SELECT source, CAST(count(*) AS BIGINT) AS n_actual
-        |      FROM documents GROUP BY 1),
-        |j AS (SELECT a.source, a.n_actual,
-        |             CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
-        |             CAST((coalesce(k.n_kept, 0) * 10000) //
-        |                  (CASE a.source WHEN 'src0' THEN 10000
-        |                                 WHEN 'src1' THEN 7500
-        |                                 WHEN 'src2' THEN 5000
-        |                                 WHEN 'src3' THEN 2500
-        |                                 ELSE 1000 END) AS BIGINT) AS n_est
-        |      FROM a LEFT JOIN k USING (source))
-        |SELECT source, n_actual, n_kept, n_est,
-        |       CAST(floor(abs(n_est - n_actual) * 10000.0 / n_actual + 0.5)
-        |            AS BIGINT) AS err_bp
-        |FROM j ORDER BY source""".stripMargin,
-    // both halves' top-200 ranks (total order: count desc, token), top
-    // movers by |Δrank|
-    "q276_trending_tokens" ->
-      """WITH tk AS (SELECT doc_id % 2 AS h,
-        |              unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                                 x -> x <> '')) AS token
-        |            FROM documents),
-        |cnt AS (SELECT h, token, CAST(count(*) AS BIGINT) AS n
-        |        FROM tk GROUP BY 1, 2),
-        |rk AS (SELECT h, token, CAST(row_number() OVER (PARTITION BY h
-        |         ORDER BY n DESC, token) AS BIGINT) AS rnk FROM cnt),
-        |a AS (SELECT token, rnk AS rank_a FROM rk WHERE h = 0 AND rnk <= 200),
-        |b AS (SELECT token, rnk AS rank_b FROM rk WHERE h = 1 AND rnk <= 200),
-        |j AS (SELECT a.token, a.rank_a, b.rank_b,
-        |             abs(a.rank_a - b.rank_b) AS abs_delta
-        |      FROM a JOIN b USING (token))
-        |SELECT token, rank_a, rank_b, abs_delta FROM j
-        |ORDER BY abs_delta DESC, token LIMIT 20""".stripMargin,
-    // one aggregate row stacked over the plan-time column dim
-    "q271_null_profile" ->
-      """WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_event_id,
-        |  CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_event_type,
-        |  CAST(sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_props,
-        |  CAST(sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_ts,
-        |  CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_user_id,
-        |  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_value
-        |  FROM events),
-        |u AS (
-        |  SELECT 'event_id' AS column, n, c_event_id AS n_null FROM a
-        |  UNION ALL SELECT 'event_type', n, c_event_type FROM a
-        |  UNION ALL SELECT 'props', n, c_props FROM a
-        |  UNION ALL SELECT 'ts', n, c_ts FROM a
-        |  UNION ALL SELECT 'user_id', n, c_user_id FROM a
-        |  UNION ALL SELECT 'value', n, c_value FROM a)
-        |SELECT "column", n, n_null,
-        |       CAST(floor(n_null * 10000.0 / n + 0.5) AS BIGINT) AS null_bp
-        |FROM u ORDER BY "column"""".stripMargin,
-    // planted %37 re-ingestion twins; natural keys group both copies
-    "q272_duplicate_rows" ->
-      """WITH doubled AS (
-        |  SELECT * FROM events
-        |  UNION ALL
-        |  SELECT event_id + 7000000000, ts, user_id, event_type, value, props
-        |  FROM events WHERE event_id % 37 = 0),
-        |g AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
-        |             round(value, 4) AS value,
-        |             CAST(count(*) AS BIGINT) AS n_copies,
-        |             CAST(min(event_id) AS BIGINT) AS first_id
-        |      FROM doubled GROUP BY 1, 2, 3, 4)
-        |SELECT * FROM g WHERE n_copies > 1
-        |ORDER BY user_id, ts, event_type""".stripMargin,
-    // H = Σ c·ln(tot/c)/tot in micro-nats; terms non-negative so the
-    // final floor DIV is engine-consistent. NULL event_type → '<none>'
-    // sentinel, matching Engagement.transitions (q95)
-    "q273_transition_entropy" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |                   coalesce(event_type, '<none>') AS event_type
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |p AS (SELECT event_type AS from_type,
-        |             lead(event_type) OVER (PARTITION BY user_id
-        |               ORDER BY ts, event_id) AS to_type
-        |      FROM ev),
-        |c AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |      FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot,
-        |             CAST(count(*) AS BIGINT) AS n_next_types
-        |      FROM c GROUP BY 1),
-        |j AS (SELECT c.from_type, t.tot, t.n_next_types,
-        |             c.n * CAST(round(ln(CAST(t.tot AS DOUBLE) / c.n)
-        |               * 1000000, 0) AS BIGINT) AS term
-        |      FROM c JOIN t USING (from_type))
-        |SELECT from_type, max(tot) AS n,
-        |       max(n_next_types) AS n_next_types,
-        |       CAST(sum(term) // max(tot) AS BIGINT) AS entropy_micro
-        |FROM j GROUP BY from_type ORDER BY from_type""".stripMargin,
-    // bigram pairs via list_transform; minCount prefix gate; ties
-    // lexicographic
-    "q268_autocomplete" ->
-      """WITH w AS (SELECT list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                              x -> x <> '') AS words
-        |           FROM documents),
-        |bi0 AS (SELECT unnest(list_transform(range(1, len(words)),
-        |                 i -> words[i] || chr(1) || words[i+1])) AS pw
-        |        FROM w WHERE len(words) >= 2),
-        |bi AS (SELECT split_part(pw, chr(1), 1) AS prefix,
-        |              split_part(pw, chr(1), 2) AS next_word
-        |       FROM bi0),
-        |cnt AS (SELECT prefix, next_word, CAST(count(*) AS BIGINT) AS n
-        |        FROM bi GROUP BY 1, 2),
-        |el AS (SELECT prefix FROM cnt GROUP BY prefix HAVING sum(n) >= 10),
-        |r AS (SELECT c.prefix, c.next_word, c.n,
-        |             CAST(row_number() OVER (PARTITION BY c.prefix
-        |               ORDER BY c.n DESC, c.next_word) AS BIGINT) AS rank
-        |      FROM cnt c JOIN el USING (prefix))
-        |SELECT prefix, rank, next_word, n FROM r WHERE rank <= 3
-        |ORDER BY prefix, rank""".stripMargin,
-    // Monday-anchored weeks on both engines; first week drops
-    "q269_wow_change" ->
-      """WITH wk AS (SELECT event_type AS key,
-        |                   CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS week,
-        |                   CAST(count(*) AS BIGINT) AS n
-        |            FROM events
-        |            WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |            GROUP BY 1, 2),
-        |l AS (SELECT key, week, n,
-        |             lag(n) OVER (PARTITION BY key ORDER BY week) AS prev_n
-        |      FROM wk)
-        |SELECT key, week, n, prev_n,
-        |       CAST(floor((n - prev_n) * 10000.0 / prev_n + 0.5) AS BIGINT)
-        |         AS wow_bp
-        |FROM l WHERE prev_n IS NOT NULL ORDER BY key, week""".stripMargin,
-    // day-grid cumsum per brand
-    "q270_cumulative_shipments" ->
-      """WITH g AS (SELECT p.p_brand, l.l_shipdate AS d,
-        |                  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-        |           FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        |           GROUP BY 1, 2)
-        |SELECT p_brand, d, qty,
-        |       CAST(sum(qty) OVER (PARTITION BY p_brand ORDER BY d) AS BIGINT)
-        |         AS cum_qty
-        |FROM g ORDER BY p_brand, d""".stripMargin,
-    // the oracle states the SEMANTICS directly (plain inequality join);
-    // the engine's eps-bucket plan must reproduce it exactly
-    "q265_band_join" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type,
-        |                   CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vt
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)),
-        |p AS (SELECT event_id AS purchase_id, user_id, vt FROM ev
-        |      WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id AS click_id, user_id, vt AS cvt FROM ev
-        |      WHERE event_type = 'click')
-        |SELECT p.purchase_id, c.click_id,
-        |       abs(p.vt - c.cvt) AS val_diff_micro
-        |FROM p JOIN c USING (user_id)
-        |WHERE abs(p.vt - c.cvt) <= 5000000
-        |ORDER BY p.purchase_id, c.click_id""".stripMargin,
-    // exact >> decay; age vs the corpus max day
-    "q266_time_decay" ->
-      """WITH mx AS (SELECT max(CAST(ts AS DATE)) AS mxd FROM events
-        |            WHERE ts IS NOT NULL),
-        |e AS (SELECT event_type AS key,
-        |             date_diff('day', CAST(ts AS DATE), mxd) AS age
-        |      FROM events CROSS JOIN mx
-        |      WHERE event_type IS NOT NULL AND ts IS NOT NULL)
-        |SELECT key, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(1000000 >> least(age // 7, 30)) AS BIGINT)
-        |         AS decayed_micro
-        |FROM e GROUP BY key ORDER BY key""".stripMargin,
-    // (source × distinct token) relation; floor-bp coefficient
-    "q267_vocab_overlap" ->
-      """WITH v AS (SELECT DISTINCT source,
-        |             unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                                x -> x <> '')) AS tok
-        |           FROM documents),
-        |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS nv FROM v GROUP BY 1),
-        |i AS (SELECT a.source AS source_a, b.source AS source_b,
-        |             CAST(count(*) AS BIGINT) AS n_common
-        |      FROM v a JOIN v b ON a.tok = b.tok AND a.source < b.source
-        |      GROUP BY 1, 2)
-        |SELECT i.source_a, i.source_b, sa.nv AS nv_a, sb.nv AS nv_b,
-        |       i.n_common,
-        |       CAST((i.n_common * 10000) // least(sa.nv, sb.nv) AS BIGINT)
-        |         AS overlap_bp
-        |FROM i JOIN sz sa ON sa.source = i.source_a
-        |       JOIN sz sb ON sb.source = i.source_b
-        |ORDER BY i.source_a, i.source_b""".stripMargin,
-    // standard-SQL bag semantics on both engines
-    "q263_bag_setops" ->
-      """WITH a AS (SELECT CAST(l_quantity AS BIGINT) AS qty FROM lineitem
-        |           WHERE l_suppkey % 2 = 0),
-        |b AS (SELECT CAST(l_quantity AS BIGINT) AS qty FROM lineitem
-        |      WHERE l_suppkey % 2 = 1),
-        |i AS (SELECT 'intersect_all' AS op, qty FROM
-        |        (SELECT qty FROM a INTERSECT ALL SELECT qty FROM b) t),
-        |e AS (SELECT 'except_all' AS op, qty FROM
-        |        (SELECT qty FROM a EXCEPT ALL SELECT qty FROM b) t),
-        |u AS (SELECT * FROM i UNION ALL SELECT * FROM e)
-        |SELECT op, qty, CAST(count(*) AS BIGINT) AS n
-        |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // same double expression shape, left-associative, z² = 1.96*1.96
-    "q264_wilson_bounds" ->
-      """WITH e AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(CASE WHEN value > 100 THEN 1 ELSE 0 END)
-        |                       AS BIGINT) AS x
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
-        |           GROUP BY 1)
-        |SELECT event_type, n, x,
-        |       round((x / n + 1.96*1.96 / (2.0 * n) -
-        |              1.96 * sqrt(x / n * (1.0 - x / n) / n +
-        |                          1.96*1.96 / (4.0 * n * n))) /
-        |             (1.0 + 1.96*1.96 / n), 6) AS wilson_lb
-        |FROM e ORDER BY event_type""".stripMargin,
-    // fixed 11-bin grid, add-one smoothing over the FULL grid, floored
-    // micro shares, round-half-away micro-nat logs on both engines
-    "q259_psi_drift" ->
-      s"""WITH $QualitySql,
-        |h AS (SELECT d.source, d.doc_id % 2 AS g,
-        |             CAST(floor(q.quality * 10) AS BIGINT) AS bin
-        |      FROM q JOIN documents d USING (doc_id)),
-        |cnt AS (SELECT source, g, bin, count(*) AS c FROM h GROUP BY 1, 2, 3),
-        |grid AS (SELECT s.source, gg.g, b.bin
-        |         FROM (SELECT DISTINCT source FROM documents) s
-        |         CROSS JOIN (SELECT unnest([0, 1]) AS g) gg
-        |         CROSS JOIN (SELECT unnest(range(0, 11)) AS bin) b),
-        |f AS (SELECT grid.source, grid.g, grid.bin,
-        |             coalesce(cnt.c, 0) + 1 AS c1
-        |      FROM grid LEFT JOIN cnt ON cnt.source = grid.source
-        |        AND cnt.g = grid.g AND cnt.bin = grid.bin),
-        |tot AS (SELECT source, g, CAST(sum(c1) AS BIGINT) AS n1
-        |        FROM f GROUP BY 1, 2),
-        |sh AS (SELECT f.source, f.g, f.bin, (f.c1 * 1000000) // t.n1 AS p,
-        |              f.c1, t.n1
-        |       FROM f JOIN tot t ON t.source = f.source AND t.g = f.g),
-        |t2 AS (SELECT a.source, a.n1 AS na, b.n1 AS nb,
-        |              (a.p - b.p) * CAST(round(ln(CAST(a.c1 * b.n1 AS DOUBLE)
-        |                / (b.c1 * a.n1)) * 1000000, 0) AS BIGINT) AS term
-        |       FROM sh a JOIN sh b ON b.source = a.source
-        |         AND b.bin = a.bin AND a.g = 0 AND b.g = 1)
-        |SELECT source, CAST(max(na) - 11 AS BIGINT) AS n_a,
-        |       CAST(max(nb) - 11 AS BIGINT) AS n_b,
-        |       CAST(greatest(sum(term), 0) // 1000000 AS BIGINT) AS psi_micro
-        |FROM t2 GROUP BY source ORDER BY source""".stripMargin,
-    // latest change per key wins (ts, id order); delete drops; status
-    // partitions the survivors
-    "q260_cdc_apply" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |                   event_type, round(value, 4) AS v
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |base AS (SELECT user_id, v AS bval FROM (
-        |           SELECT user_id, v, row_number() OVER (PARTITION BY user_id
-        |             ORDER BY ts DESC, event_id DESC, v DESC) AS rn
-        |           FROM ev WHERE event_type = 'signup') t WHERE rn = 1),
-        |ch AS (SELECT user_id,
-        |              CASE WHEN event_type = 'error' THEN 'delete'
-        |                   ELSE 'upsert' END AS op, v,
-        |              row_number() OVER (PARTITION BY user_id
-        |                ORDER BY ts DESC, event_id DESC) AS rn
-        |       FROM ev WHERE event_type IN ('purchase', 'error')),
-        |l AS (SELECT user_id, op, v FROM ch WHERE rn = 1),
-        |m AS (SELECT coalesce(b.user_id, l.user_id) AS user_id, b.bval,
-        |             l.op, l.v, b.user_id IS NOT NULL AS inb
-        |      FROM base b FULL OUTER JOIN l ON l.user_id = b.user_id)
-        |SELECT user_id,
-        |       CASE WHEN op IS NOT NULL THEN v ELSE bval END AS value,
-        |       CASE WHEN op IS NULL THEN 'kept'
-        |            WHEN inb THEN 'updated' ELSE 'inserted' END AS status
-        |FROM m WHERE op IS NULL OR op <> 'delete'
-        |ORDER BY user_id""".stripMargin,
-    // distinct (entity, block) first; blocks sized [2, 50]; pairs a < b
-    "q261_entity_blocks" ->
-      """WITH eb AS (SELECT DISTINCT user_id AS e,
-        |              concat_ws(chr(1), CAST(CAST(ts AS DATE) AS VARCHAR),
-        |                        event_type,
-        |                        CAST(CAST(floor(value / 100) AS BIGINT) AS VARCHAR))
-        |                AS b
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |              AND value IS NOT NULL AND NOT isnan(value) AND event_type IS NOT NULL),
-        |sz AS (SELECT b FROM eb GROUP BY b
-        |       HAVING count(*) BETWEEN 2 AND 50),
-        |sv AS (SELECT eb.e, eb.b FROM eb JOIN sz USING (b)),
-        |p AS (SELECT x.e AS entity_a, y.e AS entity_b,
-        |             CAST(count(*) AS BIGINT) AS n_shared
-        |      FROM sv x JOIN sv y ON y.b = x.b AND x.e < y.e GROUP BY 1, 2)
-        |SELECT * FROM p WHERE n_shared >= 2 ORDER BY 1, 2""".stripMargin,
-    // DuckDB native ASOF + the same row-local 120 s staleness gate
-    "q262_asof_tolerance" ->
-      s"""WITH $CandleCte
-         |SELECT ev.event_id, ev.symbol, epoch_us(ev.ts) AS ts_us,
-         |       CASE WHEN c.window_start IS NOT NULL
-         |              AND epoch_us(ev.ts) - epoch_us(c.window_start) <= 120000000
-         |            THEN strftime(c.window_start, '%Y-%m-%d %H:%M:%S')
-         |       END AS window_start,
-         |       CASE WHEN c.window_start IS NOT NULL
-         |              AND epoch_us(ev.ts) - epoch_us(c.window_start) <= 120000000
-         |            THEN c.close END AS close
-         |FROM ev ASOF LEFT JOIN candles c
-         |  ON ev.symbol = c.symbol AND ev.ts >= c.window_start
-         |WHERE ev.ts IS NOT NULL
-         |ORDER BY ev.event_id""".stripMargin,
-    // exact integer micro lifts over vocab-dim aggregates; rank ties
-    // lexicographic; minCount 20 gates hapax noise
-    "q255_signature_terms" ->
-      """WITH tok AS (SELECT source,
-        |               unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                                  x -> x <> '')) AS token
-        |             FROM documents),
-        |st AS (SELECT source, token, CAST(count(*) AS BIGINT) AS c
-        |       FROM tok GROUP BY 1, 2),
-        |ns AS (SELECT source, CAST(sum(c) AS BIGINT) AS ns FROM st GROUP BY 1),
-        |gt AS (SELECT token, CAST(sum(c) AS BIGINT) AS cg FROM st GROUP BY 1),
-        |ng AS (SELECT CAST(sum(cg) AS BIGINT) AS ng FROM gt),
-        |lf AS (SELECT st.source, st.token, st.c,
-        |              CAST((CAST(st.c AS HUGEINT) * ng.ng * 1000000)
-        |                   // (CAST(ns.ns AS HUGEINT) * gt.cg) AS BIGINT)
-        |                AS lift_micro
-        |       FROM st JOIN gt USING (token) JOIN ns USING (source)
-        |       CROSS JOIN ng WHERE st.c >= 20),
-        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source
-        |        ORDER BY lift_micro DESC, token) AS BIGINT) AS rank FROM lf)
-        |SELECT source, rank, token, c, lift_micro FROM r WHERE rank <= 3
-        |ORDER BY source, rank""".stripMargin,
-    // heavy = share > 1/32; salt = exact ceil(c·32/n)
-    "q256_salt_advisor" ->
-      """WITH c AS (SELECT CAST(event_type AS VARCHAR) AS key,
-        |                  CAST(count(*) AS BIGINT) AS n_rows
-        |           FROM events WHERE event_type IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS n FROM c)
-        |SELECT key, n_rows,
-        |       CAST(floor(n_rows * 10000.0 / n + 0.5) AS BIGINT) AS share_bp,
-        |       CAST((n_rows * 32 + n - 1) // n AS BIGINT) AS salt_factor
-        |FROM c CROSS JOIN t WHERE n_rows * 32 > n ORDER BY key""".stripMargin,
-    // per-group floored micro sums of squares; dow labels differ across
-    // engines but partition the days identically (grouping key only)
-    "q257_dow_r2" ->
-      """WITH d AS (SELECT event_type AS key, CAST(ts AS DATE) AS d2,
-        |                  CAST(count(*) AS BIGINT) AS c
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |           GROUP BY 1, 2),
-        |g AS (SELECT key, dayofweek(d2) AS g2, CAST(sum(c) AS BIGINT) AS sg,
-        |             CAST(count(*) AS BIGINT) AS ng
-        |      FROM d GROUP BY 1, 2),
-        |sb AS (SELECT key,
-        |              sum(CAST((CAST(sg AS HUGEINT) * sg * 1000000) // ng
-        |                       AS HUGEINT)) AS ssb_raw
-        |       FROM g GROUP BY 1),
-        |k2 AS (SELECT key, CAST(count(*) AS BIGINT) AS n_days,
-        |              CAST(sum(c) AS BIGINT) AS s,
-        |              CAST(sum(c * c) AS BIGINT) AS sq
-        |       FROM d GROUP BY 1),
-        |j AS (SELECT k2.key, k2.n_days,
-        |             (CAST(k2.s AS HUGEINT) * k2.s * 1000000) // k2.n_days AS corr,
-        |             CAST(k2.sq AS HUGEINT) * 1000000 AS sqm, sb.ssb_raw
-        |      FROM k2 JOIN sb USING (key))
-        |SELECT key, n_days,
-        |       CAST(CASE WHEN sqm - corr <= 0 THEN 0
-        |            ELSE (greatest(ssb_raw - corr, 0) * 10000) // (sqm - corr)
-        |            END AS BIGINT) AS r2_bp
-        |FROM j ORDER BY key""".stripMargin,
-    // NULL quasi-id values form their own cell on both engines
-    "q258_k_anonymity" ->
-      """WITH cell AS (SELECT event_type,
-        |                     dayofweek(CAST(ts AS TIMESTAMP)) AS dow,
-        |                     hour(CAST(ts AS TIMESTAMP)) AS hr,
-        |                     CAST(count(*) AS BIGINT) AS c
-        |              FROM events WHERE ts IS NOT NULL GROUP BY 1, 2, 3),
-        |ks AS (SELECT CAST(unnest([2, 5, 10]) AS BIGINT) AS k)
-        |SELECT k, CAST(count(*) AS BIGINT) AS n_cells,
-        |       CAST(sum(CASE WHEN c < k THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_cells_below,
-        |       CAST(sum(CASE WHEN c < k THEN c ELSE 0 END) AS BIGINT)
-        |         AS n_rows_below,
-        |       CAST(floor(sum(CASE WHEN c < k THEN c ELSE 0 END) * 10000.0
-        |                  / sum(c) + 0.5) AS BIGINT) AS rows_below_bp
-        |FROM cell CROSS JOIN ks GROUP BY k ORDER BY k""".stripMargin,
-    // per candidate: one distinct-count agg; nd>1 marks a violation
-    "q251_fd_audit" ->
-      """WITH a1 AS (SELECT p_partkey, CAST(count(DISTINCT p_brand) AS BIGINT) AS nd
-        |            FROM part WHERE p_partkey IS NOT NULL GROUP BY 1),
-        |a2 AS (SELECT p_brand, CAST(count(DISTINCT p_type) AS BIGINT) AS nd
-        |       FROM part WHERE p_brand IS NOT NULL GROUP BY 1),
-        |a3 AS (SELECT p_size, CAST(count(DISTINCT p_type) AS BIGINT) AS nd
-        |       FROM part WHERE p_size IS NOT NULL GROUP BY 1),
-        |u AS (
-        |  SELECT 'partkey_brand' AS dependency, count(*) AS n_keys,
-        |         sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS n_violating,
-        |         max(nd) AS max_distinct FROM a1
-        |  UNION ALL
-        |  SELECT 'brand_type', count(*),
-        |         sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END), max(nd) FROM a2
-        |  UNION ALL
-        |  SELECT 'size_type', count(*),
-        |         sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END), max(nd) FROM a3)
-        |SELECT dependency, CAST(n_keys AS BIGINT) AS n_keys,
-        |       CAST(n_violating AS BIGINT) AS n_violating,
-        |       CAST(max_distinct AS BIGINT) AS max_distinct,
-        |       CAST(floor(n_violating * 10000.0 / n_keys + 0.5) AS BIGINT)
-        |         AS viol_bp
-        |FROM u ORDER BY dependency""".stripMargin,
-    // half-centroid cosine = sum-vector cosine; HUGEINT micro-tick sums,
-    // one final double; degenerate half → defined 0.0
-    "q252_embedding_drift" ->
-      s"""WITH $VecBaseSql,
-        |lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-        |               vec_id % 2 AS g
-        |        FROM embeddings),
-        |tick AS (SELECT l.label, l.g, c.i,
-        |                CAST(floor(c.x * 1000000 + 0.5) AS BIGINT) AS t
-        |         FROM comp c JOIN lab l USING (vec_id)),
-        |s AS (SELECT label, g, i, CAST(sum(t) AS HUGEINT) AS s2
-        |      FROM tick GROUP BY 1, 2, 3),
-        |cnt AS (SELECT label,
-        |               CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |               CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-        |        FROM lab GROUP BY 1),
-        |p AS (SELECT a.label, sum(a.s2 * b.s2) AS dp,
-        |             sum(a.s2 * a.s2) AS na2, sum(b.s2 * b.s2) AS nb2
-        |      FROM s a JOIN s b ON b.label = a.label AND b.i = a.i
-        |                        AND a.g = 0 AND b.g = 1
-        |      GROUP BY 1)
-        |SELECT c.label, c.n_a, c.n_b,
-        |       CASE WHEN p.na2 IS NULL OR p.na2 = 0 OR p.nb2 = 0 THEN 0.0
-        |            ELSE round(CAST(p.dp AS DOUBLE) /
-        |                   (sqrt(CAST(p.na2 AS DOUBLE)) *
-        |                    sqrt(CAST(p.nb2 AS DOUBLE))), 6) END AS drift_cosine
-        |FROM cnt c LEFT JOIN p USING (label) ORDER BY label""".stripMargin,
-    // rank-1 by (count DESC, value ASC) ≡ the engine's struct extreme
-    "q253_modal_hour" ->
-      """WITH h AS (SELECT event_type AS key,
-        |                  CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS v,
-        |                  CAST(count(*) AS BIGINT) AS n
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |           GROUP BY 1, 2),
-        |r AS (SELECT key, v, n, row_number() OVER (PARTITION BY key
-        |        ORDER BY n DESC, v ASC) AS rn FROM h)
-        |SELECT key, v AS modal_value, n FROM r WHERE rn = 1
-        |ORDER BY key""".stripMargin,
-    // zero deltas dropped, runs at sign changes, E[R] exact micro
-    "q254_runs_test" ->
-      """WITH d AS (SELECT event_type AS key, CAST(ts AS DATE) AS d2,
-        |                  CAST(count(*) AS BIGINT) AS c
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |           GROUP BY 1, 2),
-        |dl AS (SELECT key, d2,
-        |              c - lag(c) OVER (PARTITION BY key ORDER BY d2) AS delta
-        |       FROM d),
-        |sg AS (SELECT key, d2, CASE WHEN delta > 0 THEN 1 ELSE -1 END AS sign
-        |       FROM dl WHERE delta IS NOT NULL AND delta <> 0),
-        |rn AS (SELECT key, sign,
-        |              CASE WHEN lag(sign) OVER w IS NULL
-        |                     OR lag(sign) OVER w <> sign THEN 1 ELSE 0 END AS run0
-        |       FROM sg WINDOW w AS (PARTITION BY key ORDER BY d2))
-        |SELECT key,
-        |       CAST(sum(CASE WHEN sign = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_plus,
-        |       CAST(sum(CASE WHEN sign = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_minus,
-        |       CAST(sum(run0) AS BIGINT) AS n_runs,
-        |       CAST(1000000 + (2000000 * sum(CASE WHEN sign = 1 THEN 1 ELSE 0 END)
-        |              * sum(CASE WHEN sign = -1 THEN 1 ELSE 0 END))
-        |            // (sum(CASE WHEN sign = 1 THEN 1 ELSE 0 END)
-        |               + sum(CASE WHEN sign = -1 THEN 1 ELSE 0 END)) AS BIGINT)
-        |         AS expected_runs_micro
-        |FROM rn GROUP BY key ORDER BY key""".stripMargin,
-    // type-1 cuts at d/10 per source AND globally on the same 4dp grid
-    "q247_quantile_norm" ->
-      s"""WITH $QualitySql,
-        |cells AS (SELECT d.source, q.quality, CAST(count(*) AS BIGINT) AS cnt
-        |          FROM q JOIN documents d USING (doc_id)
-        |          WHERE q.quality IS NOT NULL GROUP BY 1, 2),
-        |sl AS (SELECT source, quality,
-        |              sum(cnt) OVER (PARTITION BY source ORDER BY quality
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |              sum(cnt) OVER (PARTITION BY source) AS n
-        |       FROM cells),
-        |ds AS (SELECT CAST(unnest(range(1, 10)) AS BIGINT) AS decile),
-        |sc2 AS (SELECT source, decile,
-        |               min(CASE WHEN cum * 10 >= n * decile THEN quality END)
-        |                 AS source_cut
-        |        FROM sl CROSS JOIN ds GROUP BY 1, 2),
-        |gcells AS (SELECT quality, CAST(sum(cnt) AS BIGINT) AS cnt
-        |           FROM cells GROUP BY 1),
-        |gl AS (SELECT quality,
-        |              sum(cnt) OVER (ORDER BY quality
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |              sum(cnt) OVER () AS n
-        |       FROM gcells),
-        |gc AS (SELECT decile,
-        |              min(CASE WHEN cum * 10 >= n * decile THEN quality END)
-        |                AS global_cut
-        |       FROM gl CROSS JOIN ds GROUP BY 1)
-        |SELECT s.source, s.decile, s.source_cut, g.global_cut
-        |FROM sc2 s JOIN gc g USING (decile)
-        |ORDER BY s.source, s.decile""".stripMargin,
-    // first-value-seeded dual-EMA recursion in integer ticks; exact
-    // odd-denominator HALF_UP via the ×2 numerator trick
-    "q250_macd" ->
-      s"""WITH RECURSIVE $CandleCte,
-         |sc AS (SELECT symbol, window_start,
-         |              CAST(round(close * 10000) AS BIGINT) AS ct,
-         |              row_number() OVER (PARTITION BY symbol
-         |                ORDER BY window_start) AS rn
-         |       FROM candles),
-         |ema AS (
-         |  SELECT symbol, window_start, rn, ct, ct AS e12, ct AS e26
-         |  FROM sc WHERE rn = 1
-         |  UNION ALL
-         |  SELECT t.symbol, t.window_start, t.rn, t.ct,
-         |         (2 * (2 * t.ct + 11 * a.e12) + 13) // 26 AS e12,
-         |         (2 * (2 * t.ct + 25 * a.e26) + 27) // 54 AS e26
-         |  FROM ema a JOIN sc t ON t.symbol = a.symbol AND t.rn = a.rn + 1)
-         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-         |       symbol, ct AS close_ticks, e12 AS ema_fast_ticks,
-         |       e26 AS ema_slow_ticks, e12 - e26 AS macd_ticks
-         |FROM ema ORDER BY symbol, 1""".stripMargin,
-    // GROUPING(a,b) bit convention matches Spark grouping_id (q144)
-    "q249_grouping_sets" ->
-      """SELECT coalesce(o_orderstatus, '<all>') AS status,
-        |       coalesce(o_orderpriority, '<all>') AS priority,
-        |       CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS lvl,
-        |       CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |         AS revenue_cents
-        |FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY 3, 1, 2""".stripMargin,
-    // fused ranking from the shared BM25 chain + the quality CTE:
-    // integer 10^9 // (60 + rank) terms, absent ranks → 0
-    "q204_rrf_fusion" ->
-      s"""WITH $Bm25Sql,
-        |$QualitySql,
-        |lex AS (SELECT doc_id, rank AS lex_rank FROM bmtop WHERE rank <= 50),
-        |qrank AS (SELECT doc_id,
-        |                 CAST(row_number() OVER (
-        |                   ORDER BY CAST(floor(quality * 10000 + 0.5) AS BIGINT) DESC,
-        |                            doc_id ASC) AS BIGINT) AS quality_rank
-        |          FROM q),
-        |qtop AS (SELECT doc_id, quality_rank FROM qrank WHERE quality_rank <= 50),
-        |f AS (SELECT coalesce(l.doc_id, t.doc_id) AS doc_id,
-        |             CAST(coalesce(1000000000 // (60 + l.lex_rank), 0)
-        |                + coalesce(1000000000 // (60 + t.quality_rank), 0) AS BIGINT)
-        |               AS rrf_ticks,
-        |             CAST(coalesce(l.lex_rank, 0) AS BIGINT) AS lex_rank,
-        |             CAST(coalesce(t.quality_rank, 0) AS BIGINT) AS quality_rank
-        |      FROM lex l FULL OUTER JOIN qtop t ON t.doc_id = l.doc_id),
-        |r AS (SELECT *, CAST(row_number() OVER (ORDER BY rrf_ticks DESC, doc_id ASC)
-        |                AS BIGINT) AS rank
-        |      FROM f)
-        |SELECT rank, doc_id, rrf_ticks, lex_rank, quality_rank
-        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // token-mass ranking with cumulative floor-bp shares
-    "q198_source_concentration" ->
-      """WITH s AS (SELECT source,
-        |                  CAST(sum(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |                    x -> x <> ''))) AS BIGINT) AS n_tokens
-        |           FROM documents GROUP BY 1),
-        |r AS (SELECT source, n_tokens,
-        |             CAST(row_number() OVER (ORDER BY n_tokens DESC, source ASC)
-        |               AS BIGINT) AS rank,
-        |             CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source ASC
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |               AS cum_tokens,
-        |             CAST(sum(n_tokens) OVER () AS BIGINT) AS tot
-        |      FROM s)
-        |SELECT rank, source, n_tokens, cum_tokens,
-        |       CAST((cum_tokens * 10000) // tot AS BIGINT) AS cum_share_bp
-        |FROM r ORDER BY rank""".stripMargin,
-    // exact micro-tick centroids, 6dp cosine BEFORE the argmax rank,
-    // zero norms → 0.0
-    "q199_centroid_accuracy" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, embedding
-        |           FROM embeddings),
-        |ccomp AS (SELECT label AS clabel,
-        |                 unnest(range(1, len(embedding) + 1)) AS i,
-        |                 unnest(list_transform(embedding,
-        |                   v -> CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5)
-        |                     AS BIGINT))) AS t
-        |          FROM e),
-        |cent AS (SELECT clabel, i,
-        |                CAST(sum(t) AS DOUBLE) / count(*) / 1000000.0 AS m
-        |         FROM ccomp GROUP BY 1, 2),
-        |cn AS (SELECT clabel, sqrt(sum(m * m)) AS nc FROM cent GROUP BY 1),
-        |vcomp AS (SELECT vec_id, label AS true_label,
-        |                 unnest(range(1, len(embedding) + 1)) AS i,
-        |                 unnest(list_transform(embedding,
-        |                   v -> CAST(v AS DOUBLE))) AS x
-        |          FROM e),
-        |vn AS (SELECT vec_id, sqrt(sum(x * x)) AS nv FROM vcomp GROUP BY 1),
-        |dp AS (SELECT v.vec_id, v.true_label, c.clabel, sum(v.x * c.m) AS dp
-        |       FROM vcomp v JOIN cent c ON c.i = v.i GROUP BY 1, 2, 3),
-        |sc AS (SELECT dp.vec_id, dp.true_label, dp.clabel,
-        |              CASE WHEN vn.nv * cn.nc = 0 THEN 0.0
-        |                   ELSE round(dp.dp / (vn.nv * cn.nc), 6) END AS cos
-        |       FROM dp JOIN vn ON vn.vec_id = dp.vec_id
-        |               JOIN cn ON cn.clabel = dp.clabel),
-        |pred AS (SELECT vec_id, true_label, clabel,
-        |                row_number() OVER (PARTITION BY vec_id
-        |                  ORDER BY cos DESC, clabel ASC) AS rk
-        |         FROM sc)
-        |SELECT true_label AS label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |       CAST(sum(CASE WHEN clabel = true_label THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_correct,
-        |       CAST((sum(CASE WHEN clabel = true_label THEN 1 ELSE 0 END) * 10000)
-        |            // count(*) AS BIGINT) AS acc_bp
-        |FROM pred WHERE rk = 1 GROUP BY 1 ORDER BY label""".stripMargin,
-    // six already-gated expressions folded to one (metric, value) table
-    "q200_corpus_health" ->
-      s"""WITH $QualitySql,
-        |b AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |             CAST(sum(len(list_filter(regexp_split_to_array(text, '\\s+'),
-        |               x -> x <> ''))) AS BIGINT) AS n_tokens,
-        |             CAST(sum(CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) < 90
-        |                           THEN 1 ELSE 0 END) AS BIGINT) AS train_docs
-        |      FROM documents),
-        |v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vocab_size
-        |      FROM (SELECT unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'),
-        |              x -> x <> '')) AS tok FROM documents) t),
-        |dg AS (SELECT CAST(count(*) AS BIGINT) AS exact_dup_groups
-        |       FROM (SELECT md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+', ' ', 'g'))) AS f
-        |             FROM documents GROUP BY 1 HAVING count(*) > 1) g0),
-        |mq AS (SELECT CAST((2 * sum(CAST(floor(quality * 10000 + 0.5) AS BIGINT))
-        |               + count(*)) // (2 * count(*)) AS BIGINT)
-        |               AS mean_quality_ticks
-        |       FROM q)
-        |SELECT 'exact_dup_groups' AS metric,
-        |       (SELECT exact_dup_groups FROM dg) AS value
-        |UNION ALL SELECT 'mean_quality_ticks', (SELECT mean_quality_ticks FROM mq)
-        |UNION ALL SELECT 'n_docs', (SELECT n_docs FROM b)
-        |UNION ALL SELECT 'n_tokens', (SELECT n_tokens FROM b)
-        |UNION ALL SELECT 'train_docs', (SELECT train_docs FROM b)
-        |UNION ALL SELECT 'vocab_size', (SELECT vocab_size FROM v)
-        |ORDER BY metric""".stripMargin,
-    // the charEntropy micro-nat discipline over the global vocab
-    "q195_vocab_entropy" ->
-      """WITH t AS (SELECT unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                  x -> x <> '')) AS tok
-        |           FROM documents),
-        |c AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM t GROUP BY 1),
-        |w AS (SELECT c, CAST(sum(c) OVER () AS BIGINT) AS n FROM c),
-        |tm AS (SELECT n,
-        |              CAST(floor((c / CAST(n AS DOUBLE)) * ln(CAST(n AS DOUBLE) / c)
-        |                * 1000000 + 0.5) AS BIGINT) AS t
-        |       FROM w),
-        |a AS (SELECT CAST(max(n) AS BIGINT) AS n_tokens,
-        |             CAST(count(*) AS BIGINT) AS vocab_size,
-        |             CAST(sum(t) AS BIGINT) AS s
-        |      FROM tm)
-        |SELECT n_tokens, vocab_size, s / 1000000.0 AS entropy,
-        |       round(exp(s / 1000000.0), 4) AS eff_vocab
-        |FROM a""".stripMargin,
-    // per-FK row count + left-anti orphan count
-    "q196_fk_integrity" ->
-      """SELECT 'customer.nationkey' AS fk,
-        |       CAST((SELECT count(*) FROM customer) AS BIGINT) AS n_rows,
-        |       CAST((SELECT count(*) FROM customer c LEFT JOIN nation n
-        |             ON n.n_nationkey = c.c_nationkey
-        |             WHERE n.n_nationkey IS NULL) AS BIGINT) AS n_orphans
-        |UNION ALL
-        |SELECT 'lineitem.orderkey',
-        |       CAST((SELECT count(*) FROM lineitem) AS BIGINT),
-        |       CAST((SELECT count(*) FROM lineitem l LEFT JOIN orders o
-        |             ON o.o_orderkey = l.l_orderkey
-        |             WHERE o.o_orderkey IS NULL) AS BIGINT)
-        |UNION ALL
-        |SELECT 'nation.regionkey',
-        |       CAST((SELECT count(*) FROM nation) AS BIGINT),
-        |       CAST((SELECT count(*) FROM nation n LEFT JOIN region r
-        |             ON r.r_regionkey = n.n_regionkey
-        |             WHERE r.r_regionkey IS NULL) AS BIGINT)
-        |UNION ALL
-        |SELECT 'orders.custkey',
-        |       CAST((SELECT count(*) FROM orders) AS BIGINT),
-        |       CAST((SELECT count(*) FROM orders o LEFT JOIN customer c
-        |             ON c.c_custkey = o.o_custkey
-        |             WHERE c.c_custkey IS NULL) AS BIGINT)
-        |UNION ALL
-        |SELECT 'supplier.nationkey',
-        |       CAST((SELECT count(*) FROM supplier) AS BIGINT),
-        |       CAST((SELECT count(*) FROM supplier s LEFT JOIN nation n
-        |             ON n.n_nationkey = s.s_nationkey
-        |             WHERE n.n_nationkey IS NULL) AS BIGINT)
-        |ORDER BY fk""".stripMargin,
-    // the gaps-and-islands anchor (day − rn), then the histogram
-    "q197_streaks" ->
-      """WITH d AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS dy
-        |           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |r AS (SELECT u, dy, row_number() OVER (PARTITION BY u ORDER BY dy) AS rn
-        |      FROM d),
-        |i AS (SELECT u, dy - CAST(rn AS INT) AS anchor FROM r),
-        |l AS (SELECT u, anchor, CAST(count(*) AS BIGINT) AS len
-        |      FROM i GROUP BY 1, 2),
-        |m AS (SELECT u, CAST(max(len) AS BIGINT) AS streak_len FROM l GROUP BY 1)
-        |SELECT streak_len, CAST(count(*) AS BIGINT) AS n_users
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the quantileBuckets cut arithmetic per candidate key, zone
-    // min/max of the probe, floor-bp mean normalized span
-    "q193_sortkey_advisor" ->
-      """WITH js AS (SELECT unnest(range(1, 16)) AS j),
-        |g1 AS (SELECT n_chars AS kv, CAST(count(*) AS BIGINT) AS c
-        |       FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |w1 AS (SELECT kv, c,
-        |              CAST(sum(c) OVER (ORDER BY kv ROWS BETWEEN UNBOUNDED
-        |                PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |              CAST(sum(c) OVER () AS BIGINT) AS n FROM g1),
-        |cut1 AS (SELECT j, min(CASE WHEN cum * 16 >= n * j THEN kv END) AS cut
-        |         FROM w1 CROSS JOIN js GROUP BY j),
-        |b1 AS (SELECT d.n_chars AS p,
-        |              1 + (SELECT count(*) FROM cut1 WHERE cut1.cut < d.n_chars)
-        |                AS b
-        |       FROM documents d WHERE d.n_chars IS NOT NULL),
-        |z1 AS (SELECT b, min(p) AS lo, max(p) AS hi FROM b1 GROUP BY 1),
-        |s1 AS (SELECT CAST(count(*) AS BIGINT) AS nz,
-        |              CAST(sum(hi - lo) AS BIGINT) AS sp,
-        |              CAST(max(hi) AS BIGINT) AS gx, CAST(min(lo) AS BIGINT) AS gn
-        |       FROM z1),
-        |g2 AS (SELECT doc_id AS kv, CAST(count(*) AS BIGINT) AS c
-        |       FROM documents GROUP BY 1),
-        |w2 AS (SELECT kv, c,
-        |              CAST(sum(c) OVER (ORDER BY kv ROWS BETWEEN UNBOUNDED
-        |                PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |              CAST(sum(c) OVER () AS BIGINT) AS n FROM g2),
-        |cut2 AS (SELECT j, min(CASE WHEN cum * 16 >= n * j THEN kv END) AS cut
-        |         FROM w2 CROSS JOIN js GROUP BY j),
-        |b2 AS (SELECT d.n_chars AS p,
-        |              1 + (SELECT count(*) FROM cut2 WHERE cut2.cut < d.doc_id)
-        |                AS b
-        |       FROM documents d WHERE d.n_chars IS NOT NULL),
-        |z2 AS (SELECT b, min(p) AS lo, max(p) AS hi FROM b2 GROUP BY 1),
-        |s2 AS (SELECT CAST(count(*) AS BIGINT) AS nz,
-        |              CAST(sum(hi - lo) AS BIGINT) AS sp,
-        |              CAST(max(hi) AS BIGINT) AS gx, CAST(min(lo) AS BIGINT) AS gn
-        |       FROM z2)
-        |SELECT 'doc_id' AS sort_key, nz AS n_zones,
-        |       CASE WHEN gx = gn THEN 0
-        |            ELSE CAST((sp * 10000) // (nz * (gx - gn)) AS BIGINT)
-        |       END AS avg_span_bp
-        |FROM s2
-        |UNION ALL
-        |SELECT 'n_chars', nz,
-        |       CASE WHEN gx = gn THEN 0
-        |            ELSE CAST((sp * 10000) // (nz * (gx - gn)) AS BIGINT) END
-        |FROM s1
-        |ORDER BY sort_key""".stripMargin,
-    // (size × n_sources) histogram over the shared label chain
-    "q194_cluster_source_mix" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-        |cs AS (SELECT lab.cluster_id, CAST(count(*) AS BIGINT) AS size,
-        |              CAST(count(DISTINCT d.source) AS BIGINT) AS n_sources
-        |       FROM lab JOIN documents d ON d.doc_id = lab.doc_id
-        |       GROUP BY 1)
-        |SELECT size, n_sources, CAST(count(*) AS BIGINT) AS n_clusters
-        |FROM cs WHERE size > 1
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // quantileBuckets semantics replayed: integer-ceil cuts, bucket =
-    // 1 + #cuts-below, then the 10-row descending cumulative dim
-    "q191_selection_curve" ->
-      s"""WITH $QualitySql,
-        |d AS (SELECT q.doc_id,
-        |             CAST(floor(q.quality * 10000 + 0.5) AS BIGINT) AS qt,
-        |             CAST(len(list_filter(regexp_split_to_array(doc.text, '\\s+'),
-        |               x -> x <> '')) AS BIGINT) AS ntok
-        |      FROM q JOIN documents doc ON doc.doc_id = q.doc_id),
-        |g AS (SELECT qt AS v, CAST(count(*) AS BIGINT) AS c FROM d
-        |      WHERE qt IS NOT NULL GROUP BY 1),
-        |w AS (SELECT v, c,
-        |             CAST(sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |               PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |             CAST(sum(c) OVER () AS BIGINT) AS n FROM g),
-        |cuts AS (SELECT j, min(CASE WHEN cum * 10 >= n * j THEN v END) AS cut
-        |         FROM w CROSS JOIN (SELECT unnest(range(1, 10)) AS j) js
-        |         GROUP BY j),
-        |b AS (SELECT d.doc_id, d.ntok,
-        |             1 + (SELECT count(*) FROM cuts WHERE cuts.cut < d.qt)
-        |               AS bucket
-        |      FROM d),
-        |s AS (SELECT CAST(bucket AS INT) AS bucket,
-        |             CAST(count(*) AS BIGINT) AS n_docs,
-        |             CAST(sum(ntok) AS BIGINT) AS n_tokens
-        |      FROM b GROUP BY 1),
-        |cm AS (SELECT bucket, n_docs, n_tokens,
-        |              CAST(sum(n_docs) OVER (ORDER BY bucket DESC ROWS BETWEEN
-        |                UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_docs,
-        |              CAST(sum(n_tokens) OVER (ORDER BY bucket DESC ROWS BETWEEN
-        |                UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
-        |              CAST(sum(n_docs) OVER () AS BIGINT) AS td,
-        |              CAST(sum(n_tokens) OVER () AS BIGINT) AS tt
-        |       FROM s)
-        |SELECT bucket, n_docs, n_tokens, cum_docs, cum_tokens,
-        |       CAST((cum_docs * 10000) // td AS BIGINT) AS docs_share_bp,
-        |       CAST((cum_tokens * 10000) // tt AS BIGINT) AS tokens_share_bp
-        |FROM cm ORDER BY bucket DESC""".stripMargin,
-    // the q167 chain collapsed to one precision row
-    "q192_lsh_precision" ->
-      s"""WITH RECURSIVE $LshClusterSql,
-        |t AS (SELECT doc_id,
-        |             substr(regexp_replace(text, '[^\\x00-\\x7F]', '?', 'g'),
-        |                    1, 500) AS tx
-        |      FROM documents),
-        |p AS (SELECT pr.doc_a, pr.doc_b,
-        |             CAST(levenshtein(a.tx, b.tx) AS BIGINT) AS lev,
-        |             CAST(greatest(length(a.tx), length(b.tx)) AS BIGINT) AS mx
-        |      FROM pr JOIN t a ON a.doc_id = pr.doc_a
-        |              JOIN t b ON b.doc_id = pr.doc_b),
-        |v AS (SELECT CASE WHEN mx = 0 THEN 10000
-        |                  ELSE 10000 - CAST((lev * 10000) // mx AS BIGINT)
-        |             END AS sim_bp FROM p),
-        |c AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates,
-        |             CAST(sum(CASE WHEN sim_bp >= 8000 THEN 1 ELSE 0 END) AS BIGINT)
-        |               AS n_verified
-        |      FROM v)
-        |SELECT n_candidates, coalesce(n_verified, 0) AS n_verified,
-        |       CASE WHEN n_candidates = 0 THEN 0
-        |            ELSE CAST((coalesce(n_verified, 0) * 10000) // n_candidates
-        |                      AS BIGINT) END AS precision_bp
-        |FROM c""".stripMargin,
-    // one conditional-sum pass per rule; uniqueness via count gap
-    "q188_expectations" ->
-      """WITH a AS (SELECT
-        |  CAST(sum(CASE WHEN n_chars <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_nonpositive_len,
-        |  CAST(sum(CASE WHEN lang NOT IN ('de','en','es','fr','zh')
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS v_lang_domain,
-        |  CAST(sum(CASE WHEN length(text) <> n_chars THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS v_len_consistency,
-        |  CAST(sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v_null_id,
-        |  CAST(count(*) - count(DISTINCT doc_id) AS BIGINT) AS v_dup_id
-        |  FROM documents)
-        |SELECT 'nonpositive_len' AS rule, v_nonpositive_len AS n_violations FROM a
-        |UNION ALL SELECT 'lang_domain', v_lang_domain FROM a
-        |UNION ALL SELECT 'len_consistency', v_len_consistency FROM a
-        |UNION ALL SELECT 'null_id', v_null_id FROM a
-        |UNION ALL SELECT 'dup_id', v_dup_id FROM a
-        |ORDER BY rule""".stripMargin,
-    // full (rows × cols) grid from the marginals; fixed double shape
-    "q189_chi_square" ->
-      """WITH o AS (SELECT source AS a, lang AS b, CAST(count(*) AS BIGINT) AS n
-        |           FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL
-        |           GROUP BY 1, 2),
-        |r AS (SELECT a, CAST(sum(n) AS BIGINT) AS rt FROM o GROUP BY 1),
-        |c AS (SELECT b, CAST(sum(n) AS BIGINT) AS ct FROM o GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM o),
-        |cells AS (SELECT r.a, c.b, coalesce(o.n, 0) AS n, r.rt, c.ct, t.tot
-        |          FROM r CROSS JOIN c CROSS JOIN t
-        |          LEFT JOIN o ON o.a = r.a AND o.b = c.b)
-        |SELECT round(sum((CAST(n AS DOUBLE) * tot - CAST(rt AS DOUBLE) * ct)
-        |                 * (CAST(n AS DOUBLE) * tot - CAST(rt AS DOUBLE) * ct)
-        |                 / (CAST(tot AS DOUBLE) * rt * ct)), 4) AS chi2,
-        |       CAST(count(*) AS BIGINT) AS n_cells,
-        |       CAST((count(DISTINCT a) - 1) * (count(DISTINCT b) - 1) AS BIGINT)
-        |         AS dof
-        |FROM cells""".stripMargin,
-    // keyed lag over the (type × day) grid, exact cross sums, 4dp r
-    "q190_autocorr" ->
-      """WITH d AS (SELECT event_type AS k, CAST(ts AS DATE) AS dy,
-        |                  CAST(count(*) AS BIGINT) AS y
-        |           FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |l AS (SELECT k, y, lag(y) OVER (PARTITION BY k ORDER BY dy) AS py FROM d),
-        |p AS (SELECT k, y, py FROM l WHERE py IS NOT NULL),
-        |s AS (SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(y) AS BIGINT) AS sy, CAST(sum(py) AS BIGINT) AS sp,
-        |             CAST(sum(y * py) AS HUGEINT) AS syp,
-        |             CAST(sum(y * y) AS HUGEINT) AS syy,
-        |             CAST(sum(py * py) AS HUGEINT) AS spp
-        |      FROM p GROUP BY 1)
-        |SELECT k AS event_type, n AS n_pairs,
-        |       round((n * CAST(syp AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sp AS DOUBLE))
-        |             / sqrt(greatest(1e-12,
-        |                 (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-        |                 * (n * CAST(spp AS DOUBLE) - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE)))),
-        |             4) AS r1
-        |FROM s ORDER BY event_type""".stripMargin,
-    // first-view → first-purchase with an interval click check
-    "q185_exclusion_funnel" ->
-      """WITH ev AS (SELECT user_id AS u, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |                  event_type AS t
-        |           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |tv AS (SELECT u, min(us) AS tv FROM ev WHERE t = 'view' GROUP BY 1),
-        |tp AS (SELECT ev.u, tv.tv, min(ev.us) AS tp
-        |       FROM ev JOIN tv ON tv.u = ev.u
-        |       WHERE ev.t = 'purchase' AND ev.us >= tv.tv GROUP BY 1, 2),
-        |via AS (SELECT DISTINCT tp.u
-        |        FROM tp JOIN ev ON ev.u = tp.u AND ev.t = 'click'
-        |                       AND ev.us >= tp.tv AND ev.us <= tp.tp),
-        |c AS (SELECT CAST((SELECT count(*) FROM tp) AS BIGINT) AS n_converted,
-        |             CAST((SELECT count(*) FROM via) AS BIGINT) AS n_via_click)
-        |SELECT n_converted, n_converted - n_via_click AS n_direct, n_via_click,
-        |       CASE WHEN n_converted = 0 THEN 0
-        |            ELSE CAST(((n_converted - n_via_click) * 10000) // n_converted
-        |                      AS BIGINT) END AS direct_bp
-        |FROM c""".stripMargin,
-    // stable total order + LIMIT/OFFSET
-    "q186_pagination" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |ORDER BY n_chars DESC, doc_id ASC LIMIT 10 OFFSET 20""".stripMargin,
-    // IS NOT DISTINCT FROM keeps the planted null keys joinable
-    "q187_null_safe_join" ->
-      """WITH ev AS (SELECT event_id,
-        |                  CASE WHEN event_id % 7 = 0 THEN NULL
-        |                       ELSE event_type END AS k
-        |           FROM events),
-        |dim AS (SELECT k AS k2, CAST(count(*) AS BIGINT) AS n_k
-        |        FROM ev GROUP BY 1)
-        |SELECT ev.k, CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(max(dim.n_k) AS BIGINT) AS n_k
-        |FROM ev JOIN dim ON ev.k IS NOT DISTINCT FROM dim.k2
-        |GROUP BY ev.k ORDER BY ev.k""".stripMargin,
-    // every frame's luma from the q97 md5 stream (stride 1), micro-tick
-    // lag deltas, the same integer cut threshold
-    "q182_scene_cuts" ->
-      """WITH m AS (SELECT doc_id AS media_id, text,
-        |                  CAST(4 + (doc_id % 5) * 2 AS INT) AS w,
-        |                  CAST(4 + (doc_id % 7) * 2 AS INT) AS h,
-        |                  CAST(3 + (doc_id % 4) AS BIGINT) AS nf
-        |           FROM documents),
-        |fidx AS (SELECT unnest(range(0, 6)) AS f),
-        |fr AS (SELECT m.*, fidx.f FROM m JOIN fidx ON fidx.f < m.nf),
-        |pidx AS (SELECT unnest(range(0, 192)) AS p),
-        |px AS (
-        |  SELECT media_id, w, h, f,
-        |         coalesce(('0x' || substr(md5(text || '#' || CAST((f * (w * h * 3 // 2) + p) // 16 AS VARCHAR)),
-        |                         CAST(((f * (w * h * 3 // 2) + p) % 16) * 2 + 1 AS INT), 2))::BIGINT, 0) AS b
-        |  FROM fr JOIN pidx ON pidx.p < fr.w * fr.h),
-        |agg AS (SELECT media_id, f,
-        |               (2 * sum(b) * 1000000 + count(*) * 255)
-        |                 // (2 * count(*) * 255) AS lm
-        |        FROM px GROUP BY media_id, f),
-        |l AS (SELECT media_id, f, lm,
-        |             lag(lm) OVER (PARTITION BY media_id ORDER BY f) AS prev
-        |      FROM agg),
-        |c AS (SELECT media_id, f,
-        |             CASE WHEN abs(lm - prev) >= 40000 THEN 1 ELSE 0 END AS cut
-        |      FROM l WHERE prev IS NOT NULL)
-        |SELECT media_id, CAST(count(*) AS BIGINT) AS n_gaps,
-        |       CAST(sum(cut) AS BIGINT) AS n_cuts,
-        |       min(CASE WHEN cut = 1 THEN f END) AS first_cut_idx
-        |FROM c GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // LCP(min, max) per source over the banner-decorated corpus
-    "q183_source_template" ->
-      """WITH d AS (SELECT source,
-        |                  CASE WHEN source IN ('src0', 'src1')
-        |                       THEN '<<' || source || ' banner>> ' || text
-        |                       ELSE text END AS text
-        |           FROM documents),
-        |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |             min(text) AS a, max(text) AS b
-        |      FROM d GROUP BY 1),
-        |l AS (SELECT source, n_docs, a,
-        |             CAST(len(list_filter(range(1, least(length(a), length(b)) + 1),
-        |               i -> substr(a, 1, CAST(i AS INT)) = substr(b, 1, CAST(i AS INT))))
-        |               AS BIGINT) AS lcp_len
-        |      FROM g)
-        |SELECT source, n_docs, lcp_len,
-        |       substr(a, 1, CAST(least(lcp_len, 40) AS INT)) AS lcp_prefix
-        |FROM l ORDER BY source""".stripMargin,
-    // the q87 CTE fold filtered per user-parity segment
-    "q184_funnel_by_segment" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
-        |                  CASE WHEN user_id % 2 = 0 THEN 'u0' ELSE 'u1' END AS segment
-        |           FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |s1 AS (SELECT segment, user_id, min(ts) AS t FROM e
-        |       WHERE event_type = 'view' GROUP BY 1, 2),
-        |s2 AS (SELECT e.segment, e.user_id, min(e.ts) AS t FROM e
-        |       JOIN s1 ON e.user_id = s1.user_id AND e.segment = s1.segment
-        |       WHERE e.event_type = 'click' AND e.ts >= s1.t GROUP BY 1, 2),
-        |s3 AS (SELECT e.segment, e.user_id, min(e.ts) AS t FROM e
-        |       JOIN s2 ON e.user_id = s2.user_id AND e.segment = s2.segment
-        |       WHERE e.event_type = 'purchase' AND e.ts >= s2.t GROUP BY 1, 2),
-        |segs AS (SELECT 'u0' AS segment UNION ALL SELECT 'u1'),
-        |c1 AS (SELECT segment, CAST(count(*) AS BIGINT) AS n FROM s1 GROUP BY 1),
-        |c2 AS (SELECT segment, CAST(count(*) AS BIGINT) AS n FROM s2 GROUP BY 1),
-        |c3 AS (SELECT segment, CAST(count(*) AS BIGINT) AS n FROM s3 GROUP BY 1)
-        |SELECT s.segment, CAST(1 AS INT) AS step_idx, 'view' AS step_name,
-        |       coalesce(c1.n, 0) AS users
-        |FROM segs s LEFT JOIN c1 ON c1.segment = s.segment
-        |UNION ALL
-        |SELECT s.segment, CAST(2 AS INT), 'click', coalesce(c2.n, 0)
-        |FROM segs s LEFT JOIN c2 ON c2.segment = s.segment
-        |UNION ALL
-        |SELECT s.segment, CAST(3 AS INT), 'purchase', coalesce(c3.n, 0)
-        |FROM segs s LEFT JOIN c3 ON c3.segment = s.segment
-        |ORDER BY segment, step_idx""".stripMargin,
-    // the q59 md5 PCM stream re-read as signed LE 16-bit samples,
-    // 16 positional blocks, louder-than-previous bits
-    "q180_audio_contour" ->
-      """WITH m AS (SELECT doc_id AS media_id, text,
-        |                  CAST((50 + (doc_id % 10) * 10) * (1 + (doc_id % 2))
-        |                    AS BIGINT) AS n
-        |           FROM documents),
-        |idx AS (SELECT unnest(range(0, 280)) AS i),
-        |sm AS (SELECT media_id, n, i,
-        |              ('0x' || substr(md5(text || '#' || CAST((2 * i) // 16 AS VARCHAR)),
-        |                              CAST(((2 * i) % 16) * 2 + 1 AS INT), 2))::BIGINT AS b0,
-        |              ('0x' || substr(md5(text || '#' || CAST((2 * i + 1) // 16 AS VARCHAR)),
-        |                              CAST(((2 * i + 1) % 16) * 2 + 1 AS INT), 2))::BIGINT AS b1
-        |       FROM m JOIN idx ON idx.i < m.n),
-        |sv AS (SELECT media_id, n, i,
-        |              abs(CASE WHEN b1 * 256 + b0 >= 32768
-        |                       THEN b1 * 256 + b0 - 65536
-        |                       ELSE b1 * 256 + b0 END) AS a
-        |       FROM sm),
-        |blk AS (SELECT media_id, n, i // (n // 16) AS b, a
-        |        FROM sv WHERE i < (n // 16) * 16),
-        |e AS (SELECT media_id, n, b, CAST(sum(a) AS BIGINT) AS e
-        |      FROM blk GROUP BY 1, 2, 3),
-        |bits AS (SELECT media_id, n, b,
-        |                CASE WHEN e > lag(e) OVER (PARTITION BY media_id ORDER BY b)
-        |                     THEN 1 ELSE 0 END AS bit
-        |         FROM e)
-        |SELECT media_id, CAST(max(n) AS BIGINT) AS n_samples,
-        |       CAST(sum(CASE WHEN b >= 1 AND bit = 1
-        |                     THEN CAST(pow(2, b - 1) AS BIGINT) ELSE 0 END) AS BIGINT)
-        |         AS contour
-        |FROM bits GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // two leads over the same (user, ts, id) order as q95's transitions
-    "q181_flow_trigrams" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, event_id
-        |            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |l AS (SELECT event_type AS t1,
-        |             lead(event_type, 1) OVER w AS t2,
-        |             lead(event_type, 2) OVER w AS t3
-        |      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |p AS (SELECT t1 || '>' || t2 || '>' || t3 AS path
-        |      FROM l WHERE t1 IS NOT NULL AND t2 IS NOT NULL
-        |        AND t3 IS NOT NULL),
-        |g AS (SELECT path, CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1),
-        |top AS (SELECT path, n,
-        |               CAST(row_number() OVER (ORDER BY n DESC, path ASC) AS BIGINT)
-        |                 AS rank
-        |        FROM g)
-        |SELECT rank, path, n FROM top WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // the q43 md5 pixel field sampled on the same integer 9x8 grid;
-    // pow-packed lo/hi bits (the simhash oracle pattern)
-    "q178_image_phash" ->
-      s"""WITH $PhashSql
-        |SELECT media_id, phash_lo, phash_hi FROM ph
-        |ORDER BY media_id""".stripMargin,
-    // pHash near-dup pairs: INDEPENDENT brute formulation — all pairs
-    // with bit_count(xor) <= 3; the engine's 4x16 banded join must
-    // lose nothing against it (pigeonhole completeness)
-    "q304_phash_pairs" ->
-      s"""WITH $PhashSql,
-        |pr AS (SELECT a.media_id AS media_a, b.media_id AS media_b,
-        |              CAST(bit_count(xor(a.phash_lo, b.phash_lo))
-        |                   + bit_count(xor(a.phash_hi, b.phash_hi)) AS BIGINT)
-        |                AS hamming
-        |       FROM ph a JOIN ph b ON a.media_id < b.media_id)
-        |SELECT media_a, media_b, hamming FROM pr WHERE hamming <= 3
-        |ORDER BY media_a, media_b""".stripMargin,
-    // independent replay of the span cut: repeated-13-gram starts in
-    // non-first docs cover positions; survivors reassemble by position
-    "q305_span_dedup" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         coalesce(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> ''),
-        |                  CAST([] AS VARCHAR[])) AS words
-        |  FROM documents),
-        |sp AS (
-        |  SELECT doc_id, s, array_to_string(words[s:s+12], ' ') AS shingle
-        |  FROM (SELECT doc_id, words, unnest(range(1, len(words) - 11)) AS s
-        |        FROM w WHERE len(words) >= 13) t),
-        |rep AS (
-        |  SELECT shingle, min(doc_id) AS first_doc
-        |  FROM (SELECT DISTINCT doc_id, shingle FROM sp) d
-        |  GROUP BY shingle HAVING count(*) >= 2),
-        |dr AS (SELECT DISTINCT sp.doc_id, sp.s
-        |       FROM sp JOIN rep ON rep.shingle = sp.shingle
-        |       WHERE sp.doc_id <> rep.first_doc),
-        |cov AS (SELECT DISTINCT doc_id, unnest(range(s, s + 13)) AS pos FROM dr),
-        |p AS (SELECT doc_id, unnest(range(1, len(words) + 1)) AS pos,
-        |             unnest(words) AS tok
-        |      FROM w),
-        |kept AS (SELECT p.doc_id, p.pos, p.tok
-        |         FROM p LEFT JOIN cov c ON c.doc_id = p.doc_id AND c.pos = p.pos
-        |         WHERE c.pos IS NULL),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |               array_to_string(list(tok ORDER BY pos), ' ') AS cleaned
-        |        FROM kept GROUP BY doc_id)
-        |SELECT w.doc_id, CAST(len(w.words) AS BIGINT) AS n_tokens,
-        |       CAST(coalesce(agg.n_kept, 0) AS BIGINT) AS n_kept,
-        |       coalesce(agg.cleaned, '') AS cleaned
-        |FROM w LEFT JOIN agg ON agg.doc_id = w.doc_id
-        |ORDER BY w.doc_id""".stripMargin,
-    // INDEPENDENT brute all-pairs at Hamming <= 6 over the same
-    // portable sketches — the driver compare proves the multi-probe
-    // join's completeness past the 4-band radius (the q304 pattern)
-    "q306_multiprobe_simhash" ->
-      s"""WITH $SimhashPairsSql,
-        |bp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |              CAST(bit_count(xor(a.simhash_lo, b.simhash_lo))
-        |                   + bit_count(xor(a.simhash_hi, b.simhash_hi)) AS BIGINT)
-        |                AS hamming
-        |       FROM ssim a JOIN ssim b ON a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM bp WHERE hamming <= 6
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // same arithmetic over the +35k-shifted twins; byte-identical
-    // payloads must collapse to one hash group
-    "q179_phash_groups" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 3500000000, text FROM documents WHERE doc_id % 6 = 0),
-        |xs AS (SELECT unnest(range(0, 8)) AS x),
-        |ys AS (SELECT unnest(range(0, 8)) AS y),
-        |m AS (SELECT doc_id AS media_id, text,
-        |             CAST(4 + (doc_id % 5) * 2 AS BIGINT) AS w,
-        |             CAST(4 + (doc_id % 7) * 2 AS BIGINT) AS h
-        |      FROM all_docs),
-        |c AS (SELECT media_id, text, x, y,
-        |             ((y * h) // 8) * w + ((x * w) // 9) AS ia,
-        |             ((y * h) // 8) * w + (((x + 1) * w) // 9) AS ib
-        |      FROM m CROSS JOIN xs CROSS JOIN ys),
-        |v AS (SELECT media_id, x, y,
-        |             ('0x' || substr(md5(text || '#' || CAST(ia // 16 AS VARCHAR)),
-        |                             CAST((ia % 16) * 2 + 1 AS INT), 2))::BIGINT AS a,
-        |             ('0x' || substr(md5(text || '#' || CAST(ib // 16 AS VARCHAR)),
-        |                             CAST((ib % 16) * 2 + 1 AS INT), 2))::BIGINT AS b
-        |      FROM c),
-        |bits AS (SELECT media_id, y * 8 + x AS idx,
-        |                CASE WHEN b > a THEN 1 ELSE 0 END AS bit FROM v),
-        |ph AS (SELECT media_id,
-        |              CAST(sum(CASE WHEN bit = 1 AND idx < 32
-        |                    THEN CAST(pow(2, idx) AS BIGINT) ELSE 0 END) AS BIGINT)
-        |                AS phash_lo,
-        |              CAST(sum(CASE WHEN bit = 1 AND idx >= 32
-        |                    THEN CAST(pow(2, idx - 32) AS BIGINT) ELSE 0 END) AS BIGINT)
-        |                AS phash_hi
-        |       FROM bits GROUP BY media_id),
-        |g AS (SELECT phash_lo, phash_hi, CAST(count(*) AS BIGINT) AS n,
-        |             min(media_id) AS min_id, max(media_id) AS max_id
-        |      FROM ph GROUP BY 1, 2)
-        |SELECT * FROM g WHERE n > 1 ORDER BY phash_lo, phash_hi""".stripMargin,
-    // weight sums replace row counts on the same counting grid
-    "q176_weighted_length" ->
-      """WITH d AS (SELECT source, n_chars,
-        |                  CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |                    x -> x <> '')) AS BIGINT) AS ntok
-        |           FROM documents),
-        |c AS (SELECT source, n_chars AS v, CAST(sum(ntok) AS BIGINT) AS c
-        |      FROM d GROUP BY 1, 2),
-        |w AS (SELECT source, v, c,
-        |             CAST(sum(c) OVER (PARTITION BY source ORDER BY v ROWS BETWEEN
-        |               UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |             CAST(sum(c) OVER (PARTITION BY source) AS BIGINT) AS n
-        |      FROM c)
-        |SELECT source, CAST(max(n) AS BIGINT) AS total_weight,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 50 THEN v END) AS DOUBLE) AS p50,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 90 THEN v END) AS DOUBLE) AS p90,
-        |       CAST(min(CASE WHEN cum * 100 >= n * 99 THEN v END) AS DOUBLE) AS p99
-        |FROM w GROUP BY source ORDER BY source""".stripMargin,
-    // the salt never touches the predicate: plain-join identity
-    "q177_salted_join" ->
-      """WITH dim AS (SELECT event_type, CAST(count(*) AS BIGINT) AS type_total
-        |             FROM events GROUP BY 1)
-        |SELECT e.event_type, CAST(count(*) AS BIGINT) AS n_joined,
-        |       CAST(max(d.type_total) AS BIGINT) AS type_total
-        |FROM events e JOIN dim d ON d.event_type = e.event_type
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the oracle keeps the textbook correlated EXISTS; the engine's
-    // left-semi join must produce the identical relation
-    "q173_exists_semijoin" ->
-      """SELECT s_suppkey, s_name FROM supplier
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_suppkey = s_suppkey AND l_returnflag = 'R')
-        |ORDER BY s_suppkey""".stripMargin,
-    // above-nation-average balance via exact integer cents cross-multiply
-    "q174_scalar_subquery" ->
-      """WITH c AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-        |                  CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
-        |           FROM customer),
-        |n AS (SELECT c_nationkey, CAST(sum(cents) AS BIGINT) AS s,
-        |             CAST(count(*) AS BIGINT) AS cnt
-        |      FROM c GROUP BY 1)
-        |SELECT c.c_custkey, c.c_name, c.c_acctbal
-        |FROM c JOIN n ON n.c_nationkey = c.c_nationkey
-        |WHERE c.cents * n.cnt > n.s
-        |ORDER BY c_custkey""".stripMargin,
-    // greatest-per-entity: (date desc, key desc) rank 1
-    "q175_latest_order" ->
-      """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-        |       o_totalprice
-        |FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-        |        ORDER BY o_orderdate DESC, o_orderkey DESC) AS rk
-        |      FROM orders) t
-        |WHERE rk = 1 ORDER BY o_custkey""".stripMargin,
-    // occurrence-count df; a df=1 token belongs to one source, so the
-    // census partitions the global hapax set; HALF_UP bp
-    "q287_hapax_census" ->
-      s"""WITH tok AS (SELECT coalesce(source, '<none>') AS source, doc_id,
-        |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'),
-        |                            x -> x <> '')) AS token
-        |       FROM documents),
-        |d AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tok GROUP BY 1),
-        |p AS (SELECT DISTINCT source, token FROM tok)
-        |SELECT p.source, CAST(count(*) AS BIGINT) AS vocab_size,
-        |       CAST(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-        |       CAST((20000 * sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) + count(*))
-        |         // (2 * count(*)) AS BIGINT) AS hapax_bp
-        |FROM p JOIN d USING (token) GROUP BY 1 ORDER BY source""".stripMargin,
-    // q34's normalized fingerprint grouped per source; HALF_UP bp
-    "q288_dup_inflation" ->
-      s"""WITH f AS (SELECT coalesce(source, '<none>') AS source,
-        |         md5(trim(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+', ' ', 'g'))) AS fp
-        |       FROM documents WHERE text IS NOT NULL)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(count(DISTINCT fp) AS BIGINT) AS n_unique,
-        |       (20000 * count(*) + count(DISTINCT fp))
-        |         // (2 * count(DISTINCT fp)) AS inflation_bp
-        |FROM f GROUP BY 1 ORDER BY source""".stripMargin,
-    // (tf desc, token) top-20 with floor-bp distinct-doc share
-    "q289_token_dispersion" ->
-      s"""WITH tok AS (SELECT doc_id,
-        |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'),
-        |                            x -> x <> '')) AS token
-        |       FROM documents),
-        |st AS (SELECT token, CAST(count(*) AS BIGINT) AS tf,
-        |              CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM tok GROUP BY 1),
-        |top AS (SELECT token, tf, df,
-        |               CAST(row_number() OVER (ORDER BY tf DESC, token) AS BIGINT)
-        |                 AS rank
-        |        FROM st)
-        |SELECT rank, token, tf, df, (df * 10000) // tf AS dispersion_bp
-        |FROM top WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // q199's centroid/cosine chain + own-minus-best-rival micro margin,
-    // worst-20 by (margin asc, vec_id)
-    "q290_label_margin" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, embedding
-        |           FROM embeddings WHERE label IS NOT NULL),
-        |ccomp AS (SELECT label AS clabel,
-        |                 unnest(range(1, len(embedding) + 1)) AS i,
-        |                 unnest(list_transform(embedding,
-        |                   v -> CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5)
-        |                     AS BIGINT))) AS t
-        |          FROM e),
-        |cent AS (SELECT clabel, i,
-        |                CAST(sum(t) AS DOUBLE) / count(*) / 1000000.0 AS m
-        |         FROM ccomp GROUP BY 1, 2),
-        |cn AS (SELECT clabel, sqrt(sum(m * m)) AS nc FROM cent GROUP BY 1),
-        |vcomp AS (SELECT vec_id, label,
-        |                 unnest(range(1, len(embedding) + 1)) AS i,
-        |                 unnest(list_transform(embedding,
-        |                   v -> CAST(v AS DOUBLE))) AS x
-        |          FROM e),
-        |vn AS (SELECT vec_id, sqrt(sum(x * x)) AS nv FROM vcomp GROUP BY 1),
-        |dp AS (SELECT v.vec_id, v.label, c.clabel, sum(v.x * c.m) AS dp
-        |       FROM vcomp v JOIN cent c ON c.i = v.i GROUP BY 1, 2, 3),
-        |sc AS (SELECT dp.vec_id, dp.label, dp.clabel,
-        |              CASE WHEN vn.nv * cn.nc = 0 THEN 0.0
-        |                   ELSE round(dp.dp / (vn.nv * cn.nc), 6) END AS cos
-        |       FROM dp JOIN vn ON vn.vec_id = dp.vec_id
-        |               JOIN cn ON cn.clabel = dp.clabel),
-        |own AS (SELECT vec_id, cos AS own_cos FROM sc WHERE clabel = label),
-        |riv AS (SELECT vec_id, label, clabel, cos,
-        |               row_number() OVER (PARTITION BY vec_id
-        |                 ORDER BY cos DESC, clabel) AS rn
-        |        FROM sc WHERE clabel <> label),
-        |m AS (SELECT r.vec_id, r.label, r.clabel AS rival_label,
-        |             CAST(round(o.own_cos * 1000000) - round(r.cos * 1000000)
-        |               AS BIGINT) AS margin_micro
-        |      FROM riv r JOIN own o USING (vec_id) WHERE r.rn = 1),
-        |t AS (SELECT *, CAST(row_number() OVER (ORDER BY margin_micro, vec_id)
-        |               AS BIGINT) AS rank FROM m)
-        |SELECT rank, vec_id, label, rival_label, margin_micro
-        |FROM t WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // exact integer spread weights (sqrt of N·Σt²−(Σt)² HALF_UP) +
-    // largest-remainder rounding; quotas floor, remainders by
-    // (rem desc, key asc)
-    "q291_neyman_allocation" ->
-      s"""WITH $QualitySql,
-        |sv AS (SELECT coalesce(d.source, '<none>') AS key,
-        |              CAST(floor(q.quality * 10000 + 0.5) AS BIGINT) AS t
-        |       FROM q JOIN documents d USING (doc_id)
-        |       WHERE q.quality IS NOT NULL),
-        |st AS (SELECT key, CAST(count(*) AS BIGINT) AS n_rows,
-        |              CAST(sum(t) AS HUGEINT) AS s1,
-        |              CAST(sum(CAST(t AS HUGEINT) * t) AS HUGEINT) AS s2
-        |       FROM sv GROUP BY 1),
-        |w AS (SELECT key, n_rows,
-        |             CAST(floor(sqrt(CAST(greatest(n_rows * s2 - s1 * s1,
-        |               CAST(0 AS HUGEINT)) AS DOUBLE)) + 0.5) AS BIGINT)
-        |               AS spread_w
-        |      FROM st),
-        |tw AS (SELECT CASE WHEN sum(spread_w) > 0 THEN CAST(sum(spread_w) AS BIGINT)
-        |                   ELSE 1 END AS ww FROM w),
-        |b AS (SELECT key, n_rows, spread_w,
-        |             (10000 * spread_w) // ww AS base,
-        |             (10000 * spread_w) % ww AS rem
-        |      FROM w CROSS JOIN tw),
-        |l AS (SELECT 10000 - CAST(sum(base) AS BIGINT) AS leftover FROM b),
-        |r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, key) AS rk FROM b)
-        |SELECT key, n_rows, spread_w,
-        |       CAST(base + CASE WHEN rk <= l.leftover THEN 1 ELSE 0 END AS BIGINT)
-        |         AS alloc
-        |FROM r CROSS JOIN l ORDER BY key""".stripMargin,
-    // the verified-LSH exact-jaccard pairs, parity-split, reciprocal
-    // rank-1 on the pinned (jaccard desc, partner asc) order
-    "q292_mutual_best" ->
-      s"""WITH $LshCalibSql,
-        |x AS (SELECT CASE WHEN doc_a % 2 = 0 THEN doc_a ELSE doc_b END AS doc_even,
-        |             CASE WHEN doc_a % 2 = 0 THEN doc_b ELSE doc_a END AS doc_odd,
-        |             exact_jaccard AS jaccard
-        |      FROM j WHERE doc_a % 2 <> doc_b % 2),
-        |e AS (SELECT *,
-        |             row_number() OVER (PARTITION BY doc_even
-        |               ORDER BY jaccard DESC, doc_odd) AS re,
-        |             row_number() OVER (PARTITION BY doc_odd
-        |               ORDER BY jaccard DESC, doc_even) AS ro
-        |      FROM x)
-        |SELECT doc_even, doc_odd, jaccard FROM e WHERE re = 1 AND ro = 1
-        |ORDER BY doc_even""".stripMargin,
-    // a token is new at its MIN doc rank; power-of-two checkpoints +
-    // the corpus size; micro log-ticks, exact integer OLS sums
-    "q293_heaps_law" ->
-      s"""WITH tok AS (SELECT doc_id,
-        |         unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'),
-        |                            x -> x <> '')) AS token
-        |       FROM documents),
-        |rk AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT)
-        |              AS rk FROM documents),
-        |fs AS (SELECT min(doc_id) AS doc_id FROM tok GROUP BY token),
-        |fr AS (SELECT rk.rk, CAST(count(*) AS BIGINT) AS nnew
-        |       FROM fs JOIN rk USING (doc_id) GROUP BY 1),
-        |nn AS (SELECT max(rk) AS n FROM rk),
-        |cps AS (SELECT DISTINCT checkpoint FROM (
-        |          SELECT CAST(pow(2, g) AS BIGINT) AS checkpoint
-        |          FROM range(0, 62) t(g), nn WHERE pow(2, g) < nn.n
-        |          UNION ALL SELECT n FROM nn)),
-        |curve AS (SELECT c.checkpoint, CAST(sum(f.nnew) AS BIGINT) AS vocab
-        |          FROM cps c JOIN fr f ON f.rk <= c.checkpoint GROUP BY 1),
-        |pts AS (SELECT checkpoint, vocab,
-        |               CAST(round(ln(checkpoint) * 1000000) AS BIGINT) AS x,
-        |               CAST(round(ln(vocab) * 1000000) AS BIGINT) AS y
-        |        FROM curve),
-        |beta AS (SELECT CAST(CASE WHEN n * sxx - sx * sx = 0 THEN 0
-        |                ELSE ((n * sxy - sx * sy) * 1000) // (n * sxx - sx * sx)
-        |                END AS BIGINT) AS beta_milli
-        |         FROM (SELECT CAST(count(*) AS HUGEINT) AS n,
-        |                      CAST(sum(x) AS HUGEINT) AS sx,
-        |                      CAST(sum(y) AS HUGEINT) AS sy,
-        |                      CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-        |                      CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-        |               FROM pts) s)
-        |SELECT p.checkpoint, p.vocab, b.beta_milli
-        |FROM pts p CROSS JOIN beta b ORDER BY checkpoint""".stripMargin,
-    // q102's assignment chain over labeled non-zero vectors + majority
-    // label via (count desc, label asc) rank; HALF_UP bp
-    "q294_cluster_purity" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS lbl, embedding
-        |           FROM embeddings WHERE label IS NOT NULL),
-        |comp AS (
-        |  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-        |         unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS x
-        |  FROM e),
-        |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp
-        |          GROUP BY vec_id HAVING sum(x * x) > 0),
-        |cent AS (SELECT vec_id AS cvid, row_number() OVER (ORDER BY vec_id) - 1 AS j
-        |         FROM (SELECT vec_id FROM norms ORDER BY vec_id LIMIT 8) t),
-        |ccomp AS (SELECT cent.j, comp.i, comp.x
-        |          FROM comp JOIN cent ON cent.cvid = comp.vec_id),
-        |cnorm AS (SELECT j, sqrt(sum(x * x)) AS nrm FROM ccomp GROUP BY j),
-        |cos AS (
-        |  SELECT comp.vec_id, cc.j,
-        |         round(sum(comp.x * cc.x) / (n1.nrm * n2.nrm), 6) AS c
-        |  FROM comp JOIN ccomp cc ON cc.i = comp.i
-        |  JOIN norms n1 ON n1.vec_id = comp.vec_id
-        |  JOIN cnorm n2 ON n2.j = cc.j
-        |  GROUP BY comp.vec_id, cc.j, n1.nrm, n2.nrm),
-        |asg AS (SELECT vec_id, j AS cluster FROM (
-        |          SELECT vec_id, j, c,
-        |                 row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, j) AS rn
-        |          FROM cos) t WHERE rn = 1),
-        |g AS (SELECT a.cluster, e.lbl, CAST(count(*) AS BIGINT) AS c
-        |      FROM asg a JOIN e USING (vec_id) GROUP BY 1, 2),
-        |m AS (SELECT cluster, lbl, c,
-        |             row_number() OVER (PARTITION BY cluster
-        |               ORDER BY c DESC, lbl) AS rn,
-        |             CAST(sum(c) OVER (PARTITION BY cluster) AS BIGINT) AS n
-        |      FROM g)
-        |SELECT cluster, n AS n_vectors, lbl AS majority_label,
-        |       (20000 * c + n) // (2 * n) AS purity_bp
-        |FROM m WHERE rn = 1 ORDER BY cluster""".stripMargin,
-    // the q38 signature chain, banded three ways from ONE signature
-    // set; candidate volume Σ c·(c−1)/2 from bucket sizes alone; the
-    // expected-recall constant is exact rational over 2^16
-    "q295_lsh_design" ->
-      s"""WITH w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-        |perms AS (
-        |  SELECT perm,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-        |  FROM (SELECT unnest(range(0, 16)) AS perm) t),
-        |mh AS (SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-        |       FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-        |grid AS (SELECT CAST(unnest([2, 4, 8]) AS BIGINT) AS bands),
-        |g AS (SELECT grid.bands, mh.doc_id, mh.minhash, mh.perm,
-        |             mh.perm // (16 // grid.bands) AS band
-        |      FROM mh CROSS JOIN grid),
-        |bk AS (SELECT bands, band, doc_id,
-        |              list(minhash ORDER BY perm) AS key
-        |       FROM g GROUP BY 1, 2, 3),
-        |bc AS (SELECT bands, band, key, CAST(count(*) AS BIGINT) AS c
-        |       FROM bk GROUP BY 1, 2, 3),
-        |agg AS (SELECT bands, CAST(count(*) AS BIGINT) AS n_buckets,
-        |               CAST(sum(c * (c - 1) // 2) AS BIGINT) AS candidate_pairs
-        |        FROM bc GROUP BY 1)
-        |SELECT bands, 16 // bands AS rows_per_band, n_buckets, candidate_pairs,
-        |       (2 * (65536 - CAST(pow(pow(2, 16 // bands) - 1, bands) AS BIGINT))
-        |          * 1000000 + 65536) // (2 * 65536) AS est_recall_micro
-        |FROM agg ORDER BY bands""".stripMargin,
-    // integer log-tick moments; μ floor DIV (log ticks non-negative for
-    // n_chars ≥ 1), σ from the exact HUGEINT variance numerator
-    "q296_lognormal_fit" ->
-      """WITH x AS (SELECT coalesce(source, '<none>') AS key,
-        |                  CAST(round(ln(CAST(n_chars AS DOUBLE)) * 1000000)
-        |                    AS BIGINT) AS x
-        |           FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0),
-        |s AS (SELECT key, CAST(count(*) AS BIGINT) AS n_rows,
-        |             CAST(sum(x) AS HUGEINT) AS sx,
-        |             CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-        |      FROM x GROUP BY 1)
-        |SELECT key, n_rows, CAST(sx // n_rows AS BIGINT) AS mu_micro,
-        |       CAST(floor(sqrt(CAST(greatest(n_rows * sxx - sx * sx,
-        |              CAST(0 AS HUGEINT)) AS DOUBLE)) / n_rows + 0.5) AS BIGINT)
-        |         AS sigma_micro
-        |FROM s ORDER BY key""".stripMargin,
-    // the shared IVF chain with a probe grid folded into the rank
-    // filter; recall micro-averaged over summed hit/exact counts
-    "q297_ivf_probe_curve" ->
-      s"""WITH $VecBaseSql,
-        |$BruteKnnSql,
-        |cent2 AS (SELECT vec_id AS cvid,
-        |                 CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS list_id
-        |          FROM (SELECT vec_id FROM nz ORDER BY vec_id LIMIT 16) t),
-        |cdots2 AS (SELECT c.vec_id, ct.list_id, ct.cvid, sum(c.x * cc.x) AS dp
-        |           FROM comp c CROSS JOIN cent2 ct
-        |           JOIN comp cc ON cc.vec_id = ct.cvid AND cc.i = c.i
-        |           GROUP BY c.vec_id, ct.list_id, ct.cvid),
-        |csims2 AS (SELECT d.vec_id, d.list_id, d.dp / (nv.nrm * nc.nrm) AS csim
-        |           FROM cdots2 d JOIN nz nv ON nv.vec_id = d.vec_id
-        |                         JOIN nz nc ON nc.vec_id = d.cvid),
-        |cranked2 AS (SELECT vec_id, list_id,
-        |                    row_number() OVER (PARTITION BY vec_id
-        |                      ORDER BY csim DESC, list_id) AS crank
-        |             FROM csims2),
-        |assigned2 AS (SELECT vec_id, list_id FROM cranked2 WHERE crank = 1),
-        |pgrid AS (SELECT CAST(unnest([1, 2, 4]) AS BIGINT) AS n_probe),
-        |probes2 AS (SELECT g.n_probe, c.vec_id AS query_id, c.list_id
-        |            FROM cranked2 c CROSS JOIN pgrid g
-        |            WHERE c.crank <= g.n_probe AND c.vec_id % 100 = 0),
-        |cand2 AS (SELECT DISTINCT p.n_probe, p.query_id, a.vec_id AS neighbor_id
-        |          FROM assigned2 a JOIN probes2 p ON a.list_id = p.list_id
-        |                                        AND a.vec_id <> p.query_id),
-        |idots2 AS (SELECT c.n_probe, c.query_id, c.neighbor_id,
-        |                  sum(ca.x * cb.x) AS dp
-        |           FROM cand2 c
-        |           JOIN comp ca ON ca.vec_id = c.neighbor_id
-        |           JOIN comp cb ON cb.vec_id = c.query_id AND cb.i = ca.i
-        |           GROUP BY 1, 2, 3),
-        |iscored2 AS (SELECT d.n_probe, d.query_id, d.neighbor_id,
-        |                    round(d.dp / (nn.nrm * nq.nrm), 6) AS cosine
-        |             FROM idots2 d
-        |             JOIN nz nn ON nn.vec_id = d.neighbor_id
-        |             JOIN nz nq ON nq.vec_id = d.query_id),
-        |ivf2 AS (SELECT * FROM (
-        |  SELECT n_probe, query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY n_probe, query_id
-        |           ORDER BY cosine DESC, neighbor_id) AS rnk
-        |  FROM iscored2) t WHERE rnk <= 10),
-        |jj AS (SELECT g.n_probe, b.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-        |              CAST(coalesce(sum(CASE WHEN v.neighbor_id IS NOT NULL
-        |                                     THEN 1 END), 0) AS BIGINT) AS n_hit
-        |       FROM pgrid g CROSS JOIN brute b
-        |       LEFT JOIN ivf2 v ON v.n_probe = g.n_probe
-        |                       AND v.query_id = b.query_id
-        |                       AND v.neighbor_id = b.neighbor_id
-        |       GROUP BY 1, 2)
-        |SELECT n_probe, CAST(count(*) AS BIGINT) AS n_queries,
-        |       CAST(sum(n_exact) AS BIGINT) AS n_exact,
-        |       CAST(sum(n_hit) AS BIGINT) AS n_hit,
-        |       CAST((sum(n_hit) * 20000 + sum(n_exact)) // (2 * sum(n_exact))
-        |         AS BIGINT) AS recall_bp
-        |FROM jj GROUP BY 1 ORDER BY n_probe""".stripMargin,
-    // brute all-pairs exact Jaccard at 19/20, banded by integer percent
-    "q298_jaccard_bands" ->
-      """WITH tk AS (SELECT DISTINCT doc_id,
-        |              unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                                 x -> x <> '')) AS tok
-        |            FROM documents),
-        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tk GROUP BY 1),
-        |it AS (SELECT a.doc_id AS da, b.doc_id AS db, CAST(count(*) AS BIGINT) AS c
-        |       FROM tk a JOIN tk b ON b.tok = a.tok AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2),
-        |p AS (SELECT c, sa.n AS na, sb.n AS nb
-        |      FROM it JOIN sz sa ON sa.doc_id = it.da
-        |              JOIN sz sb ON sb.doc_id = it.db
-        |      WHERE c * 20 >= (sa.n + sb.n - c) * 19)
-        |SELECT CAST((100 * c) // (na + nb - c) AS BIGINT) AS band_pct,
-        |       CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same brute pair graph, degree histogram over both orientations
-    "q299_dup_degree" ->
-      """WITH tk AS (SELECT DISTINCT doc_id,
-        |              unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                                 x -> x <> '')) AS tok
-        |            FROM documents),
-        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tk GROUP BY 1),
-        |it AS (SELECT a.doc_id AS da, b.doc_id AS db, CAST(count(*) AS BIGINT) AS c
-        |       FROM tk a JOIN tk b ON b.tok = a.tok AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2),
-        |p AS (SELECT it.da, it.db
-        |      FROM it JOIN sz sa ON sa.doc_id = it.da
-        |              JOIN sz sb ON sb.doc_id = it.db
-        |      WHERE c * 20 >= (sa.n + sb.n - c) * 19),
-        |d AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS degree FROM
-        |        (SELECT da AS doc_id FROM p UNION ALL SELECT db AS doc_id FROM p) u
-        |      GROUP BY 1)
-        |SELECT degree, CAST(count(*) AS BIGINT) AS n_docs
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    // per-shingle min(doc_id) first-seen; ingest epochs by integer
-    // doc_id cuts; HALF_UP bp
-    "q300_novelty_decay" ->
-      """WITH w AS (SELECT doc_id,
-        |             list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                         x -> x <> '') AS words
-        |           FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(words) - 1),
-        |                                       i -> array_to_string(words[i:i+2], ' '))) AS shingle
-        |  FROM w WHERE len(words) >= 3) t),
-        |f AS (SELECT shingle, min(doc_id) AS first FROM sh GROUP BY 1),
-        |pd AS (SELECT sh.doc_id, CAST(count(*) AS BIGINT) AS n_sh,
-        |              CAST(sum(CASE WHEN f.first = sh.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_new
-        |       FROM sh JOIN f USING (shingle) GROUP BY 1),
-        |mx AS (SELECT max(doc_id) AS m FROM documents)
-        |SELECT CAST((10 * pd.doc_id) // (mx.m + 1) AS BIGINT) AS band,
-        |       CAST(sum(n_sh) AS BIGINT) AS n_shingles,
-        |       CAST(sum(n_new) AS BIGINT) AS n_novel,
-        |       CAST((20000 * sum(n_new) + sum(n_sh)) // (2 * sum(n_sh)) AS BIGINT)
-        |         AS novelty_bp
-        |FROM pd CROSS JOIN mx GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q103's verified-candidate chain (j has est+exact), banded by exact
-    // ticks with HALF_UP mean |est−exact| ticks
-    "q301_minhash_error" ->
-      s"""WITH $LshCalibSql,
-        |er AS (SELECT CAST(CAST(round(exact_jaccard * 10000) AS BIGINT) // 1000
-        |                AS BIGINT) AS band,
-        |              abs(CAST(round(est_jaccard * 10000) AS BIGINT)
-        |                  - CAST(round(exact_jaccard * 10000) AS BIGINT)) AS ae
-        |       FROM j)
-        |SELECT band, CAST(count(*) AS BIGINT) AS n_pairs,
-        |       CAST((2 * sum(ae) + count(*)) // (2 * count(*)) AS BIGINT)
-        |         AS mean_abs_err_ticks
-        |FROM er GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the q39/q41 portable simhash chain (sp), censused by distance
-    "q302_simhash_census" ->
-      s"""WITH $SimhashPairsSql
-        |SELECT CAST(hamming AS BIGINT) AS hamming,
-        |       CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM sp GROUP BY 1 ORDER BY 1""".stripMargin,
-    // 5-gram shingle df in power-of-two bands — integer bit-length
-    // banding on both engines (bin() is minimal-width in both)
-    "q303_df_spectrum" ->
-      """WITH w AS (SELECT doc_id,
-        |             list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                         x -> x <> '') AS words
-        |           FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, shingle FROM (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(words) - 3),
-        |                                       i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |  FROM w WHERE len(words) >= 5) t),
-        |d AS (SELECT shingle, CAST(count(*) AS BIGINT) AS df FROM sh GROUP BY 1)
-        |SELECT CAST(length(bin(df)) - 1 AS BIGINT) AS df_band,
-        |       CAST(count(*) AS BIGINT) AS n_shingles,
-        |       CAST(sum(df) AS BIGINT) AS n_postings
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-  )
-
-  /** The LSH dup-cluster CTE chain (shingles → minhash → bands →
-    * candidate pairs → estimated-Jaccard cut → connected components →
-    * full-corpus labels in `lab`), same parameters as q53/q78/q92
-    * (16 perms × 8 bands, md5 base, threshold 0.2). The use site
-    * supplies `WITH RECURSIVE`. */
-  /** Shared embedding-decomposition CTEs (e, dims, idx, comp, norms) —
-    * single source of truth for the vector-search oracles q36/q44/q121/q122. */
-  /** q103's verified-candidate chain: MinHash-LSH candidates with
-    * estimated AND exact Jaccard, ending in j(doc_a, doc_b,
-    * est_jaccard, exact_jaccard) - shared by q103/q240. */
-  /** The dHash chain over the synthetic PNG fixture (9x8 nearest-neighbor
-    * grid on the md5-pixel raster, id-derived dimensions), ending in
-    * ph(media_id, phash_lo, phash_hi) — single source of truth for
-    * q178/q304. q179 inlines a twin-augmented variant. */
-  private val PhashSql: String =
-    """xs AS (SELECT unnest(range(0, 8)) AS x),
-      |ys AS (SELECT unnest(range(0, 8)) AS y),
-      |m AS (SELECT doc_id AS media_id, text,
-      |             CAST(4 + (doc_id % 5) * 2 AS BIGINT) AS w,
-      |             CAST(4 + (doc_id % 7) * 2 AS BIGINT) AS h
-      |      FROM documents),
-      |c AS (SELECT media_id, text, x, y,
-      |             ((y * h) // 8) * w + ((x * w) // 9) AS ia,
-      |             ((y * h) // 8) * w + (((x + 1) * w) // 9) AS ib
-      |      FROM m CROSS JOIN xs CROSS JOIN ys),
-      |v AS (SELECT media_id, x, y,
-      |             ('0x' || substr(md5(text || '#' || CAST(ia // 16 AS VARCHAR)),
-      |                             CAST((ia % 16) * 2 + 1 AS INT), 2))::BIGINT AS a,
-      |             ('0x' || substr(md5(text || '#' || CAST(ib // 16 AS VARCHAR)),
-      |                             CAST((ib % 16) * 2 + 1 AS INT), 2))::BIGINT AS b
-      |      FROM c),
-      |bits AS (SELECT media_id, y * 8 + x AS idx,
-      |                CASE WHEN b > a THEN 1 ELSE 0 END AS bit FROM v),
-      |ph AS (SELECT media_id,
-      |              CAST(sum(CASE WHEN bit = 1 AND idx < 32
-      |                            THEN CAST(pow(2, idx) AS BIGINT) ELSE 0 END) AS BIGINT)
-      |                AS phash_lo,
-      |              CAST(sum(CASE WHEN bit = 1 AND idx >= 32
-      |                            THEN CAST(pow(2, idx - 32) AS BIGINT) ELSE 0 END) AS BIGINT)
-      |                AS phash_hi
-      |       FROM bits GROUP BY media_id)""".stripMargin
-
-  private val LshCalibSql: String =
-    """w AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(range(1, len(words) - 3),
-        |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-        |    FROM w WHERE len(words) >= 5) t),
-        |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-        |perms AS (
-        |  SELECT perm,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-        |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-        |  FROM (SELECT unnest(range(0, 16)) AS perm) t),
-        |sig AS (
-        |  SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-        |  FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-        |banded AS (
-        |  SELECT doc_id, perm // 2 AS band,
-        |         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY perm) AS key
-        |  FROM sig GROUP BY doc_id, perm // 2),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-        |                              AND a.doc_id < b.doc_id),
-        |est AS (
-        |  SELECT c.doc_a, c.doc_b,
-        |         CAST((2 * sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) * 10000 + 16) // 32 AS DOUBLE) / 10000.0 AS est_jaccard
-        |  FROM cand c
-        |  JOIN sig sa ON sa.doc_id = c.doc_a
-        |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.perm = sa.perm
-        |  GROUP BY c.doc_a, c.doc_b),
-        |prs AS (SELECT doc_a, doc_b, est_jaccard FROM est WHERE est_jaccard >= 0.2),
-        |cd AS (SELECT DISTINCT doc_id FROM
-        |        (SELECT doc_a AS doc_id FROM prs UNION ALL SELECT doc_b FROM prs) t),
-        |csh AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN cd USING (doc_id)),
-        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM csh GROUP BY 1),
-        |ish AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS i
-        |        FROM csh a JOIN csh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |        GROUP BY 1, 2),
-        |j AS (SELECT p.doc_a, p.doc_b, p.est_jaccard,
-        |             CAST((2 * coalesce(ish.i, 0) * 10000
-        |                   + (sa.sz + sb.sz - coalesce(ish.i, 0)))
-        |                  // (2 * (sa.sz + sb.sz - coalesce(ish.i, 0)))
-        |                  AS DOUBLE) / 10000.0 AS exact_jaccard
-        |      FROM prs p
-        |      JOIN sz sa ON sa.doc_id = p.doc_a
-        |      JOIN sz sb ON sb.doc_id = p.doc_b
-        |      LEFT JOIN ish ON ish.doc_a = p.doc_a AND ish.doc_b = p.doc_b)""".stripMargin
-
-  private val VecBaseSql: String =
-    """e AS (SELECT vec_id, embedding FROM embeddings),
-      |dims AS (SELECT CAST(max(len(embedding)) AS BIGINT) AS d FROM e),
-      |idx AS (SELECT unnest(range(1, (SELECT d FROM dims) + 1)) AS i),
-      |comp AS (SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-      |         FROM e CROSS JOIN idx),
-      |norms AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM comp GROUP BY vec_id),
-      |nz AS (SELECT vec_id, nrm FROM norms WHERE nrm > 0)""".stripMargin
-
-  /** Exact brute-force top-10 over the vec_id %% 100 = 0 query sample,
-    * ending in brute(query_id, neighbor_id, cosine, rnk) — composes after
-    * [[VecBaseSql]]. */
-  private val BruteKnnSql: String =
-    """qcomp AS (SELECT vec_id AS query_id, i, x FROM comp WHERE vec_id % 100 = 0),
-      |bdots AS (
-      |  SELECT q.query_id, c.vec_id AS neighbor_id, sum(c.x * q.x) AS dp
-      |  FROM comp c JOIN qcomp q ON c.i = q.i AND c.vec_id <> q.query_id
-      |  GROUP BY q.query_id, c.vec_id),
-      |bscored AS (
-      |  SELECT d.query_id, d.neighbor_id,
-      |         round(d.dp / (nn.nrm * nq.nrm), 6) AS cosine
-      |  FROM bdots d
-      |  JOIN nz nn ON nn.vec_id = d.neighbor_id
-      |  JOIN nz nq ON nq.vec_id = d.query_id),
-      |brute AS (SELECT * FROM (
-      |  SELECT query_id, neighbor_id, cosine,
-      |         CAST(row_number() OVER (PARTITION BY query_id
-      |           ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-      |  FROM bscored) t WHERE rnk <= 10)""".stripMargin
-
-  /** IVF probe top-10 (16 deterministic seed lists, 4 probes) over the
-    * same query sample, ending in ivf(query_id, neighbor_id, cosine, rnk)
-    * — composes after [[VecBaseSql]]. */
-  private val IvfKnnSql: String =
-    """cent AS (
-      |  SELECT vec_id AS cvid, CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS list_id
-      |  FROM (SELECT vec_id FROM nz ORDER BY vec_id LIMIT 16) t),
-      |cdots AS (
-      |  SELECT c.vec_id, ct.list_id, ct.cvid, sum(c.x * cc.x) AS dp
-      |  FROM comp c CROSS JOIN cent ct
-      |  JOIN comp cc ON cc.vec_id = ct.cvid AND cc.i = c.i
-      |  GROUP BY c.vec_id, ct.list_id, ct.cvid),
-      |csims AS (
-      |  SELECT d.vec_id, d.list_id, d.dp / (nv.nrm * nc.nrm) AS csim
-      |  FROM cdots d
-      |  JOIN nz nv ON nv.vec_id = d.vec_id
-      |  JOIN nz nc ON nc.vec_id = d.cvid),
-      |cranked AS (
-      |  SELECT vec_id, list_id,
-      |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, list_id) AS crank
-      |  FROM csims),
-      |assigned AS (SELECT vec_id, list_id FROM cranked WHERE crank = 1),
-      |probes AS (SELECT vec_id AS query_id, list_id FROM cranked
-      |           WHERE crank <= 4 AND vec_id % 100 = 0),
-      |cand AS (
-      |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-      |  FROM assigned a JOIN probes p ON a.list_id = p.list_id
-      |                               AND a.vec_id <> p.query_id),
-      |idots AS (
-      |  SELECT c.query_id, c.neighbor_id, sum(ca.x * cb.x) AS dp
-      |  FROM cand c
-      |  JOIN comp ca ON ca.vec_id = c.neighbor_id
-      |  JOIN comp cb ON cb.vec_id = c.query_id AND cb.i = ca.i
-      |  GROUP BY c.query_id, c.neighbor_id),
-      |iscored AS (
-      |  SELECT d.query_id, d.neighbor_id, round(d.dp / (nn.nrm * nq.nrm), 6) AS cosine
-      |  FROM idots d
-      |  JOIN nz nn ON nn.vec_id = d.neighbor_id
-      |  JOIN nz nq ON nq.vec_id = d.query_id),
-      |ivf AS (SELECT * FROM (
-      |  SELECT query_id, neighbor_id, cosine,
-      |         CAST(row_number() OVER (PARTITION BY query_id
-      |           ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-      |  FROM iscored) t WHERE rnk <= 10)""".stripMargin
-
-  private val LshClusterSql: String =
-    """w AS (
-      |  SELECT doc_id,
-      |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, shingle FROM (
-      |    SELECT doc_id,
-      |           unnest(list_transform(range(1, len(words) - 3),
-      |                                 i -> array_to_string(words[i:i+4], ' '))) AS shingle
-      |    FROM w WHERE len(words) >= 5) t),
-      |bh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-      |perms AS (
-      |  SELECT perm,
-      |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 1, 7))::BIGINT + 1 AS a,
-      |         ('0x' || substr(md5('perm#' || CAST(perm AS VARCHAR)), 9, 7))::BIGINT AS b
-      |  FROM (SELECT unnest(range(0, 16)) AS perm) t),
-      |sig AS (
-      |  SELECT doc_id, perm, min((a * h + b) % 4294967311) AS minhash
-      |  FROM bh CROSS JOIN perms GROUP BY doc_id, perm),
-      |banded AS (
-      |  SELECT doc_id, perm // 2 AS band,
-      |         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY perm) AS key
-      |  FROM sig GROUP BY doc_id, perm // 2),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-      |                              AND a.doc_id < b.doc_id),
-      |est AS (
-      |  SELECT c.doc_a, c.doc_b,
-      |         CAST((2 * sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) * 10000 + 16) // 32 AS DOUBLE) / 10000.0 AS est_jaccard
-      |  FROM cand c
-      |  JOIN sig sa ON sa.doc_id = c.doc_a
-      |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.perm = sa.perm
-      |  GROUP BY c.doc_a, c.doc_b),
-      |pr AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= 0.2),
-      |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-      |          UNION SELECT doc_b, doc_a FROM pr),
-      |reach(src, dst) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-      |labels AS (
-      |  SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-      |  FROM reach GROUP BY src),
-      |lab AS (
-      |  SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id
-      |  FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id)""".stripMargin
-
-  /** The 64-bit SimHash banded-pair CTE chain (q48's semantics), CTE
-    * names s-prefixed so it composes with [[LshClusterSql]] in one WITH
-    * clause (q164 joins both pair relations); ends in
-    * `sp(doc_a, doc_b, hamming ≤ 3)`. Single source of truth — q48
-    * selects from it verbatim. */
-  private val SimhashPairsSql: String =
-    """stf AS (
-      |  SELECT doc_id, tok, count(*) AS cnt,
-      |         ('0x' || substr(md5(tok || '#lo'), 1, 8))::BIGINT AS hlo,
-      |         ('0x' || substr(md5(tok || '#hi'), 1, 8))::BIGINT AS hhi
-      |  FROM (SELECT doc_id,
-      |               unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '')) AS tok
-      |        FROM documents) t
-      |  GROUP BY doc_id, tok),
-      |sbits AS (SELECT unnest(range(0, 64)) AS b),
-      |svotes AS (
-      |  SELECT doc_id, b,
-      |         sum(CASE WHEN ((CASE WHEN b < 32 THEN hlo >> CAST(b AS INT)
-      |                              ELSE hhi >> CAST(b - 32 AS INT) END) & 1) = 1
-      |             THEN cnt ELSE -cnt END) AS v
-      |  FROM stf CROSS JOIN sbits GROUP BY doc_id, b),
-      |ssim AS (
-      |  SELECT doc_id,
-      |         CAST(sum(CASE WHEN v > 0 AND b < 32 THEN CAST(pow(2, b) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash_lo,
-      |         CAST(sum(CASE WHEN v > 0 AND b >= 32 THEN CAST(pow(2, b - 32) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash_hi
-      |  FROM svotes GROUP BY doc_id),
-      |sbanded AS (
-      |  SELECT doc_id, simhash_lo, simhash_hi, band,
-      |         CASE band WHEN 0 THEN simhash_lo & 65535
-      |                   WHEN 1 THEN (simhash_lo >> 16) & 65535
-      |                   WHEN 2 THEN simhash_hi & 65535
-      |                   ELSE (simhash_hi >> 16) & 65535 END AS key
-      |  FROM ssim CROSS JOIN (SELECT unnest(range(0, 4)) AS band) bs),
-      |scand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |         bit_count(xor(a.simhash_lo, b.simhash_lo))
-      |           + bit_count(xor(a.simhash_hi, b.simhash_hi)) AS hamming
-      |  FROM sbanded a JOIN sbanded b ON a.band = b.band AND a.key = b.key
-      |                              AND a.doc_id < b.doc_id),
-      |sp AS (SELECT doc_a, doc_b, hamming FROM scand WHERE hamming <= 3)""".stripMargin
-
-  /** The quality-score CTE chain (q77's formula verbatim), ending in
-    * `q(doc_id, quality)`. */
-  /** BM25 chain for the literal ('join','filter','merge') query, ending in
-    * `bmtop(doc_id, s, rank)` — the single source of truth for q201/q204. */
-  private val Bm25Sql: String =
-    """toks AS (SELECT doc_id,
-      |                unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-      |                  x -> x <> '')) AS tok
-      |         FROM documents),
-      |lens AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS len
-      |         FROM toks GROUP BY 1),
-      |st AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(len) AS BIGINT) AS l
-      |       FROM lens),
-      |btf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
-      |        WHERE tok IN ('join', 'filter', 'merge') GROUP BY 1, 2),
-      |bdf AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM btf GROUP BY 1),
-      |term AS (SELECT btf.doc_id,
-      |                CAST(floor(
-      |                  ln((CAST(st.n AS DOUBLE) - bdf.df + 0.5) / (bdf.df + 0.5) + 1.0)
-      |                  * (btf.tf * 2.2)
-      |                  / (btf.tf + 1.2 * (0.25 + 0.75 * lens.len
-      |                      / (CAST(st.l AS DOUBLE) / st.n)))
-      |                  * 1000000 + 0.5) AS BIGINT) AS t
-      |         FROM btf JOIN bdf ON bdf.tok = btf.tok
-      |                  JOIN lens ON lens.doc_id = btf.doc_id
-      |                  CROSS JOIN st),
-      |sc AS (SELECT doc_id, CAST(sum(t) AS BIGINT) AS s FROM term GROUP BY 1),
-      |bmtop AS (SELECT doc_id, s,
-      |                 CAST(row_number() OVER (ORDER BY s DESC, doc_id ASC)
-      |                   AS BIGINT) AS rank
-      |          FROM sc)""".stripMargin
-
-  /** One q224 estimator block per probed join — same CTE chain with
-    * name-prefixed relations so three joins share one WITH. */
-  private def jcBlock(n: String, t1: String, k1: String,
-                      t2: String, k2: String): String =
-    s"""${n}_c1 AS (SELECT CAST($k1 AS VARCHAR) AS k, CAST(count(*) AS BIGINT) AS c1
-       |           FROM $t1 WHERE $k1 IS NOT NULL GROUP BY 1),
-       |${n}_c2 AS (SELECT CAST($k2 AS VARCHAR) AS k, CAST(count(*) AS BIGINT) AS c2
-       |           FROM $t2 WHERE $k2 IS NOT NULL GROUP BY 1),
-       |${n}_m AS (SELECT coalesce(a.k, b.k) AS k, coalesce(a.c1, 0) AS c1,
-       |                  coalesce(b.c2, 0) AS c2
-       |           FROM ${n}_c1 a FULL JOIN ${n}_c2 b ON b.k = a.k),
-       |${n}_h AS (SELECT * FROM ${n}_m ORDER BY (c1 + c2) DESC, k ASC LIMIT 8),
-       |${n}_t AS (SELECT m.* FROM ${n}_m m ANTI JOIN ${n}_h h ON h.k = m.k),
-       |${n}_he AS (SELECT coalesce(sum(CAST(c1 AS HUGEINT) * c2), 0) AS he
-       |            FROM ${n}_h),
-       |${n}_te AS (SELECT coalesce(sum(c1), 0) AS n1t, coalesce(sum(c2), 0) AS n2t,
-       |                   count(CASE WHEN c1 > 0 THEN 1 END) AS d1t,
-       |                   count(CASE WHEN c2 > 0 THEN 1 END) AS d2t
-       |            FROM ${n}_t),
-       |${n}_ac AS (SELECT coalesce(sum(CAST(c1 AS HUGEINT) * c2), 0) AS act
-       |            FROM ${n}_m),
-       |${n}_out AS (SELECT '$n' AS join_name,
-       |                    CAST(he + (CAST(n1t AS HUGEINT) * n2t)
-       |                         // greatest(d1t, d2t, 1) AS BIGINT) AS n_est,
-       |                    CAST(act AS BIGINT) AS n_actual,
-       |                    CAST(CASE WHEN act = 0 THEN 0
-       |                         ELSE (abs(he + (CAST(n1t AS HUGEINT) * n2t)
-       |                                   // greatest(d1t, d2t, 1) - act) * 10000)
-       |                              // act END AS BIGINT) AS err_abs_bp
-       |             FROM ${n}_he, ${n}_te, ${n}_ac)""".stripMargin
-
-  private val JoinCardSql: String = {
-    val probes = Seq(
-      ("events_self_user", "events", "user_id", "events", "user_id"),
-      ("lineitem_part", "lineitem", "l_partkey", "part", "p_partkey"),
-      ("orders_customer", "orders", "o_custkey", "customer", "c_custkey"))
-    "WITH " + probes.map((jcBlock _).tupled).mkString(",\n") + "\n" +
-      probes.map { case (n, _, _, _, _) => s"SELECT * FROM ${n}_out" }
-        .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY join_name")
-  }
-
-  /** q67's hashed-classifier score chain ending in scored(doc_id,
-    * score) — single source of truth for q221/q246. */
-  private val ClassifierScoreSql: String =
-    """tok AS (SELECT doc_id,
-        |          unnest(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'),
-        |                             x -> x <> '')) AS token
-        |        FROM documents),
-        |wts AS (SELECT doc_id,
-        |          (('0x' || substr(md5('w:' ||
-        |              CAST((('0x' || substr(md5(token), 1, 8))::BIGINT % 1024) AS VARCHAR)),
-        |            1, 8))::BIGINT / 2147483648.0) - 1.0 AS w
-        |        FROM tok),
-        |sc AS (SELECT doc_id, count(*) AS n_tokens, sum(w) AS raw FROM wts GROUP BY 1),
-        |scored AS (SELECT d.doc_id,
-        |                  coalesce(round(raw / n_tokens, 6), 0.0) AS score
-        |           FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id)""".stripMargin
-
-  // quality ticks: ONE exact integer rational with a single HALF_UP
-  // rounding (see TextAnalysis.qualityExpr — float round(x, 4) half-tie
-  // diverged between engines at sf0.1); // floors and all operands are
-  // non-negative, matching Spark's truncating div
-  private val QualitySql: String =
-    """qt AS (
-      |  SELECT doc_id,
-      |    CAST(length(text) AS BIGINT) AS n_chars,
-      |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_toks,
-      |    CAST(len(regexp_extract_all(text, '[\.,;:!\?]')) AS BIGINT) AS n_punct,
-      |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-      |    CAST(len(list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[^a-z0-9_]+'), t -> t IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'on', 'for', 'with'))) AS BIGINT) AS n_stop
-      |  FROM documents),
-      |q AS (
-      |  SELECT doc_id,
-      |    CAST(CAST(CASE
-      |      WHEN n_chars = 0 THEN 2000 + 25 * least(n_toks, 200)
-      |      WHEN n_toks = 0 THEN
-      |        (4000 * (n_chars - least(4 * (n_punct + n_digit), n_chars)) + n_chars)
-      |          // (2 * n_chars)
-      |      ELSE 25 * least(n_toks, 200)
-      |        + (2 * (3000 * least(5 * n_stop, n_toks) * n_chars
-      |                - 2000 * least(4 * (n_punct + n_digit), n_chars) * n_toks
-      |                + 2000 * n_toks * n_chars)
-      |           + n_toks * n_chars)
-      |          // (2 * n_toks * n_chars)
-      |    END AS BIGINT) AS DOUBLE) / 10000.0 AS quality
-      |  FROM qt)""".stripMargin
-
-  /** The SQL twin of [[lineified]]: documents rebuilt as newline-delimited
-    * 8-token lines (CTE `d`). */
-  private val LineifySql: String =
-    """w AS (
-      |  SELECT doc_id,
-      |         list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'), x -> x <> '') AS words
-      |  FROM documents),
-      |d AS (
-      |  SELECT doc_id,
-      |         array_to_string(list_transform(range(0, (len(words) - 1) // 8 + 1),
-      |           i -> array_to_string(words[i * 8 + 1 : i * 8 + 8], ' ')), chr(10)) AS text
-      |  FROM w WHERE len(words) > 0)""".stripMargin
-
-  /** The SQL twin of [[piiDecorated]]'s text expression. */
-  private val PiiDecorateSql: String =
-    "text || " +
-      "CASE WHEN doc_id % 3 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END || " +
-      "CASE WHEN doc_id % 5 = 0 THEN ' call 555-867-5309' ELSE '' END || " +
-      "CASE WHEN doc_id % 7 = 0 THEN ' host 10.0.' || CAST(doc_id % 250 AS VARCHAR) || '.25' ELSE '' END"
 }

@@ -106,10 +106,13 @@ object StreamRunner {
     val offsets = new org.apache.hadoop.fs.Path(cfg.checkpointDir, "offsets")
     val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasCkpt = fs.exists(offsets) && fs.listStatus(offsets).nonEmpty
-    val sinkMax =
-      try Option(spark.read.parquet(cfg.sinkDir)
-        .agg(max(col("timestamp")).cast("string")).head().getString(0))
+    // only the read may fail as "no sink yet"; a sink that holds rows
+    // without a `timestamp` column is a broken sink, not an empty one
+    val sink =
+      try Some(spark.read.parquet(cfg.sinkDir))
       catch { case _: AnalysisException => None }
+    val sinkMax = sink.flatMap(df =>
+      Option(df.agg(max(col("timestamp")).cast("string")).head().getString(0)))
     (hasCkpt, sinkMax) match {
       case (false, None) => Decision(Fresh, "no checkpoint, empty sink: cold start")
       case (false, Some(w)) => Decision(FromSink,

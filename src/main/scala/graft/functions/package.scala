@@ -14,13 +14,6 @@ package object functions {
     def l2_norm(a: Column): Column = Shim.l2_norm(a)
   }
 
-  /** Wilder ATR recursion as a native aggregate:
-    * `wilder_atr(struct(wkey, high, low, close))` →
-    * array<struct(wkey, tr, atr)> sorted by wkey.
-    */
-  def wilder_atr(c: Column): Column =
-    org.apache.spark.sql.graftshim.WilderAtrAgg.wilder_atr(c)
-
   /** Winnowing fingerprints (md5-portable k-gram hashes, distinct sorted
     * window minima) as one native codegen expression → array<long>.
     */

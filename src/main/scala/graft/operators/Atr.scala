@@ -56,8 +56,7 @@ object Atr {
 
   /** One ATR state transition (atr_engine.py:134-192). Returns the updated
     * state and the (tr, atr) pair for this candle. Pure — shared by the batch
-    * fold ([[enrich]]), the `wilder_atr` aggregate and the streaming
-    * `ChainedPipeline.ChainedProcessor`.
+    * fold ([[enrich]]) and the streaming `ChainedPipeline.ChainedProcessor`.
     *
     * The Wilder recursion runs in exact integer "ticks" of 1e-4: since TR and
     * ATR are 4-dp quantities, `(prev·13 + tr)/14` lands exactly on a .00005

@@ -90,13 +90,17 @@ object Stats {
     val gateMsg = s"$valueCol has more than $maxDistinct distinct values: " +
       "quantile bucketing by counting needs a bounded measure — " +
       "round/discretize the column first (see quantileBucketsTicked)"
+    // the cut array rides on the caller's rows, so its name must not
+    // collide (case-insensitively, as Spark resolves) with any of theirs
+    val cutsCol = Iterator.iterate("__cuts")(_ + "_")
+      .find(n => !df.columns.exists(_.equalsIgnoreCase(n))).get
     val gated = cutsRow.select(
       when(col("__g") <= maxDistinct, col("__cuts"))
-        .otherwise(raise_error(lit(gateMsg))).as("__cuts"))
+        .otherwise(raise_error(lit(gateMsg))).as(cutsCol))
     df.crossJoin(broadcast(gated))
       .withColumn(bucketCol,
-        (lit(1) + size(filter(col("__cuts"), c => c < col(valueCol)))).cast("int"))
-      .drop("__cuts")
+        (lit(1) + size(filter(col(cutsCol), c => c < col(valueCol)))).cast("int"))
+      .drop(cutsCol)
   }
 
   /** The unbounded-measure path: discretize `valueCol` onto a fixed

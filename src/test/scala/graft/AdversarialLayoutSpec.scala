@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Engagement, Similarity, TextAnalysis}
+import graft.queries.Registry
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,7 +86,7 @@ class AdversarialLayoutSpec extends AnyFunSuite {
       (6L, None, Option(7L), Option("click"), Option(13.0), "{}")                // null ts
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = SparkEntry.queries("q10_ohlc_candles")(spark, dir)
+    val got = Registry.all("q10_ohlc_candles").build(spark, dir)
       .select("symbol", "tick_count").as[(String, Long)].collect()
     assert(got.toSeq === Seq(("click", 2L))) // only the two clean ticks
   }
@@ -98,7 +99,7 @@ class AdversarialLayoutSpec extends AnyFunSuite {
       (3L, Option(us(2)), Option(7L), None, Option(5.0), "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = SparkEntry.queries("q130_value_quantiles")(spark, dir)
+    val got = Registry.all("q130_value_quantiles").build(spark, dir)
       .select("event_type", "n_rows").as[(Option[String], Long)].collect()
     assert(got.toSeq === Seq(Some("a") -> 1L, None -> 1L),
       "null group must exist (it is data) and must sort LAST (DuckDB order)")

@@ -48,31 +48,6 @@ class AtrSpec extends AnyFunSuite {
     }
   }
 
-  test("wilder_atr native aggregate matches the typed recursion") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, struct, explode}
-    val rnd = new scala.util.Random(21)
-    val rows = for (sym <- Seq("A", "B"); i <- 1 to 20) yield {
-      val a = 1.0 + rnd.nextDouble() * 99; val b = 1.0 + rnd.nextDouble() * 99
-      (sym, i.toLong, math.max(a, b), math.min(a, b), (a + b) / 2)
-    }
-    val df = spark.sparkContext.parallelize(scala.util.Random.shuffle(rows), 5)
-      .toDF("symbol", "wkey", "high", "low", "close")
-    val got = df.groupBy(col("symbol"))
-      .agg(graft.functions.wilder_atr(
-        struct(col("wkey"), col("high"), col("low"), col("close"))).as("series"))
-      .select(col("symbol"), explode(col("series")).as("e"))
-      .select(col("symbol"), col("e.wkey"), col("e.tr"), col("e.atr"))
-      .as[(String, Long, Double, Option[Double])].collect()
-      .map(t => (t._1, t._2) -> (t._3, t._4)).toMap
-    val want = rows.groupBy(_._1).flatMap { case (sym, rs) =>
-      Atr.enrichSeries(rs.sortBy(_._2).map(r =>
-        candle(r._2.toInt, r._3, r._4, r._5).copy(symbol = sym, wkey = r._2)))
-        .map(e => (sym, e.wkey) -> (e.tr.get, e.atr))
-    }
-    assert(got === want)
-  }
-
   test("DataFrame enrich path is order-insensitive (sorts by window within symbol)") {
     import spark.implicits._
     val rows = (1 to 16).map(i => (java.sql.Timestamp.valueOf(f"2026-02-02 ${9 + i / 12}%02d:${(i * 5) % 60}%02d:00"),

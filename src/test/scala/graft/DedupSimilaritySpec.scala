@@ -859,6 +859,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(chain(err).exists(_.contains("distinct")))
   }
 
+  test("quantileBuckets: a caller's own __cuts column is kept, no collision") {
+    val vals = (1 to 20).map(v => (v.toLong, v.toDouble)).toDF("id", "v")
+    val want = graft.operators.Stats.quantileBuckets(vals, "v", k = 4)
+      .orderBy("id").select("id", "bucket").as[(Long, Int)].collect()
+    val own = vals.withColumn("__cuts", col("id") * 10)
+    val got = graft.operators.Stats.quantileBuckets(own, "v", k = 4).orderBy("id")
+    assert(got.columns.toSeq === Seq("id", "v", "__cuts", "bucket"))
+    assert(got.select("id", "bucket").as[(Long, Int)].collect() === want)
+    assert(got.select("__cuts").as[Long].collect() === (1 to 20).map(_ * 10L).toArray)
+  }
+
   test("manifest diff: all four statuses, checksum catches content swaps behind equal counts") {
     def m(rows: Seq[(String, String, Long, Long, Long, Long, Long)]) =
       rows.toDF("split", "source", "n_docs", "n_tokens", "min_doc_id",
@@ -2470,7 +2481,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("group LCP: prefix-equality count equals the common prefix of min and max") {
     // LCP(group) = LCP(lexicographic min, max) — the q183 identity; the
     // middle member never matters
-    val q = SparkEntry.queries("q183_source_template")
+    val q = graft.queries.Registry.all("q183_source_template")
     val docs = Seq(("a", "tmpl one x"), ("a", "tmpl two y"), ("a", "tmpl three z"),
       ("b", "no"), ("b", "overlap")).toDF("source", "text")
     val agg = docs.groupBy(col("source"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.{Registry, Twin}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke coverage of the driver contract on sf0.001. Full per-query
@@ -15,13 +16,27 @@ class EntrySpec extends AnyFunSuite {
     assert(df.count() > 0)
   }
 
-  test("every query has deterministic output and every oracle key exists") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  test("registry: 306 distinct names, duplicates rejected, each twin names its query") {
+    val names = Registry.all.queries.map(_.name)
+    assert(names.size === 306)
+    assert(names.distinct.size === 306)
+
+    val q = Registry.all.queries.head
+    val e = intercept[IllegalArgumentException](new Registry(Seq(q, q.copy(sql = "SELECT 1"))))
+    assert(e.getMessage.contains(q.name))
+
+    val twins = Registry.all.entries.collect { case t: Twin => t.name }
+    assert(twins.size === 5)
+    for (t <- twins) {
+      val n = t.drop(1).takeWhile(_.isDigit)
+      assert(t.startsWith("x") && n.nonEmpty, t)
+      assert(names.exists(_.startsWith(s"q${n}_")), s"$t twins no q${n}_* query")
+    }
   }
 
   test("flagship queries run on sf0.001") {
     for (name <- Seq("q01_pricing_summary", "q10_ohlc_candles", "q13_atr_wilder")) {
-      assert(SparkEntry.queries(name)(spark, dir).count() > 0, name)
+      assert(Registry.all(name).build(spark, dir).count() > 0, name)
     }
   }
 }

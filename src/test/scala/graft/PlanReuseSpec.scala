@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Registry
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the exchange-reuse discipline the r12 plan audit installed: for
@@ -23,7 +24,7 @@ class PlanReuseSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
+      val plan = Registry.all(name).build(spark, sfDir)
         .queryExecution.executedPlan.toString
       plan.linesIterator
         .filter(l => l.contains("Scan parquet") || l.contains("FileScan parquet"))

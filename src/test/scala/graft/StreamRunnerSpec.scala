@@ -6,7 +6,7 @@ import graft.streaming.StreamingPipeline
 import graft.time.TradingCalendar
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,13 +59,13 @@ class StreamRunnerSpec extends AnyFunSuite {
 
   test("startup audit: checkpoint x sink matrix, no stream started") {
     val root = Files.createTempDirectory("graft-audit").toString
-    def cell(ckpt: Boolean, sink: Boolean): StreamRunner.Source = {
+    def cell(ckpt: Boolean, sink: Boolean, tsCol: String = "timestamp"): StreamRunner.Source = {
       val dir = Files.createTempDirectory(Paths.get(root), "cell").toString
       // an empty offsets/ dir is no checkpoint: only a written offset counts
       val offsets = Files.createDirectories(Paths.get(dir, "ckpt", "offsets"))
       if (ckpt) Files.write(offsets.resolve("0"), "v1".getBytes("UTF-8"))
       if (sink) Seq(("A_20260202_0915", "2026-02-02T09:15:00"))
-        .toDF("id", "timestamp").write.parquet(s"$dir/sink")
+        .toDF("id", tsCol).write.parquet(s"$dir/sink")
       val cfg = StreamRunner.Config(s"$dir/sink", s"$dir/dead", s"$dir/ckpt", s"$dir/log")
       val d = StreamRunner.startupAudit(spark, cfg)
       if (sink) assert(d.reason.contains("2026-02-02T09:15:00"), d.reason)
@@ -75,6 +75,9 @@ class StreamRunnerSpec extends AnyFunSuite {
     assert(cell(ckpt = false, sink = true) === StreamRunner.FromSink)
     assert(cell(ckpt = true, sink = false) === StreamRunner.FromLocal)
     assert(cell(ckpt = true, sink = true) === StreamRunner.FromLocal)
+    // a sink holding rows but no `timestamp` column is broken, not empty:
+    // auditing it as a cold start would re-emit every window it holds
+    intercept[AnalysisException](cell(ckpt = false, sink = true, tsCol = "ts"))
     assert(spark.streams.active.isEmpty)
   }
 
