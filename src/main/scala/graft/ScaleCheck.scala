@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Atr, Dedup, GapFill, Ohlc, Similarity}
+import graft.operators.{Atr, Dedup, GapFill, HashBase, Ohlc, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -463,10 +463,10 @@ object ScaleCheck {
     // the base-hash lever in isolation: identical signature pipeline, only
     // the per-shingle hash differs (noop write so the min-aggs aren't pruned)
     time(s"minhash signatures 64p (xxhash base) over $nDocs docs")(
-      Dedup.minhashSignatures(docs, 5, 64, Dedup.xxhashBase)
+      Dedup.minhashSignatures(docs, 5, 64, HashBase.Xx)
         .write.format("noop").mode("overwrite").save())
     time(s"minhash signatures 64p (md5-portable base) over $nDocs docs")(
-      Dedup.minhashSignatures(docs, 5, 64, Dedup.md5Base)
+      Dedup.minhashSignatures(docs, 5, 64, HashBase.Md5)
         .write.format("noop").mode("overwrite").save())
     // q53 scale path, BOTH execution strategies. The pair graph is cached
     // and counted first so (a) the timings are pure-CC marginal cost and
@@ -489,7 +489,7 @@ object ScaleCheck {
       graft.operators.CorpusPrep.prepare(docs, numPerms = 16, bands = 8).count())
     time(s"corpus prep (md5-portable base, 16x8) over $nDocs docs")(
       graft.operators.CorpusPrep.prepare(docs, numPerms = 16, bands = 8,
-        baseHash = Dedup.md5Base).count())
+        base = HashBase.Md5).count())
     time(s"corpus prep (production 64x16 xxhash) over $nDocs docs")(
       graft.operators.CorpusPrep.prepare(docs).count())
     // the q71 capstone: 4 extra gates (PII/classifier/mixture/split) fused
@@ -497,7 +497,7 @@ object ScaleCheck {
     time(s"corpus prep FULL stack (16x8 md5) over $nDocs docs")(
       graft.operators.CorpusPrep.prepareFull(
         docs.withColumn("source", concat(lit("src"), pmod(col("doc_id"), lit(20)))),
-        numPerms = 16, bands = 8, baseHash = Dedup.md5Base,
+        numPerms = 16, bands = 8, base = HashBase.Md5,
         classifierThreshold = -0.2,
         rates = Map("src0" -> 1.0, "src1" -> 0.75), defaultRate = 0.75).count())
     // ── the r5 additions (q55-q58), probed at the same docFactor ──

@@ -14,13 +14,13 @@ package object functions {
     def l2_norm(a: Column): Column = Shim.l2_norm(a)
   }
 
-  /** Winnowing fingerprints (md5-portable k-gram hashes, distinct sorted
+  /** Winnowing fingerprints (k-gram hashes under `base`, distinct sorted
     * window minima) as one native codegen expression → array<long>.
     */
   def winnow_fingerprints(text: Column, k: Int, w: Int,
-                          prodHash: Boolean = false): Column =
+                          base: graft.operators.HashBase): Column =
     org.apache.spark.sql.graftshim.WinnowFunctions
-      .winnow_fingerprints(text, k, w, prodHash)
+      .winnow_fingerprints(text, k, w, base)
 
   /** `conv(substring(md5(c), 1, width), 16, 10) :: long` as one native
     * codegen expression — bit-identical, one thread-local digest, no hex

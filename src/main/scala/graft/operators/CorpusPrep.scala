@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus preparation — the composition a data pipeline
@@ -23,16 +23,16 @@ object CorpusPrep {
 
   /** @return surviving (doc_id, n_tokens, quality) rows.
     *
-    * The MinHash stage is parameterized on its base hash because at corpus
+    * The MinHash stage is parameterized on its hash base because at corpus
     * scale the per-shingle digest dominates the whole pipeline's cost: the
-    * production default is [[Dedup.xxhashBase]] (codegen'd, digest-free);
-    * the md5-portable base ([[Dedup.md5Base]], 16 perms × 8 bands) exists
-    * only so the q52 oracle can replay the identical arithmetic in DuckDB.
+    * production default is [[HashBase.Xx]] (codegen'd, digest-free);
+    * [[HashBase.Md5]] (16 perms × 8 bands) exists only so the q52 oracle
+    * can replay the identical arithmetic in DuckDB.
     */
   def prepare(docs: DataFrame, minQuality: Double = 0.4, lang: String = "en",
               nearDupThreshold: Double = 0.5,
               numPerms: Int = 64, bands: Int = 16,
-              baseHash: Column => Column = Dedup.xxhashBase): DataFrame = {
+              base: HashBase = HashBase.Xx): DataFrame = {
     // every per-document signal (token count, quality composite, language
     // scores, exact-dedup fingerprint) is a row-local column expression —
     // compute them all in ONE scan of the corpus instead of one scan plus
@@ -61,7 +61,7 @@ object CorpusPrep {
     // (cluster label = min reachable doc_id through any chain of pairs)
     val nearDropped = Dedup.dupClusters(
       Dedup.minhashLshPairs(docs, numPerms = numPerms, bands = bands,
-        threshold = nearDupThreshold, baseHash = baseHash))
+        threshold = nearDupThreshold, base = base))
       .where(col("cluster_id") =!= col("doc_id"))
       .select("doc_id")
     gatedKept
@@ -90,26 +90,24 @@ object CorpusPrep {
   def prepareFull(docs: DataFrame, minQuality: Double = 0.4, lang: String = "en",
                   nearDupThreshold: Double = 0.5,
                   numPerms: Int = 64, bands: Int = 16,
-                  baseHash: Column => Column = Dedup.xxhashBase,
+                  base: HashBase = HashBase.Xx,
                   classifierThreshold: Double = -0.2,
                   rates: Map[String, Double] = Map.empty,
                   defaultRate: Double = 1.0,
-                  trainPct: Int = 90, valPct: Int = 5,
-                  hash32: Column => Column = TextAnalysis.md5Hash32): DataFrame = {
-    // `baseHash` drives the MinHash sketch; `hash32` drives the salted
-    // per-doc draws (classifier buckets/weights, mixture, split). A full
-    // production run passes Dedup.xxhashBase + TextAnalysis.xxHash32; the
-    // oracle instantiation (q71) keeps both md5.
+                  trainPct: Int = 90, valPct: Int = 5): DataFrame = {
+    // `base` drives both the MinHash sketch and the salted per-doc draws
+    // (classifier buckets/weights, mixture, split): the oracle
+    // instantiation (q71) runs md5, a production run xxhash64
     val scored = docs.select(Seq(
       col("doc_id"),
       TextAnalysis.nTokensExpr(col("text")).as("n_tokens"),
       TextAnalysis.qualityExpr(col("text")).as("quality"),
       md5(TextAnalysis.normalized(col("text"))).as("fingerprint"),
       TextAnalysis.piiFlagExpr(col("text")).as("has_pii"),
-      TextAnalysis.classifierScoreExpr(col("text"), hash32 = hash32).as("score"),
+      TextAnalysis.classifierScoreExpr(col("text"), base = base).as("score"),
       TextAnalysis.mixtureKeptExpr(col("source"), col("doc_id"), rates, defaultRate,
-        hash32).as("kept"),
-      TextAnalysis.splitExpr(trainPct, valPct, hash32).as("split")) ++
+        base).as("kept"),
+      TextAnalysis.splitExpr(trainPct, valPct, base).as("split")) ++
       TextAnalysis.langScoreCols(col("text")): _*)
     val perDoc = scored.select(col("doc_id"), col("n_tokens"), col("quality"),
       col("fingerprint"), col("has_pii"), col("score"), col("kept"), col("split"),
@@ -123,7 +121,7 @@ object CorpusPrep {
         col("score") > classifierThreshold && col("kept"))
     val nearDropped = Dedup.dupClusters(
       Dedup.minhashLshPairs(docs, numPerms = numPerms, bands = bands,
-        threshold = nearDupThreshold, baseHash = baseHash))
+        threshold = nearDupThreshold, base = base))
       .where(col("cluster_id") =!= col("doc_id"))
       .select("doc_id")
     gatedKept

@@ -143,20 +143,6 @@ object Dedup {
       .join(docSizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
   }
 
-  /** Base-hash families for the MinHash paths. The signature/banding
-    * machinery is hash-agnostic: production uses [[xxhashBase]] (codegen'd,
-    * cheap), the oracle-checked instantiation uses [[md5Base]]
-    * (`int(md5(shingle)[0:8], 16)`, exactly reproducible in any md5-capable
-    * engine). Both yield values in [0, 2³²) so the linear permutations
-    * below never overflow a signed 64-bit product in either engine.
-    */
-  val xxhashBase: Column => Column = s => pmod(xxhash64(s), lit(1L << 32))
-  val md5Base: Column => Column = s =>
-    graft.functions.md5_prefix_long(s, 8)
-
-  /** Prime > 2³² for the universal-hash permutation family. */
-  val MinhashPrime = 4294967311L
-
   /** Deterministic permutation coefficients: a_p ∈ [1, 2²⁸], b_p ∈ [0, 2²⁸)
     * from md5("perm#p") hex prefixes — data-independent, so they are
     * computed ONCE driver-side and embedded as literal arrays (like the LSH
@@ -176,66 +162,41 @@ object Dedup {
     * `h_p(s) = (a_p · h(s) + b_p) mod P` as pure integer arithmetic —
     * O(shingles) digests + O(perms · shingles) multiply-adds, instead of a
     * digest per (shingle, permutation).
-    *
-    * Physically this is one projection + one hash aggregate with numPerms
-    * `min` expressions: everything stays inside WholeStageCodegen with
-    * map-side partial mins (a higher-order `transform`/`array_min`
-    * formulation evaluates interpreted lambdas per element — measured ~5×
-    * slower at 5k docs × 64 perms).
     */
   def minhashSignatures(docs: DataFrame, n: Int = 5, numPerms: Int = 64,
-                        baseHash: Column => Column = xxhashBase): DataFrame =
-    minhashSignaturesFromTokens(tokenized(docs), n, numPerms, baseHash)
+                        base: HashBase = HashBase.Xx): DataFrame =
+    minhashSignaturesFromTokens(tokenized(docs), n, numPerms, base)
 
   /** [[minhashSignatures]] over a pre-tokenized (doc_id, w) relation.
     *
-    * For the two engine hash bases the signature is computed ROW-LOCALLY
-    * by one native expression ([[org.apache.spark.sql.graftshim.MinhashSignature]]):
-    * the exploded formulation paid a generated row, an aggregate-hash
-    * probe, and (via the groupBy) an exchange per SHINGLE to compute a
-    * per-DOC quantity from per-doc data. Bit-identical by construction
-    * and pinned by MinhashSigSpec against the exploded reference on both
-    * bases; a caller-supplied custom base still routes through the
-    * exploded pipeline (the expression bakes the hash in).
+    * The signature is computed ROW-LOCALLY by one native expression
+    * ([[org.apache.spark.sql.graftshim.MinhashSignature]]): the exploded
+    * formulation (shingles → base hashes → numPerms min-aggs per doc)
+    * paid a generated row, an aggregate-hash probe, and (via the groupBy)
+    * an exchange per SHINGLE to compute a per-DOC quantity from per-doc
+    * data. Bit-identical by construction; MinhashSigSpec keeps the
+    * exploded form as its reference and pins both bases against it.
     *
-    * Precondition: `toks` holds ONE row per `doc_id`. The native path
-    * emits one signature per input row, while the exploded path's
-    * groupBy merges a doc's rows into one — on duplicate doc ids the two
-    * disagree, so callers pass a per-doc relation ([[tokenized]] of a
-    * one-row-per-doc table is one).
+    * Precondition: `toks` holds ONE row per `doc_id` — one signature is
+    * emitted per input row ([[tokenized]] of a one-row-per-doc table is
+    * one).
     */
   def minhashSignaturesFromTokens(toks: DataFrame, n: Int = 5, numPerms: Int = 64,
-                                  baseHash: Column => Column = xxhashBase): DataFrame = {
-    val nativeXx: Option[Boolean] =
-      if (baseHash eq md5Base) Some(false)
-      else if (baseHash eq xxhashBase) Some(true)
-      else None
-    nativeXx match {
-      case Some(xx) =>
-        val (as, bs) = (0 until numPerms).map(permCoeff).unzip
-        toks.where(size(col("w")) >= n)
-          .select(col("doc_id"),
-            org.apache.spark.sql.graftshim.MinhashFunctions
-              .minhash_signature(col("w"), n, as, bs, xx).as("sig"))
-      case None =>
-        val h = shinglesFromTokens(toks, n).select(col("doc_id"), baseHash(col("shingle")).as("h"))
-        val aggs = (0 until numPerms).map { p =>
-          val (a, b) = permCoeff(p)
-          min((col("h") * a + b) % MinhashPrime).as(s"m$p")
-        }
-        h.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-          .select(col("doc_id"),
-            array((0 until numPerms).map(p => col(s"m$p")): _*).as("sig"))
-    }
+                                  base: HashBase = HashBase.Xx): DataFrame = {
+    val (as, bs) = (0 until numPerms).map(permCoeff).unzip
+    toks.where(size(col("w")) >= n)
+      .select(col("doc_id"),
+        org.apache.spark.sql.graftshim.MinhashFunctions
+          .minhash_signature(col("w"), n, as, bs, base).as("sig"))
   }
 
   /** Portable MinHash signatures as (doc_id, perm, minhash) rows: the
     * linear-permutation family over the md5 base hash, fully reproducible
-    * in any engine with md5 ([[minhashSignatures]] with [[md5Base]],
+    * in any engine with md5 ([[minhashSignatures]] with [[HashBase.Md5]],
     * row-shaped for the oracle compare).
     */
   def minhashPortable(docs: DataFrame, n: Int = 5, numPerms: Int = 16): DataFrame =
-    minhashSignatures(docs, n, numPerms, md5Base)
+    minhashSignatures(docs, n, numPerms, HashBase.Md5)
       .select(col("doc_id"), posexplode(col("sig")).as(Seq("perm", "minhash")))
       .select(col("doc_id"), col("perm").cast("long").as("perm"), col("minhash"))
 
@@ -246,7 +207,7 @@ object Dedup {
     */
   def minhashLshPairsPortable(docs: DataFrame, n: Int = 5, numPerms: Int = 16,
                               bands: Int = 8, threshold: Double = 0.2): DataFrame =
-    minhashLshPairs(docs, n, numPerms, bands, threshold, md5Base)
+    minhashLshPairs(docs, n, numPerms, bands, threshold, HashBase.Md5)
 
   /** MinHash + LSH near-dup pairs: band the signature (bands × rowsPerBand =
     * numPerms), bucket-join on (band index, band slice), then verify each
@@ -284,9 +245,8 @@ object Dedup {
 
   def minhashLshPairs(docs: DataFrame, n: Int = 5, numPerms: Int = 64,
                       bands: Int = 16, threshold: Double = 0.5,
-                      baseHash: Column => Column = xxhashBase): DataFrame =
-    minhashLshPairsFromTokens(tokenized(docs), n, numPerms, bands, threshold,
-      baseHash)
+                      base: HashBase = HashBase.Xx): DataFrame =
+    minhashLshPairsFromTokens(tokenized(docs), n, numPerms, bands, threshold, base)
 
   /** [[minhashLshPairs]] over a pre-tokenized (doc_id, w) relation — the
     * entry point for callers sharing one pinned token pass across sketch
@@ -294,14 +254,14 @@ object Dedup {
     */
   def minhashLshPairsFromTokens(toks: DataFrame, n: Int = 5, numPerms: Int = 64,
                                 bands: Int = 16, threshold: Double = 0.5,
-                                baseHash: Column => Column = xxhashBase): DataFrame = {
+                                base: HashBase = HashBase.Xx): DataFrame = {
     require(numPerms % bands == 0, "bands must divide numPerms")
     // the explicit repartition is a shared pinch-point: the signature
-    // pipeline (shingles → base hashes → 64 min-aggs) feeds three
+    // projection (tokenize + native signature) feeds three
     // consumers (both sides of the band join + the estimate re-join), and
     // an identical exchange lets Spark compute it ONCE and reuse the
     // shuffle output instead of re-running the pipeline per consumer
-    val sigs = minhashSignaturesFromTokens(toks, n, numPerms, baseHash)
+    val sigs = minhashSignaturesFromTokens(toks, n, numPerms, base)
       .repartition(col("doc_id"))
     // candidates carry IDS ONLY — signatures re-join after the distinct,
     // so the dedup shuffle moves 16-byte pairs, not 2×numPerms-long arrays
@@ -339,7 +299,7 @@ object Dedup {
 
   /** Portable 32-bit SimHash: token hash = int(md5(token)[0:8], 16), bit b
     * votes ±tf, bit set when the vote sum is positive — fully reproducible
-    * in any md5-capable engine (the oracle-checkable variant of [[simhash]]).
+    * in any md5-capable engine.
     * Output: (doc_id, simhash32).
     */
   def simhashPortable(docs: DataFrame): DataFrame = {
@@ -356,7 +316,7 @@ object Dedup {
     * 64-bit hash is two md5-prefix halves (`md5(tok + "#lo")` /
     * `md5(tok + "#hi")`), and the split output avoids signed-64 overflow in
     * engines with checked arithmetic — so the full 64-bit sketch is exactly
-    * reproducible in DuckDB (the oracle-checked variant of [[simhash]]).
+    * reproducible in DuckDB.
     * Output: (doc_id, simhash_lo, simhash_hi).
     */
   def simhash64Portable(docs: DataFrame): DataFrame =
@@ -605,21 +565,6 @@ object Dedup {
           bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).cast("long").as("hamming"))
       .where(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
-  }
-
-  /** 64-bit SimHash over whitespace tokens weighted by term frequency
-    * (xxhash64 fast path — same vote/pack structure as the portable
-    * variants, single long output). */
-  def simhash(docs: DataFrame): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(TextAnalysis.tokens(TextAnalysis.asciiLower(col("text")))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h", xxhash64(col("tok")))
-    val votes = voteBits(tf, 64, b => shiftright(col("h"), b))
-    votes.select(col("doc_id"),
-      (0 until 64).map(b =>
-        when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-        .reduce(_ bitwiseOR _).as("simhash"))
   }
 
   /** Duplicate-cluster canonicalization: connected components over a
@@ -1040,31 +985,6 @@ object Dedup {
         least(col("src_a"), col("src_b")).as("source_a"),
         greatest(col("src_a"), col("src_b")).as("source_b"))
       .agg(count(lit(1)).as("n_pairs"))
-  }
-
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, found via
-    * 16-bit band buckets (4 bands ⇒ any pair with ≤ 3 differing bits shares
-    * a band — pigeonhole), then exact bit_count verification.
-    */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sh = simhash(docs)
-    val banded = sh.select(col("doc_id"), col("simhash"),
-      explode(transform(sequence(lit(0), lit(3)),
-        b => struct(b.as("band"),
-          call_function("shiftright", col("simhash"), b * 16).bitwiseAND(0xFFFFL).as("key")))).as("bk"))
-      .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.key").as("key"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      // filter BEFORE the pair dedup (same plan as [[simhashPairsPortable]]):
-      // hamming is identical for every copy of a pair, and most band
-      // collisions fail the cut — discarding them first keeps the distinct
-      // shuffle to qualifying pairs only
-      .where(col("hamming") <= maxHamming)
-      .dropDuplicates("doc_a", "doc_b")
   }
 
   /** Fixed-iteration PageRank over the near-dup graph in exact integer
@@ -1890,7 +1810,7 @@ object Dedup {
                      bandCounts: Seq[Int] = Seq(2, 4, 8)): DataFrame = {
     require(bandCounts.forall(b => b > 0 && numPerms % b == 0),
       "every band count must divide numPerms")
-    val sig = minhashSignatures(docs, n, numPerms, md5Base)
+    val sig = minhashSignatures(docs, n, numPerms, HashBase.Md5)
     bandCounts.map { b =>
       val r = numPerms / b
       val est = { // 1 − ((2^r − 1)^b) / 2^numPerms, HALF_UP micro, exact

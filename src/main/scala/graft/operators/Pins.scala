@@ -23,10 +23,6 @@ import org.apache.spark.sql.SparkSession
   *     with dynamic allocation / spot executors, losing an executor makes
   *     every downstream stage of the pinned plan unrecoverable — use
   *     `reliable` there.
-  *   - `lazy`: lazy `localCheckpoint` — same lifetime and loss caveat,
-  *     but NO job runs at operator-construction time; blocks materialize
-  *     with the first action, so building a plan that is never executed
-  *     costs nothing.
   *   - `reliable`: `checkpoint(eager = true)` to the session's
   *     `SparkContext.setCheckpointDir` location — survives executor loss;
   *     costs a write to the checkpoint filesystem. Requires the
@@ -59,11 +55,10 @@ object Pins {
         spark.sparkContext.getCheckpointDir.isDefined))
     mode match {
       case "local"    => df.localCheckpoint(true)
-      case "lazy"     => df.localCheckpoint(false)
       case "reliable" => df.checkpoint(true)
       case "none"     => df
       case other => throw new IllegalArgumentException(
-        s"spark.graft.pin.mode=$other — expected local | lazy | reliable | none")
+        s"spark.graft.pin.mode=$other — expected local | reliable | none")
     }
   }
 

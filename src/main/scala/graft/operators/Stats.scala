@@ -1092,8 +1092,6 @@ object Stats {
     * Output: column, n, n_null, null_bp — ordered by column name.
     */
   def nullProfile(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     // one aggregate row, then an explode over the plan-time column dim —
     // a per-column union would re-run the scan once per column
     val agg = df.agg(count(lit(1)).as("__n"),

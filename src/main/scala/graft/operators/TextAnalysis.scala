@@ -425,18 +425,18 @@ object TextAnalysis {
     * scalable local-similarity fingerprint for plagiarism/near-dup.
     *
     * The per-row computation is one native codegen expression
-    * ([[graft.functions.winnow_fingerprints]]) with md5-portable k-gram
-    * hashes, so the output is oracle-reproducible and the plan stays inside
+    * ([[graft.functions.winnow_fingerprints]]); with the md5 k-gram base
+    * (the default) the output is oracle-reproducible and the plan stays inside
     * WholeStageCodegen (the round-1 HOF formulation was interpreter-bound).
     * Output: doc_id, fingerprints array<long> (distinct, sorted).
     */
   def winnowingFingerprints(docs: DataFrame, k: Int = 8, w: Int = 4,
-                            prodHash: Boolean = false): DataFrame =
+                            base: HashBase = HashBase.Md5): DataFrame =
     docs
       .select(col("doc_id"), normalized(col("text")).as("norm"))
       .where(length(col("norm")) >= k + w - 1)
       .select(col("doc_id"),
-        graft.functions.winnow_fingerprints(col("norm"), k, w, prodHash)
+        graft.functions.winnow_fingerprints(col("norm"), k, w, base)
           .as("fingerprints"))
 
   /** Copied-span pair detection over winnowing fingerprints — the LOCAL
@@ -454,7 +454,7 @@ object TextAnalysis {
     */
   def winnowOverlapPairs(docs: DataFrame, k: Int = 8, w: Int = 4,
                          minShared: Int = 3, maxDf: Int = 50,
-                         prodHash: Boolean = false): DataFrame = {
+                         base: HashBase = HashBase.Md5): DataFrame = {
     // pinch-point exchange (sharedShinglePairStats' discipline): the
     // winnowing expression — the entry's dominant cost — feeds the df cap
     // AND both self-join sides; one explicit repartition makes all three
@@ -464,7 +464,7 @@ object TextAnalysis {
     // optimizer infers them on the join branches only, and a one-filter
     // difference defeats ReuseExchange (r12 plan audit: the winnow
     // explode ran twice here)
-    val fps = winnowingFingerprints(docs, k, w, prodHash)
+    val fps = winnowingFingerprints(docs, k, w, base)
       .select(col("doc_id"), explode(col("fingerprints")).as("fp"))
       .where(col("fp").isNotNull && col("doc_id").isNotNull)
       .repartition(col("doc_id"), col("fp"))
@@ -1448,7 +1448,7 @@ object TextAnalysis {
     docs.select(col("doc_id") +: col("source") +: langScoreCols(col("text")): _*)
       .withColumn("predicted_lang", predictedFromScores)
       .withColumn("__u", pmod(
-        md5Hash32(concat(lit(salt + ":"), col("doc_id").cast("string"))),
+        HashBase.Md5(concat(lit(salt + ":"), col("doc_id").cast("string"))),
         lit(10000L)))
       .withColumn("rk", row_number().over(w).cast("long"))
       .where(col("rk") <= n)
@@ -1660,28 +1660,11 @@ object TextAnalysis {
     * Pure column exprs, no shuffle.
     * Output: doc_id, bucket (0-99), split (train|val|test).
     */
-  /** The deterministic-salt hash base, 32-bit unsigned over a string
-    * column — the same dual-path discipline as [[Dedup.md5Base]] /
-    * [[Dedup.xxhashBase]]: [[md5Hash32]] (default everywhere) is
-    * recomputable in any md5-capable engine and is what every oracle
-    * replays; [[xxHash32]] is the production path — codegen'd, no
-    * per-call digest allocation, measured ~an order of magnitude
-    * cheaper per call — for runs where cross-engine replay is not
-    * needed. Both feed identical downstream arithmetic (mod cuts,
-    * weight scaling, orderings), so swapping the base changes WHICH
-    * docs land where but no distributional property: split/mixture/
-    * budget draws stay uniform, classifiers stay mean-of-weights.
-    */
-  val md5Hash32: Column => Column =
-    s => graft.functions.md5_prefix_long(s, 8)
-  val xxHash32: Column => Column =
-    s => pmod(xxhash64(s), lit(1L << 32))
-
   private def splitBucket: Column = splitBucketOf(col("doc_id"))
 
   private def splitBucketOf(id: Column,
-                            hash32: Column => Column = md5Hash32): Column =
-    pmod(hash32(id.cast("string")), lit(100L))
+                            base: HashBase = HashBase.Md5): Column =
+    pmod(base(id.cast("string")), lit(100L))
 
   private def splitLabel(bucket: Column, trainPct: Int, valPct: Int): Column =
     when(bucket < trainPct, "train")
@@ -1691,14 +1674,14 @@ object TextAnalysis {
   /** The split label as a pure column over `doc_id` — exposed for
     * [[CorpusPrep]] fusion. */
   def splitExpr(trainPct: Int = 90, valPct: Int = 5,
-                hash32: Column => Column = md5Hash32): Column =
-    splitLabel(splitBucketOf(col("doc_id"), hash32), trainPct, valPct)
+                base: HashBase = HashBase.Md5): Column =
+    splitLabel(splitBucketOf(col("doc_id"), base), trainPct, valPct)
 
   def hashSplit(docs: DataFrame, trainPct: Int = 90, valPct: Int = 5,
-                hash32: Column => Column = md5Hash32): DataFrame = {
+                base: HashBase = HashBase.Md5): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100,
       "train/val percentages must fit in 100")
-    docs.select(col("doc_id"), splitBucketOf(col("doc_id"), hash32).as("bucket"))
+    docs.select(col("doc_id"), splitBucketOf(col("doc_id"), base).as("bucket"))
       .withColumn("split", splitLabel(col("bucket"), trainPct, valPct))
   }
 
@@ -1718,11 +1701,11 @@ object TextAnalysis {
     */
   def datasetManifest(docs: DataFrame, trainPct: Int = 90,
                       valPct: Int = 5,
-                      hash32: Column => Column = md5Hash32): DataFrame =
+                      base: HashBase = HashBase.Md5): DataFrame =
     docs.select(col("doc_id"), col("source"),
       size(tokens(asciiLower(col("text")))).cast("long").as("__ntok"),
-      hash32(col("text")).as("__h"),
-      splitExpr(trainPct, valPct, hash32).as("split"))
+      base(col("text")).as("__h"),
+      splitExpr(trainPct, valPct, base).as("split"))
       .groupBy(col("split"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("__ntok")).as("n_tokens"),
@@ -1823,7 +1806,7 @@ object TextAnalysis {
     */
   def clusterAwareSplit(docs: DataFrame, clusters: DataFrame,
                         trainPct: Int = 90, valPct: Int = 5,
-                        hash32: Column => Column = md5Hash32): DataFrame = {
+                        base: HashBase = HashBase.Md5): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100,
       "train/val percentages must fit in 100")
     docs.select(col("doc_id"))
@@ -1831,7 +1814,7 @@ object TextAnalysis {
         Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
       .withColumn("split",
-        splitLabel(splitBucketOf(col("cluster_id"), hash32), trainPct, valPct))
+        splitLabel(splitBucketOf(col("cluster_id"), base), trainPct, valPct))
   }
 
   /** Train→holdout leakage audit — after splitting, which TRAINING
@@ -1925,7 +1908,7 @@ object TextAnalysis {
     // CONSTRUCTION; blocks then live until the ContextCleaner GCs the
     // dead plan. A long-lived session running many independent queries
     // should sweep between them (Pins.sweepAll — what Bench/Verify do)
-    // or set spark.graft.pin.mode=lazy|none (see Pins scaladoc).
+    // or set spark.graft.pin.mode=none (see Pins scaladoc).
     val lines = Pins.pin(docs.select(col("doc_id"),
       posexplode(split(col("text"), "\n")).as(Seq("pos", "line"))))
     val boiler = lines.select(col("line"), col("doc_id")).distinct()
@@ -1973,11 +1956,11 @@ object TextAnalysis {
     * [[qualityExpr]]) so composed pipelines ([[CorpusPrep]]) can fuse the
     * gate into the one corpus scan. */
   def classifierScoreExpr(text: Column, numBuckets: Int = 1024,
-                          hash32: Column => Column = md5Hash32): Column = {
+                          base: HashBase = HashBase.Md5): Column = {
     require(numBuckets > 0, "need at least one feature bucket")
-    def bucket(t: Column): Column = pmod(hash32(t), lit(numBuckets.toLong))
+    def bucket(t: Column): Column = pmod(base(t), lit(numBuckets.toLong))
     def weight(b: Column): Column =
-      hash32(concat(lit("w:"), b.cast("string")))
+      base(concat(lit("w:"), b.cast("string")))
         .cast("double") / lit(2147483648.0) - lit(1.0)
     val toks = tokens(asciiLower(text))
     round(
@@ -1989,12 +1972,12 @@ object TextAnalysis {
 
   def hashedClassifierScore(docs: DataFrame, numBuckets: Int = 1024,
                             threshold: Double = 0.0,
-                            hash32: Column => Column = md5Hash32): DataFrame =
+                            base: HashBase = HashBase.Md5): DataFrame =
     docs.select(col("doc_id"),
       // null text has zero tokens, not a null count (the oracle's
       // LEFT JOIN + coalesce(n_tokens, 0) convention)
       coalesce(nTokensExpr(col("text")), lit(0L)).as("n_tokens"),
-      classifierScoreExpr(col("text"), numBuckets, hash32).as("score"))
+      classifierScoreExpr(col("text"), numBuckets, base).as("score"))
       .withColumn("keep", col("score") > threshold)
 
   /** Deterministic domain-mixture sampling — training corpora are blended
@@ -2009,36 +1992,36 @@ object TextAnalysis {
     */
   /** The mixture hash draw in [0, 10000) as a pure column over the doc id. */
   def mixtureUExpr(docId: Column,
-                   hash32: Column => Column = md5Hash32): Column =
-    pmod(hash32(concat(lit("mix:"), docId.cast("string"))), lit(10000L))
+                   base: HashBase = HashBase.Md5): Column =
+    pmod(base(concat(lit("mix:"), docId.cast("string"))), lit(10000L))
 
   /** The mixture keep verdict as a pure column — exposed for [[CorpusPrep]]
     * fusion. Rates resolve to integer cuts at plan time (a literal
     * when-chain over the small config map). */
   def mixtureKeptExpr(source: Column, docId: Column, rates: Map[String, Double],
                       defaultRate: Double,
-                      hash32: Column => Column = md5Hash32): Column = {
+                      base: HashBase = HashBase.Md5): Column = {
     require((rates.values ++ Seq(defaultRate)).forall(r => r >= 0.0 && r <= 1.0),
       "rates must be in [0, 1]")
     def cut(r: Double): Long = math.round(r * 10000)
     val cutCol = rates.toSeq.sortBy(_._1).foldLeft(lit(cut(defaultRate))) {
       case (acc, (src, r)) => when(source === src, lit(cut(r))).otherwise(acc)
     }
-    mixtureUExpr(docId, hash32) < cutCol
+    mixtureUExpr(docId, base) < cutCol
   }
 
   def mixtureSample(docs: DataFrame, rates: Map[String, Double],
                     defaultRate: Double = 1.0,
-                    hash32: Column => Column = md5Hash32): DataFrame =
+                    base: HashBase = HashBase.Md5): DataFrame =
     docs.select(col("doc_id"), col("source"),
-      mixtureUExpr(col("doc_id"), hash32).as("u"),
+      mixtureUExpr(col("doc_id"), base).as("u"),
       mixtureKeptExpr(col("source"), col("doc_id"), rates, defaultRate,
-        hash32).as("kept"))
+        base).as("kept"))
 
   /** Weight-proportional reproducible sampling WITHOUT replacement — the
     * Efraimidis–Spirakis exponential-key draw (A-ES), derandomized: each
     * doc's uniform u ∈ (0,1] is a salted md5 prefix of its id (the
-    * [[md5Hash32]] discipline — same doc, same key, any engine, any
+    * [[HashBase.Md5]] discipline — same doc, same key, any engine, any
     * partitioning, no RNG), its priority key is −ln(u)/w, and the sample
     * is the n SMALLEST keys — inclusion probability proportional to the
     * weight w, exactly the draw a mixture pipeline needs when "sample
@@ -2056,8 +2039,8 @@ object TextAnalysis {
   def weightedSample(docs: DataFrame, n: Int = 200,
                      weightCol: Column = col("n_chars"),
                      salt: String = "ws",
-                     hash32: Column => Column = md5Hash32): DataFrame = {
-    val h = hash32(concat(lit(salt + ":"), col("doc_id").cast("string")))
+                     base: HashBase = HashBase.Md5): DataFrame = {
+    val h = base(concat(lit(salt + ":"), col("doc_id").cast("string")))
     val lnMicro = floor(
       -log((h + lit(1L)).cast("double") / lit(4294967296.0)) * 1e6 + 0.5)
       .cast("long")
@@ -2210,7 +2193,7 @@ object TextAnalysis {
     * token in the drawn stream).
     */
   def tokenBudgetSample(docs: DataFrame, budgetTokens: Long,
-                        prodHash: Boolean = false): DataFrame = {
+                        base: HashBase = HashBase.Md5): DataFrame = {
     require(budgetTokens >= 0, "token budget cannot be negative")
     // ordering hash: the md5 path orders by the full hex digest (what
     // every engine replays); the production path orders by the 32-bit
@@ -2218,15 +2201,16 @@ object TextAnalysis {
     // (equally uniform) draw order, an order of magnitude cheaper. Both
     // take their bucket from the hash's top byte, so (bucket, h) is the
     // global hash order and the 256 buckets stay uniform by construction.
+    val draw = concat(lit("draw:"), col("doc_id").cast("string"))
+    val (h, bucket) = base match {
+      case HashBase.Md5 => (md5(draw), conv(substring(col("h"), 1, 2), 16, 10).cast("long"))
+      case HashBase.Xx => (HashBase.Xx(draw), expr("h div 16777216"))
+    }
     val counted = docs
       .select(col("doc_id"), nTokensExpr(col("text")).as("n_tokens"))
       .where(col("n_tokens") > 0)
-      .withColumn("h",
-        if (prodHash) xxHash32(concat(lit("draw:"), col("doc_id").cast("string")))
-        else md5(concat(lit("draw:"), col("doc_id").cast("string"))))
-      .withColumn("bucket",
-        if (prodHash) expr("h div 16777216")
-        else conv(substring(col("h"), 1, 2), 16, 10).cast("long"))
+      .withColumn("h", h)
+      .withColumn("bucket", bucket)
     val bucketTotals = counted.groupBy("bucket")
       .agg(sum("n_tokens").as("bucket_tokens"))
     val bw = Window.orderBy("bucket")

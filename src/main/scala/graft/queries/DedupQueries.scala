@@ -283,7 +283,7 @@ object DedupQueries {
     // code is spec-covered
     Query("q40_minhash_lsh", (s, dir) =>
       Dedup.minhashLshPairs(Tables.documents(s, dir), numPerms = 64, bands = 16,
-        threshold = 0.2, baseHash = Dedup.md5Base)
+        threshold = 0.2, base = HashBase.Md5)
         .orderBy("doc_a", "doc_b"),
       """WITH w AS (
         |  SELECT doc_id,
@@ -350,7 +350,7 @@ object DedupQueries {
     Query("q53_dup_clusters", (s, dir) =>
       Dedup.dupClusters(
         Dedup.minhashLshPairs(Tables.documents(s, dir), numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
+          threshold = 0.2, base = HashBase.Md5))
         .orderBy("doc_id"),
       """WITH RECURSIVE w AS (
         |  SELECT doc_id,
@@ -401,7 +401,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       TextAnalysis.clusterAwareSplit(docs,
         Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
+          threshold = 0.2, base = HashBase.Md5)))
         .orderBy("doc_id")
     },
       // LSH cluster chain shared with q92 via LshClusterSql — one source of
@@ -422,7 +422,7 @@ object DedupQueries {
         docs.select(col("doc_id"),
           TextAnalysis.qualityExpr(col("text")).as("quality")),
         Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)),
+          threshold = 0.2, base = HashBase.Md5)),
         scoreCol = "quality").orderBy("doc_id")
     },
       // replays the LSH clusters (q78's chain), the quality score (q77's),
@@ -474,7 +474,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       Dedup.dupDegreeHistogram(docs,
         Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8, threshold = 0.2,
-          baseHash = Dedup.md5Base)).orderBy("degree")
+          base = HashBase.Md5)).orderBy("degree")
     },
       // the q53 pair CTE (pr) → per-doc degree → histogram; degree-0
       // rows from the corpus left join
@@ -493,7 +493,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       Dedup.removalReasonReport(docs,
         Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
+          threshold = 0.2, base = HashBase.Md5)))
         .orderBy("source", "reason")
     },
       // one verdict per doc under exact > near_dup > kept precedence;
@@ -593,7 +593,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       Dedup.clusterSizeReport(docs,
         Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
+          threshold = 0.2, base = HashBase.Md5)))
         .orderBy("size")
     },
       s"""WITH RECURSIVE $LshClusterSql,
@@ -610,7 +610,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       Dedup.pageRank(docs,
         Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8, threshold = 0.2,
-          baseHash = Dedup.md5Base), iters = 2).orderBy("doc_id")
+          base = HashBase.Md5), iters = 2).orderBy("doc_id")
     },
       // the shared LSH pair chain up to `edges`, then two unrolled
       // integer-tick matvec rounds — floor division at every step
@@ -638,7 +638,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       Dedup.clusterManifest(
         Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base)))
+          threshold = 0.2, base = HashBase.Md5)))
         .orderBy("cluster_id")
     },
       // the shared label chain, then size + ordered first-10 CSV per
@@ -665,7 +665,7 @@ object DedupQueries {
       val toks = Dedup.tokenized(docs)
       Dedup.pairAgreement(
         Dedup.minhashLshPairsFromTokens(toks, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base),
+          threshold = 0.2, base = HashBase.Md5),
         Dedup.simhashPairsPortableFromTokens(toks))
     },
       // both shared pair chains in ONE WITH clause (disjoint CTE names),
@@ -694,7 +694,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       Dedup.editDistanceVerify(docs,
         Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
+          threshold = 0.2, base = HashBase.Md5))
         .orderBy("doc_a", "doc_b")
     },
       // Levenshtein over the same 500-char prefixes; floor-bp similarity,
@@ -836,7 +836,7 @@ object DedupQueries {
     Query("q194_cluster_source_mix", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.dupClusters(Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
+          threshold = 0.2, base = HashBase.Md5))
         .join(docs.select("doc_id", "source"), Seq("doc_id"))
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("size"),
@@ -861,7 +861,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       Dedup.editDistanceVerify(docs,
         Dedup.minhashLshPairs(docs, numPerms = 16, bands = 8,
-          threshold = 0.2, baseHash = Dedup.md5Base))
+          threshold = 0.2, base = HashBase.Md5))
         .agg(count(lit(1)).as("n_candidates"),
           sum((col("sim_bp") >= 8000L).cast("long")).as("n_verified"))
         .select(col("n_candidates"),

@@ -20,7 +20,8 @@ sealed trait Entry {
 final case class Query(name: String, build: (SparkSession, String) => DataFrame, sql: String)
   extends Entry
 
-/** Bench-only production-hash twin of the query with the same number.
+/** Bench-only production-hash twin of the query with the same number: the
+  * same builder with `HashBase.Xx` where the query passes `HashBase.Md5`.
   * xxhash64 is not recomputable in an md5-only oracle engine, so a twin has
   * no SQL; the swap's correctness is spec-pinned instead (same survivor
   * shape / independent recompute in DedupSimilaritySpec). Bench runs the

@@ -127,7 +127,7 @@ object TextQueries {
     // covered to keep the same survivor set on the fixture corpus)
     Query("q52_corpus_prep", (s, dir) =>
       CorpusPrep.prepare(Tables.documents(s, dir), numPerms = 16, bands = 8,
-        baseHash = Dedup.md5Base).orderBy("doc_id"),
+        base = HashBase.Md5).orderBy("doc_id"),
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
         |    CAST(length(text) AS BIGINT) AS n_chars,
@@ -313,7 +313,7 @@ object TextQueries {
         |  FROM h)
         |SELECT doc_id, unnest(fps) AS fingerprint FROM wins ORDER BY doc_id, fingerprint""".stripMargin),
     Twin("x45_winnowing_prod", (s, dir) =>
-      TextAnalysis.winnowingFingerprints(Tables.documents(s, dir), prodHash = true)
+      TextAnalysis.winnowingFingerprints(Tables.documents(s, dir), base = HashBase.Xx)
         .select(col("doc_id"), explode(col("fingerprints")).as("fingerprint"))
         .orderBy("doc_id", "fingerprint")),
     Query("q55_repetition", (s, dir) =>
@@ -524,8 +524,7 @@ object TextQueries {
         |FROM documents d LEFT JOIN s ON s.doc_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin),
     Twin("x67_quality_classifier_prod", (s, dir) =>
-      TextAnalysis.hashedClassifierScore(Tables.documents(s, dir),
-        hash32 = TextAnalysis.xxHash32)),
+      TextAnalysis.hashedClassifierScore(Tables.documents(s, dir), base = HashBase.Xx)),
     Query("q68_mixture_sample", (s, dir) =>
       TextAnalysis.mixtureSample(Tables.documents(s, dir), MixtureRates, defaultRate = 0.1)
         .orderBy("doc_id"),
@@ -571,7 +570,7 @@ object TextQueries {
     // rates are high, so every gate drops some docs but none annihilates
     Query("q71_corpus_prep_full", (s, dir) =>
       CorpusPrep.prepareFull(piiDecorated(Tables.documents(s, dir)),
-        numPerms = 16, bands = 8, baseHash = Dedup.md5Base,
+        numPerms = 16, bands = 8, base = HashBase.Md5,
         classifierThreshold = -0.2,
         rates = MixtureRates, defaultRate = 0.75).orderBy("doc_id"),
       s"""WITH RECURSIVE dd AS (
@@ -710,10 +709,9 @@ object TextQueries {
          |ORDER BY q.doc_id""".stripMargin),
     Twin("x71_corpus_prep_full_prod", (s, dir) =>
       CorpusPrep.prepareFull(piiDecorated(Tables.documents(s, dir)),
-        numPerms = 16, bands = 8, // default xxhashBase sketch + xx salts
+        numPerms = 16, bands = 8, base = HashBase.Xx,
         classifierThreshold = -0.2,
-        rates = MixtureRates, defaultRate = 0.75,
-        hash32 = TextAnalysis.xxHash32).orderBy("doc_id")),
+        rates = MixtureRates, defaultRate = 0.75).orderBy("doc_id")),
     // contextLen 512 ~ corpus mean doc ≈ 120 tokens, so packs hold several
     // docs and boundary straddles genuinely occur; bucketSize 64 forces the
     // two-phase prefix sum through MANY buckets (the scale path), not one
@@ -804,7 +802,7 @@ object TextQueries {
         |FROM p WHERE start_offset < 12000 ORDER BY doc_id""".stripMargin),
     Twin("x74_token_budget_prod", (s, dir) =>
       TextAnalysis.tokenBudgetSample(Tables.documents(s, dir),
-        budgetTokens = 12000L, prodHash = true).orderBy("doc_id")),
+        budgetTokens = 12000L, base = HashBase.Xx).orderBy("doc_id")),
     // q72's plan materialized: docs split exactly at pack boundaries,
     // every pack but the last holds precisely 512 tokens
     Query("q79_pack_sequences", (s, dir) =>
@@ -951,8 +949,7 @@ object TextQueries {
         |       CAST(sum(h) AS BIGINT) AS content_sum
         |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     Twin("x96_manifest_prod", (s, dir) =>
-      TextAnalysis.datasetManifest(Tables.documents(s, dir),
-        hash32 = TextAnalysis.xxHash32)
+      TextAnalysis.datasetManifest(Tables.documents(s, dir), base = HashBase.Xx)
         .orderBy("split", "source")),
     // dataset-version diff: v1 = the mixture-kept subset (src0 kept
     // whole, src1 dropped whole, the rest half), v2 = the full corpus —

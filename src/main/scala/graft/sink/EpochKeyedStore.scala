@@ -116,6 +116,8 @@ final class EpochKeyedStore(dir: String,
     s"partitionCols ${partitionCols.mkString(",")} must be covered by mergeKeys " +
       s"${mergeKeys.mkString(",")} or pruning predicates cannot push through the merge")
 
+  import EpochKeyedStore.{Member, Snapshot}
+
   private val layout = new EpochLayout("epoch=")
 
   /** One file per epoch for an unpartitioned store; a partitioned store
@@ -152,10 +154,6 @@ final class EpochKeyedStore(dir: String,
           "outside its epoch layout (move it out, or load it through upsert)")
   }
 
-  /** One committed epoch of a read, with the schema its marker recorded
-    * (None for a marker written before schemas were recorded). */
-  private final case class Member(epoch: Long, path: Path, recorded: Option[StructType])
-
   /** A committed epoch participates in the read only if it actually holds
     * data files. The recorded `files=` count (written at commit) makes the
     * empty case checkable: zero files against a recorded zero (or an older
@@ -178,17 +176,6 @@ final class EpochKeyedStore(dir: String,
       case _ => Option.when(actual > 0)(Member(epoch, p, marker.schema))
     }
   }
-
-  /** The committed members visible at one listing instant: the newest
-    * committed base, the newest committed merge above it, and the
-    * committed deltas above both. [[foldOnce]] folds exactly one snapshot,
-    * so deltas committed WHILE a background fold runs are simply not in it
-    * — they carry higher epoch numbers, stay above the published base, and
-    * keep winning the merge.
-    */
-  private final case class Snapshot(base: Option[Member],
-                                    merge: Option[Member],
-                                    deltas: Seq[Member])
 
   private def snapshot(f: FileSystem): Snapshot = {
     requireOnlyTiers(f)
@@ -539,4 +526,21 @@ final class EpochKeyedStore(dir: String,
     else w.parquet(target.toString)
     layout.commit(f, target, Some(merged.schema))
   }
+}
+
+object EpochKeyedStore {
+  /** One committed epoch of a read, with the schema its marker recorded
+    * (None for a marker written before schemas were recorded). */
+  private final case class Member(epoch: Long, path: Path, recorded: Option[StructType])
+
+  /** The committed members visible at one listing instant: the newest
+    * committed base, the newest committed merge above it, and the
+    * committed deltas above both. `foldOnce` folds exactly one snapshot,
+    * so deltas committed WHILE a background fold runs are simply not in it
+    * — they carry higher epoch numbers, stay above the published base, and
+    * keep winning the merge.
+    */
+  private final case class Snapshot(base: Option[Member],
+                                    merge: Option[Member],
+                                    deltas: Seq[Member])
 }

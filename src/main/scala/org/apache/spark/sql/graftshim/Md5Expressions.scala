@@ -5,35 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputT
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** Shared MessageDigest instance per thread for the md5-prefix expressions —
-  * `DigestUtils.md5Hex` (what Spark's `md5()` calls) looks the algorithm up
-  * in the JCA provider registry on EVERY call; at one digest per shingle
-  * that lookup plus the 32-char hex string it returns are pure overhead.
-  */
-object Md5Helper {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** The unsigned value of the first `width` HEX DIGITS (nibbles) of
-    * md5(bytes) — bit-identical to
-    * `conv(substring(md5(x), 1, width), 16, 10)` parsed as a long.
-    * `width` ≤ 15 so the value fits a signed 64-bit integer.
-    */
-  def prefixLong(bytes: Array[Byte], width: Int): Long = {
-    val h = md.get().digest(bytes) // digest() resets the instance
-    var v = 0L
-    var i = 0
-    while (i < width) {
-      val b = h(i >> 1) & 0xFF
-      v = (v << 4) | (if ((i & 1) == 0) b >>> 4 else b & 0xF)
-      i += 1
-    }
-    v
-  }
-}
-
 /** `conv(substring(md5(x), 1, width), 16, 10) :: long` as ONE native
   * codegen expression.
   *
@@ -60,11 +31,11 @@ case class Md5PrefixLong(child: Expression, width: Int)
   override def prettyName: String = "graft_md5_prefix_long"
 
   override def nullSafeEval(input: Any): Any =
-    Md5Helper.prefixLong(input.asInstanceOf[Array[Byte]], width)
+    RowHash.md5PrefixLong(input.asInstanceOf[Array[Byte]], width)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftshim.Md5Helper.prefixLong($c, $width)")
+      s"org.apache.spark.sql.graftshim.RowHash.md5PrefixLong($c, $width)")
 
   override protected def withNewChildInternal(newChild: Expression): Md5PrefixLong =
     copy(child = newChild)

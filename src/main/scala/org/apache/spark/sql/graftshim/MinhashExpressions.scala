@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import graft.operators.HashBase
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -19,11 +20,8 @@ import org.apache.spark.sql.types._
   * expression computes the identical signature in one tight loop per row
   * and removes the aggregate and its exchange from every MinHash pipeline.
   *
-  * Hash bases mirror [[WinnowUtil]]: `xx = false` is the md5-prefix base
-  * (`int(md5(s)[0:8], 16)` — [[graft.operators.Dedup.md5Base]], what every
-  * oracle replays); `xx = true` is the production base
-  * (`pmod(xxhash64(s), 2^32)` — [[graft.operators.Dedup.xxhashBase]]; the
-  * low 32 bits ARE the mod for two's-complement longs). Permutation
+  * Each shingle is hashed with the row-local form of `base`
+  * ([[graft.operators.HashBase]]), chosen once per row. Permutation
   * coefficients arrive as literals (they are data-independent md5 draws,
   * computed once driver-side — see `Dedup.permCoeff`).
   *
@@ -38,28 +36,11 @@ import org.apache.spark.sql.types._
   */
 object MinhashUtil {
 
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private def md5Prefix(md: java.security.MessageDigest, s: String): Long = {
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
-
-  private def xxPrefix(s: String): Long = {
-    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L) &
-      0xffffffffL
-  }
-
+  /** Prime > 2³² for the universal-hash permutation family. */
   val MinhashPrime = 4294967311L
 
   def signature(w: ArrayData, n: Int, a: Array[Long], b: Array[Long],
-                xx: Boolean): ArrayData = {
+                base: HashBase): ArrayData = {
     val len = w.numElements()
     if (len < n) return null
     val numPerms = a.length
@@ -73,7 +54,7 @@ object MinhashUtil {
     }
     val seen = new java.util.HashSet[String]()
     val sb = new java.lang.StringBuilder()
-    val md = if (xx) null else digest.get()
+    val hash = base.row
     i = 0
     while (i + n <= len) {
       // array_join semantics: null tokens are skipped, and the delimiter
@@ -92,7 +73,7 @@ object MinhashUtil {
       }
       val g = sb.toString
       if (seen.add(g)) {
-        val h = if (xx) xxPrefix(g) else md5Prefix(md, g)
+        val h = hash.applyAsLong(g)
         var p = 0
         while (p < numPerms) {
           val v = (h * a(p) + b(p)) % MinhashPrime
@@ -108,7 +89,7 @@ object MinhashUtil {
 
 case class MinhashSignature(child: Expression, n: Int,
                             aCoeffs: Seq[Long], bCoeffs: Seq[Long],
-                            xx: Boolean)
+                            base: HashBase)
     extends UnaryExpression with ExpectsInputTypes {
 
   require(n >= 1 && aCoeffs.nonEmpty && aCoeffs.length == bCoeffs.length,
@@ -123,15 +104,16 @@ case class MinhashSignature(child: Expression, n: Int,
   @transient private lazy val bArr = bCoeffs.toArray
 
   override def nullSafeEval(w: Any): Any =
-    MinhashUtil.signature(w.asInstanceOf[ArrayData], n, aArr, bArr, xx)
+    MinhashUtil.signature(w.asInstanceOf[ArrayData], n, aArr, bArr, base)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
     val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
+    val baseRef = ctx.addReferenceObj("hashBase", base, classOf[HashBase].getName)
     nullSafeCodeGen(ctx, ev, c => {
       s"""
          |${ev.value} = org.apache.spark.sql.graftshim.MinhashUtil.signature(
-         |  $c, $n, $aRef, $bRef, $xx);
+         |  $c, $n, $aRef, $bRef, $baseRef);
          |${ev.isNull} = (${ev.value} == null);
        """.stripMargin
     })
@@ -144,7 +126,7 @@ case class MinhashSignature(child: Expression, n: Int,
 object MinhashFunctions {
   /** Column API: see [[MinhashSignature]]. */
   def minhash_signature(w: Column, n: Int, aCoeffs: Seq[Long],
-                        bCoeffs: Seq[Long], xx: Boolean): Column =
+                        bCoeffs: Seq[Long], base: HashBase): Column =
     ColumnBridge.column(MinhashSignature(ColumnBridge.expression(w),
-      n, aCoeffs, bCoeffs, xx))
+      n, aCoeffs, bCoeffs, base))
 }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import graft.operators.HashBase
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -12,10 +13,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * string, take the minimum hash of each sliding window of `w` consecutive
   * k-gram hashes, and return the distinct minima sorted ascending.
   *
-  * The k-gram hash is the md5-prefix scheme shared with the portable
-  * MinHash/SimHash variants (`int(md5(kgram)[0:8], 16)`), so the exact
-  * fingerprints are reproducible in any md5-capable engine — this is what
-  * makes q45 oracle-checkable in DuckDB.
+  * The k-gram hash is the row-local form of a [[graft.operators.HashBase]]:
+  * with `Md5` (`int(md5(kgram)[0:8], 16)`, shared with the portable
+  * MinHash/SimHash variants) the exact fingerprints are reproducible in any
+  * md5-capable engine — this is what makes q45 oracle-checkable in DuckDB;
+  * `Xx` is the production base, whose digest-free hash removes the
+  * dominant CPU cost of the portable variant.
   *
   * Replaces the round-1 higher-order-function formulation
   * (`transform(sequence(...), i => xxhash64(substr(...)))` + nested `least`),
@@ -26,53 +29,22 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object WinnowUtil {
 
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Unsigned 32-bit value of the first 4 md5 bytes of s's UTF-8 encoding —
-    * identical to DuckDB's `('0x' || substr(md5(s), 1, 8))::BIGINT`.
-    */
-  private def md5Prefix(md: java.security.MessageDigest, s: String): Long = {
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
-
-  /** 32-bit fold of Spark's xxhash64 (seed 42) over s's UTF-8 bytes —
-    * identical to the engine-wide production base
-    * `pmod(xxhash64(s), 2^32)` ([[graft.operators.Dedup.xxhashBase]]):
-    * the low 32 bits ARE the mathematical mod for two's-complement
-    * longs. No digest allocation, no hex round-trip — this is what makes
-    * the production path cheap: md5-per-k-gram is the dominant CPU cost
-    * of the portable variant.
-    */
-  private def xxPrefix(s: String): Long = {
-    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L) &
-      0xffffffffL
-  }
-
   /** Distinct sorted window minima of the k-gram hashes of `norm`.
     * K-grams are slices of Unicode code points (matching Spark's `length`
     * and DuckDB's `substr` character semantics, not UTF-16 code units).
-    * `xx = false` hashes k-grams with the md5-prefix base (oracle-
-    * portable); `xx = true` with the xxhash64 fold (production).
+    * K-grams are hashed with `base`, chosen once per row.
     * Returns an empty array when the string is shorter than k + w − 1.
     */
-  def fingerprints(norm: UTF8String, k: Int, w: Int, xx: Boolean): ArrayData = {
+  def fingerprints(norm: UTF8String, k: Int, w: Int, base: HashBase): ArrayData = {
     val cps = norm.toString.codePoints().toArray
     val n = cps.length
     val m = n - k + 1 // number of k-grams
     if (m < w) return new GenericArrayData(Array.emptyLongArray)
-    val md = if (xx) null else digest.get()
+    val hash = base.row
     val h = new Array[Long](m)
     var i = 0
     while (i < m) {
-      val g = new String(cps, i, k)
-      h(i) = if (xx) xxPrefix(g) else md5Prefix(md, g)
+      h(i) = hash.applyAsLong(new String(cps, i, k))
       i += 1
     }
     // O(m) sliding-window minimum via monotonic index deque
@@ -103,11 +75,10 @@ object WinnowUtil {
 }
 
 /** `graft_winnow(text, k, w)` → array<long> of distinct sorted winnowing
-  * fingerprints; `xx = true` selects the production xxhash64 base.
+  * fingerprints under `base`.
   * See [[WinnowUtil.fingerprints]].
   */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int,
-                              xx: Boolean = false)
+case class WinnowFingerprints(child: Expression, k: Int, w: Int, base: HashBase)
     extends UnaryExpression with ExpectsInputTypes {
 
   require(k >= 1 && w >= 1, "k and w must be positive")
@@ -117,21 +88,21 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int,
   override def prettyName: String = "graft_winnow"
 
   override def nullSafeEval(s: Any): Any =
-    WinnowUtil.fingerprints(s.asInstanceOf[UTF8String], k, w, xx)
+    WinnowUtil.fingerprints(s.asInstanceOf[UTF8String], k, w, base)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val baseRef = ctx.addReferenceObj("hashBase", base, classOf[HashBase].getName)
     defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftshim.WinnowUtil.fingerprints($c, $k, $w, $xx)")
+      s"org.apache.spark.sql.graftshim.WinnowUtil.fingerprints($c, $k, $w, $baseRef)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
     copy(child = newChild)
 }
 
 object WinnowFunctions {
-  /** Column API for [[WinnowFingerprints]]; `prodHash` selects the
-    * xxhash64 base over the md5-portable default. */
-  def winnow_fingerprints(text: Column, k: Int, w: Int,
-                          prodHash: Boolean = false): Column =
+  /** Column API for [[WinnowFingerprints]]. */
+  def winnow_fingerprints(text: Column, k: Int, w: Int, base: HashBase): Column =
     ColumnBridge.column(
-      WinnowFingerprints(ColumnBridge.expression(text), k, w, prodHash))
+      WinnowFingerprints(ColumnBridge.expression(text), k, w, base))
 }

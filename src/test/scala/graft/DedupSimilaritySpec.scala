@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CorpusPrep, Dedup, Similarity, TextAnalysis}
+import graft.operators.{CorpusPrep, Dedup, HashBase, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,36 +40,30 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("simhash: identical docs collide, near-dups are close, unrelated far") {
-    val h = Dedup.simhash(docs).as[(Long, Long)].collect().toMap
-    assert(h(1L) === h(4L))
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(h(1L), h(2L)) < ham(h(1L), h(3L)))
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 3)
+  test("simhashPairsPortable filter-first plan returns exactly the banded pairs within the cut") {
+    val pairs = Dedup.simhashPairsPortable(docs, maxHamming = 3)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 4L)))
-  }
-
-  test("simhashPairs filter-first plan returns exactly the banded pairs within the cut") {
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 3)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    // brute-force reference: every id pair sharing a 16-bit band whose
-    // exact Hamming distance makes the cut — the filter/dedup order in the
-    // plan must not change this set
-    val h = Dedup.simhash(docs).as[(Long, Long)].collect().toMap
-    def bands(x: Long) = (0 until 4).map(b => (b, (x >>> (b * 16)) & 0xFFFFL)).toSet
+    // brute-force reference: every id pair sharing a 16-bit band of the
+    // (lo, hi) halves whose exact Hamming distance makes the cut — the
+    // filter/dedup order in the plan must not change this set
+    val h = Dedup.simhash64Portable(docs)
+      .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
+    def bands(x: (Long, Long)) = Set((0, x._1 & 0xFFFFL), (1, x._1 >>> 16),
+      (2, x._2 & 0xFFFFL), (3, x._2 >>> 16))
+    def ham(a: (Long, Long), b: (Long, Long)) =
+      java.lang.Long.bitCount(a._1 ^ b._1) + java.lang.Long.bitCount(a._2 ^ b._2)
     val ids = h.keys.toSeq.sorted
     val expected = (for {
       a <- ids; b <- ids
       if a < b
       if bands(h(a)).intersect(bands(h(b))).nonEmpty
-      if java.lang.Long.bitCount(h(a) ^ h(b)) <= 3
+      if ham(h(a), h(b)) <= 3
     } yield (a, b)).toSet
     assert(pairs === expected)
     assert(pairs.contains((1L, 4L)))
   }
 
-  test("portable 64-bit simhash halves behave like the fast 64-bit sketch") {
+  test("portable 64-bit simhash halves") {
     val h = Dedup.simhash64Portable(docs)
       .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
     // halves stay within unsigned 32-bit range (DuckDB-safe)
@@ -86,7 +80,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("minhash LSH code path is hash-agnostic: md5-base instantiation finds the same near-dup") {
-    val pairs = Dedup.minhashLshPairs(docs, threshold = 0.3, baseHash = Dedup.md5Base)
+    val pairs = Dedup.minhashLshPairs(docs, threshold = 0.3, base = HashBase.Md5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
@@ -160,7 +154,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("corpus prep: production xxhash base keeps the same survivor set as the oracle base") {
     val portable = CorpusPrep.prepare(docs, minQuality = 0.0,
-      numPerms = 16, bands = 8, baseHash = Dedup.md5Base)
+      numPerms = 16, bands = 8, base = HashBase.Md5)
       .select("doc_id").as[Long].collect().toSet
     val prod = CorpusPrep.prepare(docs, minQuality = 0.0)
       .select("doc_id").as[Long].collect().toSet
@@ -630,14 +624,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
     ).toDF("doc_id", "text", "source")
     val rates = Map("drop_src" -> 0.0)
     val out = CorpusPrep.prepareFull(corpus, numPerms = 16, bands = 8,
-      baseHash = Dedup.md5Base, classifierThreshold = -1.0, rates = rates)
+      base = HashBase.Md5, classifierThreshold = -1.0, rates = rates)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getString(4))).toMap
     // expected survivors: prepare's quality/lang/exact/near-dup core (same
     // params) ∩ PII-clean ∩ mixture-kept (classifier gate open at -1.0:
     // every score is a mean of weights in (-1, 1))
     val core = CorpusPrep.prepare(corpus, numPerms = 16, bands = 8,
-      baseHash = Dedup.md5Base)
+      base = HashBase.Md5)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val piiClean = TextAnalysis.piiScan(corpus).where(!col("has_pii"))
       .select("doc_id").as[Long].collect().toSet
@@ -659,7 +653,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(out(1L)._4 === split1)
     // an impossible classifier bar (> 1.0) annihilates through the same plan
     assert(CorpusPrep.prepareFull(corpus, numPerms = 16, bands = 8,
-      baseHash = Dedup.md5Base, classifierThreshold = 1.0, rates = rates)
+      base = HashBase.Md5, classifierThreshold = 1.0, rates = rates)
       .count() === 0L)
   }
 
@@ -1237,10 +1231,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
       XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L) & 0xffffffffL
     }
     // the JVM-side fold used by winnowing IS the engine-wide column base
-    // (pmod(xxhash64(s), 2^32)) — one hash family across all prod paths
-    val viaColumn = Seq("abc", "", "ünïcode 字").toDF("s")
-      .select(graft.operators.TextAnalysis.xxHash32(col("s"))).as[Long].collect()
-    assert(viaColumn === Array(xx32("abc"), xx32(""), xx32("ünïcode 字")))
+    // (pmod(xxhash64(s), 2^32)) — one hash family across all prod paths;
+    // each base's row-local form equals its Column form
+    val strs = Seq("abc", "", "ünïcode 字")
+    val viaColumn = strs.toDF("s").select(HashBase.Xx(col("s"))).as[Long].collect()
+    assert(viaColumn.toSeq === strs.map(xx32))
+    for (b <- Seq(HashBase.Md5, HashBase.Xx))
+      assert(strs.toDF("s").select(b(col("s"))).as[Long].collect().toSeq ===
+        strs.map(b.row.applyAsLong), b.toString)
     // winnowing prod path: independent naive recompute (O(m·w) window min)
     val norm = "the quick brown fox jumps over the lazy dog again and again"
     val k = 8; val w = 4
@@ -1249,7 +1247,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val naive = hs.sliding(w).map(_.min).toSeq.distinct.sorted
     val got = Seq((1L, norm)).toDF("doc_id", "text")
     val fp = graft.operators.TextAnalysis
-      .winnowingFingerprints(got, k, w, prodHash = true)
+      .winnowingFingerprints(got, k, w, HashBase.Xx)
       .select(explode(col("fingerprints"))).as[Long].collect().toSeq
     assert(fp === naive)
     // salted draws keep their distributional contract under the swap:
@@ -1257,26 +1255,26 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // manifest totals preserved cell-to-cell
     val ids = (0L until 2000L).map(i => (i, s"src${i % 4}", s"document body $i"))
       .toDF("doc_id", "source", "text")
-    val splits = TextAnalysis.hashSplit(ids, hash32 = TextAnalysis.xxHash32)
+    val splits = TextAnalysis.hashSplit(ids, base = HashBase.Xx)
       .groupBy("split").count().as[(String, Long)].collect().toMap
     assert(math.abs(splits("train") - 1800L) < 100)
     assert(splits("val") > 40 && splits("test") > 40)
     val mixed = TextAnalysis.mixtureSample(ids,
       Map("src0" -> 1.0, "src1" -> 0.0), defaultRate = 0.5,
-      hash32 = TextAnalysis.xxHash32)
+      base = HashBase.Xx)
       .groupBy("source").agg(sum(when(col("kept"), 1).otherwise(0)).as("k"),
         count(lit(1)).as("n"))
       .as[(String, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(mixed("src0")._1 === mixed("src0")._2) // rate 1 keeps all
     assert(mixed("src1")._1 === 0L)               // rate 0 drops all
     val m5 = TextAnalysis.datasetManifest(ids)
-    val mx = TextAnalysis.datasetManifest(ids, hash32 = TextAnalysis.xxHash32)
+    val mx = TextAnalysis.datasetManifest(ids, base = HashBase.Xx)
     def totals(df: org.apache.spark.sql.DataFrame) =
       df.agg(sum("n_docs"), sum("n_tokens")).as[(Long, Long)].collect().head
     assert(totals(m5) === totals(mx)) // cells move with the split; mass doesn't
     // prod token-budget draw equals a driver-side naive sort+scan
     val budget = 600L
-    val drawn = TextAnalysis.tokenBudgetSample(ids, budget, prodHash = true)
+    val drawn = TextAnalysis.tokenBudgetSample(ids, budget, HashBase.Xx)
       .select("doc_id", "start_offset").as[(Long, Long)].collect().toMap
     val naiveOrder = (0L until 2000L).map(i => (xx32(s"draw:$i"), i)).sorted
     var off = 0L
@@ -1296,8 +1294,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val expected = BigDecimal(toks.map(w32).sum / toks.size)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val score = TextAnalysis.hashedClassifierScore(
-      Seq((1L, "Alpha beta ALPHA")).toDF("doc_id", "text"),
-      hash32 = TextAnalysis.xxHash32)
+      Seq((1L, "Alpha beta ALPHA")).toDF("doc_id", "text"), base = HashBase.Xx)
       .select("score").as[Double].collect().head
     assert(score === expected)
   }
@@ -2075,7 +2072,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     ).toDF("doc_id", "text", "source")
     val got = Dedup.removalReasonReport(docs4,
       Dedup.dupClusters(Dedup.minhashLshPairs(docs4, numPerms = 16, bands = 8,
-        threshold = 0.2, baseHash = Dedup.md5Base)))
+        threshold = 0.2, base = HashBase.Md5)))
       .as[(String, String, Long, Long)].collect()
     val byReason = got.map(r => r._2 -> r._3).toMap
     // doc 4 is an exact copy of doc 1 (exact_dup even though it also sits
@@ -2878,7 +2875,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (1L << 19) -> 20, (1L << 25) -> 20, 0L -> 20)
     ranks.foreach { case (w, want) =>
       val got = spark.range(1).select(
-        graft.operators.Sketch.hllRankExpr(w.toString).cast("int")).head.getInt(0)
+        graft.operators.Sketch.hllRankExpr(w.toString).cast("int")).head().getInt(0)
       assert(got === want, s"rank($w)")
     }
     val ev = (1 to 400).map(i => (s"t${i % 4}", i.toLong)).toDF("et", "uid")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Engagement
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, HashBase}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,15 +23,15 @@ class MinhashSigSpec extends AnyFunSuite {
       java.lang.Long.parseLong(hex.substring(8, 15), 16))
   }
 
-  /** The pre-r13 exploded pipeline, verbatim, as the reference. */
+  /** The pre-r13 exploded pipeline, verbatim, as the reference, over the
+    * base's Column form. */
   private def referenceSigs(toks: org.apache.spark.sql.DataFrame, n: Int,
-                            numPerms: Int,
-                            baseHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
+                            numPerms: Int, base: HashBase) = {
     val h = Dedup.shinglesFromTokens(toks, n)
-      .select(col("doc_id"), baseHash(col("shingle")).as("h"))
+      .select(col("doc_id"), base(col("shingle")).as("h"))
     val aggs = (0 until numPerms).map { p =>
       val (a, b) = permCoeff(p)
-      min((col("h") * a + b) % Dedup.MinhashPrime).as(s"m$p")
+      min((col("h") * a + b) % 4294967311L).as(s"m$p") // the prime > 2³²
     }
     h.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
       .select(col("doc_id"),
@@ -50,9 +50,9 @@ class MinhashSigSpec extends AnyFunSuite {
   test("native MinHash signature == exploded reference, md5 base") {
     val toks = corpus(7, 60).toDF("doc_id", "w")
     for ((n, perms) <- Seq((5, 16), (2, 16), (3, 64))) {
-      val got = Dedup.minhashSignaturesFromTokens(toks, n, perms, Dedup.md5Base)
+      val got = Dedup.minhashSignaturesFromTokens(toks, n, perms, HashBase.Md5)
         .as[(Long, Seq[Long])].collect().toMap
-      val want = referenceSigs(toks, n, perms, Dedup.md5Base)
+      val want = referenceSigs(toks, n, perms, HashBase.Md5)
         .as[(Long, Seq[Long])].collect().toMap
       assert(got === want, s"n=$n perms=$perms")
     }
@@ -61,9 +61,9 @@ class MinhashSigSpec extends AnyFunSuite {
   test("native MinHash signature == exploded reference, xxhash base") {
     val toks = corpus(11, 60).toDF("doc_id", "w")
     for ((n, perms) <- Seq((5, 16), (2, 32))) {
-      val got = Dedup.minhashSignaturesFromTokens(toks, n, perms, Dedup.xxhashBase)
+      val got = Dedup.minhashSignaturesFromTokens(toks, n, perms, HashBase.Xx)
         .as[(Long, Seq[Long])].collect().toMap
-      val want = referenceSigs(toks, n, perms, Dedup.xxhashBase)
+      val want = referenceSigs(toks, n, perms, HashBase.Xx)
         .as[(Long, Seq[Long])].collect().toMap
       assert(got === want, s"n=$n perms=$perms")
     }
@@ -72,19 +72,8 @@ class MinhashSigSpec extends AnyFunSuite {
   test("docs with fewer than n tokens are dropped, exactly like the reference") {
     val toks = Seq((1L, Seq("a", "b")), (2L, Seq("a", "b", "c", "d", "e")),
       (3L, Seq.empty[String])).toDF("doc_id", "w")
-    val got = Dedup.minhashSignaturesFromTokens(toks, 5, 16, Dedup.md5Base)
+    val got = Dedup.minhashSignaturesFromTokens(toks, 5, 16, HashBase.Md5)
       .select("doc_id").as[Long].collect().toSet
     assert(got === Set(2L))
-  }
-
-  test("a custom hash base still routes through the exploded pipeline") {
-    val custom: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      s => pmod(xxhash64(s, lit(7)), lit(1L << 32))
-    val toks = corpus(3, 10).toDF("doc_id", "w")
-    val got = Dedup.minhashSignaturesFromTokens(toks, 5, 8, custom)
-      .as[(Long, Seq[Long])].collect().toMap
-    val want = referenceSigs(toks, 5, 8, custom)
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(got === want)
   }
 }

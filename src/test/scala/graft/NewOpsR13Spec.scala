@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Pins, Stats}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 pins: the deployment-derived Pins default, and the in-plan
