@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Atr, Dedup, GapFill, HashBase, Ohlc, Similarity}
+import graft.operators.{Atr, ChunkedJoin, Dedup, GapFill, HashBase, Ohlc, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -926,10 +926,6 @@ object ScaleCheck {
       graft.operators.Stats.paretoFrontier(
         graft.operators.TextAnalysis.qualityScore(docs),
         "quality", "n_tokens").count())
-    // q220: candidates fan out on rare-token postings; replica families
-    // are the near-dup clusters, so pair volume is family-bounded
-    time(s"prefix-filter exact Jaccard join over $nDocs docs")(
-      Dedup.prefixFilterJaccardPairs(docs, 19, 20).count())
     // q220 production path: exact-set collapse + pigeonhole bucket
     // agreement — candidate volume tracks bucket-subset collisions,
     // not single-token postings
@@ -987,13 +983,14 @@ object ScaleCheck {
       // construction; every chunk pair of the 7 all-docs-hot commons —
       // the N²/chunk² quadratic threat, cross-chunk ones first — must
       // prune wholesale under the chunk-level positional bound
-      def cpRelation(n: Int) =
-        Dedup.prefixChunkPairs(Dedup.prefixPostings(baseOf(n), 1, 2), 1, 2)
+      def cpRelation(n: Int) = Dedup.prefixChunkPairs(
+        ChunkedJoin.chunkIds(Dedup.prefixPostings(baseOf(n), 1, 2), Seq("tok"), Dedup.bySize),
+        1, 2)
       val cpA = time(s"prefix-filter feasible CHUNK PAIRS, $nA hot docs")(
         cpRelation(nA).count())
       val cpB = time(s"prefix-filter feasible CHUNK PAIRS, $nB hot docs")(
         cpRelation(nB).count())
-      val cpCross = cpRelation(nB).where(col("lo") =!= col("hi")).count()
+      val cpCross = cpRelation(nB).where(col("clo") =!= col("chi")).count()
       assert(cpCross == 0,
         s"chunk-pair wholesale pruning regressed: $cpCross CROSS-chunk " +
           "feasible pairs on a corpus where the positional bound kills every " +
@@ -1088,7 +1085,11 @@ object ScaleCheck {
         Dedup.bandedHamming64PairsRaw(crowd, 3)
           .groupBy(spark_partition_id().as("p"))
           .agg(count(lit(1)).as("n")).collect())
+      def spread(label: String, ns: Seq[Long]): Unit =
+        println(f"[scale] $label spread: ${ns.length} partitions, " +
+          f"max share ${ns.max.toDouble / ns.sum * 100}%.1f%%")
       val rawTotal = byPart.map(_.getLong(1)).sum
+      spread("banded crowd", byPart.map(_.getLong(1)).toSeq)
       assert(rawTotal == 4 * expect, // every pair meets in all 4 bands
         s"banded crowd completeness regressed: $rawTotal raw rows vs ${4 * expect}")
       assert(byPart.length >= minSpread,
@@ -1103,6 +1104,7 @@ object ScaleCheck {
         Dedup.exactJaccardPairs(famDocs, 19, 20)
           .groupBy(spark_partition_id().as("p"))
           .agg(count(lit(1)).as("n")).collect())
+      spread("mega-family", famParts.map(_.getLong(1)).toSeq)
       assert(famParts.map(_.getLong(1)).sum == expect,
         s"mega-family pair count regressed: ${famParts.map(_.getLong(1)).sum} vs $expect")
       assert(famParts.length >= minSpread,
@@ -1122,6 +1124,7 @@ object ScaleCheck {
         Dedup.chunkedKeyedPairs(posts, 19, 20)
           .groupBy(spark_partition_id().as("p"))
           .agg(count(lit(1)).as("n")).collect())
+      spread("hot-key candidate join", candParts.map(_.getLong(1)).toSeq)
       assert(candParts.map(_.getLong(1)).sum == expect,
         s"hot-key candidate count regressed: ${candParts.map(_.getLong(1)).sum} vs $expect")
       assert(candParts.length >= minSpread,

@@ -382,19 +382,14 @@ object Dedup {
     * for every copy of a pair, and most band collisions fail it —
     * discarding first keeps the distinct shuffle to qualifying pairs.
     *
-    * Hot-key discipline (the exact-Jaccard [[chunkedKeyedPairs]] shape):
-    * a 16-bit band key shared by a whole crowd — flat-color/letterboxed
-    * images posting identical dHash bands, boilerplate templates doing
-    * the same for SimHash — would otherwise pair inside ONE join task.
-    * Each key's postings split into id-ordered 512-row chunks; the join
-    * distributes over (band, key, chunk-pair), so a crowd of f docs
-    * squares across (f/512)²/2 tasks instead of one. No wholesale
-    * chunk-pair prune exists for Hamming (unlike the θ size window),
-    * so every chunk pair survives — the discipline here is purely
-    * spreading the irreducible pair work. Pair canonicalization is
-    * unchanged: chunks are id-ordered, so lo-chunk < hi-chunk already
+    * Hot keys ([[ChunkedJoin]]): a 16-bit band key shared by a whole
+    * crowd — flat-color/letterboxed images posting identical dHash
+    * bands, boilerplate templates doing the same for SimHash — splits
+    * into id-ordered chunks. No wholesale chunk-pair prune exists for
+    * Hamming (unlike the θ size window), so every chunk pair lo ≤ hi
+    * survives. Chunks are id-ordered, so lo-chunk < hi-chunk already
     * implies id_a < id_b and the original predicate applies verbatim —
-    * the output is byte-identical to the flat self-join.
+    * the output is identical to the flat self-join.
     */
   private[graft] def bandedHamming64Pairs(hashes: DataFrame,
                                           maxHamming: Int): DataFrame =
@@ -411,9 +406,20 @@ object Dedup {
                                              maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       "4×16-bit banding is complete only up to Hamming 3")
-    val chunk = 512
-    val parts = hashes.sparkSession.sessionState.conf.numShufflePartitions
-    val banded = hashes.select(col("id"), col("lo"), col("hi"),
+    val banded = hammingBands(hashes)
+    ChunkedJoin(banded, banded, Seq("band", "key"), Seq(col("id")))(
+        (l, _) => chunkPairsUpTo(l, Seq("band", "key")))
+      .where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), pairHamming)
+      .where(col("hamming") <= maxHamming)
+  }
+
+  /** The four 16-bit band keys of a 64-bit (id, lo, hi) sketch relation:
+    * (id, lo, hi, band, key), one row per band. The posting relation of
+    * the banded and multi-probe joins and of
+    * [[graft.streaming.HammingStream]]'s index. */
+  private[graft] def hammingBands(hashes: DataFrame): DataFrame =
+    hashes.select(col("id"), col("lo"), col("hi"),
       explode(array(
         struct(lit(0).as("band"), col("lo").bitwiseAND(0xFFFFL).as("key")),
         struct(lit(1).as("band"),
@@ -424,59 +430,30 @@ object Dedup {
       )).as("bk"))
       .select(col("id"), col("lo"), col("hi"),
         col("bk.band").as("band"), col("bk.key").as("key"))
-    val wKey = Window.partitionBy(col("band"), col("key")).orderBy(col("id"))
-    // the EXPLICIT-count repartition on the chunked key is load-bearing:
-    // a chunk pair's join INPUT is ≤ 1024 thin rows but its output is up
-    // to 512² pairs, and AQE's coalescing reads input sizes only — left
-    // to itself it folds every chunk of a hot key back into one task
-    // (REPARTITION_BY_NUM shuffles are exempt from coalescing, and the
-    // pair join executes in this partitioning whichever side broadcasts)
-    // px is consumed three times (chunk census + both join sides) and
-    // exchange reuse does NOT hold across AQE query stages, so each
-    // consumer re-derives it from `hashes` — callers with an expensive
-    // sketch/decode upstream MUST pin their hashes relation (all three
-    // in-repo callers localCheckpoint a ≤ 24-byte-per-doc sketch; the
-    // unpinned pHash caller re-ran its image decode per consumer,
-    // 4.8 s of decode inflating the operator to 28 s). Deliberately NO
-    // pin here: the posting relation is 4× wider, and session-lived
-    // pinned blocks accumulate — a full bench sweep measurably slowed
-    // UNRELATED decode queries (q178 1.8 s → 4.8 s) before the pins
-    // were moved caller-side and shrunk. The repartition must stay
-    // BELOW the joins and carry an explicit count: a checkpoint above
-    // it erases partitioning metadata, handing the joins plain
-    // coalescible exchanges, and AQE folds the crowd back into one
-    // task (measured: 30 partitions → 1)
-    val px = banded.withColumn("cid",
-      ((row_number().over(wKey) - 1) / chunk).cast("long"))
-      .repartition(parts, col("band"), col("key"), col("cid"))
-    val chunks = px.select(col("band"), col("key"), col("cid")).distinct()
-    val cp = chunks.as("x").join(chunks.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+
+  /** Exact Hamming distance of a [[ChunkedJoin]] row of two (lo, hi)
+    * sketches, as `hamming`. */
+  private[graft] val pairHamming: Column =
+    (bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
+      bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).cast("long").as("hamming")
+
+  /** Every chunk pair lo ≤ hi of one key: the chunk-pair relation of a
+    * self-join with no chunk-level prune. */
+  private def chunkPairsUpTo(chunked: DataFrame, key: Seq[String]): DataFrame = {
+    val chunks = chunked.select((key :+ "cid").map(col): _*).distinct()
+    chunks.as("x").join(chunks.as("y"),
+        key.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
           col("x.cid") <= col("y.cid"))
-      .select(col("x.band").as("band"), col("x.key").as("key"),
-        col("x.cid").as("clo"), col("y.cid").as("chi"))
-    // shuffle_hash hints pin the join STRATEGY, not just the partition
-    // count: on a small corpus both px sides fit under the broadcast
-    // threshold, Spark broadcasts them, and the thin chunk-pair relation
-    // becomes the streamed side — AQE-coalesced to ONE partition, putting
-    // the crowd's whole quadratic emission back in one task (measured:
-    // the 10k-crowd probe emitted 50M rows in 1 partition). Forcing
-    // shuffled joins keeps the BY_NUM-partitioned px exchanges in the
-    // join, and their coalescing exemption anchors the output spread at
-    // every corpus size
-    px.select(col("band"), col("key"), col("cid").as("clo"),
-        col("id").as("id_a"), col("lo").as("lo_a"), col("hi").as("hi_a"))
-      .join(cp.hint("shuffle_hash"), Seq("band", "key", "clo"))
-      .join(px.select(col("band"), col("key"), col("cid").as("chi"),
-          col("id").as("id_b"), col("lo").as("lo_b"), col("hi").as("hi_b"))
-          .hint("shuffle_hash"),
-        Seq("band", "key", "chi"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
-          bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
+      .select(key.map(k => col(s"x.$k").as(k)) ++
+        Seq(col("x.cid").as("clo"), col("y.cid").as("chi")): _*)
   }
+
+  /** Every chunk of `l` against every chunk of `r` under one key: the
+    * chunk-pair relation of a probe join with no chunk-level prune. */
+  private[graft] def chunkPairsAcross(l: DataFrame, r: DataFrame,
+                                      key: Seq[String]): DataFrame =
+    l.select(key.map(col) :+ col("cid").as("clo"): _*).distinct()
+      .join(r.select(key.map(col) :+ col("cid").as("chi"): _*).distinct(), key)
 
   /** SimHash near-dup pairs at Hamming budgets the 4-band join can't
     * reach (4–7) via MULTI-PROBE banding — the standard LSH trick of
@@ -509,60 +486,26 @@ object Dedup {
     * the lower id's probe set (one-bit flips are symmetric: if
     * hamming(key_a, key_b) ≤ 1 then key_b ∈ probes(a) AND key_a ∈
     * probes(b), so orienting on id_a < id_b loses nothing); exact
-    * bit_count verifies. Both sides carry the id-ordered 512-row
-    * chunk discipline on their (band, key) postings — a flat-image /
-    * boilerplate crowd shares exact AND probed keys, so the probe
-    * side is 17× as crowd-prone as the exact join, not less.
+    * bit_count verifies. Both sides are chunked by id on their
+    * (band, key) postings ([[ChunkedJoin]]) and every probe chunk meets
+    * every index chunk of its key — a flat-image / boilerplate crowd
+    * shares exact AND probed keys, so the probe side is 17× as
+    * crowd-prone as the exact join, not less.
     * Expects (id, lo, hi); output (id_a < id_b, hamming).
     */
   private[graft] def multiProbeHamming64Pairs(hashes: DataFrame,
                                               maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 7,
       "4×16-bit banding with one-bit probes is complete only up to Hamming 7")
-    val chunk = 512
-    val banded = hashes.select(col("id"), col("lo"), col("hi"),
-      explode(array(
-        struct(lit(0).as("band"), col("lo").bitwiseAND(0xFFFFL).as("key")),
-        struct(lit(1).as("band"),
-          call_function("shiftright", col("lo"), lit(16)).bitwiseAND(0xFFFFL).as("key")),
-        struct(lit(2).as("band"), col("hi").bitwiseAND(0xFFFFL).as("key")),
-        struct(lit(3).as("band"),
-          call_function("shiftright", col("hi"), lit(16)).bitwiseAND(0xFFFFL).as("key"))
-      )).as("bk"))
-      .select(col("id"), col("lo"), col("hi"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    val parts = hashes.sparkSession.sessionState.conf.numShufflePartitions
-    val wKey = Window.partitionBy(col("band"), col("key")).orderBy(col("id"))
-    // explicit-count repartitions on the chunked keys (see
-    // bandedHamming64PairsRaw): AQE's input-sized coalescing would fold
-    // a crowd's chunks back into one task otherwise
-    val idx = banded.withColumn("cid",
-      ((row_number().over(wKey) - 1) / chunk).cast("long"))
-      .repartition(parts, col("band"), col("key"), col("cid"))
+    val banded = hammingBands(hashes)
     val probeKeys = col("key") +:
       (0 until 16).map(b => col("key").bitwiseXOR(lit(1L << b)))
-    val prb = banded
-      .select(col("id"), col("lo"), col("hi"), col("band"),
-        explode(array(probeKeys: _*)).as("key"))
-      .withColumn("pid", ((row_number().over(wKey) - 1) / chunk).cast("long"))
-      .repartition(parts, col("band"), col("key"), col("pid"))
-    val cp = prb.select(col("band"), col("key"), col("pid")).distinct()
-      .join(idx.select(col("band"), col("key"), col("cid")).distinct(),
-        Seq("band", "key"))
-    // shuffle_hash: see bandedHamming64PairsRaw — without it a small
-    // corpus broadcasts both posting sides and streams the thin
-    // probe-pair relation in one AQE-coalesced partition
-    prb.select(col("band"), col("key"), col("pid"),
-        col("id").as("id_a"), col("lo").as("lo_a"), col("hi").as("hi_a"))
-      .join(cp.hint("shuffle_hash"), Seq("band", "key", "pid"))
-      .join(idx.select(col("band"), col("key"), col("cid"),
-          col("id").as("id_b"), col("lo").as("lo_b"), col("hi").as("hi_b"))
-          .hint("shuffle_hash"),
-        Seq("band", "key", "cid"))
+    val probes = banded.select(col("id"), col("lo"), col("hi"), col("band"),
+      explode(array(probeKeys: _*)).as("key"))
+    ChunkedJoin(probes, banded, Seq("band", "key"), Seq(col("id")))(
+        chunkPairsAcross(_, _, Seq("band", "key")))
       .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
-          bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).cast("long").as("hamming"))
+      .select(col("id_a"), col("id_b"), pairHamming)
       .where(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
   }
@@ -1114,111 +1057,78 @@ object Dedup {
           .otherwise(lit(10000L) - expr("(lev * 10000) DIV __mx")).as("sim_bp"))
   }
 
-  /** EXACT token-set similarity self-join via prefix filtering (the
-    * AllPairs/PPJoin scheme) — the guaranteed-complete complement to
-    * [[jaccardPairs]], whose df cap trades recall on ultra-common
-    * shingles for a bounded join. Here nothing is dropped: every pair
-    * with token-Jaccard ≥ num/den is in the output, yet the corpus
-    * never all-pairs.
+  /** The PPJoin prefix-filter candidate set behind [[exactJaccardPairs]]'
+    * low-threshold route — every pair surviving the prefix, length, and
+    * positional filters, BEFORE exact verification. Nothing that can
+    * reach Jaccard ≥ num/den is dropped, yet the corpus never all-pairs.
     *
-    * The filter: order each doc's distinct tokens by GLOBAL document
-    * frequency ascending (rarest first, ties by token), keep only the
-    * first |d| − ⌈θ·|d|⌉ + 1 as its PREFIX. Two sets with Jaccard ≥ θ
-    * share ≥ ⌈θ·max(|A|,|B|)⌉ tokens, so under one total order their
-    * prefixes must intersect — candidates are pairs sharing a PREFIX
-    * token, plus the length filter θ·|A| ≤ |B| ≤ |A|/θ. Rare tokens
-    * carry tiny postings lists, so the candidate join fans out on the
-    * sparse end of the vocabulary — the whole point of frequency-
-    * ascending ordering. Threshold arithmetic is exact rational
-    * (num/den integers): prefix length via integer ceil, the final
-    * gate c·den ≥ num·(|A|+|B|−c) — no float anywhere on the decision
-    * path.
+    * The prefix filter (AllPairs): order each doc's distinct tokens by
+    * GLOBAL document frequency ascending (rarest first, ties by token),
+    * keep only the first |d| − ⌈θ·|d|⌉ + 1 as its PREFIX. Two sets with
+    * Jaccard ≥ θ share ≥ ⌈θ·max(|A|,|B|)⌉ tokens, so under one total
+    * order their prefixes must intersect — candidates are pairs sharing
+    * a PREFIX token, plus the length filter θ·|A| ≤ |B| ≤ |A|/θ. Rare
+    * tokens carry tiny postings lists, so the candidate join fans out on
+    * the sparse end of the vocabulary — the whole point of frequency-
+    * ascending ordering. Threshold arithmetic is exact rational (num/den
+    * integers, prefix length via integer ceil) — no float anywhere on
+    * the decision path.
     *
-    * Two further PPJoin refinements, both recall-lossless:
-    * the POSITIONAL filter — at a pair's FIRST shared prefix token
-    * (positions ra, rb in the one global (df, token) order) every other
-    * shared token lies after both, so overlap ≤ 1 + min(|A|−ra, |B|−rb);
-    * a pair below the required minOverlap ⌈num(|A|+|B|)/(num+den)⌉ at
-    * that token can never pass the final gate (later shared tokens can
-    * only re-ADMIT a pair, never lose one — any true pair survives via
-    * its first shared token's row). And verification intersects the two
-    * docs' SORTED DISTINCT TOKEN ARRAYS row-locally
-    * (`array_intersect`) instead of re-exploding candidates against the
-    * token table — the exploded join shuffled candidates × |tokens| rows
-    * (measured 114M at 5k docs / 2M candidates, 45 s of the bench);
-    * the array verify moves each doc's token list once per candidate
-    * side and computes the same exact count.
-    * Output: doc_a < doc_b, n_a, n_b, n_common, jaccard (4dp display).
-    */
-  def prefixFilterJaccardPairs(docs: DataFrame, num: Int = 1,
-                               den: Int = 2): DataFrame = {
-    require(num > 0 && den > 0 && num <= den, "threshold must be in (0, 1]")
-    val base = docs.select(col("doc_id"),
-      array_sort(array_distinct(TextAnalysis.tokens(TextAnalysis.asciiLower(col("text")))))
-        .as("__toks"))
-    val cand = prefixFilterCandidates(base, num, den)
-    // pass gate c·den ≥ (|A|+|B|−c)·num ⟺ c ≥ ⌈num(|A|+|B|)/(num+den)⌉:
-    // phrasing the filter against the bound (instead of against n_common on
-    // both sides) leaves ONE merge-count in the pushed-down join condition,
-    // and the sorted-merge expression early-exits failing pairs — the
-    // hash-set array_intersect was evaluated 3× per candidate (twice in the
-    // join condition, once in the output projection)
-    val reqd = call_function("div",
-      lit(num.toLong) * (col("n_a") + col("n_b")) + lit((num + den - 1).toLong),
-      lit((num + den).toLong))
-    cand
-      .join(base.select(col("doc_id").as("doc_a"), col("__toks").as("__ta")),
-        Seq("doc_a"))
-      .join(base.select(col("doc_id").as("doc_b"), col("__toks").as("__tb")),
-        Seq("doc_b"))
-      .withColumn("n_common",
-        graft.functions.sorted_intersect_count(col("__ta"), col("__tb"), reqd))
-      .where(col("n_common") >= reqd)
-      .withColumn("jaccard",
-        ticks4(col("n_common"), col("n_a") + col("n_b") - col("n_common")))
-      .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
-        col("n_common"), col("jaccard"))
-  }
-
-  /** The candidate set behind [[prefixFilterJaccardPairs]] — every pair
-    * surviving the prefix, length, and positional filters, BEFORE exact
-    * verification. Exposed for the scale probes: the operator's 100 TB
-    * risk is candidate-row growth on hot prefix tokens, and this is the
-    * relation whose cardinality measures it. Expects (doc_id, __toks).
+    * The POSITIONAL filter (PPJoin), also recall-lossless: at a pair's
+    * FIRST shared prefix token (positions ra, rb in the one global
+    * (df, token) order) every other shared token lies after both, so
+    * overlap ≤ 1 + min(|A|−ra, |B|−rb); a pair below the required
+    * minOverlap ⌈num(|A|+|B|)/(num+den)⌉ at that token can never pass
+    * the final gate (later shared tokens can only re-ADMIT a pair,
+    * never lose one — any true pair survives via its first shared
+    * token's row).
+    *
+    * Hot tokens ([[ChunkedJoin]]): each token's postings chunk in
+    * (sz, doc_id) order, and [[prefixChunkPairs]] prunes chunk pairs
+    * wholesale under the length and positional filters. Exposed for the
+    * scale probes: the operator's 100 TB risk is candidate-row growth on
+    * hot prefix tokens, and this is the relation whose cardinality
+    * measures it. Expects (doc_id, __toks); output (doc_a < doc_b, n_a,
+    * n_b).
     */
   private[graft] def prefixFilterCandidates(base: DataFrame, num: Int,
                                             den: Int): DataFrame = {
     val px = prefixPostings(base, num, den)
-    val cp = prefixChunkPairs(px, num, den)
     val minOverlap = expr(
-      s"CAST(($num * (sa + sb) + ${num + den - 1}) div ${num + den} AS BIGINT)")
-    px
-      .select(col("tok"), col("cid").as("lo"), col("doc_id").as("da"),
-        col("rn").as("ra"), col("sz").as("sa"))
-      .join(cp, Seq("tok", "lo"))
-      .join(px.select(col("tok"), col("cid").as("hi"), col("doc_id").as("db"),
-          col("rn").as("rb"), col("sz").as("sb")),
-        Seq("tok", "hi"))
-      .where(col("da") =!= col("db") &&
+      s"CAST(($num * (sz_a + sz_b) + ${num + den - 1}) div ${num + den} AS BIGINT)")
+    ChunkedJoin(px, px, Seq("tok"), bySize)((l, _) => prefixChunkPairs(l, num, den))
+      .where(col("doc_id_a") =!= col("doc_id_b") &&
         // a same-chunk pair meets in both (a,b) orders; emit it once
-        (col("lo") =!= col("hi") || col("da") < col("db")) &&
-        col("sb") * den >= col("sa") * num &&
-        col("sa") * den >= col("sb") * num &&
-        lit(1L) + least(col("sa") - col("ra"), col("sb") - col("rb"))
+        (col("clo") =!= col("chi") || col("doc_id_a") < col("doc_id_b")) &&
+        col("sz_b") * den >= col("sz_a") * num &&
+        col("sz_a") * den >= col("sz_b") * num &&
+        lit(1L) + least(col("sz_a") - col("rn_a"), col("sz_b") - col("rn_b"))
           >= minOverlap)
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") < col("db"), col("sa")).otherwise(col("sb")).as("n_a"),
-        when(col("da") < col("db"), col("sb")).otherwise(col("sa")).as("n_b"))
+      .select(canonicalPair: _*)
       .distinct()
+  }
+
+  /** The (sz, doc_id) chunk order of the θ-pruned joins: a chunk then
+    * spans a narrow contiguous size window, which makes chunk pairs
+    * prunable wholesale under the θ length window. */
+  private[graft] val bySize: Seq[Column] = Seq(col("sz"), col("doc_id"))
+
+  /** A [[ChunkedJoin]] row of two (doc_id, sz) postings as the canonical
+    * (doc_a < doc_b, n_a, n_b) pair: chunk ids are per-key, so a pair can
+    * meet in either orientation. */
+  private val canonicalPair: Seq[Column] = {
+    val ab = col("doc_id_a") < col("doc_id_b")
+    Seq(least(col("doc_id_a"), col("doc_id_b")).as("doc_a"),
+      greatest(col("doc_id_a"), col("doc_id_b")).as("doc_b"),
+      when(ab, col("sz_a")).otherwise(col("sz_b")).as("n_a"),
+      when(ab, col("sz_b")).otherwise(col("sz_a")).as("n_b"))
   }
 
   /** The df-ordered prefix posting relation behind
     * [[prefixFilterCandidates]]: one row per (doc, prefix token) with
-    * the doc's distinct-token size, the token's df-ascending rank, and
-    * the size-ordered 512-row chunk id. Split out so the scale gate can
-    * count the chunk-pair relation deterministically (see
-    * [[prefixChunkPairs]]).
+    * the doc's distinct-token size and the token's df-ascending rank.
+    * Split out so the scale gate can count the chunk-pair relation
+    * deterministically (see [[prefixChunkPairs]]).
     */
   private[graft] def prefixPostings(base: DataFrame, num: Int,
                                     den: Int): DataFrame = {
@@ -1229,51 +1139,39 @@ object Dedup {
     val sized = tk.join(dfreq, Seq("tok"))
       .withColumn("rn", row_number().over(wDoc))
       .withColumn("sz", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-    val prefix = sized.where(
+    sized.where(
       col("rn") <= col("sz") - expr(s"CAST(($num * sz + ${den - 1}) div $den AS BIGINT)") + 1)
-    // chunked posting lists: a hot prefix token (df-ascending does not
-    // help when the whole corpus shares a small vocabulary — measured
-    // 3.8k-doc postings at 5k docs) would generate its c²/2 pairs inside
-    // ONE join key = one task. Split each token's posting list into
-    // 512-row chunks ordered by DOC SIZE (ties by doc_id) — a chunk then
-    // spans a narrow contiguous size window, which makes chunk pairs
-    // prunable WHOLESALE before any doc-level row is replicated:
-    //
-    //   stats(tok, cid)   = (min sz, max sz, max positional slack)
-    //   feasible (lo, hi) = chunk-level relaxations of the pairwise
-    //                       length and positional filters — a chunk pair
-    //                       is dropped only when NO member pair could
-    //                       pass them (min sizes vs max sizes, best
-    //                       slack vs smallest possible minOverlap), so
-    //                       pruning is recall-lossless by construction.
-    //
-    // The candidate join then replicates ONLY the lo side, and only
-    // across its FEASIBLE partners (the r7 shape exploded lhs across
-    // every hi ∈ [cid, nc) AND rhs across every lo ∈ [0, cid] — a token
-    // in all N docs materialized ≈ N²/chunk rows on BOTH join inputs;
-    // here the hi side joins at ×1 replication, and on size-spread
-    // corpora the θ-window feasibility cuts the lo side to the near-
-    // linear band of chunk pairs whose size windows actually overlap).
-    val chunk = 512
-    val wTok = Window.partitionBy(col("tok")).orderBy(col("sz"), col("doc_id"))
-    prefix.withColumn("cid", ((row_number().over(wTok) - 1) / chunk).cast("long"))
   }
 
-  /** The FEASIBLE chunk-pair relation of [[prefixFilterCandidates]] —
-    * the join-input metadata whose cardinality bounds the candidate
-    * join's work wholesale. Exposed (over [[prefixPostings]] output)
+  /** The FEASIBLE chunk-pair relation of [[prefixFilterCandidates]] over
+    * its chunked prefix postings — the join-input metadata whose
+    * cardinality bounds the candidate join's work wholesale. A hot
+    * prefix token (df-ascending does not help when the whole corpus
+    * shares a small vocabulary — measured 3.8k-doc postings at 5k docs)
+    * would otherwise replicate doc rows across every chunk pair:
+    *
+    *   stats(tok, cid)   = (min sz, max sz, max positional slack)
+    *   feasible (lo, hi) = chunk-level relaxations of the pairwise
+    *                       length and positional filters — a chunk pair
+    *                       is dropped only when NO member pair could
+    *                       pass them (min sizes vs max sizes, best
+    *                       slack vs smallest possible minOverlap), so
+    *                       pruning is recall-lossless by construction.
+    *
+    * On size-spread corpora the θ-window feasibility cuts the pairs to
+    * the near-linear band of chunks whose size windows overlap. Exposed
     * for the ScaleCheck hot-token gate: on a corpus where every pair
-    * fails the positional filter this must count ZERO rows, a
-    * deterministic stand-in for the flaky wall-clock ratio — a plan
+    * fails the positional filter this must count ZERO cross-chunk rows,
+    * a deterministic stand-in for the flaky wall-clock ratio — a plan
     * regression that re-inflates the join inputs shows up here even
     * when the post-join candidate count stays zero.
     */
-  private[graft] def prefixChunkPairs(px: DataFrame, num: Int,
+  private[graft] def prefixChunkPairs(chunked: DataFrame, num: Int,
                                       den: Int): DataFrame = {
-    val stats = px.groupBy(col("tok"), col("cid"))
+    val stats = chunked.groupBy(col("tok"), col("cid"))
       .agg(min(col("sz")).as("mnSz"), max(col("sz")).as("mxSz"),
         max(col("sz") - col("rn")).as("mxSlack"))
-    val cp = stats.as("x").join(stats.as("y"),
+    stats.as("x").join(stats.as("y"),
         col("x.tok") === col("y.tok") && col("x.cid") <= col("y.cid") &&
           // chunk-level length window: some (sa, sb) can satisfy the
           // mutual θ band only if the windows overlap under θ
@@ -1284,15 +1182,16 @@ object Dedup {
           lit(1L) + least(col("x.mxSlack"), col("y.mxSlack")) >=
             expr(s"CAST(($num * (x.mnSz + y.mnSz) + ${num + den - 1}) " +
               s"div ${num + den} AS BIGINT)"))
-      .select(col("x.tok").as("tok"), col("x.cid").as("lo"), col("y.cid").as("hi"))
-    cp
+      .select(col("x.tok").as("tok"), col("x.cid").as("clo"), col("y.cid").as("chi"))
   }
 
-  /** EXACT token-set similarity self-join — same contract and output as
-    * [[prefixFilterJaccardPairs]] (complete recall at threshold num/den,
-    * exact verification, doc_a < doc_b) with a candidate scheme chosen
-    * by the threshold's SET-DIFFERENCE budget, plus an exact-duplicate
-    * collapse that runs all pairwise work once per DISTINCT token set.
+  /** EXACT token-set similarity self-join — the guaranteed-complete
+    * complement to [[jaccardPairs]], whose df cap trades recall on
+    * ultra-common shingles for a bounded join. Every pair with
+    * token-Jaccard ≥ num/den is in the output (doc_a < doc_b), verified
+    * exactly, with a candidate scheme chosen by the threshold's
+    * SET-DIFFERENCE budget, plus an exact-duplicate collapse that runs
+    * all pairwise work once per DISTINCT token set.
     *
     * Two ideas, both recall-lossless:
     *
@@ -1342,18 +1241,23 @@ object Dedup {
     *     discriminate): [[prefixFilterCandidates]] (the PPJoin prefix
     *     scheme), still over representatives.
     * Verification and expansion are shared by all three routes.
+    * Verification intersects the two representatives' SORTED DISTINCT
+    * TOKEN ARRAYS row-locally instead of re-exploding candidates against
+    * the token table (that join shuffled candidates × |tokens| rows —
+    * measured 114M at 5k docs / 2M candidates, 45 s of the bench), under
+    * the integer gate c·den ≥ num·(|A|+|B|−c).
     *
-    * 100 TB posture: signature build is scan-local; the candidate join
-    * keys on (bucket, subset-hash) and a hot key (a whole near-dup
-    * family agreeing on one bucket) is split into size-ordered 512-row
-    * chunks with wholesale chunk-pair pruning under the θ size window —
-    * the same discipline as the prefix path, so no single task owns a
-    * family's pair space. The exact-set WITHIN join and the member
-    * EXPANSION joins carry the same 512-row chunking on (gid, chunk)
-    * keys: a mega-family of identical docs (10⁶ re-posts of one page)
-    * emits its irreducibly-quadratic pair output across its chunk-pair
-    * grid instead of one gid-keyed task. For families where even the
-    * distributed pair LISTING is the wrong artifact, [[dupClusters]]
+    * 100 TB posture: signature build is scan-local; every keyed pair
+    * join here — the (bucket, subset-hash) candidate join, the prefix
+    * join, and the exact-set WITHIN join on gid — is a [[ChunkedJoin]],
+    * so a hot key (a near-dup family agreeing on one bucket, a hot
+    * prefix token, 10⁶ re-posts of one page) squares across its
+    * chunk-pair grid instead of one task. The candidate joins chunk in
+    * (sz, doc_id) order and prune chunk pairs wholesale under the θ size
+    * window; the within join chunks by doc_id and keeps every chunk
+    * pair. The member EXPANSION joins key on the same (gid, chunk) ids.
+    * For families where even the distributed pair LISTING is the wrong
+    * artifact, [[dupClusters]]
     * labels are the intended escape hatch. Reference contract preserved: the reference's
     * near-dup pass is lossy MinHash (no exact join anywhere under the
     * reference's `modules` tree);
@@ -1362,7 +1266,6 @@ object Dedup {
     */
   def exactJaccardPairs(docs: DataFrame, num: Int = 1, den: Int = 2): DataFrame = {
     require(num > 0 && den > 0 && num <= den, "threshold must be in (0, 1]")
-    val chunk = 512
     // pinned (checkpoint, NOT cache: checkpointed RDDs are freed by the
     // ContextCleaner once the plan is unreferenced, while CacheManager
     // entries live until an explicit unpersist — the wrong lifetime for a
@@ -1389,54 +1292,30 @@ object Dedup {
                 else mxRow.head.getLong(0)
     val fammax = if (mxRow.isEmpty || mxRow.head.isNullAt(1)) 0L
                  else mxRow.head.getLong(1)
-    // mega-family discipline (the bandedHamming64Pairs chunk shape): a
-    // gid with f members — 10⁶ re-posts of one page at web scale — would
-    // pair its f²/2 within-family output inside ONE join task keyed on
-    // the raw gid; id-ordered 512-row chunks spread it over (f/512)²/2
-    // chunk-pair tasks, and the member-expansion joins key on
-    // (gid, chunk) for the same reason. ROUTED like the dupClusters
-    // driver shortcut: when no family exceeds one chunk (every corpus
-    // that isn't a re-post crowd), the chunk ids are identically zero
-    // and the flat gid-keyed joins are the same join minus a window —
-    // so small-family corpora skip the chunk machinery entirely.
-    val chunked = fammax > chunk
-    val memC =
-      if (chunked) {
-        val wGid = Window.partitionBy(col("gid")).orderBy(col("doc_id"))
-        // explicit-count repartition on the chunked key (see
-        // bandedHamming64PairsRaw): chunk-pair join inputs are thin but
-        // outputs quadratic, so AQE's input-sized coalescing would fold
-        // the family's chunks back into one task without it
-        members.withColumn("cid",
-          ((row_number().over(wGid) - 1) / chunk).cast("long"))
-          .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-            col("gid"), col("cid"))
-      } else members.withColumn("cid", lit(0L))
-    val gidChunks =
-      if (chunked) memC.select(col("gid"), col("cid")).distinct()
-      else reps.select(col("gid"), lit(0L).as("cid"))
+    // mega-family discipline ([[ChunkedJoin]]): a gid with f members —
+    // 10⁶ re-posts of one page at web scale — would pair its f²/2
+    // within-family output inside ONE join task keyed on the raw gid;
+    // id-ordered chunks spread it over (f/512)²/2 chunk-pair tasks, and
+    // the member-expansion joins key on (gid, chunk) for the same
+    // reason. ROUTED like the dupClusters driver shortcut: when no
+    // family exceeds one chunk (every corpus that isn't a re-post
+    // crowd), the chunk ids are identically zero and the flat gid-keyed
+    // joins are the same join minus a window — so small-family corpora
+    // skip the chunk machinery entirely.
+    val chunked = fammax > ChunkedJoin.Rows
+    val byId = Seq(col("doc_id"))
     // identical sets: Jaccard exactly 1, passes every num ≤ den gate;
     // chunks are id-ordered so clo < chi already implies da < db and the
     // row predicate is the original a.doc_id < b.doc_id verbatim
     val within =
-      if (chunked) {
-        val wcp = gidChunks.as("x").join(gidChunks.as("y"),
-            col("x.gid") === col("y.gid") && col("x.cid") <= col("y.cid"))
-          .select(col("x.gid").as("gid"),
-            col("x.cid").as("clo"), col("y.cid").as("chi"))
-        // shuffle_hash: see bandedHamming64PairsRaw — a small corpus
-        // would broadcast both member sides and stream the thin
-        // chunk-pair relation in one AQE-coalesced partition
-        memC.select(col("gid"), col("cid").as("clo"),
-            col("doc_id").as("da"), col("sz").as("sa"))
-          .join(wcp.hint("shuffle_hash"), Seq("gid", "clo"))
-          .join(memC.select(col("gid"), col("cid").as("chi"),
-            col("doc_id").as("db")).hint("shuffle_hash"), Seq("gid", "chi"))
-          .where(col("da") < col("db"))
-          .select(col("da").as("doc_a"), col("db").as("doc_b"),
-            col("sa").as("n_a"), col("sa").as("n_b"),
-            col("sa").as("n_common"), lit(1.0).as("jaccard"))
-      } else
+      if (chunked)
+        ChunkedJoin(members, members, Seq("gid"), byId)(
+            (l, _) => chunkPairsUpTo(l, Seq("gid")))
+          .where(col("doc_id_a") < col("doc_id_b"))
+          .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+            col("sz_a").as("n_a"), col("sz_a").as("n_b"),
+            col("sz_a").as("n_common"), lit(1.0).as("jaccard"))
+      else
         members.as("a").join(members.as("b"),
             col("a.gid") === col("b.gid") && col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -1455,10 +1334,11 @@ object Dedup {
           pigeonholeCandidates(repSel, num, den, (kmax + 3).toInt)
         else
           prefixFilterCandidates(reps.select(col("doc_id"), col("__toks")), num, den)
-      // same gate, phrased against the pigeonhole bound so the pushed-down
-      // join condition carries ONE sorted-merge count (early-exiting) — see
-      // prefixFilterJaccardPairs; the hash-set array_intersect ran 3× per
-      // candidate pair here
+      // pass gate c·den ≥ (|A|+|B|−c)·num ⟺ c ≥ ⌈num(|A|+|B|)/(num+den)⌉:
+      // phrased against the bound (instead of against n_common on both
+      // sides) the pushed-down join condition carries ONE sorted-merge
+      // count, which early-exits failing pairs — the hash-set
+      // array_intersect ran 3× per candidate pair here
       val reqd = call_function("div",
         lit(num.toLong) * (col("n_a") + col("n_b")) + lit((num + den - 1).toLong),
         lit((num + den).toLong))
@@ -1482,14 +1362,17 @@ object Dedup {
       // grid joins are flat (gid, 0) lookups: same plan as the r9
       // raw-gid expansion plus two broadcast-sized no-ops.
       val expanded =
-        if (chunked) verified
-          .join(gidChunks.select(col("gid").as("ga"), col("cid").as("ca")), Seq("ga"))
-          .join(gidChunks.select(col("gid").as("gb"), col("cid").as("cb")), Seq("gb"))
-          .join(memC.select(col("gid").as("ga"), col("cid").as("ca"),
-            col("doc_id").as("da")), Seq("ga", "ca"))
-          .join(memC.select(col("gid").as("gb"), col("cid").as("cb"),
-            col("doc_id").as("db")), Seq("gb", "cb"))
-        else verified
+        if (chunked) {
+          val memC = ChunkedJoin.chunkIds(members, Seq("gid"), byId)
+          val gidChunks = memC.select(col("gid"), col("cid")).distinct()
+          verified
+            .join(gidChunks.select(col("gid").as("ga"), col("cid").as("ca")), Seq("ga"))
+            .join(gidChunks.select(col("gid").as("gb"), col("cid").as("cb")), Seq("gb"))
+            .join(memC.select(col("gid").as("ga"), col("cid").as("ca"),
+              col("doc_id").as("da")), Seq("ga", "ca"))
+            .join(memC.select(col("gid").as("gb"), col("cid").as("cb"),
+              col("doc_id").as("db")), Seq("gb", "cb"))
+        } else verified
           .join(members.select(col("gid").as("ga"), col("doc_id").as("da")), Seq("ga"))
           .join(members.select(col("gid").as("gb"), col("doc_id").as("db")), Seq("gb"))
       val cross = expanded
@@ -1576,69 +1459,35 @@ object Dedup {
       .distinct()
   }
 
-  /** Canonicalized equi-self-join on a (k1, k2) posting key with the
-    * hot-key chunk discipline shared by every candidate scheme here: a
-    * key shared by a whole family would otherwise pair inside ONE join
-    * task, so each key's postings split into size-ordered 512-row
-    * chunks whose pairs prune WHOLESALE under the θ length window
-    * before any doc-level replication, and only the lo side replicates.
-    * Expects (k1, k2, doc_id, sz); output (doc_a, doc_b, n_a, n_b),
-    * one row per (pair, agreeing key) — callers dedup or count.
-    * private[graft] for the ScaleCheck near-identical-family census.
+  /** Canonicalized equi-self-join on a (k1, k2) posting key — the
+    * [[ChunkedJoin]] shared by the signature candidate schemes: each
+    * key's postings chunk in (sz, doc_id) order, and chunk pairs prune
+    * WHOLESALE under the θ length window before any doc-level row is
+    * replicated. Expects (k1, k2, doc_id, sz); output (doc_a, doc_b,
+    * n_a, n_b), one row per (pair, agreeing key) — callers dedup or
+    * count. private[graft] for the ScaleCheck near-identical-family
+    * census.
     */
   private[graft] def chunkedKeyedPairs(postings: DataFrame, num: Int,
-                                       den: Int): DataFrame = {
-    val chunk = 512
-    val wKey = Window.partitionBy(col("k1"), col("k2"))
-      .orderBy(col("sz"), col("doc_id"))
-    // explicit-count repartition on the chunked key (the
-    // bandedHamming64PairsRaw lesson): a surviving chunk pair's join
-    // input is ≤ 1024 thin rows but its output up to 512² candidate
-    // rows, and AQE's input-sized coalescing would fold a hot key's
-    // chunks back into one emission task without it
-    val parts = postings.sparkSession.sessionState.conf.numShufflePartitions
-    val px = postings.withColumn("cid",
-      ((row_number().over(wKey) - 1) / chunk).cast("long"))
-    val stats = px.groupBy(col("k1"), col("k2"), col("cid"))
-      .agg(min(col("sz")).as("mnSz"), max(col("sz")).as("mxSz"))
-    val cp = stats.as("x").join(stats.as("y"),
-        col("x.k1") === col("y.k1") && col("x.k2") === col("y.k2") &&
-          col("x.cid") <= col("y.cid") &&
-          col("y.mxSz") * den >= col("x.mnSz") * num &&
-          col("x.mxSz") * den >= col("y.mnSz") * num)
-      .select(col("x.k1").as("k1"), col("x.k2").as("k2"),
-        col("x.cid").as("lo"), col("y.cid").as("hi"))
-    // Two disciplines keep the quadratic emission spread across tasks at
-    // EVERY corpus size (each was individually defeated in measurement):
-    //   - shuffle_hash hints pin the join STRATEGY: on a small corpus both
-    //     posting sides fit under the broadcast threshold, Spark broadcasts
-    //     them, and the thin chunk-pair relation becomes the streamed side
-    //     — AQE-coalesced to ONE partition (measured: the 10k-posting
-    //     hot-key probe emitted all C(10⁴,2) rows in 1 task);
-    //   - the explicit-count repartitions sit directly under the joins ON
-    //     THE JOIN KEYS (post-rename): a repartition below a renaming
-    //     Project re-exchanged on the join keys anyway, burying the
-    //     coalescing-exempt BY_NUM shuffle under a coalescible one.
-    px.select(col("k1"), col("k2"), col("cid").as("lo"),
-        col("doc_id").as("da"), col("sz").as("sa"))
-      .repartition(parts, col("k1"), col("k2"), col("lo"))
-      .join(cp.hint("shuffle_hash"), Seq("k1", "k2", "lo"))
-      .join(px.select(col("k1"), col("k2"), col("cid").as("hi"),
-          col("doc_id").as("db"), col("sz").as("sb"))
-          .repartition(parts, col("k1"), col("k2"), col("hi"))
-          .hint("shuffle_hash"),
-        Seq("k1", "k2", "hi"))
-      .where((col("lo") =!= col("hi") || col("da") < col("db")) &&
-        col("sb") * den >= col("sa") * num &&
-        col("sa") * den >= col("sb") * num)
+                                       den: Int): DataFrame =
+    ChunkedJoin(postings, postings, Seq("k1", "k2"), bySize) { (l, _) =>
+        val stats = l.groupBy(col("k1"), col("k2"), col("cid"))
+          .agg(min(col("sz")).as("mnSz"), max(col("sz")).as("mxSz"))
+        stats.as("x").join(stats.as("y"),
+            col("x.k1") === col("y.k1") && col("x.k2") === col("y.k2") &&
+              col("x.cid") <= col("y.cid") &&
+              col("y.mxSz") * den >= col("x.mnSz") * num &&
+              col("x.mxSz") * den >= col("y.mnSz") * num)
+          .select(col("x.k1").as("k1"), col("x.k2").as("k2"),
+            col("x.cid").as("clo"), col("y.cid").as("chi"))
+      }
+      .where((col("clo") =!= col("chi") || col("doc_id_a") < col("doc_id_b")) &&
+        col("sz_b") * den >= col("sz_a") * num &&
+        col("sz_a") * den >= col("sz_b") * num)
       // canonicalize BEFORE the caller's dedup/count: chunk ids are
       // per-key, so a pair can meet in either (lo, hi) orientation
       // across different keys
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") < col("db"), col("sa")).otherwise(col("sb")).as("n_a"),
-        when(col("da") < col("db"), col("sb")).otherwise(col("sa")).as("n_b"))
-  }
+      .select(canonicalPair: _*)
 
   /** Near-duplicate similarity band census over the EXACT pair graph at
     * threshold num/den: pairs bucketed by integer percent of Jaccard

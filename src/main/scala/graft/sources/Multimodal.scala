@@ -689,6 +689,9 @@ object Multimodal {
     * q302-style census motivates) route through the multi-probe join
     * ([[graft.operators.Dedup.multiProbeHamming64Pairs]]) — one-bit
     * probe keys per band keep completeness without 8-bit band keys.
+    * Both joins split a hot band key (a flat-color crowd posting
+    * identical dHash bands) into chunks through the one hot-key join,
+    * [[graft.operators.ChunkedJoin]].
     * Undecodable payloads carry no hash and never pair.
     * Output: media_a < media_b, hamming.
     */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{ChunkedJoin, Dedup}
 import graft.sink.{IdempotentSink, KeyedStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -44,14 +44,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale posture: index writes are one flat O(batch) delta per batch;
   * the probe prunes to the (band, kb) combos the batch hashes into.
-  * The history-probe join is chunk-hardened on BOTH sides: the batch
-  * side rides [[Dedup.bandedHamming64Pairs]]'s chunking for its
-  * within-batch pairs, and the pruned history slice splits into
-  * id-ordered 512-row chunks per (band, key) before the probe join —
-  * a hot history key (a flat-color crowd accumulated over months)
-  * spreads its per-batch candidates across |key postings|/512 tasks
-  * instead of one, spread-gated by the DedupScaleCheck hot-history
-  * probe.
+  * Both joins are the batch operator's hot-key join
+  * ([[graft.operators.ChunkedJoin]]): the within-batch pairs ride
+  * [[Dedup.bandedHamming64Pairs]] itself, and the history probe chunks
+  * the batch and the pruned history slice per (band, key) — a hot
+  * history key (a flat-color crowd accumulated over months) spreads
+  * its per-batch candidates across |key postings|/512 tasks instead of
+  * one, spread-gated by the DedupScaleCheck hot-history probe.
   */
 object HammingStream {
 
@@ -71,24 +70,16 @@ object HammingStream {
       bands = store("bands", Seq("id", "band", "kb"), Seq("band", "kb")))
   }
 
-  /** The four 16-bit band keys of a (id, lo, hi) sketch relation, plus
-    * the kb pruning bucket ([[DedupStream.KeyBuckets]], the bucket count
+  /** The four 16-bit band keys of a (id, lo, hi) sketch relation
+    * ([[Dedup.hammingBands]]) plus the kb pruning bucket
+    * ([[DedupStream.KeyBuckets]], the bucket count
     * [[DedupStream.pruneToBatchCombos]] encodes combos with), sketch
     * denormalized onto every row.
     * Package-visible so the DedupScaleCheck hot-history gate can build
     * the probe input the way the batch body does. */
   private[graft] def bandPostings(sketches: DataFrame): DataFrame =
-    sketches.select(col("id"), col("lo"), col("hi"),
-      explode(array(
-        struct(lit(0).as("band"), col("lo").bitwiseAND(0xFFFFL).as("key")),
-        struct(lit(1).as("band"),
-          call_function("shiftright", col("lo"), lit(16)).bitwiseAND(0xFFFFL).as("key")),
-        struct(lit(2).as("band"), col("hi").bitwiseAND(0xFFFFL).as("key")),
-        struct(lit(3).as("band"),
-          call_function("shiftright", col("hi"), lit(16)).bitwiseAND(0xFFFFL).as("key"))
-      )).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"),
-        col("lo"), col("hi"))
+    Dedup.hammingBands(sketches)
+      .select(col("id"), col("band"), col("key"), col("lo"), col("hi"))
       .withColumn("kb", pmod(xxhash64(col("key")), lit(DedupStream.KeyBuckets)))
 
   /** New×history candidate probe, BEFORE the pair dedup — one row per
@@ -96,48 +87,25 @@ object HammingStream {
     * relations ([[bandPostings]] shape; `idx` already pruned to the
     * batch's combos).
     *
-    * Hot-history hardening ([[Dedup.bandedHamming64PairsRaw]]'s
-    * 512-chunk discipline applied to the pruned history slice): a
-    * months-old flat-color/boilerplate crowd on ONE (band, key) would
-    * otherwise meet the whole batch in one join task. Each key's
-    * history postings split into id-ordered 512-row chunks; batch
-    * postings fan across their key's OBSERVED chunk ids (a 1-posting
-    * key fans ×1), and the probe join distributes over
-    * (band, key, hcid). The explicit-count repartition anchors the
-    * spread against AQE coalescing and the shuffle_hash hints pin the
-    * strategy so no small side broadcasts the chunked exchange out of
-    * the join — both hazards measured and gated on the batch operator
-    * (NOTES_r11 §4). Exposed pre-dedup so the DedupScaleCheck
+    * Hot-history hardening: the probe is a [[graft.operators.ChunkedJoin]]
+    * on (band, key), the batch operator's hot-key join. A months-old
+    * flat-color/boilerplate crowd on ONE (band, key) would otherwise
+    * meet the whole batch in one join task; both sides' postings split
+    * into id-ordered chunks and every batch chunk meets every history
+    * chunk of its key, so the crowd's candidates spread across
+    * |key postings|/512 tasks. Exposed pre-dedup so the DedupScaleCheck
     * hot-history gate can census rows per task at the join output (the
     * dedup exchange re-hashes on the pair key and would erase the
     * spread being asserted).
     */
   private[graft] def historyPairsRaw(newBands: DataFrame, idx: DataFrame,
-                                     maxHamming: Int): DataFrame = {
-    val spark = newBands.sparkSession
-    val chunk = 512
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val wKey = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("key")).orderBy(col("id"))
-    val hx = idx
-      .withColumn("hcid", ((row_number().over(wKey) - 1) / chunk).cast("long"))
-      .repartition(parts, col("band"), col("key"), col("hcid"))
-    val hchunks = hx.select(col("band"), col("kb"), col("key"), col("hcid"))
-      .distinct()
-    val probes = newBands
-      .join(hchunks.hint("shuffle_hash"), Seq("band", "kb", "key"))
-    probes
-      .join(hx.select(col("band"), col("key"), col("hcid"),
-          col("id").as("hid"), col("lo").as("hlo"), col("hi").as("hhi"))
-          .hint("shuffle_hash"),
-        Seq("band", "key", "hcid"))
-      .where(col("id") =!= col("hid"))
-      .select(least(col("id"), col("hid")).as("id_a"),
-        greatest(col("id"), col("hid")).as("id_b"),
-        (bit_count(col("lo").bitwiseXOR(col("hlo"))) +
-          bit_count(col("hi").bitwiseXOR(col("hhi")))).cast("long").as("hamming"))
+                                     maxHamming: Int): DataFrame =
+    ChunkedJoin(newBands, idx, Seq("band", "key"), Seq(col("id")))(
+        Dedup.chunkPairsAcross(_, _, Seq("band", "key")))
+      .where(col("id_a") =!= col("id_b"))
+      .select(least(col("id_a"), col("id_b")).as("id_a"),
+        greatest(col("id_a"), col("id_b")).as("id_b"), Dedup.pairHamming)
       .where(col("hamming") <= maxHamming)
-  }
 
   /** Process one micro-batch of 64-bit sketches (columns: id long,
     * lo long, hi long — e.g. [[Dedup.simhash64Portable]] output renamed,

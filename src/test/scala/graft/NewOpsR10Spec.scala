@@ -4,10 +4,9 @@ import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-10 operator specs: chunked banded-Hamming hot-key discipline
-  * (brute parity on a crowd larger than one 512-row chunk), the
-  * multi-probe Hamming 4–7 join, mega-family-chunked exact Jaccard,
-  * epoch-aware novelty decay, and span-level exact-substring dedup.
+/** Round-10 operator specs: the multi-probe SimHash 4–7 front door,
+  * epoch-aware novelty decay, and span-level exact-substring dedup. The
+  * chunked hot-key join specs live in [[ChunkedJoinSpec]].
   */
 class NewOpsR10Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -15,61 +14,6 @@ class NewOpsR10Spec extends AnyFunSuite {
 
   private def ham(a: (Long, Long), b: (Long, Long)): Int =
     java.lang.Long.bitCount(a._1 ^ b._1) + java.lang.Long.bitCount(a._2 ^ b._2)
-
-  /** Sketch corpus with a 600-strong identical crowd (two chunks on every
-    * band key), a ladder of 1..8-bit perturbations of the crowd value, and
-    * a scatter of unrelated sketches. All values stay in unsigned-32 range
-    * (the lo/hi halves contract).
-    */
-  private lazy val sketches: Seq[(Long, Long, Long)] = {
-    val baseLo = 0xABCD1234L
-    val baseHi = 0x0F1E2D3CL
-    val crowd = (0L until 600L).map(i => (i, baseLo, baseHi))
-    // flip k bits spread across both halves: k = 1..8 at ids 1000+k
-    val ladder = (1 to 8).map { k =>
-      val flips = (0 until k).map(j => 7 * j + 3) // distinct positions < 64
-      val lo = flips.filter(_ < 32).foldLeft(baseLo)((v, b) => v ^ (1L << b))
-      val hi = flips.filter(_ >= 32).foldLeft(baseHi)((v, b) => v ^ (1L << (b - 32)))
-      (1000L + k, lo, hi)
-    }
-    val rnd = new scala.util.Random(7)
-    val scatter = (0 until 50).map(i =>
-      (2000L + i, rnd.nextLong() & 0xFFFFFFFFL, rnd.nextLong() & 0xFFFFFFFFL))
-    crowd ++ ladder ++ scatter
-  }
-
-  private def brutePairs(maxHamming: Int): Set[(Long, Long, Long)] = {
-    val m = sketches.map(t => t._1 -> (t._2, t._3)).toMap
-    val ids = m.keys.toSeq.sorted
-    (for {
-      a <- ids; b <- ids if a < b
-      d = ham(m(a), m(b)) if d <= maxHamming
-    } yield (a, b, d.toLong)).toSet
-  }
-
-  test("bandedHamming64Pairs: chunked join is brute-parity on a 600-doc identical crowd") {
-    val df = sketches.toDF("id", "lo", "hi")
-    val got = Dedup.bandedHamming64Pairs(df, maxHamming = 3)
-      .as[(Long, Long, Long)].collect().toSet
-    // banding is COMPLETE at Hamming <= 3, so the banded set IS the brute set
-    assert(got === brutePairs(3))
-    // the crowd alone contributes C(600,2) exact-dup pairs — two chunks per key
-    assert(got.count { case (a, b, d) => a < 600 && b < 600 && d == 0L } === 600 * 599 / 2)
-  }
-
-  test("multiProbeHamming64Pairs: brute parity at budgets 4..7, crowd included") {
-    val df = sketches.toDF("id", "lo", "hi")
-    for (k <- 4 to 7) {
-      val got = Dedup.multiProbeHamming64Pairs(df, maxHamming = k)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got === brutePairs(k), s"multi-probe mismatch at maxHamming=$k")
-    }
-    // ladder sanity: the crowd pairs with perturbations up to the budget
-    val got6 = Dedup.multiProbeHamming64Pairs(df, maxHamming = 6)
-      .as[(Long, Long, Long)].collect().toSet
-    for (k <- 1 to 8)
-      assert(got6.contains((0L, 1000L + k, k.toLong)) === (k <= 6))
-  }
 
   test("simhashPairsMultiProbe is a superset of the 4-band portable pairs and exact on hamming") {
     val docs = Seq(
@@ -89,30 +33,6 @@ class NewOpsR10Spec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
     p6.foreach { case (a, b, d) => assert(ham(h(a), h(b)).toLong === d && d <= 6) }
     assert(p6.contains((1L, 5L, 0L)))
-  }
-
-  test("exactJaccardPairs: mega-family chunking keeps counts exact across chunk boundaries") {
-    // one identical family of 1200 (three 512-chunks), a second identical
-    // family of 600 whose token set differs from the first by one token of
-    // 30 (Jaccard 29/31 ≥ 19/20 is false; 29/31 ≥ 9/10 true → cross pairs
-    // appear at the lower threshold only), plus unrelated docs
-    val toks30 = (0 until 30).map(i => s"t$i")
-    val famA = (0L until 1200L).map(i => (i, toks30.mkString(" ")))
-    val famB = (2000L until 2600L).map(i => (i, (toks30.drop(1) :+ "zz").mkString(" ")))
-    val other = Seq((9000L, "completely different words here"), (9001L, "more unrelated text"))
-    val df = (famA ++ famB ++ other).toDF("doc_id", "text")
-    val high = Dedup.exactJaccardPairs(df, 19, 20)
-    val nA = 1200L * 1199L / 2; val nB = 600L * 599L / 2
-    assert(high.count() === nA + nB)
-    assert(high.where(col("jaccard") < 1.0).count() === 0L)
-    assert(high.distinct().count() === nA + nB) // no duplicate emissions across chunks
-    val low = Dedup.exactJaccardPairs(df, 9, 10)
-    assert(low.count() === nA + nB + 1200L * 600L)
-    val cross = low.where(col("jaccard") < 1.0)
-    assert(cross.count() === 1200L * 600L)
-    // cross stats: |A|=30, |B|=30, common=29 → jaccard 29/31 ≈ 0.9355
-    val one = cross.limit(1).as[(Long, Long, Long, Long, Long, Double)].head()
-    assert(one._3 === 30L && one._4 === 30L && one._5 === 29L && one._6 === 0.9355)
   }
 
   test("noveltyDecayByEpoch: hand-computed curve on shuffled ids with explicit epochs") {
