@@ -13,7 +13,9 @@ import scala.jdk.CollectionConverters._
   * through [[ChainedPipeline.enrich]] (enrich only, noop sink: the probe
   * times the state path, not parquet IO) and reports per-micro-batch
   * durations, throughput, state-operator timings, and RocksDB state size
-  * from the progress metrics.
+  * from the progress metrics. Each probe starts through
+  * [[ChainedPipeline.startSharded]], as production does, so `shards` is
+  * also the state partition count.
   *
   * Shape per day: 75 five-minute windows (default 09:15–15:30 session,
   * day-bounded by a weekday [[SessionSchedule]] so the overnight gap
@@ -22,7 +24,7 @@ import scala.jdk.CollectionConverters._
   * sentinel closes each day's final window.
   *
   * Usage: runMain graft.StreamScaleCheck [symbols] [days] [shardsCsv]
-  * e.g. 250 2 8,32 (the default) or 1000 2 32.
+  * e.g. 250 2 8,32 (the default) or 1000 2 1,8.
   */
 object StreamScaleCheck {
   def main(args: Array[String]): Unit = {
@@ -74,12 +76,12 @@ object StreamScaleCheck {
         stream.toDF().toDF("symbol", "ltp", "event_ts", "seq"),
         tsCol = "event_ts", symCol = "symbol", priceCol = "ltp", seqCol = "seq",
         watermarkDelay = "1 seconds")
-      val q = ChainedPipeline.enrich(candles, symbols, shards, schedule = schedule)
+      val writer = ChainedPipeline.enrich(candles, symbols, shards, schedule = schedule)
         .toDF().writeStream
         .format("noop")
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .start()
+      val q = ChainedPipeline.startSharded(spark, shards)(writer.start())
 
       val t0 = System.nanoTime()
       var fed = 0L
@@ -97,6 +99,9 @@ object StreamScaleCheck {
       val out = progress.map(_.sink.numOutputRows).filter(_ > 0).sum
       val batchMs = progress.map(_.batchDuration).filter(_ > 0)
       val stateOps = progress.flatMap(_.stateOperators)
+      // state-store commit time per batch, summed over the state operators
+      val commitMs = progress.filter(_.batchDuration > 0)
+        .map(_.stateOperators.map(_.commitTimeMs).sum)
       val updated = stateOps.map(_.numRowsUpdated).sum
       // max, not last: trailing watermark-only batches report empty metrics
       val stateRows = (-1L +: stateOps.map(_.numRowsTotal)).max
@@ -109,6 +114,8 @@ object StreamScaleCheck {
         f"ticks=$fed enriched=$out wall=$wallS%.1f s rate=${out / wallS}%.0f rows/s")
       println(f"[stream-scale]   batches=${batchMs.size} " +
         f"batchMs p50=${percentile(batchMs, 0.5)} max=${batchMs.max} " +
+        f"commitMs p50=${percentile(commitMs, 0.5)} " +
+        f"statePartitions=${stateOps.map(_.numShufflePartitions).distinct.mkString(",")} " +
         f"stateRowsUpdated=$updated stateRowsTotal=$stateRows " +
         f"stateMemBytes=$stateMem rocksSstBytes=$rocksSize")
       q.stop()

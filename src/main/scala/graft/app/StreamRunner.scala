@@ -1,9 +1,10 @@
 package graft.app
 
 import graft.recover.RetryPolicy
+import graft.sink.IdempotentSink
 import graft.streaming.{Alerts, ChainedPipeline, Monitors}
 import graft.time.SessionSchedule
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, StreamingQueryListener}
 import scala.util.control.NonFatal
@@ -21,7 +22,11 @@ import scala.util.control.NonFatal
   *     enrichment state lives ONLY in the streaming checkpoint — the
   *     decision lands in `system_log` before the first micro-batch;
   *   - '''engine''': [[ChainedPipeline.start]] on the RocksDB state store
-  *     (configured here — `transformWithState` requires it);
+  *     (configured here — `transformWithState` requires it), with
+  *     `Config.numShards` state partitions (default 1) whatever the
+  *     session's `spark.sql.shuffle.partitions`; the settings the run
+  *     derives land in `system_log` as one `stream_config` row before the
+  *     first micro-batch;
   *   - '''ops''': heartbeat monitor + reconnect alert ladder on the
   *     listener bus, buffered `system_log` channel with size-triggered
   *     compaction ([[Alerts.buffered]] → [[graft.sink.IdempotentSink.compactLog]]);
@@ -38,7 +43,7 @@ object StreamRunner {
       deadLetterDir: String,
       checkpointDir: String,
       systemLogDir: String,
-      numShards: Int = 8,
+      numShards: Int = 1,
       heartbeatTimeoutMs: Long = 30000L,
       compactLogAfterFiles: Int = 64)
 
@@ -70,20 +75,20 @@ object StreamRunner {
 
   private val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** `transformWithState` requires the RocksDB provider; set it on the
     * session (it is a runtime SQL conf, read at query start). A DIFFERENT
     * explicitly-chosen provider is refused rather than silently replaced.
     */
   private[graft] def configureStateStore(spark: SparkSession): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val current = spark.conf.get(key)
+    val current = spark.conf.get(ProviderKey)
     if (current.endsWith("HDFSBackedStateStoreProvider")) // the Spark default
-      spark.conf.set(key, RocksProvider)
+      spark.conf.set(ProviderKey, RocksProvider)
     else if (current != RocksProvider)
       throw new IllegalStateException(
-        s"$key=$current, but the chained pipeline needs $RocksProvider " +
-          s"(transformWithState requirement) — unset $key or set it to that provider")
+        s"$ProviderKey=$current, but the chained pipeline needs $RocksProvider " +
+          s"(transformWithState requirement) — unset $ProviderKey or set it to that provider")
   }
 
   /** Where the startup audit found the run's state: nothing anywhere, the
@@ -108,9 +113,7 @@ object StreamRunner {
     val hasCkpt = fs.exists(offsets) && fs.listStatus(offsets).nonEmpty
     // only the read may fail as "no sink yet"; a sink that holds rows
     // without a `timestamp` column is a broken sink, not an empty one
-    val sink =
-      try Some(spark.read.parquet(cfg.sinkDir))
-      catch { case _: AnalysisException => None }
+    val sink = IdempotentSink.readIfPresent(spark, cfg.sinkDir)
     val sinkMax = sink.flatMap(df =>
       Option(df.agg(max(col("timestamp")).cast("string")).head().getString(0)))
     (hasCkpt, sinkMax) match {
@@ -148,7 +151,12 @@ object StreamRunner {
     alerts.dispatch(
       if (decision.source == FromSink) "WARNING" else "INFO",
       "startup_reconcile", "-", decision.reason)
-    alerts.flush() // land the audit row before the first micro-batch
+    // the settings this run derives, once; artifact isolation is fixed when
+    // the session is built (README, "What a micro-batch costs")
+    alerts.dispatch("INFO", "stream_config", "-",
+      s"state_store=${spark.conf.get(ProviderKey)} state_partitions=${cfg.numShards} " +
+        s"artifact_isolation=${spark.conf.get("spark.sql.artifact.isolation.enabled")}")
+    alerts.flush() // land both rows before the first micro-batch
     val hb = new Monitors.HeartbeatMonitor(cfg.heartbeatTimeoutMs)
     val listener = Monitors.listener(hb, alerts = Some(alerts))
     spark.streams.addListener(listener)
@@ -196,9 +204,8 @@ object StreamRunner {
       .getOrElse(0L)
     // only the sink-missing case is expected; analysis errors in the
     // aggregation itself (schema drift) must propagate, not zero out
-    val dayOpt =
-      try Some(spark.read.parquet(cfg.sinkDir).where(col("dt") === date))
-      catch { case _: AnalysisException => None }
+    val dayOpt = IdempotentSink.readIfPresent(spark, cfg.sinkDir)
+      .map(_.where(col("dt") === date))
     val report = dayOpt match {
       case Some(day) =>
         val head = day.agg(count(lit(1)), count_distinct(col("id"))).head()

@@ -123,19 +123,28 @@ object IdempotentSink {
     * re-append every row and break exactly-once.
     */
   private def readIdsWith(spark: SparkSession, dir: String, idCol: String,
-                          extraCols: Seq[String]): DataFrame = {
-    val df =
-      try spark.read.parquet(dir)
-      catch {
-        case _: AnalysisException =>
-          import org.apache.spark.sql.types._
-          val fields = StructField(idCol, StringType) ::
-            extraCols.map(StructField(_, StringType)).toList
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
-      }
-    val present = extraCols.filter(df.columns.contains)
-    df.select((idCol +: present).map(col): _*)
+                          extraCols: Seq[String]): DataFrame =
+    readIfPresent(spark, dir) match {
+      case Some(df) =>
+        df.select((idCol +: extraCols.filter(df.columns.contains)).map(col): _*)
+      case None =>
+        import org.apache.spark.sql.types._
+        val fields = StructField(idCol, StringType) ::
+          extraCols.map(StructField(_, StringType)).toList
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
+    }
+
+  /** `dir` as one parquet relation, or None while it is missing or holds no
+    * data files yet. Existence is checked on the FileSystem first: reading
+    * a missing path makes Spark's metadata probe log a stack trace and the
+    * read build an exception, which the market sink's per-batch
+    * dead-letter check would pay on every batch.
+    */
+  private[graft] def readIfPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
+    else try Some(spark.read.parquet(dir)) catch { case _: AnalysisException => None }
   }
 
   /** appendDedup with retry/backoff and dead-letter fallback
@@ -184,15 +193,15 @@ object IdempotentSink {
   def drainDeadLetters(spark: SparkSession, deadLetterDir: String, sinkDir: String,
                        idCol: String = "id",
                        partitionCol: Option[String] = None): Long = {
-    val parked =
-      try spark.read.parquet(deadLetterDir)
-      catch { case _: AnalysisException => return 0L }
-    val n = appendDedup(parked, sinkDir, idCol, partitionCol = partitionCol)
-    // clear drained batches
-    val path = new org.apache.hadoop.fs.Path(deadLetterDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(path, true)
-    n
+    readIfPresent(spark, deadLetterDir) match {
+      case None => 0L
+      case Some(parked) =>
+        val n = appendDedup(parked, sinkDir, idCol, partitionCol = partitionCol)
+        // clear drained batches
+        val path = new org.apache.hadoop.fs.Path(deadLetterDir)
+        path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+        n
+    }
   }
 
   /** Append-only event log (`system_log`, schema_manager.py:137-164);

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.model.{AtrState, Candle, EnrichedCandle}
 import graft.operators.Atr
 import graft.sink.{EdgeFormat, IdempotentSink}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -27,8 +27,13 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   *     a per-shard property. State per shard = one [[AtrState]] per owned
   *     symbol (the ATR recursion state doubles as the gap-fill last-close
   *     seed, exactly the reference's pairing of gap_fill.py:29-88 with
-  *     atr_engine.py:194-242). Parallelism scales with `numShards`;
-  *     per-task state stays a few hundred symbols regardless of volume.
+  *     atr_engine.py:194-242). `numShards` is the stream's one
+  *     parallelism setting: [[start]] runs every stateful stage (the
+  *     window aggregate, this processor) and the sink jobs on `numShards`
+  *     partitions, whatever the session's `spark.sql.shuffle.partitions`.
+  *     The default, 1, holds the reference's whole 178-symbol universe in
+  *     one state store; raise it only when one store's per-batch work
+  *     outgrows a core (README, "when to raise numShards").
   *   - '''timer-driven sweeps''': window finalization is read off the
   *     event-time watermark. Each invocation sweeps every still-unswept
   *     window whose end the watermark has passed — folding the window's
@@ -56,6 +61,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   * Restart story: the whole chain (offsets, window-agg state, per-shard
   * ATR/seed state, timers) lives in the streaming checkpoint, so no state
   * is kept outside it; the sink's id anti-join absorbs replayed batches.
+  * The checkpoint also fixes the state partition count: Spark records it
+  * in the offset log and a restart reuses it. A checkpoint written with
+  * 8 shards (the default before it became 1) restarts only with
+  * `numShards = 8`; [[guardRouting]] refuses any other value.
   */
 object ChainedPipeline {
 
@@ -198,7 +207,7 @@ object ChainedPipeline {
     *   the watermark
     */
   def enrich(candles: DataFrame, expectedSymbols: Seq[String],
-             numShards: Int = 8, intervalMinutes: Int = 5,
+             numShards: Int = 1, intervalMinutes: Int = 5,
              schedule: Option[graft.time.SessionSchedule] = None): Dataset[EnrichedCandle] = {
     val spark = candles.sparkSession
     import spark.implicits._
@@ -230,7 +239,7 @@ object ChainedPipeline {
     * treated as unknown-legacy — and left in place; any v1 field mismatch
     * still fails fast.
     */
-  private[graft] def guardRouting(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def guardRouting(spark: SparkSession,
                                   checkpointDir: String, numShards: Int,
                                   intervalMinutes: Int = 5): Unit = {
     val p = new org.apache.hadoop.fs.Path(checkpointDir, "graft-routing.json")
@@ -291,24 +300,46 @@ object ChainedPipeline {
     } finally { persisted.unpersist(); () }
   }
 
+  private val startLock = new Object
+
+  /** Start a query with `spark.sql.shuffle.partitions = numShards`, so its
+    * stateful stages run `numShards` partitions, not the session's count:
+    * every partition loads and commits its own state store on every batch,
+    * keys or not. Spark copies the session's conf when the query is
+    * created and records the partition count in the offset log, so the
+    * value is set only for the `start` call and then restored; the lock
+    * keeps two starts from interleaving. A batch job another thread runs
+    * on the session during the call sees `numShards` partitions.
+    */
+  def startSharded(spark: SparkSession, numShards: Int)(start: => StreamingQuery): StreamingQuery =
+    startLock.synchronized {
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.getAll.get(key) // explicitly set, else None
+      spark.conf.set(key, numShards.toLong)
+      try start
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
   /** Full assembly: enrich chain in the state store, then a STATELESS
     * idempotent sink per micro-batch (edge format → declared-schema gate →
-    * dt-partitioned dedup append). Enrichment state lives only in the
-    * checkpoint, so the sink reads no snapshot and commits no state.
+    * dt-partitioned dedup append), all on `numShards` partitions
+    * ([[startSharded]]). Enrichment state lives only in the checkpoint, so
+    * the sink reads no snapshot and commits no state.
     */
   def start(candles: DataFrame, expectedSymbols: Seq[String], sinkDir: String,
             deadLetterDir: String, checkpointDir: String,
-            numShards: Int = 8,
+            numShards: Int = 1,
             schedule: Option[graft.time.SessionSchedule] = None,
             intervalMinutes: Int = 5): StreamingQuery = {
-    guardRouting(candles.sparkSession, checkpointDir, numShards, intervalMinutes)
-    enrich(candles, expectedSymbols, numShards, intervalMinutes, schedule).toDF()
+    val spark = candles.sparkSession
+    guardRouting(spark, checkpointDir, numShards, intervalMinutes)
+    val writer = enrich(candles, expectedSymbols, numShards, intervalMinutes, schedule).toDF()
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         sinkBatch(batch, expectedSymbols.size, sinkDir, deadLetterDir)
       }
-      .start()
+    startSharded(spark, numShards)(writer.start())
   }
 }

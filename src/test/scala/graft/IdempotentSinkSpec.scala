@@ -1,7 +1,7 @@
 package graft
 
 import graft.sink.IdempotentSink
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 class IdempotentSinkSpec extends AnyFunSuite {
@@ -148,5 +148,16 @@ class IdempotentSinkSpec extends AnyFunSuite {
     assert(IdempotentSink.drainDeadLetters(spark, dead, sink) === 1L) // only y_1 is new
     assert(spark.read.parquet(sink).count() === 2)
     assert(IdempotentSink.drainDeadLetters(spark, dead, sink) === 0L) // dir cleared
+  }
+
+  test("a missing or empty directory reads as absent; a written one reads") {
+    val root = tmp()
+    assert(IdempotentSink.readIfPresent(spark, s"$root/missing").isEmpty)
+    Files.createDirectories(Paths.get(root, "empty"))
+    assert(IdempotentSink.readIfPresent(spark, s"$root/empty").isEmpty)
+    Seq(("x_1", 1.0)).toDF("id", "v").write.parquet(s"$root/written")
+    assert(IdempotentSink.readIfPresent(spark, s"$root/written").map(_.count()) === Some(1L))
+    assert(IdempotentSink.drainDeadLetters(spark, s"$root/missing", s"$root/sink") === 0L)
+    assert(!Files.exists(Paths.get(root, "sink")))
   }
 }

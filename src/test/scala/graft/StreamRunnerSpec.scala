@@ -153,6 +153,90 @@ class StreamRunnerSpec extends AnyFunSuite {
     } finally r2.stop()
   }
 
+  /** A runner over the tick files in `srcDir`, gated on 2026-02-02. */
+  private def startOn(root: String, srcDir: String, cfg: StreamRunner.Config) = {
+    val dim = instruments.toDS()
+    val cal = TradingCalendar.load(spark, writeCalendar(root))
+    val ticks = graft.ingest.TickIngest.ingest(
+      spark.readStream.schema(srcSchema).parquet(srcDir), dim)
+    val candles = StreamingPipeline.ohlcCandles(ticks, tsCol = "event_ts",
+      symCol = "symbol", priceCol = "ltp", seqCol = "seq", watermarkDelay = "1 seconds")
+    StreamRunner.start(candles, instruments.map(_.symbol), cal, cfg, Some("2026-02-02"))
+  }
+
+  /** Every state operator of every batch `r` ran reports `n` partitions. */
+  private def assertStatePartitions(r: StreamRunner.Running, n: Long): Unit = {
+    val parts = r.query.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numShufflePartitions))
+    assert(parts.nonEmpty && parts.forall(_ == n), parts)
+  }
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  test("state partitions: every state operator runs numShards partitions; the session keeps its own") {
+    val root = Files.createTempDirectory("graft-runner-shards").toString
+    val srcDir = s"$root/src"
+    FixtureDay.clean("2026-02-02").toDF("tk", "ltp", "exchange_timestamp", "seq")
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    val cfg = StreamRunner.Config(s"$root/sink", s"$root/dead", s"$root/ckpt",
+      s"$root/system_log", numShards = 2)
+    assert(spark.conf.get(ShufflePartitions) === "4")
+    val r = startOn(root, srcDir, cfg)
+    try {
+      assert(spark.conf.get(ShufflePartitions) === "4")
+      r.query.processAllAvailable()
+      // the window aggregate and the transformWithState processor both
+      val ops = r.query.lastProgress.stateOperators
+      assert(ops.map(_.operatorName).toSet.size === 2, ops.map(_.operatorName).toSeq)
+      assert(ops.forall(_.numShufflePartitions == 2L), ops.map(_.numShufflePartitions).toSeq)
+      assertStatePartitions(r, 2L)
+      val config = spark.read.parquet(cfg.systemLogDir)
+        .where($"event" === "stream_config").select("level", "details").collect()
+      assert(config.length === 1)
+      assert(config.head.getString(0) === "INFO")
+      assert(config.head.getString(1).startsWith(
+        "state_store=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider " +
+          "state_partitions=2 artifact_isolation="), config.head.getString(1))
+    } finally r.stop()
+    assert(spark.conf.get(ShufflePartitions) === "4")
+  }
+
+  test("restart from a session with other shuffle partitions keeps the checkpoint's partitions and sink") {
+    val root = Files.createTempDirectory("graft-runner-reshuffle").toString
+    val srcDir = s"$root/src"
+    val day1 = FixtureDay.clean("2026-02-02")
+    val batchSink = s"$root/batch_sink"
+    graft.app.BatchReplay.run(
+      day1.toDF("tk", "ltp", "exchange_timestamp", "seq"), instruments.toDS(), batchSink, "x")
+    val want = sinkRows(batchSink)
+    val sentinel = Seq(("2885", Some(2000.0),
+      Timestamp.valueOf("2026-02-02 10:40:01"), 999999L))
+    val cfg = StreamRunner.Config(s"$root/sink", s"$root/dead", s"$root/ckpt",
+      s"$root/system_log", numShards = 2)
+
+    val (first, rest) = day1.splitAt(day1.length / 2)
+    first.toDF("tk", "ltp", "exchange_timestamp", "seq")
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    val r1 = startOn(root, srcDir, cfg)
+    try r1.query.processAllAvailable() finally r1.stop()
+    assertStatePartitions(r1, 2L)
+
+    (rest ++ sentinel).toDF("tk", "ltp", "exchange_timestamp", "seq")
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    val prev = spark.conf.get(ShufflePartitions)
+    spark.conf.set(ShufflePartitions, "3")
+    try {
+      val r2 = startOn(root, srcDir, cfg)
+      try r2.query.processAllAvailable() finally r2.stop()
+      assertStatePartitions(r2, 2L)
+      assert(spark.conf.get(ShufflePartitions) === "3")
+    } finally spark.conf.set(ShufflePartitions, prev)
+    val got = sinkRows(s"$root/sink")
+    assert(got === want,
+      s"restart != batch truth: missing ${(want -- got).take(2)}, extra ${(got -- want).take(2)}")
+    val ids = spark.read.parquet(s"$root/sink").select("id").as[String].collect()
+    assert(ids.length === ids.distinct.length)
+  }
+
   test("calendar gate refuses a weekend and a holiday") {
     val root = Files.createTempDirectory("graft-runner-gate").toString
     val cal = TradingCalendar.load(spark, writeCalendar(root))
